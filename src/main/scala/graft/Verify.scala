@@ -1,6 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import graft.core.Sessions
+import graft.service.MiniJson
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -12,26 +13,13 @@ object Verify {
     // on real forked executor JVMs (the ClusterShapeSpec topology) — the
     // evidence path for executor-side serialization/codegen assumptions.
     val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val builder = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val builder = Sessions.builder(master, cpus.toInt)
     if (master.startsWith("local-cluster")) {
       // standalone Worker resolves sparkHome from spark.test.home
       sys.props("spark.test.home") = "/opt/spark"
-      val addOpens = Seq(
-        "java.base/java.lang", "java.base/java.lang.invoke",
-        "java.base/java.lang.reflect", "java.base/java.io",
-        "java.base/java.net", "java.base/java.nio",
-        "java.base/java.util", "java.base/java.util.concurrent",
-        "java.base/java.util.concurrent.atomic",
-        "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-        "java.base/sun.security.action", "java.base/sun.util.calendar")
-        .map(p => s"--add-opens $p=ALL-UNNAMED").mkString(" ")
-      builder
-        .config("spark.executor.extraClassPath", sys.props("java.class.path"))
-        .config("spark.executor.extraJavaOptions", addOpens)
+      // Spark itself adds the JDK module opens to the executor JVMs
+      builder.config("spark.executor.extraClassPath",
+        sys.props("java.class.path"))
     }
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -50,22 +38,13 @@ object Verify {
       // release per-gate persisted frames (aux-writing gates cache one)
       spark.catalog.clearCache()
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     // aux-reading oracles address files keyed by scale factor — resolve the
     // {SF} placeholder to THIS run's data dir so a later run at another
     // scale cannot clobber what the pending compare reads
     val sfTag = graft.entry.Sql.sfTag(sfDir)
+    // escapes every control char: a tab or CR in oracle SQL must not break
+    // the compare's json.load
+    def q(s: String): String = "\"" + MiniJson.escape(s) + "\""
     val json = SparkEntry.oracleSql
       .map { case (k, v) =>
         s"${q(k)}: ${q(v.replace(graft.entry.Sql.SfPlaceholder, sfTag))}"

@@ -3,24 +3,19 @@ package graft.core
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Session factory with the scale-tuned defaults every entry point shares.
-  * One long-lived session + cached table registry is the latency answer to
-  * the reference's per-query DuckDB connections (SURVEY §7.4.6). */
+/** graft's one session policy; every entry point and the shared test
+  * session build from here. UTC session time keeps date/timestamp output
+  * identical to the oracle's; `nanosAsLong` lets the TIMESTAMP(NANOS)
+  * column of `events.parquet` load at all; the UI is off. Callers add only
+  * their own extras (app name, FAIR pool scheduling, executor classpath). */
 object Sessions {
-  def build(master: String = "local[*]", shufflePartitions: Int = 32,
-      appName: String = "graft"): SparkSession =
+  def builder(master: String, shufflePartitions: Int): SparkSession.Builder =
     SparkSession.builder()
       .master(master)
-      .appName(appName)
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.filterPushdown", "true")
       .config("spark.ui.enabled", "false")
-      .getOrCreate()
 }
 
 /** Compute-dense stage rebalancing. A stage whose per-row COMPUTE dwarfs

@@ -8,11 +8,11 @@ import org.apache.spark.sql.types._
 /** Table registry over the driver-provided parquet directory.
   *
   * Mirrors the reference's DuckDB view registry
-  * (`src/database/duckdb_service.py:76-113`): one cached view per table with
-  * explicit invalidation. In Spark the "view" is a DataFrame kept in a
-  * per-(session, dir) cache so repeated queries reuse the analyzed relation
-  * (and its parquet footer listing) instead of re-listing files — this is the
-  * latency floor mitigation from SURVEY §7.4.6.
+  * (`src/database/duckdb_service.py:76-113`): one cached view per table. In
+  * Spark the "view" is a DataFrame kept in a per-(session, dir) cache so
+  * repeated queries reuse the analyzed relation (and its parquet footer
+  * listing) instead of re-listing files — this is the latency floor
+  * mitigation from SURVEY §7.4.6.
   *
   * At 100 TB the same code holds: `spark.read.parquet(dir)` is a partitioned
   * scan; caching the *DataFrame* (not `.cache()` data!) costs nothing while
@@ -54,12 +54,6 @@ object Tables {
         df.withColumn(c, col(c).cast(TimestampType))
       case _ => df
     }
-
-  /** Register all tables as temp views (for spark.sql paths). */
-  def registerAll(spark: SparkSession, dir: String): Unit =
-    names.foreach(n => table(spark, dir, n).createOrReplaceTempView(n))
-
-  def invalidate(): Unit = cache.clear()
 }
 
 /** Shared column helpers encoding the reference's value semantics. */

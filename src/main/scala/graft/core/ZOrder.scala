@@ -49,16 +49,6 @@ object ZOrder {
     parts.reduce((a, c) => a.bitwiseOR(c))
   }
 
-  /** [[clusterBy2]] generalized: range-partition + sort on the N-dim curve. */
-  def clusterByN(df: DataFrame, colNames: Seq[String], numPartitions: Int,
-      bits: Int): DataFrame = {
-    val z = Names.fresh("_zorder", df.columns)
-    df.withColumn(z, zValueN(colNames.map(col), bits))
-      .repartitionByRange(numPartitions, col(z))
-      .sortWithinPartitions(col(z))
-      .drop(z)
-  }
-
   /** Re-layout `df` for two-dimensional data skipping: range-partition on
     * the curve value (one shuffle — the same cost a plain sort pays), sort
     * within partitions, drop the helper column. Write the result with any

@@ -16,7 +16,7 @@ import graft.operators._
   * kernel-vs-independent-spelling agreement) plus ScalaTest properties.
   */
 object DocQueries {
-  import Sql.{esum, eavg}
+  import Sql.esum
 
   /** Shingle spelling over a pre-split `ws` column - the hoisted form of
     * the split-inside-the-lambda spelling: DuckDB re-evaluates the split
@@ -3323,13 +3323,6 @@ object DocQueries {
         |ORDER BY doc_id""".stripMargin,
 
     "q_decontaminate" -> {
-      val sh =
-        """list_distinct(list_transform(
-          |  range(1, greatest(len(string_split_regex(trim(lower(text)), '\s+')) - 1, 1)),
-          |  i -> concat_ws(' ',
-          |    string_split_regex(trim(lower(text)), '\s+')[i],
-          |    string_split_regex(trim(lower(text)), '\s+')[i+1],
-          |    string_split_regex(trim(lower(text)), '\s+')[i+2])))""".stripMargin.replace("\n", " ")
       s"""WITH w0 AS (SELECT doc_id,
          |    string_split_regex(trim(lower(text)), '\\s+') AS ws
          |  FROM documents),
@@ -4107,13 +4100,6 @@ object DocQueries {
     },
 
     "q_source_overlap" -> {
-      val sh =
-        """list_distinct(list_transform(
-          |  range(1, greatest(len(string_split_regex(trim(lower(text)), '\s+')) - 1, 1)),
-          |  i -> concat_ws(' ',
-          |    string_split_regex(trim(lower(text)), '\s+')[i],
-          |    string_split_regex(trim(lower(text)), '\s+')[i+1],
-          |    string_split_regex(trim(lower(text)), '\s+')[i+2])))""".stripMargin.replace("\n", " ")
       s"""WITH w0 AS (SELECT source,
          |    string_split_regex(trim(lower(text)), '\\s+') AS ws
          |  FROM documents),
@@ -4131,13 +4117,6 @@ object DocQueries {
     },
 
     "q_ngram_novelty" -> {
-      val sh =
-        """list_distinct(list_transform(
-          |  range(1, greatest(len(string_split_regex(trim(lower(text)), '\s+')) - 1, 1)),
-          |  i -> concat_ws(' ',
-          |    string_split_regex(trim(lower(text)), '\s+')[i],
-          |    string_split_regex(trim(lower(text)), '\s+')[i+1],
-          |    string_split_regex(trim(lower(text)), '\s+')[i+2])))""".stripMargin.replace("\n", " ")
       s"""WITH w0 AS (SELECT doc_id,
          |    string_split_regex(trim(lower(text)), '\\s+') AS ws
          |  FROM documents),

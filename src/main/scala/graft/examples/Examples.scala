@@ -1,7 +1,6 @@
 package graft.examples
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 import graft.io.{Sinks, Sources}
 import graft.operators.{AnomalyDetector, AnomalySplitter, ExactDedup,

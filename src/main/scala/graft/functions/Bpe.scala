@@ -234,10 +234,10 @@ object Bpe {
     merges.result()
   }
 
-  /** Encode a text column with a trained merge list: one character split +
-    * the codegen'd [[BpeApply]] kernel running all M merge passes in one
-    * call, inside one projection (no shuffle — the encoder is a pure scan
-    * at any corpus size). */
+  /** Encode a text column with a trained merge list: the codegen'd
+    * [[BpeSegments]] kernel runs the character split and all M merge passes
+    * in one call, inside one projection (no shuffle — the encoder is a pure
+    * scan at any corpus size). */
   def encode(text: Column, merges: Seq[Merge]): Column =
     // fused split+merge kernel: the char-level split materialized one
     // UTF8String per character before r14 — BpeSegments walks byte
@@ -246,21 +246,6 @@ object Bpe {
     BpeSegments.bpe_segments(
       trim(regexp_replace(lower(text), "\\s+", " ")),
       merges.map(m => (m.left, m.right)))
-
-  /** The split + [[BpeApply]] spelling [[encode]] fused away in r14 —
-    * kept as the equivalence regression twin. */
-  private[graft] def encodeSplitForm(text: Column, merges: Seq[Merge]): Column =
-    BpeApply.bpe_apply(
-      split(trim(regexp_replace(lower(text), "\\s+", " ")), ""),
-      merges.map(m => (m.left, m.right)))
-
-  /** The M-chained-`aggregate` Column spelling `encode` replaced — O(M·n²)
-    * interpreted folds; kept as the bit-equality regression twin. */
-  private[graft] def encodeTreeForm(text: Column, merges: Seq[Merge]): Column =
-    merges.foldLeft(split(trim(regexp_replace(lower(text), "\\s+", " ")), "")
-        .as("syms")) {
-      (syms, m) => applyMerge(syms, m.left, m.right)
-    }
 
   /** Persist a merge list as one JSON artifact (the tokenizer file a
     * training job ships with its corpus); `load` restores it for encode.

@@ -83,7 +83,7 @@ object Dec128 {
   }
   private val TEN_POW_38 = java.math.BigInteger.TEN.pow(38)
 
-  /** Low 64 of the unsigned 64×64 product where `a >= 0`. */
+  /** High 64 bits of the unsigned 64×64 product where `a >= 0`. */
   @inline private def umulHiNonNegA(a: Long, b: Long): Long =
     Math.multiplyHigh(a, b) + ((b >> 63) & a)
 

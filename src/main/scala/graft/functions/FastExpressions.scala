@@ -962,7 +962,8 @@ case class BpeSegments(child: Expression, merges: Array[Array[String]])
 
 object BpeSegments {
   /** Called from generated code — static-forwardable, not named `apply`
-    * (see BpeApply.doGenCode for why). */
+    * (a case class inherits TreeNode.apply(Int), which suppresses the
+    * companion's static forwarder — Janino would then fail to compile). */
   def segments(str: UTF8String, mergeBytes: Array[Array[Byte]]):
       org.apache.spark.sql.catalyst.util.GenericArrayData = {
     val total = str.numBytes()
@@ -1015,90 +1016,6 @@ object BpeSegments {
   def bpe_segments(text: Column, merges: Seq[(String, String)]): Column =
     org.apache.spark.sql.GraftColumnBridge.column(BpeSegments(
       org.apache.spark.sql.GraftColumnBridge.expression(text),
-      merges.map(p => Array(p._1, p._2)).toArray))
-}
-
-/** All BPE merge passes over a symbol array in one call — the scan kernel
-  * behind `Bpe.encode` until r14 (now the fused [[BpeSegments]] runs the
-  * split and the merge walk in one pass; this array form remains the
-  * regression twin and the entry for callers that already hold a symbol
-  * array). The Column spelling (M chained `aggregate` folds,
-  * each rebuilding the accumulator array per element) is O(M·n²)
-  * interpreted work per document; this walks a String array M times with
-  * in-place writes — O(M·n), no per-element array copies. Pass-for-pass
-  * equivalent to the fold: a greedy left-to-right (a,b)→ab scan (a merged
-  * token can never re-merge within its own pass, since a+b == a would
-  * need an empty b), asserted bit-identical in FastExprAndIvfSpec.
-  */
-case class BpeApply(child: Expression, merges: Array[Array[String]])
-    extends UnaryExpression {
-  // null symbols pass through unmerged (like the fold twin, whose
-  // null-valued merge condition falls to the append branch)
-  override def dataType: DataType = ArrayType(StringType, containsNull = true)
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"bpe_apply needs array<string>, got $t")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    BpeApply.applyMerges(input.asInstanceOf[ArrayData], merges)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("bpeMerges", merges,
-      "java.lang.String[][]")
-    // NOT named `apply`: the case class inherits TreeNode.apply(Int), which
-    // suppresses the companion's static forwarder — Janino would then only
-    // see apply(int) and fail to compile, silently dropping the whole stage
-    // to interpreted mode.
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.BpeApply.applyMerges($c, $ref)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): BpeApply =
-    copy(child = newChild)
-
-  override def prettyName: String = "bpe_apply"
-}
-
-object BpeApply {
-  /** Called from generated code — must stay a static-forwardable method
-    * (and must NOT be named `apply`; see doGenCode). */
-  def applyMerges(syms: ArrayData, merges: Array[Array[String]]):
-      org.apache.spark.sql.catalyst.util.GenericArrayData = {
-    var n = syms.numElements()
-    var cur = new Array[String](n)
-    var i = 0
-    while (i < n) {
-      val s = syms.getUTF8String(i)
-      cur(i) = if (s == null) null else s.toString
-      i += 1
-    }
-    var m = 0
-    while (m < merges.length) {
-      val a = merges(m)(0); val b = merges(m)(1); val ab = a + b
-      var r = 0; var w = 0
-      while (r < n) {
-        if (r + 1 < n && cur(r) == a && cur(r + 1) == b) {
-          cur(w) = ab; r += 2
-        } else { cur(w) = cur(r); r += 1 }
-        w += 1
-      }
-      n = w
-      m += 1
-    }
-    val out = new Array[Any](n)
-    i = 0
-    while (i < n) {
-      out(i) = if (cur(i) == null) null else UTF8String.fromString(cur(i))
-      i += 1
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
-  }
-
-  def bpe_apply(syms: Column, merges: Seq[(String, String)]): Column =
-    org.apache.spark.sql.GraftColumnBridge.column(BpeApply(
-      org.apache.spark.sql.GraftColumnBridge.expression(syms),
       merges.map(p => Array(p._1, p._2)).toArray))
 }
 

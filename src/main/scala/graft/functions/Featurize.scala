@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
+import org.apache.spark.sql.types.{DoubleType, LongType}
 
 /** Classical sparse featurizers for model-based curation (quality filters,
   * dedup classifiers, topic screens) at corpus scale. Both are one-pass,

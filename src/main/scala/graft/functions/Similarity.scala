@@ -28,19 +28,6 @@ object Similarity {
     when(d === 0, 0.0).otherwise(dot(a, b) / d)
   }
 
-  /** Oracle-exact cosine: products are IEEE-deterministic doubles, quantized
-    * to DECIMAL(38,18) and summed exactly, so the reduction order is
-    * irrelevant and Spark agrees with any other engine bit-for-bit after
-    * rounding (SURVEY §7.4.3). Uses the codegen'd [[DecimalDot]] kernel —
-    * same semantics as a decimal-SUM plan, one pass, no interpreted HOFs. */
-  def cosineExact(a: Column, b: Column, scale: Int = 4): Column = {
-    import DecimalDot.decimal_dot
-    val d = decimal_dot(a, b)
-    val na = sqrt(decimal_dot(a, a))
-    val nb = sqrt(decimal_dot(b, b))
-    round(when(na * nb === 0, 0.0).otherwise(d / (na * nb)), scale)
-  }
-
   /** The scan kernel for the search paths below: the codegen'd
     * [[CosineSim]] expression (one pass, no intermediate array), registered
     * idempotently on the frame's session. Bit-identical to [[cosine]] for
@@ -180,25 +167,9 @@ object Similarity {
     * Vectors sharing a bucket are near in angle; search touches only the
     * query's bucket (+ optional multi-probe neighbors). Computed by the
     * codegen'd [[LshBucket]] kernel; bit-identical to the expression-tree
-    * spelling kept below for the regression test. */
+    * spelling the specs keep as its twin. */
   def lshBucket(vec: Column, dim: Int, nPlanes: Int = 16): Column =
     LshBucket.lsh_bucket(vec, nPlanes, dim)
-
-  /** The nPlanes × dim Column-tree form lshBucket replaced (asserted equal
-    * in FastExprAndIvfSpec). */
-  private[graft] def lshBucketTreeForm(vec: Column, dim: Int,
-      nPlanes: Int = 16): Column = {
-    val bits = (0 until nPlanes).map { p =>
-      // plane component j = centered unit hash of (p, j): deterministic
-      val prod = (0 until dim).map { j =>
-        val h = (scala.util.hashing.MurmurHash3.productHash((p, j)) /
-                 Int.MaxValue.toDouble)
-        element_at(vec, j + 1).cast(DoubleType) * lit(h)
-      }.reduce(_ + _)
-      when(prod >= 0, shiftleft(lit(1L), p)).otherwise(lit(0L))
-    }
-    bits.reduce((a, b) => a.bitwiseOR(b))
-  }
 
   /** IVF (inverted-file) index: cluster the corpus with seeded k-means on a
     * bounded sample, assign every vector to its nearest centroid (one
@@ -294,8 +265,8 @@ object Similarity {
 
   /** Codegen'd centroid-argmin: the centroid table rides along as one plan
     * reference object and each vector is assigned in one generated call.
-    * The Column-tree spelling this replaces (kept below for the regression
-    * test) builds nLists × dim nodes — at 16×64 that is a ~4000-node tree
+    * The Column-tree spelling this replaces (the specs keep it as a twin)
+    * builds nLists × dim nodes — at 16×64 that is a ~4000-node tree
     * whose analysis + janino compile dominated the whole IVF gate. */
   private[graft] case class NearestCentroidExpr(
       child: org.apache.spark.sql.catalyst.expressions.Expression,
@@ -315,26 +286,6 @@ object Similarity {
         newChild: org.apache.spark.sql.catalyst.expressions.Expression): NearestCentroidExpr =
       copy(child = newChild)
     override def prettyName: String = "nearest_centroid"
-  }
-
-  /** The nLists × dim Column-tree form `nearestCentroid` replaced (asserted
-    * bit-equal in FastExprAndIvfSpec — same left-to-right double
-    * accumulation, same lowest-index tie rule). */
-  private[graft] def nearestCentroidTreeForm(vec: Column,
-      centroids: Array[(Int, Seq[Double])]): Column = {
-    val scored = centroids.map { case (i, c) =>
-      val cArr = array(c.map(lit): _*)
-      struct(
-        aggregate(zip_with(vec, cArr, (x, y) => {
-          val d = x.cast(DoubleType) - y
-          d * d
-        }), lit(0.0), (acc, v) => acc + v).as("d"),
-        lit(i).as("i"))
-    }
-    // argmin via array_min over (distance, id) structs: each distance is
-    // evaluated exactly once. A when-chain reduce re-evaluates operand
-    // structs at every nesting level — exponential re-computation.
-    array_min(array(scored.toIndexedSeq: _*)).getField("i")
   }
 
   /** Search an IVF index: score only vectors whose list is among the

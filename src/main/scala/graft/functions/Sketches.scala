@@ -236,16 +236,6 @@ object Sketches {
     f(item.cast("string"))
   }
 
-  /** Row-pair probe for ad-hoc joins where the sketch varies per row.
-    * Deserializes per row — use [[bloomMightContain]] with fixed bytes for
-    * corpus screening. */
-  def bloomMightContainCol(sketch: Column, item: Column): Column = {
-    val f = udf((b: Array[Byte], s: String) =>
-      if (b == null || s == null) null.asInstanceOf[java.lang.Boolean]
-      else java.lang.Boolean.valueOf(bloomFromBytes(b).mightContainString(s)))
-    f(sketch, item.cast("string"))
-  }
-
   /** KMV (k-minimum-values, "bottom-k") distinct sketch per key: the k
     * smallest distinct `xxhash64(value)`s. Unlike HLL, a KMV sketch
     * supports SET ALGEBRA — the k smallest of a union of sketches is the

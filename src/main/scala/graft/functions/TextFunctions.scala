@@ -19,16 +19,6 @@ object TextFunctions {
       .otherwise(length(t) - length(replace(t, lit(" "), lit(""))) + 1)
   }
 
-  /** BPE-ish subword estimate: word count + extra tokens for long words
-    * (≈ 1 token per 4 chars beyond the first 4) — the standard cheap
-    * heuristic for budget accounting when no tokenizer is available. */
-  def tokenEstimate(text: Column): Column = {
-    val words = split(trim(lower(text)), "\\s+")
-    aggregate(words, lit(0L),
-      (acc, w) => acc + lit(1L) + greatest(lit(0L),
-        ((length(w) - 1) / 4).cast(LongType)))
-  }
-
   /** Quality-scoring signals (length / punctuation / stopword ratios) and a
     * composite score ∈ [0,1]. Thresholds follow common public pipeline
     * heuristics (Gopher-style rules): docs too short/long, too much
@@ -285,12 +275,6 @@ object TextFunctions {
       regexp_replace(acc, re, s"[${name.toUpperCase}]")
     }
 
-  /** Count (don't remove) PII hits per class — for corpus audits. */
-  def piiCounts(text: Column): Column =
-    struct(piiPatterns.map { case (name, re) =>
-      size(regexp_extract_all(text, lit(re), lit(0))).as(name)
-    }: _*)
-
   /** Corpus normalization: strip HTML tags, unescape the common entities,
     * drop control characters, collapse whitespace. The boilerplate-removal
     * pass that precedes quality scoring in public pretraining pipelines.
@@ -348,25 +332,6 @@ object TextFunctions {
     // corpus-wide in R13OperatorSpec)
     KeptLines.kept_lines(lines, minWords,
       math.round(maxUpperRatio * 10000).toInt, boilerplate)
-
-  /** The interpreted-HOF spelling [[filterLinesArr]] replaced (kept for
-    * the parity regression test). */
-  private[graft] def filterLinesArrTreeForm(lines: Column, minWords: Int = 3,
-      maxUpperRatio: Double = 0.6,
-      boilerplate: Seq[String] = boilerplateLines): Column = {
-    val upperScaled = math.round(maxUpperRatio * 10000).toInt
-    filter(lines, l => {
-      val collapsed = trim(regexp_replace(l, "\\s+", " "))
-      val wc = when(length(collapsed) === 0, lit(0))
-        .otherwise(length(collapsed)
-          - length(regexp_replace(collapsed, " ", "")) + lit(1))
-      val up = length(regexp_replace(l, "[^A-Z]", ""))
-      val alpha = length(regexp_replace(l, "[^A-Za-z]", ""))
-      val tooUpper = alpha > 0 && up * lit(10000) > alpha * lit(upperScaled)
-      val boiler = lower(trim(l)).isin(boilerplate: _*)
-      wc >= minWords && !tooUpper && !boiler
-    })
-  }
 
   /** Table form of the line-wise pass: `clean_text` (kept lines rejoined)
     * plus kept/removed counts per document. The lines array and its kept
@@ -889,21 +854,5 @@ object TextFunctions {
     }.reduceOption(_ union _)
       .map(_.distinct())
       .getOrElse(docs.sparkSession.emptyDataFrame)
-  }
-
-  /** The per-window slice+aggregate Column spelling the kernel replaced —
-    * O(n·k) interpreted HOF folds; kept as the bit-equality regression
-    * twin (FastExprAndIvfSpec). */
-  private[graft] def windowHashesTreeForm(words: Column, k: Int): Column = {
-    def rotl1(x: Column): Column =
-      shiftleft(x, 1).bitwiseOR(shiftrightunsigned(x, 63))
-    val hashed = transform(words, w => xxhash64(w))
-    val nWin = size(words) - lit(k) + lit(1)
-    // sequence(1, 0) throws under ANSI — guard the shorter-than-k case
-    when(nWin >= 1,
-      transform(sequence(lit(1), nWin, lit(1)), i =>
-        aggregate(slice(hashed, i, lit(k)), lit(0L),
-          (acc, x) => rotl1(acc).bitwiseXOR(x))))
-      .otherwise(array().cast(ArrayType(LongType)))
   }
 }

@@ -37,10 +37,6 @@ object UrlFunctions {
   private val AuthRe = "^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]*).*"
   private val RestRe = "^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]*(.*)"
 
-  /** Lowercased scheme of an absolute URL ("" when not absolute). */
-  def urlScheme(url: Column): Column =
-    lower(regexp_extract(url, SchemeRe, 1))
-
   /** Lowercased authority (host[:port], userinfo stripped). */
   def urlAuthority(url: Column): Column =
     regexp_replace(lower(regexp_extract(url, AuthRe, 1)), "^[^@]*@", "")

@@ -1,6 +1,6 @@
 package graft.io
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.DataFrame
 
 /** Sink adapters (SURVEY §2.2). Spark's commit protocol (`_temporary` +
   * atomic rename) supplies the transactional temp-file-then-move semantics
@@ -205,7 +205,7 @@ object Sinks {
         // append onto an existing table surfaces here as already-exists —
         // swallowed; a genuinely bad DDL fails the insert below loudly
         try { st.executeUpdate(s"CREATE TABLE $table (${cols.mkString(", ")})"); () }
-        catch { case e: java.sql.SQLException if mode != "overwrite" => () }
+        catch { case _: java.sql.SQLException if mode != "overwrite" => () }
       } finally st.close()
     } finally conn.close()
 

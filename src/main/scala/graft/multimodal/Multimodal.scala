@@ -107,10 +107,6 @@ object Multimodal {
         "duration_ms")
   }
 
-  /** Metadata-only ops: never deserialize the payload. */
-  def filterByDims(media: DataFrame, minW: Int, minH: Int): DataFrame =
-    media.filter(col("width") >= minW && col("height") >= minH)
-
   /** Resize: decodable payloads (PPM/BMP/PNG/JPEG/GIF) are REALLY decoded,
     * scaled with nearest-neighbor, and re-encoded container-preserving
     * (aspect-preserving fit into maxW×maxH, never upscaling). Containers
@@ -120,7 +116,6 @@ object Multimodal {
     * exercised. Non-image rows pass through untouched. Partition-local,
     * zero shuffle, payload never crosses the wire. */
   def resizeImages(media: DataFrame, maxW: Int, maxH: Int): DataFrame = {
-    val spark = media.sparkSession
     val cols = media.columns
     val resizeUdf = udf { (content: Array[Byte], w: Int, h: Int) =>
       val src = Option(content).getOrElse(Array.emptyByteArray)

@@ -1,10 +1,9 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.core.Semantics.{asNumeric, isMissing}
+import graft.core.Semantics.asNumeric
 
 /** Aggregator (`/root/reference/src/transformers/enrichers/aggregator.py`,
   * 321 LoC): SQL GROUP BY with a multi-output agg spec and the reference's

@@ -10,13 +10,9 @@ import graft.core.Semantics.isMissing
   * Mirrors the reference's `Transformer` lifecycle
   * (`src/transformers/base_transformer.py:22-99`) minus record-at-a-time
   * iteration — stats come from `observe()` metrics instead of counters. */
-trait TransformStage { self =>
+trait TransformStage {
   def name: String
   def apply(df: DataFrame): DataFrame
-  def andThen(next: TransformStage): TransformStage = new TransformStage {
-    def name = s"${self.name}>${next.name}"
-    def apply(df: DataFrame): DataFrame = next(self(df))
-  }
 }
 
 /** NullRemover — 4 strategies (`src/transformers/cleaners/null_remover.py`).

@@ -122,11 +122,6 @@ object CorpusStats {
         col("rank_in_key"))
   }
 
-  /** Per-slice category diversity: distinct-category count + Shannon
-    * entropy (nats) of the category mix — "is this source monolingual"
-    * at a glance. Entropy terms quantize (safeRound 12) and sum through
-    * DECIMAL(38,15) ([[graft.operators.Audit.infoGain]] pattern) so
-    * category order can't drift the sum. */
   /** Per-(slice, category) entropy terms with the transcendental part
     * pre-quantized to a long: `tm_e15 ≈ p·ln(p)·1e15`. The e15 longs are
     * the single source of truth a verification twin can replay — summing
@@ -143,26 +138,6 @@ object CorpusStats {
     counts.join(broadcast(totals), Seq(sliceCol))
       .select(col(sliceCol), col(catCol), col("c"), col("n"), col("n_cats"),
         floor(p * log(p) * lit(1e15) + lit(0.5)).cast(LongType).as("tm_e15"))
-  }
-
-  def sliceDiversity(df: DataFrame, sliceCol: String, catCol: String,
-      scale: Int = 4): DataFrame = {
-    val dec = org.apache.spark.sql.types.DecimalType(38, 15)
-    val counts = df.groupBy(col(sliceCol), col(catCol))
-      .agg(count(lit(1)).as("_c"))
-    val totals = counts.groupBy(col(sliceCol))
-      .agg(sum(col("_c")).as("_n"), count(lit(1)).as("n_cats"))
-    counts.join(broadcast(totals), Seq(sliceCol))
-      .select(col(sliceCol), col("_n"), col("n_cats"),
-        Semantics.safeRound(
-          col("_c").cast(DoubleType) / col("_n").cast(DoubleType) *
-            log(col("_c").cast(DoubleType) / col("_n").cast(DoubleType)),
-          12).cast(dec).as("_t"))
-      .groupBy(col(sliceCol))
-      .agg(first(col("_n")).as("n_rows"), first(col("n_cats")).as("n_cats"),
-        Semantics.safeRound((-sum(col("_t"))).cast(DoubleType), scale)
-          .as("entropy"))
-      .orderBy(col(sliceCol))
   }
 
   def sourceOverlap(df: DataFrame, textCol: String, groupCol: String,

@@ -111,24 +111,11 @@ object MinHashDedup {
     * operand once, so the whole shingle set is O(k·len) per row. */
   def shingles(text: Column, k: Int = 3): Column =
     // codegen'd kernel: one byte scan, same distinct set and order as the
-    // HOF spelling below (asserted in FastExprAndIvfSpec). Sole divergence:
+    // HOF spelling (asserted in FastExprAndIvfSpec). Sole divergence:
     // text whose first token boundary is non-space whitespace — the regex
     // form then emits an "" token artifact (trim strips spaces only); the
     // kernel never produces empty tokens.
     graft.functions.WordShingles.word_shingles(text, k)
-
-  /** The interpreted-HOF spelling shingles() replaced (kept for the
-    * regression test). */
-  private[graft] def shinglesTreeForm(text: Column, k: Int = 3): Column = {
-    val words = split(lower(trim(text)), "\\s+")
-    val n = size(words)
-    val joined = (1 until k).foldLeft(words) { (acc, j) =>
-      val shifted = slice(words, lit(j + 1), greatest(n - j, lit(0)))
-      zip_with(acc, shifted, (a, b) =>
-        when(a.isNotNull && b.isNotNull, concat(a, lit(" "), b)))
-    }
-    array_distinct(filter(joined, _.isNotNull))
-  }
 
   /** Pick LSH banding parameters for a target Jaccard threshold: among all
     * (bands, rowsPerBand) factorizations of `numHashes`, the one whose
@@ -157,23 +144,6 @@ object MinHashDedup {
     array((0 until numHashes).map { seed =>
       array_min(transform(sh, s => xxhash64(s, lit(seed))))
     }: _*)
-
-  /** Candidate pairs via LSH banding: signature split into `bands` bands of
-    * `rowsPerBand`; docs sharing any band bucket are candidates.
-    * Returns (band, bucket, id) — the caller self-joins on (band, bucket).
-    */
-  def bandBuckets(df: DataFrame, idCol: String, sigCol: String,
-      bands: Int, rowsPerBand: Int): DataFrame = {
-    val bandCol = explode(
-      array((0 until bands).map { b =>
-        struct(lit(b).as("band"),
-          xxhash64(array_join(
-            transform(slice(col(sigCol), b * rowsPerBand + 1, rowsPerBand),
-              _.cast(StringType)), ",")).as("bucket"))
-      }: _*))
-    df.select(col(idCol), bandCol.as("bb")).select(col(idCol),
-      col("bb.band").as("band"), col("bb.bucket").as("bucket"))
-  }
 
   /** (id, band, bucket) rows from the codegen'd signature kernel — shared by
     * [[clusters]] and the connected-components property tests. */
@@ -277,12 +247,9 @@ object MinHashDedup {
     * window (the former two-relation spelling exploded the corpus twice
     * and recomputed the shingle table three times — measured at roughly
     * half the family's cost), verification once per distinct-set pair,
-    * then [[Components.labels]]' constant-shape propagation rounds.
-    * `numHashes`/`bands` retained for signature compatibility; no longer
-    * consulted. */
+    * then [[Components.labels]]' constant-shape propagation rounds. */
   def fuzzyDedup(df: DataFrame, idCol: String, textCol: String,
-      threshold: Double = 0.8, k: Int = 3, numHashes: Int = 64,
-      bands: Int = 16, maxIters: Int = 30): DataFrame = {
+      threshold: Double = 0.8, k: Int = 3, maxIters: Int = 30): DataFrame = {
     val sh = graft.core.Rebalance.computeDense(df)
       .select(col(idCol), shingles(col(textCol), k).as("_sh"))
     // verifier rounds half-up at e4: prefix sized one ulp below t so
@@ -311,19 +278,16 @@ object MinHashDedup {
       verified, "_ca", "_cb", maxIters)
   }
 
-  /** Persisted LSH index over an already-curated corpus: band buckets for
-    * candidate generation plus per-doc shingle sets for exact
-    * verification. Both frames are plain DataFrames — write them to
-    * parquet once and every future batch screens against them without
-    * touching the indexed corpus's raw text again. */
-  final case class NearDupIndex(buckets: DataFrame, shingleSets: DataFrame)
+  /** Persisted near-dup index over an already-curated corpus: per-doc
+    * shingle sets for candidate generation and exact verification. A plain
+    * DataFrame — write it to parquet once and every future batch screens
+    * against it without touching the indexed corpus's raw text again. */
+  final case class NearDupIndex(shingleSets: DataFrame)
 
   def buildNearDupIndex(df: DataFrame, idCol: String, textCol: String,
-      k: Int = 3, numHashes: Int = 64, bands: Int = 16): NearDupIndex =
-    NearDupIndex(
-      bucketTable(df, idCol, textCol, k, numHashes, bands),
-      graft.core.Rebalance.computeDense(df)
-        .select(col(idCol), shingles(col(textCol), k).as("_sh")))
+      k: Int = 3): NearDupIndex =
+    NearDupIndex(graft.core.Rebalance.computeDense(df)
+      .select(col(idCol), shingles(col(textCol), k).as("_sh")))
 
   /** Incremental fuzzy screen — the ingest-time question "is this new
     * document a near-dup of ANYTHING already in the corpus": candidates
@@ -337,12 +301,9 @@ object MinHashDedup {
     * back with (`is_dup`, `match_id` = smallest matching indexed id, -1
     * if none). The global rare-first token order is recomputed per batch
     * over index∪batch tokens from [[NearDupIndex.shingleSets]] — the
-    * indexed corpus's raw text is never touched again. `numHashes`/
-    * `bands` are retained for signature compatibility; the screen no
-    * longer depends on banding parameters. */
+    * indexed corpus's raw text is never touched again. */
   def incrementalNearDup(newDocs: DataFrame, idCol: String, textCol: String,
-      index: NearDupIndex, threshold: Double = 0.8, k: Int = 3,
-      numHashes: Int = 64, bands: Int = 16): DataFrame = {
+      index: NearDupIndex, threshold: Double = 0.8, k: Int = 3): DataFrame = {
     // DISTINCT-SET PRE-PASS on BOTH relations (same md5-of-sorted-set
     // content key as [[SetSimJoin.selfJoinPairs]]): candidates and the
     // exact verification run once per distinct (new set, indexed set)

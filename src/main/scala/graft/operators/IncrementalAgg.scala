@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 /** Incremental keyed aggregation: a persisted (key, n, total) state table
   * folded forward one ingest batch at a time — the nightly-rollup shape

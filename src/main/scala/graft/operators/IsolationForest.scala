@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -24,7 +24,6 @@ object IsolationForest {
   final case class Split(feature: Int, value: Double, lo: Node, hi: Node) extends Node
 
   final case class Model(trees: Seq[Node], psi: Int, means: Array[Double]) {
-    def heightLimit: Int = math.ceil(log2(psi.toDouble)).toInt
     /** Flattened trees for the scoring hot path — recomputed lazily per
       * executor after deserialization (cheap: one walk per tree). */
     @transient lazy val flat: Array[FlatTree] = trees.map(FlatTree.from).toArray
@@ -94,29 +93,15 @@ object IsolationForest {
     }
   }
 
-  def pathLength(row: Array[Double], node: Node, depth: Int = 0): Double =
-    node match {
-      case Leaf(size) => depth + cFactor(size)
-      case Split(f, v, lo, hi) =>
-        if (row(f) < v) pathLength(row, lo, depth + 1)
-        else pathLength(row, hi, depth + 1)
-    }
-
   /** Anomaly score ∈ (0,1): s = 2^(−E[h]/c(ψ)); ≥0.5 ≈ anomalous.
-    * Walks the flattened trees in tree order — bit-identical to the boxed
-    * [[pathLength]] fold (same summation order, same precomputed
-    * depth+c(size) leaf values), asserted by spec. */
+    * Walks the flattened trees in tree order — bit-identical to a fold of
+    * the recursive path length over the boxed trees (same summation order,
+    * same precomputed depth+c(size) leaf values), asserted by spec. */
   def score(model: Model, row: Array[Double]): Double = {
     val ts = model.flat
     var s = 0.0; var t = 0
     while (t < ts.length) { s += ts(t).pathLen(row); t += 1 }
     math.pow(2.0, -(s / ts.length) / cFactor(model.psi))
-  }
-
-  /** The boxed-tree spelling `score` replaced (kept as the regression twin). */
-  private[graft] def scoreBoxed(model: Model, row: Array[Double]): Double = {
-    val avg = model.trees.map(t => pathLength(row, t)).sum / model.trees.size
-    math.pow(2.0, -avg / cFactor(model.psi))
   }
 
   /** Fit on a deterministic driver-side sample: rows ordered by a stable key

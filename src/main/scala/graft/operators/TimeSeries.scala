@@ -25,7 +25,7 @@ object TimeSeries {
     * yield null slope. */
   def groupTrend(df: DataFrame, groupCol: String, tsCol: String,
       valueCol: String, scale: Int = 6): DataFrame = {
-    import org.apache.spark.sql.types.{DecimalType, DoubleType}
+    import org.apache.spark.sql.types.DoubleType
     val rows = df.filter(col(valueCol).isNotNull)
     val mins = rows.groupBy(col(groupCol))
       .agg(min(unix_timestamp(col(tsCol))).as("_t0"))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StringType
 
-/** The reference dashboard's filter model: 13 operators, conjunctive AND only
+/** The reference dashboard's filter model: 12 operators, conjunctive AND only
   * (`/root/reference/src/database/duckdb_service.py:22-28,255-325`).
   *
   * Each filter compiles to a single Catalyst `Column` predicate, so the whole
@@ -15,8 +15,6 @@ import org.apache.spark.sql.types.StringType
 sealed trait Filter { def column: String; def toColumn: Column }
 
 object Filter {
-  import graft.core.Semantics.isMissing
-
   final case class Eq(column: String, value: Any) extends Filter {
     def toColumn: Column = col(column) === lit(value)
   }
@@ -55,12 +53,6 @@ object Filter {
   final case class IsNotNull(column: String) extends Filter {
     def toColumn: Column = col(column).isNotNull
   }
-  /** Extension beyond the reference surface: missing = null OR empty string,
-    * the predicate the transform operators use internally. */
-  final case class IsMissing(column: String) extends Filter {
-    def toColumn: Column = isMissing(col(column))
-  }
-
   private def escapeLike(v: String): String =
     v.replace("\\", "\\\\").replace("%", "\\%").replace("_", "\\_")
 

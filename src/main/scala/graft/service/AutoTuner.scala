@@ -135,11 +135,6 @@ final class AutoTuner(
     else currentBatchSize
   }
 
-  /** `get_performance_summary` (auto_tuner.py:403-443). */
-  def performanceSummary(pipelineId: String): Map[String, Any] =
-    Map("pipeline_id" -> pipelineId) ++ analyzeHistory(pipelineId) ++
-      Map("recommendation" -> getRecommendations(pipelineId).reason)
-
   // ---- persistence (auto_tuner.py:345-401), MiniJson state file ----------
 
   private def stateFile = statePath.map(p => java.nio.file.Paths.get(p, "history.json"))

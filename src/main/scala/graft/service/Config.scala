@@ -127,14 +127,9 @@ object Paths {
       .replaceAll("-+", "-")
       .stripPrefix("-").stripSuffix("-")
 
-  def bronze(org: String): String = s"${slugify(org)}/bronze"
   def goldBi(org: String, dataset: String): String = {
     val ds = slugify(dataset)
     s"${slugify(org)}/gold/bi/$ds/$ds.parquet"
-  }
-  def goldRag(org: String, dataset: String): String = {
-    val ds = slugify(dataset)
-    s"${slugify(org)}/gold/rag/$ds/$ds.csv"
   }
   def quarantine(org: String, dataset: String): String =
     s"${slugify(org)}/quarantine/${slugify(dataset)}_anomalies.csv"

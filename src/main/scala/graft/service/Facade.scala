@@ -1,6 +1,6 @@
 package graft.service
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import graft.query.{AggregationSpec, Filter, QueryService}
 
 /** Typed facade over the reference's analytics REST endpoints

@@ -1,6 +1,6 @@
 package graft.service
 
-import org.apache.spark.sql.SparkSession
+import graft.core.Sessions
 
 /** Runnable analytics server: serves the full HTTP facade (dashboard
   * query/drill-down/filter-values/schema, anomalies, insights,
@@ -15,16 +15,13 @@ object HttpMain {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val port = args.lift(1).map(_.toInt).getOrElse(8080)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
+    val master = sys.env.getOrElse("SPARK_MASTER", "local[*]")
+    val spark = Sessions.builder(master, 32)
       .appName("graft-http")
-      .config("spark.sql.shuffle.partitions", "32")
       // dashboard = many users: FAIR scheduling time-slices concurrent
       // requests' jobs (each HttpFacade thread tags its own pool) instead
       // of FIFO-queueing light queries behind heavy ones
       .config("spark.scheduler.mode", "FAIR")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val http = new HttpFacade(Facade.Tables(graft.core.Tables.table(spark, dir, _)))

@@ -80,7 +80,7 @@ object Visualization {
       charts += ChartConfig("pie", 6, c.name, None, Some("count"))
     for (n <- nums.take(2))
       charts += ChartConfig("histogram", 5, n.name, None, None)
-    for (c1 <- cats.take(1); c2 <- cats.drop(1).take(1); n <- nums.take(1))
+    for (c1 <- cats.take(1); c2 <- cats.drop(1).take(1); _ <- nums.take(1))
       charts += ChartConfig("heatmap", 5, c1.name, Some(c2.name), Some("sum"))
     for (c <- cats.take(1); n <- nums.take(1))
       charts += ChartConfig("box", 4, c.name, Some(n.name), None)

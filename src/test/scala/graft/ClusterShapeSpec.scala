@@ -41,26 +41,11 @@ class ClusterShapeSpec extends AnyFunSuite with BeforeAndAfterAll {
       .foreach(_.stop())
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
-    val addOpens = Seq(
-      "java.base/java.lang", "java.base/java.lang.invoke",
-      "java.base/java.lang.reflect", "java.base/java.io",
-      "java.base/java.net", "java.base/java.nio",
-      "java.base/java.util", "java.base/java.util.concurrent",
-      "java.base/java.util.concurrent.atomic",
-      "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-      "java.base/sun.security.action", "java.base/sun.util.calendar")
-      .map(p => s"--add-opens $p=ALL-UNNAMED").mkString(" ")
-    cluster = SparkSession.builder()
-      .master("local-cluster[2,2,1536]")
+    cluster = graft.core.Sessions.builder("local-cluster[2,2,1536]", 4)
       .appName("graft-cluster-shape")
       // executor JVMs are forked fresh: hand them this JVM's classpath
-      // (graft classes + spark jars) and the JDK-17 module opens
+      // (graft classes + spark jars); Spark adds the JDK module opens
       .config("spark.executor.extraClassPath", sys.props("java.class.path"))
-      .config("spark.executor.extraJavaOptions", addOpens)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     // fail fast (and loudly) if the executors never came up — every test
     // would otherwise hang on scheduling

@@ -1,7 +1,8 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.functions.{Similarity, TokenCount, TextFunctions => TF}
+import graft.functions.{FunctionTwins, Similarity, TokenCount, TextFunctions => TF}
+import graft.operators.OperatorTwins
 
 class FastExprAndIvfSpec extends SparkSuite {
   import spark.implicits._
@@ -140,7 +141,7 @@ class FastExprAndIvfSpec extends SparkSuite {
     val emb = graft.core.Tables.table(spark, sfDir, "embeddings")
     val mismatches = emb.select(
       Similarity.lshBucket(col("embedding"), dim = 64, nPlanes = 8).as("fast"),
-      Similarity.lshBucketTreeForm(col("embedding"), dim = 64, nPlanes = 8)
+      FunctionTwins.lshBucketTreeForm(col("embedding"), dim = 64, nPlanes = 8)
         .as("tree"))
       .filter(col("fast") =!= col("tree")).count()
     assert(mismatches == 0)
@@ -157,7 +158,7 @@ class FastExprAndIvfSpec extends SparkSuite {
     for (k <- Seq(2, 3)) {
       val mismatches = docs.select(
         MinHashDedup.shingles(col("text"), k).as("fast"),
-        MinHashDedup.shinglesTreeForm(col("text"), k).as("tree"))
+        OperatorTwins.shinglesTreeForm(col("text"), k).as("tree"))
         .filter(col("fast") =!= col("tree")).count()
       assert(mismatches == 0, s"k=$k")
     }
@@ -166,7 +167,7 @@ class FastExprAndIvfSpec extends SparkSuite {
       .toDF("text")
     val pairs = edge.select(
       MinHashDedup.shingles(col("text"), 3).as("fast"),
-      MinHashDedup.shinglesTreeForm(col("text"), 3).as("tree"))
+      OperatorTwins.shinglesTreeForm(col("text"), 3).as("tree"))
       .collect()
     pairs.foreach(r => assert(r.getSeq[String](0) == r.getSeq[String](1),
       s"edge: ${r.getSeq[String](0)} vs ${r.getSeq[String](1)}"))
@@ -269,7 +270,7 @@ class FastExprAndIvfSpec extends SparkSuite {
     for (k <- Seq(2, 12, 64, 65)) { // incl. rotation-count wraparound at 64
       val mismatches = docs.select(
           TF.windowHashes(col("w"), k).as("fast"),
-          TF.windowHashesTreeForm(col("w"), k).as("tree"))
+          FunctionTwins.windowHashesTreeForm(col("w"), k).as("tree"))
         .filter(col("fast") =!= col("tree")).count()
       assert(mismatches == 0, s"k=$k")
     }
@@ -287,7 +288,7 @@ class FastExprAndIvfSpec extends SparkSuite {
     val merges = Bpe.train(docs, "text", numMerges = 6)
     val mismatches = docs.select(
         Bpe.encode(col("text"), merges).as("fast"),
-        Bpe.encodeTreeForm(col("text"), merges).as("tree"))
+        FunctionTwins.encodeTreeForm(col("text"), merges).as("tree"))
       .filter(col("fast") =!= col("tree")).count()
     assert(mismatches == 0)
     // in-pass re-merge edge: "aaa" under (a,a) gives [aa, a], never [aa, aa]
@@ -303,7 +304,7 @@ class FastExprAndIvfSpec extends SparkSuite {
     // same centroid table through both spellings — assignment must agree
     // everywhere (incl. the lowest-index distance-tie rule)
     val mismatches = emb.select(col("vec_id"),
-        Similarity.nearestCentroidTreeForm(col("embedding"), index.centroids)
+        FunctionTwins.nearestCentroidTreeForm(col("embedding"), index.centroids)
           .as("tree"))
       .join(index.assigned.select(col("vec_id"), col("_list")), "vec_id")
       .filter(col("tree") =!= col("_list")).count()

@@ -90,7 +90,7 @@ class R13OperatorSpec extends SparkSuite {
   }
 
   test("KeptLines kernel ≡ the interpreted HOF spelling, adversarial corpus") {
-    import graft.functions.{TextFunctions => TF}
+    import graft.functions.{FunctionTwins, TextFunctions => TF}
     val lines = Seq(
       "a perfectly ordinary line of text",
       "THIS LINE IS ENTIRELY SHOUTING AT YOU",
@@ -121,7 +121,7 @@ class R13OperatorSpec extends SparkSuite {
       .withColumn("_lines", split(col("text"), "\n"))
     val both = df.select(col("id"),
       TF.filterLinesArr(col("_lines")).as("kernel"),
-      TF.filterLinesArrTreeForm(col("_lines")).as("spec"))
+      FunctionTwins.filterLinesArrTreeForm(col("_lines")).as("spec"))
     val bad = both.filter(!(col("kernel") <=> col("spec"))).collect()
     assert(bad.isEmpty, s"kernel/spec divergence: ${bad.take(3).mkString}")
     // and over the real fixture corpus, multiline-derived like the gate
@@ -131,7 +131,7 @@ class R13OperatorSpec extends SparkSuite {
         regexp_replace(col("text"), "((\\S+\\s+){7}\\S+)\\s", "$1\n"), "\n"))
     val badDocs = docs.select(
       TF.filterLinesArr(col("_lines")).as("kernel"),
-      TF.filterLinesArrTreeForm(col("_lines")).as("spec"))
+      FunctionTwins.filterLinesArrTreeForm(col("_lines")).as("spec"))
       .filter(!(col("kernel") <=> col("spec"))).count()
     assert(badDocs == 0L)
   }

@@ -84,7 +84,7 @@ class R14OperatorSpec extends SparkSuite {
         merges.zipWithIndex.map { case ((a, b), r) =>
           graft.functions.Bpe.Merge(r, a, b, 0L) }).as("syms"))
     val twin = df.select(col("i"),
-      graft.functions.Bpe.encodeSplitForm(col("t"),
+      graft.functions.FunctionTwins.encodeSplitForm(col("t"),
         merges.zipWithIndex.map { case ((a, b), r) =>
           graft.functions.Bpe.Merge(r, a, b, 0L) }).as("syms"))
     val a = fused.orderBy("i").collect()

@@ -6,6 +6,21 @@ import graft.core.{Bucketing, Skew}
 class ScaleSpec extends SparkSuite {
   import spark.implicits._
 
+  test("Sessions.builder sets the session policy Bench and Verify run under") {
+    // the suite session comes from Sessions.builder("local[4]", 4); the
+    // context conf holds what was set at creation, which later runtime sets
+    // (Tables.table's nanosAsLong, a spec's shuffle override) never touch
+    val conf = spark.sparkContext.getConf
+    assert(conf.get("spark.sql.session.timeZone") == "UTC")
+    assert(conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
+    assert(conf.get("spark.ui.enabled") == "false")
+    assert(conf.get("spark.sql.shuffle.partitions") == "4")
+    // AQE is left to Spark's default, which must stay on
+    assert(conf.getOption("spark.sql.adaptive.enabled").getOrElse(
+      org.apache.spark.sql.internal.SQLConf.ADAPTIVE_EXECUTION_ENABLED
+        .defaultValueString) == "true")
+  }
+
   test("salted aggregation equals plain aggregation on skewed data") {
     // 90% of rows share one hot key
     val rows = (1 to 2000).map(i =>

@@ -68,7 +68,7 @@ class ServiceSpec extends SparkSuite {
       Array(-5.5, 12.0), Array(22.1, 6.0))
     rows.foreach { r =>
       assert(IsolationForest.score(model, r) ==
-        IsolationForest.scoreBoxed(model, r))
+        graft.operators.OperatorTwins.scoreBoxed(model, r))
     }
   }
 

@@ -3,16 +3,11 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared session: one per suite (lazy), local[4], UTC, small shuffle. */
+/** Shared session: one per suite (lazy), local[4], graft's session
+  * policy, small shuffle. */
 trait SparkSuite extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .getOrCreate()
+  lazy val spark: SparkSession =
+    graft.core.Sessions.builder("local[4]", 4).appName("graft-test").getOrCreate()
 
   val sfDir = "/root/testdata/sf0.001"
 
