@@ -23,10 +23,19 @@ import graft.query.{AggregationSpec, Filter, Metric}
   * reference's envelope (`duckdb_service.py:417-431`). Rows are serialized
   * plan-side (`to_json`, explicit nulls) and streamed; the server holds at
   * most the already-limited result of the endpoint's query.
+  *
+  * These six envelope routes (the five above and `POST /api/analytics/
+  * anomalies`) answer a repeated request from a [[ResponseCache]] of
+  * rendered bodies, keyed by route, canonical request JSON and resolved
+  * table frame, and bounded to `Runtime.maxMemory / 32` bytes per server.
+  * Each response carries `X-Graft-Cache: hit|miss`; a hit's body equals the
+  * miss's except for `query_time_ms`, which is the hit's own serve time.
+  * Every other route runs each time.
   */
 final class HttpFacade(tables: Facade.Tables, maxRows: Int = 100000) {
   private var server: HttpServer = _
   private var pool: java.util.concurrent.ExecutorService = _
+  private val cache = new ResponseCache(Runtime.getRuntime.maxMemory / 32)
 
   def start(port: Int = 0): Int = {
     server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
@@ -436,11 +445,36 @@ final class HttpFacade(tables: Facade.Tables, maxRows: Int = 100000) {
       val body = new String(ex.getRequestBody.readAllBytes(), UTF_8)
       val parsed = if (body.trim.isEmpty) Map.empty[String, Any]
                    else asMap(MiniJson.parse(body))
-      respond(ex, post(parsed))
+      respondCached(ex, parsed.get("table").map(asStr), parsed)(post(parsed))
     }
 
   private def getCtx(get: Map[String, String] => DataFrame): com.sun.net.httpserver.HttpHandler =
-    safe(ex => respond(ex, get(queryParams(ex))))
+    safe { ex =>
+      val q = queryParams(ex)
+      respondCached(ex, q.get("table"), q)(get(q))
+    }
+
+  /** An envelope route through the response cache. A request without a
+    * table runs uncached (its handler answers the error). */
+  private def respondCached(ex: HttpExchange, table: Option[String],
+      request: Map[String, _])(df: => DataFrame): Unit = {
+    val t0 = System.nanoTime()
+    var queryMs = 0L
+    def run(): Array[Byte] = {
+      val d = df
+      val t = System.nanoTime()
+      val head = envelopeHead(d)
+      queryMs = (System.nanoTime() - t) / 1000000L
+      head
+    }
+    ex.getResponseHeaders.set("X-Graft-Cache", "miss")
+    val (head, hit) = table.fold((run(), false)) { t =>
+      cache.getOrCompute(ex.getHttpContext.getPath, request, tables.resolve(t))(run())
+    }
+    if (hit) ex.getResponseHeaders.set("X-Graft-Cache", "hit")
+    sendEnvelope(ex, head,
+      if (hit) (System.nanoTime() - t0) / 1000000L else queryMs)
+  }
 
   private def safe(f: HttpExchange => Unit): com.sun.net.httpserver.HttpHandler =
     (ex: HttpExchange) => {
@@ -478,8 +512,14 @@ final class HttpFacade(tables: Facade.Tables, maxRows: Int = 100000) {
     * an endpoint whose query exceeds the cap returns the first `maxRows`
     * with `"truncated": true` instead of buffering an unbounded frame. */
   private def respond(ex: HttpExchange, df: DataFrame): Unit = {
-    import org.apache.spark.sql.functions.{col, struct, to_json}
     val t0 = System.nanoTime()
+    val head = envelopeHead(df)
+    sendEnvelope(ex, head, (System.nanoTime() - t0) / 1000000L)
+  }
+
+  /** The envelope up to its last field, `query_time_ms`. */
+  private def envelopeHead(df: DataFrame): Array[Byte] = {
+    import org.apache.spark.sql.functions.{col, struct, to_json}
     val rows = df
       .select(to_json(struct(df.columns.map(col): _*),
         Map("ignoreNullFields" -> "false")).as("j"))
@@ -487,16 +527,18 @@ final class HttpFacade(tables: Facade.Tables, maxRows: Int = 100000) {
       .collect().map(_.getString(0))
     val truncated = rows.length > maxRows
     val out = if (truncated) rows.take(maxRows) else rows
-    val ms = (System.nanoTime() - t0) / 1000000L
-    val json = "{\"data\":" + out.mkString("[", ",", "]") +
+    ("{\"data\":" + out.mkString("[", ",", "]") +
       ",\"row_count\":" + out.length +
-      (if (truncated) ",\"truncated\":true" else "") +
-      ",\"query_time_ms\":" + ms + "}"
-    send(ex, 200, json)
+      (if (truncated) ",\"truncated\":true" else "")).getBytes(UTF_8)
   }
 
-  private def send(ex: HttpExchange, code: Int, body: String): Unit = {
-    val bytes = body.getBytes(UTF_8)
+  private def sendEnvelope(ex: HttpExchange, head: Array[Byte], queryMs: Long): Unit =
+    send(ex, 200, head ++ s""","query_time_ms":$queryMs}""".getBytes(UTF_8))
+
+  private def send(ex: HttpExchange, code: Int, body: String): Unit =
+    send(ex, code, body.getBytes(UTF_8))
+
+  private def send(ex: HttpExchange, code: Int, bytes: Array[Byte]): Unit = {
     ex.getResponseHeaders.set("Content-Type", "application/json")
     ex.sendResponseHeaders(code, bytes.length.toLong)
     val os = ex.getResponseBody
