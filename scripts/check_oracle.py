@@ -33,6 +33,11 @@ def main():
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
     n_pass = n_fail = n_skip = 0
+    # a requested name with no oracle entry (a typo, or a gate Verify never
+    # registered) fails instead of shrinking the run to nothing
+    for name in sorted(only - oracle.keys()):
+        print(f"NOORACLE {name}: not in oracle_sql.json")
+        n_fail += 1
     for name in sorted(oracle):
         if only and name not in only:
             continue
@@ -72,10 +77,10 @@ def main():
         else:
             print(f"PASS     {name} ({len(ours)} rows)")
             n_pass += 1
-    # rows-only queries (no oracle)
+    # rows-only queries (no oracle); a requested one already failed above
     for d in sorted(glob.glob(f"{out_dir}/q_*")):
         name = d.split("/")[-1]
-        if name not in oracle and (not only or name in only):
+        if name not in oracle and not only:
             try:
                 n = len(pd.read_parquet(d))
                 status = "ROWSONLY" if n > 0 else "EMPTY!"

@@ -1,11 +1,12 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.entry.{CoreQueries, DocQueries, ExtraQueries}
+import graft.entry.{CoreQueries, DocQueries, ExtraQueries, Gate}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
-  * Queries live in `graft.entry.*` grouped by domain; this object is the
-  * merged registry the driver's smoke/verify/bench harness consumes.
+/** The gate registry (SURVEY.md §7). Gates live in `graft.entry.*`
+  * grouped by domain, each declared once with its builder and its DuckDB
+  * oracle; this object merges them for the smoke check, `Verify` and
+  * `Bench`.
   */
 object SparkEntry {
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
@@ -14,13 +15,17 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("q_join_broadcast")(spark, "/root/testdata/sf0.001")
 
+  /** Every gate, in declaration order. */
+  val gates: Seq[Gate] =
+    CoreQueries.gates ++ DocQueries.gates ++ ExtraQueries.gates
+
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    CoreQueries.queries ++ DocQueries.queries ++ ExtraQueries.queries
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    gates.map(g => g.name -> g.build).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on the
-    * same parquet tables. Keys absent here get a rows-only check (used for
-    * ops whose hashing primitives differ cross-engine, e.g. xxhash64 LSH). */
-  def oracleSql: Map[String, String] =
-    CoreQueries.oracleSql ++ DocQueries.oracleSql ++ ExtraQueries.oracleSql
+    * same parquet tables. Every gate carries its oracle, so the key sets
+    * are equal. */
+  val oracleSql: Map[String, String] =
+    gates.map(g => g.name -> g.oracleSql).toMap
 }

@@ -8,6 +8,14 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0); val outDir = args(1)
     val only = args.drop(2).toSet // optional subset for local iteration
+    // a typo'd gate name would otherwise run no gate and still write the
+    // whole oracle_sql.json, which the compare then passes as empty
+    val unknown = only.diff(SparkEntry.queries.keySet)
+    if (unknown.nonEmpty) {
+      System.err.println(
+        s"[verify] unknown query name(s): ${unknown.toSeq.sorted.mkString(", ")}")
+      sys.exit(2)
+    }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // SPARK_GRAFT_MASTER=local-cluster[2,2,1536] runs the WHOLE gate suite
     // on real forked executor JVMs (the ClusterShapeSpec topology) — the

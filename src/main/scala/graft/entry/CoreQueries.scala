@@ -20,8 +20,8 @@ object CoreQueries {
 
   // ---- §2.6 filter operators ------------------------------------------------
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_filter_eq" -> ((s, dir) =>
+  val gates: Seq[Gate] = Seq(
+    Gate("q_filter_eq", (s, dir) =>
       QueryService.drillDown(t(s, dir, "lineitem"),
         Seq(Filter.Eq("l_returnflag", "R")),
         Seq("l_orderkey", "l_linenumber", "l_quantity"),
@@ -31,51 +31,70 @@ object CoreQueries {
         // because the sort key ties at the cut. Pagination-with-binding-cap
         // semantics are gated separately by q_drilldown_page.
         sortKey = "l_orderkey", limit = 100000000)
-        .orderBy(col("l_orderkey"), col("l_linenumber"))),
+        .orderBy(col("l_orderkey"), col("l_linenumber")),
+      """SELECT l_orderkey, l_linenumber, l_quantity FROM lineitem
+        |WHERE l_returnflag = 'R' ORDER BY l_orderkey, l_linenumber""".stripMargin),
 
-    "q_filter_neq" -> ((s, dir) =>
+    Gate("q_filter_neq", (s, dir) =>
       t(s, dir, "orders").filter(Filter.Neq("o_orderstatus", "F").toColumn)
         .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
-        .orderBy(col("o_orderkey"))),
+        .orderBy(col("o_orderkey")),
+      """SELECT o_orderkey, o_orderstatus, o_totalprice FROM orders
+        |WHERE o_orderstatus <> 'F' ORDER BY o_orderkey""".stripMargin),
 
-    "q_filter_in" -> ((s, dir) =>
+    Gate("q_filter_in", (s, dir) =>
       t(s, dir, "customer")
         .filter(Filter.In("c_mktsegment", Seq("BUILDING", "MACHINERY")).toColumn)
         .select(col("c_custkey"), col("c_mktsegment"), col("c_acctbal"))
-        .orderBy(col("c_custkey"))),
+        .orderBy(col("c_custkey")),
+      """SELECT c_custkey, c_mktsegment, c_acctbal FROM customer
+        |WHERE c_mktsegment IN ('BUILDING','MACHINERY') ORDER BY c_custkey""".stripMargin),
 
-    "q_filter_not_in" -> ((s, dir) =>
+    Gate("q_filter_not_in", (s, dir) =>
       t(s, dir, "nation")
         .filter(Filter.NotIn("n_regionkey", Seq(0, 1)).toColumn)
-        .orderBy(col("n_nationkey"))),
+        .orderBy(col("n_nationkey")),
+      """SELECT * FROM nation WHERE n_regionkey NOT IN (0,1)
+        |ORDER BY n_nationkey""".stripMargin),
 
-    "q_filter_between" -> ((s, dir) =>
+    Gate("q_filter_between", (s, dir) =>
       t(s, dir, "lineitem")
         .filter(Filter.Between("l_quantity", 10.0, 20.0).toColumn)
         .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"))
-        .orderBy(col("l_orderkey"), col("l_linenumber"))),
+        .orderBy(col("l_orderkey"), col("l_linenumber")),
+      """SELECT l_orderkey, l_linenumber, l_quantity FROM lineitem
+        |WHERE l_quantity BETWEEN 10.0 AND 20.0
+        |ORDER BY l_orderkey, l_linenumber""".stripMargin),
 
-    "q_filter_gt_lt" -> ((s, dir) =>
+    Gate("q_filter_gt_lt", (s, dir) =>
       t(s, dir, "orders")
         .filter(Filter.compile(Seq(
           Filter.Gt("o_totalprice", 50000.0), Filter.Lt("o_totalprice", 60000.0))))
         .select(col("o_orderkey"), col("o_totalprice"))
-        .orderBy(col("o_orderkey"))),
+        .orderBy(col("o_orderkey")),
+      """SELECT o_orderkey, o_totalprice FROM orders
+        |WHERE o_totalprice > 50000.0 AND o_totalprice < 60000.0
+        |ORDER BY o_orderkey""".stripMargin),
 
-    "q_filter_gte_lte" -> ((s, dir) =>
+    Gate("q_filter_gte_lte", (s, dir) =>
       t(s, dir, "lineitem")
         .filter(Filter.compile(Seq(
           Filter.Gte("l_discount", 0.02), Filter.Lte("l_discount", 0.05))))
         .select(col("l_orderkey"), col("l_linenumber"), col("l_discount"))
-        .orderBy(col("l_orderkey"), col("l_linenumber"))),
+        .orderBy(col("l_orderkey"), col("l_linenumber")),
+      """SELECT l_orderkey, l_linenumber, l_discount FROM lineitem
+        |WHERE l_discount >= 0.02 AND l_discount <= 0.05
+        |ORDER BY l_orderkey, l_linenumber""".stripMargin),
 
-    "q_filter_contains" -> ((s, dir) =>
+    Gate("q_filter_contains", (s, dir) =>
       t(s, dir, "part")
         .filter(Filter.Contains("p_name", "RED").toColumn)
         .select(col("p_partkey"), col("p_name"))
-        .orderBy(col("p_partkey"))),
+        .orderBy(col("p_partkey")),
+      """SELECT p_partkey, p_name FROM part
+        |WHERE p_name ILIKE '%RED%' ORDER BY p_partkey""".stripMargin),
 
-    "q_filter_null_ops" -> ((s, dir) => {
+    Gate("q_filter_null_ops", (s, dir) => {
       // derive a nullable column so is_null/is_not_null have rows to split
       val df = t(s, dir, "orders")
         .withColumn("maybe", when(col("o_orderstatus") === "O", col("o_orderpriority")))
@@ -86,11 +105,17 @@ object CoreQueries {
       nulls.withColumn("which", lit("is_null"))
         .unionByName(notNulls.withColumn("which", lit("is_not_null")))
         .select(col("which"), col("n_null")).orderBy(col("which"))
-    }),
+    },
+      """WITH d AS (SELECT CASE WHEN o_orderstatus = 'O' THEN o_orderpriority END AS maybe
+        |           FROM orders)
+        |SELECT 'is_not_null' AS which, COUNT(*) AS n_null FROM d WHERE maybe IS NOT NULL
+        |UNION ALL
+        |SELECT 'is_null' AS which, COUNT(*) AS n_null FROM d WHERE maybe IS NULL
+        |ORDER BY which""".stripMargin),
 
     // ---- §2.6 aggregation / drill-down / filter-values ----------------------
 
-    "q_agg_dashboard" -> ((s, dir) =>
+    Gate("q_agg_dashboard", (s, dir) =>
       // the reference's documented example shape (src/api/main.py:964-979):
       // filters + group by + aggregate metrics + order by metric desc + limit
       QueryService.query(t(s, dir, "orders"),
@@ -99,9 +124,14 @@ object CoreQueries {
         AggregationSpec(
           groupBy = Seq("o_orderpriority"),
           metrics = Seq(Metric("count", "o_orderkey", "n_orders")),
-          limit = Some(20)))),
+          limit = Some(20))),
+      """SELECT o_orderpriority, COUNT(*) AS n_orders FROM orders
+        |WHERE o_orderstatus IN ('O','F')
+        |  AND o_orderdate BETWEEN '1995-01-01' AND '1997-12-31'
+        |GROUP BY o_orderpriority
+        |ORDER BY n_orders DESC, o_orderpriority ASC LIMIT 20""".stripMargin),
 
-    "q_agg_metrics" -> ((s, dir) =>
+    Gate("q_agg_metrics", (s, dir) =>
       t(s, dir, "lineitem").groupBy(col("l_returnflag")).agg(
         Semantics.exactSum(col("l_quantity")).as("sum_qty"),
         Semantics.exactAvg(col("l_extendedprice")).as("avg_price"),
@@ -109,46 +139,76 @@ object CoreQueries {
         max(col("l_quantity")).as("max_qty"),
         count(lit(1)).as("n_rows"),
         countDistinct(col("l_orderkey")).as("n_orders"))
-        .orderBy(col("l_returnflag"))),
+        .orderBy(col("l_returnflag")),
+      s"""SELECT l_returnflag, ${esum("l_quantity")} AS sum_qty,
+         |  ${eavg("l_extendedprice")} AS avg_price,
+         |  MIN(l_quantity) AS min_qty, MAX(l_quantity) AS max_qty,
+         |  COUNT(*) AS n_rows, COUNT(DISTINCT l_orderkey) AS n_orders
+         |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
 
-    "q_drilldown_page" -> ((s, dir) =>
+    Gate("q_drilldown_page", (s, dir) =>
       QueryService.drillDown(t(s, dir, "customer"),
         Seq(Filter.Eq("c_mktsegment", "BUILDING")),
         Seq("c_custkey", "c_name", "c_acctbal"),
-        sortKey = "c_custkey", limit = 20, offset = 10)),
+        sortKey = "c_custkey", limit = 20, offset = 10),
+      """SELECT c_custkey, c_name, c_acctbal FROM customer
+        |WHERE c_mktsegment = 'BUILDING'
+        |ORDER BY c_custkey LIMIT 20 OFFSET 10""".stripMargin),
 
-    "q_filter_values" -> ((s, dir) =>
+    Gate("q_filter_values", (s, dir) =>
       QueryService.filterValues(t(s, dir, "part"), "p_brand",
-        search = Some("brand#1"), limit = 100)),
+        search = Some("brand#1"), limit = 100),
+      """SELECT DISTINCT p_brand FROM part
+        |WHERE p_brand IS NOT NULL
+        |  AND lower(CAST(p_brand AS VARCHAR)) LIKE '%brand#1%'
+        |ORDER BY p_brand LIMIT 100""".stripMargin),
 
-    "q_profile_numeric" -> ((s, dir) =>
+    Gate("q_profile_numeric", (s, dir) =>
       QueryService.profileNumeric(t(s, dir, "lineitem"),
         Seq("l_quantity", "l_extendedprice", "l_discount"))
-        .orderBy(col("column_name"))),
+        .orderBy(col("column_name")),
+      {
+        def one(c: String) =
+          s"""SELECT '$c' AS column_name,
+             |  CAST(MIN($c) AS DOUBLE) AS min_value,
+             |  CAST(MAX($c) AS DOUBLE) AS max_value,
+             |  ${eavg(c)} AS mean_value,
+             |  COUNT(DISTINCT $c) AS n_distinct FROM lineitem""".stripMargin
+        Seq("l_quantity", "l_extendedprice", "l_discount").map(one)
+          .mkString("", "\nUNION ALL\n", "\nORDER BY column_name")
+      }),
 
     // ---- §2.9 sorts / limits / pivot / histogram / value_counts -------------
 
-    "q_topk" -> ((s, dir) =>
+    Gate("q_topk", (s, dir) =>
       t(s, dir, "part").groupBy(col("p_type"))
         .agg(count(lit(1)).as("n"))
         .orderBy(col("n").desc, col("p_type").asc)
-        .limit(15)),
+        .limit(15),
+      """SELECT p_type, COUNT(*) AS n FROM part GROUP BY p_type
+        |ORDER BY n DESC, p_type ASC LIMIT 15""".stripMargin),
 
-    "q_value_counts" -> ((s, dir) =>
+    Gate("q_value_counts", (s, dir) =>
       t(s, dir, "customer").groupBy(col("c_mktsegment"))
         .agg(count(lit(1)).as("n"))
-        .orderBy(col("n").desc, col("c_mktsegment").asc)),
+        .orderBy(col("n").desc, col("c_mktsegment").asc),
+      """SELECT c_mktsegment, COUNT(*) AS n FROM customer GROUP BY c_mktsegment
+        |ORDER BY n DESC, c_mktsegment ASC""".stripMargin),
 
-    "q_pivot" -> ((s, dir) =>
+    Gate("q_pivot", (s, dir) =>
       // pivot l_linestatus as conditional aggregation (ANSI-portable form)
       t(s, dir, "lineitem").groupBy(col("l_returnflag")).agg(
         Semantics.exactSum(when(col("l_linestatus") === "O", col("l_quantity")))
           .as("qty_o"),
         Semantics.exactSum(when(col("l_linestatus") === "F", col("l_quantity")))
           .as("qty_f"))
-        .orderBy(col("l_returnflag"))),
+        .orderBy(col("l_returnflag")),
+      s"""SELECT l_returnflag,
+         |  ${esum("CASE WHEN l_linestatus = 'O' THEN l_quantity END")} AS qty_o,
+         |  ${esum("CASE WHEN l_linestatus = 'F' THEN l_quantity END")} AS qty_f
+         |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
 
-    "q_histogram" -> ((s, dir) => {
+    Gate("q_histogram", (s, dir) => {
       val df = t(s, dir, "orders")
       // bin edges from exact min/max (raw parquet doubles — no arithmetic)
       val r = df.agg(min(col("o_totalprice")), max(col("o_totalprice"))).head()
@@ -158,9 +218,13 @@ object CoreQueries {
           least(floor((col("o_totalprice") - lit(lo)) / lit(width)), lit(29L)))
         .groupBy(col("bin")).agg(count(lit(1)).as("n"))
         .orderBy(col("bin"))
-    }),
+    },
+      """WITH b AS (SELECT MIN(o_totalprice) AS lo, MAX(o_totalprice) AS hi FROM orders)
+        |SELECT CAST(LEAST(FLOOR((o_totalprice - lo) / ((hi - lo) / 30.0)), 29) AS BIGINT) AS bin,
+        |  COUNT(*) AS n
+        |FROM orders, b GROUP BY bin ORDER BY bin""".stripMargin),
 
-    "q_window_running" -> ((s, dir) => {
+    Gate("q_window_running", (s, dir) => {
       import org.apache.spark.sql.expressions.Window
       // (l_orderkey, l_linenumber) is NOT unique in the data — extend the
       // sort key until the order is total, or the running sum is ambiguous
@@ -176,11 +240,20 @@ object CoreQueries {
         .select(col("l_suppkey"), col("l_orderkey"), col("l_linenumber"),
           col("running_qty"))
         .orderBy(col("l_suppkey") +: orderCols :+ col("running_qty"): _*)
-    }),
+    },
+      """SELECT l_suppkey, l_orderkey, l_linenumber,
+        |  ROUND(CAST(SUM(CAST(l_quantity AS DECIMAL(38,10)))
+        |    OVER (PARTITION BY l_suppkey
+        |          ORDER BY l_orderkey, l_linenumber, l_quantity, l_extendedprice, l_partkey
+        |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE), 4)
+        |    AS running_qty
+        |FROM lineitem
+        |ORDER BY l_suppkey, l_orderkey, l_linenumber, l_quantity, l_extendedprice,
+        |  l_partkey, running_qty""".stripMargin),
 
     // ---- §2.3 cleaners -------------------------------------------------------
 
-    "q_null_drop" -> ((s, dir) => {
+    Gate("q_null_drop", (s, dir) => {
       // synthesize missing values (nulls AND empty strings) deterministically,
       // then NullRemover(drop): any missing field drops the row
       val df = t(s, dir, "customer")
@@ -190,52 +263,88 @@ object CoreQueries {
       NullRemover("drop", Seq("phone", "c_name"))(df)
         .select(col("c_custkey"), col("phone"))
         .orderBy(col("c_custkey"))
-    }),
+    },
+      """WITH d AS (SELECT c_custkey,
+        |  CASE WHEN c_custkey % 7 = 0 THEN NULL
+        |       WHEN c_custkey % 5 = 0 THEN ''
+        |       ELSE 'p-' || c_custkey END AS phone,
+        |  c_name FROM customer)
+        |SELECT c_custkey, phone FROM d
+        |WHERE NOT (phone IS NULL OR CAST(phone AS VARCHAR) = ''
+        |        OR c_name IS NULL OR CAST(c_name AS VARCHAR) = '')
+        |ORDER BY c_custkey""".stripMargin),
 
-    "q_null_drop_all" -> ((s, dir) => {
+    Gate("q_null_drop_all", (s, dir) => {
       val df = t(s, dir, "customer")
         .withColumn("a", when(col("c_custkey") % 3 === 0, col("c_name")))
         .withColumn("b", when(col("c_custkey") % 2 === 0, lit("")).otherwise(col("c_mktsegment")))
       NullRemover("drop_all", Seq("a", "b"))(df)
         .select(col("c_custkey"), col("a"), col("b"))
         .orderBy(col("c_custkey"))
-    }),
+    },
+      """WITH d AS (SELECT c_custkey,
+        |  CASE WHEN c_custkey % 3 = 0 THEN c_name END AS a,
+        |  CASE WHEN c_custkey % 2 = 0 THEN '' ELSE c_mktsegment END AS b
+        |  FROM customer)
+        |SELECT c_custkey, a, b FROM d
+        |WHERE NOT ((a IS NULL OR CAST(a AS VARCHAR) = '')
+        |       AND (b IS NULL OR CAST(b AS VARCHAR) = ''))
+        |ORDER BY c_custkey""".stripMargin),
 
-    "q_null_fill" -> ((s, dir) => {
+    Gate("q_null_fill", (s, dir) => {
       val df = t(s, dir, "customer")
         .withColumn("seg", when(col("c_custkey") % 4 === 0, lit(null).cast(StringType))
           .otherwise(col("c_mktsegment")))
       NullRemover("fill", Seq("seg"), fillValue = "UNKNOWN")(df)
         .select(col("c_custkey"), col("seg"))
         .orderBy(col("c_custkey"))
-    }),
+    },
+      """SELECT c_custkey,
+        |  CASE WHEN (seg IS NULL OR seg = '') THEN 'UNKNOWN' ELSE seg END AS seg
+        |FROM (SELECT c_custkey,
+        |        CASE WHEN c_custkey % 4 = 0 THEN NULL ELSE c_mktsegment END AS seg
+        |      FROM customer)
+        |ORDER BY c_custkey""".stripMargin),
 
-    "q_column_remover" -> ((s, dir) =>
+    Gate("q_column_remover", (s, dir) =>
       ColumnRemover(columns = Set("l_comment"), prefix = Some("l_ship"),
         pattern = Some("l_(tax|discount)"))(t(s, dir, "lineitem"))
-        .orderBy(col("l_orderkey"), col("l_linenumber"))),
+        .orderBy(col("l_orderkey"), col("l_linenumber")),
+      """SELECT l_orderkey, l_partkey, l_suppkey, l_linenumber, l_quantity,
+        |  l_extendedprice, l_returnflag, l_linestatus
+        |FROM lineitem ORDER BY l_orderkey, l_linenumber""".stripMargin),
 
     // ---- §2.4 exact dedup ----------------------------------------------------
 
-    "q_dedup_exact" -> ((s, dir) => {
+    Gate("q_dedup_exact", (s, dir) => {
       val df = t(s, dir, "orders").withColumn("_row_id", col("o_orderkey"))
       ExactDedup(df, matchFields = Seq("o_custkey", "o_orderstatus"),
         strategy = "keep_first")
         .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"))
         .orderBy(col("o_orderkey"))
-    }),
+    },
+      """SELECT o_orderkey, o_custkey, o_orderstatus FROM (
+        |  SELECT o_orderkey, o_custkey, o_orderstatus,
+        |    ROW_NUMBER() OVER (PARTITION BY o_custkey, o_orderstatus
+        |                       ORDER BY o_orderkey ASC) AS rn
+        |  FROM orders) WHERE rn = 1 ORDER BY o_orderkey""".stripMargin),
 
-    "q_dedup_keep_last" -> ((s, dir) => {
+    Gate("q_dedup_keep_last", (s, dir) => {
       val df = t(s, dir, "orders").withColumn("_row_id", col("o_orderkey"))
       ExactDedup(df, matchFields = Seq("o_custkey", "o_orderpriority"),
         strategy = "keep_last")
         .select(col("o_orderkey"), col("o_custkey"), col("o_orderpriority"))
         .orderBy(col("o_orderkey"))
-    }),
+    },
+      """SELECT o_orderkey, o_custkey, o_orderpriority FROM (
+        |  SELECT o_orderkey, o_custkey, o_orderpriority,
+        |    ROW_NUMBER() OVER (PARTITION BY o_custkey, o_orderpriority
+        |                       ORDER BY o_orderkey DESC) AS rn
+        |  FROM orders) WHERE rn = 1 ORDER BY o_orderkey""".stripMargin),
 
     // ---- §2.5 aggregator exact semantics ------------------------------------
 
-    "q_agg_semantics" -> ((s, dir) => {
+    Gate("q_agg_semantics", (s, dir) => {
       import Aggregator.AggSpec
       val df = t(s, dir, "orders")
         .withColumn("_row_id", col("o_orderkey"))
@@ -255,25 +364,61 @@ object CoreQueries {
         .withColumn("total_price", Semantics.safeRound(col("total_price"), 2))
         .withColumn("avg_price", Semantics.safeRound(col("avg_price"), 2))
         .orderBy(col("o_orderstatus"))
-    }),
+    },
+      """WITH d AS (SELECT o_orderkey, o_orderstatus, o_totalprice, o_orderpriority,
+        |  CASE WHEN o_orderkey % 10 = 0 THEN NULL ELSE o_orderpriority END AS prio
+        |  FROM orders)
+        |SELECT o_orderstatus,
+        |  FLOOR(COALESCE(CAST(SUM(CAST(o_totalprice AS DECIMAL(38,10))) AS DOUBLE), 0.0) * 1e2 + 0.5) / 1e2 AS total_price,
+        |  FLOOR(CAST(SUM(CAST(o_totalprice AS DECIMAL(38,10))) AS DOUBLE) / COUNT(o_totalprice) * 1e2 + 0.5) / 1e2 AS avg_price,
+        |  MIN(o_totalprice) AS min_price, MAX(o_totalprice) AS max_price,
+        |  COUNT(*) AS n_rows,
+        |  COUNT(DISTINCT CAST(prio AS VARCHAR)) AS n_prio,
+        |  MIN_BY(o_orderpriority, o_orderkey) AS first_prio,
+        |  MAX_BY(o_orderpriority, o_orderkey) AS last_prio,
+        |  STRING_AGG(prio, ', ' ORDER BY o_orderkey) AS prio_concat
+        |FROM d GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin),
 
     // ---- §2.5 dashboard aggregator (includes the one join) ------------------
 
-    "q_dashboard_summary" -> ((s, dir) =>
-      DashboardAggregator.summary(t(s, dir, "orders"), "o_totalprice")),
+    Gate("q_dashboard_summary", (s, dir) =>
+      DashboardAggregator.summary(t(s, dir, "orders"), "o_totalprice"),
+      s"""SELECT COUNT(*) AS record_count,
+         |  ${esum("o_totalprice")} AS total_amount,
+         |  ${eavg("o_totalprice")} AS mean_amount,
+         |  CAST(MIN(o_totalprice) AS DOUBLE) AS min_amount,
+         |  CAST(MAX(o_totalprice) AS DOUBLE) AS max_amount
+         |FROM orders""".stripMargin),
 
-    "q_dashboard_provider" -> ((s, dir) =>
+    Gate("q_dashboard_provider", (s, dir) =>
       DashboardAggregator.byProvider(t(s, dir, "lineitem"),
         provider = "l_suppkey", amount = "l_extendedprice",
-        qualityCol = Some("l_discount"))),
+        qualityCol = Some("l_discount")),
+      s"""WITH agg AS (
+         |  SELECT l_suppkey, COUNT(*) AS record_count,
+         |    ${esum("l_extendedprice")} AS total_amount,
+         |    ${eavg("l_extendedprice")} AS mean_amount,
+         |    CAST(MIN(l_extendedprice) AS DOUBLE) AS min_amount,
+         |    CAST(MAX(l_extendedprice) AS DOUBLE) AS max_amount
+         |  FROM lineitem GROUP BY l_suppkey),
+         |q AS (SELECT l_suppkey, ${eavg("l_discount")} AS mean_quality_score
+         |      FROM lineitem GROUP BY l_suppkey)
+         |SELECT agg.*, q.mean_quality_score FROM agg LEFT JOIN q USING (l_suppkey)
+         |ORDER BY total_amount DESC, l_suppkey ASC""".stripMargin),
 
-    "q_dashboard_by_date" -> ((s, dir) =>
+    Gate("q_dashboard_by_date", (s, dir) =>
       DashboardAggregator.byDate(t(s, dir, "orders"), "o_orderdate", "o_totalprice")
-        .withColumn("service_date", date_format(col("service_date"), "yyyy-MM-dd"))),
+        .withColumn("service_date", date_format(col("service_date"), "yyyy-MM-dd")),
+      s"""SELECT strftime(CAST(o_orderdate AS DATE), '%Y-%m-%d') AS service_date,
+         |  COUNT(*) AS record_count,
+         |  ${esum("o_totalprice")} AS total_amount,
+         |  ${eavg("o_totalprice")} AS mean_amount
+         |FROM orders GROUP BY CAST(o_orderdate AS DATE)
+         |ORDER BY service_date ASC""".stripMargin),
 
     // ---- joins beyond the reference (scale-critical shapes) -----------------
 
-    "q_join_broadcast" -> ((s, dir) => {
+    Gate("q_join_broadcast", (s, dir) => {
       // small-dim broadcast join: orders × customer→nation→region chain
       val cust = t(s, dir, "customer")
       val nat = t(s, dir, "nation")
@@ -286,9 +431,15 @@ object CoreQueries {
         .agg(count(lit(1)).as("n_orders"),
           Semantics.exactSum(col("o_totalprice")).as("revenue"))
         .orderBy(col("r_name"))
-    }),
+    },
+      s"""SELECT r_name, COUNT(*) AS n_orders, ${esum("o_totalprice")} AS revenue
+         |FROM orders
+         |JOIN customer ON o_custkey = c_custkey
+         |JOIN nation ON c_nationkey = n_nationkey
+         |JOIN region ON n_regionkey = r_regionkey
+         |GROUP BY r_name ORDER BY r_name""".stripMargin),
 
-    "q_join_large" -> ((s, dir) =>
+    Gate("q_join_large", (s, dir) =>
       // the scale-defining shuffle join: lineitem ⋈ orders on orderkey
       t(s, dir, "lineitem")
         .join(t(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
@@ -296,28 +447,39 @@ object CoreQueries {
         .agg(count(lit(1)).as("n_items"),
           Semantics.exactSum(col("l_extendedprice") * (lit(1.0) - col("l_discount")))
             .as("revenue"))
-        .orderBy(col("o_orderstatus"))),
+        .orderBy(col("o_orderstatus")),
+      s"""SELECT o_orderstatus, COUNT(*) AS n_items,
+         |  ${esum("l_extendedprice * (1.0 - l_discount)")} AS revenue
+         |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+         |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin),
 
     // existence joins: only keys cross the shuffle, no payload duplication
-    "q_join_semi" -> ((s, dir) =>
+    Gate("q_join_semi", (s, dir) =>
       t(s, dir, "customer").join(t(s, dir, "orders"),
         col("c_custkey") === col("o_custkey"), "left_semi")
         .select(col("c_custkey"), col("c_name"))
-        .orderBy(col("c_custkey"))),
+        .orderBy(col("c_custkey")),
+      """SELECT c_custkey, c_name FROM customer c
+        |WHERE EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
+        |ORDER BY c_custkey""".stripMargin),
 
     // anti vs BIG orders only — every customer has SOME order, so the
     // unfiltered anti would be a trivially-empty (weak) gate
-    "q_join_anti" -> ((s, dir) =>
+    Gate("q_join_anti", (s, dir) =>
       t(s, dir, "customer").join(
         t(s, dir, "orders").filter(col("o_totalprice") > 300000.0),
         col("c_custkey") === col("o_custkey"), "left_anti")
         .select(col("c_custkey"), col("c_name"))
-        .orderBy(col("c_custkey"))),
+        .orderBy(col("c_custkey")),
+      """SELECT c_custkey, c_name FROM customer c
+        |WHERE NOT EXISTS (SELECT 1 FROM orders o
+        |  WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 300000)
+        |ORDER BY c_custkey""".stripMargin),
 
     // per-key time-series features: lag + 3-row moving average, one
     // user-partitioned window pass (the standard feature-engineering
     // shape; decimal-exact moving sum for cross-engine parity)
-    "q_window_lag" -> ((s, dir) => {
+    Gate("q_window_lag", (s, dir) => {
       import org.apache.spark.sql.expressions.Window
       val w = Window.partitionBy(col("user_id"))
         .orderBy(col("ts"), col("event_id"))
@@ -333,42 +495,11 @@ object CoreQueries {
         .select(col("user_id"), col("event_id"), col("prev_x10k"),
           col("ma3_x10k"))
         .orderBy(col("user_id"), col("event_id"))
-    }),
-
-    // grouped top-k through TopK.perKey: the rank filter becomes a
-    // WindowGroupLimit (per-partition k-heaps BEFORE the exchange)
-    "q_topk_grouped" -> ((s, dir) =>
-      graft.core.TopK.perKey(
-        t(s, dir, "events").select(col("event_id"), col("event_type"),
-          col("value")),
-        Seq("event_type"), 5,
-        Seq(col("value").desc_nulls_last, col("event_id").asc))
-        .select(col("event_type"), col("event_id"),
-          floor(col("value") * lit(10000.0) + lit(0.5)).cast(LongType)
-            .as("value_x10k"),
-          col("rank_in_key").cast(LongType).as("rank_in_key"))
-        .orderBy(col("event_type"), col("rank_in_key")))
-  )
-
-  // ---- DuckDB oracles --------------------------------------------------------
-
-  val oracleSql: Map[String, String] = Map(
-    "q_join_semi" ->
-      """SELECT c_custkey, c_name FROM customer c
-        |WHERE EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
-        |ORDER BY c_custkey""".stripMargin,
-
-    "q_join_anti" ->
-      """SELECT c_custkey, c_name FROM customer c
-        |WHERE NOT EXISTS (SELECT 1 FROM orders o
-        |  WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 300000)
-        |ORDER BY c_custkey""".stripMargin,
-
-    // ts ordered at MICROsecond granularity on both sides: Spark reads the
-    // nanos column via timestamp_micros(ns div 1000), so the oracle must
-    // truncate identically or a same-microsecond pair whose event_id order
-    // contradicts its nanosecond order would sort differently
-    "q_window_lag" ->
+    },
+      // ts ordered at MICROsecond granularity on both sides: Spark reads the
+      // nanos column via timestamp_micros(ns div 1000), so the oracle must
+      // truncate identically or a same-microsecond pair whose event_id order
+      // contradicts its nanosecond order would sort differently
       """SELECT user_id, event_id,
         |  CAST(FLOOR(LAG(value, 1) OVER
         |    (PARTITION BY user_id ORDER BY epoch_ns(ts) // 1000, event_id)
@@ -380,9 +511,21 @@ object CoreQueries {
         |WINDOW w3 AS (PARTITION BY user_id
         |  ORDER BY epoch_ns(ts) // 1000, event_id
         |  ROWS BETWEEN 2 PRECEDING AND CURRENT ROW)
-        |ORDER BY user_id, event_id""".stripMargin,
+        |ORDER BY user_id, event_id""".stripMargin),
 
-    "q_topk_grouped" ->
+    // grouped top-k through TopK.perKey: the rank filter becomes a
+    // WindowGroupLimit (per-partition k-heaps BEFORE the exchange)
+    Gate("q_topk_grouped", (s, dir) =>
+      graft.core.TopK.perKey(
+        t(s, dir, "events").select(col("event_id"), col("event_type"),
+          col("value")),
+        Seq("event_type"), 5,
+        Seq(col("value").desc_nulls_last, col("event_id").asc))
+        .select(col("event_type"), col("event_id"),
+          floor(col("value") * lit(10000.0) + lit(0.5)).cast(LongType)
+            .as("value_x10k"),
+          col("rank_in_key").cast(LongType).as("rank_in_key"))
+        .orderBy(col("event_type"), col("rank_in_key")),
       """WITH r AS (SELECT event_type, event_id, value,
         |    ROW_NUMBER() OVER (PARTITION BY event_type
         |      ORDER BY value DESC NULLS LAST, event_id) AS rk
@@ -391,222 +534,6 @@ object CoreQueries {
         |  CAST(FLOOR(value * 10000 + 0.5) AS BIGINT) AS value_x10k,
         |  CAST(rk AS BIGINT) AS rank_in_key
         |FROM r WHERE rk <= 5
-        |ORDER BY event_type, rk""".stripMargin,
-
-    "q_filter_eq" ->
-      """SELECT l_orderkey, l_linenumber, l_quantity FROM lineitem
-        |WHERE l_returnflag = 'R' ORDER BY l_orderkey, l_linenumber""".stripMargin,
-
-    "q_filter_neq" ->
-      """SELECT o_orderkey, o_orderstatus, o_totalprice FROM orders
-        |WHERE o_orderstatus <> 'F' ORDER BY o_orderkey""".stripMargin,
-
-    "q_filter_in" ->
-      """SELECT c_custkey, c_mktsegment, c_acctbal FROM customer
-        |WHERE c_mktsegment IN ('BUILDING','MACHINERY') ORDER BY c_custkey""".stripMargin,
-
-    "q_filter_not_in" ->
-      """SELECT * FROM nation WHERE n_regionkey NOT IN (0,1)
-        |ORDER BY n_nationkey""".stripMargin,
-
-    "q_filter_between" ->
-      """SELECT l_orderkey, l_linenumber, l_quantity FROM lineitem
-        |WHERE l_quantity BETWEEN 10.0 AND 20.0
-        |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-
-    "q_filter_gt_lt" ->
-      """SELECT o_orderkey, o_totalprice FROM orders
-        |WHERE o_totalprice > 50000.0 AND o_totalprice < 60000.0
-        |ORDER BY o_orderkey""".stripMargin,
-
-    "q_filter_gte_lte" ->
-      """SELECT l_orderkey, l_linenumber, l_discount FROM lineitem
-        |WHERE l_discount >= 0.02 AND l_discount <= 0.05
-        |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-
-    "q_filter_contains" ->
-      """SELECT p_partkey, p_name FROM part
-        |WHERE p_name ILIKE '%RED%' ORDER BY p_partkey""".stripMargin,
-
-    "q_filter_null_ops" ->
-      """WITH d AS (SELECT CASE WHEN o_orderstatus = 'O' THEN o_orderpriority END AS maybe
-        |           FROM orders)
-        |SELECT 'is_not_null' AS which, COUNT(*) AS n_null FROM d WHERE maybe IS NOT NULL
-        |UNION ALL
-        |SELECT 'is_null' AS which, COUNT(*) AS n_null FROM d WHERE maybe IS NULL
-        |ORDER BY which""".stripMargin,
-
-    "q_agg_dashboard" ->
-      """SELECT o_orderpriority, COUNT(*) AS n_orders FROM orders
-        |WHERE o_orderstatus IN ('O','F')
-        |  AND o_orderdate BETWEEN '1995-01-01' AND '1997-12-31'
-        |GROUP BY o_orderpriority
-        |ORDER BY n_orders DESC, o_orderpriority ASC LIMIT 20""".stripMargin,
-
-    "q_agg_metrics" ->
-      s"""SELECT l_returnflag, ${esum("l_quantity")} AS sum_qty,
-         |  ${eavg("l_extendedprice")} AS avg_price,
-         |  MIN(l_quantity) AS min_qty, MAX(l_quantity) AS max_qty,
-         |  COUNT(*) AS n_rows, COUNT(DISTINCT l_orderkey) AS n_orders
-         |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-
-    "q_drilldown_page" ->
-      """SELECT c_custkey, c_name, c_acctbal FROM customer
-        |WHERE c_mktsegment = 'BUILDING'
-        |ORDER BY c_custkey LIMIT 20 OFFSET 10""".stripMargin,
-
-    "q_filter_values" ->
-      """SELECT DISTINCT p_brand FROM part
-        |WHERE p_brand IS NOT NULL
-        |  AND lower(CAST(p_brand AS VARCHAR)) LIKE '%brand#1%'
-        |ORDER BY p_brand LIMIT 100""".stripMargin,
-
-    "q_profile_numeric" -> {
-      def one(c: String) =
-        s"""SELECT '$c' AS column_name,
-           |  CAST(MIN($c) AS DOUBLE) AS min_value,
-           |  CAST(MAX($c) AS DOUBLE) AS max_value,
-           |  ${eavg(c)} AS mean_value,
-           |  COUNT(DISTINCT $c) AS n_distinct FROM lineitem""".stripMargin
-      Seq("l_quantity", "l_extendedprice", "l_discount").map(one)
-        .mkString("", "\nUNION ALL\n", "\nORDER BY column_name")
-    },
-
-    "q_topk" ->
-      """SELECT p_type, COUNT(*) AS n FROM part GROUP BY p_type
-        |ORDER BY n DESC, p_type ASC LIMIT 15""".stripMargin,
-
-    "q_value_counts" ->
-      """SELECT c_mktsegment, COUNT(*) AS n FROM customer GROUP BY c_mktsegment
-        |ORDER BY n DESC, c_mktsegment ASC""".stripMargin,
-
-    "q_pivot" ->
-      s"""SELECT l_returnflag,
-         |  ${esum("CASE WHEN l_linestatus = 'O' THEN l_quantity END")} AS qty_o,
-         |  ${esum("CASE WHEN l_linestatus = 'F' THEN l_quantity END")} AS qty_f
-         |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-
-    "q_histogram" ->
-      """WITH b AS (SELECT MIN(o_totalprice) AS lo, MAX(o_totalprice) AS hi FROM orders)
-        |SELECT CAST(LEAST(FLOOR((o_totalprice - lo) / ((hi - lo) / 30.0)), 29) AS BIGINT) AS bin,
-        |  COUNT(*) AS n
-        |FROM orders, b GROUP BY bin ORDER BY bin""".stripMargin,
-
-    "q_window_running" ->
-      """SELECT l_suppkey, l_orderkey, l_linenumber,
-        |  ROUND(CAST(SUM(CAST(l_quantity AS DECIMAL(38,10)))
-        |    OVER (PARTITION BY l_suppkey
-        |          ORDER BY l_orderkey, l_linenumber, l_quantity, l_extendedprice, l_partkey
-        |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE), 4)
-        |    AS running_qty
-        |FROM lineitem
-        |ORDER BY l_suppkey, l_orderkey, l_linenumber, l_quantity, l_extendedprice,
-        |  l_partkey, running_qty""".stripMargin,
-
-    "q_null_drop" ->
-      """WITH d AS (SELECT c_custkey,
-        |  CASE WHEN c_custkey % 7 = 0 THEN NULL
-        |       WHEN c_custkey % 5 = 0 THEN ''
-        |       ELSE 'p-' || c_custkey END AS phone,
-        |  c_name FROM customer)
-        |SELECT c_custkey, phone FROM d
-        |WHERE NOT (phone IS NULL OR CAST(phone AS VARCHAR) = ''
-        |        OR c_name IS NULL OR CAST(c_name AS VARCHAR) = '')
-        |ORDER BY c_custkey""".stripMargin,
-
-    "q_null_drop_all" ->
-      """WITH d AS (SELECT c_custkey,
-        |  CASE WHEN c_custkey % 3 = 0 THEN c_name END AS a,
-        |  CASE WHEN c_custkey % 2 = 0 THEN '' ELSE c_mktsegment END AS b
-        |  FROM customer)
-        |SELECT c_custkey, a, b FROM d
-        |WHERE NOT ((a IS NULL OR CAST(a AS VARCHAR) = '')
-        |       AND (b IS NULL OR CAST(b AS VARCHAR) = ''))
-        |ORDER BY c_custkey""".stripMargin,
-
-    "q_null_fill" ->
-      """SELECT c_custkey,
-        |  CASE WHEN (seg IS NULL OR seg = '') THEN 'UNKNOWN' ELSE seg END AS seg
-        |FROM (SELECT c_custkey,
-        |        CASE WHEN c_custkey % 4 = 0 THEN NULL ELSE c_mktsegment END AS seg
-        |      FROM customer)
-        |ORDER BY c_custkey""".stripMargin,
-
-    "q_column_remover" ->
-      """SELECT l_orderkey, l_partkey, l_suppkey, l_linenumber, l_quantity,
-        |  l_extendedprice, l_returnflag, l_linestatus
-        |FROM lineitem ORDER BY l_orderkey, l_linenumber""".stripMargin,
-
-    "q_dedup_exact" ->
-      """SELECT o_orderkey, o_custkey, o_orderstatus FROM (
-        |  SELECT o_orderkey, o_custkey, o_orderstatus,
-        |    ROW_NUMBER() OVER (PARTITION BY o_custkey, o_orderstatus
-        |                       ORDER BY o_orderkey ASC) AS rn
-        |  FROM orders) WHERE rn = 1 ORDER BY o_orderkey""".stripMargin,
-
-    "q_dedup_keep_last" ->
-      """SELECT o_orderkey, o_custkey, o_orderpriority FROM (
-        |  SELECT o_orderkey, o_custkey, o_orderpriority,
-        |    ROW_NUMBER() OVER (PARTITION BY o_custkey, o_orderpriority
-        |                       ORDER BY o_orderkey DESC) AS rn
-        |  FROM orders) WHERE rn = 1 ORDER BY o_orderkey""".stripMargin,
-
-    "q_agg_semantics" ->
-      """WITH d AS (SELECT o_orderkey, o_orderstatus, o_totalprice, o_orderpriority,
-        |  CASE WHEN o_orderkey % 10 = 0 THEN NULL ELSE o_orderpriority END AS prio
-        |  FROM orders)
-        |SELECT o_orderstatus,
-        |  FLOOR(COALESCE(CAST(SUM(CAST(o_totalprice AS DECIMAL(38,10))) AS DOUBLE), 0.0) * 1e2 + 0.5) / 1e2 AS total_price,
-        |  FLOOR(CAST(SUM(CAST(o_totalprice AS DECIMAL(38,10))) AS DOUBLE) / COUNT(o_totalprice) * 1e2 + 0.5) / 1e2 AS avg_price,
-        |  MIN(o_totalprice) AS min_price, MAX(o_totalprice) AS max_price,
-        |  COUNT(*) AS n_rows,
-        |  COUNT(DISTINCT CAST(prio AS VARCHAR)) AS n_prio,
-        |  MIN_BY(o_orderpriority, o_orderkey) AS first_prio,
-        |  MAX_BY(o_orderpriority, o_orderkey) AS last_prio,
-        |  STRING_AGG(prio, ', ' ORDER BY o_orderkey) AS prio_concat
-        |FROM d GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
-
-    "q_dashboard_summary" ->
-      s"""SELECT COUNT(*) AS record_count,
-         |  ${esum("o_totalprice")} AS total_amount,
-         |  ${eavg("o_totalprice")} AS mean_amount,
-         |  CAST(MIN(o_totalprice) AS DOUBLE) AS min_amount,
-         |  CAST(MAX(o_totalprice) AS DOUBLE) AS max_amount
-         |FROM orders""".stripMargin,
-
-    "q_dashboard_provider" ->
-      s"""WITH agg AS (
-         |  SELECT l_suppkey, COUNT(*) AS record_count,
-         |    ${esum("l_extendedprice")} AS total_amount,
-         |    ${eavg("l_extendedprice")} AS mean_amount,
-         |    CAST(MIN(l_extendedprice) AS DOUBLE) AS min_amount,
-         |    CAST(MAX(l_extendedprice) AS DOUBLE) AS max_amount
-         |  FROM lineitem GROUP BY l_suppkey),
-         |q AS (SELECT l_suppkey, ${eavg("l_discount")} AS mean_quality_score
-         |      FROM lineitem GROUP BY l_suppkey)
-         |SELECT agg.*, q.mean_quality_score FROM agg LEFT JOIN q USING (l_suppkey)
-         |ORDER BY total_amount DESC, l_suppkey ASC""".stripMargin,
-
-    "q_dashboard_by_date" ->
-      s"""SELECT strftime(CAST(o_orderdate AS DATE), '%Y-%m-%d') AS service_date,
-         |  COUNT(*) AS record_count,
-         |  ${esum("o_totalprice")} AS total_amount,
-         |  ${eavg("o_totalprice")} AS mean_amount
-         |FROM orders GROUP BY CAST(o_orderdate AS DATE)
-         |ORDER BY service_date ASC""".stripMargin,
-
-    "q_join_broadcast" ->
-      s"""SELECT r_name, COUNT(*) AS n_orders, ${esum("o_totalprice")} AS revenue
-         |FROM orders
-         |JOIN customer ON o_custkey = c_custkey
-         |JOIN nation ON c_nationkey = n_nationkey
-         |JOIN region ON n_regionkey = r_regionkey
-         |GROUP BY r_name ORDER BY r_name""".stripMargin,
-
-    "q_join_large" ->
-      s"""SELECT o_orderstatus, COUNT(*) AS n_items,
-         |  ${esum("l_extendedprice * (1.0 - l_discount)")} AS revenue
-         |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-         |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin
+        |ORDER BY event_type, rk""".stripMargin)
   )
 }

@@ -32,19 +32,90 @@ object DocQueries {
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Tables.table(s, dir, name)
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  /** Deterministic multi-line derivation shared by the line-family gates —
+    * Spark twin of [[MultilineSql]]; both must stay bit-identical. */
+  private def multilineText: Column = concat(
+    regexp_replace(col("text"), "((\\S+ ){7}\\S+) ", "$1\n"),
+    when(col("doc_id") % 2 === 0, lit("\nClick Here")).otherwise(lit("")),
+    when(col("doc_id") % 6 === 0, lit("\nClick Here")).otherwise(lit("")),
+    when(col("doc_id") % 3 === 0, lit("\nBREAKING NEWS ALERT"))
+      .otherwise(lit("")),
+    when(col("doc_id") % 5 === 0, lit("\nok go")).otherwise(lit("")),
+    when(col("doc_id") % 7 === 0,
+      lit("\nthis closing line has enough words to stay"))
+      .otherwise(lit("")))
+
+  /** DuckDB spelling of [[multilineText]]. */
+  private val MultilineSql: String =
+    """regexp_replace(text, '((\S+ ){7}\S+) ', '\1' || chr(10), 'g') ||
+      |(CASE WHEN doc_id % 2 = 0 THEN chr(10) || 'Click Here' ELSE '' END) ||
+      |(CASE WHEN doc_id % 6 = 0 THEN chr(10) || 'Click Here' ELSE '' END) ||
+      |(CASE WHEN doc_id % 3 = 0 THEN chr(10) || 'BREAKING NEWS ALERT' ELSE '' END) ||
+      |(CASE WHEN doc_id % 5 = 0 THEN chr(10) || 'ok go' ELSE '' END) ||
+      |(CASE WHEN doc_id % 7 = 0
+      |  THEN chr(10) || 'this closing line has enough words to stay'
+      |  ELSE '' END)""".stripMargin.replace("\n", " ")
+
+  private val tokenCountSql = Sql.tokenCountSql("text")
+
+  private val wordsSql = "string_split_regex(trim(lower(text)), '\\s+')"
+
+  // the raw quality signals (bit-identical cross-engine — the composite's
+  // unrounded threshold comparisons hash-match), shared by the
+  // q_doc_quality twin, the corpus-card aggregate, and the LR replay
+  private val nWordsSql = s"len($wordsSql)"
+  private val punctRatioSql: String = {
+    val punct = s"""length(regexp_replace(trim(text), '[^[:punct:]]', '', 'g'))"""
+    s"CASE WHEN length(trim(text)) = 0 THEN 0.0 ELSE CAST($punct AS DOUBLE) / length(trim(text)) END"
+  }
+  private val stopRatioSql: String = {
+    val stops = s"len(list_filter($wordsSql, w -> w IN ('the','and','of','to','a','in','is','it','that','for','on','with','as','or','at','by')))"
+    s"CASE WHEN $nWordsSql = 0 THEN 0.0 ELSE CAST($stops AS DOUBLE) / $nWordsSql END"
+  }
+  private val meanWlSql: String = {
+    val charsNoSpace = s"length(replace(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ', ''))"
+    s"CASE WHEN $nWordsSql = 0 THEN 0.0 ELSE CAST($charsNoSpace AS DOUBLE) / $nWordsSql END"
+  }
+
+  // the composite quality score, shared by the q_doc_quality twin and the
+  // corpus-card aggregate (exact quarters — double sums stay exact)
+  private val qualityScoreSql: String =
+    s"""((CASE WHEN $tokenCountSql BETWEEN 10 AND 100000 THEN 1.0 ELSE 0.0 END) +
+       | (CASE WHEN $punctRatioSql <= 0.2 THEN 1.0 ELSE 0.0 END) +
+       | (CASE WHEN $meanWlSql BETWEEN 2.0 AND 12.0 THEN 1.0 ELSE 0.0 END) +
+       | (CASE WHEN $stopRatioSql >= 0.05 THEN 1.0 ELSE 0.5 END)) / 4.0""".stripMargin.replace("\n", " ")
+
+  // DuckDB replay of TF.langId's marker-hit argmax (first-wins on ties),
+  // shared by q_doc_langid and q_kappa
+  private val langGuessSql: String = {
+    def hits(markers: Seq[String]) =
+      s"len(list_filter($wordsSql, w -> w IN (${markers.map(m => s"'$m'").mkString(",")})))"
+    val scores = TF.langMarkers.map { case (l, ms) => l -> hits(ms) }
+    val (l0, s0) = scores.head
+    val folded = scores.tail.foldLeft((s"$s0", s"'$l0'")) {
+      case ((bs, bl), (lang, sc)) =>
+        (s"CASE WHEN $sc > ($bs) THEN $sc ELSE ($bs) END",
+         s"CASE WHEN $sc > ($bs) THEN '$lang' ELSE ($bl) END")
+    }
+    s"CASE WHEN (${folded._1}) > 0 THEN (${folded._2}) ELSE 'unknown' END"
+  }
+
+  val gates: Seq[Gate] = Seq(
 
     // ---- text analysis ------------------------------------------------------
 
-    "q_doc_tokens" -> ((s, dir) =>
+    Gate("q_doc_tokens", (s, dir) =>
       t(s, dir, "documents").select(
         col("doc_id"),
         TF.tokenCount(col("text")).as("n_tokens"),
         length(col("text")).as("n_chars_computed"),
         col("n_chars"))
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id")),
+      s"""SELECT doc_id, $tokenCountSql AS n_tokens,
+         |  length(text) AS n_chars_computed, n_chars
+         |FROM documents ORDER BY doc_id""".stripMargin),
 
-    "q_doc_quality" -> ((s, dir) =>
+    Gate("q_doc_quality", (s, dir) =>
       // one-pass signals: shared normalizations, each regex evaluated once
       TF.qualitySignalsTable(t(s, dir, "documents"), "text").select(
         col("doc_id"),
@@ -52,14 +123,59 @@ object DocQueries {
         Semantics.safeRound(col("stopword_ratio"), 4).as("stopword_ratio"),
         Semantics.safeRound(col("mean_word_len"), 4).as("mean_word_len"),
         col("quality"))
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id")),
+      {
+        val words = wordsSql
+        val nWords = s"len($words)"
+        val stops = s"len(list_filter($words, w -> w IN ('the','and','of','to','a','in','is','it','that','for','on','with','as','or','at','by')))"
+        val charsNoSpace = s"length(replace(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ', ''))"
+        val punct = s"""length(regexp_replace(trim(text), '[^[:punct:]]', '', 'g'))"""
+        val punctRatio = s"CASE WHEN length(trim(text)) = 0 THEN 0.0 ELSE CAST($punct AS DOUBLE) / length(trim(text)) END"
+        val stopRatio = s"CASE WHEN $nWords = 0 THEN 0.0 ELSE CAST($stops AS DOUBLE) / $nWords END"
+        val meanWl = s"CASE WHEN $nWords = 0 THEN 0.0 ELSE CAST($charsNoSpace AS DOUBLE) / $nWords END"
+        s"""SELECT doc_id,
+           |  ${Sql.sround(punctRatio)} AS punct_ratio,
+           |  ${Sql.sround(stopRatio)} AS stopword_ratio,
+           |  ${Sql.sround(meanWl)} AS mean_word_len,
+           |  ROUND($qualityScoreSql, 4) AS quality
+           |FROM documents ORDER BY doc_id""".stripMargin
+      }),
 
-    "q_rake_keywords" -> ((s, dir) =>
+    Gate("q_rake_keywords", (s, dir) =>
       // corpus keyword candidates: maximal stopword-free runs scored by
       // member degree/frequency mass — pure BIGINT ranking (ratio of sums)
-      TF.rakeKeywords(t(s, dir, "documents"), "doc_id", "text", topK = 20)),
+      TF.rakeKeywords(t(s, dir, "documents"), "doc_id", "text", topK = 20),
+      {
+        val stops = TF.englishStopwords.map(s => s"'$s'").mkString(", ")
+        s"""WITH toks AS (
+           |  SELECT doc_id, w, pos,
+           |    SUM(CASE WHEN w IN ($stops) THEN 1 ELSE 0 END)
+           |      OVER (PARTITION BY doc_id ORDER BY pos
+           |        ROWS UNBOUNDED PRECEDING) AS grp,
+           |    (w IN ($stops)) AS isstop
+           |  FROM (SELECT doc_id, unnest(ws) AS w,
+           |          generate_subscripts(ws, 1) AS pos
+           |        FROM (SELECT doc_id, $wordsSql AS ws FROM documents))
+           |  WHERE length(w) > 0),
+           |nz AS (SELECT doc_id, w, pos, grp FROM toks WHERE NOT isstop),
+           |ph AS (SELECT doc_id, grp,
+           |    string_agg(w, ' ' ORDER BY pos) AS phrase, count(*) AS len
+           |  FROM nz GROUP BY 1, 2),
+           |wstats AS (SELECT w, count(*) AS freq, SUM(len) AS deg
+           |  FROM nz JOIN ph USING (doc_id, grp) GROUP BY w),
+           |ps AS (SELECT nz.doc_id, nz.grp,
+           |    SUM(ws.deg) AS sd, SUM(ws.freq) AS sf
+           |  FROM nz JOIN wstats ws USING (w) GROUP BY 1, 2)
+           |SELECT ph.phrase, CAST(ANY_VALUE(ph.len) AS BIGINT) AS n_words,
+           |  CAST(COUNT(*) AS BIGINT) AS n_occurrences,
+           |  CAST((ANY_VALUE(sd) * 1000000) // ANY_VALUE(sf) AS BIGINT)
+           |    AS score_e6
+           |FROM ph JOIN ps USING (doc_id, grp)
+           |GROUP BY ph.phrase
+           |ORDER BY score_e6 DESC, phrase ASC LIMIT 20""".stripMargin
+      }),
 
-    "q_rare_token_pairs" -> ((s, dir) => {
+    Gate("q_rare_token_pairs", (s, dir) => {
       // translation/derivative mining: doc pairs sharing scarce vocabulary
       // (document frequency ≤ max(3, n_docs/10) — relative, so the screen
       // bites at any corpus scale). The df filter runs BEFORE the pair
@@ -84,9 +200,22 @@ object DocQueries {
         .agg(count(lit(1)).as("n_shared"))
         .select(col("doc_a"), col("doc_b"), col("n_shared"))
         .orderBy(col("doc_a"), col("doc_b"))
-    }),
+    },
+      s"""WITH wd AS (SELECT DISTINCT doc_id, w FROM
+         |    (SELECT doc_id, unnest($wordsSql) AS w FROM documents)
+         |  WHERE length(w) > 0),
+         |cap AS (SELECT GREATEST(3, count(*) // 10) AS cap FROM documents),
+         |r AS (SELECT w FROM (SELECT w, count(*) AS df FROM wd GROUP BY 1),
+         |    cap
+         |  WHERE df >= 2 AND df <= cap.cap),
+         |wr AS (SELECT doc_id, w FROM wd WHERE w IN (SELECT w FROM r))
+         |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+         |  CAST(count(*) AS BIGINT) AS n_shared
+         |FROM wr a JOIN wr b ON a.w = b.w AND a.doc_id < b.doc_id
+         |GROUP BY 1, 2
+         |ORDER BY doc_a, doc_b""".stripMargin),
 
-    "q_drop_reasons" -> ((s, dir) => {
+    Gate("q_drop_reasons", (s, dir) => {
       // the curator's "why was this doc dropped" report: first matching
       // rule of exact-dup (keep-first by id), too-short, low-quality —
       // every rule a kernel already gated elsewhere, composed with a
@@ -117,9 +246,16 @@ object DocQueries {
         .when(col("_lowq"), lit("low_quality"))
         .otherwise(lit("kept"))
       pre.select(col("doc_id"), reason.as("reason")).orderBy(col("doc_id"))
-    }),
+    },
+      s"""SELECT doc_id, CASE
+         |  WHEN doc_id <> MIN(doc_id) OVER (PARTITION BY md5(text))
+         |    THEN 'exact_dup'
+         |  WHEN n_chars < 50 THEN 'too_short'
+         |  WHEN ($qualityScoreSql) < 0.5 THEN 'low_quality'
+         |  ELSE 'kept' END AS reason
+         |FROM documents ORDER BY doc_id""".stripMargin),
 
-    "q_curation_e2e" -> ((s, dir) => {
+    Gate("q_curation_e2e", (s, dir) => {
       // the curation chain as ONE lazy plan — drop-reason rules
       // (exact-dup keep-first / too-short / low-quality, q_drop_reasons'
       // kernels) → survivors packed into 2000-token context blocks
@@ -142,9 +278,28 @@ object DocQueries {
         .agg(count(lit(1)).as("n_docs"), sum(col("n_tokens")).as("n_tokens"),
           min(col("doc_id")).as("first_doc"), max(col("doc_id")).as("last_doc"))
         .orderBy(col("window_id"))
-    }),
+    },
+      s"""WITH r AS (SELECT doc_id, text, CASE
+         |    WHEN doc_id <> MIN(doc_id) OVER (PARTITION BY md5(text))
+         |      THEN 'exact_dup'
+         |    WHEN n_chars < 50 THEN 'too_short'
+         |    WHEN ($qualityScoreSql) < 0.5 THEN 'low_quality'
+         |    ELSE 'kept' END AS reason FROM documents),
+         |k AS (SELECT doc_id, text FROM r WHERE reason = 'kept'),
+         |d AS (SELECT doc_id, $tokenCountSql AS n_tokens,
+         |    CAST(FLOOR(doc_id / 100.0) AS BIGINT) AS shard FROM k),
+         |c AS (SELECT doc_id, n_tokens, shard,
+         |    SUM(n_tokens) OVER (PARTITION BY shard ORDER BY doc_id
+         |    ROWS UNBOUNDED PRECEDING) AS cum FROM d),
+         |p AS (SELECT doc_id, n_tokens, shard * 4294967296 +
+         |    GREATEST(CAST(CEIL(CAST(cum AS DOUBLE) / 2000) AS BIGINT) - 1, 0)
+         |      AS window_id FROM c)
+         |SELECT window_id, CAST(COUNT(*) AS BIGINT) AS n_docs,
+         |  CAST(SUM(n_tokens) AS BIGINT) AS n_tokens,
+         |  MIN(doc_id) AS first_doc, MAX(doc_id) AS last_doc
+         |FROM p GROUP BY window_id ORDER BY window_id""".stripMargin),
 
-    "q_doc_ttr" -> ((s, dir) => {
+    Gate("q_doc_ttr", (s, dir) => {
       // lexical diversity per doc: type count, hapax count, and the
       // type-token ratio as an e6 BIGINT — word-salad and boilerplate
       // screen orthogonal to the repetition fractions
@@ -159,9 +314,17 @@ object DocQueries {
         .withColumn("ttr_e6",
           expr("CAST((n_types * 1000000) DIV n_tokens AS BIGINT)"))
         .orderBy(col("doc_id"))
-    }),
+    },
+      s"""WITH w AS (SELECT doc_id, unnest($wordsSql) AS w FROM documents),
+         |c AS (SELECT doc_id, w, count(*) AS c FROM w
+         |  WHERE length(w) > 0 GROUP BY 1, 2)
+         |SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_types,
+         |  CAST(SUM(c) AS BIGINT) AS n_tokens,
+         |  CAST(SUM(CASE WHEN c = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_hapax,
+         |  CAST((COUNT(*) * 1000000) // SUM(c) AS BIGINT) AS ttr_e6
+         |FROM c GROUP BY doc_id ORDER BY doc_id""".stripMargin),
 
-    "q_vocab_coverage" -> ((s, dir) => {
+    Gate("q_vocab_coverage", (s, dir) => {
       // what fraction of each source's token mass the global top-20
       // vocabulary covers — the tokenizer/vocab sizing report; vocab cut
       // tie-broken (count desc, word asc) so the boundary is deterministic
@@ -178,9 +341,21 @@ object DocQueries {
         .withColumn("coverage_e6",
           expr("CAST((n_covered * 1000000) DIV n_tokens AS BIGINT)"))
         .orderBy(col("source"))
-    }),
+    },
+      s"""WITH w AS (SELECT source, unnest($wordsSql) AS w FROM documents),
+         |wf AS (SELECT source, w FROM w WHERE length(w) > 0),
+         |v AS (SELECT w FROM (SELECT w, count(*) AS c, ROW_NUMBER() OVER (
+         |    ORDER BY count(*) DESC, w ASC) AS rk FROM wf GROUP BY w)
+         |  WHERE rk <= 20)
+         |SELECT source, CAST(COUNT(*) AS BIGINT) AS n_tokens,
+         |  CAST(SUM(CASE WHEN v.w IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
+         |    AS n_covered,
+         |  CAST((SUM(CASE WHEN v.w IS NOT NULL THEN 1 ELSE 0 END) * 1000000)
+         |    // COUNT(*) AS BIGINT) AS coverage_e6
+         |FROM wf LEFT JOIN v USING (w)
+         |GROUP BY source ORDER BY source""".stripMargin),
 
-    "q_script_mix" -> ((s, dir) => {
+    Gate("q_script_mix", (s, dir) => {
       // per-doc character-class census (latin / digit / whitespace /
       // non-ascii / other-ascii) — the code-switch and mojibake screen.
       // Explicit ASCII classes, not \s or \w: Java and RE2 disagree on
@@ -199,9 +374,24 @@ object DocQueries {
         (len - nonWs).as("n_ws"), (len - ascii).as("n_nonascii"),
         (nonWs - latin - digit - (len - ascii)).as("n_other_ascii"))
         .orderBy(col("doc_id"))
-    }),
+    },
+      """SELECT doc_id, length(text) AS n_chars_txt,
+        |  length(regexp_replace(text, '[^A-Za-z]', '', 'g')) AS n_latin,
+        |  length(regexp_replace(text, '[^0-9]', '', 'g')) AS n_digit,
+        |  length(text) -
+        |    length(regexp_replace(text, '[ \t\n\r\f]', '', 'g')) AS n_ws,
+        |  length(text) -
+        |    length(regexp_replace(text, '[^\x00-\x7f]', '', 'g'))
+        |    AS n_nonascii,
+        |  length(regexp_replace(text, '[ \t\n\r\f]', '', 'g'))
+        |    - length(regexp_replace(text, '[^A-Za-z]', '', 'g'))
+        |    - length(regexp_replace(text, '[^0-9]', '', 'g'))
+        |    - (length(text) -
+        |       length(regexp_replace(text, '[^\x00-\x7f]', '', 'g')))
+        |    AS n_other_ascii
+        |FROM documents ORDER BY doc_id""".stripMargin),
 
-    "q_mojibake" -> ((s, dir) => {
+    Gate("q_mojibake", (s, dir) => {
       // encoding-anomaly screen over an ENGINEERED corpus: clean docs
       // plus injected UTF-8-as-Latin-1 artifacts (doc_id%7: ' caf' + Ã©)
       // and decoder casualties (doc_id%5: U+FFFD + C1 NEL) — the oracle
@@ -219,66 +409,194 @@ object DocQueries {
         sig.getField("n_suspect").as("n_suspect"),
         sig.getField("suspect_encoding").as("suspect_encoding"))
         .orderBy(col("doc_id"))
-    }),
+    },
+      // same engineered corpus rebuilt from chr() codepoints (no literal
+      // mojibake bytes in shipped SQL), same three char-class counts
+      """WITH d AS (SELECT doc_id,
+        |    CASE WHEN doc_id % 7 = 0
+        |           THEN text || ' caf' || chr(195) || chr(169)
+        |         WHEN doc_id % 5 = 0 THEN text || chr(65533) || chr(133)
+        |         ELSE text END AS t
+        |  FROM documents)
+        |SELECT doc_id,
+        |  CAST(len(regexp_extract_all(t, '\x{FFFD}')) AS BIGINT)
+        |    AS n_replacement,
+        |  CAST(len(regexp_extract_all(t, '[\x{80}-\x{9F}]')) AS BIGINT)
+        |    AS n_c1,
+        |  CAST(len(regexp_extract_all(t, '[\x{C2}\x{C3}\x{E2}]'))
+        |    AS BIGINT) AS n_suspect,
+        |  len(regexp_extract_all(t, '\x{FFFD}'))
+        |    + len(regexp_extract_all(t, '[\x{80}-\x{9F}]'))
+        |    + len(regexp_extract_all(t, '[\x{C2}\x{C3}\x{E2}]')) > 0
+        |    AS suspect_encoding
+        |FROM d ORDER BY doc_id""".stripMargin),
 
-    "q_kappa" -> ((s, dir) =>
+    Gate("q_kappa", (s, dir) =>
       // chance-corrected agreement between the declared language label and
       // the n-gram language guesser — the label-quality one-liner (0 =
       // chance, 1 = perfect); exact integer marginals, one FLOOR division
       graft.operators.Audit.cohenKappa(
         TF.langIdTable(t(s, dir, "documents"), "doc_id", "text"),
-        "lang", "lang_guess")),
+        "lang", "lang_guess"),
+      s"""WITH t AS (SELECT lang AS a, $langGuessSql AS b FROM documents),
+         |top AS (SELECT CAST(count(*) AS BIGINT) AS n,
+         |    CAST(SUM(CASE WHEN a = b THEN 1 ELSE 0 END) AS BIGINT)
+         |      AS n_agree FROM t),
+         |ra AS (SELECT a AS lbl, count(*) AS ra FROM t GROUP BY 1),
+         |cb AS (SELECT b AS lbl, count(*) AS cb FROM t GROUP BY 1),
+         |src AS (SELECT CAST(COALESCE(SUM(COALESCE(ra, 0) *
+         |    COALESCE(cb, 0)), 0) AS BIGINT) AS src
+         |  FROM ra FULL OUTER JOIN cb USING (lbl))
+         |SELECT n, n_agree,
+         |  CASE WHEN n * n = src THEN NULL
+         |    ELSE CAST(FLOOR(CAST((n * n_agree - src) * 1000000 AS DOUBLE)
+         |      / CAST(n * n - src AS DOUBLE)) AS BIGINT) END AS kappa_e6
+         |FROM top CROSS JOIN src""".stripMargin),
 
-    "q_alpha" -> ((s, dir) =>
+    Gate("q_alpha", (s, dir) =>
       // Krippendorff's alpha over the same labeling pair as q_kappa —
       // pooled coincidence marginals + the n−1 small-sample correction,
       // the agreement coefficient that extends to missing data and >2
       // raters; integer marginals, one final FLOOR'd e6 ratio
       graft.operators.Audit.krippendorffAlpha(
         TF.langIdTable(t(s, dir, "documents"), "doc_id", "text"),
-        "lang", "lang_guess")),
+        "lang", "lang_guess"),
+      s"""WITH t AS (SELECT lang AS a, $langGuessSql AS b FROM documents),
+         |top AS (SELECT CAST(count(*) AS BIGINT) AS n_units,
+         |    CAST(SUM(CASE WHEN a = b THEN 0 ELSE 1 END) AS BIGINT)
+         |      AS n_disagree FROM t),
+         |pooled AS (SELECT CAST(COALESCE(SUM(nc * nc), 0) AS BIGINT) AS sq
+         |  FROM (SELECT count(*) AS nc FROM (
+         |    SELECT a AS lbl FROM t UNION ALL SELECT b FROM t)
+         |    GROUP BY lbl)),
+         |f AS (SELECT n_units, n_disagree,
+         |    2 * n_units AS n, 4 * n_units * n_units - sq AS den
+         |  FROM top CROSS JOIN pooled)
+         |SELECT n_units, n_disagree,
+         |  CASE WHEN den = 0 THEN NULL
+         |    ELSE CAST(FLOOR(
+         |      CAST((den - (n - 1) * 2 * n_disagree) * 1000000 AS DOUBLE)
+         |      / CAST(den AS DOUBLE)) AS BIGINT) END AS alpha_e6
+         |FROM f""".stripMargin),
 
-    "q_ldiversity" -> ((s, dir) =>
+    Gate("q_ldiversity", (s, dir) =>
       // homogeneity-attack screen: (lang, source) groups where the
       // sensitive attribute (the langid guess, as a stand-in label) takes
       // too few distinct values — k-anonymity passes large groups,
       // l-diversity catches the homogeneous ones
       graft.operators.Audit.lDiversityRisk(
         TF.langIdTable(t(s, dir, "documents"), "doc_id", "text"),
-        Seq("lang", "source"), "lang_guess", l = 3L)),
+        Seq("lang", "source"), "lang_guess", l = 3L),
+      s"""SELECT lang, source, CAST(count(*) AS BIGINT) AS n,
+         |  CAST(count(DISTINCT $langGuessSql) AS BIGINT) AS n_sensitive
+         |FROM documents GROUP BY lang, source
+         |HAVING count(DISTINCT $langGuessSql) < 3
+         |ORDER BY lang, source""".stripMargin),
 
-    "q_tcloseness" -> ((s, dir) =>
+    Gate("q_tcloseness", (s, dir) =>
       // third rung of the privacy ladder: per-source total-variation
       // distance between the group's lang distribution and the table's,
       // cross-multiplied to exact BIGINTs (absent values contribute via
       // the closed form, never an outer join)
       graft.operators.Audit.tClosenessRisk(
-        t(s, dir, "documents"), Seq("source"), "lang")),
+        t(s, dir, "documents"), Seq("source"), "lang"),
+      // same cross-multiplied TVD: int128 numerator, one floored e6
+      // ratio with matching operand order
+      """WITH g AS (SELECT lang AS v, CAST(count(*) AS BIGINT) AS c
+        |  FROM documents WHERE lang IS NOT NULL GROUP BY 1),
+        |nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM documents
+        |       WHERE lang IS NOT NULL),
+        |gv AS (SELECT source, lang AS v, CAST(count(*) AS BIGINT) AS cg
+        |  FROM documents WHERE lang IS NOT NULL GROUP BY 1, 2),
+        |ng AS (SELECT source, CAST(SUM(cg) AS BIGINT) AS ngr
+        |  FROM gv GROUP BY 1),
+        |j AS (SELECT gv.source,
+        |    SUM(ABS(CAST(gv.cg AS HUGEINT) * nn.n
+        |      - CAST(g.c AS HUGEINT) * ng.ngr)) AS inabs,
+        |    CAST(SUM(g.c) AS BIGINT) AS sumc,
+        |    MAX(ng.ngr) AS ngr, MAX(nn.n) AS n
+        |  FROM gv JOIN g USING (v) JOIN ng USING (source) CROSS JOIN nn
+        |  GROUP BY 1)
+        |SELECT source, ngr AS n_g,
+        |  CAST(FLOOR(CAST(inabs + CAST(ngr AS HUGEINT) * (n - sumc)
+        |      AS DOUBLE) * 1e6 / (2.0 * ngr * n)) AS BIGINT) AS tvd_e6
+        |FROM j ORDER BY source""".stripMargin),
 
-    "q_doc_langid" -> ((s, dir) =>
+    Gate("q_doc_langid", (s, dir) =>
       TF.langIdTable(t(s, dir, "documents"), "doc_id", "text")
         .select(col("doc_id"), col("lang"), col("lang_guess"))
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id")),
+      s"""SELECT doc_id, lang, $langGuessSql AS lang_guess
+         |FROM documents ORDER BY doc_id""".stripMargin),
 
-    "q_tfidf" -> ((s, dir) =>
+    Gate("q_tfidf", (s, dir) =>
       TF.tfidfTable(t(s, dir, "documents"), "doc_id", "text", vocabK = 100)
-        .orderBy(col("doc_id"), col("term"))),
+        .orderBy(col("doc_id"), col("term")),
+      s"""WITH base AS (SELECT doc_id, $wordsSql AS l FROM documents),
+         |w AS (SELECT doc_id, unnest(l) AS term FROM base),
+         |tf AS (SELECT doc_id, term, count(*) AS tf FROM w GROUP BY 1, 2),
+         |dfreq AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
+         |vocab AS (SELECT term, df FROM dfreq
+         |  ORDER BY df DESC, term ASC LIMIT 100),
+         |n AS (SELECT count(*) AS n FROM documents)
+         |SELECT t.doc_id, t.term,
+         |  ${Sql.sround("t.tf * (ln((n.n + 1.0) / (v.df + 1.0)) + 1.0)")} AS tfidf
+         |FROM tf t JOIN vocab v ON t.term = v.term CROSS JOIN n
+         |ORDER BY t.doc_id, t.term""".stripMargin),
 
-    "q_feature_hash" -> ((s, dir) =>
+    Gate("q_feature_hash", (s, dir) =>
       graft.functions.Featurize.hashFeatures(
         t(s, dir, "documents"), "doc_id", "text", numBuckets = 512)
-        .orderBy(col("doc_id"), col("bucket"))),
+        .orderBy(col("doc_id"), col("bucket")),
+      s"""WITH w AS (SELECT doc_id, unnest($wordsSql) AS word FROM documents)
+         |SELECT doc_id,
+         |  CAST(('0x' || substr(md5(word), 1, 8)) AS BIGINT) % 512 AS bucket,
+         |  count(*) AS w
+         |FROM w GROUP BY 1, 2 ORDER BY doc_id, bucket""".stripMargin),
 
-    "q_word_pmi" -> ((s, dir) =>
+    Gate("q_word_pmi", (s, dir) =>
       TF.cooccurrencePmi(t(s, dir, "documents"), "doc_id", "text",
-        window = 2, topK = 100)),
+        window = 2, topK = 100),
+      s"""WITH base AS (SELECT doc_id, $wordsSql AS l FROM documents),
+         |w AS (SELECT doc_id, unnest(l) AS w,
+         |    unnest(range(0, len(l))) AS pos FROM base),
+         |nw AS (SELECT count(*) AS nw FROM w),
+         |uni AS (SELECT w, count(*) AS cw FROM w GROUP BY 1),
+         |p AS (SELECT a.w AS wa, b.w AS wb FROM w a JOIN w b
+         |  ON a.doc_id = b.doc_id AND b.pos - a.pos IN (1, 2)),
+         |np AS (SELECT count(*) AS np FROM p),
+         |top AS (SELECT wa, wb, count(*) AS cab FROM p GROUP BY 1, 2
+         |  ORDER BY cab DESC, wa ASC, wb ASC LIMIT 100)
+         |SELECT t.wa, t.wb, t.cab,
+         |  ${Sql.sround("ln(CAST(t.cab * nw.nw * nw.nw AS DOUBLE) / CAST(np.np * ua.cw * ub.cw AS DOUBLE))")} AS pmi
+         |FROM top t
+         |JOIN uni ua ON t.wa = ua.w
+         |JOIN uni ub ON t.wb = ub.w
+         |CROSS JOIN nw CROSS JOIN np
+         |ORDER BY t.cab DESC, t.wa ASC, t.wb ASC""".stripMargin),
 
-    "q_distinctive_terms" -> ((s, dir) =>
+    Gate("q_distinctive_terms", (s, dir) =>
       CorpusStats.distinctiveTerms(t(s, dir, "documents"), "text", "lang",
         topK = 10, minCount = 5L)
-        .orderBy(col("lang"), col("rank_in_key"))),
+        .orderBy(col("lang"), col("rank_in_key")),
+      s"""WITH w AS (SELECT lang, unnest($wordsSql) AS word FROM documents),
+         |cgw AS (SELECT lang, word, count(*) AS c_gw FROM w GROUP BY 1, 2),
+         |ng AS (SELECT lang, SUM(c_gw) AS ng FROM cgw GROUP BY 1),
+         |cw AS (SELECT word, SUM(c_gw) AS cw FROM cgw GROUP BY 1),
+         |t AS (SELECT SUM(ng) AS nt FROM ng),
+         |sc AS (SELECT cgw.lang, cgw.word, cgw.c_gw,
+         |    ${Sql.sround("ln(CAST(c_gw + 1 AS DOUBLE) / CAST(ng - c_gw + 1 AS DOUBLE)) - ln(CAST(cw - c_gw + 1 AS DOUBLE) / CAST((nt - ng) - (cw - c_gw) + 1 AS DOUBLE))")}
+         |      AS score
+         |  FROM cgw JOIN ng USING (lang) JOIN cw USING (word) CROSS JOIN t
+         |  WHERE c_gw >= 5),
+         |rk AS (SELECT lang, word, c_gw, score,
+         |    ROW_NUMBER() OVER (PARTITION BY lang
+         |      ORDER BY score DESC, word ASC) AS rank_in_key FROM sc)
+         |SELECT lang, word, c_gw, score, rank_in_key FROM rk
+         |WHERE rank_in_key <= 10
+         |ORDER BY lang, rank_in_key""".stripMargin),
 
-    "q_slice_diversity" -> ((s, dir) => {
+    Gate("q_slice_diversity", (s, dir) => {
       // entropy with zero cross-engine float surface: the p·ln(p) terms are
       // quantized ONCE (to e15 longs) on this side and shared with the
       // oracle via aux; both engines then sum/scale pure BIGINTs. The
@@ -293,9 +611,26 @@ object DocQueries {
         .agg(first(col("n")).as("n_rows"), first(col("n_cats")).as("n_cats"),
           expr("CAST((-SUM(tm_e15)) DIV 1000000 AS BIGINT)").as("entropy_e9"))
         .orderBy(col("source"))
-    }),
+    },
+      // counting is re-derived here and cross-checked (the aux join keys on
+      // the count value, so a wrong engine-side count drops rows and fails
+      // the gate); only the e15-quantized ln terms are single-sourced, and
+      // the entropy cell is pure BIGINT arithmetic in both engines.
+      """WITH c AS (SELECT source, lang, count(*) AS c
+        |  FROM documents GROUP BY 1, 2),
+        |t AS (SELECT source, SUM(c) AS n, COUNT(*) AS n_cats
+        |  FROM c GROUP BY 1),
+        |a AS (SELECT source, lang, c, tm_e15 FROM
+        |  read_parquet('/tmp/graft_oracle_aux/{SF}/slice_terms/*.parquet')),
+        |x AS (SELECT c.source, t.n, t.n_cats, a.tm_e15
+        |  FROM c JOIN t USING (source)
+        |  JOIN a ON a.source = c.source AND a.lang = c.lang AND a.c = c.c)
+        |SELECT source, CAST(ANY_VALUE(n) AS BIGINT) AS n_rows,
+        |  CAST(ANY_VALUE(n_cats) AS BIGINT) AS n_cats,
+        |  CAST((-SUM(tm_e15)) // 1000000 AS BIGINT) AS entropy_e9
+        |FROM x GROUP BY source ORDER BY source""".stripMargin),
 
-    "q_length_outliers" -> ((s, dir) => {
+    Gate("q_length_outliers", (s, dir) => {
       // per-source robust length outliers: |len − median| > 2·1.4826·MAD
       // — the heavy-tail-safe "this doc doesn't belong here" screen; both
       // stats are exact percentiles broadcast back, one flagging scan
@@ -314,9 +649,20 @@ object DocQueries {
             lit(2.0) * lit(1.4826) * col("_mad"))
         .select(col("doc_id"), col("source"), col("n_chars"))
         .orderBy(col("doc_id"))
-    }),
+    },
+      """WITH m AS (SELECT source, quantile_cont(n_chars, 0.5) AS med
+        |  FROM documents GROUP BY 1),
+        |d AS (SELECT dd.source, m.med,
+        |    quantile_cont(abs(dd.n_chars - m.med), 0.5) AS mad
+        |  FROM documents dd JOIN m USING (source)
+        |  GROUP BY dd.source, m.med)
+        |SELECT doc_id, dd.source, n_chars
+        |FROM documents dd JOIN d USING (source)
+        |WHERE d.mad > 0
+        |  AND abs(dd.n_chars - d.med) > 2.0 * 1.4826 * d.mad
+        |ORDER BY doc_id""".stripMargin),
 
-    "q_label_spread" -> ((s, dir) => {
+    Gate("q_label_spread", (s, dir) => {
       // mask every 7th doc's language, then infer it by majority vote of
       // its >=0.02-Jaccard neighbors within the source block (can't block
       // on the label being inferred; word-salad text needs a low bar for
@@ -328,9 +674,41 @@ object DocQueries {
         blockKey = col("source"), k = 3, threshold = 0.02)
       LabelSpread.vote(masked, "doc_id", "lbl", pairs, "id_a", "id_b")
         .orderBy(col("doc_id"))
+    }, {
+      val sh =
+        """list_distinct(list_transform(
+          |  range(1, greatest(len(string_split_regex(trim(lower(text)), '\s+')) - 1, 1)),
+          |  i -> concat_ws(' ',
+          |    string_split_regex(trim(lower(text)), '\s+')[i],
+          |    string_split_regex(trim(lower(text)), '\s+')[i+1],
+          |    string_split_regex(trim(lower(text)), '\s+')[i+2])))"""
+          .stripMargin.replace("\n", " ")
+      val jac = """CASE WHEN len(list_distinct(a.sh || b.sh)) = 0 THEN 0.0
+        |  ELSE CAST(len(list_filter(a.sh, x -> list_contains(b.sh, x))) AS DOUBLE)
+        |     / len(list_distinct(a.sh || b.sh)) END""".stripMargin
+        .replace("\n", " ")
+      s"""WITH m AS (SELECT doc_id, source, text,
+         |    CASE WHEN doc_id % 7 = 0 THEN NULL ELSE lang END AS lbl
+         |  FROM documents),
+         |d AS (SELECT doc_id, source, lbl, $sh AS sh FROM m),
+         |p AS (SELECT a.doc_id AS ua, b.doc_id AS ub
+         |  FROM d a JOIN d b ON a.source = b.source
+         |    AND a.doc_id < b.doc_id
+         |  WHERE ROUND($jac, 4) >= 0.02),
+         |sym AS (SELECT ua AS u, ub AS v FROM p
+         |        UNION ALL SELECT ub, ua FROM p),
+         |v AS (SELECT s.u, dl.lbl AS nl, count(*) AS n_votes
+         |  FROM sym s
+         |  JOIN d du ON s.u = du.doc_id AND du.lbl IS NULL
+         |  JOIN d dl ON s.v = dl.doc_id AND dl.lbl IS NOT NULL
+         |  GROUP BY 1, 2),
+         |r AS (SELECT u, nl, n_votes, ROW_NUMBER() OVER (PARTITION BY u
+         |    ORDER BY n_votes DESC, nl ASC) AS rk FROM v)
+         |SELECT u AS doc_id, nl AS label, n_votes FROM r WHERE rk = 1
+         |ORDER BY doc_id""".stripMargin
     }),
 
-    "q_dup_histogram" -> ((s, dir) => {
+    Gate("q_dup_histogram", (s, dir) => {
       // how big are the duplicate clusters? the one-glance dedup report
       // (corpus salted with copies of every 7th doc and double copies of
       // every 21st so sizes 1/2/3 all appear)
@@ -343,9 +721,16 @@ object DocQueries {
         .groupBy(col("cluster_size"))
         .agg(count(lit(1)).as("n_clusters"))
         .orderBy(col("cluster_size"))
-    }),
+    },
+      """WITH u AS (SELECT text FROM documents
+        |  UNION ALL SELECT text FROM documents WHERE doc_id % 7 = 0
+        |  UNION ALL SELECT text FROM documents WHERE doc_id % 21 = 0),
+        |c AS (SELECT md5(text) AS h, count(*) AS cluster_size
+        |  FROM u GROUP BY 1)
+        |SELECT cluster_size, count(*) AS n_clusters
+        |FROM c GROUP BY 1 ORDER BY cluster_size""".stripMargin),
 
-    "q_token_concentration" -> ((s, dir) => {
+    Gate("q_token_concentration", (s, dir) => {
       // Lorenz-style concentration: length-decile bins, per-bin token
       // share, cumulative share via a 10x10 bin self-join — no corpus
       // window anywhere. Driver-proof form: the interpolated decile bounds
@@ -384,9 +769,27 @@ object DocQueries {
           expr("CAST((_cum * 1000000) DIV _tt AS BIGINT)")
             .as("cum_share_e6"))
         .orderBy(col("bin"))
-    }),
+    },
+      // decile bounds come from the engine-side aux (single-sourced — see
+      // the Spark twin); bin assignment replays `1 + count(bounds <= x)`
+      // over identical doubles, and the cumulative share is BIGINT floor
+      // division in both engines.
+      s"""WITH bb AS (SELECT b FROM
+         |    read_parquet('/tmp/graft_oracle_aux/{SF}/tc_bounds/*.parquet')),
+         |pb AS (SELECT
+         |    (SELECT 1 + COUNT(*) FROM bb WHERE d.n_chars >= bb.b) AS bin,
+         |    count(*) AS n_docs,
+         |    SUM(${Sql.tokenCountSql("d.text")}) AS n_tokens
+         |  FROM documents d GROUP BY 1),
+         |t AS (SELECT SUM(n_tokens) AS tt FROM pb)
+         |SELECT a.bin, CAST(ANY_VALUE(a.n_docs) AS BIGINT) AS n_docs,
+         |  CAST(ANY_VALUE(a.n_tokens) AS BIGINT) AS n_tokens,
+         |  CAST((SUM(b.n_tokens) * 1000000) // ANY_VALUE(t.tt) AS BIGINT)
+         |    AS cum_share_e6
+         |FROM pb a JOIN pb b ON b.bin <= a.bin CROSS JOIN t
+         |GROUP BY a.bin ORDER BY a.bin""".stripMargin),
 
-    "q_group_mode" -> ((s, dir) => {
+    Gate("q_group_mode", (s, dir) => {
       // deterministic per-group mode: count per (slice, value), keep the
       // (count desc, value asc) winner via WindowGroupLimit
       val counts = t(s, dir, "documents")
@@ -396,9 +799,15 @@ object DocQueries {
         Seq(col("n").desc, col("lang").asc))
         .select(col("source"), col("lang").as("mode_lang"), col("n"))
         .orderBy(col("source"))
-    }),
+    },
+      """WITH c AS (SELECT source, lang, count(*) AS n
+        |  FROM documents GROUP BY 1, 2),
+        |r AS (SELECT source, lang, n, ROW_NUMBER() OVER (
+        |    PARTITION BY source ORDER BY n DESC, lang ASC) AS rk FROM c)
+        |SELECT source, lang AS mode_lang, n FROM r WHERE rk = 1
+        |ORDER BY source""".stripMargin),
 
-    "q_minmax_scale" -> ((s, dir) => {
+    Gate("q_minmax_scale", (s, dir) => {
       // per-group min-max normalization: exact extrema (no accumulation
       // at all), one broadcast join, degenerate range -> 0
       val ev = t(s, dir, "events")
@@ -412,9 +821,18 @@ object DocQueries {
               (col("value") - col("_lo")) / (col("_hi") - col("_lo")), 6))
             .as("scaled"))
         .orderBy(col("event_id"))
-    }),
+    },
+      s"""WITH x AS (SELECT event_type, MIN(value) AS lo, MAX(value) AS hi
+         |  FROM events GROUP BY 1)
+         |SELECT e.event_id, e.event_type,
+         |  CASE WHEN e.value IS NULL THEN NULL
+         |       WHEN x.hi = x.lo THEN 0.0
+         |       ELSE ${Sql.sround("(e.value - x.lo) / (x.hi - x.lo)", 6)}
+         |  END AS scaled
+         |FROM events e JOIN x USING (event_type)
+         |ORDER BY e.event_id""".stripMargin),
 
-    "q_type_correlation" -> ((s, dir) => {
+    Gate("q_type_correlation", (s, dir) => {
       // metric co-movement: hourly count series per event type, pairwise
       // Pearson via the one-pass decimal-exact Correlation operator
       val types = Seq("click", "error", "purchase", "signup", "view")
@@ -426,9 +844,38 @@ object DocQueries {
             sum(when(col("event_type") === tp, 1L).otherwise(0L)).as(tp)): _*)
       Correlation.matrix(hourly, types)
         .orderBy(col("col_a"), col("col_b"))
+    }, {
+      val types = Seq("click", "error", "purchase", "signup", "view")
+      val cols = types.map(tp =>
+        s"SUM(CASE WHEN event_type = '$tp' THEN 1 ELSE 0 END) AS $tp")
+        .mkString(", ")
+      val sums = types.map(t =>
+        s"CAST(SUM(CAST($t AS DECIMAL(38,10))) AS DOUBLE) AS s_$t")
+      val qs = types.map(t =>
+        s"CAST(SUM(CAST($t * $t AS DECIMAL(38,10))) AS DOUBLE) AS q_$t")
+      val pairs = for {
+        i <- types.indices; j <- types.indices if i < j
+      } yield (types(i), types(j))
+      val ps = pairs.map { case (a, b) =>
+        s"CAST(SUM(CAST($a * $b AS DECIMAL(38,10))) AS DOUBLE) AS p_${a}_$b" }
+      val pairRows = pairs.map { case (a, b) =>
+        val den = s"sqrt(n * q_$a - s_$a * s_$a) * " +
+          s"sqrt(n * q_$b - s_$b * s_$b)"
+        s"SELECT '$a' AS col_a, '$b' AS col_b, CASE WHEN $den = 0 " +
+          s"THEN 0.0 ELSE " +
+          Sql.sround(s"(n * p_${a}_$b - s_$a * s_$b) / ($den)") +
+          " END AS corr FROM m"
+      }.mkString("\nUNION ALL\n")
+      s"""WITH h AS (SELECT date_trunc('hour', ts) AS b, $cols
+         |  FROM events GROUP BY 1),
+         |m AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n,
+         |  ${(sums ++ qs ++ ps).mkString(",\n  ")}
+         |  FROM h)
+         |SELECT col_a, col_b, corr FROM ($pairRows)
+         |ORDER BY col_a, col_b""".stripMargin
     }),
 
-    "q_scd2_lookup" -> ((s, dir) => {
+    Gate("q_scd2_lookup", (s, dir) => {
       // probe each event 30 minutes later: which value was current then?
       val ev = t(s, dir, "events")
         .select(col("user_id"), col("event_id"), col("ts"), col("value"))
@@ -441,16 +888,45 @@ object DocQueries {
       Scd2.pointInTime(hist, probes, "user_id", "pts")
         .select(col("probe_id"), col("value_at"))
         .orderBy(col("probe_id"))
-    }),
+    },
+      """WITH h AS (SELECT user_id, value AS value_at, ts AS valid_from,
+        |    LEAD(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)
+        |      AS valid_to
+        |  FROM events),
+        |p AS (SELECT event_id AS probe_id, user_id,
+        |    ts + INTERVAL 30 MINUTE AS pts FROM events)
+        |SELECT p.probe_id, h.value_at
+        |FROM p LEFT JOIN h ON p.user_id = h.user_id
+        |  AND h.valid_from <= p.pts
+        |  AND (h.valid_to IS NULL OR p.pts < h.valid_to)
+        |ORDER BY p.probe_id""".stripMargin),
 
-    "q_skew_report" -> ((s, dir) =>
-      graft.core.Skew.report(t(s, dir, "events"), "event_type", topK = 10)),
+    Gate("q_skew_report", (s, dir) =>
+      graft.core.Skew.report(t(s, dir, "events"), "event_type", topK = 10),
+      """WITH c AS (SELECT event_type, count(*) AS n FROM events GROUP BY 1),
+        |t AS (SELECT count(*) AS total FROM events)
+        |SELECT event_type, n,
+        |  FLOOR((CAST(n AS DOUBLE) / CAST(total AS DOUBLE)) * 1e6 + 0.5) / 1e6
+        |    AS share
+        |FROM c CROSS JOIN t
+        |ORDER BY n DESC, event_type ASC LIMIT 10""".stripMargin),
 
-    "q_readability" -> ((s, dir) =>
+    Gate("q_readability", (s, dir) =>
       TF.readabilityTable(t(s, dir, "documents"), "doc_id", "text")
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id")),
+      s"""SELECT doc_id, ${Sql.tokenCountSql()} AS n_words,
+         |  GREATEST(len(regexp_extract_all(text, '[.!?]+')), 1) AS n_sents,
+         |  len(regexp_extract_all(lower(text), '[aeiouy]+')) AS n_syllables,
+         |  CASE WHEN ${Sql.tokenCountSql()} = 0 THEN NULL
+         |    ELSE ${Sql.sround(
+            s"206.835 - 1.015 * (CAST(${Sql.tokenCountSql()} AS DOUBLE) / " +
+            s"CAST(GREATEST(len(regexp_extract_all(text, '[.!?]+')), 1) AS DOUBLE)) - " +
+            s"84.6 * (CAST(len(regexp_extract_all(lower(text), '[aeiouy]+')) AS DOUBLE) / " +
+            s"CAST(${Sql.tokenCountSql()} AS DOUBLE))")}
+         |  END AS flesch
+         |FROM documents ORDER BY doc_id""".stripMargin),
 
-    "q_graph_degrees" -> ((s, dir) => {
+    Gate("q_graph_degrees", (s, dir) => {
       val docs = t(s, dir, "documents").select(col("doc_id"))
       val cnt = docs.agg(count(lit(1)).as("_n"))
       val link = (a: Long, b: Long) => docs.crossJoin(broadcast(cnt))
@@ -458,9 +934,19 @@ object DocQueries {
           pmod(col("doc_id") * a + b, col("_n")).as("dst"))
       PageRank.degreeStats(link(7L, 1L).union(link(13L, 5L)), "src", "dst")
         .orderBy(col("id"))
-    }),
+    },
+      """WITH nn AS (SELECT count(*) AS n FROM documents),
+        |e AS (SELECT doc_id AS src, (doc_id * 7 + 1) % nn.n AS dst
+        |        FROM documents, nn
+        |      UNION ALL
+        |      SELECT doc_id, (doc_id * 13 + 5) % nn.n FROM documents, nn),
+        |o AS (SELECT src AS id, count(*) AS od FROM e GROUP BY 1),
+        |i AS (SELECT dst AS id, count(*) AS idg FROM e GROUP BY 1)
+        |SELECT COALESCE(o.id, i.id) AS id, COALESCE(od, 0) AS out_deg,
+        |  COALESCE(idg, 0) AS in_deg
+        |FROM o FULL OUTER JOIN i ON o.id = i.id ORDER BY id""".stripMargin),
 
-    "q_reciprocity" -> ((s, dir) => {
+    Gate("q_reciprocity", (s, dir) => {
       val docs = t(s, dir, "documents").select(col("doc_id"))
       val cnt = docs.agg(count(lit(1)).as("_n"))
       val link = (a: Long, b: Long) => docs.crossJoin(broadcast(cnt))
@@ -471,13 +957,56 @@ object DocQueries {
       val e2 = e.union(e.filter(col("src") % 3 === 0)
         .select(col("dst").as("src"), col("src").as("dst")))
       PageRank.reciprocity(e2, "src", "dst")
+    }, {
+      s"""WITH nn AS (SELECT count(*) AS n FROM documents),
+         |e AS (SELECT doc_id AS src, (doc_id * 7 + 1) % nn.n AS dst
+         |        FROM documents, nn
+         |      UNION ALL
+         |      SELECT doc_id, (doc_id * 13 + 5) % nn.n FROM documents, nn),
+         |e2 AS (SELECT src, dst FROM e
+         |       UNION ALL SELECT dst, src FROM e WHERE src % 3 = 0),
+         |ed AS (SELECT DISTINCT src, dst FROM e2),
+         |r AS (SELECT count(*) AS n_edges FROM ed),
+         |rc AS (SELECT count(*) AS n_reciprocal FROM ed a
+         |  WHERE EXISTS (SELECT 1 FROM ed b
+         |    WHERE b.src = a.dst AND b.dst = a.src))
+         |SELECT n_edges, n_reciprocal,
+         |  ${Sql.sround("CAST(n_reciprocal AS DOUBLE) / CAST(n_edges AS DOUBLE)")}
+         |    AS reciprocity
+         |FROM r CROSS JOIN rc""".stripMargin
     }),
 
-    "q_moments" -> ((s, dir) =>
+    Gate("q_moments", (s, dir) =>
       graft.operators.Audit.momentsByGroup(
-        t(s, dir, "events"), "event_type", "value")),
+        t(s, dir, "events"), "event_type", "value"),
+      {
+        val mu = "(m1 / n)"
+        val varP = s"(m2 / n - $mu * $mu)"
+        val sig = s"sqrt($varP)"
+        val skew = s"(m3 / n - 3.0 * $mu * m2 / n + " +
+          s"2.0 * $mu * $mu * $mu) / ($sig * $sig * $sig)"
+        val kurt = s"(m4 / n - 4.0 * $mu * m3 / n + " +
+          s"6.0 * $mu * $mu * m2 / n - 3.0 * $mu * $mu * $mu * $mu) / " +
+          s"($varP * $varP) - 3.0"
+        s"""WITH m AS (SELECT event_type, CAST(COUNT(*) AS DOUBLE) AS n,
+           |    CAST(SUM(CAST(value AS DECIMAL(38,10))) AS DOUBLE) AS m1,
+           |    CAST(SUM(CAST(value * value AS DECIMAL(38,10))) AS DOUBLE)
+           |      AS m2,
+           |    CAST(SUM(CAST(value * value * value AS DECIMAL(38,10)))
+           |      AS DOUBLE) AS m3,
+           |    CAST(SUM(CAST(value * value * value * value
+           |      AS DECIMAL(38,10))) AS DOUBLE) AS m4
+           |  FROM events WHERE value IS NOT NULL GROUP BY 1)
+           |SELECT event_type, CAST(n AS BIGINT) AS n,
+           |  ${Sql.sround(mu)} AS mean, ${Sql.sround(sig)} AS sigma,
+           |  CASE WHEN $sig = 0 THEN NULL ELSE ${Sql.sround(skew)} END
+           |    AS skewness,
+           |  CASE WHEN $sig = 0 THEN NULL ELSE ${Sql.sround(kurt)} END
+           |    AS kurtosis
+           |FROM m ORDER BY event_type""".stripMargin
+      }),
 
-    "q_negative_edges" -> ((s, dir) => {
+    Gate("q_negative_edges", (s, dir) => {
       // negatives for the same citation graph q_pagerank ranks
       val docs = t(s, dir, "documents").select(col("doc_id"))
       val n = docs.count()
@@ -488,9 +1017,24 @@ object DocQueries {
       PageRank.negativeEdges(link(7L, 1L).union(link(13L, 5L)),
         "src", "dst", k = 2, nNodes = n)
         .orderBy(col("src"), col("dst"))
-    }),
+    },
+      """WITH nn AS (SELECT count(*) AS n FROM documents),
+        |e AS (SELECT doc_id AS src, (doc_id * 7 + 1) % nn.n AS dst
+        |        FROM documents, nn
+        |      UNION ALL
+        |      SELECT doc_id, (doc_id * 13 + 5) % nn.n FROM documents, nn),
+        |c AS (SELECT DISTINCT s.doc_id AS src,
+        |    CAST(('0x' || substr(md5('neg#' || CAST(s.doc_id AS VARCHAR)
+        |      || '_' || CAST(i.i AS VARCHAR)), 1, 8)) AS BIGINT)
+        |      % nn.n AS dst
+        |  FROM documents s, (SELECT unnest([0, 1]) AS i) i, nn)
+        |SELECT c.src, c.dst FROM c
+        |WHERE c.src <> c.dst
+        |  AND NOT EXISTS (SELECT 1 FROM e
+        |    WHERE e.src = c.src AND e.dst = c.dst)
+        |ORDER BY c.src, c.dst""".stripMargin),
 
-    "q_graph_components" -> ((s, dir) => {
+    Gate("q_graph_components", (s, dir) => {
       // standalone connected components (the operator fuzzy dedup builds
       // on, gated in its own right) over a SPARSE synthetic graph — the
       // dense citation graph collapses to one giant component, which
@@ -512,9 +1056,29 @@ object DocQueries {
         .select(col("doc_id"), col("cluster").as("component"),
           col("comp_size"))
         .orderBy(col("doc_id"))
-    }),
+    },
+      // ground truth: recursive-CTE transitive closure of the same sparse
+      // symmetric edge set, min reachable id per vertex
+      """WITH RECURSIVE nn AS (SELECT count(*) AS n FROM documents),
+        |e AS (SELECT doc_id AS src, (doc_id * 7 + 1) % nn.n AS dst
+        |        FROM documents, nn WHERE doc_id % 3 = 0
+        |      UNION ALL
+        |      SELECT doc_id, (doc_id * 13 + 5) % nn.n
+        |        FROM documents, nn WHERE doc_id % 5 = 0),
+        |sym AS (SELECT src AS u, dst AS v FROM e WHERE src <> dst
+        |        UNION SELECT dst, src FROM e WHERE src <> dst),
+        |reach(id, lbl) AS (
+        |  SELECT doc_id, doc_id FROM documents
+        |  UNION
+        |  SELECT sym.v, reach.lbl FROM sym JOIN reach ON sym.u = reach.id),
+        |lab AS (SELECT id AS doc_id, MIN(lbl) AS component
+        |        FROM reach GROUP BY 1),
+        |sz AS (SELECT component, count(*) AS comp_size FROM lab GROUP BY 1)
+        |SELECT lab.doc_id, lab.component, sz.comp_size
+        |FROM lab JOIN sz USING (component)
+        |ORDER BY lab.doc_id""".stripMargin),
 
-    "q_pagerank" -> ((s, dir) => {
+    Gate("q_pagerank", (s, dir) => {
       // deterministic citation graph over the (contiguous) doc-id space:
       // each doc links to (7·id+1) mod N and (13·id+5) mod N; ranks in
       // integer micro-units so the result is bit-exact cross-engine
@@ -526,9 +1090,37 @@ object DocQueries {
       PageRank.run(link(7L, 1L).union(link(13L, 5L)), "src", "dst",
         iterations = 3)
         .orderBy(col("id"))
+    }, {
+      def iter(prev: String, cur: String) =
+        s"""$cur AS (SELECT nodes.id,
+           |  base.b + CAST(FLOOR((85 * COALESCE(s.s, 0)) / 100.0) AS BIGINT)
+           |    AS rank
+           |  FROM nodes CROSS JOIN base
+           |  LEFT JOIN (SELECT e.dst AS id,
+           |      SUM(CAST(FLOOR(CAST(p.rank AS DOUBLE) / d._deg) AS BIGINT))
+           |        AS s
+           |    FROM e JOIN $prev p ON e.src = p.id
+           |    JOIN deg d ON e.src = d.id
+           |    GROUP BY e.dst) s ON nodes.id = s.id)""".stripMargin
+      s"""WITH nn AS (SELECT count(*) AS n FROM documents),
+         |e AS (SELECT doc_id AS src, (doc_id * 7 + 1) % nn.n AS dst
+         |        FROM documents, nn
+         |      UNION ALL
+         |      SELECT doc_id, (doc_id * 13 + 5) % nn.n FROM documents, nn),
+         |nodes AS (SELECT DISTINCT id FROM
+         |  (SELECT src AS id FROM e UNION ALL SELECT dst FROM e)),
+         |deg AS (SELECT src AS id, count(*) AS _deg FROM e GROUP BY 1),
+         |base AS (SELECT
+         |    CAST(FLOOR(1000000 * 15 / (100.0 * n)) AS BIGINT) AS b,
+         |    CAST(FLOOR(1000000.0 / n) AS BIGINT) AS r0 FROM nn),
+         |r0 AS (SELECT id, (SELECT r0 FROM base) AS rank FROM nodes),
+         |${iter("r0", "r1")},
+         |${iter("r1", "r2")},
+         |${iter("r2", "r3")}
+         |SELECT id, rank FROM r3 ORDER BY id""".stripMargin
     }),
 
-    "q_pagerank_dangling" -> ((s, dir) => {
+    Gate("q_pagerank_dangling", (s, dir) => {
       // doubling/tripling graph truncated at N: ids that can't emit an
       // in-range edge are sinks, so ~half the mass is dangling every round
       // — exercises the integer-exact sink-mass redistribution
@@ -540,46 +1132,153 @@ object DocQueries {
       PageRank.run(link(2L, 1L).union(link(3L, 2L)), "src", "dst",
         iterations = 3, redistributeDangling = true)
         .orderBy(col("id"))
+    }, {
+      // same fixed-point replay, plus the per-round dangling share:
+      // floor(sum of sink ranks / N) added to every node's incoming sum
+      def iter(prev: String, cur: String) =
+        s"""$cur AS (SELECT nodes.id,
+           |  base.b + CAST(FLOOR((85 * (COALESCE(s.s, 0) + dg.share))
+           |    / 100.0) AS BIGINT) AS rank
+           |  FROM nodes CROSS JOIN base
+           |  CROSS JOIN (SELECT COALESCE(SUM(p.rank), 0)
+           |      // (SELECT n FROM nn) AS share
+           |    FROM $prev p WHERE p.id NOT IN (SELECT id FROM deg)) dg
+           |  LEFT JOIN (SELECT e.dst AS id,
+           |      SUM(CAST(FLOOR(CAST(p.rank AS DOUBLE) / d._deg) AS BIGINT))
+           |        AS s
+           |    FROM e JOIN $prev p ON e.src = p.id
+           |    JOIN deg d ON e.src = d.id
+           |    GROUP BY e.dst) s ON nodes.id = s.id)""".stripMargin
+      s"""WITH nd AS (SELECT count(*) AS nd FROM documents),
+         |e AS (SELECT doc_id AS src, doc_id * 2 + 1 AS dst
+         |        FROM documents, nd WHERE doc_id * 2 + 1 < nd.nd
+         |      UNION ALL
+         |      SELECT doc_id, doc_id * 3 + 2 FROM documents, nd
+         |        WHERE doc_id * 3 + 2 < nd.nd),
+         |nodes AS (SELECT DISTINCT id FROM
+         |  (SELECT src AS id FROM e UNION ALL SELECT dst FROM e)),
+         |nn AS (SELECT count(*) AS n FROM nodes),
+         |deg AS (SELECT src AS id, count(*) AS _deg FROM e GROUP BY 1),
+         |base AS (SELECT
+         |    CAST(FLOOR(1000000 * 15 / (100.0 * n)) AS BIGINT) AS b,
+         |    CAST(FLOOR(1000000.0 / n) AS BIGINT) AS r0 FROM nn),
+         |r0 AS (SELECT id, (SELECT r0 FROM base) AS rank FROM nodes),
+         |${iter("r0", "r1")},
+         |${iter("r1", "r2")},
+         |${iter("r2", "r3")}
+         |SELECT id, rank FROM r3 ORDER BY id""".stripMargin
     }),
 
-    "q_seasonal_spikes" -> ((s, dir) =>
+    Gate("q_seasonal_spikes", (s, dir) =>
       AnomalyDetector.seasonalSpikes(
         t(s, dir, "events"), "event_type",
         date_trunc("hour", col("ts")), b => hour(b), mNum = 3L, mDen = 2L)
         .select(col("event_type"),
           date_format(col("bucket"), "yyyy-MM-dd HH:mm:ss").as("hour"),
           col("season"), col("n"))
-        .orderBy(col("event_type"), col("hour"))),
+        .orderBy(col("event_type"), col("hour")),
+      """WITH b AS (SELECT event_type, date_trunc('hour', ts) AS bucket,
+        |    count(*) AS n FROM events GROUP BY 1, 2),
+        |s AS (SELECT event_type, EXTRACT(hour FROM bucket) AS season,
+        |    bucket, n FROM b),
+        |st AS (SELECT event_type, season, count(*) AS c, SUM(n) AS sn
+        |  FROM s GROUP BY 1, 2)
+        |SELECT s.event_type,
+        |  strftime(s.bucket, '%Y-%m-%d %H:%M:%S') AS hour, s.season, s.n
+        |FROM s JOIN st ON s.event_type = st.event_type
+        |  AND s.season = st.season
+        |WHERE s.n * st.c * 2 > 3 * st.sn
+        |ORDER BY s.event_type, hour""".stripMargin),
 
-    "q_cusum_drift" -> ((s, dir) =>
+    Gate("q_cusum_drift", (s, dir) =>
       AnomalyDetector.cusumDrift(
         t(s, dir, "events"), "event_type",
         date_trunc("hour", col("ts")), hNum = 1L, hDen = 20L)
         .select(col("event_type"),
           date_format(col("bucket"), "yyyy-MM-dd HH:mm:ss").as("hour"),
           col("n"), col("cusum"))
-        .orderBy(col("event_type"), col("hour"))),
+        .orderBy(col("event_type"), col("hour")),
+      """WITH b AS (SELECT event_type, date_trunc('hour', ts) AS bucket,
+        |    count(*) AS n FROM events GROUP BY 1, 2),
+        |st AS (SELECT event_type, count(*) AS c, SUM(n) AS s
+        |  FROM b GROUP BY 1),
+        |cu AS (SELECT b.event_type, b.bucket, b.n, st.s,
+        |    CAST(SUM(b.n * st.c - st.s) OVER (PARTITION BY b.event_type
+        |      ORDER BY b.bucket) AS BIGINT) AS cusum
+        |  FROM b JOIN st USING (event_type))
+        |SELECT event_type, strftime(bucket, '%Y-%m-%d %H:%M:%S') AS hour,
+        |  CAST(n AS BIGINT) AS n, cusum
+        |FROM cu WHERE abs(cusum) * 20 > 1 * s
+        |ORDER BY event_type, hour""".stripMargin),
 
-    "q_hard_negatives" -> ((s, dir) => {
+    Gate("q_hard_negatives", (s, dir) => {
       val emb = t(s, dir, "embeddings")
       graft.functions.Similarity.hardNegatives(
         emb, emb.filter(col("vec_id") < 3).limit(3), "vec_id", "embedding",
         "label", k = 5)
         .orderBy(col("anchor_id"), col("rank_in_key"))
+    }, {
+      val sim = Sql.sround("CASE WHEN sqrt(d.nsqa) * sqrt(d.nsqc) = 0 " +
+        "THEN 0.0 ELSE d.dot / (sqrt(d.nsqa) * sqrt(d.nsqc)) END")
+      s"""WITH a AS (SELECT vec_id AS anchor_id, label AS albl,
+         |    CAST(unnest(embedding) AS DOUBLE) AS av,
+         |    generate_subscripts(embedding, 1) AS i
+         |  FROM embeddings WHERE vec_id < 3),
+         |c AS (SELECT vec_id AS cand_id, label AS clbl,
+         |    CAST(unnest(embedding) AS DOUBLE) AS cv,
+         |    generate_subscripts(embedding, 1) AS i
+         |  FROM embeddings),
+         |d AS (SELECT a.anchor_id, c.cand_id,
+         |    SUM(a.av * c.cv) AS dot, SUM(a.av * a.av) AS nsqa,
+         |    SUM(c.cv * c.cv) AS nsqc
+         |  FROM a JOIN c ON a.i = c.i AND a.albl <> c.clbl
+         |  GROUP BY 1, 2),
+         |r AS (SELECT d.anchor_id, d.cand_id, $sim AS similarity
+         |  FROM d),
+         |rk AS (SELECT anchor_id, cand_id, similarity,
+         |    ROW_NUMBER() OVER (PARTITION BY anchor_id
+         |      ORDER BY similarity DESC, cand_id ASC) AS rank_in_key
+         |  FROM r)
+         |SELECT anchor_id, cand_id, similarity, rank_in_key FROM rk
+         |WHERE rank_in_key <= 5
+         |ORDER BY anchor_id, rank_in_key""".stripMargin
     }),
 
-    "q_normalize_group" -> ((s, dir) =>
+    Gate("q_normalize_group", (s, dir) =>
       GroupNormalizer.zscore(
         t(s, dir, "events"), "event_type", "value")
         .select(col("event_id"), col("event_type"), col("z"))
-        .orderBy(col("event_id"))),
+        .orderBy(col("event_id")),
+      s"""WITH st AS (SELECT event_type,
+         |    CAST(COUNT(value) AS DOUBLE) AS n,
+         |    CAST(SUM(CAST(value AS DECIMAL(38,10))) AS DOUBLE) AS s,
+         |    CAST(SUM(CAST(value * value AS DECIMAL(38,10))) AS DOUBLE) AS q
+         |  FROM events GROUP BY 1)
+         |SELECT e.event_id, e.event_type,
+         |  CASE WHEN e.value IS NULL THEN NULL
+         |       WHEN sqrt(st.n * st.q - st.s * st.s) / st.n = 0 THEN 0.0
+         |       ELSE ${Sql.sround("(e.value - st.s / st.n) / (sqrt(st.n * st.q - st.s * st.s) / st.n)")}
+         |  END AS z
+         |FROM events e JOIN st USING (event_type)
+         |ORDER BY e.event_id""".stripMargin),
 
-    "q_markov" -> ((s, dir) =>
+    Gate("q_markov", (s, dir) =>
       graft.operators.TimeSeries.transitions(
         t(s, dir, "events"), "user_id",
-        Seq(col("ts").asc, col("event_id").asc), "event_type")),
+        Seq(col("ts").asc, col("event_id").asc), "event_type"),
+      s"""WITH l AS (SELECT user_id, event_type,
+         |    LAG(event_type, 1) OVER (PARTITION BY user_id
+         |      ORDER BY ts, event_id) AS from_state
+         |  FROM events),
+         |p AS (SELECT from_state, event_type AS to_state, count(*) AS n
+         |  FROM l WHERE from_state IS NOT NULL GROUP BY 1, 2),
+         |t AS (SELECT from_state, SUM(n) AS tot FROM p GROUP BY 1)
+         |SELECT p.from_state, p.to_state, p.n,
+         |  ${Sql.sround("CAST(p.n AS DOUBLE) / CAST(t.tot AS DOUBLE)")} AS p
+         |FROM p JOIN t USING (from_state)
+         |ORDER BY p.from_state, p.to_state""".stripMargin),
 
-    "q_cdc_stream_twin" -> ((s, dir) => {
+    Gate("q_cdc_stream_twin", (s, dir) => {
       // the STREAMING CDC materializer run for real — parquet file stream →
       // mapGroupsWithState → update-mode memory sink — gated against a pure
       // latest-row-per-key SQL twin (the q_sessions treatment applied to
@@ -612,9 +1311,23 @@ object DocQueries {
         .select(col("id"), col("_w.value").as("value"),
           col("_w.alive").as("alive"), col("_w.ts_ms").as("ts_ms"))
         .orderBy(col("id"))
-    }),
+    },
+      // latest-row-per-key under the operator's total order
+      // (ts, alive, value) — what a converged CDC state must equal
+      """WITH ch AS (SELECT user_id AS id, ts,
+        |    CASE WHEN event_type = 'error' THEN 'delete'
+        |         WHEN event_type = 'click' THEN 'update'
+        |         ELSE 'insert' END AS op,
+        |    COALESCE(value, 0.0) AS value
+        |  FROM events),
+        |r AS (SELECT id, ts, op, value, ROW_NUMBER() OVER (PARTITION BY id
+        |    ORDER BY ts DESC, (op <> 'delete') DESC, value DESC) AS rk
+        |  FROM ch)
+        |SELECT id, value, (op <> 'delete') AS alive,
+        |  epoch_ms(ts) AS ts_ms
+        |FROM r WHERE rk = 1 ORDER BY id""".stripMargin),
 
-    "q_quality_monitor_twin" -> ((s, dir) => {
+    Gate("q_quality_monitor_twin", (s, dir) => {
       // the streaming corpus-quality monitor run for real (windowed agg over
       // a file stream, complete mode), vs a SQL replay of the same windows.
       // Event time is synthesized one-doc-per-minute so 10-minute windows
@@ -643,18 +1356,59 @@ object DocQueries {
         round(col("mean_quality") * col("n_docs") * lit(8))
           .cast(LongType).as("quality_eighths"))
         .orderBy(col("window_start"), col("source"))
-    }),
+    },
+      s"""WITH d AS (SELECT source, text,
+         |    make_timestamp(doc_id * 60000000) AS ts FROM documents),
+         |w AS (SELECT source,
+         |    make_timestamp((epoch_ms(ts) // 600000) * 600000000) AS ws,
+         |    $tokenCountSql AS tok, $qualityScoreSql AS q FROM d)
+         |SELECT strftime(ws, '%Y-%m-%d %H:%M:%S') AS window_start, source,
+         |  CAST(COUNT(*) AS BIGINT) AS n_docs,
+         |  CAST(SUM(tok) AS BIGINT) AS n_tokens,
+         |  CAST(ROUND(SUM(q) * 8) AS BIGINT) AS quality_eighths
+         |FROM w GROUP BY 1, 2 ORDER BY window_start, source""".stripMargin),
 
-    "q_group_trend" -> ((s, dir) =>
+    Gate("q_group_trend", (s, dir) =>
       graft.operators.TimeSeries.groupTrend(
-        t(s, dir, "events"), "event_type", "ts", "value")),
+        t(s, dir, "events"), "event_type", "ts", "value"),
+      s"""WITH r AS (SELECT event_type, epoch_ns(ts) // 1000000000 AS xt,
+         |    value AS y FROM events WHERE value IS NOT NULL),
+         |m0 AS (SELECT event_type, MIN(xt) AS t0 FROM r GROUP BY 1),
+         |x AS (SELECT r.event_type, r.xt - m0.t0 AS x, r.y
+         |  FROM r JOIN m0 USING (event_type)),
+         |mo AS (SELECT event_type,
+         |    CAST(COUNT(*) AS DOUBLE) AS n,
+         |    CAST(SUM(x) AS DOUBLE) AS sx,
+         |    CAST(SUM(CAST(x * x AS DECIMAL(38,0))) AS DOUBLE) AS sxx,
+         |    CAST(SUM(CAST(y AS DECIMAL(38,10))) AS DOUBLE) AS sy,
+         |    CAST(SUM(CAST(x * y AS DECIMAL(38,10))) AS DOUBLE) AS sxy
+         |  FROM x GROUP BY 1)
+         |SELECT event_type, CAST(n AS BIGINT) AS n,
+         |  CASE WHEN n * sxx - sx * sx = 0 THEN NULL
+         |       ELSE ${Sql.sround("(n * sxy - sx * sy) / (n * sxx - sx * sx)", 6)}
+         |  END AS slope_per_sec,
+         |  ${Sql.sround("sy / n")} AS mean
+         |FROM mo ORDER BY event_type""".stripMargin),
 
-    "q_key_discovery" -> ((s, dir) =>
+    Gate("q_key_discovery", (s, dir) =>
       graft.operators.Audit.keyCandidates(t(s, dir, "orders"),
         Seq(Seq("o_orderkey"), Seq("o_custkey"),
-          Seq("o_custkey", "o_orderdate")))),
+          Seq("o_custkey", "o_orderdate"))),
+      {
+        def cand(label: String, distinctExpr: String) =
+          s"""SELECT '$label' AS candidate, COUNT(*) AS n_rows,
+             |  $distinctExpr AS n_distinct,
+             |  COUNT(*) = $distinctExpr AS is_key FROM orders""".stripMargin
+        s"""${cand("o_custkey", "COUNT(DISTINCT o_custkey)")}
+           |UNION ALL
+           |${cand("o_custkey,o_orderdate",
+             "COUNT(DISTINCT (o_custkey, o_orderdate))")}
+           |UNION ALL
+           |${cand("o_orderkey", "COUNT(DISTINCT o_orderkey)")}
+           |ORDER BY candidate""".stripMargin
+      }),
 
-    "q_bpe_roundtrip" -> ((s, dir) => {
+    Gate("q_bpe_roundtrip", (s, dir) => {
       // losslessness closure: concatenating the BPE tokens reproduces the
       // normalized character stream exactly — the oracle derives the
       // normalized text independently, so a single dropped or duplicated
@@ -665,9 +1419,12 @@ object DocQueries {
         array_join(graft.functions.Bpe.encode(col("text"), merges), "")
           .as("t"))
         .orderBy(col("doc_id"))
-    }),
+    },
+      """SELECT doc_id,
+        |  trim(regexp_replace(lower(text), '\s+', ' ', 'g')) AS t
+        |FROM documents ORDER BY doc_id""".stripMargin),
 
-    "q_rrf" -> ((s, dir) => {
+    Gate("q_rrf", (s, dir) => {
       // hybrid ranking: quality-rank ∪ length-rank fused in rank space.
       // qualityScore is 4 regex passes per document — compute-dense, so
       // the scan rebalances (Rebalance doc); and BOTH bounded ranks read
@@ -688,24 +1445,60 @@ object DocQueries {
         Seq(col("n_chars").desc, col("doc_id").asc), 100)
         .select(col("doc_id"), col("rank"))
       Ranking.rrfFuse(Seq(a, b), "doc_id")
-    }),
+    },
+      s"""WITH s AS (SELECT doc_id, $qualityScoreSql AS q, n_chars
+         |  FROM documents),
+         |a AS (SELECT doc_id, r AS rank FROM (SELECT doc_id,
+         |    ROW_NUMBER() OVER (ORDER BY q DESC, doc_id ASC) AS r FROM s)
+         |  WHERE r <= 100),
+         |b AS (SELECT doc_id, r AS rank FROM (SELECT doc_id,
+         |    ROW_NUMBER() OVER (ORDER BY n_chars DESC, doc_id ASC) AS r
+         |  FROM s) WHERE r <= 100)
+         |SELECT COALESCE(a.doc_id, b.doc_id) AS doc_id,
+         |  ${Sql.sround("COALESCE(1.0 / (60 + a.rank), 0.0) + COALESCE(1.0 / (60 + b.rank), 0.0)", 6)} AS rrf
+         |FROM a FULL OUTER JOIN b ON a.doc_id = b.doc_id
+         |ORDER BY rrf DESC, doc_id ASC""".stripMargin),
 
-    "q_embed_drift" -> ((s, dir) => {
+    Gate("q_embed_drift", (s, dir) => {
       val emb = t(s, dir, "embeddings")
       graft.functions.Similarity.centroidDrift(
         emb.filter(col("vec_id") % 2 === 0),
         emb.filter(col("vec_id") % 2 === 1), "label", "embedding")
         .orderBy(col("label"))
+    }, {
+      def cent(filt: String, out: String) =
+        s"""SELECT label, i AS dim,
+           |  CAST(SUM(CAST(CAST(v AS DOUBLE) AS DECIMAL(38,10))) AS DOUBLE)
+           |    / COUNT(v) AS $out
+           |FROM (SELECT label, unnest(embedding) AS v,
+           |    generate_subscripts(embedding, 1) AS i
+           |  FROM embeddings WHERE $filt)
+           |GROUP BY 1, 2""".stripMargin
+      s"""WITH ca AS (${cent("vec_id % 2 = 0", "ma")}),
+         |cb AS (${cent("vec_id % 2 = 1", "mb")}),
+         |j AS (SELECT ca.label,
+         |    CAST((ca.ma - cb.mb) * (ca.ma - cb.mb) AS DECIMAL(38,18)) AS sq
+         |  FROM ca JOIN cb ON ca.label = cb.label AND ca.dim = cb.dim)
+         |SELECT label, COUNT(*) AS n_dims,
+         |  ${Sql.sround("sqrt(CAST(SUM(sq) AS DOUBLE))")} AS drift
+         |FROM j GROUP BY label ORDER BY label""".stripMargin
     }),
 
-    "q_label_index" -> ((s, dir) =>
+    Gate("q_label_index", (s, dir) =>
       graft.functions.Featurize.labelIndex(
         t(s, dir, "documents").select(col("doc_id"), col("source")),
         "source", "source_idx")
         .select(col("doc_id"), col("source"), col("source_idx"))
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id")),
+      """WITH d AS (SELECT source, count(*) AS c FROM documents GROUP BY 1),
+        |r AS (SELECT source,
+        |    ROW_NUMBER() OVER (ORDER BY c DESC, source ASC) - 1 AS source_idx
+        |  FROM d)
+        |SELECT doc_id, t.source, r.source_idx
+        |FROM documents t JOIN r ON t.source = r.source
+        |ORDER BY doc_id""".stripMargin),
 
-    "q_extract_entities" -> ((s, dir) => {
+    Gate("q_extract_entities", (s, dir) => {
       // entities injected deterministically (the corpus text is synthetic
       // word salad), then mined back out as structured rows
       val raw = concat(lit("Reach "), col("c_name"), lit(" at "),
@@ -716,9 +1509,23 @@ object DocQueries {
         t(s, dir, "customer").select(col("c_custkey"), raw.as("raw")),
         "c_custkey", "raw", TF.piiPatterns)
         .orderBy(col("c_custkey"), col("kind"), col("n"))
+    }, {
+      val raw = """'Reach ' || c_name || ' at ' ||
+        | lower(regexp_replace(c_name, '[#0]', '', 'g')) ||
+        | '@mail.example, tel (555) 123-4567, SSN 123-45-6789, card 4111 1111 1111 1111.'"""
+        .stripMargin.replace("\n", "")
+      val kinds = TF.piiPatterns.map { case (kind, re) =>
+        s"""SELECT c_custkey, '$kind' AS kind,
+           |  unnest(range(1, len(regexp_extract_all(raw, '$re')) + 1)) AS n,
+           |  unnest(regexp_extract_all(raw, '$re')) AS entity FROM d"""
+          .stripMargin
+      }.mkString("\nUNION ALL\n")
+      s"""WITH d AS (SELECT c_custkey, $raw AS raw FROM customer)
+         |SELECT c_custkey, kind, n, entity FROM ($kinds)
+         |ORDER BY c_custkey, kind, n""".stripMargin
     }),
 
-    "q_doc_fingerprint" -> ((s, dir) =>
+    Gate("q_doc_fingerprint", (s, dir) =>
       // fingerprint values are xxhash64-based (engine-specific), so the
       // oracle-checkable invariant is per-row agreement between the codegen
       // kernel and the independent Column-HOF spelling of the same rolling
@@ -728,9 +1535,11 @@ object DocQueries {
         col("doc_id"),
         (TF.fingerprint(col("text")) <=> TF.fingerprintTreeForm(col("text")))
           .as("kernel_eq_spec"))
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id")),
+      """SELECT doc_id, TRUE AS kernel_eq_spec
+        |FROM documents ORDER BY doc_id""".stripMargin),
 
-    "q_redact_pii" -> ((s, dir) => {
+    Gate("q_redact_pii", (s, dir) => {
       // PII injected deterministically from customer names, then masked;
       // per-class hit counts prove each pattern fired
       val raw = concat(lit("Reach "), col("c_name"), lit(" at "),
@@ -746,18 +1555,47 @@ object DocQueries {
           size(regexp_extract_all(col("raw"),
             lit(TF.piiPatterns.toMap.apply("ssn")), lit(0))).as("n_ssn"))
         .orderBy(col("c_custkey"))
+    }, {
+      val email = TF.piiPatterns.toMap.apply("email")
+      val ssn = TF.piiPatterns.toMap.apply("ssn")
+      val cc = TF.piiPatterns.toMap.apply("credit_card")
+      val phone = TF.piiPatterns.toMap.apply("phone_us")
+      val raw = """'Reach ' || c_name || ' at ' ||
+        | lower(regexp_replace(c_name, '[#0]', '', 'g')) ||
+        | '@mail.example, tel (555) 123-4567, SSN 123-45-6789, card 4111 1111 1111 1111.'"""
+        .stripMargin.replace("\n", "")
+      s"""WITH d AS (SELECT c_custkey, $raw AS raw FROM customer)
+         |SELECT c_custkey,
+         |  regexp_replace(regexp_replace(regexp_replace(regexp_replace(raw,
+         |    '$email', '[EMAIL]', 'g'),
+         |    '$ssn', '[SSN]', 'g'),
+         |    '$cc', '[CREDIT_CARD]', 'g'),
+         |    '$phone', '[PHONE_US]', 'g') AS redacted,
+         |  len(regexp_extract_all(raw, '$email')) AS n_email,
+         |  len(regexp_extract_all(raw, '$ssn')) AS n_ssn
+         |FROM d ORDER BY c_custkey""".stripMargin
     }),
 
-    "q_pack_docs" -> ((s, dir) =>
+    Gate("q_pack_docs", (s, dir) =>
       // sequence packing: cumsum token blocks of 2000 over doc_id order,
       // auto-sharded every 100 doc_ids so the cumsum window is partitioned
       // (shard-parallel plan — no global single-partition sort)
       TF.packDocuments(t(s, dir, "documents"), "doc_id", "text",
         budget = 2000L, autoShardWidth = 100L)
         .select(col("doc_id"), col("n_tokens"), col("window_id"))
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id")),
+      s"""WITH d AS (SELECT doc_id, $tokenCountSql AS n_tokens,
+         |        CAST(FLOOR(doc_id / 100.0) AS BIGINT) AS shard FROM documents),
+         |c AS (SELECT doc_id, n_tokens, shard,
+         |        SUM(n_tokens) OVER (PARTITION BY shard ORDER BY doc_id
+         |        ROWS UNBOUNDED PRECEDING) AS cum FROM d)
+         |SELECT doc_id, n_tokens,
+         |  shard * 4294967296 +
+         |  GREATEST(CAST(CEIL(CAST(cum AS DOUBLE) / 2000) AS BIGINT) - 1, 0)
+         |    AS window_id
+         |FROM c ORDER BY doc_id""".stripMargin),
 
-    "q_clean_text" -> ((s, dir) => {
+    Gate("q_clean_text", (s, dir) => {
       // HTML/entity/control noise injected deterministically, then cleaned
       val raw = concat(lit("<p> "), substring(col("text"), 1, 80),
         lit(" </p><br/>&amp; <b>bold</b> &lt;tag&gt; &quot;q&quot;\t."))
@@ -765,25 +1603,72 @@ object DocQueries {
         .select(col("doc_id"), raw.as("raw"))
         .select(col("doc_id"), TF.cleanText(col("raw")).as("cleaned"))
         .orderBy(col("doc_id"))
-    }),
+    },
+      """WITH d AS (SELECT doc_id,
+        |  '<p> ' || substr(text, 1, 80) ||
+        |  ' </p><br/>&amp; <b>bold</b> &lt;tag&gt; &quot;q&quot;' ||
+        |  chr(9) || '.' AS raw FROM documents)
+        |SELECT doc_id,
+        |  trim(regexp_replace(regexp_replace(
+        |    replace(replace(replace(replace(replace(replace(
+        |      regexp_replace(raw, '<[^>]*>', ' ', 'g'),
+        |      '&lt;', '<'), '&gt;', '>'), '&quot;', '"'), '&#39;', ''''),
+        |      '&nbsp;', ' '), '&amp;', '&'),
+        |    '[\x00-\x1F\x7F]', ' ', 'g'),
+        |    ' {2,}', ' ', 'g')) AS cleaned
+        |FROM d ORDER BY doc_id""".stripMargin),
 
-    "q_chunk_docs" -> ((s, dir) =>
+    Gate("q_chunk_docs", (s, dir) =>
       // RAG-style passage chunking: 16-word windows stepping by 12
       TF.chunkDocuments(t(s, dir, "documents"), "text",
         chunkWords = 16, overlap = 4)
         .select(col("doc_id"), col("chunk_id").cast(LongType).as("chunk_id"),
           col("chunk_text"))
-        .orderBy(col("doc_id"), col("chunk_id"))),
+        .orderBy(col("doc_id"), col("chunk_id")),
+      """WITH w AS (SELECT doc_id,
+        |    string_split(trim(regexp_replace(text, '\s+', ' ', 'g')), ' ') AS l
+        |  FROM documents),
+        |c AS (SELECT doc_id, l,
+        |    1 + CAST(CEIL(GREATEST(len(l) - 16, 0) / 12.0) AS INTEGER) AS nc
+        |  FROM w),
+        |x AS (SELECT doc_id,
+        |    unnest(list_transform(range(0, CAST(nc AS BIGINT)), i ->
+        |      {'chunk_id': i,
+        |       'chunk_text': array_to_string(l[(i*12 + 1):(i*12 + 16)], ' ')}),
+        |      recursive := true)
+        |  FROM c)
+        |SELECT doc_id, chunk_id, chunk_text FROM x
+        |ORDER BY doc_id, chunk_id""".stripMargin),
 
-    "q_doc_repetition" -> ((s, dir) =>
+    Gate("q_doc_repetition", (s, dir) =>
       TF.repetitionSignalsTable(t(s, dir, "documents"), "doc_id", "text")
         .select(col("doc_id"),
           Semantics.safeRound(col("dup_word_frac"), 4).as("dup_word_frac"),
           Semantics.safeRound(col("dup_bigram_frac"), 4).as("dup_bigram_frac"),
           Semantics.safeRound(col("top_word_frac"), 4).as("top_word_frac"))
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id")),
+      {
+        val words = wordsSql
+        s"""WITH base AS (SELECT doc_id, $words AS l FROM documents),
+           |per_row AS (SELECT doc_id, len(l) AS n,
+           |    len(list_distinct(l)) AS d1,
+           |    len(l) - 1 AS n2,
+           |    len(list_distinct(list_transform(range(1, len(l)),
+           |      i -> l[i] || ' ' || l[i+1]))) AS d2
+           |  FROM base),
+           |w AS (SELECT doc_id, unnest(l) AS word FROM base),
+           |wc AS (SELECT doc_id, word, count(*) AS c FROM w GROUP BY 1, 2),
+           |tops AS (SELECT doc_id, max(c) AS maxc, sum(c) AS ntot
+           |  FROM wc GROUP BY 1)
+           |SELECT p.doc_id,
+           |  ${Sql.sround("CASE WHEN p.n > 0 THEN CAST(p.n - p.d1 AS DOUBLE) / p.n ELSE 0.0 END")} AS dup_word_frac,
+           |  ${Sql.sround("CASE WHEN p.n2 > 0 THEN CAST(p.n2 - p.d2 AS DOUBLE) / p.n2 ELSE 0.0 END")} AS dup_bigram_frac,
+           |  ${Sql.sround("CASE WHEN t.ntot > 0 THEN CAST(t.maxc AS DOUBLE) / t.ntot ELSE 0.0 END")} AS top_word_frac
+           |FROM per_row p JOIN tops t ON p.doc_id = t.doc_id
+           |ORDER BY p.doc_id""".stripMargin
+      }),
 
-    "q_quality_lr" -> ((s, dir) => {
+    Gate("q_quality_lr", (s, dir) => {
       // model-based quality filter: DISTRIBUTED MLlib logistic regression
       // trained on weak heuristic labels; scoring is an explicit linear
       // chain, so the oracle recomputes the signals from text, reads the
@@ -836,50 +1721,135 @@ object DocQueries {
             .cast(LongType).as("margin_x1e6"),
           col("ml_keep"))
         .orderBy(col("doc_id"))
-    }),
+    },
+      // recompute the signals from text, read the learned boundary from
+      // aux, replay the left-associated linear decision
+      s"""WITH c AS (SELECT * FROM
+         |    read_parquet('/tmp/graft_oracle_aux/{SF}/quality_lr_coef/*.parquet')),
+         |f AS (SELECT doc_id, $punctRatioSql AS p, $stopRatioSql AS st,
+         |    $meanWlSql AS m, CAST($tokenCountSql AS DOUBLE) AS tk
+         |  FROM documents),
+         |sc AS (SELECT doc_id,
+         |    c.w_punct * p + c.w_stop * st + c.w_mwl * m + c.w_tok * tk + c.b
+         |      AS margin
+         |  FROM f, c)
+         |SELECT doc_id,
+         |  CAST(FLOOR(margin * 1000000.0 + 0.5) AS BIGINT) AS margin_x1e6,
+         |  margin >= 0.0 AS ml_keep
+         |FROM sc ORDER BY doc_id""".stripMargin),
 
-    "q_corpus_card" -> ((s, dir) =>
+    Gate("q_corpus_card", (s, dir) =>
       // the curator's per-slice corpus report: one full pass + tiny agg +
       // broadcast total for the share column
       graft.operators.CorpusStats.corpusCard(
         t(s, dir, "documents"), "text", Seq("lang", "source"))
-        .orderBy(col("lang"), col("source"))),
+        .orderBy(col("lang"), col("source")),
+      s"""WITH per_doc AS (SELECT lang, source, $tokenCountSql AS tok,
+         |    md5(text) AS key, $qualityScoreSql AS q
+         |  FROM documents),
+         |g AS (SELECT lang, source,
+         |    CAST(COUNT(*) AS BIGINT) AS n_docs,
+         |    CAST(SUM(tok) AS BIGINT) AS n_tokens,
+         |    CAST(COUNT(DISTINCT key) AS BIGINT) AS n_unique,
+         |    ${Sql.sround("SUM(q) / COUNT(*)")} AS mean_quality
+         |  FROM per_doc GROUP BY lang, source)
+         |SELECT lang, source, n_docs, n_tokens,
+         |  ${Sql.sround("CAST(n_tokens AS DOUBLE) / (SELECT CAST(SUM(n_tokens) AS DOUBLE) FROM g)")} AS token_share,
+         |  n_unique,
+         |  ${Sql.sround("CAST(n_docs - n_unique AS DOUBLE) / CAST(n_docs AS DOUBLE)")} AS dup_frac,
+         |  mean_quality
+         |FROM g ORDER BY lang, source""".stripMargin),
 
-    "q_doc_bm25" -> ((s, dir) =>
+    Gate("q_doc_bm25", (s, dir) =>
       // keyword-probe ranking: BM25 top-20 for a 4-term query. The explode
       // filters to the query terms BEFORE any shuffle; df/corpus stats are
       // tiny broadcast aggregates; decimal-quantized score sum keeps the
       // rounded output partial-agg-order-proof.
       TF.bm25Rank(t(s, dir, "documents"), "doc_id", "text",
-        query = Seq("spark", "table", "join", "window"), topN = 20)),
+        query = Seq("spark", "table", "join", "window"), topN = 20),
+      // the same BM25 arithmetic, shaped identically (left-assoc chains and
+      // the +1-smoothed idf), per-term scores summed through DECIMAL(38,18)
+      s"""WITH w AS (SELECT doc_id, $wordsSql AS ws FROM documents),
+         |tok AS (SELECT doc_id, CAST(len(ws) AS DOUBLE) AS dl, unnest(ws) AS t
+         |        FROM w),
+         |tf AS (SELECT doc_id, dl, t, CAST(COUNT(*) AS DOUBLE) AS tf
+         |       FROM tok WHERE t IN ('spark', 'table', 'join', 'window')
+         |       GROUP BY doc_id, dl, t),
+         |dfq AS (SELECT t, CAST(COUNT(DISTINCT doc_id) AS DOUBLE) AS dfr
+         |        FROM tf GROUP BY t),
+         |st AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n,
+         |         CAST(SUM(len(ws)) AS DOUBLE) / COUNT(*) AS avgdl FROM w),
+         |sc AS (SELECT tf.doc_id,
+         |    ln((st.n - dfq.dfr + 0.5) / (dfq.dfr + 0.5) + 1.0) *
+         |      (tf.tf * (1.2 + 1.0)) /
+         |      (tf.tf + 1.2 * (1.0 - 0.75 + 0.75 * tf.dl / st.avgdl)) AS s
+         |  FROM tf JOIN dfq ON tf.t = dfq.t, st)
+         |SELECT doc_id,
+         |  ROUND(CAST(SUM(CAST(s AS DECIMAL(38,18))) AS DOUBLE), 4) AS score
+         |FROM sc GROUP BY doc_id ORDER BY score DESC, doc_id LIMIT 20""".stripMargin),
 
-    "q_doc_top_ngrams" -> ((s, dir) =>
+    Gate("q_doc_top_ngrams", (s, dir) =>
       // corpus boilerplate stats: the 20 word 3-grams occurring in the most
       // docs (doc frequency — the shingle kernel emits per-doc DISTINCT
       // grams). One explode + partial-agg count + top-k; no join, no window.
-      TF.topNgrams(t(s, dir, "documents"), "text", k = 3, topN = 20)),
+      TF.topNgrams(t(s, dir, "documents"), "text", k = 3, topN = 20),
+      // per-doc DISTINCT 3-grams (same spelling the jaccard oracle proves
+      // equivalent to the shingle kernel), then doc-frequency top-20 with a
+      // total (doc_freq DESC, shingle) order; split hoisted out of the
+      // lambda (see `shw`)
+      s"""WITH w0 AS (SELECT doc_id,
+        |    string_split_regex(trim(lower(text)), '\\s+') AS ws
+        |  FROM documents),
+        |sh AS (SELECT doc_id, unnest($shw) AS shingle FROM w0)
+        |SELECT shingle, CAST(COUNT(*) AS BIGINT) AS doc_freq
+        |FROM sh GROUP BY shingle
+        |ORDER BY doc_freq DESC, shingle LIMIT 20""".stripMargin),
 
     // ---- deduplication ------------------------------------------------------
 
-    "q_doc_dedup_exact" -> ((s, dir) =>
+    Gate("q_doc_dedup_exact", (s, dir) =>
       // exact content dedup: md5 hash groups, survivor = min doc_id; md5 is
       // bit-identical across engines so this gate-checks the hash too
       t(s, dir, "documents")
         .groupBy(md5(col("text")).as("content_hash"))
         .agg(min(col("doc_id")).as("doc_id"), count(lit(1)).as("n_copies"))
         .select(col("doc_id"), col("content_hash"), col("n_copies"))
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id")),
+      """SELECT MIN(doc_id) AS doc_id, md5(text) AS content_hash,
+        |  COUNT(*) AS n_copies
+        |FROM documents GROUP BY md5(text) ORDER BY doc_id""".stripMargin),
 
-    "q_doc_ngram_jaccard" -> ((s, dir) =>
+    Gate("q_doc_ngram_jaccard", (s, dir) =>
       // blocked pairwise Jaccard over word 3-shingles; block = (lang, source)
       // so the join shuffles on small keys, never a full cross product
       NgramJaccard.pairsWithinBlocks(
         t(s, dir, "documents"), "doc_id", "text",
         blockKey = struct(col("lang"), col("source")),
         k = 3, threshold = 0.2)
-        .orderBy(col("id_a"), col("id_b"))),
+        .orderBy(col("id_a"), col("id_b")),
+      {
+        // word 3-shingles per doc, then blocked pairwise jaccard
+        val sh =
+          """list_distinct(list_transform(
+            |  range(1, greatest(len(string_split_regex(trim(lower(text)), '\s+')) - 1, 1)),
+            |  i -> concat_ws(' ',
+            |    string_split_regex(trim(lower(text)), '\s+')[i],
+            |    string_split_regex(trim(lower(text)), '\s+')[i+1],
+            |    string_split_regex(trim(lower(text)), '\s+')[i+2])))""".stripMargin.replace("\n", " ")
+        s"""WITH d AS (SELECT doc_id, lang, source, $sh AS sh FROM documents)
+           |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+           |  ROUND(CASE WHEN len(list_distinct(a.sh || b.sh)) = 0 THEN 0.0
+           |    ELSE CAST(len(list_filter(a.sh, x -> list_contains(b.sh, x))) AS DOUBLE)
+           |       / len(list_distinct(a.sh || b.sh)) END, 4) AS jaccard
+           |FROM d a JOIN d b ON a.lang = b.lang AND a.source = b.source
+           |  AND a.doc_id < b.doc_id
+           |WHERE CASE WHEN len(list_distinct(a.sh || b.sh)) = 0 THEN 0.0
+           |    ELSE CAST(len(list_filter(a.sh, x -> list_contains(b.sh, x))) AS DOUBLE)
+           |       / len(list_distinct(a.sh || b.sh)) END >= 0.2
+           |ORDER BY id_a, id_b""".stripMargin
+      }),
 
-    "q_set_sim_join" -> ((s, dir) => {
+    Gate("q_set_sim_join", (s, dir) => {
       // EXACT Jaccard-threshold self-join — no LSH recall, no caller
       // blocking: Chaudhuri prefix filtering under the global rare-first
       // token order provably captures every pair with J ≥ 0.8 (the same
@@ -896,9 +1866,51 @@ object DocQueries {
         graft.functions.TextFunctions.shingles(col("text"), 3).as("sh"))
       graft.operators.SetSimJoin.jaccardSelfJoin(sets, "doc_id", "sh", 0.8)
         .orderBy(col("id_a"), col("id_b"))
-    }),
+    },
+      // the same prefix-filter construction, independently in SQL; pure
+      // integer prefix length and e4 jaccard on both sides
+      """WITH d0 AS (SELECT doc_id, text FROM documents
+        |  UNION ALL
+        |  SELECT doc_id + 100000, substr(text, strpos(text, ' ') + 1)
+        |  FROM documents),
+        |dw AS (SELECT doc_id, string_split_regex(trim(lower(text)), '\s+')
+        |    AS ws FROM d0),
+        |d AS (SELECT doc_id,
+        |    list_distinct(list_transform(range(1, greatest(len(ws) - 1, 1)),
+        |      i -> concat_ws(' ', ws[i], ws[i+1], ws[i+2]))) AS sh FROM dw),
+        |e0 AS (SELECT doc_id, unnest(sh) AS g FROM d),
+        |dict AS (SELECT g, row_number() OVER (ORDER BY g) AS sid
+        |  FROM (SELECT DISTINCT g FROM e0)),
+        |e AS MATERIALIZED (SELECT doc_id, dict.sid FROM e0
+        |  JOIN dict USING (g)),
+        |gf AS (SELECT sid, count(*) AS f FROM e GROUP BY sid),
+        |sz AS (SELECT doc_id, count(*) AS n FROM e GROUP BY doc_id),
+        |rk AS (SELECT e.doc_id, e.sid,
+        |    ROW_NUMBER() OVER (PARTITION BY e.doc_id
+        |      ORDER BY gf.f ASC, e.sid ASC) AS r
+        |  FROM e JOIN gf USING (sid)),
+        |pf AS (SELECT rk.doc_id, rk.sid, rk.r, sz.n
+        |  FROM rk JOIN sz USING (doc_id)
+        |  WHERE r <= n - (n * 8000 + 9999) // 10000 + 1),
+        |cand AS (SELECT DISTINCT a.doc_id AS u, b.doc_id AS v
+        |  FROM pf a JOIN pf b ON a.sid = b.sid AND a.doc_id < b.doc_id
+        |  AND least(a.n, b.n) * 10000 >= greatest(a.n, b.n) * 8000
+        |  AND least(a.n - a.r, b.n - b.r) + 1
+        |      >= (8000 * (a.n + b.n) + 17999) // 18000),
+        |iv AS (SELECT c.u, c.v, count(*) AS it
+        |  FROM cand c JOIN e a ON a.doc_id = c.u
+        |    JOIN e b ON b.doc_id = c.v AND b.sid = a.sid
+        |  GROUP BY c.u, c.v),
+        |p AS (SELECT iv.u, iv.v, iv.it, sa.n AS na, sb.n AS nb
+        |  FROM iv JOIN sz sa ON sa.doc_id = iv.u
+        |    JOIN sz sb ON sb.doc_id = iv.v)
+        |SELECT u AS id_a, v AS id_b,
+        |  CAST(FLOOR(it * 10000.0 / (na + nb - it)) AS BIGINT)
+        |    AS jaccard_e4
+        |FROM p WHERE FLOOR(it * 10000.0 / (na + nb - it)) >= 8000
+        |ORDER BY id_a, id_b""".stripMargin),
 
-    "q_encoding_screen" -> ((s, dir) => {
+    Gate("q_encoding_screen", (s, dir) => {
       // the 64-bit token-encoding wager made RUNNABLE (SetSimJoin object
       // doc): one vocabulary-sized aggregate asserts xxhash64 is
       // injective on the corpus's realized 3-shingle vocabulary — the
@@ -912,9 +1924,21 @@ object DocQueries {
         .select(TF.shingles(col("text"), 3).as("sh"))
       val vocab = graft.operators.SetSimJoin.assertInjective(sets, "sh")
       Seq((vocab, true)).toDF("vocab", "injective")
-    }),
+    },
+      // distinct-shingle vocabulary from the same normalization chain the
+      // set-sim twins use; injective is the engine-verified invariant
+      // (a collision throws engine-side, so TRUE here pins the pass)
+      """WITH dw AS (SELECT doc_id,
+        |    string_split_regex(trim(lower(text)), '\s+') AS ws
+        |  FROM documents),
+        |d AS (SELECT doc_id,
+        |    list_distinct(list_transform(range(1, greatest(len(ws) - 1, 1)),
+        |      i -> concat_ws(' ', ws[i], ws[i+1], ws[i+2]))) AS sh FROM dw),
+        |e0 AS (SELECT unnest(sh) AS g FROM d)
+        |SELECT count(DISTINCT g) AS vocab, TRUE AS injective
+        |FROM e0""".stripMargin),
 
-    "q_set_sim_rs" -> ((s, dir) => {
+    Gate("q_set_sim_rs", (s, dir) => {
       // direct gate for the TWO-RELATION candidate form (batch vs index),
       // previously proven only through its consumers: the prefix filter
       // with length/positional pruning must yield a candidate superset
@@ -957,21 +1981,70 @@ object DocQueries {
         .select(col("_nid").as("id_n"), col("_oid").as("id_o"),
           col("jaccard_r4"))
         .orderBy(col("id_n"), col("id_o"))
+    }, {
+      // brute-force new x old replay: every pair whose round-half-up
+      // jaccard reaches 0.8 must come back from the engine's pruned
+      // prefix join — a shaved prefix (float sizing, missing one-ulp
+      // slack) or an unsafe length/positional filter drops a boundary
+      // pair and breaks the hash
+      val sh =
+        """list_distinct(list_transform(
+          |  range(1, greatest(len(string_split_regex(trim(lower(text)), '\s+')) - 1, 1)),
+          |  i -> concat_ws(' ',
+          |    string_split_regex(trim(lower(text)), '\s+')[i],
+          |    string_split_regex(trim(lower(text)), '\s+')[i+1],
+          |    string_split_regex(trim(lower(text)), '\s+')[i+2])))"""
+          .stripMargin.replace("\n", " ")
+      s"""WITH old AS (SELECT doc_id, $sh AS sh FROM documents),
+         |n0 AS (SELECT doc_id + 500000 AS doc_id,
+         |    substr(text, 1, CAST((length(text) * (75 + (doc_id % 11) * 2))
+         |      // 100 AS INT)) AS text
+         |  FROM documents),
+         |newd AS (SELECT doc_id, $sh AS sh FROM n0)
+         |SELECT n.doc_id AS id_n, o.doc_id AS id_o,
+         |  ROUND(CASE WHEN len(list_distinct(n.sh || o.sh)) = 0 THEN 0.0
+         |    ELSE CAST(len(list_filter(n.sh, x -> list_contains(o.sh, x)))
+         |      AS DOUBLE) / len(list_distinct(n.sh || o.sh)) END, 4)
+         |    AS jaccard_r4
+         |FROM newd n JOIN old o
+         |ON ROUND(CASE WHEN len(list_distinct(n.sh || o.sh)) = 0 THEN 0.0
+         |    ELSE CAST(len(list_filter(n.sh, x -> list_contains(o.sh, x)))
+         |      AS DOUBLE) / len(list_distinct(n.sh || o.sh)) END, 4) >= 0.8
+         |ORDER BY id_n, id_o""".stripMargin
     }),
 
-    "q_doc_containment" -> ((s, dir) =>
+    Gate("q_doc_containment", (s, dir) =>
       // asymmetric near-dup: a short doc inside a long one (excerpts) —
       // invisible to jaccard, containment ≈ 1
       NgramJaccard.containmentPairsWithinBlocks(
         t(s, dir, "documents"), "doc_id", "text",
         blockKey = struct(col("lang"), col("source")),
         k = 3, threshold = 0.5)
-        .orderBy(col("id_a"), col("id_b"))),
+        .orderBy(col("id_a"), col("id_b")),
+      {
+        val sh =
+          """list_distinct(list_transform(
+            |  range(1, greatest(len(string_split_regex(trim(lower(text)), '\s+')) - 1, 1)),
+            |  i -> concat_ws(' ',
+            |    string_split_regex(trim(lower(text)), '\s+')[i],
+            |    string_split_regex(trim(lower(text)), '\s+')[i+1],
+            |    string_split_regex(trim(lower(text)), '\s+')[i+2])))""".stripMargin.replace("\n", " ")
+        s"""WITH d AS (SELECT doc_id, lang, source, $sh AS sh FROM documents)
+           |SELECT id_a, id_b, containment FROM (
+           |  SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+           |    ROUND(CASE WHEN least(len(a.sh), len(b.sh)) = 0 THEN 0.0
+           |      ELSE CAST(len(list_filter(a.sh, x -> list_contains(b.sh, x))) AS DOUBLE)
+           |         / least(len(a.sh), len(b.sh)) END, 4) AS containment
+           |  FROM d a JOIN d b ON a.lang = b.lang AND a.source = b.source
+           |    AND a.doc_id < b.doc_id)
+           |WHERE containment >= 0.5
+           |ORDER BY id_a, id_b""".stripMargin
+      }),
 
     // CDC merge-apply: deletes win over updates (disjoint by construction
     // here), inserts arrive under collision-proof negative ids; the oracle
     // rebuilds the final table from the same rules
-    "q_cdc_apply" -> ((s, dir) => {
+    Gate("q_cdc_apply", (s, dir) => {
       val docs = t(s, dir, "documents")
       val updates = docs
         .filter(col("doc_id") % 17 === 0 && col("doc_id") % 13 =!= 0)
@@ -988,9 +2061,19 @@ object DocQueries {
         .select(col("doc_id"), md5(col("text")).as("h"), col("lang"),
           col("source"), col("n_chars"))
         .orderBy(col("doc_id"))
-    }),
+    },
+      """SELECT * FROM (
+        |  SELECT doc_id,
+        |    md5(CASE WHEN doc_id % 17 = 0 AND doc_id % 13 <> 0
+        |        THEN text || ' v2' ELSE text END) AS h,
+        |    lang, source, n_chars
+        |  FROM documents WHERE doc_id % 13 <> 0
+        |  UNION ALL
+        |  SELECT -doc_id - 1, md5(text), lang, source, n_chars
+        |  FROM documents WHERE doc_id % 19 = 0)
+        |ORDER BY doc_id""".stripMargin),
 
-    "q_dedup_incremental" -> ((s, dir) => {
+    Gate("q_dedup_incremental", (s, dir) => {
       // docs < 250 are the ingested history; the rest arrive as a new batch.
       // Survivors: first-in-batch content, never seen in history.
       val docs = t(s, dir, "documents").withColumn("_row_id", col("doc_id"))
@@ -1000,9 +2083,18 @@ object DocQueries {
         matchFields = Seq("text"))
         .select(col("doc_id"), col("source"))
         .orderBy(col("doc_id"))
-    }),
+    },
+      """WITH b AS (SELECT doc_id, source, text FROM documents WHERE doc_id >= 250),
+        |f AS (SELECT doc_id, source, text,
+        |    ROW_NUMBER() OVER (PARTITION BY text ORDER BY doc_id ASC) AS rn
+        |  FROM b)
+        |SELECT doc_id, source FROM f
+        |WHERE rn = 1 AND NOT EXISTS (
+        |  SELECT 1 FROM documents h
+        |  WHERE h.doc_id < 250 AND h.text = f.text)
+        |ORDER BY doc_id""".stripMargin),
 
-    "q_decontaminate" -> ((s, dir) => {
+    Gate("q_decontaminate", (s, dir) => {
       // every 50th doc plays the benchmark; flag corpus docs sharing any
       // word 3-shingle with it
       val docs = t(s, dir, "documents")
@@ -1012,6 +2104,21 @@ object DocQueries {
         "doc_id", "text", k = 3, minOverlap = 1L)
         .select(col("doc_id"), col("n_overlap"), col("contaminated"))
         .orderBy(col("doc_id"))
+    }, {
+      s"""WITH w0 AS (SELECT doc_id,
+         |    string_split_regex(trim(lower(text)), '\\s+') AS ws
+         |  FROM documents),
+         |ev AS (SELECT DISTINCT unnest($shw) AS sh FROM w0
+         |  WHERE doc_id % 50 = 0),
+         |cs AS (SELECT doc_id, unnest($shw) AS sh FROM w0
+         |  WHERE doc_id % 50 <> 0),
+         |hits AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_overlap
+         |  FROM cs JOIN ev USING (sh) GROUP BY doc_id)
+         |SELECT d.doc_id, COALESCE(h.n_overlap, 0) AS n_overlap,
+         |  COALESCE(h.n_overlap, 0) >= 1 AS contaminated
+         |FROM documents d LEFT JOIN hits h ON d.doc_id = h.doc_id
+         |WHERE d.doc_id % 50 <> 0
+         |ORDER BY d.doc_id""".stripMargin
     }),
 
     // MinHash-LSH clustering, gated on an engineered-recall invariant the
@@ -1020,7 +2127,7 @@ object DocQueries {
     // variant's cluster for ≥95% of pairs. The oracle knows n_pairs and the
     // expected invariant; a clustering regression (bucketing, banding,
     // propagation) breaks the hash match.
-    "q_doc_minhash_clusters" -> ((s, dir) => {
+    Gate("q_doc_minhash_clusters", (s, dir) => {
       val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
       val variants = docs.select((col("doc_id") + 100000L).as("doc_id"),
         expr("substring(text, instr(text, ' ') + 1)").as("text"))
@@ -1041,9 +2148,13 @@ object DocQueries {
         .select(col("n_pairs"),
           (col("n_together").cast(DoubleType) >=
             col("n_pairs").cast(DoubleType) * 0.95).as("recall_ge_95pct"))
-    }),
+    },
+      // engineered-recall invariant: the oracle knows the pair count and
+      // expects ≥95% of (doc, near-identical-variant) pairs co-clustered
+      """SELECT CAST(COUNT(*) AS BIGINT) AS n_pairs, TRUE AS recall_ge_95pct
+        |FROM documents""".stripMargin),
 
-    "q_doc_fuzzy_keep" -> ((s, dir) => {
+    Gate("q_doc_fuzzy_keep", (s, dir) => {
       // flagship fuzzy dedup, EXACT end-to-end oracle: LSH candidates →
       // exact Jaccard ≥ 0.8 verify → connected components → canonical
       // survivor. The oracle brute-forces ALL pairs (feasible at gate
@@ -1057,2358 +2168,7 @@ object DocQueries {
       MinHashDedup.fuzzyDedup(docs.unionByName(variants), "doc_id", "text",
         threshold = 0.8)
         .orderBy(col("doc_id"))
-    }),
-
-    "q_doc_incremental_neardup" -> ((s, dir) => {
-      // ingest-time fuzzy screen: index the existing corpus once, then ask
-      // for each new doc whether it near-dups ANYTHING indexed. New batch =
-      // drop-first-word variants (must match their origin) + letter-rotated
-      // fresh docs (must not match). Oracle brute-forces new×old Jaccard.
-      val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
-      val index = MinHashDedup.buildNearDupIndex(docs, "doc_id", "text")
-      val variants = docs.select((col("doc_id") + 100000L).as("doc_id"),
-        expr("substring(text, instr(text, ' ') + 1)").as("text"))
-      val fresh = docs.select((col("doc_id") + 200000L).as("doc_id"),
-        translate(col("text"), "abcdefghij", "bcdefghija").as("text"))
-      MinHashDedup.incrementalNearDup(
-        variants.unionByName(fresh), "doc_id", "text", index,
-        threshold = 0.8)
-        .orderBy(col("doc_id"))
-    }),
-
-    "q_doc_simhash" -> ((s, dir) => {
-      // same invariant shape as q_doc_fingerprint: the projection kernel
-      // must agree row-for-row with the explode + 64-vote aggregate form
-      val docs = t(s, dir, "documents")
-      val kernel = SimHash.simhashTable(docs, "doc_id", "text", k = 3)
-      val agg = SimHash.simhashTableAggForm(docs, "doc_id", "text", k = 3)
-        .withColumnRenamed("simhash", "simhash_agg")
-      kernel.join(agg, Seq("doc_id"))
-        .select(col("doc_id"),
-          (col("simhash") <=> col("simhash_agg")).as("kernel_eq_spec"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "q_doc_simhash_pairs" -> ((s, dir) => {
-      // hamming ≤ 3 near-dup pairs via pigeonhole block join. Signatures are
-      // xxhash64-based, so the oracle consumes the materialized signature
-      // table and BRUTE-FORCES all pairs with bit_count(xor(...)) — a hash
-      // match proves the blocked join found exactly the brute-force set.
-      Aux.write(
-        SimHash.simhashTable(t(s, dir, "documents"), "doc_id", "text", k = 3),
-        s"/tmp/graft_oracle_aux/${Sql.sfTag(dir)}/simhash_sigs")
-      SimHash.simhashPairs(t(s, dir, "documents"), "doc_id", "text",
-        k = 3, maxDist = 3)
-        .orderBy(col("id_a"), col("id_b"))
-    }),
-
-    // ---- similarity search --------------------------------------------------
-
-    "q_embed_cosine" -> ((s, dir) => {
-      // all cosine similarities vs a fixed query vector (vec_id 0), exact
-      // decimal dot products so both engines agree bit-for-bit
-      val emb = t(s, dir, "embeddings")
-      val e = emb.select(col("vec_id"),
-        posexplode(col("embedding")).as(Seq("i", "ev")))
-        .withColumn("ev", col("ev").cast(DoubleType))
-      val q = emb.filter(col("vec_id") === 0)
-        .select(posexplode(col("embedding")).as(Seq("i", "qv")))
-        .withColumn("qv", col("qv").cast(DoubleType))
-      val dots = e.join(broadcast(q), Seq("i"))
-        .groupBy(col("vec_id"))
-        .agg(
-          graft.functions.Dec128.sumExact(col("ev") * col("qv"), 18)
-            .cast(DoubleType).as("dot"),
-          graft.functions.Dec128.sumExact(col("ev") * col("ev"), 18)
-            .cast(DoubleType).as("nsq"))
-      val qn = q.agg(
-        graft.functions.Dec128.sumExact(col("qv") * col("qv"), 18)
-          .cast(DoubleType).as("qsq"))
-      dots.crossJoin(broadcast(qn))
-        .select(col("vec_id"),
-          round(col("dot") / (sqrt(col("nsq")) * sqrt(col("qsq"))), 4)
-            .as("similarity"))
-        .filter(col("similarity") >= 0.2)
-        .orderBy(col("vec_id"))
-    }),
-
-    // brute-force top-k + LSH-bucketed ANN: rows-only (tie-break order under
-    // float rounding differs; property-tested instead)
-    "q_embed_topk" -> ((s, dir) => {
-      // brute-force top-k on the fast_cosine kernel; ordering on the
-      // FLOOR-rounded similarity (then vec_id) so both engines sort and cut
-      // the k boundary identically → full oracle instead of rows-only
-      val emb = t(s, dir, "embeddings")
-      val qvec = emb.filter(col("vec_id") === 1)
-        .select(col("embedding")).head().getSeq[Float](0)
-      graft.functions.CosineSim.register(s)
-      val q = array(qvec.map(v => lit(v)): _*)
-        .cast(ArrayType(FloatType))
-      emb.select(col("vec_id"),
-        Semantics.safeRound(
-          graft.functions.CosineSim.fast_cosine(col("embedding"), q), 4)
-          .as("similarity"))
-        .orderBy(col("similarity").desc, col("vec_id").asc)
-        .limit(20)
-    }),
-
-    "q_embed_q8" -> ((s, dir) => {
-      // int8-quantized top-20 (4× less scan IO at corpus scale), gated on
-      // recall vs the oracle's own exact top-20 — same aux pattern as ANN
-      val emb = t(s, dir, "embeddings")
-      val qvec = emb.filter(col("vec_id") === 1)
-        .select(col("embedding")).head().getSeq[Float](0)
-      val res = Similarity
-        .topKQuantized(emb, "embedding", "vec_id", qvec, k = 20)
-        .select(col("vec_id")).persist() // aux + recall join
-      Aux.write(res, s"/tmp/graft_oracle_aux/${Sql.sfTag(dir)}/q8_results")
-      graft.functions.CosineSim.register(s)
-      val q = array(qvec.map(v => lit(v)): _*).cast(ArrayType(FloatType))
-      val exact = emb.select(col("vec_id"),
-          Semantics.safeRound(
-            graft.functions.CosineSim.fast_cosine(col("embedding"), q), 4)
-            .as("sim"))
-        .orderBy(col("sim").desc, col("vec_id").asc).limit(20)
-        .select(col("vec_id"), lit(1).as("_hit"))
-      res.join(exact, Seq("vec_id"), "left")
-        .agg(count(lit(1)).as("n_results"),
-          sum(coalesce(col("_hit"), lit(0))).cast(LongType).as("n_hits"))
-    }),
-
-    "q_embed_ivf" -> ((s, dir) => {
-      // IVF scale path: k-means lists + bounded-probe search. Centroids are
-      // library-specific, so the gate follows the ANN recall pattern: the
-      // oracle reads the materialized result ids and counts overlap with
-      // its OWN exact top-15 — probe behavior and result counts verified.
-      val emb = t(s, dir, "embeddings")
-      val qvec = emb.filter(col("vec_id") === 2)
-        .select(col("embedding")).head().getSeq[Float](0)
-      val index = Similarity.ivfIndex(emb, "embedding", "vec_id", nLists = 8)
-      val res = Similarity
-        .ivfSearch(index, "embedding", "vec_id", qvec, k = 15, nProbe = 4)
-        .select(col("vec_id")).persist() // aux + recall join share the probe
-      Aux.write(res, s"/tmp/graft_oracle_aux/${Sql.sfTag(dir)}/ivf_results")
-      graft.functions.CosineSim.register(s)
-      val q = array(qvec.map(v => lit(v)): _*).cast(ArrayType(FloatType))
-      val exact = emb.select(col("vec_id"),
-          Semantics.safeRound(
-            graft.functions.CosineSim.fast_cosine(col("embedding"), q), 4)
-            .as("sim"))
-        .orderBy(col("sim").desc, col("vec_id").asc).limit(15)
-        .select(col("vec_id"), lit(1).as("_hit"))
-      res.join(exact, Seq("vec_id"), "left")
-        .agg(count(lit(1)).as("n_results"),
-          sum(coalesce(col("_hit"), lit(0))).cast(LongType).as("n_hits"))
-    }),
-
-    "q_rank_eval" -> ((s, dir) => {
-      // retrieval-quality report card: recall@10 / MRR / nDCG of a
-      // deliberately under-probed IVF search (nProbe=2) vs exact top-10.
-      // Approx ranking ships as aux; the oracle re-derives its OWN exact
-      // ground truth and replays every BIGINT metric — the nDCG log2
-      // discount is quantized once per rank, then integer arithmetic only
-      val emb = t(s, dir, "embeddings")
-      val qvec = emb.filter(col("vec_id") === 2)
-        .select(col("embedding")).head().getSeq[Float](0)
-      val index = Similarity.ivfIndex(emb, "embedding", "vec_id", nLists = 8)
-      val rankW = org.apache.spark.sql.expressions.Window
-        .orderBy(col("similarity").desc, col("vec_id").asc)
-      val approx = Similarity
-        .ivfSearch(index, "embedding", "vec_id", qvec, k = 10, nProbe = 2)
-        // bounded window: the search already limited to k rows
-        .withColumn("rank", row_number().over(rankW))
-        .select(lit(2L).as("qid"), col("vec_id"), col("rank"))
-        .persist()
-      Aux.write(approx,
-        s"/tmp/graft_oracle_aux/${Sql.sfTag(dir)}/rank_eval_approx")
-      graft.functions.CosineSim.register(s)
-      val q = array(qvec.map(v => lit(v)): _*).cast(ArrayType(FloatType))
-      val simW = org.apache.spark.sql.expressions.Window
-        .orderBy(col("sim").desc, col("vec_id").asc)
-      val truth = emb.select(col("vec_id"),
-          Semantics.safeRound(
-            graft.functions.CosineSim.fast_cosine(col("embedding"), q), 4)
-            .as("sim"))
-        .orderBy(col("sim").desc, col("vec_id").asc).limit(10)
-        .withColumn("rank", row_number().over(simW))
-        .select(lit(2L).as("qid"), col("vec_id"), col("rank"))
-      graft.functions.Ranking.rankingMetrics(
-        approx, truth, "qid", "vec_id", "rank")
-    }),
-
-    "q_embed_ann" -> ((s, dir) => {
-      // LSH ANN join, gated on RECALL vs the exact top-k: the oracle reads
-      // the materialized ANN pairs, computes its own exact top-10 per query
-      // (same FLOOR-rounded cosine + vec_id tie-break the q_embed_topk gate
-      // proves cross-engine), and counts hits — so candidate counts AND the
-      // overlap with ground truth must both match.
-      val emb = t(s, dir, "embeddings")
-      val ann = Similarity.annJoin(
-        corpus = emb, queries = emb.filter(col("vec_id") < 5).limit(5),
-        vecCol = "embedding", idCol = "vec_id", dim = 64, nPlanes = 6, k = 10)
-        .select(col("query_id"), col("vec_id")).persist() // aux + recall join
-      Aux.write(ann, s"/tmp/graft_oracle_aux/${Sql.sfTag(dir)}/ann_pairs")
-      graft.functions.CosineSim.register(s)
-      // limit(5) = identity on the ≤5-row filter, but makes the broadcast
-      // side's bound statically provable (plan-hygiene BNLJ rule)
-      val queries = emb.filter(col("vec_id") < 5).limit(5)
-        .select(col("vec_id").as("query_id"), col("embedding").as("_qemb"))
-      val scored = emb.crossJoin(broadcast(queries))
-        .select(col("query_id"), col("vec_id"),
-          Semantics.safeRound(
-            graft.functions.CosineSim.fast_cosine(col("embedding"), col("_qemb")), 4)
-            .as("sim"))
-      val exact = scored
-        .withColumn("rk", row_number().over(
-          org.apache.spark.sql.expressions.Window.partitionBy(col("query_id"))
-            .orderBy(col("sim").desc, col("vec_id").asc)))
-        .filter(col("rk") <= 10)
-        .select(col("query_id"), col("vec_id"), lit(1).as("_hit"))
-      ann.join(exact, Seq("query_id", "vec_id"), "left")
-        .groupBy(col("query_id"))
-        .agg(count(lit(1)).as("n_ann"),
-          sum(coalesce(col("_hit"), lit(0))).cast(LongType).as("n_hits"))
-        .orderBy(col("query_id"))
-    }),
-
-    // ---- anomaly detection (§2.7) -------------------------------------------
-
-    "q_anomaly_zscore" -> ((s, dir) =>
-      AnomalyDetector.zscore(t(s, dir, "events"), Seq("value"), threshold = 2.0)
-        .filter(col("_meta_is_anomaly"))
-        .select(col("event_id"), col("value"), col("_meta_anomaly_method").as("method"))
-        .orderBy(col("event_id"))),
-
-    "q_anomaly_robust" -> ((s, dir) =>
-      AnomalyDetector.robustZscore(t(s, dir, "events"), Seq("value"),
-        threshold = 3.0)
-        .filter(col("_meta_is_anomaly"))
-        .select(col("event_id"), col("value"),
-          col("_meta_anomaly_method").as("method"))
-        .orderBy(col("event_id"))),
-
-    "q_anomaly_iqr" -> ((s, dir) =>
-      AnomalyDetector.iqr(t(s, dir, "events"), Seq("value"), factor = 1.5)
-        .filter(col("_meta_is_anomaly"))
-        .select(col("event_id"), col("value"), col("_meta_anomaly_method").as("method"))
-        .orderBy(col("event_id"))),
-
-    "q_anomaly_combined" -> ((s, dir) => {
-      // full reference vote: ≥2 of {zscore, iqr, iforest}. The seeded
-      // iForest flag is engine-specific, so the vote's third input is
-      // materialized for the oracle (which re-derives z/iqr bounds and the
-      // vote logic independently and consumes the deterministic flag).
-      // retainScored: the internal cutoff job, aux write and flagged
-      // output all share ONE scoring pass; Verify's clearCache releases it
-      val out = AnomalyDetector.combined(t(s, dir, "events"), Seq("value"),
-        zThreshold = 2.0, iqrFactor = 1.5, iforestOrderCol = Some("event_id"),
-        retainScored = true)
-        .persist() // aux write + flagged output share the final scan
-      Aux.write(
-        out.select(col("event_id"), col("_meta_iforest_flag").as("if_flag")),
-        s"/tmp/graft_oracle_aux/${Sql.sfTag(dir)}/iforest_flags")
-      out.filter(col("_meta_is_anomaly"))
-        .select(col("event_id"), col("value"))
-        .orderBy(col("event_id"))
-    }),
-
-    // ---- quality scorer (§2.3) ----------------------------------------------
-
-    "q_quality_scorer" -> ((s, dir) => {
-      // derive a mixed-quality frame: email validity + positive-amount +
-      // id-nonnegative rules all get exercised
-      val df = t(s, dir, "customer").select(
-        col("c_custkey").as("customer_id"),
-        when(col("c_custkey") % 11 === 0, regexp_replace(col("c_name"), "#", ""))
-          .otherwise(concat(col("c_name"), lit("@example.com"))).as("email"),
-        col("c_acctbal").as("amount"),
-        col("c_mktsegment").as("segment"))
-      QualityScorer(fields = Seq("customer_id", "email", "amount", "segment"))(df)
-        .select(col("customer_id"), col("_meta_completeness").as("completeness"),
-          col("_meta_validity").as("validity"),
-          col("_meta_consistency").as("consistency"),
-          col("_meta_quality_score").as("quality_score"),
-          col("_meta_is_anomaly").as("is_anomaly"))
-        .orderBy(col("customer_id"))
-    }),
-
-    // ---- schema inference (§1.3) --------------------------------------------
-
-    "q_schema_infer" -> ((s, dir) => {
-      val df = t(s, dir, "events").select(
-        col("event_id").cast(StringType).as("id_str"),
-        col("event_type"),
-        col("value").cast(StringType).as("value_str"),
-        date_format(col("ts"), "yyyy-MM-dd").as("day_str"))
-      // gate representation: floats → FLOOR-scaled integers, nullables →
-      // sentinel strings, so the cross-engine compare never touches a
-      // double-canonicalization or NULL-representation surface
-      def x10k(c: Column): Column =
-        floor(c * lit(10000.0) + lit(0.5)).cast(LongType)
-      SchemaInferrer.profile(df, Seq("id_str", "event_type", "value_str", "day_str"))
-        .select(col("field"), col("total_count"), col("null_count"),
-          col("inferred_type"),
-          x10k(col("confidence")).as("confidence_x10k"),
-          coalesce(x10k(col("min_value")).cast(StringType), lit("")).as("min_x10k"),
-          coalesce(x10k(col("max_value")).cast(StringType), lit("")).as("max_x10k"),
-          col("distinct_count"), col("is_enum_candidate"),
-          coalesce(col("detected_pattern"), lit("none")).as("detected_pattern"))
-        .orderBy(col("field"))
-    }),
-
-    // ---- events: json + time-series (§2.9) ----------------------------------
-
-    "q_events_hourly" -> ((s, dir) =>
-      t(s, dir, "events")
-        .groupBy(date_format(date_trunc("hour", col("ts")), "yyyy-MM-dd HH:mm:ss")
-          .as("hour"), col("event_type"))
-        .agg(count(lit(1)).as("n"), Semantics.exactSum(col("value")).as("total_value"))
-        .orderBy(col("hour"), col("event_type"))),
-
-    "q_events_json" -> ((s, dir) =>
-      t(s, dir, "events")
-        .withColumn("k", regexp_extract(col("props"), "\"k\": (\\d+)", 1)
-          .cast(LongType))
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"), Semantics.exactSum(col("k")).as("k_sum"))
-        .orderBy(col("event_type"))),
-
-    // ---- source/sink roundtrips (§2.1/§2.2) ---------------------------------
-
-    "q_csv_roundtrip" -> ((s, dir) => {
-      val out = s"/tmp/graft_roundtrip/csv_region"
-      graft.io.Sinks.csv(t(s, dir, "region"), out, header = true)
-      graft.io.Sources.csv(s, out, header = true,
-        schema = Some(t(s, dir, "region").schema))
-        .orderBy(col("r_regionkey"))
-    }),
-
-    "q_jsonl_roundtrip" -> ((s, dir) => {
-      val out = s"/tmp/graft_roundtrip/jsonl_nation"
-      graft.io.Sinks.jsonl(t(s, dir, "nation"), out)
-      graft.io.Sources.jsonl(s, out, schema = Some(t(s, dir, "nation").schema))
-        .orderBy(col("n_nationkey"))
-    }),
-
-    "q_xml_roundtrip" -> ((s, dir) => {
-      // Spark 4 native XML source/sink roundtrip (the enterprise-feed
-      // format the reference's JSON/CSV loaders don't cover); schema
-      // supplied on read — XML carries no types
-      val out = s"/tmp/graft_roundtrip/xml_nation"
-      graft.io.Sinks.xml(t(s, dir, "nation"), out, rowTag = "nation")
-      graft.io.Sources.xml(s, out, rowTag = "nation",
-          schema = Some(t(s, dir, "nation").schema))
-        .orderBy(col("n_nationkey"))
-    }),
-
-    "q_ingest_quarantine" -> ((s, dir) => {
-      // dirty-feed ingestion: a staged JSONL where every doc_id % 7 == 0
-      // line is truncated mid-object. PERMISSIVE parse keeps broken lines
-      // verbatim in the quarantine column instead of dropping them or
-      // failing the job; the gate proves exactly the planted lines (and
-      // no others) land in quarantine, with their ids recovered from the
-      // preserved raw text. Oracle replays the plant arithmetically
-      // session-cached stage ([[StageOnce]]), unconstrained write — the
-      // batch JSONL read downstream is file-count-agnostic
-      val staged = graft.entry.StageOnce.dir(s, dir, "dirty_docs") { p =>
-        val good = t(s, dir, "documents")
-          .select(col("doc_id"), col("lang"), col("source"))
-        good.select(
-          when(col("doc_id") % 7 === 0,
-            // cut the closing brace and the source value off — unparseable
-            expr("substring(to_json(struct(doc_id, lang, source)), 1, " +
-              "length(to_json(struct(doc_id, lang, source))) - 6)"))
-            .otherwise(to_json(struct(col("doc_id"), col("lang"),
-              col("source")))).as("value"))
-          .write.mode("overwrite").text(p)
-      }
-      val parsed = graft.io.Sources.jsonlQuarantine(s, staged,
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("doc_id",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("lang",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("source",
-            org.apache.spark.sql.types.StringType))))
-      parsed.select(
-        // quarantined ids recovered from the preserved raw line — parsed
-        // data columns for bad rows are parser-version-dependent (partial
-        // results), the verbatim text is not
-        coalesce(
-          regexp_extract(col("_quarantine"), "\"doc_id\":(\\d+)", 1)
-            .cast(org.apache.spark.sql.types.LongType),
-          col("doc_id")).as("doc_id"),
-        when(col("_quarantine").isNotNull, lit("quarantined"))
-          .otherwise(lit("ok")).as("status"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "q_ingest_quarantine_csv" -> ((s, dir) => {
-      // CSV twin of q_ingest_quarantine: a staged headerless CSV where
-      // every doc_id % 7 == 0 row carries a non-numeric id ("id_NNN") so
-      // the LongType parse fails; PERMISSIVE keeps the raw line in the
-      // quarantine column and the gate proves exactly the planted rows
-      // (ids recovered from the preserved text) land there. Oracle
-      // replays the plant arithmetically, same as the JSONL sibling
-      // session-cached stage ([[StageOnce]]), unconstrained write — same
-      // rationale as the JSONL sibling
-      val staged = graft.entry.StageOnce.dir(s, dir, "dirty_csv") { p =>
-        t(s, dir, "documents")
-          .select(concat_ws(",",
-            when(col("doc_id") % 7 === 0,
-              concat(lit("id_"), col("doc_id").cast(StringType)))
-              .otherwise(col("doc_id").cast(StringType)),
-            col("lang"), col("source")).as("value"))
-          .write.mode("overwrite").text(p)
-      }
-      val parsed = graft.io.Sources.csvQuarantine(s, staged,
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("doc_id",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("lang",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("source",
-            org.apache.spark.sql.types.StringType))),
-        header = false)
-      parsed.select(
-        coalesce(
-          regexp_extract(col("_quarantine"), "^id_(\\d+),", 1)
-            .cast(org.apache.spark.sql.types.LongType),
-          col("doc_id")).as("doc_id"),
-        when(col("_quarantine").isNotNull, lit("quarantined"))
-          .otherwise(lit("ok")).as("status"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "q_json_array_roundtrip" -> ((s, dir) => {
-      // single-file JSON array export (json_loader.py:181-248) + array read;
-      // cast back through the original schema for dtype parity
-      val out = s"/tmp/graft_roundtrip/json_region/region.json"
-      val src = t(s, dir, "region")
-      graft.io.Sinks.jsonArray(src, out, pretty = true)
-      val readBack = graft.io.Sources.jsonArray(s, out)
-      src.schema.fields.foldLeft(readBack) { (df, f) =>
-        df.withColumn(f.name, col(f.name).cast(f.dataType))
-      }.select(src.columns.map(col): _*).orderBy(col("r_regionkey"))
-    }),
-
-    "q_orc_roundtrip" -> ((s, dir) => {
-      // the other columnar format (format_conversion.py pairs them)
-      val out = s"/tmp/graft_roundtrip/orc_supplier"
-      graft.io.Sinks.orc(t(s, dir, "supplier"), out)
-      graft.io.Sources.orc(s, out).orderBy(col("s_suppkey"))
-    }),
-
-    // ---- span-level dedup (beyond-ref: training-data curation) -------------
-
-    "q_doc_passage_dedup" -> ((s, dir) =>
-      // cross-document repeated 20-word passages removed, survivors
-      // re-stitched; the md5 passage keys make every step oracle-replayable
-      graft.functions.TextFunctions.passageDedup(
-        t(s, dir, "documents"), "doc_id", "text", passageWords = 20)
-        .orderBy(col("doc_id"))),
-
-    "q_quality_calibrate" -> ((s, dir) => {
-      // budget→threshold calibration: exact 70th-percentile cutoff keeps
-      // the best ≈30%; gate checks the per-source kept counts
-      // the gate serves two actions (percentile job, then the filtered
-      // count) — persist the scored frame so the quality kernel runs ONCE
-      // over the corpus, not once per action (the suite-runner pattern:
-      // Bench/Verify clearCache() after each gate releases it)
-      val scored = graft.core.Rebalance
-        .computeDense(t(s, dir, "documents"))
-        .select(col("doc_id"), col("source"),
-          TF.qualityScore(col("text")).as("q"))
-        .persist()
-      val cutoff = QualityScorer.calibrateCutoff(scored, "q", 0.3)
-      scored.filter(col("q") >= cutoff)
-        .groupBy(col("source")).agg(count(lit(1)).as("n_kept"))
-        .orderBy(col("source"))
-    }),
-
-    "q_bpe_train" -> ((s, dir) => {
-      // distributed BPE training: 6 merge rounds over the word-type table;
-      // every round's full pair-count frame is the aux, so the oracle
-      // re-derives each argmax under the same (count desc, pair asc) total
-      // order — the selection logic is what the gate proves
-      import s.implicits._
-      val merges = graft.functions.Bpe.train(
-        t(s, dir, "documents"), "text", numMerges = 6,
-        auxDir = if (Aux.enabled)
-          Some(s"/tmp/graft_oracle_aux/${Sql.sfTag(dir)}/bpe_pairs")
-        else None)
-      merges.map(m => (m.round, m.left, m.right, m.freq))
-        .toDF("round", "merge_left", "merge_right", "freq")
-        .orderBy(col("round"))
-    }),
-
-    "q_bpe_encode" -> ((s, dir) => {
-      // encode the corpus with 6 trained merges; aux carries each doc's
-      // symbol array, and the oracle re-concatenates it — hash-matching
-      // doc_id/n_syms PROVES every encoding reconstructs its normalized
-      // text exactly (a dropped/duplicated/reordered symbol breaks it)
-      val docs = t(s, dir, "documents")
-      val merges = graft.functions.Bpe.train(docs, "text", numMerges = 6)
-      val base = graft.core.Rebalance.computeDense(docs)
-        .select(col("doc_id"), col("text"),
-          graft.functions.Bpe.encode(col("text"), merges).as("syms"))
-      // Verify persists so the aux dump and the n_syms output share one
-      // encode pass; the bench path encodes once with no cache at all
-      val encoded = if (Aux.enabled) base.persist() else base
-      Aux.write(encoded,
-        s"/tmp/graft_oracle_aux/${Sql.sfTag(dir)}/bpe_encoded", single = false)
-      encoded.select(col("doc_id"), size(col("syms")).as("n_syms"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "q_bpe_fertility" -> ((s, dir) => {
-      // tokenizer fertility per language slice: normalized characters per
-      // BPE token — the "is this tokenizer efficient for lang X" report.
-      // Per-doc token counts are single-sourced via aux (the encode kernel
-      // itself is gated by q_bpe_encode/roundtrip); char counts, grouping,
-      // and the scaled ratio are replayed independently as pure BIGINTs
-      val docs = t(s, dir, "documents")
-      val merges = graft.functions.Bpe.train(docs, "text", numMerges = 6)
-      val norm = trim(regexp_replace(lower(col("text")), "\\s+", " "))
-      val enc = graft.core.Rebalance.computeDense(docs)
-        .select(col("doc_id"), col("lang"),
-          length(translate(norm, " ", "")).as("_nc"),
-          size(graft.functions.Bpe.encode(col("text"), merges)).as("_nt"))
-      val encP = if (Aux.enabled) enc.persist() else enc
-      Aux.write(encP.select(col("doc_id"), col("_nt")),
-        s"/tmp/graft_oracle_aux/${Sql.sfTag(dir)}/bpe_tokens")
-      encP.groupBy(col("lang"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("_nc")).as("n_chars_norm"),
-          sum(col("_nt")).as("n_tokens"))
-        .select(col("lang"), col("n_docs"), col("n_chars_norm"),
-          col("n_tokens"),
-          expr("CAST((n_chars_norm * 1000000) DIV n_tokens AS BIGINT)")
-            .as("chars_per_token_e6"))
-        .orderBy(col("lang"))
-    }),
-
-    "q_doc_rarity" -> ((s, dir) =>
-      // unigram rarity + OOV vs the top-20 corpus vocabulary — integer
-      // counts + decimal averaging, so every cell replays exactly
-      TF.rarityScoreTable(t(s, dir, "documents"), "doc_id", "text",
-        vocabK = 20)
-        .orderBy(col("doc_id"))),
-
-    "q_pps_sample" -> ((s, dir) =>
-      // weighted (PPS) sampling by document size: exact integer boundary
-      // crossings on a partitioned prefix sum — every selection decision
-      // replayable bit-for-bit, unlike any RNG- or reservoir-key sampler
-      graft.functions.Sampling.ppsSample(
-        t(s, dir, "documents").select(col("doc_id"), col("n_chars")),
-        "doc_id", "n_chars", n = 50L, seed = 7L)
-        .select(col("doc_id"), col("n_chars"))
-        .orderBy(col("doc_id"))),
-
-    "q_doc_accent_fold" -> ((s, dir) => {
-      // unicode accent folding: derive accented text deterministically
-      // (a→ä, e→é), fold it back with the codegen'd NFD+strip kernel; the
-      // oracle folds the same derivation with utf8proc strip_accents, so a
-      // hash match proves the two unicode implementations agree
-      graft.functions.AccentFold.register(s)
-      val accented = regexp_replace(
-        regexp_replace(col("text"), "a", "ä"), "e", "é")
-      t(s, dir, "documents").select(col("doc_id"),
-          length(accented).as("n_chars_accented"),
-          graft.functions.AccentFold.accent_fold(accented).as("folded"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "q_doc_char_entropy" -> ((s, dir) =>
-      // gibberish detector: character-distribution entropy per doc —
-      // exact char counts, decimal-summed log2 terms (BM25 pattern)
-      TF.charEntropyTable(t(s, dir, "documents"), "doc_id", "text")
-        .orderBy(col("doc_id"))),
-
-    "q_doc_blocklist" -> ((s, dir) =>
-      // badwords screening: exact token match vs a broadcast blocklist;
-      // integer counts, fully replayable
-      TF.blocklistTable(t(s, dir, "documents"), "doc_id", "text",
-        Seq("data", "model", "free", "test"))
-        .orderBy(col("doc_id"))),
-
-    "q_doc_lm_score" -> ((s, dir) => {
-      // CCNet-style bigram-LM quality scoring: train add-one-smoothed LM
-      // on the lang='en' slice, score EVERY doc by avg negative
-      // log-likelihood. Counts are exact integers; ln terms sum through
-      // DECIMAL(38,18) (the proven BM25 pattern) so avg_nll replays
-      val docs = t(s, dir, "documents")
-      val model = graft.operators.NgramLm.train(
-        docs.filter(col("lang") === "en"), "text")
-      graft.operators.NgramLm.score(docs, "doc_id", "text", model)
-        .orderBy(col("doc_id"))
-    }),
-
-    "q_source_overlap" -> ((s, dir) =>
-      // cross-source shingle contamination matrix — the split-leakage
-      // report; every cell exactly replayable (shingle sets are portable)
-      CorpusStats.sourceOverlap(t(s, dir, "documents"), "text", "source", 3)
-        .orderBy(col("g_a"), col("g_b"))),
-
-    "q_ngram_novelty" -> ((s, dir) =>
-      // per-doc freshness vs everything ingested before it: a shingle is
-      // novel in the min-doc_id document containing it; BIGINT e4 ratio
-      CorpusStats.ngramNovelty(t(s, dir, "documents"), "doc_id", "text", 3)
-        .orderBy(col("doc_id"))),
-
-    "q_doc_substr_dup" -> ((s, dir) => {
-      // exact-substring dedup: every 12-word window Buzhash'd; the exploded
-      // (doc, pos, hash) form is the aux, and the oracle independently
-      // replays the shared-window test + per-doc counts from it
-      val docs = t(s, dir, "documents")
-      Aux.write(SubstrDedup.windows(docs, "doc_id", "text", k = 12),
-        s"/tmp/graft_oracle_aux/${Sql.sfTag(dir)}/substr_windows",
-        single = false)
-      SubstrDedup.flags(docs, "doc_id", "text", k = 12)
-        .orderBy(col("doc_id"))
-    }),
-
-    "q_chunk_dedup" -> ((s, dir) => {
-      // content-defined chunking: variants get a novel PREAMBLE, so every
-      // word offset shifts — position-keyed dedup units would all miss,
-      // content-cut chunks re-align and most chunks still match their
-      // origin. Oracle replays boundaries, signatures and the shared test
-      // from the aux window table
-      val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
-      val variants = docs.select((col("doc_id") + 100000L).as("doc_id"),
-        concat(lit("wholly novel preamble words here "), col("text"))
-          .as("text"))
-      val all = docs.unionByName(variants)
-      Aux.write(SubstrDedup.windows(all, "doc_id", "text", k = 8),
-        s"/tmp/graft_oracle_aux/${Sql.sfTag(dir)}/chunk_windows",
-        single = false)
-      SubstrDedup.chunkDupReport(all, "doc_id", "text",
-        k = 8, modulus = 16)
-        .orderBy(col("doc_id"))
-    }),
-
-    "q_doc_longest_span" -> ((s, dir) => {
-      // overlap-severity report: longest corpus-shared run per flagged doc
-      // (upper bound on the single-partner span — see longestSharedSpan);
-      // the oracle replays the gaps-and-islands merge from the aux
-      val docs = t(s, dir, "documents")
-      Aux.write(SubstrDedup.windows(docs, "doc_id", "text", k = 12),
-        s"/tmp/graft_oracle_aux/${Sql.sfTag(dir)}/substr_windows",
-        single = false)
-      SubstrDedup.longestSharedSpan(docs, "doc_id", "text", k = 12)
-        .orderBy(col("doc_id"))
-    }),
-
-    "q_doc_substr_remove" -> ((s, dir) => {
-      // span REMOVAL (the Lee-et-al remedy): the canonical (min-doc) copy
-      // of each shared span survives, every other copy's words cut out;
-      // the oracle rebuilds every document from the same aux windows +
-      // raw text
-      val docs = t(s, dir, "documents")
-      Aux.write(SubstrDedup.windows(docs, "doc_id", "text", k = 12),
-        s"/tmp/graft_oracle_aux/${Sql.sfTag(dir)}/substr_windows",
-        single = false)
-      SubstrDedup.removeSpans(docs, "doc_id", "text", k = 12)
-        .orderBy(col("doc_id"))
-    }),
-
-    // line family: documents.text is single-line, so the gate derives a
-    // deterministic multi-line form (newline every 8 words + appended
-    // nav/caps/short junk lines keyed off doc_id) that BOTH engines spell
-    // identically, then exercises the intra-doc line passes on it
-    "q_line_dedup" -> ((s, dir) => {
-      import graft.functions.{TextFunctions => TF}
-      val d = t(s, dir, "documents").withColumn("_t", multilineText)
-      d.select(col("doc_id"),
-          TF.dedupLines(col("_t")).as("clean_text"),
-          size(split(col("_t"), "\n")).cast(LongType).as("n_lines"),
-          size(array_distinct(split(col("_t"), "\n"))).cast(LongType)
-            .as("n_unique"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "q_line_filter" -> ((s, dir) =>
-      graft.functions.TextFunctions.lineFilterTable(
-        t(s, dir, "documents").withColumn("text", multilineText),
-        "doc_id", "text")
-        .orderBy(col("doc_id"))),
-
-    // snapshot drift: "new crawl" derived deterministically from documents
-    // (drop %13 ids, append ' v2' to %17 texts, re-add %19 ids shifted) —
-    "q_join_fanout" -> ((s, dir) =>
-      graft.core.SafeJoin.fanoutStats(
-        t(s, dir, "lineitem"), t(s, dir, "orders"),
-        "l_orderkey", "o_orderkey", topK = 10)),
-
-    "q_phrase_search" -> ((s, dir) => {
-      // phrase set = the first 3 words of every 50th doc; search the whole
-      // corpus for token-aligned occurrences via the window-hash equi-join
-      val docs = t(s, dir, "documents")
-      val norm = trim(regexp_replace(lower(col("text")), "\\s+", " "))
-      val phrases = docs.filter(col("doc_id") % 50 === 0)
-        .select(col("doc_id").as("phrase_id"),
-          concat_ws(" ", slice(split(norm, " "), 1, 3)).as("phrase"))
-        .filter(size(split(col("phrase"), " ")) === 3)
-      TF.multiPhraseSearch(docs, "doc_id", "text", phrases,
-        "phrase_id", "phrase")
-        .orderBy(col("doc_id"), col("phrase_id"))
-    }),
-
-    "q_compact" -> ((s, dir) => {
-      // fragment the corpus into 64 tiny files, compact to ~1000-row
-      // files, prove the data survived the swap byte-for-byte
-      val base = "/tmp/graft_compact/" + Sql.sfTag(dir)
-      t(s, dir, "documents").repartition(64)
-        .write.mode("overwrite").parquet(base)
-      graft.io.Compact.rewrite(s, base, targetBytesPerFile = 256L * 1024)
-      graft.io.Sources.parquet(s, base).orderBy(col("doc_id"))
-    }),
-
-    "q_snapshot_drift" -> ((s, dir) => {
-      // same changed-snapshot construction as q_snapshot_diff; drift
-      // quantifies HOW changed each surviving changed doc is
-      val docs = t(s, dir, "documents")
-      val newDf = docs.filter(col("doc_id") % 13 =!= 0)
-        .withColumn("text",
-          when(col("doc_id") % 17 === 0, concat(col("text"), lit(" v2")))
-            .otherwise(col("text")))
-      ContentDrift.changedJaccard(docs, newDf, "doc_id", "text")
-        .orderBy(col("doc_id"))
-    }),
-
-    // the oracle rebuilds both snapshots and replays the full-outer
-    // hash-compare classification
-    "q_snapshot_diff" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val newDf = docs.filter(col("doc_id") % 13 =!= 0)
-        .withColumn("text",
-          when(col("doc_id") % 17 === 0, concat(col("text"), lit(" v2")))
-            .otherwise(col("text")))
-        // negative shifted ids can never collide with real (non-negative)
-        // doc ids at any scale factor
-        .unionByName(docs.filter(col("doc_id") % 19 === 0)
-          .select((-col("doc_id") - lit(1L)).as("doc_id"), col("text"),
-            col("lang"), col("source"), col("n_chars")))
-      SnapshotDiff.diff(docs, newDf, "doc_id", "text")
-        .orderBy(col("doc_id"))
-    }),
-
-    "q_graph_distance" -> ((s, dir) => {
-      // link distance from a trusted seed set (crawl-quality signal) over
-      // the deterministic citation graph of q_pagerank (each doc links to
-      // 7·id+1 and 13·id+5 mod N): multi-source frontier BFS — one
-      // edge-join + one anti-join per hop, O(|E|) total work
-      val docs = t(s, dir, "documents").select(col("doc_id"))
-      val cnt = docs.agg(count(lit(1)).as("_n"))
-      val link = (a: Long, b: Long) => docs.crossJoin(broadcast(cnt))
-        .select(col("doc_id").as("src"),
-          pmod(col("doc_id") * a + b, col("_n")).as("dst"))
-      graft.operators.Bfs.distances(docs, "doc_id",
-        link(7L, 1L).union(link(13L, 5L)), "src", "dst",
-        seeds = docs.filter(col("doc_id") < 3), maxHops = 12)
-        .orderBy(col("doc_id"))
-    }),
-
-    "q_kcore" -> ((s, dir) => {
-      // dense-cluster extraction: the 4-core of the citation graph with a
-      // planted near-clique on ids < 25 (each also links to the next 3 mod
-      // 25). The sparse citation shell peels away over ~7-9 rounds (each
-      // round: two semi-joins + one degree aggregate, shrinking state);
-      // only the planted dense cluster survives — the robustness upgrade
-      // over raw degree filtering, which the shell's hubs would pass
-      val docs = t(s, dir, "documents").select(col("doc_id"))
-      val cnt = docs.agg(count(lit(1)).as("_n"))
-      val link = (a: Long, b: Long) => docs.crossJoin(broadcast(cnt))
-        .select(col("doc_id").as("src"),
-          pmod(col("doc_id") * a + b, col("_n")).as("dst"))
-      val clique = (1 to 3).map { j =>
-        docs.filter(col("doc_id") < 25)
-          .select(col("doc_id").as("src"),
-            pmod(col("doc_id") + j, lit(25L)).as("dst"))
-      }.reduce(_ unionByName _)
-      graft.operators.KCore.core(docs, "doc_id",
-        link(7L, 1L).union(link(13L, 5L)).unionByName(clique),
-        "src", "dst", k = 4)
-        .orderBy(col("doc_id"))
-    }),
-
-    "q_trustrank" -> ((s, dir) => {
-      // TrustRank: teleport restricted to the 5 trusted seeds
-      // (doc_id < 5) over the truncated doubling/tripling graph of
-      // q_pagerank_dangling — sinks are plentiful, so the "dangling mass
-      // returns to the seeds" path carries real value every round.
-      // Authority only flows outward from curation: the spam-resistant,
-      // weighted complement of q_graph_distance
-      val docs = t(s, dir, "documents").select(col("doc_id"))
-      val cnt = docs.agg(count(lit(1)).as("_n"))
-      val link = (a: Long, b: Long) => docs.crossJoin(broadcast(cnt))
-        .filter(col("doc_id") * a + b < col("_n"))
-        .select(col("doc_id").as("src"), (col("doc_id") * a + b).as("dst"))
-      graft.operators.PageRank.trustRank(
-        link(2L, 1L).union(link(3L, 2L)), "src", "dst",
-        seeds = docs.filter(col("doc_id") < 5), seedCol = "doc_id",
-        iterations = 3)
-        .orderBy(col("id"))
-    }),
-
-    "q_incremental_refresh" -> ((s, dir) => {
-      // capstone of the incremental path: classify the new snapshot
-      // against the old (SnapshotDiff), turn the classification into a
-      // CDC batch (changed = delete old row + insert new row), fold it
-      // into the per-source aggregate state with updateCdc — and the
-      // result must equal the direct aggregate of the NEW snapshot, which
-      // is exactly what the oracle computes. History is never rescanned:
-      // the refresh touches the diff slice plus the state frame
-      val d = t(s, dir, "documents")
-      val v1 = d.filter(col("doc_id") % 13 =!= 0)
-        .withColumn("text", when(col("doc_id") % 5 === 0,
-          concat(col("text"), lit(" (draft)"))).otherwise(col("text")))
-      val v2 = d.filter(col("doc_id") % 17 =!= 0)
-      val st0 = graft.operators.IncrementalAgg.update(None, v1,
-        Seq("source"), "n_chars")
-      graft.operators.IncrementalAgg.refreshFromSnapshots(st0, v1, v2,
-        "doc_id", "text", Seq("source"), "n_chars")
-        .select(col("source"), col("n"),
-          round(col("total").cast(DoubleType), 4).as("total"))
-        .orderBy(col("source"))
-    }),
-
-    "q_embed_pq" -> ((s, dir) => {
-      // product quantization: 8 subspace codebooks (driver-sample fit,
-      // seeded), codegen'd encode scan to 8 one-byte codes per vector,
-      // ADC top-15 by literal lookup table. Same recall shape as
-      // q_embed_ivf: the oracle reads the materialized result ids and
-      // counts overlap with its OWN exact L2 top-15
-      val emb = t(s, dir, "embeddings")
-      val qvec = emb.filter(col("vec_id") === 2)
-        .select(col("embedding")).head().getSeq[Float](0)
-      val model = Similarity.pqTrain(emb, "embedding", m = 8, codewords = 64)
-      val enc = Similarity.pqEncode(emb, "embedding", model)
-      val res = Similarity.pqSearch(enc, "vec_id", model, qvec, k = 15)
-        .select(col("vec_id")).persist() // aux + recall join share the scan
-      Aux.write(res, s"/tmp/graft_oracle_aux/${Sql.sfTag(dir)}/pq_results")
-      val qd = array(qvec.map(v => lit(v.toDouble)): _*)
-      val dist = aggregate(
-        zip_with(col("embedding").cast(ArrayType(DoubleType)), qd,
-          (a, b) => (a - b) * (a - b)),
-        lit(0.0), (acc, x) => acc + x)
-      val exact = emb.select(col("vec_id"),
-          Semantics.safeRound(dist, 4).as("dd"))
-        .orderBy(col("dd").asc, col("vec_id").asc).limit(15)
-        .select(col("vec_id"), lit(1).as("_hit"))
-      res.join(exact, Seq("vec_id"), "left")
-        .agg(count(lit(1)).as("n_results"),
-          sum(coalesce(col("_hit"), lit(0))).cast(LongType).as("n_hits"))
-    }),
-
-    "q_embed_ivfpq" -> ((s, dir) => {
-      // the composed billion-vector recipe: coarse IVF lists prune which
-      // rows a query touches, PQ codes shrink each touched row to 8
-      // bytes; one shared driver sample trains both fits. Recall gate
-      // like q_embed_ivf/_pq: oracle counts overlap of the materialized
-      // ids with its OWN exact L2 top-15
-      val emb = t(s, dir, "embeddings")
-      val qvec = emb.filter(col("vec_id") === 2)
-        .select(col("embedding")).head().getSeq[Float](0)
-      val idx = Similarity.ivfPqIndex(emb, "embedding", "vec_id",
-        nLists = 8, m = 8, codewords = 64)
-      val res = Similarity.ivfPqSearch(idx, "vec_id", qvec,
-          k = 15, nProbe = 4)
-        .select(col("vec_id")).persist() // aux + recall join share the scan
-      Aux.write(res, s"/tmp/graft_oracle_aux/${Sql.sfTag(dir)}/ivfpq_results")
-      val qd = array(qvec.map(v => lit(v.toDouble)): _*)
-      val dist = aggregate(
-        zip_with(col("embedding").cast(ArrayType(DoubleType)), qd,
-          (a, b) => (a - b) * (a - b)),
-        lit(0.0), (acc, x) => acc + x)
-      val exact = emb.select(col("vec_id"),
-          Semantics.safeRound(dist, 4).as("dd"))
-        .orderBy(col("dd").asc, col("vec_id").asc).limit(15)
-        .select(col("vec_id"), lit(1).as("_hit"))
-      res.join(exact, Seq("vec_id"), "left")
-        .agg(count(lit(1)).as("n_results"),
-          sum(coalesce(col("_hit"), lit(0))).cast(LongType).as("n_hits"))
-    }),
-
-    "q_embed_ivfadc" -> ((s, dir) => {
-      // residual IVFADC: PQ codebooks trained on (vector − coarse
-      // centroid) residuals — within-list variance instead of the full
-      // spread, so the same 8×64 code budget quantizes finer (measurably
-      // better recall than q_embed_ivfpq at the same probe budget); ADC
-      // scoring goes through the codegen'd per-list table stack. Same
-      // recall oracle as its siblings
-      val emb = t(s, dir, "embeddings")
-      val qvec = emb.filter(col("vec_id") === 2)
-        .select(col("embedding")).head().getSeq[Float](0)
-      val idx = Similarity.ivfAdcIndex(emb, "embedding", "vec_id",
-        nLists = 8, m = 8, codewords = 64)
-      val res = Similarity.ivfAdcSearch(idx, "vec_id", qvec,
-          k = 15, nProbe = 4)
-        .select(col("vec_id")).persist() // aux + recall join share the scan
-      Aux.write(res, s"/tmp/graft_oracle_aux/${Sql.sfTag(dir)}/ivfadc_results")
-      val qd = array(qvec.map(v => lit(v.toDouble)): _*)
-      val dist = aggregate(
-        zip_with(col("embedding").cast(ArrayType(DoubleType)), qd,
-          (a, b) => (a - b) * (a - b)),
-        lit(0.0), (acc, x) => acc + x)
-      val exact = emb.select(col("vec_id"),
-          Semantics.safeRound(dist, 4).as("dd"))
-        .orderBy(col("dd").asc, col("vec_id").asc).limit(15)
-        .select(col("vec_id"), lit(1).as("_hit"))
-      res.join(exact, Seq("vec_id"), "left")
-        .agg(count(lit(1)).as("n_results"),
-          sum(coalesce(col("_hit"), lit(0))).cast(LongType).as("n_hits"))
-    }),
-
-    "q_embed_ivfadc_refined" -> ((s, dir) => {
-      // two-stage IVFADC: codes-only ADC shortlists refine×k candidates,
-      // then ONLY the shortlist re-ranks by exact float distance (a
-      // broadcast semi-join — float cost proportional to the shortlist,
-      // not the probed lists). Same recall oracle as its siblings; the
-      // refine stage should push recall at-or-above the plain ADC gate
-      val emb = t(s, dir, "embeddings")
-      val qvec = emb.filter(col("vec_id") === 2)
-        .select(col("embedding")).head().getSeq[Float](0)
-      val idx = Similarity.ivfAdcIndex(emb, "embedding", "vec_id",
-        nLists = 8, m = 8, codewords = 64)
-      val res = Similarity.ivfAdcSearchRefined(idx, emb, "embedding",
-          "vec_id", qvec, k = 15, nProbe = 4, refine = 4)
-        .select(col("vec_id")).persist()
-      Aux.write(res,
-        s"/tmp/graft_oracle_aux/${Sql.sfTag(dir)}/ivfadc_refined_results")
-      val qd = array(qvec.map(v => lit(v.toDouble)): _*)
-      val dist = aggregate(
-        zip_with(col("embedding").cast(ArrayType(DoubleType)), qd,
-          (a, b) => (a - b) * (a - b)),
-        lit(0.0), (acc, x) => acc + x)
-      val exact = emb.select(col("vec_id"),
-          Semantics.safeRound(dist, 4).as("dd"))
-        .orderBy(col("dd").asc, col("vec_id").asc).limit(15)
-        .select(col("vec_id"), lit(1).as("_hit"))
-      res.join(exact, Seq("vec_id"), "left")
-        .agg(count(lit(1)).as("n_results"),
-          sum(coalesce(col("_hit"), lit(0))).cast(LongType).as("n_hits"))
-    }),
-
-    "q_jl_project" -> ((s, dir) =>
-      // Johnson–Lindenstrauss ±1 projection, fully replayable: the sign
-      // matrix derives from md5 parity (both engines rebuild it
-      // bit-for-bit) and each component is a decimal-exact signed sum —
-      // the dimensionality cut before LSH/IVF bucketing, with an EXACT
-      // oracle instead of a distance-distortion invariant
-      Similarity.jlProject(t(s, dir, "embeddings"), "embedding", "vec_id",
-          outDims = 8)
-        .select(col("vec_id"), col("o"),
-          Semantics.safeRound(col("proj"), 4).as("proj_e4"))
-        .orderBy(col("vec_id"), col("o"))),
-
-    "q_unigram_encode" -> ((s, dir) => {
-      // unigram-LM tokenizer (SentencePiece-style): EM-trained piece
-      // vocabulary over the word-type table, Viterbi encode as a codegen
-      // projection. The model is engine-specific, so the gate follows the
-      // invariant pattern: token stream + vocabulary ship as aux, and
-      // BOTH engines independently verify the same per-doc contract —
-      // token count, losslessness (tokens rebuild the normalized text),
-      // and zero out-of-vocabulary emissions
-      val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
-      val model = graft.functions.Unigram.train(docs, "text",
-        vocabSize = 300, maxPieceLen = 6, emIters = 2)
-      val enc = graft.core.Rebalance.computeDense(docs)
-        .select(col("doc_id"), col("text"),
-          graft.functions.Unigram.encodeTokens(col("text"), model).as("toks"))
-        .persist()
-      Aux.write(enc.select(col("doc_id"),
-          posexplode(col("toks")).as(Seq("pos", "token"))),
-        s"/tmp/graft_oracle_aux/${Sql.sfTag(dir)}/unigram_tokens",
-        single = false)
-      Aux.write({ import s.implicits._; model.pieces.toSeq.toDF("piece") },
-        s"/tmp/graft_oracle_aux/${Sql.sfTag(dir)}/unigram_vocab")
-      val collapsed = replace(
-        trim(regexp_replace(lower(col("text")), "\\s+", " ")),
-        lit(" "), lit(""))
-      enc.select(col("doc_id"),
-          size(col("toks")).cast(LongType).as("n_tokens"),
-          (concat_ws("", col("toks")) === collapsed).as("lossless"),
-          size(array_except(col("toks"), lit(model.pieces)))
-            .cast(LongType).as("n_oov"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "q_tokenizer_compare" -> ((s, dir) => {
-      // the "which tokenizer fits this corpus" report: BPE and unigram-LM
-      // trained on the same corpus, per-language fertility side by side
-      // (normalized chars per token, e6-scaled BIGINT). Both per-doc token
-      // counts single-source via aux (each kernel is independently gated);
-      // chars, grouping, ratios, and the winner flag replay as pure
-      // BIGINT arithmetic
-      val docs = t(s, dir, "documents")
-      val merges = graft.functions.Bpe.train(docs, "text", numMerges = 6)
-      val model = graft.functions.Unigram.train(docs, "text",
-        vocabSize = 300, maxPieceLen = 6, emIters = 2)
-      val norm = trim(regexp_replace(lower(col("text")), "\\s+", " "))
-      val enc = graft.core.Rebalance.computeDense(docs)
-        .select(col("doc_id"), col("lang"),
-          length(translate(norm, " ", "")).as("_nc"),
-          size(graft.functions.Bpe.encode(col("text"), merges)).as("_nb"),
-        size(graft.functions.Unigram.encodeTokens(col("text"), model))
-          .as("_nu"))
-      val encP = if (Aux.enabled) enc.persist() else enc
-      Aux.write(encP.select(col("doc_id"), col("_nb"), col("_nu")),
-        s"/tmp/graft_oracle_aux/${Sql.sfTag(dir)}/tok_compare")
-      encP.groupBy(col("lang"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("_nc")).as("n_chars_norm"),
-          sum(col("_nb")).as("bpe_tokens"), sum(col("_nu")).as("uni_tokens"))
-        .select(col("lang"), col("n_docs"), col("bpe_tokens"),
-          col("uni_tokens"),
-          expr("CAST((n_chars_norm * 1000000) DIV bpe_tokens AS BIGINT)")
-            .as("bpe_cpt_e6"),
-          expr("CAST((n_chars_norm * 1000000) DIV uni_tokens AS BIGINT)")
-            .as("uni_cpt_e6"),
-          (col("uni_tokens") < col("bpe_tokens")).as("unigram_wins"))
-        .orderBy(col("lang"))
-    }),
-
-    "q_file_manifest" -> ((s, dir) => {
-      // per-file integrity manifest: stage documents as a 4-file parquet
-      // dir (hash-partitioned on doc_id — deterministic file contents),
-      // then derive (file_part, n_rows, sum/min/max of id) per part file.
-      // The oracle re-reads the SAME staged files with filename=true and
-      // re-derives the manifest — proving the grouping really is
-      // per-physical-file, not an artifact of Spark's reader
-      val staged = s"/tmp/graft_manifest/${Sql.sfTag(dir)}/documents"
-      t(s, dir, "documents").select(col("doc_id"), col("source"))
-        .repartition(4, col("doc_id"))
-        .write.mode("overwrite").parquet(staged)
-      graft.io.TableManifest.parquetManifest(s, staged, "doc_id")
-        .orderBy(col("file_part"))
-    })
-  )
-
-  /** Deterministic multi-line derivation shared by the line-family gates —
-    * Spark twin of [[MultilineSql]]; both must stay bit-identical. */
-  private def multilineText: Column = concat(
-    regexp_replace(col("text"), "((\\S+ ){7}\\S+) ", "$1\n"),
-    when(col("doc_id") % 2 === 0, lit("\nClick Here")).otherwise(lit("")),
-    when(col("doc_id") % 6 === 0, lit("\nClick Here")).otherwise(lit("")),
-    when(col("doc_id") % 3 === 0, lit("\nBREAKING NEWS ALERT"))
-      .otherwise(lit("")),
-    when(col("doc_id") % 5 === 0, lit("\nok go")).otherwise(lit("")),
-    when(col("doc_id") % 7 === 0,
-      lit("\nthis closing line has enough words to stay"))
-      .otherwise(lit("")))
-
-  /** DuckDB spelling of [[multilineText]]. */
-  private val MultilineSql: String =
-    """regexp_replace(text, '((\S+ ){7}\S+) ', '\1' || chr(10), 'g') ||
-      |(CASE WHEN doc_id % 2 = 0 THEN chr(10) || 'Click Here' ELSE '' END) ||
-      |(CASE WHEN doc_id % 6 = 0 THEN chr(10) || 'Click Here' ELSE '' END) ||
-      |(CASE WHEN doc_id % 3 = 0 THEN chr(10) || 'BREAKING NEWS ALERT' ELSE '' END) ||
-      |(CASE WHEN doc_id % 5 = 0 THEN chr(10) || 'ok go' ELSE '' END) ||
-      |(CASE WHEN doc_id % 7 = 0
-      |  THEN chr(10) || 'this closing line has enough words to stay'
-      |  ELSE '' END)""".stripMargin.replace("\n", " ")
-
-  // ---- DuckDB oracles --------------------------------------------------------
-
-  private val tokenCountSql = Sql.tokenCountSql("text")
-
-  private val wordsSql = "string_split_regex(trim(lower(text)), '\\s+')"
-
-  // the raw quality signals (bit-identical cross-engine — the composite's
-  // unrounded threshold comparisons hash-match), shared by the
-  // q_doc_quality twin, the corpus-card aggregate, and the LR replay
-  private val nWordsSql = s"len($wordsSql)"
-  private val punctRatioSql: String = {
-    val punct = s"""length(regexp_replace(trim(text), '[^[:punct:]]', '', 'g'))"""
-    s"CASE WHEN length(trim(text)) = 0 THEN 0.0 ELSE CAST($punct AS DOUBLE) / length(trim(text)) END"
-  }
-  private val stopRatioSql: String = {
-    val stops = s"len(list_filter($wordsSql, w -> w IN ('the','and','of','to','a','in','is','it','that','for','on','with','as','or','at','by')))"
-    s"CASE WHEN $nWordsSql = 0 THEN 0.0 ELSE CAST($stops AS DOUBLE) / $nWordsSql END"
-  }
-  private val meanWlSql: String = {
-    val charsNoSpace = s"length(replace(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ', ''))"
-    s"CASE WHEN $nWordsSql = 0 THEN 0.0 ELSE CAST($charsNoSpace AS DOUBLE) / $nWordsSql END"
-  }
-
-  // the composite quality score, shared by the q_doc_quality twin and the
-  // corpus-card aggregate (exact quarters — double sums stay exact)
-  private val qualityScoreSql: String =
-    s"""((CASE WHEN $tokenCountSql BETWEEN 10 AND 100000 THEN 1.0 ELSE 0.0 END) +
-       | (CASE WHEN $punctRatioSql <= 0.2 THEN 1.0 ELSE 0.0 END) +
-       | (CASE WHEN $meanWlSql BETWEEN 2.0 AND 12.0 THEN 1.0 ELSE 0.0 END) +
-       | (CASE WHEN $stopRatioSql >= 0.05 THEN 1.0 ELSE 0.5 END)) / 4.0""".stripMargin.replace("\n", " ")
-
-  // DuckDB replay of TF.langId's marker-hit argmax (first-wins on ties),
-  // shared by q_doc_langid and q_kappa
-  private val langGuessSql: String = {
-    def hits(markers: Seq[String]) =
-      s"len(list_filter($wordsSql, w -> w IN (${markers.map(m => s"'$m'").mkString(",")})))"
-    val scores = TF.langMarkers.map { case (l, ms) => l -> hits(ms) }
-    val (l0, s0) = scores.head
-    val folded = scores.tail.foldLeft((s"$s0", s"'$l0'")) {
-      case ((bs, bl), (lang, sc)) =>
-        (s"CASE WHEN $sc > ($bs) THEN $sc ELSE ($bs) END",
-         s"CASE WHEN $sc > ($bs) THEN '$lang' ELSE ($bl) END")
-    }
-    s"CASE WHEN (${folded._1}) > 0 THEN (${folded._2}) ELSE 'unknown' END"
-  }
-
-  val oracleSql: Map[String, String] = Map(
-    "q_trustrank" -> {
-      // same fixed-point replay as q_pagerank, with the teleport base and
-      // the per-round dangling share applied to seed rows only
-      def iter(prev: String, cur: String, sh: String) =
-        s"""$sh AS (SELECT CAST(FLOOR(COALESCE(SUM(p.rank), 0) / 5.0)
-           |    AS BIGINT) AS m
-           |  FROM $prev p WHERE p.id NOT IN (SELECT id FROM deg)),
-           |$cur AS (SELECT nodes.id,
-           |  (CASE WHEN nodes.id < 5 THEN bb.b ELSE 0 END)
-           |  + CAST(FLOOR((85 * (COALESCE(s.s, 0)
-           |      + CASE WHEN nodes.id < 5 THEN $sh.m ELSE 0 END)) / 100.0)
-           |    AS BIGINT) AS rank
-           |  FROM nodes CROSS JOIN bb CROSS JOIN $sh
-           |  LEFT JOIN (SELECT e.dst AS id,
-           |      SUM(CAST(FLOOR(CAST(p.rank AS DOUBLE) / d._deg) AS BIGINT))
-           |        AS s
-           |    FROM e JOIN $prev p ON e.src = p.id
-           |    JOIN deg d ON e.src = d.id
-           |    GROUP BY e.dst) s ON nodes.id = s.id)""".stripMargin
-      s"""WITH nn AS (SELECT count(*) AS n FROM documents),
-         |e AS (SELECT doc_id AS src, doc_id * 2 + 1 AS dst
-         |        FROM documents, nn WHERE doc_id * 2 + 1 < nn.n
-         |      UNION ALL
-         |      SELECT doc_id, doc_id * 3 + 2 FROM documents, nn
-         |        WHERE doc_id * 3 + 2 < nn.n),
-         |nodes AS (SELECT DISTINCT id FROM
-         |  (SELECT src AS id FROM e UNION ALL SELECT dst FROM e)),
-         |deg AS (SELECT src AS id, count(*) AS _deg FROM e GROUP BY 1),
-         |bb AS (SELECT
-         |    CAST(FLOOR(1000000 * 15 / (100.0 * 5)) AS BIGINT) AS b,
-         |    CAST(FLOOR(1000000.0 / 5) AS BIGINT) AS r0),
-         |r0 AS (SELECT id,
-         |  CASE WHEN id < 5 THEN (SELECT r0 FROM bb) ELSE 0 END AS rank
-         |  FROM nodes),
-         |${iter("r0", "r1", "sh1")},
-         |${iter("r1", "r2", "sh2")},
-         |${iter("r2", "r3", "sh3")}
-         |SELECT id, rank FROM r3 ORDER BY id""".stripMargin
     },
-
-    "q_kcore" -> {
-      // 12 unrolled peel rounds cover the measured depth (7 at N=500, 9
-      // at N=5000) with margin; peeling is monotone, so extra rounds are
-      // no-ops once the fixpoint is reached (the operator itself asserts
-      // convergence). Every round MUST be MATERIALIZED: DuckDB inlines
-      // plain CTEs, and a_i referencing a_{i-1} twice would inline the
-      // whole chain 2^12 times (observed as a too-many-open-files blowup)
-      val rounds = (1 to 12).map { i =>
-        s"""a$i AS MATERIALIZED (SELECT e.u AS id FROM sym e
-           |  JOIN a${i - 1} x ON e.u = x.id
-           |  JOIN a${i - 1} y ON e.v = y.id
-           |  GROUP BY e.u HAVING COUNT(*) >= 4)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH nodes AS MATERIALIZED (SELECT doc_id AS id FROM documents),
-         |n AS (SELECT COUNT(*) AS c FROM nodes),
-         |e0 AS MATERIALIZED (
-         |  SELECT id AS u, (id * 7 + 1) % c AS v FROM nodes, n
-         |  UNION ALL SELECT id, (id * 13 + 5) % c FROM nodes, n
-         |  UNION ALL SELECT id, (id + 1) % 25 FROM nodes WHERE id < 25
-         |  UNION ALL SELECT id, (id + 2) % 25 FROM nodes WHERE id < 25
-         |  UNION ALL SELECT id, (id + 3) % 25 FROM nodes WHERE id < 25),
-         |sym AS MATERIALIZED (SELECT DISTINCT u, v FROM (
-         |  SELECT u, v FROM e0 WHERE u <> v
-         |  UNION ALL SELECT v, u FROM e0 WHERE u <> v)),
-         |a0 AS MATERIALIZED (SELECT id FROM nodes),
-         |$rounds
-         |SELECT id AS doc_id FROM a12 ORDER BY doc_id""".stripMargin
-    },
-
-    "q_graph_distance" ->
-      """WITH RECURSIVE n AS (SELECT COUNT(*) AS c FROM documents),
-        |edges AS (
-        |  SELECT doc_id AS src, (doc_id * 7 + 1) % c AS dst
-        |    FROM documents, n
-        |  UNION ALL
-        |  SELECT doc_id, (doc_id * 13 + 5) % c FROM documents, n),
-        |reach(id, d) AS (
-        |  SELECT doc_id, CAST(0 AS BIGINT) FROM documents WHERE doc_id < 3
-        |  UNION
-        |  SELECT e.dst, r.d + 1 FROM reach r JOIN edges e ON e.src = r.id
-        |    WHERE r.d < 12),
-        |best AS (SELECT id, MIN(d) AS dist FROM reach GROUP BY id)
-        |SELECT doc.doc_id, best.dist
-        |FROM documents doc LEFT JOIN best ON doc.doc_id = best.id
-        |ORDER BY doc.doc_id""".stripMargin,
-    "q_cdc_apply" ->
-      """SELECT * FROM (
-        |  SELECT doc_id,
-        |    md5(CASE WHEN doc_id % 17 = 0 AND doc_id % 13 <> 0
-        |        THEN text || ' v2' ELSE text END) AS h,
-        |    lang, source, n_chars
-        |  FROM documents WHERE doc_id % 13 <> 0
-        |  UNION ALL
-        |  SELECT -doc_id - 1, md5(text), lang, source, n_chars
-        |  FROM documents WHERE doc_id % 19 = 0)
-        |ORDER BY doc_id""".stripMargin,
-
-    "q_phrase_search" ->
-      """WITH n AS (SELECT doc_id,
-        |    trim(regexp_replace(lower(text), '\s+', ' ', 'g')) AS t
-        |  FROM documents),
-        |ph AS (SELECT doc_id AS phrase_id,
-        |    array_to_string(string_split(t, ' ')[1:3], ' ') AS p
-        |  FROM n WHERE doc_id % 50 = 0 AND len(string_split(t, ' ')) >= 3)
-        |SELECT n.doc_id, ph.phrase_id
-        |FROM n JOIN ph ON strpos(' ' || n.t || ' ', ' ' || ph.p || ' ') > 0
-        |ORDER BY n.doc_id, ph.phrase_id""".stripMargin,
-
-    "q_compact" ->
-      """SELECT doc_id, text, lang, source, n_chars
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "q_join_fanout" ->
-      """WITH lc AS (SELECT l_orderkey AS key, count(*) AS n_left
-        |  FROM lineitem GROUP BY 1),
-        |rc AS (SELECT o_orderkey AS key, count(*) AS n_right
-        |  FROM orders GROUP BY 1)
-        |SELECT lc.key, lc.n_left, rc.n_right,
-        |  lc.n_left * rc.n_right AS out_rows
-        |FROM lc JOIN rc ON lc.key = rc.key
-        |ORDER BY out_rows DESC, lc.key ASC LIMIT 10""".stripMargin,
-
-    "q_snapshot_drift" ->
-      s"""WITH nw AS (SELECT doc_id,
-         |    CASE WHEN doc_id % 17 = 0 THEN text || ' v2' ELSE text END
-         |      AS text
-         |  FROM documents WHERE doc_id % 13 <> 0),
-         |ch AS (SELECT o.doc_id, o.text AS otext, nw.text AS ntext
-         |  FROM documents o JOIN nw ON o.doc_id = nw.doc_id
-         |  WHERE md5(o.text) <> md5(nw.text)),
-         |ow AS (SELECT DISTINCT doc_id,
-         |    unnest(string_split_regex(trim(lower(otext)), '\\s+')) AS w
-         |  FROM ch),
-         |nww AS (SELECT DISTINCT doc_id,
-         |    unnest(string_split_regex(trim(lower(ntext)), '\\s+')) AS w
-         |  FROM ch),
-         |no AS (SELECT doc_id, count(*) AS n_old FROM ow GROUP BY 1),
-         |nn AS (SELECT doc_id, count(*) AS n_new FROM nww GROUP BY 1),
-         |ni AS (SELECT ow.doc_id, count(*) AS n_shared
-         |  FROM ow JOIN nww ON ow.doc_id = nww.doc_id AND ow.w = nww.w
-         |  GROUP BY 1)
-         |SELECT no.doc_id, no.n_old, nn.n_new,
-         |  COALESCE(ni.n_shared, 0) AS n_shared,
-         |  ${Sql.sround("CAST(COALESCE(ni.n_shared, 0) AS DOUBLE) / CAST(no.n_old + nn.n_new - COALESCE(ni.n_shared, 0) AS DOUBLE)")}
-         |    AS jaccard
-         |FROM no JOIN nn ON no.doc_id = nn.doc_id
-         |LEFT JOIN ni ON no.doc_id = ni.doc_id
-         |ORDER BY no.doc_id""".stripMargin,
-
-    "q_snapshot_diff" ->
-      """WITH o AS (SELECT doc_id, md5(text) AS oh FROM documents),
-        |nw AS (
-        |  SELECT doc_id,
-        |      md5(CASE WHEN doc_id % 17 = 0 THEN text || ' v2'
-        |               ELSE text END) AS nh
-        |    FROM documents WHERE doc_id % 13 <> 0
-        |  UNION ALL
-        |  SELECT -doc_id - 1, md5(text) FROM documents
-        |    WHERE doc_id % 19 = 0),
-        |j AS (SELECT COALESCE(o.doc_id, nw.doc_id) AS doc_id, oh, nh
-        |  FROM o FULL OUTER JOIN nw ON o.doc_id = nw.doc_id)
-        |SELECT doc_id,
-        |  CASE WHEN oh IS NULL THEN 'added'
-        |       WHEN nh IS NULL THEN 'removed'
-        |       WHEN oh = nh THEN 'unchanged'
-        |       ELSE 'changed' END AS status
-        |FROM j ORDER BY doc_id""".stripMargin,
-
-    "q_line_dedup" ->
-      s"""WITH base AS (SELECT doc_id, $MultilineSql AS t FROM documents),
-         |l AS (SELECT doc_id, lines[pos] AS line, pos
-         |  FROM (SELECT doc_id, lines,
-         |      unnest(range(1, len(lines) + 1)) AS pos
-         |    FROM (SELECT doc_id, string_split(t, chr(10)) AS lines
-         |          FROM base))),
-         |u AS (SELECT doc_id, line, min(pos) AS p
-         |  FROM l GROUP BY doc_id, line),
-         |agg AS (SELECT doc_id,
-         |    string_agg(line, chr(10) ORDER BY p) AS clean_text,
-         |    CAST(count(*) AS BIGINT) AS n_unique FROM u GROUP BY doc_id),
-         |cnt AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_lines
-         |  FROM l GROUP BY doc_id)
-         |SELECT a.doc_id, a.clean_text, cnt.n_lines, a.n_unique
-         |FROM agg a JOIN cnt USING (doc_id) ORDER BY doc_id""".stripMargin,
-
-    "q_line_filter" -> {
-      val boiler = graft.functions.TextFunctions.boilerplateLines
-        .map(b => s"'$b'").mkString(", ")
-      s"""WITH base AS (SELECT doc_id, $MultilineSql AS t FROM documents),
-         |l AS (SELECT doc_id, lines[pos] AS line, pos
-         |  FROM (SELECT doc_id, lines,
-         |      unnest(range(1, len(lines) + 1)) AS pos
-         |    FROM (SELECT doc_id, string_split(t, chr(10)) AS lines
-         |          FROM base))),
-         |c AS (SELECT doc_id, line, pos,
-         |    trim(regexp_replace(line, '\\s+', ' ', 'g')) AS cl FROM l),
-         |k AS (SELECT doc_id, line, pos,
-         |    (CASE WHEN length(cl) = 0 THEN 0
-         |          ELSE length(cl) - length(replace(cl, ' ', '')) + 1 END) >= 3
-         |    AND NOT (length(regexp_replace(line, '[^A-Za-z]', '', 'g')) > 0
-         |         AND length(regexp_replace(line, '[^A-Z]', '', 'g')) * 10000 >
-         |             length(regexp_replace(line, '[^A-Za-z]', '', 'g')) * 6000)
-         |    AND lower(trim(line)) NOT IN ($boiler) AS keep
-         |  FROM c)
-         |SELECT doc_id,
-         |  coalesce(string_agg(line, chr(10) ORDER BY pos)
-         |    FILTER (WHERE keep), '') AS clean_text,
-         |  CAST(coalesce(sum(CASE WHEN keep THEN 1 ELSE 0 END), 0) AS BIGINT)
-         |    AS n_lines_kept,
-         |  CAST(coalesce(sum(CASE WHEN NOT keep THEN 1 ELSE 0 END), 0) AS BIGINT)
-         |    AS n_lines_removed
-         |FROM k GROUP BY doc_id ORDER BY doc_id""".stripMargin},
-
-    "q_doc_tokens" ->
-      s"""SELECT doc_id, $tokenCountSql AS n_tokens,
-         |  length(text) AS n_chars_computed, n_chars
-         |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "q_doc_quality" -> {
-      val words = wordsSql
-      val nWords = s"len($words)"
-      val stops = s"len(list_filter($words, w -> w IN ('the','and','of','to','a','in','is','it','that','for','on','with','as','or','at','by')))"
-      val charsNoSpace = s"length(replace(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ', ''))"
-      val punct = s"""length(regexp_replace(trim(text), '[^[:punct:]]', '', 'g'))"""
-      val punctRatio = s"CASE WHEN length(trim(text)) = 0 THEN 0.0 ELSE CAST($punct AS DOUBLE) / length(trim(text)) END"
-      val stopRatio = s"CASE WHEN $nWords = 0 THEN 0.0 ELSE CAST($stops AS DOUBLE) / $nWords END"
-      val meanWl = s"CASE WHEN $nWords = 0 THEN 0.0 ELSE CAST($charsNoSpace AS DOUBLE) / $nWords END"
-      s"""SELECT doc_id,
-         |  ${Sql.sround(punctRatio)} AS punct_ratio,
-         |  ${Sql.sround(stopRatio)} AS stopword_ratio,
-         |  ${Sql.sround(meanWl)} AS mean_word_len,
-         |  ROUND($qualityScoreSql, 4) AS quality
-         |FROM documents ORDER BY doc_id""".stripMargin
-    },
-
-    "q_doc_langid" ->
-      s"""SELECT doc_id, lang, $langGuessSql AS lang_guess
-         |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "q_kappa" ->
-      s"""WITH t AS (SELECT lang AS a, $langGuessSql AS b FROM documents),
-         |top AS (SELECT CAST(count(*) AS BIGINT) AS n,
-         |    CAST(SUM(CASE WHEN a = b THEN 1 ELSE 0 END) AS BIGINT)
-         |      AS n_agree FROM t),
-         |ra AS (SELECT a AS lbl, count(*) AS ra FROM t GROUP BY 1),
-         |cb AS (SELECT b AS lbl, count(*) AS cb FROM t GROUP BY 1),
-         |src AS (SELECT CAST(COALESCE(SUM(COALESCE(ra, 0) *
-         |    COALESCE(cb, 0)), 0) AS BIGINT) AS src
-         |  FROM ra FULL OUTER JOIN cb USING (lbl))
-         |SELECT n, n_agree,
-         |  CASE WHEN n * n = src THEN NULL
-         |    ELSE CAST(FLOOR(CAST((n * n_agree - src) * 1000000 AS DOUBLE)
-         |      / CAST(n * n - src AS DOUBLE)) AS BIGINT) END AS kappa_e6
-         |FROM top CROSS JOIN src""".stripMargin,
-
-    "q_ldiversity" ->
-      s"""SELECT lang, source, CAST(count(*) AS BIGINT) AS n,
-         |  CAST(count(DISTINCT $langGuessSql) AS BIGINT) AS n_sensitive
-         |FROM documents GROUP BY lang, source
-         |HAVING count(DISTINCT $langGuessSql) < 3
-         |ORDER BY lang, source""".stripMargin,
-
-    "q_tcloseness" ->
-      // same cross-multiplied TVD: int128 numerator, one floored e6
-      // ratio with matching operand order
-      """WITH g AS (SELECT lang AS v, CAST(count(*) AS BIGINT) AS c
-        |  FROM documents WHERE lang IS NOT NULL GROUP BY 1),
-        |nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM documents
-        |       WHERE lang IS NOT NULL),
-        |gv AS (SELECT source, lang AS v, CAST(count(*) AS BIGINT) AS cg
-        |  FROM documents WHERE lang IS NOT NULL GROUP BY 1, 2),
-        |ng AS (SELECT source, CAST(SUM(cg) AS BIGINT) AS ngr
-        |  FROM gv GROUP BY 1),
-        |j AS (SELECT gv.source,
-        |    SUM(ABS(CAST(gv.cg AS HUGEINT) * nn.n
-        |      - CAST(g.c AS HUGEINT) * ng.ngr)) AS inabs,
-        |    CAST(SUM(g.c) AS BIGINT) AS sumc,
-        |    MAX(ng.ngr) AS ngr, MAX(nn.n) AS n
-        |  FROM gv JOIN g USING (v) JOIN ng USING (source) CROSS JOIN nn
-        |  GROUP BY 1)
-        |SELECT source, ngr AS n_g,
-        |  CAST(FLOOR(CAST(inabs + CAST(ngr AS HUGEINT) * (n - sumc)
-        |      AS DOUBLE) * 1e6 / (2.0 * ngr * n)) AS BIGINT) AS tvd_e6
-        |FROM j ORDER BY source""".stripMargin,
-
-    "q_alpha" ->
-      s"""WITH t AS (SELECT lang AS a, $langGuessSql AS b FROM documents),
-         |top AS (SELECT CAST(count(*) AS BIGINT) AS n_units,
-         |    CAST(SUM(CASE WHEN a = b THEN 0 ELSE 1 END) AS BIGINT)
-         |      AS n_disagree FROM t),
-         |pooled AS (SELECT CAST(COALESCE(SUM(nc * nc), 0) AS BIGINT) AS sq
-         |  FROM (SELECT count(*) AS nc FROM (
-         |    SELECT a AS lbl FROM t UNION ALL SELECT b FROM t)
-         |    GROUP BY lbl)),
-         |f AS (SELECT n_units, n_disagree,
-         |    2 * n_units AS n, 4 * n_units * n_units - sq AS den
-         |  FROM top CROSS JOIN pooled)
-         |SELECT n_units, n_disagree,
-         |  CASE WHEN den = 0 THEN NULL
-         |    ELSE CAST(FLOOR(
-         |      CAST((den - (n - 1) * 2 * n_disagree) * 1000000 AS DOUBLE)
-         |      / CAST(den AS DOUBLE)) AS BIGINT) END AS alpha_e6
-         |FROM f""".stripMargin,
-
-    "q_rake_keywords" -> {
-      val stops = TF.englishStopwords.map(s => s"'$s'").mkString(", ")
-      s"""WITH toks AS (
-         |  SELECT doc_id, w, pos,
-         |    SUM(CASE WHEN w IN ($stops) THEN 1 ELSE 0 END)
-         |      OVER (PARTITION BY doc_id ORDER BY pos
-         |        ROWS UNBOUNDED PRECEDING) AS grp,
-         |    (w IN ($stops)) AS isstop
-         |  FROM (SELECT doc_id, unnest(ws) AS w,
-         |          generate_subscripts(ws, 1) AS pos
-         |        FROM (SELECT doc_id, $wordsSql AS ws FROM documents))
-         |  WHERE length(w) > 0),
-         |nz AS (SELECT doc_id, w, pos, grp FROM toks WHERE NOT isstop),
-         |ph AS (SELECT doc_id, grp,
-         |    string_agg(w, ' ' ORDER BY pos) AS phrase, count(*) AS len
-         |  FROM nz GROUP BY 1, 2),
-         |wstats AS (SELECT w, count(*) AS freq, SUM(len) AS deg
-         |  FROM nz JOIN ph USING (doc_id, grp) GROUP BY w),
-         |ps AS (SELECT nz.doc_id, nz.grp,
-         |    SUM(ws.deg) AS sd, SUM(ws.freq) AS sf
-         |  FROM nz JOIN wstats ws USING (w) GROUP BY 1, 2)
-         |SELECT ph.phrase, CAST(ANY_VALUE(ph.len) AS BIGINT) AS n_words,
-         |  CAST(COUNT(*) AS BIGINT) AS n_occurrences,
-         |  CAST((ANY_VALUE(sd) * 1000000) // ANY_VALUE(sf) AS BIGINT)
-         |    AS score_e6
-         |FROM ph JOIN ps USING (doc_id, grp)
-         |GROUP BY ph.phrase
-         |ORDER BY score_e6 DESC, phrase ASC LIMIT 20""".stripMargin
-    },
-
-    "q_rare_token_pairs" ->
-      s"""WITH wd AS (SELECT DISTINCT doc_id, w FROM
-         |    (SELECT doc_id, unnest($wordsSql) AS w FROM documents)
-         |  WHERE length(w) > 0),
-         |cap AS (SELECT GREATEST(3, count(*) // 10) AS cap FROM documents),
-         |r AS (SELECT w FROM (SELECT w, count(*) AS df FROM wd GROUP BY 1),
-         |    cap
-         |  WHERE df >= 2 AND df <= cap.cap),
-         |wr AS (SELECT doc_id, w FROM wd WHERE w IN (SELECT w FROM r))
-         |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-         |  CAST(count(*) AS BIGINT) AS n_shared
-         |FROM wr a JOIN wr b ON a.w = b.w AND a.doc_id < b.doc_id
-         |GROUP BY 1, 2
-         |ORDER BY doc_a, doc_b""".stripMargin,
-
-    "q_drop_reasons" ->
-      s"""SELECT doc_id, CASE
-         |  WHEN doc_id <> MIN(doc_id) OVER (PARTITION BY md5(text))
-         |    THEN 'exact_dup'
-         |  WHEN n_chars < 50 THEN 'too_short'
-         |  WHEN ($qualityScoreSql) < 0.5 THEN 'low_quality'
-         |  ELSE 'kept' END AS reason
-         |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "q_curation_e2e" ->
-      s"""WITH r AS (SELECT doc_id, text, CASE
-         |    WHEN doc_id <> MIN(doc_id) OVER (PARTITION BY md5(text))
-         |      THEN 'exact_dup'
-         |    WHEN n_chars < 50 THEN 'too_short'
-         |    WHEN ($qualityScoreSql) < 0.5 THEN 'low_quality'
-         |    ELSE 'kept' END AS reason FROM documents),
-         |k AS (SELECT doc_id, text FROM r WHERE reason = 'kept'),
-         |d AS (SELECT doc_id, $tokenCountSql AS n_tokens,
-         |    CAST(FLOOR(doc_id / 100.0) AS BIGINT) AS shard FROM k),
-         |c AS (SELECT doc_id, n_tokens, shard,
-         |    SUM(n_tokens) OVER (PARTITION BY shard ORDER BY doc_id
-         |    ROWS UNBOUNDED PRECEDING) AS cum FROM d),
-         |p AS (SELECT doc_id, n_tokens, shard * 4294967296 +
-         |    GREATEST(CAST(CEIL(CAST(cum AS DOUBLE) / 2000) AS BIGINT) - 1, 0)
-         |      AS window_id FROM c)
-         |SELECT window_id, CAST(COUNT(*) AS BIGINT) AS n_docs,
-         |  CAST(SUM(n_tokens) AS BIGINT) AS n_tokens,
-         |  MIN(doc_id) AS first_doc, MAX(doc_id) AS last_doc
-         |FROM p GROUP BY window_id ORDER BY window_id""".stripMargin,
-
-    "q_doc_ttr" ->
-      s"""WITH w AS (SELECT doc_id, unnest($wordsSql) AS w FROM documents),
-         |c AS (SELECT doc_id, w, count(*) AS c FROM w
-         |  WHERE length(w) > 0 GROUP BY 1, 2)
-         |SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_types,
-         |  CAST(SUM(c) AS BIGINT) AS n_tokens,
-         |  CAST(SUM(CASE WHEN c = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_hapax,
-         |  CAST((COUNT(*) * 1000000) // SUM(c) AS BIGINT) AS ttr_e6
-         |FROM c GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    "q_vocab_coverage" ->
-      s"""WITH w AS (SELECT source, unnest($wordsSql) AS w FROM documents),
-         |wf AS (SELECT source, w FROM w WHERE length(w) > 0),
-         |v AS (SELECT w FROM (SELECT w, count(*) AS c, ROW_NUMBER() OVER (
-         |    ORDER BY count(*) DESC, w ASC) AS rk FROM wf GROUP BY w)
-         |  WHERE rk <= 20)
-         |SELECT source, CAST(COUNT(*) AS BIGINT) AS n_tokens,
-         |  CAST(SUM(CASE WHEN v.w IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-         |    AS n_covered,
-         |  CAST((SUM(CASE WHEN v.w IS NOT NULL THEN 1 ELSE 0 END) * 1000000)
-         |    // COUNT(*) AS BIGINT) AS coverage_e6
-         |FROM wf LEFT JOIN v USING (w)
-         |GROUP BY source ORDER BY source""".stripMargin,
-
-    "q_script_mix" ->
-      """SELECT doc_id, length(text) AS n_chars_txt,
-        |  length(regexp_replace(text, '[^A-Za-z]', '', 'g')) AS n_latin,
-        |  length(regexp_replace(text, '[^0-9]', '', 'g')) AS n_digit,
-        |  length(text) -
-        |    length(regexp_replace(text, '[ \t\n\r\f]', '', 'g')) AS n_ws,
-        |  length(text) -
-        |    length(regexp_replace(text, '[^\x00-\x7f]', '', 'g'))
-        |    AS n_nonascii,
-        |  length(regexp_replace(text, '[ \t\n\r\f]', '', 'g'))
-        |    - length(regexp_replace(text, '[^A-Za-z]', '', 'g'))
-        |    - length(regexp_replace(text, '[^0-9]', '', 'g'))
-        |    - (length(text) -
-        |       length(regexp_replace(text, '[^\x00-\x7f]', '', 'g')))
-        |    AS n_other_ascii
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "q_mojibake" ->
-      // same engineered corpus rebuilt from chr() codepoints (no literal
-      // mojibake bytes in shipped SQL), same three char-class counts
-      """WITH d AS (SELECT doc_id,
-        |    CASE WHEN doc_id % 7 = 0
-        |           THEN text || ' caf' || chr(195) || chr(169)
-        |         WHEN doc_id % 5 = 0 THEN text || chr(65533) || chr(133)
-        |         ELSE text END AS t
-        |  FROM documents)
-        |SELECT doc_id,
-        |  CAST(len(regexp_extract_all(t, '\x{FFFD}')) AS BIGINT)
-        |    AS n_replacement,
-        |  CAST(len(regexp_extract_all(t, '[\x{80}-\x{9F}]')) AS BIGINT)
-        |    AS n_c1,
-        |  CAST(len(regexp_extract_all(t, '[\x{C2}\x{C3}\x{E2}]'))
-        |    AS BIGINT) AS n_suspect,
-        |  len(regexp_extract_all(t, '\x{FFFD}'))
-        |    + len(regexp_extract_all(t, '[\x{80}-\x{9F}]'))
-        |    + len(regexp_extract_all(t, '[\x{C2}\x{C3}\x{E2}]')) > 0
-        |    AS suspect_encoding
-        |FROM d ORDER BY doc_id""".stripMargin,
-
-    "q_feature_hash" ->
-      s"""WITH w AS (SELECT doc_id, unnest($wordsSql) AS word FROM documents)
-         |SELECT doc_id,
-         |  CAST(('0x' || substr(md5(word), 1, 8)) AS BIGINT) % 512 AS bucket,
-         |  count(*) AS w
-         |FROM w GROUP BY 1, 2 ORDER BY doc_id, bucket""".stripMargin,
-
-    "q_word_pmi" ->
-      s"""WITH base AS (SELECT doc_id, $wordsSql AS l FROM documents),
-         |w AS (SELECT doc_id, unnest(l) AS w,
-         |    unnest(range(0, len(l))) AS pos FROM base),
-         |nw AS (SELECT count(*) AS nw FROM w),
-         |uni AS (SELECT w, count(*) AS cw FROM w GROUP BY 1),
-         |p AS (SELECT a.w AS wa, b.w AS wb FROM w a JOIN w b
-         |  ON a.doc_id = b.doc_id AND b.pos - a.pos IN (1, 2)),
-         |np AS (SELECT count(*) AS np FROM p),
-         |top AS (SELECT wa, wb, count(*) AS cab FROM p GROUP BY 1, 2
-         |  ORDER BY cab DESC, wa ASC, wb ASC LIMIT 100)
-         |SELECT t.wa, t.wb, t.cab,
-         |  ${Sql.sround("ln(CAST(t.cab * nw.nw * nw.nw AS DOUBLE) / CAST(np.np * ua.cw * ub.cw AS DOUBLE))")} AS pmi
-         |FROM top t
-         |JOIN uni ua ON t.wa = ua.w
-         |JOIN uni ub ON t.wb = ub.w
-         |CROSS JOIN nw CROSS JOIN np
-         |ORDER BY t.cab DESC, t.wa ASC, t.wb ASC""".stripMargin,
-
-    "q_readability" ->
-      s"""SELECT doc_id, ${Sql.tokenCountSql()} AS n_words,
-         |  GREATEST(len(regexp_extract_all(text, '[.!?]+')), 1) AS n_sents,
-         |  len(regexp_extract_all(lower(text), '[aeiouy]+')) AS n_syllables,
-         |  CASE WHEN ${Sql.tokenCountSql()} = 0 THEN NULL
-         |    ELSE ${Sql.sround(
-            s"206.835 - 1.015 * (CAST(${Sql.tokenCountSql()} AS DOUBLE) / " +
-            s"CAST(GREATEST(len(regexp_extract_all(text, '[.!?]+')), 1) AS DOUBLE)) - " +
-            s"84.6 * (CAST(len(regexp_extract_all(lower(text), '[aeiouy]+')) AS DOUBLE) / " +
-            s"CAST(${Sql.tokenCountSql()} AS DOUBLE))")}
-         |  END AS flesch
-         |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "q_graph_degrees" ->
-      """WITH nn AS (SELECT count(*) AS n FROM documents),
-        |e AS (SELECT doc_id AS src, (doc_id * 7 + 1) % nn.n AS dst
-        |        FROM documents, nn
-        |      UNION ALL
-        |      SELECT doc_id, (doc_id * 13 + 5) % nn.n FROM documents, nn),
-        |o AS (SELECT src AS id, count(*) AS od FROM e GROUP BY 1),
-        |i AS (SELECT dst AS id, count(*) AS idg FROM e GROUP BY 1)
-        |SELECT COALESCE(o.id, i.id) AS id, COALESCE(od, 0) AS out_deg,
-        |  COALESCE(idg, 0) AS in_deg
-        |FROM o FULL OUTER JOIN i ON o.id = i.id ORDER BY id""".stripMargin,
-
-    "q_reciprocity" -> {
-      s"""WITH nn AS (SELECT count(*) AS n FROM documents),
-         |e AS (SELECT doc_id AS src, (doc_id * 7 + 1) % nn.n AS dst
-         |        FROM documents, nn
-         |      UNION ALL
-         |      SELECT doc_id, (doc_id * 13 + 5) % nn.n FROM documents, nn),
-         |e2 AS (SELECT src, dst FROM e
-         |       UNION ALL SELECT dst, src FROM e WHERE src % 3 = 0),
-         |ed AS (SELECT DISTINCT src, dst FROM e2),
-         |r AS (SELECT count(*) AS n_edges FROM ed),
-         |rc AS (SELECT count(*) AS n_reciprocal FROM ed a
-         |  WHERE EXISTS (SELECT 1 FROM ed b
-         |    WHERE b.src = a.dst AND b.dst = a.src))
-         |SELECT n_edges, n_reciprocal,
-         |  ${Sql.sround("CAST(n_reciprocal AS DOUBLE) / CAST(n_edges AS DOUBLE)")}
-         |    AS reciprocity
-         |FROM r CROSS JOIN rc""".stripMargin
-    },
-
-    "q_moments" -> {
-      val mu = "(m1 / n)"
-      val varP = s"(m2 / n - $mu * $mu)"
-      val sig = s"sqrt($varP)"
-      val skew = s"(m3 / n - 3.0 * $mu * m2 / n + " +
-        s"2.0 * $mu * $mu * $mu) / ($sig * $sig * $sig)"
-      val kurt = s"(m4 / n - 4.0 * $mu * m3 / n + " +
-        s"6.0 * $mu * $mu * m2 / n - 3.0 * $mu * $mu * $mu * $mu) / " +
-        s"($varP * $varP) - 3.0"
-      s"""WITH m AS (SELECT event_type, CAST(COUNT(*) AS DOUBLE) AS n,
-         |    CAST(SUM(CAST(value AS DECIMAL(38,10))) AS DOUBLE) AS m1,
-         |    CAST(SUM(CAST(value * value AS DECIMAL(38,10))) AS DOUBLE)
-         |      AS m2,
-         |    CAST(SUM(CAST(value * value * value AS DECIMAL(38,10)))
-         |      AS DOUBLE) AS m3,
-         |    CAST(SUM(CAST(value * value * value * value
-         |      AS DECIMAL(38,10))) AS DOUBLE) AS m4
-         |  FROM events WHERE value IS NOT NULL GROUP BY 1)
-         |SELECT event_type, CAST(n AS BIGINT) AS n,
-         |  ${Sql.sround(mu)} AS mean, ${Sql.sround(sig)} AS sigma,
-         |  CASE WHEN $sig = 0 THEN NULL ELSE ${Sql.sround(skew)} END
-         |    AS skewness,
-         |  CASE WHEN $sig = 0 THEN NULL ELSE ${Sql.sround(kurt)} END
-         |    AS kurtosis
-         |FROM m ORDER BY event_type""".stripMargin
-    },
-
-    "q_negative_edges" ->
-      """WITH nn AS (SELECT count(*) AS n FROM documents),
-        |e AS (SELECT doc_id AS src, (doc_id * 7 + 1) % nn.n AS dst
-        |        FROM documents, nn
-        |      UNION ALL
-        |      SELECT doc_id, (doc_id * 13 + 5) % nn.n FROM documents, nn),
-        |c AS (SELECT DISTINCT s.doc_id AS src,
-        |    CAST(('0x' || substr(md5('neg#' || CAST(s.doc_id AS VARCHAR)
-        |      || '_' || CAST(i.i AS VARCHAR)), 1, 8)) AS BIGINT)
-        |      % nn.n AS dst
-        |  FROM documents s, (SELECT unnest([0, 1]) AS i) i, nn)
-        |SELECT c.src, c.dst FROM c
-        |WHERE c.src <> c.dst
-        |  AND NOT EXISTS (SELECT 1 FROM e
-        |    WHERE e.src = c.src AND e.dst = c.dst)
-        |ORDER BY c.src, c.dst""".stripMargin,
-
-    "q_graph_components" ->
-      // ground truth: recursive-CTE transitive closure of the same sparse
-      // symmetric edge set, min reachable id per vertex
-      """WITH RECURSIVE nn AS (SELECT count(*) AS n FROM documents),
-        |e AS (SELECT doc_id AS src, (doc_id * 7 + 1) % nn.n AS dst
-        |        FROM documents, nn WHERE doc_id % 3 = 0
-        |      UNION ALL
-        |      SELECT doc_id, (doc_id * 13 + 5) % nn.n
-        |        FROM documents, nn WHERE doc_id % 5 = 0),
-        |sym AS (SELECT src AS u, dst AS v FROM e WHERE src <> dst
-        |        UNION SELECT dst, src FROM e WHERE src <> dst),
-        |reach(id, lbl) AS (
-        |  SELECT doc_id, doc_id FROM documents
-        |  UNION
-        |  SELECT sym.v, reach.lbl FROM sym JOIN reach ON sym.u = reach.id),
-        |lab AS (SELECT id AS doc_id, MIN(lbl) AS component
-        |        FROM reach GROUP BY 1),
-        |sz AS (SELECT component, count(*) AS comp_size FROM lab GROUP BY 1)
-        |SELECT lab.doc_id, lab.component, sz.comp_size
-        |FROM lab JOIN sz USING (component)
-        |ORDER BY lab.doc_id""".stripMargin,
-
-    "q_pagerank" -> {
-      def iter(prev: String, cur: String) =
-        s"""$cur AS (SELECT nodes.id,
-           |  base.b + CAST(FLOOR((85 * COALESCE(s.s, 0)) / 100.0) AS BIGINT)
-           |    AS rank
-           |  FROM nodes CROSS JOIN base
-           |  LEFT JOIN (SELECT e.dst AS id,
-           |      SUM(CAST(FLOOR(CAST(p.rank AS DOUBLE) / d._deg) AS BIGINT))
-           |        AS s
-           |    FROM e JOIN $prev p ON e.src = p.id
-           |    JOIN deg d ON e.src = d.id
-           |    GROUP BY e.dst) s ON nodes.id = s.id)""".stripMargin
-      s"""WITH nn AS (SELECT count(*) AS n FROM documents),
-         |e AS (SELECT doc_id AS src, (doc_id * 7 + 1) % nn.n AS dst
-         |        FROM documents, nn
-         |      UNION ALL
-         |      SELECT doc_id, (doc_id * 13 + 5) % nn.n FROM documents, nn),
-         |nodes AS (SELECT DISTINCT id FROM
-         |  (SELECT src AS id FROM e UNION ALL SELECT dst FROM e)),
-         |deg AS (SELECT src AS id, count(*) AS _deg FROM e GROUP BY 1),
-         |base AS (SELECT
-         |    CAST(FLOOR(1000000 * 15 / (100.0 * n)) AS BIGINT) AS b,
-         |    CAST(FLOOR(1000000.0 / n) AS BIGINT) AS r0 FROM nn),
-         |r0 AS (SELECT id, (SELECT r0 FROM base) AS rank FROM nodes),
-         |${iter("r0", "r1")},
-         |${iter("r1", "r2")},
-         |${iter("r2", "r3")}
-         |SELECT id, rank FROM r3 ORDER BY id""".stripMargin
-    },
-
-    "q_pagerank_dangling" -> {
-      // same fixed-point replay, plus the per-round dangling share:
-      // floor(sum of sink ranks / N) added to every node's incoming sum
-      def iter(prev: String, cur: String) =
-        s"""$cur AS (SELECT nodes.id,
-           |  base.b + CAST(FLOOR((85 * (COALESCE(s.s, 0) + dg.share))
-           |    / 100.0) AS BIGINT) AS rank
-           |  FROM nodes CROSS JOIN base
-           |  CROSS JOIN (SELECT COALESCE(SUM(p.rank), 0)
-           |      // (SELECT n FROM nn) AS share
-           |    FROM $prev p WHERE p.id NOT IN (SELECT id FROM deg)) dg
-           |  LEFT JOIN (SELECT e.dst AS id,
-           |      SUM(CAST(FLOOR(CAST(p.rank AS DOUBLE) / d._deg) AS BIGINT))
-           |        AS s
-           |    FROM e JOIN $prev p ON e.src = p.id
-           |    JOIN deg d ON e.src = d.id
-           |    GROUP BY e.dst) s ON nodes.id = s.id)""".stripMargin
-      s"""WITH nd AS (SELECT count(*) AS nd FROM documents),
-         |e AS (SELECT doc_id AS src, doc_id * 2 + 1 AS dst
-         |        FROM documents, nd WHERE doc_id * 2 + 1 < nd.nd
-         |      UNION ALL
-         |      SELECT doc_id, doc_id * 3 + 2 FROM documents, nd
-         |        WHERE doc_id * 3 + 2 < nd.nd),
-         |nodes AS (SELECT DISTINCT id FROM
-         |  (SELECT src AS id FROM e UNION ALL SELECT dst FROM e)),
-         |nn AS (SELECT count(*) AS n FROM nodes),
-         |deg AS (SELECT src AS id, count(*) AS _deg FROM e GROUP BY 1),
-         |base AS (SELECT
-         |    CAST(FLOOR(1000000 * 15 / (100.0 * n)) AS BIGINT) AS b,
-         |    CAST(FLOOR(1000000.0 / n) AS BIGINT) AS r0 FROM nn),
-         |r0 AS (SELECT id, (SELECT r0 FROM base) AS rank FROM nodes),
-         |${iter("r0", "r1")},
-         |${iter("r1", "r2")},
-         |${iter("r2", "r3")}
-         |SELECT id, rank FROM r3 ORDER BY id""".stripMargin
-    },
-
-    "q_seasonal_spikes" ->
-      """WITH b AS (SELECT event_type, date_trunc('hour', ts) AS bucket,
-        |    count(*) AS n FROM events GROUP BY 1, 2),
-        |s AS (SELECT event_type, EXTRACT(hour FROM bucket) AS season,
-        |    bucket, n FROM b),
-        |st AS (SELECT event_type, season, count(*) AS c, SUM(n) AS sn
-        |  FROM s GROUP BY 1, 2)
-        |SELECT s.event_type,
-        |  strftime(s.bucket, '%Y-%m-%d %H:%M:%S') AS hour, s.season, s.n
-        |FROM s JOIN st ON s.event_type = st.event_type
-        |  AND s.season = st.season
-        |WHERE s.n * st.c * 2 > 3 * st.sn
-        |ORDER BY s.event_type, hour""".stripMargin,
-
-    "q_distinctive_terms" ->
-      s"""WITH w AS (SELECT lang, unnest($wordsSql) AS word FROM documents),
-         |cgw AS (SELECT lang, word, count(*) AS c_gw FROM w GROUP BY 1, 2),
-         |ng AS (SELECT lang, SUM(c_gw) AS ng FROM cgw GROUP BY 1),
-         |cw AS (SELECT word, SUM(c_gw) AS cw FROM cgw GROUP BY 1),
-         |t AS (SELECT SUM(ng) AS nt FROM ng),
-         |sc AS (SELECT cgw.lang, cgw.word, cgw.c_gw,
-         |    ${Sql.sround("ln(CAST(c_gw + 1 AS DOUBLE) / CAST(ng - c_gw + 1 AS DOUBLE)) - ln(CAST(cw - c_gw + 1 AS DOUBLE) / CAST((nt - ng) - (cw - c_gw) + 1 AS DOUBLE))")}
-         |      AS score
-         |  FROM cgw JOIN ng USING (lang) JOIN cw USING (word) CROSS JOIN t
-         |  WHERE c_gw >= 5),
-         |rk AS (SELECT lang, word, c_gw, score,
-         |    ROW_NUMBER() OVER (PARTITION BY lang
-         |      ORDER BY score DESC, word ASC) AS rank_in_key FROM sc)
-         |SELECT lang, word, c_gw, score, rank_in_key FROM rk
-         |WHERE rank_in_key <= 10
-         |ORDER BY lang, rank_in_key""".stripMargin,
-
-    "q_length_outliers" ->
-      """WITH m AS (SELECT source, quantile_cont(n_chars, 0.5) AS med
-        |  FROM documents GROUP BY 1),
-        |d AS (SELECT dd.source, m.med,
-        |    quantile_cont(abs(dd.n_chars - m.med), 0.5) AS mad
-        |  FROM documents dd JOIN m USING (source)
-        |  GROUP BY dd.source, m.med)
-        |SELECT doc_id, dd.source, n_chars
-        |FROM documents dd JOIN d USING (source)
-        |WHERE d.mad > 0
-        |  AND abs(dd.n_chars - d.med) > 2.0 * 1.4826 * d.mad
-        |ORDER BY doc_id""".stripMargin,
-
-    "q_label_spread" -> {
-      val sh =
-        """list_distinct(list_transform(
-          |  range(1, greatest(len(string_split_regex(trim(lower(text)), '\s+')) - 1, 1)),
-          |  i -> concat_ws(' ',
-          |    string_split_regex(trim(lower(text)), '\s+')[i],
-          |    string_split_regex(trim(lower(text)), '\s+')[i+1],
-          |    string_split_regex(trim(lower(text)), '\s+')[i+2])))"""
-          .stripMargin.replace("\n", " ")
-      val jac = """CASE WHEN len(list_distinct(a.sh || b.sh)) = 0 THEN 0.0
-        |  ELSE CAST(len(list_filter(a.sh, x -> list_contains(b.sh, x))) AS DOUBLE)
-        |     / len(list_distinct(a.sh || b.sh)) END""".stripMargin
-        .replace("\n", " ")
-      s"""WITH m AS (SELECT doc_id, source, text,
-         |    CASE WHEN doc_id % 7 = 0 THEN NULL ELSE lang END AS lbl
-         |  FROM documents),
-         |d AS (SELECT doc_id, source, lbl, $sh AS sh FROM m),
-         |p AS (SELECT a.doc_id AS ua, b.doc_id AS ub
-         |  FROM d a JOIN d b ON a.source = b.source
-         |    AND a.doc_id < b.doc_id
-         |  WHERE ROUND($jac, 4) >= 0.02),
-         |sym AS (SELECT ua AS u, ub AS v FROM p
-         |        UNION ALL SELECT ub, ua FROM p),
-         |v AS (SELECT s.u, dl.lbl AS nl, count(*) AS n_votes
-         |  FROM sym s
-         |  JOIN d du ON s.u = du.doc_id AND du.lbl IS NULL
-         |  JOIN d dl ON s.v = dl.doc_id AND dl.lbl IS NOT NULL
-         |  GROUP BY 1, 2),
-         |r AS (SELECT u, nl, n_votes, ROW_NUMBER() OVER (PARTITION BY u
-         |    ORDER BY n_votes DESC, nl ASC) AS rk FROM v)
-         |SELECT u AS doc_id, nl AS label, n_votes FROM r WHERE rk = 1
-         |ORDER BY doc_id""".stripMargin
-    },
-
-    "q_dup_histogram" ->
-      """WITH u AS (SELECT text FROM documents
-        |  UNION ALL SELECT text FROM documents WHERE doc_id % 7 = 0
-        |  UNION ALL SELECT text FROM documents WHERE doc_id % 21 = 0),
-        |c AS (SELECT md5(text) AS h, count(*) AS cluster_size
-        |  FROM u GROUP BY 1)
-        |SELECT cluster_size, count(*) AS n_clusters
-        |FROM c GROUP BY 1 ORDER BY cluster_size""".stripMargin,
-
-    "q_token_concentration" ->
-      // decile bounds come from the engine-side aux (single-sourced — see
-      // the Spark twin); bin assignment replays `1 + count(bounds <= x)`
-      // over identical doubles, and the cumulative share is BIGINT floor
-      // division in both engines.
-      s"""WITH bb AS (SELECT b FROM
-         |    read_parquet('/tmp/graft_oracle_aux/{SF}/tc_bounds/*.parquet')),
-         |pb AS (SELECT
-         |    (SELECT 1 + COUNT(*) FROM bb WHERE d.n_chars >= bb.b) AS bin,
-         |    count(*) AS n_docs,
-         |    SUM(${Sql.tokenCountSql("d.text")}) AS n_tokens
-         |  FROM documents d GROUP BY 1),
-         |t AS (SELECT SUM(n_tokens) AS tt FROM pb)
-         |SELECT a.bin, CAST(ANY_VALUE(a.n_docs) AS BIGINT) AS n_docs,
-         |  CAST(ANY_VALUE(a.n_tokens) AS BIGINT) AS n_tokens,
-         |  CAST((SUM(b.n_tokens) * 1000000) // ANY_VALUE(t.tt) AS BIGINT)
-         |    AS cum_share_e6
-         |FROM pb a JOIN pb b ON b.bin <= a.bin CROSS JOIN t
-         |GROUP BY a.bin ORDER BY a.bin""".stripMargin,
-
-    "q_group_mode" ->
-      """WITH c AS (SELECT source, lang, count(*) AS n
-        |  FROM documents GROUP BY 1, 2),
-        |r AS (SELECT source, lang, n, ROW_NUMBER() OVER (
-        |    PARTITION BY source ORDER BY n DESC, lang ASC) AS rk FROM c)
-        |SELECT source, lang AS mode_lang, n FROM r WHERE rk = 1
-        |ORDER BY source""".stripMargin,
-
-    "q_minmax_scale" ->
-      s"""WITH x AS (SELECT event_type, MIN(value) AS lo, MAX(value) AS hi
-         |  FROM events GROUP BY 1)
-         |SELECT e.event_id, e.event_type,
-         |  CASE WHEN e.value IS NULL THEN NULL
-         |       WHEN x.hi = x.lo THEN 0.0
-         |       ELSE ${Sql.sround("(e.value - x.lo) / (x.hi - x.lo)", 6)}
-         |  END AS scaled
-         |FROM events e JOIN x USING (event_type)
-         |ORDER BY e.event_id""".stripMargin,
-
-    "q_slice_diversity" ->
-      // counting is re-derived here and cross-checked (the aux join keys on
-      // the count value, so a wrong engine-side count drops rows and fails
-      // the gate); only the e15-quantized ln terms are single-sourced, and
-      // the entropy cell is pure BIGINT arithmetic in both engines.
-      """WITH c AS (SELECT source, lang, count(*) AS c
-        |  FROM documents GROUP BY 1, 2),
-        |t AS (SELECT source, SUM(c) AS n, COUNT(*) AS n_cats
-        |  FROM c GROUP BY 1),
-        |a AS (SELECT source, lang, c, tm_e15 FROM
-        |  read_parquet('/tmp/graft_oracle_aux/{SF}/slice_terms/*.parquet')),
-        |x AS (SELECT c.source, t.n, t.n_cats, a.tm_e15
-        |  FROM c JOIN t USING (source)
-        |  JOIN a ON a.source = c.source AND a.lang = c.lang AND a.c = c.c)
-        |SELECT source, CAST(ANY_VALUE(n) AS BIGINT) AS n_rows,
-        |  CAST(ANY_VALUE(n_cats) AS BIGINT) AS n_cats,
-        |  CAST((-SUM(tm_e15)) // 1000000 AS BIGINT) AS entropy_e9
-        |FROM x GROUP BY source ORDER BY source""".stripMargin,
-
-    "q_type_correlation" -> {
-      val types = Seq("click", "error", "purchase", "signup", "view")
-      val cols = types.map(tp =>
-        s"SUM(CASE WHEN event_type = '$tp' THEN 1 ELSE 0 END) AS $tp")
-        .mkString(", ")
-      val sums = types.map(t =>
-        s"CAST(SUM(CAST($t AS DECIMAL(38,10))) AS DOUBLE) AS s_$t")
-      val qs = types.map(t =>
-        s"CAST(SUM(CAST($t * $t AS DECIMAL(38,10))) AS DOUBLE) AS q_$t")
-      val pairs = for {
-        i <- types.indices; j <- types.indices if i < j
-      } yield (types(i), types(j))
-      val ps = pairs.map { case (a, b) =>
-        s"CAST(SUM(CAST($a * $b AS DECIMAL(38,10))) AS DOUBLE) AS p_${a}_$b" }
-      val pairRows = pairs.map { case (a, b) =>
-        val den = s"sqrt(n * q_$a - s_$a * s_$a) * " +
-          s"sqrt(n * q_$b - s_$b * s_$b)"
-        s"SELECT '$a' AS col_a, '$b' AS col_b, CASE WHEN $den = 0 " +
-          s"THEN 0.0 ELSE " +
-          Sql.sround(s"(n * p_${a}_$b - s_$a * s_$b) / ($den)") +
-          " END AS corr FROM m"
-      }.mkString("\nUNION ALL\n")
-      s"""WITH h AS (SELECT date_trunc('hour', ts) AS b, $cols
-         |  FROM events GROUP BY 1),
-         |m AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n,
-         |  ${(sums ++ qs ++ ps).mkString(",\n  ")}
-         |  FROM h)
-         |SELECT col_a, col_b, corr FROM ($pairRows)
-         |ORDER BY col_a, col_b""".stripMargin
-    },
-
-    "q_scd2_lookup" ->
-      """WITH h AS (SELECT user_id, value AS value_at, ts AS valid_from,
-        |    LEAD(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-        |      AS valid_to
-        |  FROM events),
-        |p AS (SELECT event_id AS probe_id, user_id,
-        |    ts + INTERVAL 30 MINUTE AS pts FROM events)
-        |SELECT p.probe_id, h.value_at
-        |FROM p LEFT JOIN h ON p.user_id = h.user_id
-        |  AND h.valid_from <= p.pts
-        |  AND (h.valid_to IS NULL OR p.pts < h.valid_to)
-        |ORDER BY p.probe_id""".stripMargin,
-
-    "q_cusum_drift" ->
-      """WITH b AS (SELECT event_type, date_trunc('hour', ts) AS bucket,
-        |    count(*) AS n FROM events GROUP BY 1, 2),
-        |st AS (SELECT event_type, count(*) AS c, SUM(n) AS s
-        |  FROM b GROUP BY 1),
-        |cu AS (SELECT b.event_type, b.bucket, b.n, st.s,
-        |    CAST(SUM(b.n * st.c - st.s) OVER (PARTITION BY b.event_type
-        |      ORDER BY b.bucket) AS BIGINT) AS cusum
-        |  FROM b JOIN st USING (event_type))
-        |SELECT event_type, strftime(bucket, '%Y-%m-%d %H:%M:%S') AS hour,
-        |  CAST(n AS BIGINT) AS n, cusum
-        |FROM cu WHERE abs(cusum) * 20 > 1 * s
-        |ORDER BY event_type, hour""".stripMargin,
-
-    "q_cdc_stream_twin" ->
-      // latest-row-per-key under the operator's total order
-      // (ts, alive, value) — what a converged CDC state must equal
-      """WITH ch AS (SELECT user_id AS id, ts,
-        |    CASE WHEN event_type = 'error' THEN 'delete'
-        |         WHEN event_type = 'click' THEN 'update'
-        |         ELSE 'insert' END AS op,
-        |    COALESCE(value, 0.0) AS value
-        |  FROM events),
-        |r AS (SELECT id, ts, op, value, ROW_NUMBER() OVER (PARTITION BY id
-        |    ORDER BY ts DESC, (op <> 'delete') DESC, value DESC) AS rk
-        |  FROM ch)
-        |SELECT id, value, (op <> 'delete') AS alive,
-        |  epoch_ms(ts) AS ts_ms
-        |FROM r WHERE rk = 1 ORDER BY id""".stripMargin,
-
-    "q_quality_monitor_twin" ->
-      s"""WITH d AS (SELECT source, text,
-         |    make_timestamp(doc_id * 60000000) AS ts FROM documents),
-         |w AS (SELECT source,
-         |    make_timestamp((epoch_ms(ts) // 600000) * 600000000) AS ws,
-         |    $tokenCountSql AS tok, $qualityScoreSql AS q FROM d)
-         |SELECT strftime(ws, '%Y-%m-%d %H:%M:%S') AS window_start, source,
-         |  CAST(COUNT(*) AS BIGINT) AS n_docs,
-         |  CAST(SUM(tok) AS BIGINT) AS n_tokens,
-         |  CAST(ROUND(SUM(q) * 8) AS BIGINT) AS quality_eighths
-         |FROM w GROUP BY 1, 2 ORDER BY window_start, source""".stripMargin,
-
-    "q_hard_negatives" -> {
-      val sim = Sql.sround("CASE WHEN sqrt(d.nsqa) * sqrt(d.nsqc) = 0 " +
-        "THEN 0.0 ELSE d.dot / (sqrt(d.nsqa) * sqrt(d.nsqc)) END")
-      s"""WITH a AS (SELECT vec_id AS anchor_id, label AS albl,
-         |    CAST(unnest(embedding) AS DOUBLE) AS av,
-         |    generate_subscripts(embedding, 1) AS i
-         |  FROM embeddings WHERE vec_id < 3),
-         |c AS (SELECT vec_id AS cand_id, label AS clbl,
-         |    CAST(unnest(embedding) AS DOUBLE) AS cv,
-         |    generate_subscripts(embedding, 1) AS i
-         |  FROM embeddings),
-         |d AS (SELECT a.anchor_id, c.cand_id,
-         |    SUM(a.av * c.cv) AS dot, SUM(a.av * a.av) AS nsqa,
-         |    SUM(c.cv * c.cv) AS nsqc
-         |  FROM a JOIN c ON a.i = c.i AND a.albl <> c.clbl
-         |  GROUP BY 1, 2),
-         |r AS (SELECT d.anchor_id, d.cand_id, $sim AS similarity
-         |  FROM d),
-         |rk AS (SELECT anchor_id, cand_id, similarity,
-         |    ROW_NUMBER() OVER (PARTITION BY anchor_id
-         |      ORDER BY similarity DESC, cand_id ASC) AS rank_in_key
-         |  FROM r)
-         |SELECT anchor_id, cand_id, similarity, rank_in_key FROM rk
-         |WHERE rank_in_key <= 5
-         |ORDER BY anchor_id, rank_in_key""".stripMargin
-    },
-
-    "q_markov" ->
-      s"""WITH l AS (SELECT user_id, event_type,
-         |    LAG(event_type, 1) OVER (PARTITION BY user_id
-         |      ORDER BY ts, event_id) AS from_state
-         |  FROM events),
-         |p AS (SELECT from_state, event_type AS to_state, count(*) AS n
-         |  FROM l WHERE from_state IS NOT NULL GROUP BY 1, 2),
-         |t AS (SELECT from_state, SUM(n) AS tot FROM p GROUP BY 1)
-         |SELECT p.from_state, p.to_state, p.n,
-         |  ${Sql.sround("CAST(p.n AS DOUBLE) / CAST(t.tot AS DOUBLE)")} AS p
-         |FROM p JOIN t USING (from_state)
-         |ORDER BY p.from_state, p.to_state""".stripMargin,
-
-    "q_group_trend" ->
-      s"""WITH r AS (SELECT event_type, epoch_ns(ts) // 1000000000 AS xt,
-         |    value AS y FROM events WHERE value IS NOT NULL),
-         |m0 AS (SELECT event_type, MIN(xt) AS t0 FROM r GROUP BY 1),
-         |x AS (SELECT r.event_type, r.xt - m0.t0 AS x, r.y
-         |  FROM r JOIN m0 USING (event_type)),
-         |mo AS (SELECT event_type,
-         |    CAST(COUNT(*) AS DOUBLE) AS n,
-         |    CAST(SUM(x) AS DOUBLE) AS sx,
-         |    CAST(SUM(CAST(x * x AS DECIMAL(38,0))) AS DOUBLE) AS sxx,
-         |    CAST(SUM(CAST(y AS DECIMAL(38,10))) AS DOUBLE) AS sy,
-         |    CAST(SUM(CAST(x * y AS DECIMAL(38,10))) AS DOUBLE) AS sxy
-         |  FROM x GROUP BY 1)
-         |SELECT event_type, CAST(n AS BIGINT) AS n,
-         |  CASE WHEN n * sxx - sx * sx = 0 THEN NULL
-         |       ELSE ${Sql.sround("(n * sxy - sx * sy) / (n * sxx - sx * sx)", 6)}
-         |  END AS slope_per_sec,
-         |  ${Sql.sround("sy / n")} AS mean
-         |FROM mo ORDER BY event_type""".stripMargin,
-
-    "q_key_discovery" -> {
-      def cand(label: String, distinctExpr: String) =
-        s"""SELECT '$label' AS candidate, COUNT(*) AS n_rows,
-           |  $distinctExpr AS n_distinct,
-           |  COUNT(*) = $distinctExpr AS is_key FROM orders""".stripMargin
-      s"""${cand("o_custkey", "COUNT(DISTINCT o_custkey)")}
-         |UNION ALL
-         |${cand("o_custkey,o_orderdate",
-           "COUNT(DISTINCT (o_custkey, o_orderdate))")}
-         |UNION ALL
-         |${cand("o_orderkey", "COUNT(DISTINCT o_orderkey)")}
-         |ORDER BY candidate""".stripMargin
-    },
-
-    "q_bpe_roundtrip" ->
-      """SELECT doc_id,
-        |  trim(regexp_replace(lower(text), '\s+', ' ', 'g')) AS t
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "q_bpe_fertility" ->
-      // chars re-derived from the shared normalization; token counts from
-      // the engine-side aux (keyed join — a wrong doc set drops rows)
-      """WITH nrm AS (SELECT doc_id, lang,
-        |    length(replace(trim(regexp_replace(lower(text), '\s+', ' ',
-        |      'g')), ' ', '')) AS nc
-        |  FROM documents),
-        |a AS (SELECT doc_id, _nt AS nt FROM
-        |  read_parquet('/tmp/graft_oracle_aux/{SF}/bpe_tokens/*.parquet')),
-        |j AS (SELECT nrm.lang, nrm.nc, a.nt FROM nrm JOIN a USING (doc_id))
-        |SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_docs,
-        |  CAST(SUM(nc) AS BIGINT) AS n_chars_norm,
-        |  CAST(SUM(nt) AS BIGINT) AS n_tokens,
-        |  CAST((SUM(nc) * 1000000) // SUM(nt) AS BIGINT)
-        |    AS chars_per_token_e6
-        |FROM j GROUP BY lang ORDER BY lang""".stripMargin,
-
-    "q_rrf" ->
-      s"""WITH s AS (SELECT doc_id, $qualityScoreSql AS q, n_chars
-         |  FROM documents),
-         |a AS (SELECT doc_id, r AS rank FROM (SELECT doc_id,
-         |    ROW_NUMBER() OVER (ORDER BY q DESC, doc_id ASC) AS r FROM s)
-         |  WHERE r <= 100),
-         |b AS (SELECT doc_id, r AS rank FROM (SELECT doc_id,
-         |    ROW_NUMBER() OVER (ORDER BY n_chars DESC, doc_id ASC) AS r
-         |  FROM s) WHERE r <= 100)
-         |SELECT COALESCE(a.doc_id, b.doc_id) AS doc_id,
-         |  ${Sql.sround("COALESCE(1.0 / (60 + a.rank), 0.0) + COALESCE(1.0 / (60 + b.rank), 0.0)", 6)} AS rrf
-         |FROM a FULL OUTER JOIN b ON a.doc_id = b.doc_id
-         |ORDER BY rrf DESC, doc_id ASC""".stripMargin,
-
-    "q_embed_drift" -> {
-      def cent(filt: String, out: String) =
-        s"""SELECT label, i AS dim,
-           |  CAST(SUM(CAST(CAST(v AS DOUBLE) AS DECIMAL(38,10))) AS DOUBLE)
-           |    / COUNT(v) AS $out
-           |FROM (SELECT label, unnest(embedding) AS v,
-           |    generate_subscripts(embedding, 1) AS i
-           |  FROM embeddings WHERE $filt)
-           |GROUP BY 1, 2""".stripMargin
-      s"""WITH ca AS (${cent("vec_id % 2 = 0", "ma")}),
-         |cb AS (${cent("vec_id % 2 = 1", "mb")}),
-         |j AS (SELECT ca.label,
-         |    CAST((ca.ma - cb.mb) * (ca.ma - cb.mb) AS DECIMAL(38,18)) AS sq
-         |  FROM ca JOIN cb ON ca.label = cb.label AND ca.dim = cb.dim)
-         |SELECT label, COUNT(*) AS n_dims,
-         |  ${Sql.sround("sqrt(CAST(SUM(sq) AS DOUBLE))")} AS drift
-         |FROM j GROUP BY label ORDER BY label""".stripMargin
-    },
-
-    "q_normalize_group" ->
-      s"""WITH st AS (SELECT event_type,
-         |    CAST(COUNT(value) AS DOUBLE) AS n,
-         |    CAST(SUM(CAST(value AS DECIMAL(38,10))) AS DOUBLE) AS s,
-         |    CAST(SUM(CAST(value * value AS DECIMAL(38,10))) AS DOUBLE) AS q
-         |  FROM events GROUP BY 1)
-         |SELECT e.event_id, e.event_type,
-         |  CASE WHEN e.value IS NULL THEN NULL
-         |       WHEN sqrt(st.n * st.q - st.s * st.s) / st.n = 0 THEN 0.0
-         |       ELSE ${Sql.sround("(e.value - st.s / st.n) / (sqrt(st.n * st.q - st.s * st.s) / st.n)")}
-         |  END AS z
-         |FROM events e JOIN st USING (event_type)
-         |ORDER BY e.event_id""".stripMargin,
-
-    "q_skew_report" ->
-      """WITH c AS (SELECT event_type, count(*) AS n FROM events GROUP BY 1),
-        |t AS (SELECT count(*) AS total FROM events)
-        |SELECT event_type, n,
-        |  FLOOR((CAST(n AS DOUBLE) / CAST(total AS DOUBLE)) * 1e6 + 0.5) / 1e6
-        |    AS share
-        |FROM c CROSS JOIN t
-        |ORDER BY n DESC, event_type ASC LIMIT 10""".stripMargin,
-
-    "q_label_index" ->
-      """WITH d AS (SELECT source, count(*) AS c FROM documents GROUP BY 1),
-        |r AS (SELECT source,
-        |    ROW_NUMBER() OVER (ORDER BY c DESC, source ASC) - 1 AS source_idx
-        |  FROM d)
-        |SELECT doc_id, t.source, r.source_idx
-        |FROM documents t JOIN r ON t.source = r.source
-        |ORDER BY doc_id""".stripMargin,
-
-    "q_extract_entities" -> {
-      val raw = """'Reach ' || c_name || ' at ' ||
-        | lower(regexp_replace(c_name, '[#0]', '', 'g')) ||
-        | '@mail.example, tel (555) 123-4567, SSN 123-45-6789, card 4111 1111 1111 1111.'"""
-        .stripMargin.replace("\n", "")
-      val kinds = TF.piiPatterns.map { case (kind, re) =>
-        s"""SELECT c_custkey, '$kind' AS kind,
-           |  unnest(range(1, len(regexp_extract_all(raw, '$re')) + 1)) AS n,
-           |  unnest(regexp_extract_all(raw, '$re')) AS entity FROM d"""
-          .stripMargin
-      }.mkString("\nUNION ALL\n")
-      s"""WITH d AS (SELECT c_custkey, $raw AS raw FROM customer)
-         |SELECT c_custkey, kind, n, entity FROM ($kinds)
-         |ORDER BY c_custkey, kind, n""".stripMargin
-    },
-
-    "q_tfidf" ->
-      s"""WITH base AS (SELECT doc_id, $wordsSql AS l FROM documents),
-         |w AS (SELECT doc_id, unnest(l) AS term FROM base),
-         |tf AS (SELECT doc_id, term, count(*) AS tf FROM w GROUP BY 1, 2),
-         |dfreq AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-         |vocab AS (SELECT term, df FROM dfreq
-         |  ORDER BY df DESC, term ASC LIMIT 100),
-         |n AS (SELECT count(*) AS n FROM documents)
-         |SELECT t.doc_id, t.term,
-         |  ${Sql.sround("t.tf * (ln((n.n + 1.0) / (v.df + 1.0)) + 1.0)")} AS tfidf
-         |FROM tf t JOIN vocab v ON t.term = v.term CROSS JOIN n
-         |ORDER BY t.doc_id, t.term""".stripMargin,
-
-    "q_redact_pii" -> {
-      val email = TF.piiPatterns.toMap.apply("email")
-      val ssn = TF.piiPatterns.toMap.apply("ssn")
-      val cc = TF.piiPatterns.toMap.apply("credit_card")
-      val phone = TF.piiPatterns.toMap.apply("phone_us")
-      val raw = """'Reach ' || c_name || ' at ' ||
-        | lower(regexp_replace(c_name, '[#0]', '', 'g')) ||
-        | '@mail.example, tel (555) 123-4567, SSN 123-45-6789, card 4111 1111 1111 1111.'"""
-        .stripMargin.replace("\n", "")
-      s"""WITH d AS (SELECT c_custkey, $raw AS raw FROM customer)
-         |SELECT c_custkey,
-         |  regexp_replace(regexp_replace(regexp_replace(regexp_replace(raw,
-         |    '$email', '[EMAIL]', 'g'),
-         |    '$ssn', '[SSN]', 'g'),
-         |    '$cc', '[CREDIT_CARD]', 'g'),
-         |    '$phone', '[PHONE_US]', 'g') AS redacted,
-         |  len(regexp_extract_all(raw, '$email')) AS n_email,
-         |  len(regexp_extract_all(raw, '$ssn')) AS n_ssn
-         |FROM d ORDER BY c_custkey""".stripMargin
-    },
-
-    "q_clean_text" ->
-      """WITH d AS (SELECT doc_id,
-        |  '<p> ' || substr(text, 1, 80) ||
-        |  ' </p><br/>&amp; <b>bold</b> &lt;tag&gt; &quot;q&quot;' ||
-        |  chr(9) || '.' AS raw FROM documents)
-        |SELECT doc_id,
-        |  trim(regexp_replace(regexp_replace(
-        |    replace(replace(replace(replace(replace(replace(
-        |      regexp_replace(raw, '<[^>]*>', ' ', 'g'),
-        |      '&lt;', '<'), '&gt;', '>'), '&quot;', '"'), '&#39;', ''''),
-        |      '&nbsp;', ' '), '&amp;', '&'),
-        |    '[\x00-\x1F\x7F]', ' ', 'g'),
-        |    ' {2,}', ' ', 'g')) AS cleaned
-        |FROM d ORDER BY doc_id""".stripMargin,
-
-    "q_chunk_docs" ->
-      """WITH w AS (SELECT doc_id,
-        |    string_split(trim(regexp_replace(text, '\s+', ' ', 'g')), ' ') AS l
-        |  FROM documents),
-        |c AS (SELECT doc_id, l,
-        |    1 + CAST(CEIL(GREATEST(len(l) - 16, 0) / 12.0) AS INTEGER) AS nc
-        |  FROM w),
-        |x AS (SELECT doc_id,
-        |    unnest(list_transform(range(0, CAST(nc AS BIGINT)), i ->
-        |      {'chunk_id': i,
-        |       'chunk_text': array_to_string(l[(i*12 + 1):(i*12 + 16)], ' ')}),
-        |      recursive := true)
-        |  FROM c)
-        |SELECT doc_id, chunk_id, chunk_text FROM x
-        |ORDER BY doc_id, chunk_id""".stripMargin,
-
-    "q_doc_repetition" -> {
-      val words = wordsSql
-      s"""WITH base AS (SELECT doc_id, $words AS l FROM documents),
-         |per_row AS (SELECT doc_id, len(l) AS n,
-         |    len(list_distinct(l)) AS d1,
-         |    len(l) - 1 AS n2,
-         |    len(list_distinct(list_transform(range(1, len(l)),
-         |      i -> l[i] || ' ' || l[i+1]))) AS d2
-         |  FROM base),
-         |w AS (SELECT doc_id, unnest(l) AS word FROM base),
-         |wc AS (SELECT doc_id, word, count(*) AS c FROM w GROUP BY 1, 2),
-         |tops AS (SELECT doc_id, max(c) AS maxc, sum(c) AS ntot
-         |  FROM wc GROUP BY 1)
-         |SELECT p.doc_id,
-         |  ${Sql.sround("CASE WHEN p.n > 0 THEN CAST(p.n - p.d1 AS DOUBLE) / p.n ELSE 0.0 END")} AS dup_word_frac,
-         |  ${Sql.sround("CASE WHEN p.n2 > 0 THEN CAST(p.n2 - p.d2 AS DOUBLE) / p.n2 ELSE 0.0 END")} AS dup_bigram_frac,
-         |  ${Sql.sround("CASE WHEN t.ntot > 0 THEN CAST(t.maxc AS DOUBLE) / t.ntot ELSE 0.0 END")} AS top_word_frac
-         |FROM per_row p JOIN tops t ON p.doc_id = t.doc_id
-         |ORDER BY p.doc_id""".stripMargin
-    },
-
-    "q_pack_docs" ->
-      s"""WITH d AS (SELECT doc_id, $tokenCountSql AS n_tokens,
-         |        CAST(FLOOR(doc_id / 100.0) AS BIGINT) AS shard FROM documents),
-         |c AS (SELECT doc_id, n_tokens, shard,
-         |        SUM(n_tokens) OVER (PARTITION BY shard ORDER BY doc_id
-         |        ROWS UNBOUNDED PRECEDING) AS cum FROM d)
-         |SELECT doc_id, n_tokens,
-         |  shard * 4294967296 +
-         |  GREATEST(CAST(CEIL(CAST(cum AS DOUBLE) / 2000) AS BIGINT) - 1, 0)
-         |    AS window_id
-         |FROM c ORDER BY doc_id""".stripMargin,
-
-    "q_doc_dedup_exact" ->
-      """SELECT MIN(doc_id) AS doc_id, md5(text) AS content_hash,
-        |  COUNT(*) AS n_copies
-        |FROM documents GROUP BY md5(text) ORDER BY doc_id""".stripMargin,
-
-    "q_dedup_incremental" ->
-      """WITH b AS (SELECT doc_id, source, text FROM documents WHERE doc_id >= 250),
-        |f AS (SELECT doc_id, source, text,
-        |    ROW_NUMBER() OVER (PARTITION BY text ORDER BY doc_id ASC) AS rn
-        |  FROM b)
-        |SELECT doc_id, source FROM f
-        |WHERE rn = 1 AND NOT EXISTS (
-        |  SELECT 1 FROM documents h
-        |  WHERE h.doc_id < 250 AND h.text = f.text)
-        |ORDER BY doc_id""".stripMargin,
-
-    "q_decontaminate" -> {
-      s"""WITH w0 AS (SELECT doc_id,
-         |    string_split_regex(trim(lower(text)), '\\s+') AS ws
-         |  FROM documents),
-         |ev AS (SELECT DISTINCT unnest($shw) AS sh FROM w0
-         |  WHERE doc_id % 50 = 0),
-         |cs AS (SELECT doc_id, unnest($shw) AS sh FROM w0
-         |  WHERE doc_id % 50 <> 0),
-         |hits AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_overlap
-         |  FROM cs JOIN ev USING (sh) GROUP BY doc_id)
-         |SELECT d.doc_id, COALESCE(h.n_overlap, 0) AS n_overlap,
-         |  COALESCE(h.n_overlap, 0) >= 1 AS contaminated
-         |FROM documents d LEFT JOIN hits h ON d.doc_id = h.doc_id
-         |WHERE d.doc_id % 50 <> 0
-         |ORDER BY d.doc_id""".stripMargin
-    },
-
-    "q_quality_lr" ->
-      // recompute the signals from text, read the learned boundary from
-      // aux, replay the left-associated linear decision
-      s"""WITH c AS (SELECT * FROM
-         |    read_parquet('/tmp/graft_oracle_aux/{SF}/quality_lr_coef/*.parquet')),
-         |f AS (SELECT doc_id, $punctRatioSql AS p, $stopRatioSql AS st,
-         |    $meanWlSql AS m, CAST($tokenCountSql AS DOUBLE) AS tk
-         |  FROM documents),
-         |sc AS (SELECT doc_id,
-         |    c.w_punct * p + c.w_stop * st + c.w_mwl * m + c.w_tok * tk + c.b
-         |      AS margin
-         |  FROM f, c)
-         |SELECT doc_id,
-         |  CAST(FLOOR(margin * 1000000.0 + 0.5) AS BIGINT) AS margin_x1e6,
-         |  margin >= 0.0 AS ml_keep
-         |FROM sc ORDER BY doc_id""".stripMargin,
-
-    "q_corpus_card" ->
-      s"""WITH per_doc AS (SELECT lang, source, $tokenCountSql AS tok,
-         |    md5(text) AS key, $qualityScoreSql AS q
-         |  FROM documents),
-         |g AS (SELECT lang, source,
-         |    CAST(COUNT(*) AS BIGINT) AS n_docs,
-         |    CAST(SUM(tok) AS BIGINT) AS n_tokens,
-         |    CAST(COUNT(DISTINCT key) AS BIGINT) AS n_unique,
-         |    ${Sql.sround("SUM(q) / COUNT(*)")} AS mean_quality
-         |  FROM per_doc GROUP BY lang, source)
-         |SELECT lang, source, n_docs, n_tokens,
-         |  ${Sql.sround("CAST(n_tokens AS DOUBLE) / (SELECT CAST(SUM(n_tokens) AS DOUBLE) FROM g)")} AS token_share,
-         |  n_unique,
-         |  ${Sql.sround("CAST(n_docs - n_unique AS DOUBLE) / CAST(n_docs AS DOUBLE)")} AS dup_frac,
-         |  mean_quality
-         |FROM g ORDER BY lang, source""".stripMargin,
-
-    "q_doc_bm25" ->
-      // the same BM25 arithmetic, shaped identically (left-assoc chains and
-      // the +1-smoothed idf), per-term scores summed through DECIMAL(38,18)
-      s"""WITH w AS (SELECT doc_id, $wordsSql AS ws FROM documents),
-         |tok AS (SELECT doc_id, CAST(len(ws) AS DOUBLE) AS dl, unnest(ws) AS t
-         |        FROM w),
-         |tf AS (SELECT doc_id, dl, t, CAST(COUNT(*) AS DOUBLE) AS tf
-         |       FROM tok WHERE t IN ('spark', 'table', 'join', 'window')
-         |       GROUP BY doc_id, dl, t),
-         |dfq AS (SELECT t, CAST(COUNT(DISTINCT doc_id) AS DOUBLE) AS dfr
-         |        FROM tf GROUP BY t),
-         |st AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n,
-         |         CAST(SUM(len(ws)) AS DOUBLE) / COUNT(*) AS avgdl FROM w),
-         |sc AS (SELECT tf.doc_id,
-         |    ln((st.n - dfq.dfr + 0.5) / (dfq.dfr + 0.5) + 1.0) *
-         |      (tf.tf * (1.2 + 1.0)) /
-         |      (tf.tf + 1.2 * (1.0 - 0.75 + 0.75 * tf.dl / st.avgdl)) AS s
-         |  FROM tf JOIN dfq ON tf.t = dfq.t, st)
-         |SELECT doc_id,
-         |  ROUND(CAST(SUM(CAST(s AS DECIMAL(38,18))) AS DOUBLE), 4) AS score
-         |FROM sc GROUP BY doc_id ORDER BY score DESC, doc_id LIMIT 20""".stripMargin,
-
-    "q_doc_top_ngrams" ->
-      // per-doc DISTINCT 3-grams (same spelling the jaccard oracle proves
-      // equivalent to the shingle kernel), then doc-frequency top-20 with a
-      // total (doc_freq DESC, shingle) order; split hoisted out of the
-      // lambda (see `shw`)
-      s"""WITH w0 AS (SELECT doc_id,
-        |    string_split_regex(trim(lower(text)), '\\s+') AS ws
-        |  FROM documents),
-        |sh AS (SELECT doc_id, unnest($shw) AS shingle FROM w0)
-        |SELECT shingle, CAST(COUNT(*) AS BIGINT) AS doc_freq
-        |FROM sh GROUP BY shingle
-        |ORDER BY doc_freq DESC, shingle LIMIT 20""".stripMargin,
-
-    "q_doc_fuzzy_keep" ->
       // EXHAUSTIVE ground truth, engine-independent: every pair with a
       // nonzero shingle overlap is scored (inverted-index join-count --
       // a pair must share a shingle to reach J >= 0.8, so skipping
@@ -3449,149 +2209,197 @@ object DocQueries {
          |  UNION
          |  SELECT sym.v, reach.lbl FROM sym JOIN reach ON sym.u = reach.id)
          |SELECT id AS doc_id, MIN(lbl) AS cluster, MIN(lbl) = id AS keep
-         |FROM reach GROUP BY id ORDER BY doc_id""".stripMargin,
+         |FROM reach GROUP BY id ORDER BY doc_id""".stripMargin),
 
-    "q_encoding_screen" ->
-      // distinct-shingle vocabulary from the same normalization chain the
-      // set-sim twins use; injective is the engine-verified invariant
-      // (a collision throws engine-side, so TRUE here pins the pass)
-      """WITH dw AS (SELECT doc_id,
-        |    string_split_regex(trim(lower(text)), '\s+') AS ws
-        |  FROM documents),
-        |d AS (SELECT doc_id,
-        |    list_distinct(list_transform(range(1, greatest(len(ws) - 1, 1)),
-        |      i -> concat_ws(' ', ws[i], ws[i+1], ws[i+2]))) AS sh FROM dw),
-        |e0 AS (SELECT unnest(sh) AS g FROM d)
-        |SELECT count(DISTINCT g) AS vocab, TRUE AS injective
-        |FROM e0""".stripMargin,
-
-    "q_set_sim_join" ->
-      // the same prefix-filter construction, independently in SQL; pure
-      // integer prefix length and e4 jaccard on both sides
-      """WITH d0 AS (SELECT doc_id, text FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 100000, substr(text, strpos(text, ' ') + 1)
-        |  FROM documents),
-        |dw AS (SELECT doc_id, string_split_regex(trim(lower(text)), '\s+')
-        |    AS ws FROM d0),
-        |d AS (SELECT doc_id,
-        |    list_distinct(list_transform(range(1, greatest(len(ws) - 1, 1)),
-        |      i -> concat_ws(' ', ws[i], ws[i+1], ws[i+2]))) AS sh FROM dw),
-        |e0 AS (SELECT doc_id, unnest(sh) AS g FROM d),
-        |dict AS (SELECT g, row_number() OVER (ORDER BY g) AS sid
-        |  FROM (SELECT DISTINCT g FROM e0)),
-        |e AS MATERIALIZED (SELECT doc_id, dict.sid FROM e0
-        |  JOIN dict USING (g)),
-        |gf AS (SELECT sid, count(*) AS f FROM e GROUP BY sid),
-        |sz AS (SELECT doc_id, count(*) AS n FROM e GROUP BY doc_id),
-        |rk AS (SELECT e.doc_id, e.sid,
-        |    ROW_NUMBER() OVER (PARTITION BY e.doc_id
-        |      ORDER BY gf.f ASC, e.sid ASC) AS r
-        |  FROM e JOIN gf USING (sid)),
-        |pf AS (SELECT rk.doc_id, rk.sid, rk.r, sz.n
-        |  FROM rk JOIN sz USING (doc_id)
-        |  WHERE r <= n - (n * 8000 + 9999) // 10000 + 1),
-        |cand AS (SELECT DISTINCT a.doc_id AS u, b.doc_id AS v
-        |  FROM pf a JOIN pf b ON a.sid = b.sid AND a.doc_id < b.doc_id
-        |  AND least(a.n, b.n) * 10000 >= greatest(a.n, b.n) * 8000
-        |  AND least(a.n - a.r, b.n - b.r) + 1
-        |      >= (8000 * (a.n + b.n) + 17999) // 18000),
-        |iv AS (SELECT c.u, c.v, count(*) AS it
-        |  FROM cand c JOIN e a ON a.doc_id = c.u
-        |    JOIN e b ON b.doc_id = c.v AND b.sid = a.sid
-        |  GROUP BY c.u, c.v),
-        |p AS (SELECT iv.u, iv.v, iv.it, sa.n AS na, sb.n AS nb
-        |  FROM iv JOIN sz sa ON sa.doc_id = iv.u
-        |    JOIN sz sb ON sb.doc_id = iv.v)
-        |SELECT u AS id_a, v AS id_b,
-        |  CAST(FLOOR(it * 10000.0 / (na + nb - it)) AS BIGINT)
-        |    AS jaccard_e4
-        |FROM p WHERE FLOOR(it * 10000.0 / (na + nb - it)) >= 8000
-        |ORDER BY id_a, id_b""".stripMargin,
-
-    "q_set_sim_rs" -> {
-      // brute-force new x old replay: every pair whose round-half-up
-      // jaccard reaches 0.8 must come back from the engine's pruned
-      // prefix join — a shaved prefix (float sizing, missing one-ulp
-      // slack) or an unsafe length/positional filter drops a boundary
-      // pair and breaks the hash
-      val sh =
-        """list_distinct(list_transform(
-          |  range(1, greatest(len(string_split_regex(trim(lower(text)), '\s+')) - 1, 1)),
-          |  i -> concat_ws(' ',
-          |    string_split_regex(trim(lower(text)), '\s+')[i],
-          |    string_split_regex(trim(lower(text)), '\s+')[i+1],
-          |    string_split_regex(trim(lower(text)), '\s+')[i+2])))"""
-          .stripMargin.replace("\n", " ")
-      s"""WITH old AS (SELECT doc_id, $sh AS sh FROM documents),
-         |n0 AS (SELECT doc_id + 500000 AS doc_id,
-         |    substr(text, 1, CAST((length(text) * (75 + (doc_id % 11) * 2))
-         |      // 100 AS INT)) AS text
-         |  FROM documents),
-         |newd AS (SELECT doc_id, $sh AS sh FROM n0)
-         |SELECT n.doc_id AS id_n, o.doc_id AS id_o,
-         |  ROUND(CASE WHEN len(list_distinct(n.sh || o.sh)) = 0 THEN 0.0
-         |    ELSE CAST(len(list_filter(n.sh, x -> list_contains(o.sh, x)))
-         |      AS DOUBLE) / len(list_distinct(n.sh || o.sh)) END, 4)
-         |    AS jaccard_r4
-         |FROM newd n JOIN old o
-         |ON ROUND(CASE WHEN len(list_distinct(n.sh || o.sh)) = 0 THEN 0.0
-         |    ELSE CAST(len(list_filter(n.sh, x -> list_contains(o.sh, x)))
-         |      AS DOUBLE) / len(list_distinct(n.sh || o.sh)) END, 4) >= 0.8
-         |ORDER BY id_n, id_o""".stripMargin
+    Gate("q_doc_incremental_neardup", (s, dir) => {
+      // ingest-time fuzzy screen: index the existing corpus once, then ask
+      // for each new doc whether it near-dups ANYTHING indexed. New batch =
+      // drop-first-word variants (must match their origin) + letter-rotated
+      // fresh docs (must not match). Oracle brute-forces new×old Jaccard.
+      val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
+      val index = MinHashDedup.buildNearDupIndex(docs, "doc_id", "text")
+      val variants = docs.select((col("doc_id") + 100000L).as("doc_id"),
+        expr("substring(text, instr(text, ' ') + 1)").as("text"))
+      val fresh = docs.select((col("doc_id") + 200000L).as("doc_id"),
+        translate(col("text"), "abcdefghij", "bcdefghija").as("text"))
+      MinHashDedup.incrementalNearDup(
+        variants.unionByName(fresh), "doc_id", "text", index,
+        threshold = 0.8)
+        .orderBy(col("doc_id"))
     },
+      // brute-force new x old ground truth via the same dictionary-encode
+      // + inverted-index join-count rewrite as the q_doc_fuzzy_keep twin
+      // (every cross-side pair sharing >= 1 shingle is scored; J >= 0.8
+      // needs a shared shingle, so nothing is dropped). A side flag -- not
+      // an id range -- separates new from old, and sizes come from the
+      // per-(side, doc) encoded-token counts.
+      s"""WITH n0 AS (SELECT doc_id + 100000 AS doc_id,
+         |    substr(text, strpos(text, ' ') + 1) AS text FROM documents
+         |  UNION ALL
+         |  SELECT doc_id + 200000,
+         |    translate(text, 'abcdefghij', 'bcdefghija') FROM documents),
+         |b AS (SELECT 0 AS side, doc_id, text FROM documents
+         |  UNION ALL SELECT 1, doc_id, text FROM n0),
+         |w0 AS (SELECT side, doc_id,
+         |    string_split_regex(trim(lower(text)), '\\s+') AS ws FROM b),
+         |d AS (SELECT side, doc_id, $shw AS sh FROM w0),
+         |e0 AS (SELECT side, doc_id, unnest(sh) AS g FROM d),
+         |dict AS (SELECT g, row_number() OVER (ORDER BY g) AS sid
+         |  FROM (SELECT DISTINCT g FROM e0)),
+         |e AS MATERIALIZED (SELECT side, doc_id, dict.sid FROM e0
+         |  JOIN dict USING (g)),
+         |sz AS MATERIALIZED (SELECT side, doc_id, count(*) AS n FROM e
+         |  GROUP BY side, doc_id),
+         |iv AS (SELECT a.doc_id AS nid, b.doc_id AS oid, count(*) AS it
+         |  FROM e a JOIN e b ON a.sid = b.sid AND b.side = 0
+         |  WHERE a.side = 1
+         |  GROUP BY nid, oid),
+         |m AS (SELECT iv.nid, MIN(iv.oid) AS mid
+         |  FROM iv JOIN sz sn ON sn.side = 1 AND sn.doc_id = iv.nid
+         |    JOIN sz so ON so.side = 0 AND so.doc_id = iv.oid
+         |  WHERE ROUND(CAST(iv.it AS DOUBLE) / (sn.n + so.n - iv.it), 4)
+         |    >= 0.8
+         |  GROUP BY iv.nid)
+         |SELECT n0.doc_id, m.mid IS NOT NULL AS is_dup,
+         |  CAST(COALESCE(m.mid, -1) AS BIGINT) AS match_id
+         |FROM n0 LEFT JOIN m ON n0.doc_id = m.nid
+         |ORDER BY n0.doc_id""".stripMargin),
 
-    "q_doc_containment" -> {
-      val sh =
-        """list_distinct(list_transform(
-          |  range(1, greatest(len(string_split_regex(trim(lower(text)), '\s+')) - 1, 1)),
-          |  i -> concat_ws(' ',
-          |    string_split_regex(trim(lower(text)), '\s+')[i],
-          |    string_split_regex(trim(lower(text)), '\s+')[i+1],
-          |    string_split_regex(trim(lower(text)), '\s+')[i+2])))""".stripMargin.replace("\n", " ")
-      s"""WITH d AS (SELECT doc_id, lang, source, $sh AS sh FROM documents)
-         |SELECT id_a, id_b, containment FROM (
-         |  SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-         |    ROUND(CASE WHEN least(len(a.sh), len(b.sh)) = 0 THEN 0.0
-         |      ELSE CAST(len(list_filter(a.sh, x -> list_contains(b.sh, x))) AS DOUBLE)
-         |         / least(len(a.sh), len(b.sh)) END, 4) AS containment
-         |  FROM d a JOIN d b ON a.lang = b.lang AND a.source = b.source
-         |    AND a.doc_id < b.doc_id)
-         |WHERE containment >= 0.5
-         |ORDER BY id_a, id_b""".stripMargin
+    Gate("q_doc_simhash", (s, dir) => {
+      // same invariant shape as q_doc_fingerprint: the projection kernel
+      // must agree row-for-row with the explode + 64-vote aggregate form
+      val docs = t(s, dir, "documents")
+      val kernel = SimHash.simhashTable(docs, "doc_id", "text", k = 3)
+      val agg = SimHash.simhashTableAggForm(docs, "doc_id", "text", k = 3)
+        .withColumnRenamed("simhash", "simhash_agg")
+      kernel.join(agg, Seq("doc_id"))
+        .select(col("doc_id"),
+          (col("simhash") <=> col("simhash_agg")).as("kernel_eq_spec"))
+        .orderBy(col("doc_id"))
     },
-
-    "q_doc_ngram_jaccard" -> {
-      // word 3-shingles per doc, then blocked pairwise jaccard
-      val sh =
-        """list_distinct(list_transform(
-          |  range(1, greatest(len(string_split_regex(trim(lower(text)), '\s+')) - 1, 1)),
-          |  i -> concat_ws(' ',
-          |    string_split_regex(trim(lower(text)), '\s+')[i],
-          |    string_split_regex(trim(lower(text)), '\s+')[i+1],
-          |    string_split_regex(trim(lower(text)), '\s+')[i+2])))""".stripMargin.replace("\n", " ")
-      s"""WITH d AS (SELECT doc_id, lang, source, $sh AS sh FROM documents)
-         |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-         |  ROUND(CASE WHEN len(list_distinct(a.sh || b.sh)) = 0 THEN 0.0
-         |    ELSE CAST(len(list_filter(a.sh, x -> list_contains(b.sh, x))) AS DOUBLE)
-         |       / len(list_distinct(a.sh || b.sh)) END, 4) AS jaccard
-         |FROM d a JOIN d b ON a.lang = b.lang AND a.source = b.source
-         |  AND a.doc_id < b.doc_id
-         |WHERE CASE WHEN len(list_distinct(a.sh || b.sh)) = 0 THEN 0.0
-         |    ELSE CAST(len(list_filter(a.sh, x -> list_contains(b.sh, x))) AS DOUBLE)
-         |       / len(list_distinct(a.sh || b.sh)) END >= 0.2
-         |ORDER BY id_a, id_b""".stripMargin
-    },
-
-    "q_doc_fingerprint" ->
       """SELECT doc_id, TRUE AS kernel_eq_spec
-        |FROM documents ORDER BY doc_id""".stripMargin,
+        |FROM documents ORDER BY doc_id""".stripMargin),
 
-    "q_doc_simhash" ->
-      """SELECT doc_id, TRUE AS kernel_eq_spec
-        |FROM documents ORDER BY doc_id""".stripMargin,
+    Gate("q_doc_simhash_pairs", (s, dir) => {
+      // hamming ≤ 3 near-dup pairs via pigeonhole block join. Signatures are
+      // xxhash64-based, so the oracle consumes the materialized signature
+      // table and BRUTE-FORCES all pairs with bit_count(xor(...)) — a hash
+      // match proves the blocked join found exactly the brute-force set.
+      Aux.write(
+        SimHash.simhashTable(t(s, dir, "documents"), "doc_id", "text", k = 3),
+        s"/tmp/graft_oracle_aux/${Sql.sfTag(dir)}/simhash_sigs")
+      SimHash.simhashPairs(t(s, dir, "documents"), "doc_id", "text",
+        k = 3, maxDist = 3)
+        .orderBy(col("id_a"), col("id_b"))
+    },
+      // brute-force all pairs from the materialized signatures: the blocked
+      // join must return exactly the hamming ≤ 3 set
+      """WITH s AS (SELECT doc_id, simhash
+        |  FROM read_parquet('/tmp/graft_oracle_aux/{SF}/simhash_sigs/*.parquet'))
+        |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+        |  CAST(bit_count(xor(a.simhash, b.simhash)) AS BIGINT) AS hamming
+        |FROM s a JOIN s b ON a.doc_id < b.doc_id
+        |WHERE bit_count(xor(a.simhash, b.simhash)) <= 3
+        |ORDER BY id_a, id_b""".stripMargin),
 
-    "q_embed_q8" ->
+    // ---- similarity search --------------------------------------------------
+
+    Gate("q_embed_cosine", (s, dir) => {
+      // all cosine similarities vs a fixed query vector (vec_id 0), exact
+      // decimal dot products so both engines agree bit-for-bit
+      val emb = t(s, dir, "embeddings")
+      val e = emb.select(col("vec_id"),
+        posexplode(col("embedding")).as(Seq("i", "ev")))
+        .withColumn("ev", col("ev").cast(DoubleType))
+      val q = emb.filter(col("vec_id") === 0)
+        .select(posexplode(col("embedding")).as(Seq("i", "qv")))
+        .withColumn("qv", col("qv").cast(DoubleType))
+      val dots = e.join(broadcast(q), Seq("i"))
+        .groupBy(col("vec_id"))
+        .agg(
+          graft.functions.Dec128.sumExact(col("ev") * col("qv"), 18)
+            .cast(DoubleType).as("dot"),
+          graft.functions.Dec128.sumExact(col("ev") * col("ev"), 18)
+            .cast(DoubleType).as("nsq"))
+      val qn = q.agg(
+        graft.functions.Dec128.sumExact(col("qv") * col("qv"), 18)
+          .cast(DoubleType).as("qsq"))
+      dots.crossJoin(broadcast(qn))
+        .select(col("vec_id"),
+          round(col("dot") / (sqrt(col("nsq")) * sqrt(col("qsq"))), 4)
+            .as("similarity"))
+        .filter(col("similarity") >= 0.2)
+        .orderBy(col("vec_id"))
+    },
+      """WITH e AS (SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS ev,
+        |                  generate_subscripts(embedding, 1) AS i FROM embeddings),
+        |q AS (SELECT CAST(unnest(embedding) AS DOUBLE) AS qv,
+        |             generate_subscripts(embedding, 1) AS i
+        |      FROM embeddings WHERE vec_id = 0),
+        |dots AS (SELECT e.vec_id,
+        |    CAST(SUM(CAST(e.ev * q.qv AS DECIMAL(38,18))) AS DOUBLE) AS dot,
+        |    CAST(SUM(CAST(e.ev * e.ev AS DECIMAL(38,18))) AS DOUBLE) AS nsq
+        |  FROM e JOIN q USING (i) GROUP BY e.vec_id),
+        |qn AS (SELECT CAST(SUM(CAST(qv * qv AS DECIMAL(38,18))) AS DOUBLE) AS qsq FROM q)
+        |SELECT vec_id, ROUND(dot / (sqrt(nsq) * sqrt(qsq)), 4) AS similarity
+        |FROM dots, qn
+        |WHERE ROUND(dot / (sqrt(nsq) * sqrt(qsq)), 4) >= 0.2
+        |ORDER BY vec_id""".stripMargin),
+
+    // brute-force top-k + LSH-bucketed ANN: rows-only (tie-break order under
+    // float rounding differs; property-tested instead)
+    Gate("q_embed_topk", (s, dir) => {
+      // brute-force top-k on the fast_cosine kernel; ordering on the
+      // FLOOR-rounded similarity (then vec_id) so both engines sort and cut
+      // the k boundary identically → full oracle instead of rows-only
+      val emb = t(s, dir, "embeddings")
+      val qvec = emb.filter(col("vec_id") === 1)
+        .select(col("embedding")).head().getSeq[Float](0)
+      graft.functions.CosineSim.register(s)
+      val q = array(qvec.map(v => lit(v)): _*)
+        .cast(ArrayType(FloatType))
+      emb.select(col("vec_id"),
+        Semantics.safeRound(
+          graft.functions.CosineSim.fast_cosine(col("embedding"), q), 4)
+          .as("similarity"))
+        .orderBy(col("similarity").desc, col("vec_id").asc)
+        .limit(20)
+    },
+      s"""WITH e AS (SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS ev,
+         |                  generate_subscripts(embedding, 1) AS i FROM embeddings),
+         |q AS (SELECT CAST(unnest(embedding) AS DOUBLE) AS qv,
+         |             generate_subscripts(embedding, 1) AS i
+         |      FROM embeddings WHERE vec_id = 1),
+         |d AS (SELECT e.vec_id, SUM(e.ev * q.qv) AS dot, SUM(e.ev * e.ev) AS nsq
+         |  FROM e JOIN q USING (i) GROUP BY e.vec_id),
+         |qn AS (SELECT SUM(qv * qv) AS qsq FROM q)
+         |SELECT vec_id,
+         |  ${Sql.sround("CASE WHEN sqrt(nsq) * sqrt(qsq) = 0 THEN 0.0 ELSE dot / (sqrt(nsq) * sqrt(qsq)) END")} AS similarity
+         |FROM d, qn
+         |ORDER BY similarity DESC, vec_id ASC LIMIT 20""".stripMargin),
+
+    Gate("q_embed_q8", (s, dir) => {
+      // int8-quantized top-20 (4× less scan IO at corpus scale), gated on
+      // recall vs the oracle's own exact top-20 — same aux pattern as ANN
+      val emb = t(s, dir, "embeddings")
+      val qvec = emb.filter(col("vec_id") === 1)
+        .select(col("embedding")).head().getSeq[Float](0)
+      val res = Similarity
+        .topKQuantized(emb, "embedding", "vec_id", qvec, k = 20)
+        .select(col("vec_id")).persist() // aux + recall join
+      Aux.write(res, s"/tmp/graft_oracle_aux/${Sql.sfTag(dir)}/q8_results")
+      graft.functions.CosineSim.register(s)
+      val q = array(qvec.map(v => lit(v)): _*).cast(ArrayType(FloatType))
+      val exact = emb.select(col("vec_id"),
+          Semantics.safeRound(
+            graft.functions.CosineSim.fast_cosine(col("embedding"), q), 4)
+            .as("sim"))
+        .orderBy(col("sim").desc, col("vec_id").asc).limit(20)
+        .select(col("vec_id"), lit(1).as("_hit"))
+      res.join(exact, Seq("vec_id"), "left")
+        .agg(count(lit(1)).as("n_results"),
+          sum(coalesce(col("_hit"), lit(0))).cast(LongType).as("n_hits"))
+    },
       // recall of the int8-quantized top-20 vs the oracle's exact top-20
       s"""WITH r AS (SELECT vec_id
          |  FROM read_parquet('/tmp/graft_oracle_aux/{SF}/q8_results/*.parquet')),
@@ -3609,9 +2417,33 @@ object DocQueries {
          |    FROM d, qn ORDER BY sim DESC, vec_id ASC LIMIT 20))
          |SELECT CAST(COUNT(*) AS BIGINT) AS n_results,
          |  CAST(SUM(CASE WHEN x.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hits
-         |FROM r LEFT JOIN exact x ON r.vec_id = x.vec_id""".stripMargin,
+         |FROM r LEFT JOIN exact x ON r.vec_id = x.vec_id""".stripMargin),
 
-    "q_embed_ivf" ->
+    Gate("q_embed_ivf", (s, dir) => {
+      // IVF scale path: k-means lists + bounded-probe search. Centroids are
+      // library-specific, so the gate follows the ANN recall pattern: the
+      // oracle reads the materialized result ids and counts overlap with
+      // its OWN exact top-15 — probe behavior and result counts verified.
+      val emb = t(s, dir, "embeddings")
+      val qvec = emb.filter(col("vec_id") === 2)
+        .select(col("embedding")).head().getSeq[Float](0)
+      val index = Similarity.ivfIndex(emb, "embedding", "vec_id", nLists = 8)
+      val res = Similarity
+        .ivfSearch(index, "embedding", "vec_id", qvec, k = 15, nProbe = 4)
+        .select(col("vec_id")).persist() // aux + recall join share the probe
+      Aux.write(res, s"/tmp/graft_oracle_aux/${Sql.sfTag(dir)}/ivf_results")
+      graft.functions.CosineSim.register(s)
+      val q = array(qvec.map(v => lit(v)): _*).cast(ArrayType(FloatType))
+      val exact = emb.select(col("vec_id"),
+          Semantics.safeRound(
+            graft.functions.CosineSim.fast_cosine(col("embedding"), q), 4)
+            .as("sim"))
+        .orderBy(col("sim").desc, col("vec_id").asc).limit(15)
+        .select(col("vec_id"), lit(1).as("_hit"))
+      res.join(exact, Seq("vec_id"), "left")
+        .agg(count(lit(1)).as("n_results"),
+          sum(coalesce(col("_hit"), lit(0))).cast(LongType).as("n_hits"))
+    },
       // recall of the probed IVF search vs the oracle's own exact top-15
       s"""WITH r AS (SELECT vec_id
          |  FROM read_parquet('/tmp/graft_oracle_aux/{SF}/ivf_results/*.parquet')),
@@ -3629,9 +2461,42 @@ object DocQueries {
          |    FROM d, qn ORDER BY sim DESC, vec_id ASC LIMIT 15))
          |SELECT CAST(COUNT(*) AS BIGINT) AS n_results,
          |  CAST(SUM(CASE WHEN x.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hits
-         |FROM r LEFT JOIN exact x ON r.vec_id = x.vec_id""".stripMargin,
+         |FROM r LEFT JOIN exact x ON r.vec_id = x.vec_id""".stripMargin),
 
-    "q_rank_eval" ->
+    Gate("q_rank_eval", (s, dir) => {
+      // retrieval-quality report card: recall@10 / MRR / nDCG of a
+      // deliberately under-probed IVF search (nProbe=2) vs exact top-10.
+      // Approx ranking ships as aux; the oracle re-derives its OWN exact
+      // ground truth and replays every BIGINT metric — the nDCG log2
+      // discount is quantized once per rank, then integer arithmetic only
+      val emb = t(s, dir, "embeddings")
+      val qvec = emb.filter(col("vec_id") === 2)
+        .select(col("embedding")).head().getSeq[Float](0)
+      val index = Similarity.ivfIndex(emb, "embedding", "vec_id", nLists = 8)
+      val rankW = org.apache.spark.sql.expressions.Window
+        .orderBy(col("similarity").desc, col("vec_id").asc)
+      val approx = Similarity
+        .ivfSearch(index, "embedding", "vec_id", qvec, k = 10, nProbe = 2)
+        // bounded window: the search already limited to k rows
+        .withColumn("rank", row_number().over(rankW))
+        .select(lit(2L).as("qid"), col("vec_id"), col("rank"))
+        .persist()
+      Aux.write(approx,
+        s"/tmp/graft_oracle_aux/${Sql.sfTag(dir)}/rank_eval_approx")
+      graft.functions.CosineSim.register(s)
+      val q = array(qvec.map(v => lit(v)): _*).cast(ArrayType(FloatType))
+      val simW = org.apache.spark.sql.expressions.Window
+        .orderBy(col("sim").desc, col("vec_id").asc)
+      val truth = emb.select(col("vec_id"),
+          Semantics.safeRound(
+            graft.functions.CosineSim.fast_cosine(col("embedding"), q), 4)
+            .as("sim"))
+        .orderBy(col("sim").desc, col("vec_id").asc).limit(10)
+        .withColumn("rank", row_number().over(simW))
+        .select(lit(2L).as("qid"), col("vec_id"), col("rank"))
+      graft.functions.Ranking.rankingMetrics(
+        approx, truth, "qid", "vec_id", "rank")
+    },
       // the oracle's own exact ranked top-10, then the BIGINT metric
       // replay: per-rank log2 discount quantized to e6, integer
       // division/sums after that
@@ -3669,65 +2534,42 @@ object DocQueries {
          |  CAST((h.n_hits * 10000) // i.ntruth AS BIGINT) AS recall_e4,
          |  CAST(COALESCE(1000000 // h.first, 0) AS BIGINT) AS mrr_e6,
          |  CAST((h.dcg * 10000) // i.idcg AS BIGINT) AS ndcg_e4
-         |FROM h, i""".stripMargin,
+         |FROM h, i""".stripMargin),
 
-    "q_doc_minhash_clusters" ->
-      // engineered-recall invariant: the oracle knows the pair count and
-      // expects ≥95% of (doc, near-identical-variant) pairs co-clustered
-      """SELECT CAST(COUNT(*) AS BIGINT) AS n_pairs, TRUE AS recall_ge_95pct
-        |FROM documents""".stripMargin,
-
-    "q_doc_incremental_neardup" ->
-      // brute-force new x old ground truth via the same dictionary-encode
-      // + inverted-index join-count rewrite as the q_doc_fuzzy_keep twin
-      // (every cross-side pair sharing >= 1 shingle is scored; J >= 0.8
-      // needs a shared shingle, so nothing is dropped). A side flag -- not
-      // an id range -- separates new from old, and sizes come from the
-      // per-(side, doc) encoded-token counts.
-      s"""WITH n0 AS (SELECT doc_id + 100000 AS doc_id,
-         |    substr(text, strpos(text, ' ') + 1) AS text FROM documents
-         |  UNION ALL
-         |  SELECT doc_id + 200000,
-         |    translate(text, 'abcdefghij', 'bcdefghija') FROM documents),
-         |b AS (SELECT 0 AS side, doc_id, text FROM documents
-         |  UNION ALL SELECT 1, doc_id, text FROM n0),
-         |w0 AS (SELECT side, doc_id,
-         |    string_split_regex(trim(lower(text)), '\\s+') AS ws FROM b),
-         |d AS (SELECT side, doc_id, $shw AS sh FROM w0),
-         |e0 AS (SELECT side, doc_id, unnest(sh) AS g FROM d),
-         |dict AS (SELECT g, row_number() OVER (ORDER BY g) AS sid
-         |  FROM (SELECT DISTINCT g FROM e0)),
-         |e AS MATERIALIZED (SELECT side, doc_id, dict.sid FROM e0
-         |  JOIN dict USING (g)),
-         |sz AS MATERIALIZED (SELECT side, doc_id, count(*) AS n FROM e
-         |  GROUP BY side, doc_id),
-         |iv AS (SELECT a.doc_id AS nid, b.doc_id AS oid, count(*) AS it
-         |  FROM e a JOIN e b ON a.sid = b.sid AND b.side = 0
-         |  WHERE a.side = 1
-         |  GROUP BY nid, oid),
-         |m AS (SELECT iv.nid, MIN(iv.oid) AS mid
-         |  FROM iv JOIN sz sn ON sn.side = 1 AND sn.doc_id = iv.nid
-         |    JOIN sz so ON so.side = 0 AND so.doc_id = iv.oid
-         |  WHERE ROUND(CAST(iv.it AS DOUBLE) / (sn.n + so.n - iv.it), 4)
-         |    >= 0.8
-         |  GROUP BY iv.nid)
-         |SELECT n0.doc_id, m.mid IS NOT NULL AS is_dup,
-         |  CAST(COALESCE(m.mid, -1) AS BIGINT) AS match_id
-         |FROM n0 LEFT JOIN m ON n0.doc_id = m.nid
-         |ORDER BY n0.doc_id""".stripMargin,
-
-    "q_doc_simhash_pairs" ->
-      // brute-force all pairs from the materialized signatures: the blocked
-      // join must return exactly the hamming ≤ 3 set
-      """WITH s AS (SELECT doc_id, simhash
-        |  FROM read_parquet('/tmp/graft_oracle_aux/{SF}/simhash_sigs/*.parquet'))
-        |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-        |  CAST(bit_count(xor(a.simhash, b.simhash)) AS BIGINT) AS hamming
-        |FROM s a JOIN s b ON a.doc_id < b.doc_id
-        |WHERE bit_count(xor(a.simhash, b.simhash)) <= 3
-        |ORDER BY id_a, id_b""".stripMargin,
-
-    "q_embed_ann" ->
+    Gate("q_embed_ann", (s, dir) => {
+      // LSH ANN join, gated on RECALL vs the exact top-k: the oracle reads
+      // the materialized ANN pairs, computes its own exact top-10 per query
+      // (same FLOOR-rounded cosine + vec_id tie-break the q_embed_topk gate
+      // proves cross-engine), and counts hits — so candidate counts AND the
+      // overlap with ground truth must both match.
+      val emb = t(s, dir, "embeddings")
+      val ann = Similarity.annJoin(
+        corpus = emb, queries = emb.filter(col("vec_id") < 5).limit(5),
+        vecCol = "embedding", idCol = "vec_id", dim = 64, nPlanes = 6, k = 10)
+        .select(col("query_id"), col("vec_id")).persist() // aux + recall join
+      Aux.write(ann, s"/tmp/graft_oracle_aux/${Sql.sfTag(dir)}/ann_pairs")
+      graft.functions.CosineSim.register(s)
+      // limit(5) = identity on the ≤5-row filter, but makes the broadcast
+      // side's bound statically provable (plan-hygiene BNLJ rule)
+      val queries = emb.filter(col("vec_id") < 5).limit(5)
+        .select(col("vec_id").as("query_id"), col("embedding").as("_qemb"))
+      val scored = emb.crossJoin(broadcast(queries))
+        .select(col("query_id"), col("vec_id"),
+          Semantics.safeRound(
+            graft.functions.CosineSim.fast_cosine(col("embedding"), col("_qemb")), 4)
+            .as("sim"))
+      val exact = scored
+        .withColumn("rk", row_number().over(
+          org.apache.spark.sql.expressions.Window.partitionBy(col("query_id"))
+            .orderBy(col("sim").desc, col("vec_id").asc)))
+        .filter(col("rk") <= 10)
+        .select(col("query_id"), col("vec_id"), lit(1).as("_hit"))
+      ann.join(exact, Seq("query_id", "vec_id"), "left")
+        .groupBy(col("query_id"))
+        .agg(count(lit(1)).as("n_ann"),
+          sum(coalesce(col("_hit"), lit(0))).cast(LongType).as("n_hits"))
+        .orderBy(col("query_id"))
+    },
       // recall vs exact top-10: the oracle reads the ANN candidate pairs,
       // derives its OWN exact top-10 per query (the q_embed_topk-proven
       // rounded-cosine ordering), and counts candidates + hits
@@ -3753,48 +2595,15 @@ object DocQueries {
          |  CAST(SUM(CASE WHEN x.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hits
          |FROM a LEFT JOIN exact x
          |  ON a.query_id = x.query_id AND a.vec_id = x.vec_id
-         |GROUP BY a.query_id ORDER BY a.query_id""".stripMargin,
+         |GROUP BY a.query_id ORDER BY a.query_id""".stripMargin),
 
-    "q_embed_topk" ->
-      s"""WITH e AS (SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS ev,
-         |                  generate_subscripts(embedding, 1) AS i FROM embeddings),
-         |q AS (SELECT CAST(unnest(embedding) AS DOUBLE) AS qv,
-         |             generate_subscripts(embedding, 1) AS i
-         |      FROM embeddings WHERE vec_id = 1),
-         |d AS (SELECT e.vec_id, SUM(e.ev * q.qv) AS dot, SUM(e.ev * e.ev) AS nsq
-         |  FROM e JOIN q USING (i) GROUP BY e.vec_id),
-         |qn AS (SELECT SUM(qv * qv) AS qsq FROM q)
-         |SELECT vec_id,
-         |  ${Sql.sround("CASE WHEN sqrt(nsq) * sqrt(qsq) = 0 THEN 0.0 ELSE dot / (sqrt(nsq) * sqrt(qsq)) END")} AS similarity
-         |FROM d, qn
-         |ORDER BY similarity DESC, vec_id ASC LIMIT 20""".stripMargin,
+    // ---- anomaly detection (§2.7) -------------------------------------------
 
-    "q_embed_cosine" ->
-      """WITH e AS (SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS ev,
-        |                  generate_subscripts(embedding, 1) AS i FROM embeddings),
-        |q AS (SELECT CAST(unnest(embedding) AS DOUBLE) AS qv,
-        |             generate_subscripts(embedding, 1) AS i
-        |      FROM embeddings WHERE vec_id = 0),
-        |dots AS (SELECT e.vec_id,
-        |    CAST(SUM(CAST(e.ev * q.qv AS DECIMAL(38,18))) AS DOUBLE) AS dot,
-        |    CAST(SUM(CAST(e.ev * e.ev AS DECIMAL(38,18))) AS DOUBLE) AS nsq
-        |  FROM e JOIN q USING (i) GROUP BY e.vec_id),
-        |qn AS (SELECT CAST(SUM(CAST(qv * qv AS DECIMAL(38,18))) AS DOUBLE) AS qsq FROM q)
-        |SELECT vec_id, ROUND(dot / (sqrt(nsq) * sqrt(qsq)), 4) AS similarity
-        |FROM dots, qn
-        |WHERE ROUND(dot / (sqrt(nsq) * sqrt(qsq)), 4) >= 0.2
-        |ORDER BY vec_id""".stripMargin,
-
-    "q_anomaly_robust" ->
-      """WITH m AS (SELECT quantile_cont(value, 0.5) AS med FROM events),
-        |d AS (SELECT quantile_cont(abs(value - med), 0.5) AS mad
-        |  FROM events, m)
-        |SELECT event_id, value, 'robust_zscore' AS method
-        |FROM events, m, d
-        |WHERE mad > 0 AND abs(value - med) > 3.0 * mad * 1.4826
-        |ORDER BY event_id""".stripMargin,
-
-    "q_anomaly_zscore" ->
+    Gate("q_anomaly_zscore", (s, dir) =>
+      AnomalyDetector.zscore(t(s, dir, "events"), Seq("value"), threshold = 2.0)
+        .filter(col("_meta_is_anomaly"))
+        .select(col("event_id"), col("value"), col("_meta_anomaly_method").as("method"))
+        .orderBy(col("event_id")),
       """WITH s AS (SELECT
         |    CAST(SUM(CAST(value AS DECIMAL(38,10))) AS DOUBLE) / COUNT(value) AS mu,
         |    SQRT(CAST(SUM(CAST(value * value AS DECIMAL(38,10))) AS DOUBLE) / COUNT(value)
@@ -3804,17 +2613,53 @@ object DocQueries {
         |SELECT event_id, value, 'zscore' AS method FROM events, s
         |WHERE s.n >= 3 AND s.sigma > 0 AND value IS NOT NULL
         |  AND ABS(value - s.mu) / s.sigma > 2.0
-        |ORDER BY event_id""".stripMargin,
+        |ORDER BY event_id""".stripMargin),
 
-    "q_anomaly_iqr" ->
+    Gate("q_anomaly_robust", (s, dir) =>
+      AnomalyDetector.robustZscore(t(s, dir, "events"), Seq("value"),
+        threshold = 3.0)
+        .filter(col("_meta_is_anomaly"))
+        .select(col("event_id"), col("value"),
+          col("_meta_anomaly_method").as("method"))
+        .orderBy(col("event_id")),
+      """WITH m AS (SELECT quantile_cont(value, 0.5) AS med FROM events),
+        |d AS (SELECT quantile_cont(abs(value - med), 0.5) AS mad
+        |  FROM events, m)
+        |SELECT event_id, value, 'robust_zscore' AS method
+        |FROM events, m, d
+        |WHERE mad > 0 AND abs(value - med) > 3.0 * mad * 1.4826
+        |ORDER BY event_id""".stripMargin),
+
+    Gate("q_anomaly_iqr", (s, dir) =>
+      AnomalyDetector.iqr(t(s, dir, "events"), Seq("value"), factor = 1.5)
+        .filter(col("_meta_is_anomaly"))
+        .select(col("event_id"), col("value"), col("_meta_anomaly_method").as("method"))
+        .orderBy(col("event_id")),
       """WITH s AS (SELECT quantile_cont(value, 0.25) AS q1,
         |    quantile_cont(value, 0.75) AS q3, COUNT(value) AS n FROM events)
         |SELECT event_id, value, 'iqr' AS method FROM events, s
         |WHERE s.n >= 4 AND (s.q3 - s.q1) > 0 AND value IS NOT NULL
         |  AND (value < s.q1 - 1.5 * (s.q3 - s.q1) OR value > s.q3 + 1.5 * (s.q3 - s.q1))
-        |ORDER BY event_id""".stripMargin,
+        |ORDER BY event_id""".stripMargin),
 
-    "q_anomaly_combined" ->
+    Gate("q_anomaly_combined", (s, dir) => {
+      // full reference vote: ≥2 of {zscore, iqr, iforest}. The seeded
+      // iForest flag is engine-specific, so the vote's third input is
+      // materialized for the oracle (which re-derives z/iqr bounds and the
+      // vote logic independently and consumes the deterministic flag).
+      // retainScored: the internal cutoff job, aux write and flagged
+      // output all share ONE scoring pass; Verify's clearCache releases it
+      val out = AnomalyDetector.combined(t(s, dir, "events"), Seq("value"),
+        zThreshold = 2.0, iqrFactor = 1.5, iforestOrderCol = Some("event_id"),
+        retainScored = true)
+        .persist() // aux write + flagged output share the final scan
+      Aux.write(
+        out.select(col("event_id"), col("_meta_iforest_flag").as("if_flag")),
+        s"/tmp/graft_oracle_aux/${Sql.sfTag(dir)}/iforest_flags")
+      out.filter(col("_meta_is_anomaly"))
+        .select(col("event_id"), col("value"))
+        .orderBy(col("event_id"))
+    },
       """WITH s AS (SELECT
         |    CAST(SUM(CAST(value AS DECIMAL(38,10))) AS DOUBLE) / COUNT(value) AS mu,
         |    SQRT(CAST(SUM(CAST(value * value AS DECIMAL(38,10))) AS DOUBLE) / COUNT(value)
@@ -3831,9 +2676,27 @@ object DocQueries {
         |            AND (e.value < s.q1 - 1.5 * (s.q3 - s.q1)
         |              OR e.value > s.q3 + 1.5 * (s.q3 - s.q1)) THEN 1 ELSE 0 END)
         |    + (CASE WHEN f.if_flag THEN 1 ELSE 0 END) >= 2
-        |ORDER BY e.event_id""".stripMargin,
+        |ORDER BY e.event_id""".stripMargin),
 
-    "q_quality_scorer" -> {
+    // ---- quality scorer (§2.3) ----------------------------------------------
+
+    Gate("q_quality_scorer", (s, dir) => {
+      // derive a mixed-quality frame: email validity + positive-amount +
+      // id-nonnegative rules all get exercised
+      val df = t(s, dir, "customer").select(
+        col("c_custkey").as("customer_id"),
+        when(col("c_custkey") % 11 === 0, regexp_replace(col("c_name"), "#", ""))
+          .otherwise(concat(col("c_name"), lit("@example.com"))).as("email"),
+        col("c_acctbal").as("amount"),
+        col("c_mktsegment").as("segment"))
+      QualityScorer(fields = Seq("customer_id", "email", "amount", "segment"))(df)
+        .select(col("customer_id"), col("_meta_completeness").as("completeness"),
+          col("_meta_validity").as("validity"),
+          col("_meta_consistency").as("consistency"),
+          col("_meta_quality_score").as("quality_score"),
+          col("_meta_is_anomaly").as("is_anomaly"))
+        .orderBy(col("customer_id"))
+    }, {
       // replicate QualityScorer column-for-column on the derived frame
       val email = "CASE WHEN c_custkey % 11 = 0 THEN replace(c_name, '#', '') ELSE c_name || '@example.com' END"
       s"""WITH d AS (SELECT c_custkey AS customer_id, $email AS email,
@@ -3868,19 +2731,31 @@ object DocQueries {
          |  ROUND(0.4 * completeness + 0.3 * validity + 0.3 * consistency, 4) < 0.5
          |    AS is_anomaly
          |FROM m ORDER BY customer_id""".stripMargin
-    },
+    }),
 
-    "q_events_hourly" ->
-      s"""SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS hour,
-         |  event_type, COUNT(*) AS n, ${esum("value")} AS total_value
-         |FROM events GROUP BY 1, 2 ORDER BY hour, event_type""".stripMargin,
+    // ---- schema inference (§1.3) --------------------------------------------
 
-    "q_events_json" ->
-      s"""SELECT event_type, COUNT(*) AS n,
-         |  ${esum("CAST(regexp_extract(props, '\"k\": (\\d+)', 1) AS BIGINT)")} AS k_sum
-         |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    "q_schema_infer" -> {
+    Gate("q_schema_infer", (s, dir) => {
+      val df = t(s, dir, "events").select(
+        col("event_id").cast(StringType).as("id_str"),
+        col("event_type"),
+        col("value").cast(StringType).as("value_str"),
+        date_format(col("ts"), "yyyy-MM-dd").as("day_str"))
+      // gate representation: floats → FLOOR-scaled integers, nullables →
+      // sentinel strings, so the cross-engine compare never touches a
+      // double-canonicalization or NULL-representation surface
+      def x10k(c: Column): Column =
+        floor(c * lit(10000.0) + lit(0.5)).cast(LongType)
+      SchemaInferrer.profile(df, Seq("id_str", "event_type", "value_str", "day_str"))
+        .select(col("field"), col("total_count"), col("null_count"),
+          col("inferred_type"),
+          x10k(col("confidence")).as("confidence_x10k"),
+          coalesce(x10k(col("min_value")).cast(StringType), lit("")).as("min_x10k"),
+          coalesce(x10k(col("max_value")).cast(StringType), lit("")).as("max_x10k"),
+          col("distinct_count"), col("is_enum_candidate"),
+          coalesce(col("detected_pattern"), lit("none")).as("detected_pattern"))
+        .orderBy(col("field"))
+    }, {
       val numRe = SchemaInferrer.numericRe
       val intRe = SchemaInferrer.intRe
       val boolRe = SchemaInferrer.boolRe
@@ -3929,40 +2804,182 @@ object DocQueries {
          |  strftime(ts, '%Y-%m-%d') AS day_str FROM events)
          |${fields.map(profileField).mkString("\nUNION ALL\n")}
          |ORDER BY field""".stripMargin
+    }),
+
+    // ---- events: json + time-series (§2.9) ----------------------------------
+
+    Gate("q_events_hourly", (s, dir) =>
+      t(s, dir, "events")
+        .groupBy(date_format(date_trunc("hour", col("ts")), "yyyy-MM-dd HH:mm:ss")
+          .as("hour"), col("event_type"))
+        .agg(count(lit(1)).as("n"), Semantics.exactSum(col("value")).as("total_value"))
+        .orderBy(col("hour"), col("event_type")),
+      s"""SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS hour,
+         |  event_type, COUNT(*) AS n, ${esum("value")} AS total_value
+         |FROM events GROUP BY 1, 2 ORDER BY hour, event_type""".stripMargin),
+
+    Gate("q_events_json", (s, dir) =>
+      t(s, dir, "events")
+        .withColumn("k", regexp_extract(col("props"), "\"k\": (\\d+)", 1)
+          .cast(LongType))
+        .groupBy(col("event_type"))
+        .agg(count(lit(1)).as("n"), Semantics.exactSum(col("k")).as("k_sum"))
+        .orderBy(col("event_type")),
+      s"""SELECT event_type, COUNT(*) AS n,
+         |  ${esum("CAST(regexp_extract(props, '\"k\": (\\d+)', 1) AS BIGINT)")} AS k_sum
+         |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin),
+
+    // ---- source/sink roundtrips (§2.1/§2.2) ---------------------------------
+
+    Gate("q_csv_roundtrip", (s, dir) => {
+      val out = s"/tmp/graft_roundtrip/csv_region"
+      graft.io.Sinks.csv(t(s, dir, "region"), out, header = true)
+      graft.io.Sources.csv(s, out, header = true,
+        schema = Some(t(s, dir, "region").schema))
+        .orderBy(col("r_regionkey"))
     },
+      "SELECT * FROM region ORDER BY r_regionkey"),
 
-    "q_csv_roundtrip" ->
-      "SELECT * FROM region ORDER BY r_regionkey",
+    Gate("q_jsonl_roundtrip", (s, dir) => {
+      val out = s"/tmp/graft_roundtrip/jsonl_nation"
+      graft.io.Sinks.jsonl(t(s, dir, "nation"), out)
+      graft.io.Sources.jsonl(s, out, schema = Some(t(s, dir, "nation").schema))
+        .orderBy(col("n_nationkey"))
+    },
+      "SELECT * FROM nation ORDER BY n_nationkey"),
 
-    "q_jsonl_roundtrip" ->
-      "SELECT * FROM nation ORDER BY n_nationkey",
+    Gate("q_xml_roundtrip", (s, dir) => {
+      // Spark 4 native XML source/sink roundtrip (the enterprise-feed
+      // format the reference's JSON/CSV loaders don't cover); schema
+      // supplied on read — XML carries no types
+      val out = s"/tmp/graft_roundtrip/xml_nation"
+      graft.io.Sinks.xml(t(s, dir, "nation"), out, rowTag = "nation")
+      graft.io.Sources.xml(s, out, rowTag = "nation",
+          schema = Some(t(s, dir, "nation").schema))
+        .orderBy(col("n_nationkey"))
+    },
+      "SELECT * FROM nation ORDER BY n_nationkey"),
 
-    "q_xml_roundtrip" ->
-      "SELECT * FROM nation ORDER BY n_nationkey",
-
-    "q_ingest_quarantine" ->
+    Gate("q_ingest_quarantine", (s, dir) => {
+      // dirty-feed ingestion: a staged JSONL where every doc_id % 7 == 0
+      // line is truncated mid-object. PERMISSIVE parse keeps broken lines
+      // verbatim in the quarantine column instead of dropping them or
+      // failing the job; the gate proves exactly the planted lines (and
+      // no others) land in quarantine, with their ids recovered from the
+      // preserved raw text. Oracle replays the plant arithmetically
+      // session-cached stage ([[StageOnce]]), unconstrained write — the
+      // batch JSONL read downstream is file-count-agnostic
+      val staged = graft.entry.StageOnce.dir(s, dir, "dirty_docs") { p =>
+        val good = t(s, dir, "documents")
+          .select(col("doc_id"), col("lang"), col("source"))
+        good.select(
+          when(col("doc_id") % 7 === 0,
+            // cut the closing brace and the source value off — unparseable
+            expr("substring(to_json(struct(doc_id, lang, source)), 1, " +
+              "length(to_json(struct(doc_id, lang, source))) - 6)"))
+            .otherwise(to_json(struct(col("doc_id"), col("lang"),
+              col("source")))).as("value"))
+          .write.mode("overwrite").text(p)
+      }
+      val parsed = graft.io.Sources.jsonlQuarantine(s, staged,
+        org.apache.spark.sql.types.StructType(Seq(
+          org.apache.spark.sql.types.StructField("doc_id",
+            org.apache.spark.sql.types.LongType),
+          org.apache.spark.sql.types.StructField("lang",
+            org.apache.spark.sql.types.StringType),
+          org.apache.spark.sql.types.StructField("source",
+            org.apache.spark.sql.types.StringType))))
+      parsed.select(
+        // quarantined ids recovered from the preserved raw line — parsed
+        // data columns for bad rows are parser-version-dependent (partial
+        // results), the verbatim text is not
+        coalesce(
+          regexp_extract(col("_quarantine"), "\"doc_id\":(\\d+)", 1)
+            .cast(org.apache.spark.sql.types.LongType),
+          col("doc_id")).as("doc_id"),
+        when(col("_quarantine").isNotNull, lit("quarantined"))
+          .otherwise(lit("ok")).as("status"))
+        .orderBy(col("doc_id"))
+    },
       // the plant is deterministic from documents, so the oracle replays
       // it arithmetically; the Spark side actually parses the dirty file
       """SELECT doc_id,
         |  CASE WHEN doc_id % 7 = 0 THEN 'quarantined' ELSE 'ok' END
         |    AS status
-        |FROM documents ORDER BY doc_id""".stripMargin,
+        |FROM documents ORDER BY doc_id""".stripMargin),
 
-    "q_ingest_quarantine_csv" ->
+    Gate("q_ingest_quarantine_csv", (s, dir) => {
+      // CSV twin of q_ingest_quarantine: a staged headerless CSV where
+      // every doc_id % 7 == 0 row carries a non-numeric id ("id_NNN") so
+      // the LongType parse fails; PERMISSIVE keeps the raw line in the
+      // quarantine column and the gate proves exactly the planted rows
+      // (ids recovered from the preserved text) land there. Oracle
+      // replays the plant arithmetically, same as the JSONL sibling
+      // session-cached stage ([[StageOnce]]), unconstrained write — same
+      // rationale as the JSONL sibling
+      val staged = graft.entry.StageOnce.dir(s, dir, "dirty_csv") { p =>
+        t(s, dir, "documents")
+          .select(concat_ws(",",
+            when(col("doc_id") % 7 === 0,
+              concat(lit("id_"), col("doc_id").cast(StringType)))
+              .otherwise(col("doc_id").cast(StringType)),
+            col("lang"), col("source")).as("value"))
+          .write.mode("overwrite").text(p)
+      }
+      val parsed = graft.io.Sources.csvQuarantine(s, staged,
+        org.apache.spark.sql.types.StructType(Seq(
+          org.apache.spark.sql.types.StructField("doc_id",
+            org.apache.spark.sql.types.LongType),
+          org.apache.spark.sql.types.StructField("lang",
+            org.apache.spark.sql.types.StringType),
+          org.apache.spark.sql.types.StructField("source",
+            org.apache.spark.sql.types.StringType))),
+        header = false)
+      parsed.select(
+        coalesce(
+          regexp_extract(col("_quarantine"), "^id_(\\d+),", 1)
+            .cast(org.apache.spark.sql.types.LongType),
+          col("doc_id")).as("doc_id"),
+        when(col("_quarantine").isNotNull, lit("quarantined"))
+          .otherwise(lit("ok")).as("status"))
+        .orderBy(col("doc_id"))
+    },
       // same deterministic plant as the JSONL sibling, replayed
       // arithmetically; the Spark side actually parses the dirty CSV
       """SELECT doc_id,
         |  CASE WHEN doc_id % 7 = 0 THEN 'quarantined' ELSE 'ok' END
         |    AS status
-        |FROM documents ORDER BY doc_id""".stripMargin,
+        |FROM documents ORDER BY doc_id""".stripMargin),
 
-    "q_json_array_roundtrip" ->
-      "SELECT * FROM region ORDER BY r_regionkey",
+    Gate("q_json_array_roundtrip", (s, dir) => {
+      // single-file JSON array export (json_loader.py:181-248) + array read;
+      // cast back through the original schema for dtype parity
+      val out = s"/tmp/graft_roundtrip/json_region/region.json"
+      val src = t(s, dir, "region")
+      graft.io.Sinks.jsonArray(src, out, pretty = true)
+      val readBack = graft.io.Sources.jsonArray(s, out)
+      src.schema.fields.foldLeft(readBack) { (df, f) =>
+        df.withColumn(f.name, col(f.name).cast(f.dataType))
+      }.select(src.columns.map(col): _*).orderBy(col("r_regionkey"))
+    },
+      "SELECT * FROM region ORDER BY r_regionkey"),
 
-    "q_orc_roundtrip" ->
-      "SELECT * FROM supplier ORDER BY s_suppkey",
+    Gate("q_orc_roundtrip", (s, dir) => {
+      // the other columnar format (format_conversion.py pairs them)
+      val out = s"/tmp/graft_roundtrip/orc_supplier"
+      graft.io.Sinks.orc(t(s, dir, "supplier"), out)
+      graft.io.Sources.orc(s, out).orderBy(col("s_suppkey"))
+    },
+      "SELECT * FROM supplier ORDER BY s_suppkey"),
 
-    "q_doc_passage_dedup" ->
+    // ---- span-level dedup (beyond-ref: training-data curation) -------------
+
+    Gate("q_doc_passage_dedup", (s, dir) =>
+      // cross-document repeated 20-word passages removed, survivors
+      // re-stitched; the md5 passage keys make every step oracle-replayable
+      graft.functions.TextFunctions.passageDedup(
+        t(s, dir, "documents"), "doc_id", "text", passageWords = 20)
+        .orderBy(col("doc_id")),
       """WITH w AS (SELECT doc_id,
         |    string_split(trim(regexp_replace(text, '\s+', ' ', 'g')), ' ') AS w
         |  FROM documents),
@@ -3980,32 +2997,125 @@ object DocQueries {
         |  CAST(coalesce(sum(CASE WHEN boiler THEN 0 ELSE 1 END), 0) AS BIGINT) AS n_kept,
         |  CAST(coalesce(sum(CASE WHEN boiler THEN 1 ELSE 0 END), 0) AS BIGINT) AS n_removed
         |FROM ch JOIN fr ON md5(ch.chunk_text) = fr.k
-        |GROUP BY ch.doc_id ORDER BY ch.doc_id""".stripMargin,
+        |GROUP BY ch.doc_id ORDER BY ch.doc_id""".stripMargin),
 
-    "q_quality_calibrate" ->
+    Gate("q_quality_calibrate", (s, dir) => {
+      // budget→threshold calibration: exact 70th-percentile cutoff keeps
+      // the best ≈30%; gate checks the per-source kept counts
+      // the gate serves two actions (percentile job, then the filtered
+      // count) — persist the scored frame so the quality kernel runs ONCE
+      // over the corpus, not once per action (the suite-runner pattern:
+      // Bench/Verify clearCache() after each gate releases it)
+      val scored = graft.core.Rebalance
+        .computeDense(t(s, dir, "documents"))
+        .select(col("doc_id"), col("source"),
+          TF.qualityScore(col("text")).as("q"))
+        .persist()
+      val cutoff = QualityScorer.calibrateCutoff(scored, "q", 0.3)
+      scored.filter(col("q") >= cutoff)
+        .groupBy(col("source")).agg(count(lit(1)).as("n_kept"))
+        .orderBy(col("source"))
+    },
       s"""WITH s AS (SELECT doc_id, source, $qualityScoreSql AS q FROM documents),
          |c AS (SELECT quantile_cont(q, 0.7) AS cut FROM s)
          |SELECT source, CAST(COUNT(*) AS BIGINT) AS n_kept
          |FROM s, c WHERE q >= cut
-         |GROUP BY source ORDER BY source""".stripMargin,
+         |GROUP BY source ORDER BY source""".stripMargin),
 
-    "q_bpe_train" ->
+    Gate("q_bpe_train", (s, dir) => {
+      // distributed BPE training: 6 merge rounds over the word-type table;
+      // every round's full pair-count frame is the aux, so the oracle
+      // re-derives each argmax under the same (count desc, pair asc) total
+      // order — the selection logic is what the gate proves
+      import s.implicits._
+      val merges = graft.functions.Bpe.train(
+        t(s, dir, "documents"), "text", numMerges = 6,
+        auxDir = if (Aux.enabled)
+          Some(s"/tmp/graft_oracle_aux/${Sql.sfTag(dir)}/bpe_pairs")
+        else None)
+      merges.map(m => (m.round, m.left, m.right, m.freq))
+        .toDF("round", "merge_left", "merge_right", "freq")
+        .orderBy(col("round"))
+    },
       """WITH mx AS (SELECT _round, _a, _b, _cnt,
         |    row_number() OVER (PARTITION BY _round
         |      ORDER BY _cnt DESC, _a ASC, _b ASC) AS rn
         |  FROM read_parquet('/tmp/graft_oracle_aux/{SF}/bpe_pairs/*.parquet'))
         |SELECT _round AS round, _a AS merge_left, _b AS merge_right,
         |  CAST(_cnt AS BIGINT) AS freq
-        |FROM mx WHERE rn = 1 ORDER BY _round""".stripMargin,
+        |FROM mx WHERE rn = 1 ORDER BY _round""".stripMargin),
 
-    "q_bpe_encode" ->
+    Gate("q_bpe_encode", (s, dir) => {
+      // encode the corpus with 6 trained merges; aux carries each doc's
+      // symbol array, and the oracle re-concatenates it — hash-matching
+      // doc_id/n_syms PROVES every encoding reconstructs its normalized
+      // text exactly (a dropped/duplicated/reordered symbol breaks it)
+      val docs = t(s, dir, "documents")
+      val merges = graft.functions.Bpe.train(docs, "text", numMerges = 6)
+      val base = graft.core.Rebalance.computeDense(docs)
+        .select(col("doc_id"), col("text"),
+          graft.functions.Bpe.encode(col("text"), merges).as("syms"))
+      // Verify persists so the aux dump and the n_syms output share one
+      // encode pass; the bench path encodes once with no cache at all
+      val encoded = if (Aux.enabled) base.persist() else base
+      Aux.write(encoded,
+        s"/tmp/graft_oracle_aux/${Sql.sfTag(dir)}/bpe_encoded", single = false)
+      encoded.select(col("doc_id"), size(col("syms")).as("n_syms"))
+        .orderBy(col("doc_id"))
+    },
       """SELECT doc_id, CAST(len(syms) AS INT) AS n_syms
         |FROM read_parquet('/tmp/graft_oracle_aux/{SF}/bpe_encoded/*.parquet')
         |WHERE array_to_string(syms, '') =
         |  trim(regexp_replace(lower(text), '\s+', ' ', 'g'))
-        |ORDER BY doc_id""".stripMargin,
+        |ORDER BY doc_id""".stripMargin),
 
-    "q_doc_rarity" ->
+    Gate("q_bpe_fertility", (s, dir) => {
+      // tokenizer fertility per language slice: normalized characters per
+      // BPE token — the "is this tokenizer efficient for lang X" report.
+      // Per-doc token counts are single-sourced via aux (the encode kernel
+      // itself is gated by q_bpe_encode/roundtrip); char counts, grouping,
+      // and the scaled ratio are replayed independently as pure BIGINTs
+      val docs = t(s, dir, "documents")
+      val merges = graft.functions.Bpe.train(docs, "text", numMerges = 6)
+      val norm = trim(regexp_replace(lower(col("text")), "\\s+", " "))
+      val enc = graft.core.Rebalance.computeDense(docs)
+        .select(col("doc_id"), col("lang"),
+          length(translate(norm, " ", "")).as("_nc"),
+          size(graft.functions.Bpe.encode(col("text"), merges)).as("_nt"))
+      val encP = if (Aux.enabled) enc.persist() else enc
+      Aux.write(encP.select(col("doc_id"), col("_nt")),
+        s"/tmp/graft_oracle_aux/${Sql.sfTag(dir)}/bpe_tokens")
+      encP.groupBy(col("lang"))
+        .agg(count(lit(1)).as("n_docs"), sum(col("_nc")).as("n_chars_norm"),
+          sum(col("_nt")).as("n_tokens"))
+        .select(col("lang"), col("n_docs"), col("n_chars_norm"),
+          col("n_tokens"),
+          expr("CAST((n_chars_norm * 1000000) DIV n_tokens AS BIGINT)")
+            .as("chars_per_token_e6"))
+        .orderBy(col("lang"))
+    },
+      // chars re-derived from the shared normalization; token counts from
+      // the engine-side aux (keyed join — a wrong doc set drops rows)
+      """WITH nrm AS (SELECT doc_id, lang,
+        |    length(replace(trim(regexp_replace(lower(text), '\s+', ' ',
+        |      'g')), ' ', '')) AS nc
+        |  FROM documents),
+        |a AS (SELECT doc_id, _nt AS nt FROM
+        |  read_parquet('/tmp/graft_oracle_aux/{SF}/bpe_tokens/*.parquet')),
+        |j AS (SELECT nrm.lang, nrm.nc, a.nt FROM nrm JOIN a USING (doc_id))
+        |SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_docs,
+        |  CAST(SUM(nc) AS BIGINT) AS n_chars_norm,
+        |  CAST(SUM(nt) AS BIGINT) AS n_tokens,
+        |  CAST((SUM(nc) * 1000000) // SUM(nt) AS BIGINT)
+        |    AS chars_per_token_e6
+        |FROM j GROUP BY lang ORDER BY lang""".stripMargin),
+
+    Gate("q_doc_rarity", (s, dir) =>
+      // unigram rarity + OOV vs the top-20 corpus vocabulary — integer
+      // counts + decimal averaging, so every cell replays exactly
+      TF.rarityScoreTable(t(s, dir, "documents"), "doc_id", "text",
+        vocabK = 20)
+        .orderBy(col("doc_id")),
       s"""WITH words AS (SELECT doc_id,
          |    unnest(string_split_regex(trim(lower(text)), '\\s+')) AS w
          |  FROM documents),
@@ -4017,9 +3127,17 @@ object DocQueries {
          |  ${Sql.sround("CAST(SUM(CASE WHEN v.w IS NULL THEN 1 ELSE 0 END) AS DOUBLE) / COUNT(*)")} AS oov_rate
          |FROM words wo JOIN freq f USING (w)
          |LEFT JOIN vocab v ON wo.w = v.w
-         |GROUP BY wo.doc_id ORDER BY wo.doc_id""".stripMargin,
+         |GROUP BY wo.doc_id ORDER BY wo.doc_id""".stripMargin),
 
-    "q_pps_sample" ->
+    Gate("q_pps_sample", (s, dir) =>
+      // weighted (PPS) sampling by document size: exact integer boundary
+      // crossings on a partitioned prefix sum — every selection decision
+      // replayable bit-for-bit, unlike any RNG- or reservoir-key sampler
+      graft.functions.Sampling.ppsSample(
+        t(s, dir, "documents").select(col("doc_id"), col("n_chars")),
+        "doc_id", "n_chars", n = 50L, seed = 7L)
+        .select(col("doc_id"), col("n_chars"))
+        .orderBy(col("doc_id")),
       """WITH c AS (SELECT doc_id, n_chars,
         |    SUM(n_chars) OVER (
         |      ORDER BY md5(concat('pps7#', CAST(doc_id AS VARCHAR))),
@@ -4028,17 +3146,33 @@ object DocQueries {
         |  FROM documents)
         |SELECT doc_id, n_chars FROM c
         |WHERE ((cum - n_chars) * 50) // total < (cum * 50) // total
-        |ORDER BY doc_id""".stripMargin,
+        |ORDER BY doc_id""".stripMargin),
 
-    "q_doc_accent_fold" ->
+    Gate("q_doc_accent_fold", (s, dir) => {
+      // unicode accent folding: derive accented text deterministically
+      // (a→ä, e→é), fold it back with the codegen'd NFD+strip kernel; the
+      // oracle folds the same derivation with utf8proc strip_accents, so a
+      // hash match proves the two unicode implementations agree
+      graft.functions.AccentFold.register(s)
+      val accented = regexp_replace(
+        regexp_replace(col("text"), "a", "ä"), "e", "é")
+      t(s, dir, "documents").select(col("doc_id"),
+          length(accented).as("n_chars_accented"),
+          graft.functions.AccentFold.accent_fold(accented).as("folded"))
+        .orderBy(col("doc_id"))
+    },
       """SELECT doc_id,
         |  CAST(length(replace(replace(text, 'a', chr(228)), 'e', chr(233)))
         |    AS BIGINT) AS n_chars_accented,
         |  strip_accents(replace(replace(text, 'a', chr(228)), 'e', chr(233)))
         |    AS folded
-        |FROM documents ORDER BY doc_id""".stripMargin,
+        |FROM documents ORDER BY doc_id""".stripMargin),
 
-    "q_doc_char_entropy" ->
+    Gate("q_doc_char_entropy", (s, dir) =>
+      // gibberish detector: character-distribution entropy per doc —
+      // exact char counts, decimal-summed log2 terms (BM25 pattern)
+      TF.charEntropyTable(t(s, dir, "documents"), "doc_id", "text")
+        .orderBy(col("doc_id")),
       """WITH ch AS (SELECT doc_id, CAST(length(text) AS DOUBLE) AS len,
         |    unnest(string_split(text, '')) AS c
         |  FROM documents WHERE length(text) > 0),
@@ -4050,18 +3184,33 @@ object DocQueries {
         |  FROM cnt GROUP BY doc_id)
         |SELECT d.doc_id, sc.char_entropy
         |FROM documents d LEFT JOIN sc USING (doc_id)
-        |ORDER BY d.doc_id""".stripMargin,
+        |ORDER BY d.doc_id""".stripMargin),
 
-    "q_doc_blocklist" ->
+    Gate("q_doc_blocklist", (s, dir) =>
+      // badwords screening: exact token match vs a broadcast blocklist;
+      // integer counts, fully replayable
+      TF.blocklistTable(t(s, dir, "documents"), "doc_id", "text",
+        Seq("data", "model", "free", "test"))
+        .orderBy(col("doc_id")),
       """SELECT doc_id,
         |  CAST(len(list_filter(string_split_regex(trim(lower(text)), '\s+'),
         |    w -> w IN ('data', 'model', 'free', 'test'))) AS BIGINT)
         |    AS n_blocked,
         |  len(list_filter(string_split_regex(trim(lower(text)), '\s+'),
         |    w -> w IN ('data', 'model', 'free', 'test'))) > 0 AS blocked
-        |FROM documents ORDER BY doc_id""".stripMargin,
+        |FROM documents ORDER BY doc_id""".stripMargin),
 
-    "q_doc_lm_score" -> {
+    Gate("q_doc_lm_score", (s, dir) => {
+      // CCNet-style bigram-LM quality scoring: train add-one-smoothed LM
+      // on the lang='en' slice, score EVERY doc by avg negative
+      // log-likelihood. Counts are exact integers; ln terms sum through
+      // DECIMAL(38,18) (the proven BM25 pattern) so avg_nll replays
+      val docs = t(s, dir, "documents")
+      val model = graft.operators.NgramLm.train(
+        docs.filter(col("lang") === "en"), "text")
+      graft.operators.NgramLm.score(docs, "doc_id", "text", model)
+        .orderBy(col("doc_id"))
+    }, {
       // identical bigram spelling + add-one smoothing + DECIMAL(38,18)
       // term sum as the Spark side; the whole LM (train counts, V, OOV
       // flags, NLL) re-derives from raw text
@@ -4097,54 +3246,91 @@ object DocQueries {
          |      / COUNT(s.bg), 4) END AS avg_nll
          |FROM documents d LEFT JOIN terms s ON d.doc_id = s.doc_id
          |GROUP BY d.doc_id ORDER BY d.doc_id""".stripMargin
-    },
+    }),
 
-    "q_source_overlap" -> {
-      s"""WITH w0 AS (SELECT source,
-         |    string_split_regex(trim(lower(text)), '\\s+') AS ws
-         |  FROM documents),
-         |sh AS (SELECT DISTINCT g, sh FROM (SELECT source AS g,
-         |    unnest($shw) AS sh FROM w0)),
-         |sizes AS (SELECT g, CAST(COUNT(*) AS BIGINT) AS n FROM sh GROUP BY g),
-         |shared AS (SELECT a.g AS g_a, b.g AS g_b,
-         |    CAST(COUNT(*) AS BIGINT) AS n_shared
-         |  FROM sh a JOIN sh b USING (sh) WHERE a.g < b.g GROUP BY 1, 2)
-         |SELECT s.g_a, s.g_b, s.n_shared,
-         |  ${Sql.sround("CAST(s.n_shared AS DOUBLE) / (na.n + nb.n - s.n_shared)")} AS jaccard
-         |FROM shared s
-         |JOIN sizes na ON s.g_a = na.g JOIN sizes nb ON s.g_b = nb.g
-         |ORDER BY s.g_a, s.g_b""".stripMargin
-    },
+    Gate("q_source_overlap", (s, dir) =>
+      // cross-source shingle contamination matrix — the split-leakage
+      // report; every cell exactly replayable (shingle sets are portable)
+      CorpusStats.sourceOverlap(t(s, dir, "documents"), "text", "source", 3)
+        .orderBy(col("g_a"), col("g_b")),
+      {
+        s"""WITH w0 AS (SELECT source,
+           |    string_split_regex(trim(lower(text)), '\\s+') AS ws
+           |  FROM documents),
+           |sh AS (SELECT DISTINCT g, sh FROM (SELECT source AS g,
+           |    unnest($shw) AS sh FROM w0)),
+           |sizes AS (SELECT g, CAST(COUNT(*) AS BIGINT) AS n FROM sh GROUP BY g),
+           |shared AS (SELECT a.g AS g_a, b.g AS g_b,
+           |    CAST(COUNT(*) AS BIGINT) AS n_shared
+           |  FROM sh a JOIN sh b USING (sh) WHERE a.g < b.g GROUP BY 1, 2)
+           |SELECT s.g_a, s.g_b, s.n_shared,
+           |  ${Sql.sround("CAST(s.n_shared AS DOUBLE) / (na.n + nb.n - s.n_shared)")} AS jaccard
+           |FROM shared s
+           |JOIN sizes na ON s.g_a = na.g JOIN sizes nb ON s.g_b = nb.g
+           |ORDER BY s.g_a, s.g_b""".stripMargin
+      }),
 
-    "q_ngram_novelty" -> {
-      s"""WITH w0 AS (SELECT doc_id,
-         |    string_split_regex(trim(lower(text)), '\\s+') AS ws
-         |  FROM documents),
-         |e AS (SELECT doc_id, unnest($shw) AS s FROM w0),
-         |fs AS (SELECT s, min(doc_id) AS first FROM e GROUP BY 1),
-         |pd AS (SELECT e.doc_id, CAST(count(*) AS BIGINT) AS n_shingles,
-         |    CAST(sum(CASE WHEN fs.first = e.doc_id THEN 1 ELSE 0 END)
-         |      AS BIGINT) AS n_novel
-         |  FROM e JOIN fs USING (s) GROUP BY 1)
-         |SELECT d.doc_id,
-         |  COALESCE(pd.n_shingles, 0) AS n_shingles,
-         |  COALESCE(pd.n_novel, 0) AS n_novel,
-         |  CASE WHEN COALESCE(pd.n_shingles, 0) > 0
-         |    THEN (pd.n_novel * 10000) // pd.n_shingles END AS novelty_e4
-         |FROM documents d LEFT JOIN pd USING (doc_id)
-         |ORDER BY d.doc_id""".stripMargin
-    },
+    Gate("q_ngram_novelty", (s, dir) =>
+      // per-doc freshness vs everything ingested before it: a shingle is
+      // novel in the min-doc_id document containing it; BIGINT e4 ratio
+      CorpusStats.ngramNovelty(t(s, dir, "documents"), "doc_id", "text", 3)
+        .orderBy(col("doc_id")),
+      {
+        s"""WITH w0 AS (SELECT doc_id,
+           |    string_split_regex(trim(lower(text)), '\\s+') AS ws
+           |  FROM documents),
+           |e AS (SELECT doc_id, unnest($shw) AS s FROM w0),
+           |fs AS (SELECT s, min(doc_id) AS first FROM e GROUP BY 1),
+           |pd AS (SELECT e.doc_id, CAST(count(*) AS BIGINT) AS n_shingles,
+           |    CAST(sum(CASE WHEN fs.first = e.doc_id THEN 1 ELSE 0 END)
+           |      AS BIGINT) AS n_novel
+           |  FROM e JOIN fs USING (s) GROUP BY 1)
+           |SELECT d.doc_id,
+           |  COALESCE(pd.n_shingles, 0) AS n_shingles,
+           |  COALESCE(pd.n_novel, 0) AS n_novel,
+           |  CASE WHEN COALESCE(pd.n_shingles, 0) > 0
+           |    THEN (pd.n_novel * 10000) // pd.n_shingles END AS novelty_e4
+           |FROM documents d LEFT JOIN pd USING (doc_id)
+           |ORDER BY d.doc_id""".stripMargin
+      }),
 
-    "q_doc_substr_dup" ->
+    Gate("q_doc_substr_dup", (s, dir) => {
+      // exact-substring dedup: every 12-word window Buzhash'd; the exploded
+      // (doc, pos, hash) form is the aux, and the oracle independently
+      // replays the shared-window test + per-doc counts from it
+      val docs = t(s, dir, "documents")
+      Aux.write(SubstrDedup.windows(docs, "doc_id", "text", k = 12),
+        s"/tmp/graft_oracle_aux/${Sql.sfTag(dir)}/substr_windows",
+        single = false)
+      SubstrDedup.flags(docs, "doc_id", "text", k = 12)
+        .orderBy(col("doc_id"))
+    },
       """WITH w AS (SELECT * FROM
         |    read_parquet('/tmp/graft_oracle_aux/{SF}/substr_windows/*.parquet')),
         |sh AS (SELECT win_hash FROM w
         |  GROUP BY win_hash HAVING min(doc_id) <> max(doc_id))
         |SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_dup_windows
         |FROM w JOIN sh USING (win_hash)
-        |GROUP BY doc_id ORDER BY doc_id""".stripMargin,
+        |GROUP BY doc_id ORDER BY doc_id""".stripMargin),
 
-    "q_chunk_dedup" ->
+    Gate("q_chunk_dedup", (s, dir) => {
+      // content-defined chunking: variants get a novel PREAMBLE, so every
+      // word offset shifts — position-keyed dedup units would all miss,
+      // content-cut chunks re-align and most chunks still match their
+      // origin. Oracle replays boundaries, signatures and the shared test
+      // from the aux window table
+      val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
+      val variants = docs.select((col("doc_id") + 100000L).as("doc_id"),
+        concat(lit("wholly novel preamble words here "), col("text"))
+          .as("text"))
+      val all = docs.unionByName(variants)
+      Aux.write(SubstrDedup.windows(all, "doc_id", "text", k = 8),
+        s"/tmp/graft_oracle_aux/${Sql.sfTag(dir)}/chunk_windows",
+        single = false)
+      SubstrDedup.chunkDupReport(all, "doc_id", "text",
+        k = 8, modulus = 16)
+        .orderBy(col("doc_id"))
+    },
       // boundaries (hash % 16 = 0), per-doc cumsum chunk index, position-
       // free ','-joined signature, shared test — all from the same aux
       """WITH w AS (SELECT * FROM
@@ -4163,9 +3349,19 @@ object DocQueries {
         |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_chunks,
         |  CAST(SUM(CASE WHEN c.sig IN (SELECT sig FROM sh)
         |    THEN 1 ELSE 0 END) AS BIGINT) AS n_dup_chunks
-        |FROM c GROUP BY 1 ORDER BY doc_id""".stripMargin,
+        |FROM c GROUP BY 1 ORDER BY doc_id""".stripMargin),
 
-    "q_doc_longest_span" ->
+    Gate("q_doc_longest_span", (s, dir) => {
+      // overlap-severity report: longest corpus-shared run per flagged doc
+      // (upper bound on the single-partner span — see longestSharedSpan);
+      // the oracle replays the gaps-and-islands merge from the aux
+      val docs = t(s, dir, "documents")
+      Aux.write(SubstrDedup.windows(docs, "doc_id", "text", k = 12),
+        s"/tmp/graft_oracle_aux/${Sql.sfTag(dir)}/substr_windows",
+        single = false)
+      SubstrDedup.longestSharedSpan(docs, "doc_id", "text", k = 12)
+        .orderBy(col("doc_id"))
+    },
       """WITH w AS (SELECT * FROM
         |    read_parquet('/tmp/graft_oracle_aux/{SF}/substr_windows/*.parquet')),
         |sh AS (SELECT win_hash FROM w
@@ -4176,9 +3372,20 @@ object DocQueries {
         |  FROM st),
         |runs AS (SELECT doc_id, g, COUNT(*) AS r FROM isl GROUP BY doc_id, g)
         |SELECT doc_id, CAST(MAX(r) + 11 AS BIGINT) AS longest_shared_span
-        |FROM runs GROUP BY doc_id ORDER BY doc_id""".stripMargin,
+        |FROM runs GROUP BY doc_id ORDER BY doc_id""".stripMargin),
 
-    "q_doc_substr_remove" ->
+    Gate("q_doc_substr_remove", (s, dir) => {
+      // span REMOVAL (the Lee-et-al remedy): the canonical (min-doc) copy
+      // of each shared span survives, every other copy's words cut out;
+      // the oracle rebuilds every document from the same aux windows +
+      // raw text
+      val docs = t(s, dir, "documents")
+      Aux.write(SubstrDedup.windows(docs, "doc_id", "text", k = 12),
+        s"/tmp/graft_oracle_aux/${Sql.sfTag(dir)}/substr_windows",
+        single = false)
+      SubstrDedup.removeSpans(docs, "doc_id", "text", k = 12)
+        .orderBy(col("doc_id"))
+    },
       """WITH w AS (SELECT * FROM
         |    read_parquet('/tmp/graft_oracle_aux/{SF}/substr_windows/*.parquet')),
         |sh AS (SELECT win_hash, min(doc_id) AS min_doc FROM w
@@ -4200,57 +3407,475 @@ object DocQueries {
         |  CAST(len(string_split(trim(regexp_replace(d.text, '\s+', ' ', 'g')), ' '))
         |    - coalesce(r.n_tokens_kept, 0) AS BIGINT) AS n_tokens_removed
         |FROM documents d LEFT JOIN reb r USING (doc_id)
-        |ORDER BY d.doc_id""".stripMargin,
+        |ORDER BY d.doc_id""".stripMargin),
 
-    "q_incremental_refresh" ->
+    // line family: documents.text is single-line, so the gate derives a
+    // deterministic multi-line form (newline every 8 words + appended
+    // nav/caps/short junk lines keyed off doc_id) that BOTH engines spell
+    // identically, then exercises the intra-doc line passes on it
+    Gate("q_line_dedup", (s, dir) => {
+      import graft.functions.{TextFunctions => TF}
+      val d = t(s, dir, "documents").withColumn("_t", multilineText)
+      d.select(col("doc_id"),
+          TF.dedupLines(col("_t")).as("clean_text"),
+          size(split(col("_t"), "\n")).cast(LongType).as("n_lines"),
+          size(array_distinct(split(col("_t"), "\n"))).cast(LongType)
+            .as("n_unique"))
+        .orderBy(col("doc_id"))
+    },
+      s"""WITH base AS (SELECT doc_id, $MultilineSql AS t FROM documents),
+         |l AS (SELECT doc_id, lines[pos] AS line, pos
+         |  FROM (SELECT doc_id, lines,
+         |      unnest(range(1, len(lines) + 1)) AS pos
+         |    FROM (SELECT doc_id, string_split(t, chr(10)) AS lines
+         |          FROM base))),
+         |u AS (SELECT doc_id, line, min(pos) AS p
+         |  FROM l GROUP BY doc_id, line),
+         |agg AS (SELECT doc_id,
+         |    string_agg(line, chr(10) ORDER BY p) AS clean_text,
+         |    CAST(count(*) AS BIGINT) AS n_unique FROM u GROUP BY doc_id),
+         |cnt AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_lines
+         |  FROM l GROUP BY doc_id)
+         |SELECT a.doc_id, a.clean_text, cnt.n_lines, a.n_unique
+         |FROM agg a JOIN cnt USING (doc_id) ORDER BY doc_id""".stripMargin),
+
+    Gate("q_line_filter", (s, dir) =>
+      graft.functions.TextFunctions.lineFilterTable(
+        t(s, dir, "documents").withColumn("text", multilineText),
+        "doc_id", "text")
+        .orderBy(col("doc_id")),
+      {
+        val boiler = graft.functions.TextFunctions.boilerplateLines
+          .map(b => s"'$b'").mkString(", ")
+        s"""WITH base AS (SELECT doc_id, $MultilineSql AS t FROM documents),
+           |l AS (SELECT doc_id, lines[pos] AS line, pos
+           |  FROM (SELECT doc_id, lines,
+           |      unnest(range(1, len(lines) + 1)) AS pos
+           |    FROM (SELECT doc_id, string_split(t, chr(10)) AS lines
+           |          FROM base))),
+           |c AS (SELECT doc_id, line, pos,
+           |    trim(regexp_replace(line, '\\s+', ' ', 'g')) AS cl FROM l),
+           |k AS (SELECT doc_id, line, pos,
+           |    (CASE WHEN length(cl) = 0 THEN 0
+           |          ELSE length(cl) - length(replace(cl, ' ', '')) + 1 END) >= 3
+           |    AND NOT (length(regexp_replace(line, '[^A-Za-z]', '', 'g')) > 0
+           |         AND length(regexp_replace(line, '[^A-Z]', '', 'g')) * 10000 >
+           |             length(regexp_replace(line, '[^A-Za-z]', '', 'g')) * 6000)
+           |    AND lower(trim(line)) NOT IN ($boiler) AS keep
+           |  FROM c)
+           |SELECT doc_id,
+           |  coalesce(string_agg(line, chr(10) ORDER BY pos)
+           |    FILTER (WHERE keep), '') AS clean_text,
+           |  CAST(coalesce(sum(CASE WHEN keep THEN 1 ELSE 0 END), 0) AS BIGINT)
+           |    AS n_lines_kept,
+           |  CAST(coalesce(sum(CASE WHEN NOT keep THEN 1 ELSE 0 END), 0) AS BIGINT)
+           |    AS n_lines_removed
+           |FROM k GROUP BY doc_id ORDER BY doc_id""".stripMargin}),
+
+    Gate("q_join_fanout", (s, dir) =>
+      graft.core.SafeJoin.fanoutStats(
+        t(s, dir, "lineitem"), t(s, dir, "orders"),
+        "l_orderkey", "o_orderkey", topK = 10),
+      """WITH lc AS (SELECT l_orderkey AS key, count(*) AS n_left
+        |  FROM lineitem GROUP BY 1),
+        |rc AS (SELECT o_orderkey AS key, count(*) AS n_right
+        |  FROM orders GROUP BY 1)
+        |SELECT lc.key, lc.n_left, rc.n_right,
+        |  lc.n_left * rc.n_right AS out_rows
+        |FROM lc JOIN rc ON lc.key = rc.key
+        |ORDER BY out_rows DESC, lc.key ASC LIMIT 10""".stripMargin),
+
+    Gate("q_phrase_search", (s, dir) => {
+      // phrase set = the first 3 words of every 50th doc; search the whole
+      // corpus for token-aligned occurrences via the window-hash equi-join
+      val docs = t(s, dir, "documents")
+      val norm = trim(regexp_replace(lower(col("text")), "\\s+", " "))
+      val phrases = docs.filter(col("doc_id") % 50 === 0)
+        .select(col("doc_id").as("phrase_id"),
+          concat_ws(" ", slice(split(norm, " "), 1, 3)).as("phrase"))
+        .filter(size(split(col("phrase"), " ")) === 3)
+      TF.multiPhraseSearch(docs, "doc_id", "text", phrases,
+        "phrase_id", "phrase")
+        .orderBy(col("doc_id"), col("phrase_id"))
+    },
+      """WITH n AS (SELECT doc_id,
+        |    trim(regexp_replace(lower(text), '\s+', ' ', 'g')) AS t
+        |  FROM documents),
+        |ph AS (SELECT doc_id AS phrase_id,
+        |    array_to_string(string_split(t, ' ')[1:3], ' ') AS p
+        |  FROM n WHERE doc_id % 50 = 0 AND len(string_split(t, ' ')) >= 3)
+        |SELECT n.doc_id, ph.phrase_id
+        |FROM n JOIN ph ON strpos(' ' || n.t || ' ', ' ' || ph.p || ' ') > 0
+        |ORDER BY n.doc_id, ph.phrase_id""".stripMargin),
+
+    Gate("q_compact", (s, dir) => {
+      // fragment the corpus into 64 tiny files, compact to ~1000-row
+      // files, prove the data survived the swap byte-for-byte
+      val base = "/tmp/graft_compact/" + Sql.sfTag(dir)
+      t(s, dir, "documents").repartition(64)
+        .write.mode("overwrite").parquet(base)
+      graft.io.Compact.rewrite(s, base, targetBytesPerFile = 256L * 1024)
+      graft.io.Sources.parquet(s, base).orderBy(col("doc_id"))
+    },
+      """SELECT doc_id, text, lang, source, n_chars
+        |FROM documents ORDER BY doc_id""".stripMargin),
+
+    Gate("q_snapshot_drift", (s, dir) => {
+      // same changed-snapshot construction as q_snapshot_diff; drift
+      // quantifies HOW changed each surviving changed doc is
+      val docs = t(s, dir, "documents")
+      val newDf = docs.filter(col("doc_id") % 13 =!= 0)
+        .withColumn("text",
+          when(col("doc_id") % 17 === 0, concat(col("text"), lit(" v2")))
+            .otherwise(col("text")))
+      ContentDrift.changedJaccard(docs, newDf, "doc_id", "text")
+        .orderBy(col("doc_id"))
+    },
+      s"""WITH nw AS (SELECT doc_id,
+         |    CASE WHEN doc_id % 17 = 0 THEN text || ' v2' ELSE text END
+         |      AS text
+         |  FROM documents WHERE doc_id % 13 <> 0),
+         |ch AS (SELECT o.doc_id, o.text AS otext, nw.text AS ntext
+         |  FROM documents o JOIN nw ON o.doc_id = nw.doc_id
+         |  WHERE md5(o.text) <> md5(nw.text)),
+         |ow AS (SELECT DISTINCT doc_id,
+         |    unnest(string_split_regex(trim(lower(otext)), '\\s+')) AS w
+         |  FROM ch),
+         |nww AS (SELECT DISTINCT doc_id,
+         |    unnest(string_split_regex(trim(lower(ntext)), '\\s+')) AS w
+         |  FROM ch),
+         |no AS (SELECT doc_id, count(*) AS n_old FROM ow GROUP BY 1),
+         |nn AS (SELECT doc_id, count(*) AS n_new FROM nww GROUP BY 1),
+         |ni AS (SELECT ow.doc_id, count(*) AS n_shared
+         |  FROM ow JOIN nww ON ow.doc_id = nww.doc_id AND ow.w = nww.w
+         |  GROUP BY 1)
+         |SELECT no.doc_id, no.n_old, nn.n_new,
+         |  COALESCE(ni.n_shared, 0) AS n_shared,
+         |  ${Sql.sround("CAST(COALESCE(ni.n_shared, 0) AS DOUBLE) / CAST(no.n_old + nn.n_new - COALESCE(ni.n_shared, 0) AS DOUBLE)")}
+         |    AS jaccard
+         |FROM no JOIN nn ON no.doc_id = nn.doc_id
+         |LEFT JOIN ni ON no.doc_id = ni.doc_id
+         |ORDER BY no.doc_id""".stripMargin),
+
+    // the oracle rebuilds both snapshots and replays the full-outer
+    // hash-compare classification
+    Gate("q_snapshot_diff", (s, dir) => {
+      val docs = t(s, dir, "documents")
+      val newDf = docs.filter(col("doc_id") % 13 =!= 0)
+        .withColumn("text",
+          when(col("doc_id") % 17 === 0, concat(col("text"), lit(" v2")))
+            .otherwise(col("text")))
+        // negative shifted ids can never collide with real (non-negative)
+        // doc ids at any scale factor
+        .unionByName(docs.filter(col("doc_id") % 19 === 0)
+          .select((-col("doc_id") - lit(1L)).as("doc_id"), col("text"),
+            col("lang"), col("source"), col("n_chars")))
+      SnapshotDiff.diff(docs, newDf, "doc_id", "text")
+        .orderBy(col("doc_id"))
+    },
+      """WITH o AS (SELECT doc_id, md5(text) AS oh FROM documents),
+        |nw AS (
+        |  SELECT doc_id,
+        |      md5(CASE WHEN doc_id % 17 = 0 THEN text || ' v2'
+        |               ELSE text END) AS nh
+        |    FROM documents WHERE doc_id % 13 <> 0
+        |  UNION ALL
+        |  SELECT -doc_id - 1, md5(text) FROM documents
+        |    WHERE doc_id % 19 = 0),
+        |j AS (SELECT COALESCE(o.doc_id, nw.doc_id) AS doc_id, oh, nh
+        |  FROM o FULL OUTER JOIN nw ON o.doc_id = nw.doc_id)
+        |SELECT doc_id,
+        |  CASE WHEN oh IS NULL THEN 'added'
+        |       WHEN nh IS NULL THEN 'removed'
+        |       WHEN oh = nh THEN 'unchanged'
+        |       ELSE 'changed' END AS status
+        |FROM j ORDER BY doc_id""".stripMargin),
+
+    Gate("q_graph_distance", (s, dir) => {
+      // link distance from a trusted seed set (crawl-quality signal) over
+      // the deterministic citation graph of q_pagerank (each doc links to
+      // 7·id+1 and 13·id+5 mod N): multi-source frontier BFS — one
+      // edge-join + one anti-join per hop, O(|E|) total work
+      val docs = t(s, dir, "documents").select(col("doc_id"))
+      val cnt = docs.agg(count(lit(1)).as("_n"))
+      val link = (a: Long, b: Long) => docs.crossJoin(broadcast(cnt))
+        .select(col("doc_id").as("src"),
+          pmod(col("doc_id") * a + b, col("_n")).as("dst"))
+      graft.operators.Bfs.distances(docs, "doc_id",
+        link(7L, 1L).union(link(13L, 5L)), "src", "dst",
+        seeds = docs.filter(col("doc_id") < 3), maxHops = 12)
+        .orderBy(col("doc_id"))
+    },
+      """WITH RECURSIVE n AS (SELECT COUNT(*) AS c FROM documents),
+        |edges AS (
+        |  SELECT doc_id AS src, (doc_id * 7 + 1) % c AS dst
+        |    FROM documents, n
+        |  UNION ALL
+        |  SELECT doc_id, (doc_id * 13 + 5) % c FROM documents, n),
+        |reach(id, d) AS (
+        |  SELECT doc_id, CAST(0 AS BIGINT) FROM documents WHERE doc_id < 3
+        |  UNION
+        |  SELECT e.dst, r.d + 1 FROM reach r JOIN edges e ON e.src = r.id
+        |    WHERE r.d < 12),
+        |best AS (SELECT id, MIN(d) AS dist FROM reach GROUP BY id)
+        |SELECT doc.doc_id, best.dist
+        |FROM documents doc LEFT JOIN best ON doc.doc_id = best.id
+        |ORDER BY doc.doc_id""".stripMargin),
+
+    Gate("q_kcore", (s, dir) => {
+      // dense-cluster extraction: the 4-core of the citation graph with a
+      // planted near-clique on ids < 25 (each also links to the next 3 mod
+      // 25). The sparse citation shell peels away over ~7-9 rounds (each
+      // round: two semi-joins + one degree aggregate, shrinking state);
+      // only the planted dense cluster survives — the robustness upgrade
+      // over raw degree filtering, which the shell's hubs would pass
+      val docs = t(s, dir, "documents").select(col("doc_id"))
+      val cnt = docs.agg(count(lit(1)).as("_n"))
+      val link = (a: Long, b: Long) => docs.crossJoin(broadcast(cnt))
+        .select(col("doc_id").as("src"),
+          pmod(col("doc_id") * a + b, col("_n")).as("dst"))
+      val clique = (1 to 3).map { j =>
+        docs.filter(col("doc_id") < 25)
+          .select(col("doc_id").as("src"),
+            pmod(col("doc_id") + j, lit(25L)).as("dst"))
+      }.reduce(_ unionByName _)
+      graft.operators.KCore.core(docs, "doc_id",
+        link(7L, 1L).union(link(13L, 5L)).unionByName(clique),
+        "src", "dst", k = 4)
+        .orderBy(col("doc_id"))
+    }, {
+      // 12 unrolled peel rounds cover the measured depth (7 at N=500, 9
+      // at N=5000) with margin; peeling is monotone, so extra rounds are
+      // no-ops once the fixpoint is reached (the operator itself asserts
+      // convergence). Every round MUST be MATERIALIZED: DuckDB inlines
+      // plain CTEs, and a_i referencing a_{i-1} twice would inline the
+      // whole chain 2^12 times (observed as a too-many-open-files blowup)
+      val rounds = (1 to 12).map { i =>
+        s"""a$i AS MATERIALIZED (SELECT e.u AS id FROM sym e
+           |  JOIN a${i - 1} x ON e.u = x.id
+           |  JOIN a${i - 1} y ON e.v = y.id
+           |  GROUP BY e.u HAVING COUNT(*) >= 4)""".stripMargin
+      }.mkString(",\n")
+      s"""WITH nodes AS MATERIALIZED (SELECT doc_id AS id FROM documents),
+         |n AS (SELECT COUNT(*) AS c FROM nodes),
+         |e0 AS MATERIALIZED (
+         |  SELECT id AS u, (id * 7 + 1) % c AS v FROM nodes, n
+         |  UNION ALL SELECT id, (id * 13 + 5) % c FROM nodes, n
+         |  UNION ALL SELECT id, (id + 1) % 25 FROM nodes WHERE id < 25
+         |  UNION ALL SELECT id, (id + 2) % 25 FROM nodes WHERE id < 25
+         |  UNION ALL SELECT id, (id + 3) % 25 FROM nodes WHERE id < 25),
+         |sym AS MATERIALIZED (SELECT DISTINCT u, v FROM (
+         |  SELECT u, v FROM e0 WHERE u <> v
+         |  UNION ALL SELECT v, u FROM e0 WHERE u <> v)),
+         |a0 AS MATERIALIZED (SELECT id FROM nodes),
+         |$rounds
+         |SELECT id AS doc_id FROM a12 ORDER BY doc_id""".stripMargin
+    }),
+
+    Gate("q_trustrank", (s, dir) => {
+      // TrustRank: teleport restricted to the 5 trusted seeds
+      // (doc_id < 5) over the truncated doubling/tripling graph of
+      // q_pagerank_dangling — sinks are plentiful, so the "dangling mass
+      // returns to the seeds" path carries real value every round.
+      // Authority only flows outward from curation: the spam-resistant,
+      // weighted complement of q_graph_distance
+      val docs = t(s, dir, "documents").select(col("doc_id"))
+      val cnt = docs.agg(count(lit(1)).as("_n"))
+      val link = (a: Long, b: Long) => docs.crossJoin(broadcast(cnt))
+        .filter(col("doc_id") * a + b < col("_n"))
+        .select(col("doc_id").as("src"), (col("doc_id") * a + b).as("dst"))
+      graft.operators.PageRank.trustRank(
+        link(2L, 1L).union(link(3L, 2L)), "src", "dst",
+        seeds = docs.filter(col("doc_id") < 5), seedCol = "doc_id",
+        iterations = 3)
+        .orderBy(col("id"))
+    }, {
+      // same fixed-point replay as q_pagerank, with the teleport base and
+      // the per-round dangling share applied to seed rows only
+      def iter(prev: String, cur: String, sh: String) =
+        s"""$sh AS (SELECT CAST(FLOOR(COALESCE(SUM(p.rank), 0) / 5.0)
+           |    AS BIGINT) AS m
+           |  FROM $prev p WHERE p.id NOT IN (SELECT id FROM deg)),
+           |$cur AS (SELECT nodes.id,
+           |  (CASE WHEN nodes.id < 5 THEN bb.b ELSE 0 END)
+           |  + CAST(FLOOR((85 * (COALESCE(s.s, 0)
+           |      + CASE WHEN nodes.id < 5 THEN $sh.m ELSE 0 END)) / 100.0)
+           |    AS BIGINT) AS rank
+           |  FROM nodes CROSS JOIN bb CROSS JOIN $sh
+           |  LEFT JOIN (SELECT e.dst AS id,
+           |      SUM(CAST(FLOOR(CAST(p.rank AS DOUBLE) / d._deg) AS BIGINT))
+           |        AS s
+           |    FROM e JOIN $prev p ON e.src = p.id
+           |    JOIN deg d ON e.src = d.id
+           |    GROUP BY e.dst) s ON nodes.id = s.id)""".stripMargin
+      s"""WITH nn AS (SELECT count(*) AS n FROM documents),
+         |e AS (SELECT doc_id AS src, doc_id * 2 + 1 AS dst
+         |        FROM documents, nn WHERE doc_id * 2 + 1 < nn.n
+         |      UNION ALL
+         |      SELECT doc_id, doc_id * 3 + 2 FROM documents, nn
+         |        WHERE doc_id * 3 + 2 < nn.n),
+         |nodes AS (SELECT DISTINCT id FROM
+         |  (SELECT src AS id FROM e UNION ALL SELECT dst FROM e)),
+         |deg AS (SELECT src AS id, count(*) AS _deg FROM e GROUP BY 1),
+         |bb AS (SELECT
+         |    CAST(FLOOR(1000000 * 15 / (100.0 * 5)) AS BIGINT) AS b,
+         |    CAST(FLOOR(1000000.0 / 5) AS BIGINT) AS r0),
+         |r0 AS (SELECT id,
+         |  CASE WHEN id < 5 THEN (SELECT r0 FROM bb) ELSE 0 END AS rank
+         |  FROM nodes),
+         |${iter("r0", "r1", "sh1")},
+         |${iter("r1", "r2", "sh2")},
+         |${iter("r2", "r3", "sh3")}
+         |SELECT id, rank FROM r3 ORDER BY id""".stripMargin
+    }),
+
+    Gate("q_incremental_refresh", (s, dir) => {
+      // capstone of the incremental path: classify the new snapshot
+      // against the old (SnapshotDiff), turn the classification into a
+      // CDC batch (changed = delete old row + insert new row), fold it
+      // into the per-source aggregate state with updateCdc — and the
+      // result must equal the direct aggregate of the NEW snapshot, which
+      // is exactly what the oracle computes. History is never rescanned:
+      // the refresh touches the diff slice plus the state frame
+      val d = t(s, dir, "documents")
+      val v1 = d.filter(col("doc_id") % 13 =!= 0)
+        .withColumn("text", when(col("doc_id") % 5 === 0,
+          concat(col("text"), lit(" (draft)"))).otherwise(col("text")))
+      val v2 = d.filter(col("doc_id") % 17 =!= 0)
+      val st0 = graft.operators.IncrementalAgg.update(None, v1,
+        Seq("source"), "n_chars")
+      graft.operators.IncrementalAgg.refreshFromSnapshots(st0, v1, v2,
+        "doc_id", "text", Seq("source"), "n_chars")
+        .select(col("source"), col("n"),
+          round(col("total").cast(DoubleType), 4).as("total"))
+        .orderBy(col("source"))
+    },
       // the incremental law: diff + CDC fold over the old snapshot must
       // equal the direct aggregate of the new snapshot — so the oracle IS
       // that direct aggregate, never mentioning the old version at all
       s"""SELECT source, count(n_chars) AS n,
          |  ${Sql.esum("n_chars")} AS total
          |FROM documents WHERE doc_id % 17 <> 0
-         |GROUP BY 1 ORDER BY 1""".stripMargin,
+         |GROUP BY 1 ORDER BY 1""".stripMargin),
 
-    "q_tokenizer_compare" ->
-      // chars from the shared normalization; both token counts from the
-      // engine aux; ratio and winner as pure BIGINT arithmetic
-      """WITH nrm AS (SELECT doc_id, lang,
-        |    length(replace(trim(regexp_replace(lower(text), '\s+', ' ',
-        |      'g')), ' ', '')) AS nc
-        |  FROM documents),
-        |a AS (SELECT doc_id, _nb AS nb, _nu AS nu FROM
-        |  read_parquet('/tmp/graft_oracle_aux/{SF}/tok_compare/*.parquet')),
-        |j AS (SELECT nrm.lang, nrm.nc, a.nb, a.nu
-        |  FROM nrm JOIN a USING (doc_id))
-        |SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_docs,
-        |  CAST(SUM(nb) AS BIGINT) AS bpe_tokens,
-        |  CAST(SUM(nu) AS BIGINT) AS uni_tokens,
-        |  CAST((SUM(nc) * 1000000) // SUM(nb) AS BIGINT) AS bpe_cpt_e6,
-        |  CAST((SUM(nc) * 1000000) // SUM(nu) AS BIGINT) AS uni_cpt_e6,
-        |  SUM(nu) < SUM(nb) AS unigram_wins
-        |FROM j GROUP BY lang ORDER BY lang""".stripMargin,
+    Gate("q_embed_pq", (s, dir) => {
+      // product quantization: 8 subspace codebooks (driver-sample fit,
+      // seeded), codegen'd encode scan to 8 one-byte codes per vector,
+      // ADC top-15 by literal lookup table. Same recall shape as
+      // q_embed_ivf: the oracle reads the materialized result ids and
+      // counts overlap with its OWN exact L2 top-15
+      val emb = t(s, dir, "embeddings")
+      val qvec = emb.filter(col("vec_id") === 2)
+        .select(col("embedding")).head().getSeq[Float](0)
+      val model = Similarity.pqTrain(emb, "embedding", m = 8, codewords = 64)
+      val enc = Similarity.pqEncode(emb, "embedding", model)
+      val res = Similarity.pqSearch(enc, "vec_id", model, qvec, k = 15)
+        .select(col("vec_id")).persist() // aux + recall join share the scan
+      Aux.write(res, s"/tmp/graft_oracle_aux/${Sql.sfTag(dir)}/pq_results")
+      val qd = array(qvec.map(v => lit(v.toDouble)): _*)
+      val dist = aggregate(
+        zip_with(col("embedding").cast(ArrayType(DoubleType)), qd,
+          (a, b) => (a - b) * (a - b)),
+        lit(0.0), (acc, x) => acc + x)
+      val exact = emb.select(col("vec_id"),
+          Semantics.safeRound(dist, 4).as("dd"))
+        .orderBy(col("dd").asc, col("vec_id").asc).limit(15)
+        .select(col("vec_id"), lit(1).as("_hit"))
+      res.join(exact, Seq("vec_id"), "left")
+        .agg(count(lit(1)).as("n_results"),
+          sum(coalesce(col("_hit"), lit(0))).cast(LongType).as("n_hits"))
+    },
+      // recall of ADC top-15 vs the oracle's own exact L2 top-15
+      s"""WITH r AS (SELECT vec_id
+         |  FROM read_parquet('/tmp/graft_oracle_aux/{SF}/pq_results/*.parquet')),
+         |e AS (SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS ev,
+         |             generate_subscripts(embedding, 1) AS i FROM embeddings),
+         |q AS (SELECT CAST(unnest(embedding) AS DOUBLE) AS qv,
+         |             generate_subscripts(embedding, 1) AS i
+         |      FROM embeddings WHERE vec_id = 2),
+         |d AS (SELECT e.vec_id, SUM((e.ev - q.qv) * (e.ev - q.qv)) AS dist
+         |      FROM e JOIN q USING (i) GROUP BY e.vec_id),
+         |exact AS (SELECT vec_id FROM (
+         |    SELECT vec_id, ${Sql.sround("dist")} AS dd
+         |    FROM d ORDER BY dd ASC, vec_id ASC LIMIT 15))
+         |SELECT CAST(COUNT(*) AS BIGINT) AS n_results,
+         |  CAST(SUM(CASE WHEN x.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hits
+         |FROM r LEFT JOIN exact x ON r.vec_id = x.vec_id""".stripMargin),
 
-    "q_unigram_encode" ->
-      // independent replay of the tokenizer invariants from the aux token
-      // stream: rebuild per doc, count, and screen against the aux vocab
-      """WITH t AS (SELECT doc_id, pos, token FROM
-        |    read_parquet('/tmp/graft_oracle_aux/{SF}/unigram_tokens/*.parquet')),
-        |v AS (SELECT piece FROM
-        |    read_parquet('/tmp/graft_oracle_aux/{SF}/unigram_vocab/*.parquet')),
-        |reb AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
-        |    string_agg(token, '' ORDER BY pos) AS rebuilt,
-        |    CAST(sum(CASE WHEN token IN (SELECT piece FROM v)
-        |             THEN 0 ELSE 1 END) AS BIGINT) AS n_oov
-        |  FROM t GROUP BY doc_id)
-        |SELECT d.doc_id, coalesce(r.n_tokens, 0) AS n_tokens,
-        |  coalesce(r.rebuilt, '') =
-        |    replace(trim(regexp_replace(lower(d.text), '\s+', ' ', 'g')),
-        |            ' ', '') AS lossless,
-        |  coalesce(r.n_oov, 0) AS n_oov
-        |FROM documents d LEFT JOIN reb r USING (doc_id)
-        |ORDER BY d.doc_id""".stripMargin,
+    Gate("q_embed_ivfpq", (s, dir) => {
+      // the composed billion-vector recipe: coarse IVF lists prune which
+      // rows a query touches, PQ codes shrink each touched row to 8
+      // bytes; one shared driver sample trains both fits. Recall gate
+      // like q_embed_ivf/_pq: oracle counts overlap of the materialized
+      // ids with its OWN exact L2 top-15
+      val emb = t(s, dir, "embeddings")
+      val qvec = emb.filter(col("vec_id") === 2)
+        .select(col("embedding")).head().getSeq[Float](0)
+      val idx = Similarity.ivfPqIndex(emb, "embedding", "vec_id",
+        nLists = 8, m = 8, codewords = 64)
+      val res = Similarity.ivfPqSearch(idx, "vec_id", qvec,
+          k = 15, nProbe = 4)
+        .select(col("vec_id")).persist() // aux + recall join share the scan
+      Aux.write(res, s"/tmp/graft_oracle_aux/${Sql.sfTag(dir)}/ivfpq_results")
+      val qd = array(qvec.map(v => lit(v.toDouble)): _*)
+      val dist = aggregate(
+        zip_with(col("embedding").cast(ArrayType(DoubleType)), qd,
+          (a, b) => (a - b) * (a - b)),
+        lit(0.0), (acc, x) => acc + x)
+      val exact = emb.select(col("vec_id"),
+          Semantics.safeRound(dist, 4).as("dd"))
+        .orderBy(col("dd").asc, col("vec_id").asc).limit(15)
+        .select(col("vec_id"), lit(1).as("_hit"))
+      res.join(exact, Seq("vec_id"), "left")
+        .agg(count(lit(1)).as("n_results"),
+          sum(coalesce(col("_hit"), lit(0))).cast(LongType).as("n_hits"))
+    },
+      // recall of the list-pruned ADC search vs the exact L2 top-15
+      s"""WITH r AS (SELECT vec_id
+         |  FROM read_parquet('/tmp/graft_oracle_aux/{SF}/ivfpq_results/*.parquet')),
+         |e AS (SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS ev,
+         |             generate_subscripts(embedding, 1) AS i FROM embeddings),
+         |q AS (SELECT CAST(unnest(embedding) AS DOUBLE) AS qv,
+         |             generate_subscripts(embedding, 1) AS i
+         |      FROM embeddings WHERE vec_id = 2),
+         |d AS (SELECT e.vec_id, SUM((e.ev - q.qv) * (e.ev - q.qv)) AS dist
+         |      FROM e JOIN q USING (i) GROUP BY e.vec_id),
+         |exact AS (SELECT vec_id FROM (
+         |    SELECT vec_id, ${Sql.sround("dist")} AS dd
+         |    FROM d ORDER BY dd ASC, vec_id ASC LIMIT 15))
+         |SELECT CAST(COUNT(*) AS BIGINT) AS n_results,
+         |  CAST(SUM(CASE WHEN x.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hits
+         |FROM r LEFT JOIN exact x ON r.vec_id = x.vec_id""".stripMargin),
 
-    "q_embed_ivfadc" ->
+    Gate("q_embed_ivfadc", (s, dir) => {
+      // residual IVFADC: PQ codebooks trained on (vector − coarse
+      // centroid) residuals — within-list variance instead of the full
+      // spread, so the same 8×64 code budget quantizes finer (measurably
+      // better recall than q_embed_ivfpq at the same probe budget); ADC
+      // scoring goes through the codegen'd per-list table stack. Same
+      // recall oracle as its siblings
+      val emb = t(s, dir, "embeddings")
+      val qvec = emb.filter(col("vec_id") === 2)
+        .select(col("embedding")).head().getSeq[Float](0)
+      val idx = Similarity.ivfAdcIndex(emb, "embedding", "vec_id",
+        nLists = 8, m = 8, codewords = 64)
+      val res = Similarity.ivfAdcSearch(idx, "vec_id", qvec,
+          k = 15, nProbe = 4)
+        .select(col("vec_id")).persist() // aux + recall join share the scan
+      Aux.write(res, s"/tmp/graft_oracle_aux/${Sql.sfTag(dir)}/ivfadc_results")
+      val qd = array(qvec.map(v => lit(v.toDouble)): _*)
+      val dist = aggregate(
+        zip_with(col("embedding").cast(ArrayType(DoubleType)), qd,
+          (a, b) => (a - b) * (a - b)),
+        lit(0.0), (acc, x) => acc + x)
+      val exact = emb.select(col("vec_id"),
+          Semantics.safeRound(dist, 4).as("dd"))
+        .orderBy(col("dd").asc, col("vec_id").asc).limit(15)
+        .select(col("vec_id"), lit(1).as("_hit"))
+      res.join(exact, Seq("vec_id"), "left")
+        .agg(count(lit(1)).as("n_results"),
+          sum(coalesce(col("_hit"), lit(0))).cast(LongType).as("n_hits"))
+    },
       // recall of the residual-coded search vs the exact L2 top-15
       s"""WITH r AS (SELECT vec_id
          |  FROM read_parquet('/tmp/graft_oracle_aux/{SF}/ivfadc_results/*.parquet')),
@@ -4266,9 +3891,65 @@ object DocQueries {
          |    FROM d ORDER BY dd ASC, vec_id ASC LIMIT 15))
          |SELECT CAST(COUNT(*) AS BIGINT) AS n_results,
          |  CAST(SUM(CASE WHEN x.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hits
-         |FROM r LEFT JOIN exact x ON r.vec_id = x.vec_id""".stripMargin,
+         |FROM r LEFT JOIN exact x ON r.vec_id = x.vec_id""".stripMargin),
 
-    "q_jl_project" ->
+    Gate("q_embed_ivfadc_refined", (s, dir) => {
+      // two-stage IVFADC: codes-only ADC shortlists refine×k candidates,
+      // then ONLY the shortlist re-ranks by exact float distance (a
+      // broadcast semi-join — float cost proportional to the shortlist,
+      // not the probed lists). Same recall oracle as its siblings; the
+      // refine stage should push recall at-or-above the plain ADC gate
+      val emb = t(s, dir, "embeddings")
+      val qvec = emb.filter(col("vec_id") === 2)
+        .select(col("embedding")).head().getSeq[Float](0)
+      val idx = Similarity.ivfAdcIndex(emb, "embedding", "vec_id",
+        nLists = 8, m = 8, codewords = 64)
+      val res = Similarity.ivfAdcSearchRefined(idx, emb, "embedding",
+          "vec_id", qvec, k = 15, nProbe = 4, refine = 4)
+        .select(col("vec_id")).persist()
+      Aux.write(res,
+        s"/tmp/graft_oracle_aux/${Sql.sfTag(dir)}/ivfadc_refined_results")
+      val qd = array(qvec.map(v => lit(v.toDouble)): _*)
+      val dist = aggregate(
+        zip_with(col("embedding").cast(ArrayType(DoubleType)), qd,
+          (a, b) => (a - b) * (a - b)),
+        lit(0.0), (acc, x) => acc + x)
+      val exact = emb.select(col("vec_id"),
+          Semantics.safeRound(dist, 4).as("dd"))
+        .orderBy(col("dd").asc, col("vec_id").asc).limit(15)
+        .select(col("vec_id"), lit(1).as("_hit"))
+      res.join(exact, Seq("vec_id"), "left")
+        .agg(count(lit(1)).as("n_results"),
+          sum(coalesce(col("_hit"), lit(0))).cast(LongType).as("n_hits"))
+    },
+      // recall of the shortlist-then-exact-rerank search vs exact top-15
+      s"""WITH r AS (SELECT vec_id
+         |  FROM read_parquet('/tmp/graft_oracle_aux/{SF}/ivfadc_refined_results/*.parquet')),
+         |e AS (SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS ev,
+         |             generate_subscripts(embedding, 1) AS i FROM embeddings),
+         |q AS (SELECT CAST(unnest(embedding) AS DOUBLE) AS qv,
+         |             generate_subscripts(embedding, 1) AS i
+         |      FROM embeddings WHERE vec_id = 2),
+         |d AS (SELECT e.vec_id, SUM((e.ev - q.qv) * (e.ev - q.qv)) AS dist
+         |      FROM e JOIN q USING (i) GROUP BY e.vec_id),
+         |exact AS (SELECT vec_id FROM (
+         |    SELECT vec_id, ${Sql.sround("dist")} AS dd
+         |    FROM d ORDER BY dd ASC, vec_id ASC LIMIT 15))
+         |SELECT CAST(COUNT(*) AS BIGINT) AS n_results,
+         |  CAST(SUM(CASE WHEN x.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hits
+         |FROM r LEFT JOIN exact x ON r.vec_id = x.vec_id""".stripMargin),
+
+    Gate("q_jl_project", (s, dir) =>
+      // Johnson–Lindenstrauss ±1 projection, fully replayable: the sign
+      // matrix derives from md5 parity (both engines rebuild it
+      // bit-for-bit) and each component is a decimal-exact signed sum —
+      // the dimensionality cut before LSH/IVF bucketing, with an EXACT
+      // oracle instead of a distance-distortion invariant
+      Similarity.jlProject(t(s, dir, "embeddings"), "embedding", "vec_id",
+          outDims = 8)
+        .select(col("vec_id"), col("o"),
+          Semantics.safeRound(col("proj"), 4).as("proj_e4"))
+        .orderBy(col("vec_id"), col("o")),
       // the same md5-parity sign matrix + decimal-exact signed sums
       s"""WITH e AS (SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS ev,
          |    generate_subscripts(embedding, 1) AS i FROM embeddings),
@@ -4286,68 +3967,128 @@ object DocQueries {
          |  FROM e JOIN sgn ON sgn.i = e.i GROUP BY 1, 2)
          |SELECT vec_id, CAST(o AS INT) AS o,
          |  ${Sql.sround("dot")} AS proj_e4
-         |FROM p ORDER BY vec_id, o""".stripMargin,
+         |FROM p ORDER BY vec_id, o""".stripMargin),
 
-    "q_embed_ivfadc_refined" ->
-      // recall of the shortlist-then-exact-rerank search vs exact top-15
-      s"""WITH r AS (SELECT vec_id
-         |  FROM read_parquet('/tmp/graft_oracle_aux/{SF}/ivfadc_refined_results/*.parquet')),
-         |e AS (SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS ev,
-         |             generate_subscripts(embedding, 1) AS i FROM embeddings),
-         |q AS (SELECT CAST(unnest(embedding) AS DOUBLE) AS qv,
-         |             generate_subscripts(embedding, 1) AS i
-         |      FROM embeddings WHERE vec_id = 2),
-         |d AS (SELECT e.vec_id, SUM((e.ev - q.qv) * (e.ev - q.qv)) AS dist
-         |      FROM e JOIN q USING (i) GROUP BY e.vec_id),
-         |exact AS (SELECT vec_id FROM (
-         |    SELECT vec_id, ${Sql.sround("dist")} AS dd
-         |    FROM d ORDER BY dd ASC, vec_id ASC LIMIT 15))
-         |SELECT CAST(COUNT(*) AS BIGINT) AS n_results,
-         |  CAST(SUM(CASE WHEN x.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hits
-         |FROM r LEFT JOIN exact x ON r.vec_id = x.vec_id""".stripMargin,
+    Gate("q_unigram_encode", (s, dir) => {
+      // unigram-LM tokenizer (SentencePiece-style): EM-trained piece
+      // vocabulary over the word-type table, Viterbi encode as a codegen
+      // projection. The model is engine-specific, so the gate follows the
+      // invariant pattern: token stream + vocabulary ship as aux, and
+      // BOTH engines independently verify the same per-doc contract —
+      // token count, losslessness (tokens rebuild the normalized text),
+      // and zero out-of-vocabulary emissions
+      val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
+      val model = graft.functions.Unigram.train(docs, "text",
+        vocabSize = 300, maxPieceLen = 6, emIters = 2)
+      val enc = graft.core.Rebalance.computeDense(docs)
+        .select(col("doc_id"), col("text"),
+          graft.functions.Unigram.encodeTokens(col("text"), model).as("toks"))
+        .persist()
+      Aux.write(enc.select(col("doc_id"),
+          posexplode(col("toks")).as(Seq("pos", "token"))),
+        s"/tmp/graft_oracle_aux/${Sql.sfTag(dir)}/unigram_tokens",
+        single = false)
+      Aux.write({ import s.implicits._; model.pieces.toSeq.toDF("piece") },
+        s"/tmp/graft_oracle_aux/${Sql.sfTag(dir)}/unigram_vocab")
+      val collapsed = replace(
+        trim(regexp_replace(lower(col("text")), "\\s+", " ")),
+        lit(" "), lit(""))
+      enc.select(col("doc_id"),
+          size(col("toks")).cast(LongType).as("n_tokens"),
+          (concat_ws("", col("toks")) === collapsed).as("lossless"),
+          size(array_except(col("toks"), lit(model.pieces)))
+            .cast(LongType).as("n_oov"))
+        .orderBy(col("doc_id"))
+    },
+      // independent replay of the tokenizer invariants from the aux token
+      // stream: rebuild per doc, count, and screen against the aux vocab
+      """WITH t AS (SELECT doc_id, pos, token FROM
+        |    read_parquet('/tmp/graft_oracle_aux/{SF}/unigram_tokens/*.parquet')),
+        |v AS (SELECT piece FROM
+        |    read_parquet('/tmp/graft_oracle_aux/{SF}/unigram_vocab/*.parquet')),
+        |reb AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
+        |    string_agg(token, '' ORDER BY pos) AS rebuilt,
+        |    CAST(sum(CASE WHEN token IN (SELECT piece FROM v)
+        |             THEN 0 ELSE 1 END) AS BIGINT) AS n_oov
+        |  FROM t GROUP BY doc_id)
+        |SELECT d.doc_id, coalesce(r.n_tokens, 0) AS n_tokens,
+        |  coalesce(r.rebuilt, '') =
+        |    replace(trim(regexp_replace(lower(d.text), '\s+', ' ', 'g')),
+        |            ' ', '') AS lossless,
+        |  coalesce(r.n_oov, 0) AS n_oov
+        |FROM documents d LEFT JOIN reb r USING (doc_id)
+        |ORDER BY d.doc_id""".stripMargin),
 
-    "q_embed_ivfpq" ->
-      // recall of the list-pruned ADC search vs the exact L2 top-15
-      s"""WITH r AS (SELECT vec_id
-         |  FROM read_parquet('/tmp/graft_oracle_aux/{SF}/ivfpq_results/*.parquet')),
-         |e AS (SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS ev,
-         |             generate_subscripts(embedding, 1) AS i FROM embeddings),
-         |q AS (SELECT CAST(unnest(embedding) AS DOUBLE) AS qv,
-         |             generate_subscripts(embedding, 1) AS i
-         |      FROM embeddings WHERE vec_id = 2),
-         |d AS (SELECT e.vec_id, SUM((e.ev - q.qv) * (e.ev - q.qv)) AS dist
-         |      FROM e JOIN q USING (i) GROUP BY e.vec_id),
-         |exact AS (SELECT vec_id FROM (
-         |    SELECT vec_id, ${Sql.sround("dist")} AS dd
-         |    FROM d ORDER BY dd ASC, vec_id ASC LIMIT 15))
-         |SELECT CAST(COUNT(*) AS BIGINT) AS n_results,
-         |  CAST(SUM(CASE WHEN x.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hits
-         |FROM r LEFT JOIN exact x ON r.vec_id = x.vec_id""".stripMargin,
+    Gate("q_tokenizer_compare", (s, dir) => {
+      // the "which tokenizer fits this corpus" report: BPE and unigram-LM
+      // trained on the same corpus, per-language fertility side by side
+      // (normalized chars per token, e6-scaled BIGINT). Both per-doc token
+      // counts single-source via aux (each kernel is independently gated);
+      // chars, grouping, ratios, and the winner flag replay as pure
+      // BIGINT arithmetic
+      val docs = t(s, dir, "documents")
+      val merges = graft.functions.Bpe.train(docs, "text", numMerges = 6)
+      val model = graft.functions.Unigram.train(docs, "text",
+        vocabSize = 300, maxPieceLen = 6, emIters = 2)
+      val norm = trim(regexp_replace(lower(col("text")), "\\s+", " "))
+      val enc = graft.core.Rebalance.computeDense(docs)
+        .select(col("doc_id"), col("lang"),
+          length(translate(norm, " ", "")).as("_nc"),
+          size(graft.functions.Bpe.encode(col("text"), merges)).as("_nb"),
+        size(graft.functions.Unigram.encodeTokens(col("text"), model))
+          .as("_nu"))
+      val encP = if (Aux.enabled) enc.persist() else enc
+      Aux.write(encP.select(col("doc_id"), col("_nb"), col("_nu")),
+        s"/tmp/graft_oracle_aux/${Sql.sfTag(dir)}/tok_compare")
+      encP.groupBy(col("lang"))
+        .agg(count(lit(1)).as("n_docs"), sum(col("_nc")).as("n_chars_norm"),
+          sum(col("_nb")).as("bpe_tokens"), sum(col("_nu")).as("uni_tokens"))
+        .select(col("lang"), col("n_docs"), col("bpe_tokens"),
+          col("uni_tokens"),
+          expr("CAST((n_chars_norm * 1000000) DIV bpe_tokens AS BIGINT)")
+            .as("bpe_cpt_e6"),
+          expr("CAST((n_chars_norm * 1000000) DIV uni_tokens AS BIGINT)")
+            .as("uni_cpt_e6"),
+          (col("uni_tokens") < col("bpe_tokens")).as("unigram_wins"))
+        .orderBy(col("lang"))
+    },
+      // chars from the shared normalization; both token counts from the
+      // engine aux; ratio and winner as pure BIGINT arithmetic
+      """WITH nrm AS (SELECT doc_id, lang,
+        |    length(replace(trim(regexp_replace(lower(text), '\s+', ' ',
+        |      'g')), ' ', '')) AS nc
+        |  FROM documents),
+        |a AS (SELECT doc_id, _nb AS nb, _nu AS nu FROM
+        |  read_parquet('/tmp/graft_oracle_aux/{SF}/tok_compare/*.parquet')),
+        |j AS (SELECT nrm.lang, nrm.nc, a.nb, a.nu
+        |  FROM nrm JOIN a USING (doc_id))
+        |SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_docs,
+        |  CAST(SUM(nb) AS BIGINT) AS bpe_tokens,
+        |  CAST(SUM(nu) AS BIGINT) AS uni_tokens,
+        |  CAST((SUM(nc) * 1000000) // SUM(nb) AS BIGINT) AS bpe_cpt_e6,
+        |  CAST((SUM(nc) * 1000000) // SUM(nu) AS BIGINT) AS uni_cpt_e6,
+        |  SUM(nu) < SUM(nb) AS unigram_wins
+        |FROM j GROUP BY lang ORDER BY lang""".stripMargin),
 
-    "q_embed_pq" ->
-      // recall of ADC top-15 vs the oracle's own exact L2 top-15
-      s"""WITH r AS (SELECT vec_id
-         |  FROM read_parquet('/tmp/graft_oracle_aux/{SF}/pq_results/*.parquet')),
-         |e AS (SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS ev,
-         |             generate_subscripts(embedding, 1) AS i FROM embeddings),
-         |q AS (SELECT CAST(unnest(embedding) AS DOUBLE) AS qv,
-         |             generate_subscripts(embedding, 1) AS i
-         |      FROM embeddings WHERE vec_id = 2),
-         |d AS (SELECT e.vec_id, SUM((e.ev - q.qv) * (e.ev - q.qv)) AS dist
-         |      FROM e JOIN q USING (i) GROUP BY e.vec_id),
-         |exact AS (SELECT vec_id FROM (
-         |    SELECT vec_id, ${Sql.sround("dist")} AS dd
-         |    FROM d ORDER BY dd ASC, vec_id ASC LIMIT 15))
-         |SELECT CAST(COUNT(*) AS BIGINT) AS n_results,
-         |  CAST(SUM(CASE WHEN x.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hits
-         |FROM r LEFT JOIN exact x ON r.vec_id = x.vec_id""".stripMargin,
-
-    "q_file_manifest" ->
+    Gate("q_file_manifest", (s, dir) => {
+      // per-file integrity manifest: stage documents as a 4-file parquet
+      // dir (hash-partitioned on doc_id — deterministic file contents),
+      // then derive (file_part, n_rows, sum/min/max of id) per part file.
+      // The oracle re-reads the SAME staged files with filename=true and
+      // re-derives the manifest — proving the grouping really is
+      // per-physical-file, not an artifact of Spark's reader
+      val staged = s"/tmp/graft_manifest/${Sql.sfTag(dir)}/documents"
+      t(s, dir, "documents").select(col("doc_id"), col("source"))
+        .repartition(4, col("doc_id"))
+        .write.mode("overwrite").parquet(staged)
+      graft.io.TableManifest.parquetManifest(s, staged, "doc_id")
+        .orderBy(col("file_part"))
+    },
       """SELECT regexp_extract(filename, 'part-(\d+)', 1) AS file_part,
         |  count(*) AS n_rows, CAST(sum(doc_id) AS BIGINT) AS sum_id,
         |  min(doc_id) AS min_id, max(doc_id) AS max_id
         |FROM read_parquet('/tmp/graft_manifest/{SF}/documents/*.parquet',
         |  filename=true)
-        |GROUP BY 1 ORDER BY 1""".stripMargin
+        |GROUP BY 1 ORDER BY 1""".stripMargin)
   )
 }

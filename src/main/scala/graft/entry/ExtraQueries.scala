@@ -15,2872 +15,6 @@ object ExtraQueries {
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Tables.table(s, dir, name)
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    "q_udaf_geomean" -> ((s, dir) => {
-      graft.functions.CustomAggregators.registerBuiltins(s)
-      t(s, dir, "lineitem").createOrReplaceTempView("li_udaf")
-      s.sql("""SELECT l_returnflag,
-               geometric_mean(l_extendedprice) AS geo_price,
-               value_range(l_quantity) AS qty_range
-               FROM li_udaf GROUP BY l_returnflag""")
-        .withColumn("geo_price", Semantics.safeRound(col("geo_price"), 2))
-        .orderBy(col("l_returnflag"))
-    }),
-
-    "q_wma" -> ((s, dir) => {
-      val hourly = t(s, dir, "events")
-        .groupBy(col("event_type"), date_trunc("hour", col("ts")).as("bucket"))
-        .agg(count(lit(1)).as("n"))
-      graft.operators.TimeSeries.weightedMovingSum(
-        hourly, "event_type", "bucket", "n", Seq(4L, 2L, 1L))
-        .select(col("event_type"),
-          date_format(col("bucket"), "yyyy-MM-dd HH:mm:ss").as("hour"),
-          col("n"), col("wsum"), col("wmass"))
-        .orderBy(col("event_type"), col("hour"))
-    }),
-
-    "q_robust_scale" -> ((s, dir) => {
-      // heavy-tail-safe normalization: (v − median)/IQR per event type.
-      // The per-group quartile bounds are single-sourced through the aux
-      // (the rfm_bounds treatment): Spark percentile and DuckDB
-      // quantile_cont both interpolate on doubles, and a last-ulp
-      // disagreement in a quartile can flip a rounded r cell at a
-      // safeRound boundary
-      val e = t(s, dir, "events")
-      Aux.write(
-        GroupNormalizer.robustStats(e, "event_type", "value")
-          .select(col("event_type"), col("_rm").as("med"),
-            col("_riqr").as("iqr")),
-        s"/tmp/graft_oracle_aux/${Sql.sfTag(dir)}/rs_bounds")
-      GroupNormalizer.robustScale(e, "event_type", "value")
-        .select(col("event_id"), col("event_type"), col("r"))
-        .orderBy(col("event_id"))
-    }),
-
-    "q_rest_query" -> ((s, dir) => {
-      // the REST envelope proven by oracle: a live loopback HttpFacade
-      // serves the reference's documented dashboard-query example, the
-      // JSON response parses back into rows, and DuckDB recomputes the
-      // same aggregation — HTTP routing, filter/agg parsing, and JSON
-      // number round-tripping all sit inside the hash
-      import graft.service.{Facade, HttpFacade, MiniJson}
-      val http = new HttpFacade(Facade.Tables(Tables.table(s, dir, _)))
-      val port = http.start()
-      val rows = try {
-        val conn = new java.net.URL(
-          s"http://127.0.0.1:$port/api/analytics/dashboard/query")
-          .openConnection().asInstanceOf[java.net.HttpURLConnection]
-        conn.setRequestMethod("POST")
-        conn.setDoOutput(true)
-        conn.getOutputStream.write(
-          """{"table": "orders",
-             "filters": [
-               {"column": "o_orderstatus", "operator": "in", "value": ["O", "F"]},
-               {"column": "o_orderdate", "operator": "between",
-                "value": ["1995-01-01", "1997-12-31"]}],
-             "aggregation": {
-               "group_by": ["o_orderpriority"],
-               "metrics": [{"column": "o_orderkey", "agg": "count", "alias": "n_orders"}],
-               "limit": 20}}""".getBytes("UTF-8"))
-        require(conn.getResponseCode == 200, s"HTTP ${conn.getResponseCode}")
-        val env = MiniJson.parse(new String(
-          conn.getInputStream.readAllBytes(), "UTF-8"))
-          .asInstanceOf[Map[String, Any]]
-        env("data").asInstanceOf[List[Any]]
-          .map(_.asInstanceOf[Map[String, Any]])
-          .map(m => (m("o_orderpriority").asInstanceOf[String],
-            m("n_orders").asInstanceOf[Long]))
-      } finally http.stop()
-      import s.implicits._
-      rows.toDF("o_orderpriority", "n_orders")
-        .orderBy(col("n_orders").desc, col("o_orderpriority").asc)
-    }),
-
-    "q_medallion_paths" -> ((s, dir) => {
-      // the service's medallion path generator run distributed over part
-      // names (spaces, mixed case) — slugify + the gold/quarantine layout
-      // replayed by the oracle's regex chain
-      import s.implicits._
-      t(s, dir, "part")
-        .select(col("p_partkey"), col("p_name")).as[(Long, String)]
-        .map { case (k, n) =>
-          (k, graft.service.Paths.slugify(n),
-            graft.service.Paths.goldBi("Acme Corp", n),
-            graft.service.Paths.quarantine("Acme Corp", n))
-        }
-        .toDF("p_partkey", "slug", "gold_bi", "quarantine")
-        .orderBy(col("p_partkey"))
-    }),
-
-    "q_interval_join_twin" -> ((s, dir) => {
-      // the stream-stream interval join run for real (two file streams,
-      // watermarks both sides, append-mode memory sink) vs a plain SQL
-      // range-join replay: purchases enriched with same-user clicks
-      // within ±10 minutes
-      // both stream inputs staged in ONE job (single events scan, one
-      // staged parquet dir holding both types); each side is a filtered
-      // file stream over the same staged path, so the twin pays one
-      // staging write + one stream start pair instead of two writes.
-      // Session-cached ([[StageOnce]]) and written UNCONSTRAINED — the
-      // file source takes every available file into micro-batch 0, so
-      // the single-data-batch semantics hold at any file count and no
-      // single task ever rewrites the whole slice
-      // user_id%3 sample (same trim as the outer twin): the join
-      // semantics are user-local, so a third of the users proves the
-      // same thing at a third of the join state and output
-      val staged = StageOnce.dir(s, dir, "ij_both") { p =>
-        t(s, dir, "events")
-          .filter(col("event_type").isin("purchase", "click"))
-          .filter(col("user_id") % 3 === 0)
-          .select(col("event_type"), col("event_id"), col("user_id"),
-            col("ts"))
-          .write.mode("overwrite").parquet(p)
-      }
-      val schema = s.read.parquet(staged).schema
-      def side(tpe: String) =
-        s.readStream.schema(schema).parquet(staged)
-          .filter(col("event_type") === tpe)
-          .select(col("event_id"), col("user_id"), col("ts"))
-      val joined = graft.streaming.Streams.intervalJoin(
-        side("purchase"), side("click"),
-        Seq("user_id"), "ts", "ts", watermark = "10 minutes")
-      // 4 state partitions: the twin proves semantics, not throughput —
-      // state-store instances dominate its wall time at gate scale
-      graft.streaming.Streams.withStatePartitions(s, 4) {
-        val q = joined.writeStream
-          .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-          .format("memory").queryName("ij_twin").start()
-        try q.processAllAvailable() finally q.stop()
-      }
-      s.table("ij_twin")
-        .select(col("event_id").as("purchase_id"),
-          col("event_id_r").as("click_id"))
-        .orderBy(col("purchase_id"), col("click_id"))
-    }),
-
-    "q_session_window_twin" -> ((s, dir) => {
-      // Spark's NATIVE session_window aggregation run as a real stream
-      // (merging event-time sessions in the state store) vs the
-      // gaps-and-islands batch replay: a session extends while the next
-      // event lands strictly inside [last, last + gap), closes at ≥ gap
-      // — and only sessions the final watermark has closed are emitted
-      // (append mode), which the oracle replays arithmetically
-      // session-cached stage ([[StageOnce]]), written UNCONSTRAINED: the
-      // file source takes all files into one micro-batch regardless of
-      // count, and the old per-run coalesce(1) rewrite of the FULL events
-      // table was this gate's dominant cost at sf1 (a single serial task)
-      val staged = StageOnce.dir(s, dir, "sw_events") { p =>
-        // rebalanced: the file-stream batch parallelizes BY FILE — a
-        // 3-file stage pins the session_window partial agg to 3 tasks
-        graft.core.Rebalance.computeDense(t(s, dir, "events")
-            .select(col("event_id"), col("user_id"), col("ts")))
-          .write.mode("overwrite").parquet(p)
-      }
-      val schema = s.read.parquet(staged).schema
-      val agg = s.readStream.schema(schema).parquet(staged)
-        .withWatermark("ts", "0 seconds")
-        .groupBy(session_window(col("ts"), "30 minutes").as("w"),
-          col("user_id"))
-        .agg(count(lit(1)).as("n"))
-        .select(col("user_id"),
-          date_format(col("w.start"), "yyyy-MM-dd HH:mm:ss")
-            .as("session_start"), col("n"))
-      graft.streaming.Streams.withStatePartitions(s, 8) {
-        val q = agg.writeStream
-          .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-          .format("memory").queryName("sw_twin").start()
-        try q.processAllAvailable() finally q.stop()
-      }
-      s.table("sw_twin").orderBy(col("user_id"), col("session_start"))
-    }),
-
-    "q_stream_static_join" -> ((s, dir) => {
-      // stream-static enrichment — the canonical dimension join on a
-      // stream: the static side is broadcast and joined per micro-batch
-      // with NO stream state at all (nothing to watermark, nothing to
-      // evict), which is why it is the 100 TB-safe way to decorate a
-      // firehose with dimension attributes. The oracle runs the plain
-      // batch join
-      import s.implicits._
-      // session-cached stage ([[StageOnce]]), unconstrained write — the
-      // stream-static join is stateless per micro-batch, so file count
-      // (hence batch count) cannot change the Complete-mode result
-      val staged = StageOnce.dir(s, dir, "ss_events") { p =>
-        t(s, dir, "events").select(col("event_id"), col("ts"),
-            col("event_type"), col("value"))
-          .write.mode("overwrite").parquet(p)
-      }
-      val dim = Seq(("click", 1L), ("view", 2L), ("purchase", 5L),
-        ("signup", 10L), ("logout", 0L)).toDF("event_type", "weight")
-      val schema = s.read.parquet(staged).schema
-      val agg = s.readStream.schema(schema).parquet(staged)
-        .join(broadcast(dim), Seq("event_type"))
-        .groupBy(col("event_type"), col("weight"))
-        .agg(count(lit(1)).as("n"))
-      graft.streaming.Streams.withStatePartitions(s, 8) {
-        val q = agg.writeStream
-          .outputMode(org.apache.spark.sql.streaming.OutputMode.Complete())
-          .format("memory").queryName("ss_join").start()
-        try q.processAllAvailable() finally q.stop()
-      }
-      s.table("ss_join")
-        .select(col("event_type"), col("weight"),
-          (col("n") * col("weight")).as("weighted"))
-        .orderBy(col("event_type"))
-    }),
-
-    "q_watermark_late_drop" -> ((s, dir) => {
-      // watermark semantics run FOR REAL across two micro-batches: batch
-      // 1 pushes the watermark to its max event time (0 s delay), batch 2
-      // carries deliberately-late rows (windows already closed — the
-      // engine must DROP them) plus fresh rows that advance the watermark
-      // and finalize more windows. The oracle replays the exact
-      // drop/emit arithmetic: counted = batch 1 plus batch-2 rows whose
-      // window was still open; emitted = windows the final watermark
-      // closed. Hour-aligned window ends vs mid-hour watermarks keep
-      // every comparison boundary-unambiguous
-      val ev = t(s, dir, "events").select(col("event_id"), col("ts"),
-        col("event_type"), col("value"))
-      // b1/b2 payloads are session-cached ([[StageOnce]]); only the
-      // ARRIVAL directory below is per-run choreography (b2 must land
-      // after batch 1's watermark advances) and is rebuilt fresh.
-      // coalesce(1) here bounds FILES, deliberately: copyPart moves THE
-      // single part file per half, so each arrival is exactly one file =
-      // one micro-batch — and the build runs once per session
-      val base = StageOnce.dir(s, dir, "wm_late") { p =>
-        ev.filter(col("event_id") % 17 =!= 0).coalesce(1)
-          .write.mode("overwrite").parquet(s"$p/b1")
-        ev.filter(col("event_id") % 17 === 0).coalesce(1)
-          .write.mode("overwrite").parquet(s"$p/b2")
-      }
-      val conf = s.sessionState.newHadoopConf()
-      val fs = new org.apache.hadoop.fs.Path(base).getFileSystem(conf)
-      fs.delete(new org.apache.hadoop.fs.Path(s"$base/in"), true)
-      fs.mkdirs(new org.apache.hadoop.fs.Path(s"$base/in"))
-      def copyPart(src: String, dstName: String): Unit = {
-        val st = fs.globStatus(
-          new org.apache.hadoop.fs.Path(s"$src/part-*.parquet"))
-        org.apache.hadoop.fs.FileUtil.copy(fs, st.head.getPath, fs,
-          new org.apache.hadoop.fs.Path(s"$base/in/$dstName"), false, conf)
-        ()
-      }
-      copyPart(s"$base/b1", "b1.parquet")
-      val schema = s.read.parquet(s"$base/b1").schema
-      graft.streaming.Streams.withStatePartitions(s, 8) {
-        val q = graft.streaming.Streams.windowedCounts(
-            s.readStream.schema(schema).parquet(s"$base/in"),
-            "1 hour", None, watermark = "0 seconds")
-          .writeStream
-          .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-          .format("memory").queryName("wm_late").start()
-        try {
-          q.processAllAvailable() // batch 1 → watermark = max ts(b1)
-          copyPart(s"$base/b2", "b2.parquet")
-          q.processAllAvailable() // batch 2 + the no-data finalize batch
-        } finally q.stop()
-      }
-      s.table("wm_late")
-        .select(date_format(col("window_start"), "yyyy-MM-dd HH:mm:ss")
-          .as("window_start"), col("event_type"), col("n"))
-        .orderBy(col("window_start"), col("event_type"))
-    }),
-
-    "q_interval_join_outer_twin" -> ((s, dir) => {
-      // stream-stream LEFT OUTER interval join run for real: a purchase
-      // with no same-user click within ±10 min still emits (nulls) — but
-      // only once the watermark PROVES no partner can arrive (wm past the
-      // row's upper bound, i.e. the row's state evicted). The oracle
-      // replays both halves: the inner matches, plus unmatched purchases
-      // whose upper bound the final watermark (min of the two sides'
-      // max-ts, minus the 10-min delay) passed; younger unmatched rows
-      // stay pending at stream end by design and appear on neither side
-      // user_id%3 sample: the join/eviction semantics are user-local, so a
-      // third of the users proves the same thing at a third of the state.
-      // Session-cached ([[StageOnce]]), unconstrained write: every file
-      // lands in micro-batch 0, so the watermark/eviction choreography
-      // (one data batch, then no-data finalize batches) is file-count-proof
-      val staged = StageOnce.dir(s, dir, "ij_outer") { p =>
-        t(s, dir, "events")
-          .filter(col("event_type").isin("purchase", "click"))
-          .filter(col("user_id") % 3 === 0)
-          .select(col("event_type"), col("event_id"), col("user_id"),
-            col("ts"))
-          .write.mode("overwrite").parquet(p)
-      }
-      val schema = s.read.parquet(staged).schema
-      def side(tpe: String) =
-        s.readStream.schema(schema).parquet(staged)
-          .filter(col("event_type") === tpe)
-          .select(col("event_id"), col("user_id"), col("ts"))
-      val joined = graft.streaming.Streams.intervalJoinLeftOuter(
-        side("purchase"), side("click"),
-        Seq("user_id"), "ts", "ts", watermark = "10 minutes")
-      // 4 state partitions, same rationale as the inner twin
-      graft.streaming.Streams.withStatePartitions(s, 4) {
-        val q = joined.writeStream
-          .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-          .format("memory").queryName("ij_outer").start()
-        try q.processAllAvailable() finally q.stop()
-      }
-      s.table("ij_outer")
-        .select(col("event_id").as("purchase_id"),
-          coalesce(col("event_id_r"), lit(-1L)).as("click_id"))
-        .orderBy(col("purchase_id"), col("click_id"))
-    }),
-
-    "q_collapse_runs" -> ((s, dir) => {
-      // telemetry run-length collapse: drop each event that repeats the
-      // user's immediately-preceding event type — one lag window, keeps
-      // the first of every run
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("user_id"))
-        .orderBy(col("ts").asc, col("event_id").asc)
-      t(s, dir, "events")
-        .withColumn("_prev", lag(col("event_type"), 1).over(w))
-        .filter(col("_prev").isNull || col("_prev") =!= col("event_type"))
-        .select(col("event_id"), col("user_id"), col("event_type"))
-        .orderBy(col("event_id"))
-    }),
-
-    "q_user_overlap" -> ((s, dir) => {
-      // audience-overlap matrix: Jaccard of distinct-user sets between
-      // every event-type pair — one distinct reduction, one self equi-join
-      // on user (no type×type×user blow-up), integer-exact e6 ratio
-      // ut feeds the size table and both self-join sides — cut lineage
-      // once instead of re-scanning events three times
-      val ut = t(s, dir, "events")
-        .select(col("event_type").as("t"), col("user_id").as("u")).distinct()
-        .localCheckpoint()
-      val sizes = ut.groupBy(col("t")).agg(count(lit(1)).as("n"))
-      val pairs = ut.join(ut.select(col("t").as("t2"), col("u")), Seq("u"))
-        .filter(col("t") < col("t2"))
-        .groupBy(col("t"), col("t2")).agg(count(lit(1)).as("n_both"))
-      pairs
-        .join(broadcast(sizes.select(col("t"), col("n").as("_na"))), Seq("t"))
-        .join(broadcast(sizes.select(col("t").as("t2"), col("n").as("_nb"))),
-          Seq("t2"))
-        .select(col("t").as("type_a"), col("t2").as("type_b"),
-          col("_na").as("n_a"), col("_nb").as("n_b"), col("n_both"),
-          expr("CAST((n_both * 1000000) DIV (_na + _nb - n_both) AS BIGINT)")
-            .as("jaccard_e6"))
-        .orderBy(col("type_a"), col("type_b"))
-    }),
-
-    "q_attribution" -> ((s, dir) => {
-      // last-touch attribution: each purchase credits the user's most
-      // recent earlier non-purchase event within 1 hour (else "none") —
-      // the as-of join running on a behavioral axis; touches pre-dedupe to
-      // one per (user, ts) so the as-of match is deterministic
-      val e = t(s, dir, "events")
-      val purchases = e.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts"))
-      val touches = e.filter(col("event_type") =!= "purchase")
-        .groupBy(col("user_id"), col("ts").as("t_ts"))
-        .agg(max_by(col("event_type"), col("event_id")).as("touch_type"))
-      val joined = AsofJoin.backward(purchases, touches, Seq("user_id"),
-        "ts", "t_ts", strict = true)
-      val attributed = joined.select(
-        when(col("t_ts").isNotNull &&
-            unix_micros(col("ts")) - unix_micros(col("t_ts")) <= 3600000000L,
-          col("touch_type")).otherwise(lit("none")).as("touch_type"))
-        .groupBy(col("touch_type")).agg(count(lit(1)).as("n_purchases"))
-      val total = attributed.agg(sum(col("n_purchases")).as("_t"))
-      attributed.crossJoin(broadcast(total))
-        .select(col("touch_type"), col("n_purchases"),
-          expr("CAST((n_purchases * 1000000) DIV _t AS BIGINT)")
-            .as("share_e6"))
-        .orderBy(col("touch_type"))
-    }),
-
-    "q_interpolate" -> ((s, dir) => {
-      // gap-fill the NULL readings per event type by linear interpolation
-      // over the (ts, event_id)-ordered series; boundary NULLs stay NULL
-      val e = t(s, dir, "events")
-        .select(col("event_id"), col("event_type"), col("ts"), col("value"))
-      graft.operators.TimeSeries.interpolateLinear(
-        e, "event_type", Seq(col("ts").asc, col("event_id").asc), "value")
-        .select(col("event_id"),
-          (col("value").isNotNull).as("was_present"), col("_filled"))
-        .orderBy(col("event_id"))
-    }),
-
-    "q_rolling_median" -> ((s, dir) => {
-      // level-shift-robust smoothing of the hourly count series: exact
-      // median over the trailing 5 buckets, ×2 so the even-count midpoint
-      // stays a BIGINT in both engines
-      val hourly = t(s, dir, "events")
-        .groupBy(col("event_type"), date_trunc("hour", col("ts")).as("bucket"))
-        .agg(count(lit(1)).as("n"))
-      graft.operators.TimeSeries.rollingMedianX2(
-        hourly, "event_type", "bucket", "n", windowRows = 5)
-        .select(col("event_type"),
-          date_format(col("bucket"), "yyyy-MM-dd HH:mm:ss").as("hour"),
-          col("n"), col("med_x2"))
-        .orderBy(col("event_type"), col("hour"))
-    }),
-
-    "q_session_stats" -> ((s, dir) => {
-      // the sessionizer's summary card: session count, total events, exact
-      // median session size and duration (×2 so interpolated halves stay
-      // BIGINT), longest session — one aggregate over the session_window
-      // groups q_sessions gates row-by-row
-      val sess = t(s, dir, "events")
-        .groupBy(col("user_id"),
-          session_window(col("ts"), "30 minutes").as("sw"))
-        .agg(count(lit(1)).as("_ne"),
-          (unix_micros(col("sw.end")) - unix_micros(col("sw.start")))
-            .as("_dur"))
-      sess.agg(count(lit(1)).as("n_sessions"),
-        sum(col("_ne")).as("n_events"),
-        expr("CAST(percentile(_ne, 0.5) * 2 AS BIGINT)").as("med_events_x2"),
-        expr("CAST(percentile(_dur, 0.5) * 2 AS BIGINT)").as("med_dur_us_x2"),
-        max(col("_ne")).as("max_events"))
-    }),
-
-    "q_rfm" -> ((s, dir) => {
-      // RFM customer segmentation: recency/frequency/monetary quintile
-      // codes. Quintile bounds are computed ONCE and shared with the
-      // oracle via aux — recency and frequency are INTEGER-valued, the
-      // class where independently re-derived interpolated bounds flip
-      // whole equal-value groups (COVERAGE.md float-cell audit)
-      val o = t(s, dir, "orders")
-      val maxd = o.agg(max(col("o_orderdate")).as("_mx"))
-      val per = o.crossJoin(broadcast(maxd))
-        .groupBy(col("o_custkey"))
-        .agg(datediff(to_date(max(col("_mx"))),
-            to_date(max(col("o_orderdate")))).as("recency_days"),
-          count(lit(1)).as("n_orders"),
-          Semantics.exactSum(col("o_totalprice")).as("monetary"))
-        .localCheckpoint() // feeds bounds + binning + output
-      val b = per.select(
-        expr("percentile(recency_days, array(0.2,0.4,0.6,0.8))").as("rb"),
-        expr("percentile(n_orders, array(0.2,0.4,0.6,0.8))").as("fb"),
-        expr("percentile(monetary, array(0.2,0.4,0.6,0.8))").as("mb"))
-        .head()
-      val (rb, fb, mb) =
-        (b.getSeq[Double](0), b.getSeq[Double](1), b.getSeq[Double](2))
-      Aux.write(
-        s.createDataset(
-          rb.map(("r", _)) ++ fb.map(("f", _)) ++ mb.map(("m", _)))(
-          org.apache.spark.sql.Encoders.tuple(
-            org.apache.spark.sql.Encoders.STRING,
-            org.apache.spark.sql.Encoders.scalaDouble))
-          .toDF("kind", "b"),
-        s"/tmp/graft_oracle_aux/${Sql.sfTag(dir)}/rfm_bounds")
-      def seg(c: org.apache.spark.sql.Column, bs: Seq[Double]) =
-        bs.foldLeft(lit(1L)) { (acc, bv) =>
-          acc + when(c > lit(bv), 1L).otherwise(0L) }
-      per.select(col("o_custkey"), col("recency_days"), col("n_orders"),
-        col("monetary"), seg(col("recency_days"), rb).as("r_seg"),
-        seg(col("n_orders"), fb).as("f_seg"),
-        seg(col("monetary"), mb).as("m_seg"))
-        .orderBy(col("o_custkey"))
-    }),
-
-    "q_rolling_distinct" -> ((s, dir) => {
-      // trailing-7-day distinct users per day: (day, user) reduction first,
-      // then each activity day CONTRIBUTES to the 7 output days it can
-      // serve — explode(sequence(day, day+6)) turns the range predicate
-      // into a pure equi-join/aggregate (one shuffle, no nested-loop
-      // join), restricted to observed days by a broadcast semi-join.
-      // Never a distinct-over-window on raw events; the HLL sketch table
-      // is the approximate variant of this exact shape (SketchSpec)
-      val du = t(s, dir, "events")
-        .select(to_date(col("ts")).as("day"), col("user_id")).distinct()
-        .localCheckpoint()
-      val days = du.select(col("day")).distinct()
-      du.select(explode(sequence(col("day"), date_add(col("day"), 6)))
-          .as("day"), col("user_id"))
-        .join(broadcast(days), Seq("day"), "left_semi")
-        .groupBy(col("day"))
-        .agg(countDistinct(col("user_id")).as("n_users_7d"))
-        .select(date_format(col("day"), "yyyy-MM-dd").as("day"),
-          col("n_users_7d"))
-        .orderBy(col("day"))
-    }),
-
-    "q_distinct_growth" -> ((s, dir) => {
-      // audience growth curve: per-day event volume, new users (first-seen
-      // that day), and the cumulative distinct-user count — first-seen
-      // reduction + a tiny day×day self-join (bounded by the date span),
-      // never a running COUNT DISTINCT over raw events
-      val e = t(s, dir, "events")
-      val byDay = e.groupBy(to_date(col("ts")).as("day"))
-        .agg(count(lit(1)).as("n_events"))
-      val firstSeen = e.groupBy(col("user_id"))
-        .agg(min(to_date(col("ts"))).as("day"))
-        .groupBy(col("day")).agg(count(lit(1)).as("n_new_users"))
-      // cumulative over the PER-DAY aggregate (bounded by date span, not
-      // corpus size) — a global window here is the allowlisted bounded
-      // shape; the former day×day triangular join was a BNLJ
-      val wCum = org.apache.spark.sql.expressions.Window
-        .orderBy(col("day"))
-        .rowsBetween(org.apache.spark.sql.expressions.Window
-          .unboundedPreceding, org.apache.spark.sql.expressions.Window
-          .currentRow)
-      byDay.join(firstSeen, Seq("day"), "left")
-        .withColumn("n_new_users", coalesce(col("n_new_users"), lit(0L)))
-        .withColumn("cum_users", sum(col("n_new_users")).over(wCum))
-        .select(date_format(col("day"), "yyyy-MM-dd").as("day"),
-          col("n_events"), col("n_new_users"), col("cum_users"))
-        .orderBy(col("day"))
-    }),
-
-    "q_ewma" -> ((s, dir) => {
-      // exponential smoothing of the hourly count series in pure integer
-      // arithmetic: α=1/2 weights are powers of two, so the smoothed value
-      // ships as a BIGINT (wsum/wmass is the normalized EWMA)
-      val hourly = t(s, dir, "events")
-        .groupBy(col("event_type"), date_trunc("hour", col("ts")).as("bucket"))
-        .agg(count(lit(1)).as("n"))
-      graft.operators.TimeSeries.ewmaDyadic(
-        hourly, "event_type", "bucket", "n", depth = 8)
-        .select(col("event_type"),
-          date_format(col("bucket"), "yyyy-MM-dd HH:mm:ss").as("hour"),
-          col("n"), col("wsum"), col("wmass"))
-        .orderBy(col("event_type"), col("hour"))
-    }),
-
-    "q_autocorr" -> ((s, dir) => {
-      // is each event type's hourly volume self-similar hour over hour?
-      // lag-1..3 Pearson autocorrelation with the estimator cleared of
-      // divisions (exact BIGINT sums; the only float op is the final ratio)
-      val hourly = t(s, dir, "events")
-        .groupBy(col("event_type"), date_trunc("hour", col("ts")).as("bucket"))
-        .agg(count(lit(1)).as("n"))
-      graft.operators.TimeSeries.autocorr(
-        hourly, "event_type", "bucket", "n", maxLag = 3)
-    }),
-
-    "q_seasonal_decompose" -> ((s, dir) =>
-      // additive y = trend + seasonal + residual over each type's hourly
-      // value series, all in exact micro-units (the oracle replays every
-      // floor/mean bit-for-bit)
-      graft.operators.TimeSeries.seasonalDecompose(
-        t(s, dir, "events"), "event_type", "ts", "value", halfWidth = 12)
-        .select(col("event_type"),
-          date_format(col("bucket"), "yyyy-MM-dd HH:mm:ss").as("hour"),
-          col("y_e6"), col("trend_e6"), col("seasonal_e6"), col("resid_e6"))
-        .orderBy(col("event_type"), col("hour"))),
-
-    "q_changepoint" -> ((s, dir) =>
-      // the single best mean-shift split of each type's hourly series —
-      // exact closed-form scores, float only in the final ratio of exact
-      // operands (argmax replayed independently by the oracle)
-      graft.operators.TimeSeries.changePoint(
-        t(s, dir, "events"), "event_type", "ts", "value")
-        .select(col("event_type"),
-          date_format(col("split_last_left"), "yyyy-MM-dd HH:mm:ss")
-            .as("split_hour"),
-          col("n_left"), col("n_right"),
-          col("mean_left"), col("mean_right"))
-        .orderBy(col("event_type"))),
-
-    "q_quantile_map" -> ((s, dir) =>
-      // cross-source score calibration: every type's value distribution
-      // mapped onto 'click's by pure integer rank arithmetic — no
-      // interpolated percentiles, so the mapping replays exactly
-      graft.operators.GroupNormalizer.quantileMap(
-        t(s, dir, "events"), "event_type", "value", "event_id",
-        refGroup = "click")
-        .orderBy(col("event_id"))),
-
-    "q_sketch_intersect" -> ((s, dir) => {
-      // KMV set algebra across two engineered segments (A = click users,
-      // B = doubled view user-ids → Jaccard exactly 1/3 at gate scale):
-      // per-segment bottom-k sketches, pooled estimate, validated against
-      // exact counts — the persisted-sketch path never rescans the data
-      val ev = t(s, dir, "events")
-      val segA = ev.filter(col("event_type") === "click")
-        .select(lit("a").as("seg"), col("user_id").as("member"))
-      val segB = ev.filter(col("event_type") === "view")
-        .select(lit("b").as("seg"), (col("user_id") * 2).as("member"))
-      val sk = graft.functions.Sketches.kmvBottomK(
-        segA.unionByName(segB), "seg", "member", k = 128)
-      val est = graft.functions.Sketches.kmvCompare(
-        sk.filter(col("seg") === "a"), sk.filter(col("seg") === "b"),
-        k = 128)
-      val both = segA.unionByName(segB)
-      val exact = both.groupBy(col("member"))
-        .agg(max(col("seg") === "a").as("_ia"),
-          max(col("seg") === "b").as("_ib"))
-        .agg(sum(when(col("_ia"), 1L).otherwise(0L)).as("n_exact_a"),
-          sum(when(col("_ib"), 1L).otherwise(0L)).as("n_exact_b"),
-          count(lit(1)).as("n_exact_union"),
-          sum(when(col("_ia") && col("_ib"), 1L).otherwise(0L))
-            .as("n_exact_inter"))
-      est.crossJoin(exact).select(
-        col("n_exact_a"), col("n_exact_b"), col("n_exact_union"),
-        col("n_exact_inter"), col("size_a"), col("size_b"),
-        (abs(col("jaccard_e4").cast(DoubleType) / 10000.0 -
-          col("n_exact_inter").cast(DoubleType) / col("n_exact_union"))
-          <= 0.15).as("jaccard_ok"),
-        (abs(col("union_est") - col("n_exact_union"))
-          <= col("n_exact_union") * 0.25).as("union_ok"),
-        (abs(col("inter_est") - col("n_exact_inter"))
-          <= col("n_exact_inter") * 0.4).as("inter_ok"))
-    }),
-
-    "q_target_encode" -> ((s, dir) =>
-      // leave-one-out target encoding with m=10 smoothing: exact decimal
-      // category sums, one fixed IEEE chain per row — the GBDT-pipeline
-      // categorical encoder, leak-free by construction
-      graft.functions.Featurize.targetEncode(
-        t(s, dir, "events")
-          .select(col("event_id"), col("event_type"), col("value")),
-        "event_type", "value", m = 10)
-        .orderBy(col("event_id"))),
-
-    "q_time_split" -> ((s, dir) =>
-      // backtest split with a 24 h embargo + the entity-leakage audit
-      // (users on both sides of the cut — what a temporal split does NOT
-      // remove, stated instead of silently passed)
-      graft.operators.TrainingExamples.temporalSplitReport(
-        t(s, dir, "events"), "ts", "user_id",
-        cutTs = "2024-01-25 00:00:00", gapHours = 24)),
-
-    "q_ks_by_group" -> ((s, dir) =>
-      // drift dashboard shape: per-segment two-sample KS (first vs second
-      // half of the month) — key-partitioned cumsum, no shard machinery,
-      // pure-integer flag at 0.05
-      graft.operators.Audit.ksByGroup(
-        t(s, dir, "events").withColumn("_late",
-          col("ts") >= lit("2024-01-16 00:00:00").cast(TimestampType)),
-        "event_type", "_late", "value", thresholdE6 = 50000L)
-        .orderBy(col("event_type"))),
-
-    "q_event_paths" -> ((s, dir) =>
-      // top 20 three-step event-type paths over per-user ordered streams
-      // — the Sankey/flow report; (ts, event_id) tie-broken ordering,
-      // (count desc, path asc) total order on the cut
-      graft.operators.TrainingExamples.eventPaths(
-        t(s, dir, "events"), "user_id", "ts", "event_id", "event_type",
-        depth = 3, topK = 20)),
-
-    "q_rolling_folds" -> ((s, dir) =>
-      // expanding-window backtest schedule: 4 folds, 48 h step, 48 h
-      // horizon, 24 h embargo — exact per-fold counts from the hourly
-      // aggregate (folds explode the TINY frame, never the corpus)
-      graft.operators.TrainingExamples.rollingOriginFolds(
-        t(s, dir, "events"), "ts", "2024-01-20 00:00:00",
-        stepHours = 48, horizonHours = 48, gapHours = 24, nFolds = 4)),
-
-    "q_stl_anomaly" -> ((s, dir) =>
-      // seasonal-adjusted anomaly screen: flags on the DECOMPOSITION
-      // residual, so the daily shape never pages — thresholds and flags
-      // in pure BIGINTs, replayed end-to-end by the oracle
-      graft.operators.TimeSeries.seasonalAnomalies(
-        t(s, dir, "events"), "event_type", "ts", "value",
-        halfWidth = 12, multNum = 3L, multDen = 1L)
-        .select(col("event_type"),
-          date_format(col("bucket"), "yyyy-MM-dd HH:mm:ss").as("hour"),
-          col("resid_e6"), col("mean_abs_resid_e6"), col("is_anomaly"))
-        .orderBy(col("event_type"), col("hour"))),
-
-    "q_zonemap_quality" -> ((s, dir) => {
-      // layout quality: the SAME rows staged range-clustered vs
-      // hash-scattered; the interval-sweep depth report must show
-      // pruning-friendly ~1 vs pruning-dead ~n_files. Oracle re-reads
-      // the staged files (filename=true) and replays the sweep
-      val ev = t(s, dir, "events").select(col("event_id"), col("value"))
-      val base = s"/tmp/graft_zonemap/${Sql.sfTag(dir)}"
-      ev.repartitionByRange(4, col("value"))
-        .sortWithinPartitions(col("value"))
-        .write.mode("overwrite").parquet(s"$base/clustered")
-      ev.repartition(4, col("event_id"))
-        .write.mode("overwrite").parquet(s"$base/scattered")
-      val rep = (tag: String, p: String) =>
-        graft.io.LayoutStats.zoneMapReport(s, p, "value")
-          .select(lit(tag).as("layout"), col("n_files"), col("max_depth"),
-            col("avg_depth_e4"))
-      rep("clustered", s"$base/clustered")
-        .unionByName(rep("scattered", s"$base/scattered"))
-        .orderBy(col("layout"))
-    }),
-
-    "q_layout_compare" -> ((s, dir) => {
-      // Hilbert vs Z-order vs single-axis sort, MEASURED: the same (x, y)
-      // rows staged under each layout, zone-map interval-sweep depth on
-      // BOTH axes. A single-column sort prunes only its own axis (the
-      // other axis' depth ≈ n_files — pruning-dead); both space-filling
-      // curves bound depth on both axes at once, which is the entire
-      // reason clusterBy2 exists. Oracle re-reads the staged files
-      // (filename=true) and replays the sweep per axis
-      // two independent uniform axes (multiplicative-hash spreads of the
-      // dense id) — the derivation doesn't matter to the oracle, which
-      // replays from the staged bytes; a quarter of the table is plenty
-      // to saturate a 1024² grid under 16 files (the gate's cost is the
-      // staged writes plus one zone sweep per layout/axis). The
-      // single-axis-sort contrast (own axis ~1, other axis pruning-dead)
-      // was measured here through round 7 and is covered by
-      // q_zonemap_quality; the namesake hilbert-vs-zorder compare keeps
-      // 2 writes + 4 sweeps
-      val ev = t(s, dir, "events")
-        .filter(col("event_id") % 4 === 0)
-        .select(col("event_id"),
-          (col("event_id") * 2654435761L % 1024).as("x"),
-          (col("event_id") * 40503L % 1024).as("y"))
-      val base = s"/tmp/graft_layoutcmp/${Sql.sfTag(dir)}"
-      graft.core.Hilbert.clusterBy2(ev, "x", "y", 16, bits = 10)
-        .write.mode("overwrite").parquet(s"$base/hilbert")
-      graft.core.ZOrder.clusterBy2(ev, "x", "y", 16, bits = 10)
-        .write.mode("overwrite").parquet(s"$base/zorder")
-      graft.io.LayoutStats.zoneMapReportMulti(s,
-          Seq("hilbert", "zorder").map(tag => tag -> s"$base/$tag"),
-          Seq("x", "y"))
-        .orderBy(col("layout"), col("axis"))
-    }),
-
-    "q_triangles" -> ((s, dir) => {
-      // triangle census of the deterministic citation graph (+1/+2 ring
-      // links guarantee n triangles; the 7d+1 links add irregular degree)
-      val docs = t(s, dir, "documents").select(col("doc_id"))
-      val cnt = docs.agg(count(lit(1)).as("_n"))
-      val link = (a: Long, b: Long) => docs.crossJoin(broadcast(cnt))
-        .select(col("doc_id").as("src"),
-          pmod(col("doc_id") * a + b, col("_n")).as("dst"))
-      graft.operators.PageRank.triangleCount(
-        link(1L, 1L).union(link(1L, 2L)).union(link(7L, 1L)), "src", "dst")
-    }),
-
-    "q_dag_levels" -> ((s, dir) => {
-      // topological leveling of a derivation DAG (docs i → 8i, 8i+1, 9i —
-      // strictly increasing, so acyclic, depth ~log₈ n) plus a planted
-      // 3-cycle on synthetic ids n..n+2: levels are Kahn waves (1 + max
-      // over preds), the cycle comes back level = -1 / in_cycle — the
-      // pipeline-scheduler primitive with honest deadlock reporting.
-      // Peel rounds = DAG depth, not vertex count; base 8 keeps the
-      // fixture at ~5 waves (each wave costs one count() action in the
-      // harness — the operator itself is depth-proportional by design)
-      val docs = t(s, dir, "documents").select(col("doc_id"))
-      val cnt = docs.agg(count(lit(1)).as("_n"))
-      val src = docs.filter(col("doc_id") >= 1).crossJoin(broadcast(cnt))
-      def e(mult: Long, add: Long) =
-        src.filter(col("doc_id") * mult + add < col("_n"))
-          .select(col("doc_id").as("src"),
-            (col("doc_id") * mult + add).as("dst"))
-      val cycE = cnt.selectExpr(
-        "stack(3, _n, _n + 1, _n + 1, _n + 2, _n + 2, _n) AS (src, dst)")
-      val verts = docs.select(col("doc_id").as("id"))
-        .unionByName(cnt.selectExpr(
-          "explode(array(_n, _n + 1, _n + 2)) AS id"))
-      graft.operators.Dag.topoLevels(verts, "id",
-          e(8, 0).unionByName(e(8, 1)).unionByName(e(9, 0))
-            .unionByName(cycE), "src", "dst")
-        .orderBy(col("id"))
-    }),
-
-    "q_ref_integrity" -> ((s, dir) =>
-      graft.operators.Audit.refIntegrity(Seq(
-        ("customer.c_nationkey->nation", t(s, dir, "customer"),
-          "c_nationkey", t(s, dir, "nation"), "n_nationkey"),
-        ("lineitem.l_orderkey->orders", t(s, dir, "lineitem"),
-          "l_orderkey", t(s, dir, "orders"), "o_orderkey"),
-        ("orders.o_custkey->customer", t(s, dir, "orders"),
-          "o_custkey", t(s, dir, "customer"), "c_custkey")))),
-
-    "q_assoc_rules" -> ((s, dir) =>
-      graft.operators.MarketBasket.pairRules(
-        t(s, dir, "events"), "user_id", "event_type")),
-
-    "q_rate_cap" -> ((s, dir) => {
-      // at most 3 events per (user, hour), chosen by identity-hash order —
-      // the deterministic throttle; WindowGroupLimit cuts per key before
-      // any shuffle concentrates a hot user's rows
-      val ev = t(s, dir, "events")
-        .select(col("event_id"), col("user_id"),
-          date_trunc("day", col("ts")).as("bucket"))
-      graft.core.TopK.perKey(ev, Seq("user_id", "bucket"), 3,
-        Seq(conv(substring(md5(concat(lit("rc#"),
-          col("event_id").cast(StringType))), 1, 8), 16, 10)
-          .cast(LongType).asc, col("event_id").asc))
-        .select(col("event_id"), col("rank_in_key"))
-        .orderBy(col("event_id"))
-    }),
-
-    "q_info_gain" -> ((s, dir) =>
-      graft.operators.Audit.infoGain(
-        t(s, dir, "documents"), "source", "lang")),
-
-    "q_fd_violations" -> ((s, dir) =>
-      graft.operators.Audit.fdViolations(
-        t(s, dir, "orders"), Seq("o_custkey"), "o_orderpriority")),
-
-    "q_group_mad" -> ((s, dir) =>
-      graft.operators.Audit.groupMad(
-        t(s, dir, "events"), "event_type", "value")),
-
-    "q_sorted_neighborhood" -> ((s, dir) =>
-      graft.operators.FuzzyMatch.sortedNeighborhoodJoin(
-        t(s, dir, "part").select(col("p_partkey"), col("p_name")),
-        "p_partkey", "p_name", window = 3, maxDist = 2)
-        .orderBy(col("id_a"), col("id_b"))),
-
-    "q_psi_drift" -> ((s, dir) => {
-      val ev = t(s, dir, "events")
-      graft.operators.Audit.psiDrift(
-        ev.filter(col("event_id") % 2 === 0),
-        ev.filter(col("event_id") % 2 === 1), "value", bins = 10)
-    }),
-
-    "q_kfold" -> ((s, dir) =>
-      graft.functions.Sampling.kFold(
-        t(s, dir, "documents").select(col("doc_id")), "doc_id", k = 5)
-        .orderBy(col("doc_id"))),
-
-    "q_benford" -> ((s, dir) =>
-      graft.operators.Audit.benford(t(s, dir, "orders"), "o_totalprice")),
-
-    "q_chi_square" -> ((s, dir) =>
-      graft.operators.Audit.chiSquareCells(
-        t(s, dir, "documents"), "lang", "source")),
-
-    "q_kanon" -> ((s, dir) =>
-      graft.operators.Audit.kAnonymityRisk(
-        t(s, dir, "documents"), Seq("lang", "source"), k = 10L)),
-
-    // bucketed co-located join: both sides land in bucket-sorted parquet
-    // tables keyed on the join column, so the join itself needs NO Exchange
-    // (ScaleSpec asserts the shuffle-free plan) — the layout every
-    // repeatedly-joined 100 TB fact/dim pair should live in. The write IS
-    // the operator, so it stays inside the benched closure deliberately.
-    "q_bucketed_join" -> ((s, dir) => {
-      import graft.io.Sinks
-      val base = "/tmp/graft_bucketed/" + Sql.sfTag(dir)
-      Sinks.bucketedTable(t(s, dir, "orders"), "graft_b_orders",
-        s"$base/orders", Seq("o_custkey"), 8)
-      Sinks.bucketedTable(t(s, dir, "customer"), "graft_b_customer",
-        s"$base/customer", Seq("c_custkey"), 8)
-      s.table("graft_b_orders")
-        .join(s.table("graft_b_customer"),
-          col("o_custkey") === col("c_custkey"))
-        .groupBy(col("c_mktsegment"))
-        .agg(count(lit(1)).as("n_orders"),
-          Semantics.exactSum(col("o_totalprice")).as("total_price"))
-        .orderBy(col("c_mktsegment"))
-    }),
-
-    // schema-evolution read: two ingest batches with divergent columns
-    // (the long-lived-corpus reality) union into one frame via footer
-    // merging; columns a batch lacks surface as null without rewriting it
-    "q_schema_merge" -> ((s, dir) => {
-      import graft.io.Sources
-      val docs = t(s, dir, "documents")
-      val base = "/tmp/graft_evolve/" + Sql.sfTag(dir)
-      docs.filter(col("doc_id") < 250).select(col("doc_id"), col("n_chars"))
-        .write.mode("overwrite").parquet(s"$base/b1")
-      docs.filter(col("doc_id") >= 250).select(col("doc_id"), col("lang"))
-        .write.mode("overwrite").parquet(s"$base/b2")
-      Sources.parquetMergeSchema(s, s"$base/b1", s"$base/b2")
-        .orderBy(col("doc_id"))
-    }),
-
-    // unpivot/melt: wide metric columns to (id, metric, val) long form —
-    // pure per-row expansion, zero shuffle
-    "q_unpivot" -> ((s, dir) =>
-      t(s, dir, "part")
-        .select(col("p_partkey"), col("p_retailprice"),
-          col("p_size").cast(DoubleType).as("p_size"))
-        .unpivot(Array(col("p_partkey")),
-          Array(col("p_retailprice"), col("p_size")), "metric", "val")
-        .orderBy(col("p_partkey"), col("metric"))),
-
-    // nested-struct flattening: build the deep shape in-plan (the testdata
-    // is flat parquet), flatten it back, and let the oracle check that the
-    // leaf paths surface with the right names, order, and values. The
-    // flatten itself is pure projection — Catalyst collapses struct-build +
-    // field-access so the plan never materializes the struct.
-    "q_nested_flatten" -> ((s, dir) => {
-      val nested = t(s, dir, "orders").select(
-        col("o_orderkey"),
-        struct(
-          col("o_custkey").as("custkey"),
-          struct(col("o_orderstatus").as("status"),
-            col("o_totalprice").as("total")).as("info")).as("cust"),
-        col("o_orderpriority"))
-      graft.functions.Nested.flatten(nested).orderBy(col("o_orderkey"))
-    }),
-
-    // scores are library-specific, but the flagging RULE is not: the oracle
-    // consumes the materialized score column and independently applies the
-    // contamination-percentile cutoff + degenerate guard, so threshold
-    // logic is cross-engine verified (plus SketchSpec-style property tests)
-    "q_iforest" -> ((s, dir) => {
-      // retainScored: aux score dump + flagged output share one scoring
-      // pass via detect's internal cache; Verify's clearCache releases it
-      val flagged = IsolationForest.detect(t(s, dir, "events"),
-        Seq("value"), orderCol = "event_id", contamination = 0.05,
-        numTrees = 50, retainScored = true)
-      Aux.write(
-        flagged.select(col("event_id"), col("_iforest_score").as("score")),
-        s"/tmp/graft_oracle_aux/${Sql.sfTag(dir)}/iforest_scores")
-      flagged.filter(col("_meta_is_anomaly"))
-        .select(col("event_id"), col("value"),
-          floor(col("_iforest_score") * lit(10000.0) + lit(0.5))
-            .cast(LongType).as("score_x10k"))
-        .orderBy(col("event_id"))
-    }),
-
-    "q_pivot_builtin" -> ((s, dir) =>
-      t(s, dir, "lineitem").groupBy(col("l_returnflag"))
-        .pivot("l_linestatus", Seq("O", "F"))
-        .agg(Semantics.exactSum(col("l_quantity")))
-        .withColumnRenamed("O", "qty_o").withColumnRenamed("F", "qty_f")
-        .orderBy(col("l_returnflag"))),
-
-    "q_events_sliding" -> ((s, dir) =>
-      // 2h windows sliding by 1h: every event lands in exactly two windows
-      t(s, dir, "events")
-        .groupBy(window(col("ts"), "2 hours", "1 hour").as("w"), col("event_type"))
-        .agg(count(lit(1)).as("n"), Semantics.exactSum(col("value")).as("total_value"))
-        .select(
-          date_format(col("w.start"), "yyyy-MM-dd HH:mm:ss").as("window_start"),
-          col("event_type"), col("n"), col("total_value"))
-        .orderBy(col("window_start"), col("event_type"))),
-
-    "q_embed_neardup" -> ((s, dir) => {
-      // exact pairwise cosine ≥ 0.35 within a fixed 300-vector slice: the
-      // brute-force oracle twin of the LSH path.
-      //
-      // Physical shape: pair generation is a broadcast nested-loop join on
-      // the ARRAYS (id_a < id_b halves it) — never a join keyed on the
-      // 64-value dimension index, which would funnel the whole product
-      // matrix through 64 shuffle keys. Scoring is ONE codegen'd pass per
-      // pair (`fast_cosine`: dot and both norms in a single loop). The
-      // double-sum error (~1e-14) is orders of magnitude below both the
-      // 1e-4 rounding granularity and the engines' own decimal-quantization
-      // disagreement (~1e-18/element), so the round(4) hash-match with the
-      // DuckDB oracle is preserved — asserted empirically by the gate.
-      import graft.functions.CosineSim
-      CosineSim.register(s)
-      // limit(300) is an identity on the ≤300-row filtered slice but makes
-      // the bound STATICALLY provable (plan-hygiene BNLJ rule)
-      val emb = t(s, dir, "embeddings").filter(col("vec_id") < 300).limit(300)
-      val a = emb.select(col("vec_id").as("id_a"), col("embedding").as("ea"))
-      val b = emb.select(col("vec_id").as("id_b"), col("embedding").as("eb"))
-      a.join(broadcast(b), col("id_a") < col("id_b"))
-        .select(col("id_a"), col("id_b"),
-          round(CosineSim.fast_cosine(col("ea"), col("eb")), 4)
-            .as("similarity"))
-        .filter(col("similarity") >= 0.35)
-        .orderBy(col("id_a"), col("id_b"))
-    }),
-
-    "q_embed_semdedup" -> ((s, dir) => {
-      // SemDeDup: connected components over the exact cosine ≥ 0.35 pair
-      // graph (the SAME pair construction q_embed_neardup hash-proves), one
-      // canonical survivor per component. The oracle re-derives the pairs
-      // with its own decimal dot products and closes them with a RECURSIVE
-      // CTE — so pair membership, component labels, and the keep flag are
-      // all independently verified. Scale: pairs come from a broadcast NLJ
-      // on a bounded slice here; at corpus scale the SAME components/keep
-      // code consumes LSH-candidate pairs (annJoin) instead of brute force.
-      import graft.functions.CosineSim
-      CosineSim.register(s)
-      val emb = t(s, dir, "embeddings").filter(col("vec_id") < 300).limit(300)
-      val a = emb.select(col("vec_id").as("id_a"), col("embedding").as("ea"))
-      val b = emb.select(col("vec_id").as("id_b"), col("embedding").as("eb"))
-      val pairs = a.join(broadcast(b), col("id_a") < col("id_b"))
-        .select(col("id_a"), col("id_b"),
-          round(CosineSim.fast_cosine(col("ea"), col("eb")), 4)
-            .as("similarity"))
-        .filter(col("similarity") >= 0.35)
-      graft.operators.Components.keepCanonical(
-        emb.select(col("vec_id")), "vec_id", pairs, "id_a", "id_b")
-        .orderBy(col("vec_id"))
-    }),
-
-    // chart auto-selection is a pure function of column stats, so the
-    // oracle re-derives the SAME selection from its own exact distinct
-    // counts and the reference's thresholds (cat ≤ 50, pie ≤ 10), with a
-    // negative guard proving high-cardinality exclusion — a selection-rule
-    // regression on either side breaks the hash match
-    "q_viz_charts" -> ((s, dir) => {
-      import s.implicits._
-      val profiles = graft.viz.Visualization.analyze(t(s, dir, "events"))
-      val charts = graft.viz.Visualization.selectCharts(profiles)
-      charts.map(c => (c.chartType, c.priority, c.x, c.y.getOrElse(""),
-        c.agg.getOrElse(""))).toDF("chart_type", "priority", "x", "y", "agg")
-        .orderBy(col("priority").desc, col("chart_type"), col("x"), col("y"))
-    }),
-
-    "q_echarts_config" -> ((s, dir) => {
-      // ECharts config generation gated end-to-end: four chart configs
-      // over the event-type count aggregate, emitted as full JSON strings.
-      // The oracle re-derives the SAME strings from its own aggregation
-      // plus the literal config skeleton — a drift in the aggregate, the
-      // field order, number rendering, or any template constant breaks
-      // the hash
-      import s.implicits._
-      val agg = t(s, dir, "events").groupBy(col("event_type"))
-        .agg(count(lit(1)).as("y")).orderBy(col("event_type")).collect()
-      val rows = agg.toSeq.map(r =>
-        Map[String, Any]("x" -> r.getString(0), "y" -> r.getLong(1)))
-      val title = Some("Events by type")
-      import graft.viz.Echarts
-      Seq(
-        ("area", Echarts.area(rows, "x", "y", title).render),
-        ("bar", Echarts.bar(rows, "x", "y", title).render),
-        ("line", Echarts.line(rows, "x", "y", title).render),
-        ("pie", Echarts.pie(rows, "x", "y", title).render))
-        .toDF("chart_type", "config_json").orderBy(col("chart_type"))
-    }),
-
-    "q_insight_profile" -> ((s, dir) => {
-      // the insight-generation profile prompt, line by line: every cell is
-      // integer-derived (floor-scaled means, exact distincts), so DuckDB
-      // rebuilds the exact text from nation's stats — a formatting or
-      // stats regression on either side breaks the hash
-      import s.implicits._
-      val txt = graft.viz.InsightProfile.profileText(t(s, dir, "nation"))
-      txt.split("\n", -1).toSeq.zipWithIndex
-        .map { case (l, i) => (i.toLong, l) }
-        .toDF("line_no", "line").orderBy(col("line_no"))
-    }),
-
-    "q_multimodal_features" -> ((s, dir) => {
-      // REAL codec roundtrip gate: the synthetic corpus encodes PPM/BMP/WAV
-      // payloads as an arithmetic function of media_id, extractFeatures
-      // DECODES them, and the oracle recomputes expected container sizes
-      // and leading features (width / duration) from the same arithmetic —
-      // so encoder, decoder, and feature head are all cross-checked. The
-      // stub-path rows (opaque payloads) export only their byte count.
-      val corpus = graft.multimodal.Multimodal.syntheticCorpus(s, 99)
-      graft.multimodal.Multimodal.extractFeatures(corpus).toDF()
-        .select(col("media_id"), col("kind"), col("n_bytes"),
-          coalesce(
-            when(col("media_id") % 4 < 3,
-              floor(element_at(col("feature"), 1).cast(DoubleType) *
-                lit(10000.0) + lit(0.5)).cast(LongType).cast(StringType)),
-            lit("")).as("f0_x10k"))
-        .orderBy(col("media_id"))
-    }),
-
-    "q_image_resize" -> ((s, dir) => {
-      // REAL decode→resize→re-encode→decode roundtrip on the gradient PPM
-      // rows: the oracle replays fitWithin + nearest-neighbor source-pixel
-      // selection + the gradient formula arithmetically, so a one-pixel
-      // drift anywhere in the codec or scaler changes pix_sum
-      import s.implicits._
-      val corpus = graft.multimodal.Multimodal.syntheticCorpus(s, 99)
-        .filter(col("media_id") % 4 === 0)
-      val resized = graft.multimodal.Multimodal.resizeImages(corpus, 8, 8)
-      resized.select(col("media_id"), col("width"), col("height"),
-          col("content"))
-        .as[(Long, Int, Int, Array[Byte])]
-        .map { case (id, w, h, bytes) =>
-          val img = graft.multimodal.Codecs.decodePpm(bytes).get
-          (id, img.width, img.height, w, h,
-            img.rgb.foldLeft(0L)((a, b) => a + (b & 0xff)))
-        }
-        .toDF("media_id", "dec_w", "dec_h", "meta_w", "meta_h", "pix_sum")
-        .orderBy(col("media_id"))
-    }),
-
-    "q_image_codec_roundtrip" -> ((s, dir) => {
-      // REAL PNG + JPEG codecs (the JDK's ImageIO — no external library):
-      // deterministic gradient pixels → encode → decode, executor-side.
-      // PNG is lossless, so the decoded pixel sum replays ARITHMETICALLY
-      // in the oracle (a one-pixel drift anywhere in encoder or decoder
-      // breaks the hash); JPEG is lossy, so it gates on dims + a mean
-      // absolute channel error bound
-      import s.implicits._
-      // smooth two-axis gradient + flat blue channel: JPEG-friendly (no
-      // mod-256 sawtooth edges) and integer-division replayable
-      val base = (0 until 60).map { i =>
-        val w = 16 + i % 16; val h = 12 + i % 12
-        val rgb = new Array[Byte](w * h * 3)
-        var p = 0
-        while (p < w * h) {
-          val x = p % w; val y = p / w
-          rgb(p * 3) = (x * 255 / (w - 1)).toByte
-          rgb(p * 3 + 1) = (y * 255 / (h - 1)).toByte
-          rgb(p * 3 + 2) = ((i * 4) % 256).toByte
-          p += 1
-        }
-        (i.toLong, w, h, rgb)
-      }
-      base.toDF("media_id", "w", "h", "rgb")
-        .repartition(4)
-        .as[(Long, Int, Int, Array[Byte])]
-        .flatMap { case (id, w, h, rgb) =>
-          val img = graft.multimodal.Codecs.ImagePixels(w, h, rgb)
-          val png = graft.multimodal.Codecs
-            .decodeImage(graft.multimodal.Codecs.encodePng(img)).get
-          val pngOk = png.width == w && png.height == h &&
-            java.util.Arrays.equals(png.rgb, rgb)
-          val pngSum = png.rgb.foldLeft(0L)((a, b) => a + (b & 0xff))
-          val jpg = graft.multimodal.Codecs
-            .decodeImage(graft.multimodal.Codecs.encodeJpeg(img, 0.9f)).get
-          val err = {
-            var sum = 0L; var i2 = 0
-            while (i2 < rgb.length) {
-              sum += math.abs((rgb(i2) & 0xff) - (jpg.rgb(i2) & 0xff))
-              i2 += 1
-            }
-            sum.toDouble / rgb.length
-          }
-          Seq((id, "jpeg", jpg.width, jpg.height, -1L,
-              jpg.width == w && jpg.height == h && err < 6.0),
-            (id, "png", png.width, png.height, pngSum, pngOk))
-        }
-        .toDF("media_id", "container", "dec_w", "dec_h", "pix_sum", "ok")
-        .orderBy(col("media_id"), col("container"))
-    }),
-
-    "q_audio_resample" -> ((s, dir) => {
-      // rate normalization (8 kHz sine tones → 16 kHz): exact-rational
-      // linear interpolation in pure integer arithmetic, re-encoded and
-      // RE-DECODED — sample counts and duration replay arithmetically
-      // from the generator; the energy invariant (rms preserved) is
-      // engine-verified. The ASR-pipeline step before feature extraction
-      import s.implicits._
-      val audio = graft.multimodal.Multimodal.syntheticCorpus(s, 99)
-        .filter(col("kind") === "audio")
-      graft.multimodal.Multimodal.resampleAudio(audio, 16000)
-        .select(col("media_id"), col("content"), col("duration_ms"))
-        .as[(Long, Array[Byte], Long)]
-        .map { case (id, bytes, durMeta) =>
-          val info = graft.multimodal.Codecs.decodeWav(bytes).get
-          val samples = graft.multimodal.Codecs.decodeWavSamples(bytes).get
-          // the 8 kHz original, regenerated arithmetically for the rms twin
-          val nIn = 800 * (1 + (id % 3).toInt)
-          val freq = 200.0 + (id % 10) * 50
-          val orig = Array.tabulate(nIn)(t =>
-            (math.sin(2 * math.Pi * freq * t / 8000) * 12000).toShort)
-          def rms(a: Array[Short]): Double =
-            math.sqrt(a.map(x => x.toDouble * x).sum / a.length)
-          (id, nIn.toLong, samples.length.toLong, info.sampleRate,
-            info.durationMs,
-            durMeta == info.durationMs &&
-              math.abs(rms(samples) / rms(orig) - 1.0) < 0.05)
-        }
-        .toDF("media_id", "n_in", "n_out", "rate_out", "duration_ms", "ok")
-        .orderBy(col("media_id"))
-    }),
-
-    "q_binary_ingest" -> ((s, dir) => {
-      // media-lake ingestion: PNG files written to a directory, read back
-      // through the binaryFile source (pathGlobFilter prunes at the
-      // LISTING — a decoy .txt file must never be read), decoded, and
-      // verified against the gradient arithmetic. The on-ramp that turns
-      // a directory of images into the binary-column multimodal model
-      import s.implicits._
-      // fixture dir session-cached ([[StageOnce]]): the PNG lake is a pure
-      // function of nothing but the loop below, so retries/verify passes
-      // reuse the files at an appId-keyed, sweep-covered path
-      val stagePath = StageOnce.dir(s, dir, "png_lake") { p =>
-        val stage = new java.io.File(p)
-        stage.mkdirs()
-        (0 until 20).foreach { i =>
-          val w = 16 + i % 16; val h = 12 + i % 12
-          val rgb = new Array[Byte](w * h * 3)
-          var q = 0
-          while (q < w * h) {
-            val x = q % w; val y = q / w
-            rgb(q * 3) = (x * 255 / (w - 1)).toByte
-            rgb(q * 3 + 1) = (y * 255 / (h - 1)).toByte
-            rgb(q * 3 + 2) = ((i * 4) % 256).toByte
-            q += 1
-          }
-          java.nio.file.Files.write(
-            stage.toPath.resolve(f"img_$i%03d.png"),
-            graft.multimodal.Codecs.encodePng(
-              graft.multimodal.Codecs.ImagePixels(w, h, rgb)))
-        }
-        java.nio.file.Files.write(stage.toPath.resolve("decoy.txt"),
-          "not an image".getBytes("UTF-8"))
-        ()
-      }
-      graft.io.Sources.binaryFiles(s, stagePath,
-          pathGlob = Some("*.png"))
-        .select(element_at(split(col("path"), "/"), -1).as("file"),
-          col("length"), col("content"))
-        .as[(String, Long, Array[Byte])]
-        .map { case (f, len, bytes) =>
-          val img = graft.multimodal.Codecs.decodeImage(bytes).get
-          val i = f.stripPrefix("img_").stripSuffix(".png").toInt
-          val sum = img.rgb.foldLeft(0L)((a, b) => a + (b & 0xff))
-          (f, i.toLong, img.width, img.height, sum,
-            len == bytes.length.toLong)
-        }
-        .toDF("file", "i", "dec_w", "dec_h", "pix_sum", "len_ok")
-        .orderBy(col("file"))
-    }),
-
-    "q_frame_sample" -> ((s, dir) =>
-      // metadata-driven frame-sampling plan for video rows: one timestamp
-      // row per everyMs tick across each clip's duration — pure column
-      // ops, the payload bytes are never touched
-      graft.multimodal.Multimodal.frameSamplePlan(
-        graft.multimodal.Multimodal.syntheticCorpus(s, 99), everyMs = 7000L)
-        .select(col("media_id"), col("duration_ms"), col("frame_ts_ms"))
-        .orderBy(col("media_id"), col("frame_ts_ms"))),
-
-    "q_fuzzy_match" -> ((s, dir) => {
-      // entity resolution: suppliers vs a deterministically typo'd copy
-      // (one char deleted at a key-dependent position). The blocked join
-      // must find EXACTLY the pairs DuckDB's brute-force cross join +
-      // levenshtein finds — including incidental near-collisions between
-      // different suppliers' serial-number names
-      val sup = t(s, dir, "supplier")
-      val a = sup.select(col("s_suppkey").as("id_a"),
-        col("s_name").as("name_a"))
-      val b = sup.select((col("s_suppkey") + 100000L).as("id_b"),
-        concat(expr("substring(s_name, 1, CAST(s_suppkey % 10 + 4 AS INT))"),
-          expr("substring(s_name, CAST(s_suppkey % 10 + 6 AS INT), 1000)"))
-          .as("name_b"))
-      graft.operators.FuzzyMatch.editDistanceJoin(
-        a, b, "id_a", "name_a", "id_b", "name_b", maxDist = 1)
-        .orderBy(col("id_a"), col("id_b"))
-    }),
-
-    "q_golden_records" -> ((s, dir) => {
-      // entity-resolution capstone: blocked fuzzy match → components →
-      // SURVIVORSHIP merge into one golden record per cluster. Names get
-      // an md5-hex suffix so BASE records sit far apart (sequential TPC-H
-      // names chain at distance 1 — everything would merge); each record
-      // gets TWO twins sharing the SAME one-char-deleted name, so the
-      // name vote is 2-to-1 FOR the typo (most-frequent must beat the
-      // original); brand is unanimous; price is all-distinct (tie →
-      // lexicographically smallest). Oracle replays pairs, closure, and
-      // the vote brute-force
-      val b0 = t(s, dir, "part").filter(col("p_partkey") % 20 === 0)
-        .withColumn("nm", concat(col("p_name"), lit(" "),
-          substring(md5(col("p_partkey").cast(StringType)), 1, 8)))
-        .withColumn("off",
-          (length(col("p_name")) + lit(2) + col("p_partkey") % 5)
-            .cast("int"))
-        .withColumn("typo", concat(expr("substring(nm, 1, off - 1)"),
-          expr("substring(nm, off + 1, 1000)")))
-      def rec(idOff: Long, nameCol: org.apache.spark.sql.Column,
-          priceOff: Double) =
-        b0.select((col("p_partkey") + idOff).as("rid"),
-          nameCol.as("name"), col("p_brand").as("brand"),
-          (col("p_retailprice") + priceOff)
-            .cast(org.apache.spark.sql.types.DecimalType(12, 2))
-            .as("price"))
-      val all = rec(0L, col("nm"), 0.0)
-        .unionByName(rec(100000L, col("typo"), 1.0))
-        .unionByName(rec(200000L, col("typo"), 2.0))
-      graft.operators.EntityResolution.goldenRecords(all, "rid", "name",
-          Seq("name", "brand", "price"), maxDist = 1)
-        .orderBy(col("cluster_id"), col("field"))
-    }),
-
-    "q_multimodal_neardup" -> ((s, dir) => {
-      // perceptual-hash image dedup: decode PPM payloads → aHash → blocked
-      // hamming pairs. The twin corpus engineers each base image's ONLY
-      // near-dup to be its perturbed copy (id + 10000), so the exact pair
-      // list is arithmetic the oracle generates without decoding anything —
-      // a codec drift, hash instability, or blocking recall miss all
-      // change the pair set
-      val corpus = graft.multimodal.Multimodal.twinImageCorpus(s, 60)
-      val sigs = graft.multimodal.Multimodal.imageAHash(corpus)
-      SimHash.sigPairs(sigs, "media_id", "ahash", maxDist = 3)
-        .select(col("id_a"), col("id_b"))
-        .orderBy(col("id_a"))
-    }),
-
-    "q_multimodal_audio_neardup" -> ((s, dir) => {
-      // audio twin of q_multimodal_neardup: decode WAV → energy-profile
-      // fingerprint → blocked hamming pairs; the engineered pair list is
-      // the oracle's arithmetic ground truth
-      val corpus = graft.multimodal.Multimodal.twinAudioCorpus(s, 40)
-      val sigs = graft.multimodal.Multimodal.audioFingerprints(corpus)
-      SimHash.sigPairs(sigs, "media_id", "afp", maxDist = 3)
-        .select(col("id_a"), col("id_b"))
-        .orderBy(col("id_a"))
-    }),
-
-    "q_metadata_columns" -> ((s, dir) =>
-      // MetadataToColumns guarantees the _meta_* column set exists
-      MetadataToColumns()(t(s, dir, "region"))
-        .select(col("r_regionkey"), col("r_name"),
-          col("_meta_is_anomaly"), col("_meta_quality_score"))
-        .orderBy(col("r_regionkey"))),
-
-    "q_remove_fields" -> ((s, dir) => {
-      // remove_fields relational semantics: all-missing columns are dropped
-      val df = t(s, dir, "supplier")
-        .withColumn("dead_col", lit(null).cast(StringType))
-        .withColumn("live_col",
-          when(col("s_suppkey") % 2 === 0, col("s_name")))
-      NullRemover("remove_fields")(df).orderBy(col("s_suppkey"))
-    }),
-
-    "q_quality_filter" -> ((s, dir) => {
-      // filterLow=true drops rows under min_score (quality_scorer.py:148-155)
-      val df = t(s, dir, "customer").select(
-        col("c_custkey").as("customer_id"),
-        when(col("c_custkey") % 3 === 0, lit("not-an-email"))
-          .otherwise(concat(col("c_name"), lit("@x.co"))).as("email"),
-        col("c_acctbal").as("amount"))
-      QualityScorer(fields = Seq("customer_id", "email", "amount"),
-        minScore = 0.95, filterLow = true)(df)
-        .select(col("customer_id"), col("_meta_quality_score").as("quality_score"))
-        .orderBy(col("customer_id"))
-    }),
-
-    "q_anomaly_split_clean" -> ((s, dir) => {
-      // splitter routing: quarantine side filtered out, clean side flows on
-      val flagged = AnomalyDetector.zscore(t(s, dir, "events"), Seq("value"), 2.0)
-      val (clean, _) = AnomalySplitter.split(flagged)
-      clean.groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n_clean"),
-          Semantics.exactSum(col("value")).as("clean_value"))
-        .orderBy(col("event_type"))
-    }),
-
-    "q_drilldown_total" -> ((s, dir) =>
-      // the drill-down endpoint's companion total COUNT(*) (duckdb_service.py:436-505)
-      t(s, dir, "customer")
-        .filter(graft.query.Filter.compile(Seq(
-          graft.query.Filter.Eq("c_mktsegment", "BUILDING"),
-          graft.query.Filter.Gt("c_acctbal", 0.0))))
-        .agg(count(lit(1)).as("total_count"))),
-
-    "q_scatter_sample" -> ((s, dir) =>
-      // deterministic "sample" cap for scatter charts: ordered head, not
-      // random (visualization_generator.py:436 uses df.sample; a seeded
-      // random sample is not reproducible cross-engine, so the engine uses
-      // an ordered limit — documented deviation)
-      t(s, dir, "orders")
-        .select(col("o_orderkey"), col("o_totalprice"))
-        .orderBy(col("o_orderkey")).limit(1000)),
-
-    "q_sessions" -> ((s, dir) =>
-      // batch twin of the streaming sessionizer: Spark-native session_window
-      // gap sessions (30 min), oracle = lag/cumsum construction on µs epochs
-      t(s, dir, "events")
-        .groupBy(col("user_id"), session_window(col("ts"), "30 minutes").as("sw"))
-        .agg(count(lit(1)).as("n_events"),
-          Semantics.exactSum(col("value")).as("total_value"))
-        .select(col("user_id"),
-          date_format(col("sw.start"), "yyyy-MM-dd HH:mm:ss").as("session_start"),
-          col("n_events"), col("total_value"))
-        .orderBy(col("user_id"), col("session_start"))),
-
-    // composition: session windows become BASKETS and the co-occurrence
-    // rules run per session, not per user — "what happens together in one
-    // sitting" (the user-level twin is q_assoc_rules)
-    // inter-event dwell times, log2-bucketed by an INTEGER comparison
-    // chain (floating log2 flips at exact powers of two across engines)
-    "q_dwell_times" -> ((s, dir) => {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("user_id")).orderBy(col("ts").asc, col("event_id"))
-      val gaps = t(s, dir, "events")
-        .withColumn("_gap",
-          unix_timestamp(col("ts")) - lag(unix_timestamp(col("ts")), 1)
-            .over(w))
-        .filter(col("_gap").isNotNull && col("_gap") >= 0)
-      val bucket = (0 until 24).map(k =>
-        when(col("_gap") >= math.pow(2, k).toLong, 1L).otherwise(0L))
-        .reduce(_ + _)
-      gaps.select(bucket.as("log2_bucket"))
-        .groupBy(col("log2_bucket")).agg(count(lit(1)).as("n"))
-        .orderBy(col("log2_bucket"))
-    }),
-
-    "q_percent_rank" -> ((s, dir) => {
-      // per-group percent rank of each value — score normalization that
-      // survives any distribution; one partitioned window
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("event_type"))
-        .orderBy(col("value").asc, col("event_id").asc)
-      t(s, dir, "events").filter(col("value").isNotNull)
-        .select(col("event_id"), col("event_type"),
-          Semantics.safeRound(percent_rank().over(w), 6).as("pr"))
-        .orderBy(col("event_id"))
-    }),
-
-    "q_session_baskets" -> ((s, dir) => {
-      // sessionize per USER ONLY (an extra grouping key would split the
-      // gap-merge); the per-session item set stays WHOLE — session_window
-      // + collect_set already produce exactly the one-row-per-basket set
-      // form pairRulesFromSets consumes, so the old explode → distinct →
-      // re-collect_set round trip (two full shuffles of the exploded
-      // incidence) is gone and the persisted frame is one row per session.
-      // Persisted: three consumers (item counts, basket total, pairs) over
-      // a session_window aggregate — without the persist each consumer
-      // re-runs the sessionization.
-      val inc = graft.core.Rebalance.computeDense(t(s, dir, "events"))
-        .groupBy(col("user_id"),
-          session_window(col("ts"), "30 minutes").as("sw"))
-        .agg(collect_set(col("event_type")).as("_items"))
-        .select(col("_items"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      graft.operators.MarketBasket.pairRulesFromSets(inc, "_items")
-    }),
-
-    "q_share_parent" -> ((s, dir) => {
-      // percent-of-parent in a two-level hierarchy: cell counts + a tiny
-      // parent aggregate joined back (never a corpus window)
-      val cell = t(s, dir, "lineitem")
-        .groupBy(col("l_returnflag"), col("l_linestatus"))
-        .agg(count(lit(1)).as("n"))
-      val parent = cell.groupBy(col("l_returnflag"))
-        .agg(sum(col("n")).as("_pn"))
-      cell.join(broadcast(parent), Seq("l_returnflag"))
-        .select(col("l_returnflag"), col("l_linestatus"), col("n"),
-          Semantics.safeRound(col("n").cast(DoubleType) /
-            col("_pn").cast(DoubleType), 6).as("share_of_flag"))
-        .orderBy(col("l_returnflag"), col("l_linestatus"))
-    }),
-
-    "q_asof_nearest" -> ((s, dir) => {
-      // whichever neighboring order-day aggregate is CLOSER in time —
-      // strictly excluding the row's own day so the choice is non-trivial
-      val orders = t(s, dir, "orders")
-      val daily = orders
-        .groupBy(col("o_custkey"), col("o_orderdate").as("near_date"))
-        .agg(count(lit(1)).as("near_n"))
-      AsofJoin.nearest(
-        left = orders.select(col("o_orderkey"), col("o_custkey"),
-          col("o_orderdate")),
-        right = daily, keys = Seq("o_custkey"),
-        leftTs = "o_orderdate", rightTs = "near_date", strict = true)
-        .select(col("o_orderkey"),
-          date_format(col("o_orderdate"), "yyyy-MM-dd HH:mm:ss")
-            .as("order_date"),
-          date_format(col("near_date"), "yyyy-MM-dd HH:mm:ss")
-            .as("near_date"),
-          col("near_n"), col("asof_dir"))
-        .orderBy(col("o_orderkey"))
-    }),
-
-    "q_asof_join" -> ((s, dir) => {
-      // as-of join: every order gets its customer's most recent STRICTLY
-      // earlier order-day aggregate (union + keyed window — one shuffle,
-      // no range cross product; see operators/AsofJoin)
-      val orders = t(s, dir, "orders")
-      val daily = orders
-        .groupBy(col("o_custkey"), col("o_orderdate").as("prev_date"))
-        .agg(Semantics.exactSum(col("o_totalprice")).as("prev_total"),
-          count(lit(1)).as("prev_n"))
-      AsofJoin.backward(
-        left = orders.select(col("o_orderkey"), col("o_custkey"), col("o_orderdate")),
-        right = daily, keys = Seq("o_custkey"),
-        leftTs = "o_orderdate", rightTs = "prev_date", strict = true)
-        .select(col("o_orderkey"), col("o_custkey"),
-          date_format(col("o_orderdate"), "yyyy-MM-dd HH:mm:ss").as("order_date"),
-          date_format(col("prev_date"), "yyyy-MM-dd HH:mm:ss").as("prev_date"),
-          col("prev_total"), col("prev_n"))
-        .orderBy(col("o_orderkey"))
-    }),
-
-    "q_asof_tolerance" -> ((s, dir) => {
-      // tolerance-bounded as-of (pandas merge_asof(tolerance)): the most
-      // recent strictly-earlier order-day aggregate, but only if it is at
-      // most 7 days stale — older matches null out. Same single-window
-      // plan as q_asof_join plus one codegen'd staleness comparison
-      val orders = t(s, dir, "orders")
-      val daily = orders
-        .groupBy(col("o_custkey"), col("o_orderdate").as("prev_date"))
-        .agg(Semantics.exactSum(col("o_totalprice")).as("prev_total"),
-          count(lit(1)).as("prev_n"))
-      AsofJoin.backwardWithin(
-        left = orders.select(col("o_orderkey"), col("o_custkey"),
-          col("o_orderdate")),
-        right = daily, keys = Seq("o_custkey"),
-        leftTs = "o_orderdate", rightTs = "prev_date",
-        tolerance = "7 days", strict = true)
-        .select(col("o_orderkey"), col("o_custkey"),
-          date_format(col("o_orderdate"), "yyyy-MM-dd HH:mm:ss")
-            .as("order_date"),
-          date_format(col("prev_date"), "yyyy-MM-dd HH:mm:ss")
-            .as("prev_date"),
-          col("prev_total"), col("prev_n"))
-        .orderBy(col("o_orderkey"))
-    }),
-
-    "q_sample_det" -> ((s, dir) =>
-      // hash-threshold sample: identical row set in any engine/partitioning
-      graft.functions.Sampling.deterministicSample(
-        t(s, dir, "orders"), "o_orderkey", 0.1)
-        .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
-        .orderBy(col("o_orderkey"))),
-
-    "q_train_test" -> ((s, dir) =>
-      // split hygiene: disjoint+exhaustive labels; gate checks per-split
-      // counts and sums, proving the assignment is engine-independent
-      graft.functions.Sampling.trainTestSplit(
-        t(s, dir, "documents"), "doc_id", testFraction = 0.2)
-        .groupBy(col("split"))
-        .agg(count(lit(1)).as("n"),
-          Semantics.exactSum(col("n_chars")).as("total_chars"))
-        .orderBy(col("split"))),
-
-    "q_sample_stratified" -> ((s, dir) =>
-      // per-language fractions over documents: rare strata kept whole
-      graft.functions.Sampling.stratifiedSample(
-        t(s, dir, "documents"), "doc_id", "lang",
-        fractions = Map("en" -> 0.25, "de" -> 1.0), default = 0.5)
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("n"))
-        .orderBy(col("lang"))),
-
-    "q_mix_corpus" -> ((s, dir) =>
-      // token-budget data mix: src1 capped hard, src2 kept whole (budget
-      // exceeds supply), everything else at the default cap; gate checks
-      // the per-source kept-doc counts and token totals
-      graft.functions.Sampling.mixCorpus(
-        t(s, dir, "documents"), "doc_id", "text", "source",
-        targetTokens = Map("src1" -> 600.0, "src2" -> 1e9),
-        defaultTarget = 300.0)
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("n_tokens")).as("kept_tokens"))
-        .orderBy(col("source"))),
-
-    "q_shuffle_det" -> ((s, dir) =>
-      // deterministic training-order shuffle: the driver's hash compare is
-      // row-order-sensitive, so the first 100 rows of the shuffled order
-      // hash-encode the exact global ordering (md5 key is engine-portable)
-      graft.functions.Sampling.deterministicShuffle(
-        t(s, dir, "documents").select(col("doc_id")), "doc_id", seed = 7L)
-        .limit(100)),
-
-    "q_mix_temperature" -> ((s, dir) =>
-      // temperature-weighted data mix (alpha=0.5 flattens toward uniform);
-      // gate checks per-source kept counts + token totals — the weight
-      // arithmetic and the hash membership both replayed by the oracle
-      graft.functions.Sampling.mixCorpusTemperature(
-        t(s, dir, "documents"), "doc_id", "text", "source",
-        alpha = 0.5, totalBudget = 12000.0)
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("n_tokens")).as("kept_tokens"))
-        .orderBy(col("source"))),
-
-    "q_asof_forward" -> ((s, dir) => {
-      // forward variant: each order's NEXT strictly-later order-day count
-      val orders = t(s, dir, "orders")
-      val daily = orders
-        .groupBy(col("o_custkey"), col("o_orderdate").as("next_date"))
-        .agg(count(lit(1)).as("next_n"))
-      AsofJoin.forward(
-        left = orders.select(col("o_orderkey"), col("o_custkey"), col("o_orderdate")),
-        right = daily, keys = Seq("o_custkey"),
-        leftTs = "o_orderdate", rightTs = "next_date", strict = true)
-        .select(col("o_orderkey"),
-          date_format(col("next_date"), "yyyy-MM-dd").as("next_date"),
-          col("next_n"))
-        .orderBy(col("o_orderkey"))
-    }),
-
-    "q_profile_table" -> ((s, dir) => {
-      // the full §1.3 query-time profile: dtype, nulls, distincts, typed
-      // min/max, role suggestion, high-card flag, categorical value list.
-      // Gate representation: floats → FLOOR-scaled integer strings and
-      // nullables → '' so the cross-engine compare has no float- or
-      // NULL-canonicalization surface (the API keeps real doubles).
-      def x10ks(c: Column): Column =
-        coalesce(floor(c * lit(10000.0) + lit(0.5)).cast(LongType)
-          .cast(StringType), lit(""))
-      graft.query.QueryService.profileTable(t(s, dir, "events"),
-        Seq("event_id", "event_type", "value", "ts", "props"))
-        .select(col("column_name"), col("dtype"), col("total_count"),
-          col("null_count"), col("n_distinct"), col("high_cardinality"),
-          col("suggested_role"),
-          x10ks(col("min_value")).as("min_x10k"),
-          x10ks(col("max_value")).as("max_x10k"),
-          x10ks(col("mean_value")).as("mean_x10k"),
-          coalesce(col("min_text"), lit("")).as("min_text"),
-          coalesce(col("max_text"), lit("")).as("max_text"),
-          coalesce(col("sample_values"), lit("")).as("sample_values"))
-        .orderBy(col("column_name"))
-    }),
-
-    // sketch estimates are engine-specific, so the gate checks the
-    // oracle-verifiable INVARIANT instead: exact distincts (cross-engine)
-    // plus "estimate within 5% of exact" — the oracle expects TRUE, so an
-    // accuracy regression in the sketch pipeline breaks the hash match
-    // (merge algebra still covered by SketchSpec)
-    "q_sketch_distinct" -> ((s, dir) => {
-      val events = t(s, dir, "events")
-      val daily = graft.functions.Sketches.distinctSketches(
-        events.withColumn("day", to_date(col("ts"))),
-        Seq("event_type", "day"), "user_id")
-      val est = graft.functions.Sketches.mergeDistinct(daily, Seq("event_type"))
-        .withColumn("distinct_est", col("distinct_est").cast(LongType))
-      val exact = events.groupBy(col("event_type"))
-        .agg(countDistinct(col("user_id")).as("n_exact"))
-      est.join(exact, Seq("event_type"))
-        .select(col("event_type"), col("n_exact"),
-          (abs(col("distinct_est") - col("n_exact")).cast(DoubleType) <=
-            col("n_exact").cast(DoubleType) * 0.05).as("within_5pct"))
-        .orderBy(col("event_type"))
-    }),
-
-    // quantile sketches: same invariant shape as q_sketch_distinct — the
-    // exact quantile is cross-engine (quantile_cont parity proven by
-    // q_anomaly_iqr) and the one-pass mergeable digest must land within
-    // tolerance of it
-    "q_sketch_quantiles" -> ((s, dir) => {
-      val events = t(s, dir, "events")
-      val approxQ = events.groupBy(col("event_type"))
-        .agg(graft.functions.Sketches
-          .approxQuantiles(col("value"), Seq(0.5)).as("qs"))
-        .select(col("event_type"), element_at(col("qs"), 1).as("m_approx"))
-      val exactQ = events.groupBy(col("event_type"))
-        .agg(expr("percentile(value, 0.5)").as("m_exact"))
-      approxQ.join(exactQ, Seq("event_type"))
-        .select(col("event_type"),
-          floor(col("m_exact") * lit(10000.0) + lit(0.5))
-            .cast(LongType).as("median_x10k"),
-          (abs(col("m_approx") - col("m_exact")) <=
-            greatest(abs(col("m_exact")) * 0.05, lit(1.0))).as("within_tol"))
-        .orderBy(col("event_type"))
-    }),
-
-    "q_embed_kmeans" -> ((s, dir) => {
-      // k-means clustering surface (the IVF trainer as a first-class op):
-      // driver fit on a bounded sample, assignment is a partition-local
-      // argmin projection. The gate materializes vectors+assignments and
-      // the centroids; the oracle recomputes every vector's distance to
-      // EVERY centroid and checks the assigned one is the argmin (1e-9
-      // slack only for float-sum association).
-      import graft.functions.Similarity
-      val emb = t(s, dir, "embeddings")
-      val idx = Similarity.ivfIndex(emb, "embedding", "vec_id", nLists = 8)
-      val assigned = idx.assigned
-        .select(col("vec_id"), col("_list").as("cluster"), col("embedding"))
-      val aux = s"/tmp/graft_oracle_aux/${Sql.sfTag(dir)}"
-      Aux.write(assigned, s"$aux/kmeans_assign")
-      import s.implicits._
-      Aux.write(idx.centroids.toSeq.toDF("cluster", "centroid"),
-        s"$aux/kmeans_centroids")
-      assigned.select(col("vec_id"), col("cluster"),
-          lit(true).as("argmin_ok"))
-        .orderBy(col("vec_id"))
-    }),
-
-    "q_sketch_heavyhitters" -> ((s, dir) => {
-      // mergeable heavy-hitter counting: per-DAY count-min sketches of user
-      // activity, rolled up per event_type by sketch UNION (no rescan), then
-      // probed at the exact top-3 users. The CMS guarantee is one-sided —
-      // estimate ∈ [exact, exact + eps·N] — so the oracle-checkable
-      // invariants are no_underestimate, the eps·N cap, and totalCount
-      // equality; exact counts and the top-3 cut are cross-engine.
-      import org.apache.spark.sql.expressions.Window
-      import graft.functions.Sketches
-      val events = t(s, dir, "events")
-      val daily = events
-        .groupBy(to_date(col("ts")).as("d"), col("event_type"))
-        .agg(Sketches.cmsAgg(col("user_id")).as("sk"))
-      val merged = daily.groupBy(col("event_type"))
-        .agg(Sketches.cmsUnion(col("sk")).as("sk"))
-      val cnt = events.groupBy(col("event_type"), col("user_id"))
-        .agg(count(lit(1)).as("exact_cnt"))
-      val w = Window.partitionBy(col("event_type"))
-        .orderBy(col("exact_cnt").desc, col("user_id"))
-      val top = cnt.withColumn("_rk", row_number().over(w))
-        .where(col("_rk") <= 3).drop("_rk")
-      val n = events.groupBy(col("event_type"))
-        .agg(count(lit(1)).as("_n_events"))
-      val est = Sketches.cmsEstimate(col("sk"), col("user_id"))
-      top.join(broadcast(merged), "event_type")
-        .join(broadcast(n), "event_type")
-        .select(col("event_type"), col("user_id"), col("exact_cnt"),
-          (est >= col("exact_cnt")).as("no_underestimate"),
-          (est <= col("exact_cnt") +
-            ceil(lit(0.005) * col("_n_events")).cast(LongType))
-            .as("within_eps_n"),
-          (Sketches.cmsTotal(col("sk")) === col("_n_events"))
-            .as("total_matches"))
-        .orderBy(col("event_type"), col("user_id"))
-    }),
-
-    "q_range_join" -> ((s, dir) => {
-      // binned range join: orders falling in the first 3 days of any week —
-      // equi-join on day bins + residual predicate, never a nested loop
-      // (see operators/RangeJoin)
-      // o_orderdate is TIMESTAMP_NTZ; session tz is UTC so the cast is exact
-      val orders = t(s, dir, "orders")
-        .select(col("o_orderkey"), col("o_orderdate"))
-        .withColumn("p_us", unix_micros(col("o_orderdate").cast("timestamp")))
-      val weeks = orders
-        .select(date_trunc("week", col("o_orderdate")).as("w_start")).distinct()
-        .withColumn("s_us", unix_micros(col("w_start").cast("timestamp")))
-        .withColumn("e_us",
-          unix_micros((col("w_start") + expr("INTERVAL 3 DAYS")).cast("timestamp")))
-      RangeJoin.binned(points = orders, ranges = weeks,
-        pointCol = "p_us", startCol = "s_us", endCol = "e_us",
-        binWidth = 86400000000L) // 1-day bins in µs
-        .select(col("o_orderkey"),
-          date_format(col("w_start"), "yyyy-MM-dd").as("week_start"))
-        .orderBy(col("o_orderkey"))
-    }),
-
-    "q_store_roundtrip" -> ((s, dir) => {
-      // keyed intermediate storage (§2.2/file_storage.py): save with meta
-      // sidecar, load back — the loaded frame must hash-match the source
-      val store = new graft.io.IntermediateStore(s, "/tmp/graft_store_rt")
-      store.save("verify_nation", t(s, dir, "nation"), stage = "verify")
-      val (back, meta) = store.load("verify_nation")
-      require(meta.exists(_.rows == back.count()), "meta sidecar row count")
-      back.orderBy(col("n_nationkey"))
-    }),
-
-    "q_jdbc_roundtrip" -> ((s, dir) => {
-      // exercises the §2.1/§2.2 JDBC source+sink (postgres_source.py /
-      // sqlite_loader.py) against the embedded file-backed Derby that ships
-      // with Spark — no sqlite-jdbc jar exists offline in this environment,
-      // and the adapters are engine-agnostic (url + dialect)
-      System.setProperty("derby.system.home", "/tmp/graft_derby")
-      new java.io.File("/tmp/graft_derby").mkdirs()
-      // jdbc:graftderby: = shutdown-on-close Derby shim (see
-      // [[graft.io.DerbySingleJvmDriver]]): releases the embedded engine's
-      // single-JVM db lock between Spark's driver-side (DDL/schema) and
-      // executor-side (rows) phases, so this gate also passes on a
-      // multi-process master. numPartitions=1 keeps row batches from two
-      // executors off the lock concurrently — a 5-row dimension roundtrip.
-      graft.io.DerbySingleJvmDriver.ensureDialect
-      val url = "jdbc:graftderby:/tmp/graft_derby/regiondb;create=true"
-      val jopts = Map(
-        "driver" -> "graft.io.DerbySingleJvmDriver",
-        "numPartitions" -> "1")
-      val region = t(s, dir, "region")
-      graft.io.Sinks.jdbc(region, url, "region_rt", mode = "overwrite",
-        options = jopts)
-      graft.io.Sources.jdbc(s, url, "region_rt", options = jopts)
-        .select(region.columns.map(col): _*)
-        .orderBy(col("r_regionkey"))
-    }),
-
-    "q_multi_sink" -> ((s, dir) => {
-      // §2.2 multi-destination load (pipeline_service multi-sink): ONE
-      // cached pass fans out to CSV + JSONL + parquet; every readback must
-      // agree with every other before the gate returns
-      val base = s"/tmp/graft_multisink/${Sql.sfTag(dir)}"
-      val cust = t(s, dir, "customer")
-      val result = graft.pipeline.Pipeline
-        .extract(sp => t(sp, dir, "customer"))
-        .load(df => graft.io.Sinks.csv(df, s"$base/csv"))
-        .load(df => graft.io.Sinks.jsonl(df, s"$base/jsonl"))
-        .load(df => graft.io.Sinks.parquet(df, s"$base/parquet"))
-        .run(s)
-      require(result.rowsLoaded == cust.count(), "multi-sink rowsLoaded")
-      val pq = s.read.parquet(s"$base/parquet")
-      val csvBack = graft.io.Sources.csv(s, s"$base/csv",
-        schema = Some(cust.schema))
-      val jlBack = graft.io.Sources.jsonl(s, s"$base/jsonl",
-        schema = Some(cust.schema))
-      require(csvBack.exceptAll(pq).isEmpty && pq.exceptAll(csvBack).isEmpty,
-        "csv sink drifted from parquet sink")
-      require(jlBack.exceptAll(pq).isEmpty && pq.exceptAll(jlBack).isEmpty,
-        "jsonl sink drifted from parquet sink")
-      pq.select(cust.columns.map(col): _*).orderBy(col("c_custkey"))
-    }),
-
-    "q_pipeline_resume" -> ((s, dir) => {
-      // §2.12 checkpointed pipeline + staged resume (pipeline.py's
-      // .pipeline_cache): the checkpointed run materializes each stage
-      // boundary; resumeFrom(1) restarts from the stage-0 parquet and must
-      // reproduce the full run exactly
-      val ck = s"/tmp/graft_ckpt/${Sql.sfTag(dir)}"
-      val stage0 = new TransformStage {
-        def name = "filter_high_value"
-        def apply(df: DataFrame): DataFrame =
-          df.filter(col("o_totalprice") > 150000.0)
-      }
-      val stage1 = new TransformStage {
-        def name = "derive_year"
-        def apply(df: DataFrame): DataFrame = df.select(
-          col("o_orderkey"), col("o_totalprice"),
-          date_format(col("o_orderdate"), "yyyy-MM-dd").as("order_date"),
-          year(col("o_orderdate")).as("order_year"))
-      }
-      val pipe = graft.pipeline.Pipeline
-        .extract(sp => t(sp, dir, "orders"))
-        .transform(stage0).transform(stage1)
-        .checkpointed(ck)
-      val full = pipe.run(s)
-      require(full.stageRowCounts.nonEmpty, "observe() stage counts present")
-      val resumed = pipe.resumeFrom(s, ck, fromStage = 1)
-      require(resumed.rowsLoaded == full.rowsLoaded,
-        s"resume row count ${resumed.rowsLoaded} != full ${full.rowsLoaded}")
-      resumed.df.orderBy(col("o_orderkey"))
-    }),
-
-    "q_pipeline_stats" -> ((s, dir) => {
-      // §2.10 TransformStage observe() stats, ORACLE-gated: the lazy fused
-      // pipeline's per-stage observe() row counts and the loaded total are
-      // plain filter cardinalities DuckDB re-derives — proving the metrics
-      // ride the real data flow (a pushdown THROUGH CollectMetrics or a
-      // double-count would break the hash)
-      import s.implicits._
-      val highValue = new graft.operators.TransformStage {
-        def name = "high_value"
-        def apply(df: DataFrame): DataFrame =
-          df.filter(col("o_totalprice") > 100000.0)
-      }
-      val urgent = new graft.operators.TransformStage {
-        def name = "urgent"
-        def apply(df: DataFrame): DataFrame =
-          df.filter(col("o_orderpriority") === "1-URGENT")
-      }
-      val r = graft.pipeline.Pipeline
-        .extract(sp => t(sp, dir, "orders"))
-        .transform(highValue).transform(urgent)
-        .run(s)
-      (r.stageRowCounts.toSeq.map { case (k, v) => (s"stage_$k", v) } :+
-        (("records_loaded", r.rowsLoaded)))
-        .toDF("metric", "n_rows").orderBy(col("metric"))
-    }),
-
-    "q_config_pipeline" -> ((s, dir) => {
-      // §2.12 config-driven pipeline (api/models.py:28-119 →
-      // pipeline_service.py:552-667): typed config → parquet source +
-      // aggregator stage + CSV destination, run through the factory
-      import graft.service.Config._
-      val cfg = PipelineConfig(
-        source = ParquetSource(s"$dir/orders.parquet"),
-        transformers = Seq(AggregatorConf(
-          groupBy = Seq("o_orderstatus"),
-          specs = Seq(
-            ("n_orders", "o_orderkey", "count"),
-            ("min_price", "o_totalprice", "min"),
-            ("max_price", "o_totalprice", "max")))),
-        destinations = Seq(
-          CsvDest(s"/tmp/graft_cfgpipe/${Sql.sfTag(dir)}/agg_csv")))
-      val res = graft.service.Config.build(cfg).run(s)
-      require(res.stats("success") == true, "config pipeline stats")
-      require(res.rowsLoaded > 0, "config pipeline loaded rows")
-      res.df.orderBy(col("o_orderstatus"))
-    }),
-
-    "q_incremental_scan" -> ((s, dir) => {
-      // §2.1 incremental-state API (adapters/base.py:66-91): the first scan
-      // sees batch 1; after batch 2 arrives the second scan must return
-      // ONLY the new file; the union reconstructs the whole table
-      val root = new java.io.File(s"/tmp/graft_incr/${Sql.sfTag(dir)}")
-      def rmrf(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rmrf))
-        f.delete(); ()
-      }
-      rmrf(root)
-      val scanDir = new java.io.File(root, "in"); scanDir.mkdirs()
-      val cust = t(s, dir, "customer")
-      def drop(batch: DataFrame, name: String): Unit = {
-        val stage = new java.io.File(root, s"stage_$name")
-        batch.coalesce(1).write.mode("overwrite").parquet(stage.getPath)
-        val part = stage.listFiles()
-          .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-          .getOrElse(sys.error(s"no part file in $stage"))
-        java.nio.file.Files.move(part.toPath,
-          new java.io.File(scanDir, s"$name.parquet").toPath)
-        ()
-      }
-      val even = cust.filter(col("c_custkey") % 2 === 0)
-      val odd = cust.filter(col("c_custkey") % 2 === 1)
-      drop(even, "batch1")
-      val (df1, st1) = graft.io.IncrementalState.scanNew(
-        s, scanDir.getPath, "parquet", graft.io.IncrementalState.empty)
-      drop(odd, "batch2")
-      val (df2, _) = graft.io.IncrementalState.scanNew(
-        s, scanDir.getPath, "parquet", st1)
-      require(df2.count() == odd.count(),
-        "second scan must return only the newly-arrived batch")
-      df1.unionByName(df2)
-        .select(cust.columns.map(col): _*).orderBy(col("c_custkey"))
-    }),
-
-    "q_json_auto" -> ((s, dir) => {
-      // §2.1 JSON format auto-detect (json_source.py:83-106): the same rows
-      // written as a single `[...]` array file and as JSONL must both route
-      // through jsonAuto's first-byte sniff to the right reader
-      val base = s"/tmp/graft_jsonauto/${Sql.sfTag(dir)}"
-      val nat = t(s, dir, "nation")
-      graft.io.Sinks.jsonArray(nat, s"$base/nation_array.json")
-      graft.io.Sinks.jsonl(nat, s"$base/nation_lines")
-      def cast(df: DataFrame): DataFrame =
-        nat.schema.fields.foldLeft(df) { (d, f) =>
-          d.withColumn(f.name, col(f.name).cast(f.dataType))
-        }.select(nat.columns.map(col): _*)
-      val arr = cast(graft.io.Sources.jsonAuto(s, s"$base/nation_array.json"))
-        .withColumn("src", lit("array"))
-      val lines = cast(graft.io.Sources.jsonAuto(s, s"$base/nation_lines"))
-        .withColumn("src", lit("lines"))
-      arr.unionByName(lines).orderBy(col("src"), col("n_nationkey"))
-    }),
-
-    "q_autotune" -> ((s, dir) => {
-      // §2.11 AutoTuner (auto_tuner.py:115-343): one synthetic run per
-      // batch size, all numbers derived from orders; the tuner consumes the
-      // EXACT values in the aux parquet, so DuckDB re-running the
-      // argmax + confidence + improvement formulas sees bit-identical input
-      import s.implicits._
-      val runs = t(s, dir, "orders")
-        .groupBy((substring(col("o_orderpriority"), 1, 1).cast(IntegerType)
-          * 100).as("batch_size"))
-        .agg(count(lit(1)).as("records"),
-          (graft.functions.Dec128.sumExact(col("o_totalprice"))
-            .cast(DoubleType) / 1000000.0).as("seconds"))
-      // the decimal-accumulated aggregation is deterministic and parquet
-      // preserves IEEE bits, so collecting the frame directly feeds the
-      // tuner the same values the oracle reads back from the aux dump
-      Aux.write(runs, s"/tmp/graft_oracle_aux/${Sql.sfTag(dir)}/autotune_runs")
-      val tuner = new graft.service.AutoTuner()
-      runs.collect().foreach { r =>
-          tuner.recordPerformance(tuner.Metrics("p",
-            r.getAs[Int]("batch_size"), r.getAs[Long]("records"),
-            r.getAs[Double]("seconds"), memoryMb = 64.0))
-        }
-      val rec = tuner.getRecommendations("p")
-      require(rec.hasRecommendations, "tuner must recommend")
-      Seq((rec.batchSize.get,
-        math.floor(rec.confidence * 1e6 + 0.5).toLong,
-        math.floor(rec.expectedImprovementPct * 100 + 0.5).toLong))
-        .toDF("batch_size", "confidence_x1e6", "improvement_x100")
-    }),
-
-    "q_query_metrics" -> ((s, dir) =>
-      // the full §2.6 endpoint shape through QueryService: filters + all
-      // metric fns + default first-metric-desc ordering + limit
-      graft.query.QueryService.query(t(s, dir, "lineitem"),
-        Seq(graft.query.Filter.Between("l_quantity", 5.0, 45.0)),
-        graft.query.AggregationSpec(
-          groupBy = Seq("l_linestatus"),
-          metrics = Seq(
-            graft.query.Metric("sum", "l_extendedprice", "total_price"),
-            graft.query.Metric("avg", "l_extendedprice", "avg_price"),
-            graft.query.Metric("min", "l_quantity", "min_qty"),
-            graft.query.Metric("max", "l_quantity", "max_qty"),
-            graft.query.Metric("count", "l_orderkey", "n_rows"),
-            graft.query.Metric("count_distinct", "l_suppkey", "n_supp")),
-          limit = Some(10)))),
-
-    // web-curation family: a deterministic messy URL derived from
-    // (source, doc_id) — mixed case, default/explicit ports, tracking
-    // params, fragments, trailing slashes — exercises every normalization
-    // rule, and the oracle replays derivation + normalization end-to-end
-    "q_url_normalize" -> ((s, dir) => {
-      import graft.functions.UrlFunctions
-      t(s, dir, "documents")
-        .withColumn("url", syntheticUrl)
-        .select(col("doc_id"),
-          UrlFunctions.normalizeUrl(col("url")).as("url_norm"),
-          UrlFunctions.urlHost(col("url")).as("host"),
-          UrlFunctions.registeredDomain(
-            UrlFunctions.urlHost(col("url"))).as("domain"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "q_domain_cap" -> ((s, dir) => {
-      import graft.functions.UrlFunctions
-      UrlFunctions.domainCapSample(
-        t(s, dir, "documents").withColumn("url", syntheticUrl),
-        "doc_id", "url", cap = 3)
-        .select(col("doc_id"), col("domain"),
-          col("domain_rank").cast(LongType).as("domain_rank"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // outlier capping: clamp value to its exact [p05, p95] percentiles —
-    // one stats job inlined as literals, one clamping scan; the oracle
-    // recomputes both bounds with quantile_cont and replays the clamp
-    "q_winsorize" -> ((s, dir) =>
-      Winsorizer(Seq("value"), 0.05, 0.95)(t(s, dir, "events"))
-        .select(col("event_id"),
-          when(col("value").isNull, lit(null).cast(LongType))
-            .otherwise(floor(col("value") * lit(10000.0) + lit(0.5))
-              .cast(LongType)).as("value_x10k"))
-        .orderBy(col("event_id"))),
-
-    // sorted distinct string aggregation per group (the report-cell
-    // "list the members" shape; sorted so both engines emit one canonical
-    // string)
-    "q_string_agg" -> ((s, dir) =>
-      t(s, dir, "documents")
-        .groupBy(col("lang"))
-        .agg(
-          array_join(array_sort(collect_set(col("source"))), ",")
-            .as("sources"),
-          countDistinct(col("source")).as("n_sources"))
-        .orderBy(col("lang"))),
-
-    // set algebra over query results: doc ids in the first half INTERSECT
-    // quality docs, then EXCEPT the flagged set — exercises
-    // intersect/except distinct semantics end-to-end
-    "q_setops" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val firstHalf = docs.filter(col("doc_id") < 250).select(col("doc_id"))
-      val longDocs = docs.filter(col("n_chars") >= 200).select(col("doc_id"))
-      val flagged = docs.filter(col("doc_id") % 10 === 0).select(col("doc_id"))
-      firstHalf.intersect(longDocs).except(flagged)
-        .orderBy(col("doc_id"))
-    }),
-
-    // hierarchical totals in ONE pass: rollup produces (flag,status),
-    // (flag), and grand-total rows — partial-agg friendly, no re-scan per
-    // level (the reference's dashboard would run three queries for this)
-    "q_rollup" -> ((s, dir) =>
-      t(s, dir, "lineitem")
-        .rollup(col("l_returnflag"), col("l_linestatus"))
-        .agg(count(lit(1)).as("n"),
-          Semantics.exactSum(col("l_quantity")).as("qty"))
-        .select(
-          coalesce(col("l_returnflag"), lit("ALL")).as("flag"),
-          coalesce(col("l_linestatus"), lit("ALL")).as("status"),
-          col("n"), col("qty"))
-        .orderBy(col("flag"), col("status"))),
-
-    "q_rate_spike" -> ((s, dir) =>
-      // hourly event-rate spikes per type: the z-test compares two exact
-      // integer products (no float mean/stddev anywhere), so the flagged
-      // set replays bit-for-bit
-      graft.operators.AnomalyDetector.rateSpikes(
-        t(s, dir, "events"), "event_type",
-        date_trunc("hour", col("ts")), zNum = 2L, zDen = 1L)
-        .select(col("event_type"),
-          date_format(col("bucket"), "yyyy-MM-dd HH:mm:ss").as("hour"),
-          col("n"))
-        .orderBy(col("event_type"), col("hour"))),
-
-    "q_sketch_bloom" -> ((s, dir) => {
-      // mergeable Bloom membership screen: per-priority shard sketches
-      // union into one filter (no rescan), probed by every order. The
-      // oracle checks the EXACT guarantee — zero false negatives on the
-      // 1-URGENT member set — plus the measured FPR staying under 5x the
-      // configured 1%
-      import graft.functions.Sketches
-      val orders = t(s, dir, "orders")
-      val members = orders.filter(col("o_orderpriority") === "1-URGENT")
-      // size the screen FROM THE DATA: the former fixed 100k capacity
-      // saturated at sf1 (~300k members) and the FPR bound silently died —
-      // "sized honestly" means one cheap count before building, exactly
-      // what a production load does
-      val cap = math.max(members.count(), 1L)
-      val shards = members
-        .groupBy(col("o_orderstatus"))
-        .agg(Sketches.bloomAgg(col("o_orderkey"), cap).as("sk"))
-      // the merged screen is ONE bounded row (a fitted model, like the
-      // iForest trees) — collect it and ship the bytes in the probe
-      // closure, deserialized once per executor rather than per row
-      val screen = shards.agg(Sketches.bloomUnion(col("sk"), cap).as("sk"))
-        .head().getAs[Array[Byte]]("sk")
-      val probed = orders
-        .select(col("o_orderkey"),
-          (col("o_orderpriority") === "1-URGENT").as("is_member"),
-          Sketches.bloomMightContain(screen, col("o_orderkey"))
-            .as("flagged"))
-      probed.agg(
-        sum(when(col("is_member"), 1L).otherwise(0L)).as("n_members"),
-        (sum(when(col("is_member") && !col("flagged"), 1L).otherwise(0L))
-          === 0L).as("no_false_negatives"),
-        (sum(when(!col("is_member") && col("flagged"), 1L).otherwise(0L))
-          .cast(DoubleType) <=
-          sum(when(!col("is_member"), 1L).otherwise(0L)).cast(DoubleType)
-            * 0.05).as("fpr_under_5pct"))
-    }),
-
-    "q_corr_matrix" -> ((s, dir) =>
-      // pairwise Pearson over the lineitem numerics: all moments in ONE
-      // decimal-exact aggregate pass, matrix assembled from the stats row
-      graft.operators.Correlation.matrix(t(s, dir, "lineitem"),
-        Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax"))
-        .orderBy(col("col_a"), col("col_b"))),
-
-    "q_scd2" -> ((s, dir) =>
-      // type-2 history from the event change log: one lead() window keyed
-      // on the entity; validity bounds out as formatted strings (null
-      // upper bound → ''), timestamps never cross an engine boundary raw
-      graft.operators.Scd2.fromChangeLog(
-        t(s, dir, "events")
-          .select(col("user_id"), col("event_id"), col("ts"), col("value")),
-        "user_id", "ts", tiebreak = Seq("event_id"))
-        .select(col("user_id"), col("event_id"),
-          date_format(col("valid_from"), "yyyy-MM-dd HH:mm:ss")
-            .as("valid_from"),
-          coalesce(date_format(col("valid_to"), "yyyy-MM-dd HH:mm:ss"),
-            lit("")).as("valid_to"),
-          col("is_current"))
-        .orderBy(col("user_id"), col("event_id"))),
-
-    "q_scd2_snapshot" -> ((s, dir) => {
-      // point-in-time reproduction: the dimension as a pipeline running at
-      // 2024-01-15 would have read it — exactly one version per key seen
-      // before the cut, none after
-      val hist = graft.operators.Scd2.fromChangeLog(
-        t(s, dir, "events")
-          .select(col("user_id"), col("event_id"), col("ts"), col("value")),
-        "user_id", "ts", tiebreak = Seq("event_id"))
-      graft.operators.Scd2.snapshotAt(hist,
-          lit("2024-01-15 00:00:00").cast(TimestampType))
-        .select(col("user_id"), col("event_id"),
-          floor(col("value") * lit(10000.0) + lit(0.5)).cast(LongType)
-            .as("value_x10k"))
-        .orderBy(col("user_id"))
-    }),
-
-    "q_expectations" -> ((s, dir) => {
-      // table-level contract check: 5 rules, ONE aggregate pass; counts
-      // are exact integers the oracle re-derives rule by rule
-      import graft.operators.Expectations.{Rule, check}
-      check(t(s, dir, "lineitem"), Seq(
-        Rule("qty_in_range", col("l_quantity").between(1, 50)),
-        Rule("discount_in_range", col("l_discount").between(0, 0.1)),
-        Rule("flag_valid", col("l_returnflag").isin("A", "N", "R")),
-        Rule("price_positive", col("l_extendedprice") > 0),
-        Rule("tax_nonneg", col("l_tax") >= 0)))
-        .orderBy(col("rule"))
-    }),
-
-    "q_zorder" -> ((s, dir) =>
-      // Morton curve value for 2-D data skipping: pure bit arithmetic,
-      // replayed bit-for-bit by the oracle (11 bits per dim here since the
-      // quantized keys are < 2048)
-      t(s, dir, "events").select(col("event_id"),
-        graft.core.ZOrder.zValue2(
-          col("user_id") % 2048, col("event_id") % 2048, bits = 11)
-          .as("zval"))
-        .orderBy(col("event_id"))),
-
-    "q_zorder3" -> ((s, dir) =>
-      // 3-D curve: bit i of column j lands at i*3+j
-      t(s, dir, "events").select(col("event_id"),
-        graft.core.ZOrder.zValueN(Seq(
-          col("user_id") % 1024, col("event_id") % 1024,
-          hour(col("ts")).cast(LongType) % 1024), bits = 10)
-          .as("zval"))
-        .orderBy(col("event_id"))),
-
-    "q_hilbert" -> ((s, dir) =>
-      // Hilbert curve position (the continuous space-filling curve —
-      // consecutive positions are grid-adjacent, unlike Morton's
-      // power-of-two teleports): the quadrant-rotation state machine as
-      // a codegen'd expression, replayed bit-for-bit by the oracle's
-      // recursive-CTE walk over the same 10-bit grid
-      t(s, dir, "events").select(col("event_id"),
-        graft.core.Hilbert.hValue2(
-          col("user_id") % 1024, col("event_id") % 1024, bits = 10)
-          .as("hval"))
-        .orderBy(col("event_id"))),
-
-    "q_incr_agg" -> ((s, dir) => {
-      // three-batch incremental fold with a parquet state roundtrip; the
-      // oracle is the ONE-SHOT global aggregate — proving the monoid law
-      // the nightly rollup depends on
-      val ev = t(s, dir, "events")
-      val base = "/tmp/graft_incragg/" + Sql.sfTag(dir)
-      graft.operators.IncrementalAgg.update(None,
-        ev.filter(col("event_id") % 3 === 0), Seq("event_type"), "value")
-        .write.mode("overwrite").parquet(base)
-      val s2 = graft.operators.IncrementalAgg.update(
-        Some(s.read.parquet(base)),
-        ev.filter(col("event_id") % 3 === 1), Seq("event_type"), "value")
-      graft.operators.IncrementalAgg.update(Some(s2),
-        ev.filter(col("event_id") % 3 === 2), Seq("event_type"), "value")
-        .select(col("event_type"), col("n"),
-          round(col("total").cast(DoubleType), 4).as("total"))
-        .orderBy(col("event_type"))
-    }),
-
-    "q_grouping_sets" -> ((s, dir) => {
-      // explicit GROUPING SETS surface (the asymmetric slices cube can't
-      // express alone): per-(flag,status), per-flag, and grand total only
-      t(s, dir, "lineitem").createOrReplaceTempView("_gs_lineitem")
-      s.sql(
-        """SELECT COALESCE(l_returnflag, 'ALL') AS flag,
-          |  COALESCE(l_linestatus, 'ALL') AS status,
-          |  COUNT(*) AS n,
-          |  CAST(SUM(CAST(l_quantity AS DECIMAL(38,10))) AS DOUBLE) AS qty
-          |FROM _gs_lineitem
-          |GROUP BY GROUPING SETS ((l_returnflag, l_linestatus),
-          |  (l_returnflag), ())
-          |ORDER BY flag, status""".stripMargin)
-    }),
-
-    "q_salted_agg" -> ((s, dir) => {
-      // skew tooling under oracle: the two-phase salted aggregation must
-      // equal the plain GROUP BY exactly — decimal partial sums make the
-      // re-aggregation associativity-proof
-      graft.core.Skew.saltedAggregate(t(s, dir, "lineitem"),
-        col("l_returnflag"), saltBuckets = 8,
-        sums = Seq("qty" -> col("l_quantity").cast(DecimalType(38, 10))))
-        .select(col("_key").as("l_returnflag"), col("n"),
-          col("qty").cast(DoubleType).as("qty"))
-        .orderBy(col("l_returnflag"))
-    }),
-
-    "q_cube" -> ((s, dir) =>
-      // cube = rollup + the per-status slices and the transposed margins;
-      // same null→'ALL' labeling as q_rollup
-      t(s, dir, "lineitem")
-        .cube(col("l_returnflag"), col("l_linestatus"))
-        .agg(count(lit(1)).as("n"),
-          Semantics.exactSum(col("l_quantity")).as("qty"))
-        .select(
-          coalesce(col("l_returnflag"), lit("ALL")).as("flag"),
-          coalesce(col("l_linestatus"), lit("ALL")).as("status"),
-          col("n"), col("qty"))
-        .orderBy(col("flag"), col("status"))),
-
-    "q_window_ntile" -> ((s, dir) => {
-      // distribution windows: ntile/percent_rank/cume_dist under a total
-      // (value, event_id) order per type; rank ratios are exact rationals
-      // so the x10k floor is engine-portable
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy(col("event_type"))
-        .orderBy(col("value"), col("event_id"))
-      t(s, dir, "events").filter(col("value").isNotNull)
-        .select(col("event_id"), col("event_type"),
-          ntile(4).over(w).as("quartile"),
-          floor(percent_rank().over(w) * lit(10000.0) + lit(0.5))
-            .cast(LongType).as("pctrank_x10k"),
-          floor(cume_dist().over(w) * lit(10000.0) + lit(0.5))
-            .cast(LongType).as("cumedist_x10k"))
-        .orderBy(col("event_id"))
-    }),
-
-    "q_join_full" -> ((s, dir) => {
-      // full-outer completeness: disjoint filters leave unmatched rows on
-      // BOTH sides; keys are unique per side so the output is deterministic
-      val cust = t(s, dir, "customer")
-        .filter(col("c_custkey") % 3 === 0)
-        .select(col("c_custkey"),
-          floor(col("c_acctbal") * lit(100.0) + lit(0.5)).cast(LongType)
-            .as("acctbal_x100"))
-      val ords = t(s, dir, "orders")
-        .filter(col("o_custkey") % 3 =!= 1)
-        .groupBy(col("o_custkey"))
-        .agg(count(lit(1)).as("n_orders"))
-      cust.join(ords, cust("c_custkey") === ords("o_custkey"), "full")
-        .select(
-          coalesce(col("c_custkey"), col("o_custkey")).as("custkey"),
-          col("acctbal_x100"),
-          coalesce(col("n_orders"), lit(0L)).as("n_orders"))
-        .orderBy(col("custkey"))
-    }),
-
-    "q_events_gapfill" -> ((s, dir) => {
-      // time-series resample with zero-fill: the dense per-type hourly
-      // grid dashboards need — a tiny (type × hour-span) generated frame
-      // left-joined to the real hourly aggregate; no window, no corpus
-      // self-join, grid size is span-bounded not corpus-bounded
-      val ev = t(s, dir, "events")
-      val hourly = ev.groupBy(col("event_type"),
-          date_trunc("hour", col("ts")).as("h"))
-        .agg(count(lit(1)).as("n"))
-      val bounds = ev.agg(
-        date_trunc("hour", min(col("ts"))).as("h0"),
-        date_trunc("hour", max(col("ts"))).as("h1"))
-      val grid = ev.select(col("event_type")).distinct()
-        .crossJoin(broadcast(bounds))
-        .select(col("event_type"),
-          explode(sequence(col("h0"), col("h1"),
-            expr("interval 1 hour"))).as("h"))
-      grid.join(hourly, Seq("event_type", "h"), "left")
-        .select(col("event_type"),
-          date_format(col("h"), "yyyy-MM-dd HH:mm:ss").as("hour"),
-          coalesce(col("n"), lit(0L)).as("n"))
-        .orderBy(col("event_type"), col("hour"))
-    }),
-
-    // argmax: the row identity attaining each group's max — max_by keyed
-    // by (value, event_id) so ties break deterministically cross-engine
-    "q_argmax" -> ((s, dir) =>
-      t(s, dir, "events").filter(col("value").isNotNull)
-        .groupBy(col("event_type"))
-        .agg(
-          max_by(col("event_id"), struct(col("value"), col("event_id")))
-            .as("top_event_id"),
-          floor(max(col("value")) * lit(10000.0) + lit(0.5))
-            .cast(LongType).as("max_value_x10k"))
-        .orderBy(col("event_type"))),
-
-    // heatmap backing: 2-D histogram (value decile-width bins × hour of
-    // day) in ONE groupBy — the density-plot aggregate at any scale
-    "q_histogram2d" -> ((s, dir) =>
-      t(s, dir, "events")
-        .filter(col("value").isNotNull)
-        .groupBy(
-          floor(col("value") / lit(10.0)).cast(LongType).as("value_bin"),
-          hour(col("ts")).cast(LongType).as("hour_bin"))
-        .agg(count(lit(1)).as("n"))
-        .orderBy(col("value_bin"), col("hour_bin"))),
-
-    // rare-label collapsing: categories below a count threshold become
-    // 'OTHER' (ML-prep cardinality control) — tiny per-category aggregate
-    // broadcast back, one relabel scan, no window
-    "q_rare_labels" -> ((s, dir) => {
-      val ev = t(s, dir, "events")
-      val keep = ev.groupBy(col("event_type"))
-        .agg(count(lit(1)).as("_n")).filter(col("_n") >= 2000)
-        .select(col("event_type"))
-      ev.join(broadcast(keep.withColumn("_keep", lit(true))),
-          Seq("event_type"), "left")
-        .withColumn("label",
-          when(col("_keep").isNotNull, col("event_type"))
-            .otherwise(lit("OTHER")))
-        .groupBy(col("label")).agg(count(lit(1)).as("n"))
-        .orderBy(col("label"))
-    }),
-
-    // weekly cohort retention: first-seen week per user × activity-week
-    // offset → distinct actives. Two aggregates + one user-keyed join —
-    // the standard retention-triangle shape, no window over the corpus
-    "q_cohort_retention" -> ((s, dir) => {
-      val ev = t(s, dir, "events")
-        .select(col("user_id"), to_date(col("ts")).as("d"))
-      val cohort = ev.groupBy(col("user_id")).agg(min(col("d")).as("c0"))
-      ev.join(cohort, Seq("user_id"))
-        .withColumn("cohort_week",
-          floor(datediff(col("c0"), lit("2024-01-01").cast(DateType))
-            / lit(7.0)).cast(LongType))
-        .withColumn("week_offset",
-          floor(datediff(col("d"), col("c0")) / lit(7.0)).cast(LongType))
-        .groupBy(col("cohort_week"), col("week_offset"))
-        .agg(countDistinct(col("user_id")).as("n_users"))
-        .orderBy(col("cohort_week"), col("week_offset"))
-    }),
-
-    // signup→purchase funnel: per-user first event times from ONE
-    // conditional aggregate, conversion = first purchase strictly after
-    // first signup (microsecond precision on both engines)
-    "q_funnel" -> ((s, dir) =>
-      t(s, dir, "events")
-        .groupBy(col("user_id"))
-        .agg(
-          min(when(col("event_type") === "signup", col("ts"))).as("s0"),
-          min(when(col("event_type") === "purchase", col("ts"))).as("p0"))
-        .agg(
-          count(lit(1)).as("n_users"),
-          count(col("s0")).as("n_signed"),
-          sum(when(col("p0") > col("s0"), 1L).otherwise(0L))
-            .as("n_converted"))
-        .select(col("n_users"), col("n_signed"), col("n_converted"),
-          floor(col("n_converted") * lit(10000.0) / col("n_signed")
-            + lit(0.5)).cast(LongType).as("conv_rate_x10k"))),
-
-    // per-group distribution report: exact p25/p50/p95 of value per event
-    // type — ONE groupBy aggregate (partial-agg friendly), the shape a
-    // per-slice latency/quality dashboard runs at any scale
-    "q_group_percentiles" -> ((s, dir) =>
-      t(s, dir, "events").groupBy(col("event_type"))
-        .agg(
-          floor(percentile(col("value"), lit(0.25)) * lit(10000.0) + lit(0.5))
-            .cast(LongType).as("p25_x10k"),
-          floor(percentile(col("value"), lit(0.5)) * lit(10000.0) + lit(0.5))
-            .cast(LongType).as("p50_x10k"),
-          floor(percentile(col("value"), lit(0.95)) * lit(10000.0) + lit(0.5))
-            .cast(LongType).as("p95_x10k"),
-          count(col("value")).as("n"))
-        .orderBy(col("event_type"))),
-
-    // partitioned-layout roundtrip: write parquet partitionBy(source),
-    // read the directory back, aggregate — exercises the partition-pruned
-    // layout every 100 TB corpus actually lives in (partition column is
-    // reconstructed from directory keys on read)
-    "q_partitioned_write" -> ((s, dir) => {
-      // not an oracle aux — the partitioned write IS the benched operator
-      val out = s"/tmp/graft_roundtrip/${Sql.sfTag(dir)}/part_docs"
-      t(s, dir, "documents")
-        .write.mode("overwrite").partitionBy("source").parquet(out)
-      s.read.parquet(out)
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("n_chars"))
-        .orderBy(col("source"))
-    }),
-
-    // equal-frequency discretization: quartile bucket per event — one
-    // bounds job, one comparison-sum projection; oracle recomputes the
-    // three quantile bounds and replays the bucket assignment
-    "q_quantile_bin" -> ((s, dir) =>
-      QuantileBinner("value", 4)(t(s, dir, "events"))
-        .select(col("event_id"), col("bin"))
-        .orderBy(col("event_id"))),
-
-    // group-mean imputation: nulls derived deterministically (event_id %
-    // 11), filled with the per-type exact decimal mean; oracle replays
-    // derivation, mean arithmetic, and the fill
-    "q_impute_group" -> ((s, dir) => {
-      val d = t(s, dir, "events").withColumn("value",
-        when(col("event_id") % 11 === 0, lit(null).cast(DoubleType))
-          .otherwise(col("value")))
-      GroupMeanImputer(Seq("value"), Seq("event_type"))(d)
-        .select(col("event_id"), col("event_type"),
-          floor(col("value") * lit(10000.0) + lit(0.5))
-            .cast(LongType).as("value_x10k"))
-        .orderBy(col("event_id"))
-    }),
-
-    "q_domain_stats" -> ((s, dir) => {
-      import graft.functions.UrlFunctions
-      UrlFunctions.domainStats(
-        t(s, dir, "documents").withColumn("url", syntheticUrl),
-        "url", "text")
-        .orderBy(col("n_docs").desc, col("domain"))
-    }),
-
-    "q_ivm_join" -> ((s, dir) => {
-      // incremental view maintenance of the orders⋈lineitem join: the
-      // base tables split from the fixture by independent deterministic
-      // key predicates, the view delta computed by the three-term delta
-      // rule (ΔA⋈B ∪ A⋈ΔB ∪ ΔA⋈Δ B) with broadcast deltas — never
-      // recomputing base⋈base
-      val o = t(s, dir, "orders")
-        .select(col("o_orderkey"), col("o_orderpriority"))
-      val l = t(s, dir, "lineitem")
-        .select(col("l_orderkey").as("o_orderkey"), col("l_linenumber"))
-      val delta = graft.operators.IncrementalJoin.appendDelta(
-        o.filter(col("o_orderkey") % 10 < 8),
-        o.filter(col("o_orderkey") % 10 >= 8),
-        l.filter(col("o_orderkey") % 7 < 5),
-        l.filter(col("o_orderkey") % 7 >= 5),
-        Seq("o_orderkey"))
-      delta.select(col("o_orderkey"), col("l_linenumber"),
-          col("o_orderpriority"))
-        .orderBy(col("o_orderkey"), col("l_linenumber"))
-    }),
-
-    "q_cdc_agg" -> ((s, dir) => {
-      // retractable aggregate maintenance: q_incr_agg proves the
-      // append-only fold; this proves the DELETE path — a CDC batch of
-      // inserts and retractions folded into the (key, n, total) state as
-      // one union + re-aggregate, never rescanning history. The oracle is
-      // the direct aggregate over the post-CDC multiset (base ∪ inserts
-      // ∖ deletes), proving count/sum really form a group under exact
-      // decimal arithmetic
-      val e = t(s, dir, "events")
-      val base = e.filter(col("event_id") % 10 < 8)
-      val ins = e.filter(col("event_id") % 10 >= 8)
-      val del = e.filter(col("event_id") % 10 < 8 &&
-        col("event_id") % 7 === 0)
-      val st = IncrementalAgg.update(None, base, Seq("event_type"), "value")
-      IncrementalAgg.updateCdc(st, ins, del, Seq("event_type"), "value")
-        .select(col("event_type"), col("n"),
-          round(col("total").cast(DoubleType), 4).as("total"))
-        .orderBy(col("event_type"))
-    }),
-
-    "q_ks_drift" -> ((s, dir) => {
-      // binning-free distribution drift: two-sample KS between click and
-      // purchase value distributions, integer-exact (BIGINT cumulative
-      // cross-products, e6 integral ratio). The engine's cumsum is
-      // shard-partitioned (approx-quantile bounds place shards; exactness
-      // never depends on them) — the oracle replays with one global
-      // window, which at its scale is fine
-      val e = t(s, dir, "events")
-      Audit.ksStatistic(
-        e.filter(col("event_type") === "click"),
-        e.filter(col("event_type") === "purchase"), "value")
-    }),
-
-    "q_rank_auc" -> ((s, dir) => {
-      // Mann–Whitney U with midrank ties, normalized to the AUC effect
-      // size: "how separable are click and purchase values" as one
-      // integer-exact number (doubled-U and e6 AUC — no float crosses
-      // engines). Shares the sharded-cumsum machinery with q_ks_drift
-      val e = t(s, dir, "events")
-      Audit.rankSumU(
-        e.filter(col("event_type") === "click"),
-        e.filter(col("event_type") === "purchase"), "value")
-    }),
-
-    "q_w1_drift" -> ((s, dir) => {
-      // earth-mover drift: W1 integrates the CDF gap the KS gate only
-      // sups — "how much mass moves how far" between click and purchase
-      // values, over the e6-quantized grid, all integer arithmetic
-      val e = t(s, dir, "events")
-      Audit.wasserstein1(
-        e.filter(col("event_type") === "click"),
-        e.filter(col("event_type") === "purchase"), "value")
-    }),
-
-    "q_next_event" -> ((s, dir) => {
-      // next-event-prediction training pairs: per user, the 3 preceding
-      // event types as a joined context string and the current type as
-      // target — one key-partitioned window with a bounded trailing
-      // frame, single shuffle, O(k) state per row
-      TrainingExamples.nextEventPairs(t(s, dir, "events"),
-        "user_id", "ts", "event_id", "event_type", contextLen = 3)
-        .orderBy(col("event_id"))
-    }),
-
-    "q_rolling_distinct_sketch" -> ((s, dir) => {
-      // rolling distinct from PERSISTED daily HLL sketches — the
-      // approximate maintenance path next to exact q_rolling_distinct:
-      // daily sketches are built once (KB per day), then each trailing-
-      // 7-day window is a sketch UNION, never a rescan of events. At
-      // 100 TB that's the whole point: the daily sketch table is the
-      // only thing the rolling report ever reads. Gate emits the exact
-      // counts (cross-engine) plus a 10% accuracy invariant on the
-      // estimate (lgK 12 ≈ 1.6% rsd)
-      val du = t(s, dir, "events")
-        .select(to_date(col("ts")).as("day"), col("user_id")).distinct()
-        .localCheckpoint()
-      val daily = graft.functions.Sketches.distinctSketches(
-        du, Seq("day"), "user_id")
-      val est = graft.functions.Sketches.rollingDistinctEstimate(
-        daily, "day", n = 7)
-      val days = du.select(col("day")).distinct()
-      val exact = du
-        .select(explode(sequence(col("day"), date_add(col("day"), 6)))
-          .as("day"), col("user_id"))
-        .join(broadcast(days), Seq("day"), "left_semi")
-        .groupBy(col("day"))
-        .agg(countDistinct(col("user_id")).as("n_users_7d"))
-      exact.join(est, Seq("day"))
-        .select(date_format(col("day"), "yyyy-MM-dd").as("day"),
-          col("n_users_7d"),
-          (abs(col("distinct_est") -
-            col("n_users_7d").cast(DoubleType)) <=
-            col("n_users_7d").cast(DoubleType) * 0.1).as("est_ok"))
-        .orderBy(col("day"))
-    }),
-
-    "q_cdc_agg_stream" -> ((s, dir) => {
-      // the streaming CDC fold run for real — batch twin of q_cdc_agg:
-      // the same insert/retraction multiset staged once, consumed as a
-      // file stream whose foreachBatch folds each micro-batch into the
-      // ping-pong parquet state (group-cardinality-sized I/O per batch;
-      // the corpus is never rescanned), then the gate reads the
-      // committed state. Oracle aggregates the post-CDC multiset
-      val e = t(s, dir, "events")
-      val changes = e.filter(col("event_id") % 10 >= 8)
-        .select(lit("insert").as("op"), col("event_type"), col("value"))
-        .unionByName(e.filter(col("event_id") % 10 < 8)
-          .select(lit("insert").as("op"), col("event_type"), col("value")))
-        .unionByName(e.filter(col("event_id") % 10 < 8 &&
-            col("event_id") % 7 === 0)
-          .select(lit("delete").as("op"), col("event_type"), col("value")))
-      // change stream session-cached ([[StageOnce]], its own name — the
-      // cdc_twin gate stages a DIFFERENT change set); the fold is
-      // insert/delete-commutative so batch count can't move the state.
-      // The ping-pong STATE is per-run mutable — appId-scoped scratch
-      // (sweep-covered, concurrent-run-safe), deleted fresh each run
-      val staged = StageOnce.dir(s, dir, "cdc_agg_changes") { p =>
-        changes.write.mode("overwrite").parquet(p)
-      }
-      val statePath = StageOnce.scratch(s, dir, "cdc_agg_state")
-      val hp = new org.apache.hadoop.fs.Path(statePath)
-      val fs = hp.getFileSystem(s.sessionState.newHadoopConf())
-      if (fs.exists(hp)) fs.delete(hp, true) // fresh fold per run
-      val schema = s.read.parquet(staged).schema
-      val stream = s.readStream.schema(schema).parquet(staged)
-      val q = graft.streaming.Streams.cdcAggregateStream(stream, "op",
-        Seq("event_type"), "value", statePath, statePartitions = 8)
-      try q.processAllAvailable() finally q.stop()
-      graft.streaming.Streams.readAggState(s, statePath)
-        .select(col("event_type"), col("n"),
-          round(col("total").cast(DoubleType), 4).as("total"))
-        .orderBy(col("event_type"))
-    }),
-
-    "q_bloom_join" -> ((s, dir) => {
-      // semi-join reduction: the lineitem probe side is pre-filtered by
-      // a Bloom filter built over urgent orders' keys (one aggregate;
-      // only filter bits reach the driver) BEFORE the shuffle join —
-      // at 100 TB that's the shuffle-bytes win. False positives are
-      // discarded by the join itself, so the result is EXACTLY the
-      // plain join, which is what the oracle runs
-      val big = t(s, dir, "lineitem")
-        .select(col("l_orderkey").as("okey"), col("l_returnflag"))
-      val small = t(s, dir, "orders")
-        .filter(col("o_orderpriority") === "1-URGENT")
-        .select(col("o_orderkey").as("okey"))
-      graft.core.SafeJoin.bloomFilteredJoin(big, small, "okey",
-          expectedKeys = 200000L, fpp = 0.01)
-        .groupBy(col("l_returnflag"))
-        .agg(count(lit(1)).as("n_rows"),
-          countDistinct(col("okey")).as("n_orders"))
-        .orderBy(col("l_returnflag"))
-    }),
-
-    "q_join_size_est" -> ((s, dir) => {
-      // pre-flight join cardinality: how many rows will the self-join of
-      // events on user_id produce? The exact answer costs the join's own
-      // key shuffle; the count-sketch inner product (CM'05) prices it
-      // from per-side key-count aggregates — and the sketches persist,
-      // so every candidate join between sketched tables is priced
-      // without touching data. Collisions only ADD mass: the estimate
-      // provably never underestimates; width controls closeness. Gate
-      // emits the exact count (cross-engine) + both estimator invariants
-      val e = t(s, dir, "events")
-      val est = graft.functions.Sketches.joinSizeEstimate(
-        graft.functions.Sketches.keyFreqSketch(e, "user_id"),
-        graft.functions.Sketches.keyFreqSketch(e, "user_id"))
-      val exact = e.filter(col("user_id").isNotNull)
-        .groupBy(col("user_id")).agg(count(lit(1)).as("_c"))
-        .agg(sum(col("_c") * col("_c")).cast(LongType).as("exact_pairs"))
-      est.crossJoin(exact).select(
-        col("exact_pairs"),
-        (col("est_pairs") >= col("exact_pairs")).as("est_ge_exact"),
-        (col("est_pairs") <= col("exact_pairs") +
-          col("exact_pairs") / 2).as("est_close"))
-    }),
-
-    "q_schema_drift" -> ((s, dir) => {
-      // ingest-batch schema drift: which columns appeared, vanished, or
-      // changed type between two batches — pure metadata comparison
-      // (schemas are bounded, no data scan); the oracle pins the report
-      // literally. Drift engineered: l_returnflag dropped, l_tax added,
-      // l_quantity double → string
-      val li = t(s, dir, "lineitem")
-      val oldBatch = li.select(col("l_orderkey"), col("l_quantity"),
-        col("l_returnflag"))
-      val newBatch = li.select(col("l_orderkey"),
-        col("l_quantity").cast(StringType).as("l_quantity"), col("l_tax"))
-      graft.operators.SchemaDrift.diff(oldBatch, newBatch)
-        .orderBy(col("column"))
-    }),
-
-    "q_hll_replay" -> ((s, dir) => {
-      // cross-engine-replayable HLL: the full register table (the sketch
-      // STATE, not just its estimate) hash-matches DuckDB's arithmetic
-      // replay of the md5 bucket/rho spec — cardinality sketching with an
-      // auditable, engine-portable artifact
-      graft.functions.ReplayableHll.registers(
-          t(s, dir, "events"), Seq("event_type"), "user_id", p = 8)
-        .orderBy(col("event_type"), col("bucket"))
-    }),
-
-    "q_hll_merge" -> ((s, dir) => {
-      // sketch algebra under oracle: registers(A ∪ B) must equal
-      // merge(registers(A), registers(B)) bucket-for-bucket (engine-checked
-      // flag), and the integer-exact harmonic accumulator s2 + empty-bucket
-      // count replay arithmetically in DuckDB; est accuracy is the
-      // engine-checked invariant (deterministic: same md5 state each run)
-      import graft.functions.ReplayableHll
-      val e = t(s, dir, "events")
-      val full = ReplayableHll.registers(e, Seq("event_type"), "user_id", 8)
-      val h1 = ReplayableHll.registers(
-        e.filter(col("event_id") % 2 === 0), Seq("event_type"), "user_id", 8)
-      val h2 = ReplayableHll.registers(
-        e.filter(col("event_id") % 2 =!= 0), Seq("event_type"), "user_id", 8)
-      val merged = ReplayableHll.merge(h1.unionByName(h2), Seq("event_type"))
-      val bad = full.select(col("event_type"), col("bucket"),
-          col("r").as("_rf"))
-        .join(merged.select(col("event_type"), col("bucket"),
-          col("r").as("_rm")), Seq("event_type", "bucket"), "full_outer")
-        .groupBy(col("event_type"))
-        .agg(sum(when(col("_rf") <=> col("_rm"), 0L).otherwise(1L))
-          .as("_bad"))
-      val est = ReplayableHll.estimate(full, Seq("event_type"), 8)
-      val exact = e.filter(col("user_id").isNotNull)
-        .groupBy(col("event_type"))
-        .agg(countDistinct(col("user_id")).as("n_exact"))
-      exact.join(est, Seq("event_type")).join(bad, Seq("event_type"))
-        .select(col("event_type"), col("n_exact"), col("zeros"),
-          col("s2").cast(StringType).as("s2"),
-          (abs(col("est") - col("n_exact")) <=
-            col("n_exact") * lit(0.25)).as("est_ok"),
-          (col("_bad") === 0L).as("merge_ok"))
-        .orderBy(col("event_type"))
-    }),
-
-    "q_hll_stream_twin" -> ((s, dir) => {
-      // the replayable-HLL register table maintained as STREAMING state:
-      // events staged as two files, consumed one file per micro-batch
-      // (maxFilesPerTrigger=1 forces a real cross-batch max-merge), the
-      // groupBy(bucket).max(rho) aggregate carried in the state store —
-      // and the final registers must STILL hash-match DuckDB's arithmetic
-      // replay. Bounded state by construction: <= 2^p rows per group.
-      // Staging path and sink name carry the session's applicationId so
-      // two concurrent runs at the same scale factor can't race on the
-      // stage directory (deleted at query start) or the memory sink
-      val e = t(s, dir, "events")
-        .select(col("event_id"), col("event_type"), col("user_id"))
-      val runTag = s.sparkContext.applicationId
-      val sink = s"hll_stream_twin_$runTag".replace('-', '_')
-      // staged at most ONCE per session ([[StageOnce]] — which also owns
-      // the appId path keying and the stale-sibling sweep this gate
-      // pioneered): bench retries and repeated verify passes in the same
-      // JVM reuse the files instead of re-running two write jobs
-      // the coalesce(1) per half bounds FILES, deliberately: with
-      // maxFilesPerTrigger=1 below, exactly-one-file-per-half is the
-      // designed two-micro-batch choreography (one cross-batch max-merge,
-      // not 2N of them); the halves are small and the write runs once per
-      // session, so the single task is not in the measured per-run path
-      val staged = StageOnce.dir(s, dir, "hll_events") { p =>
-        e.filter(col("event_id") % 2 === 0)
-          .coalesce(1).write.mode("append").parquet(p)
-        e.filter(col("event_id") % 2 =!= 0)
-          .coalesce(1).write.mode("append").parquet(p)
-      }
-      val schema = s.read.parquet(staged).schema
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(staged)
-      val regs = graft.functions.ReplayableHll.registers(
-        stream, Seq("event_type"), "user_id", p = 8)
-      graft.streaming.Streams.withStatePartitions(s, 8) {
-        val q = regs.writeStream
-          .outputMode(org.apache.spark.sql.streaming.OutputMode.Complete())
-          .format("memory").queryName(sink).start()
-        try q.processAllAvailable() finally q.stop()
-      }
-      s.table(sink).orderBy(col("event_type"), col("bucket"))
-    }),
-
-    "q_hll_rolling" -> ((s, dir) => {
-      // sliding-window distinct monitoring from per-day sketch STATE:
-      // registers built once per day, then bucket-wise max-merged over a
-      // trailing 3-day window — "distincts over the last N days" without
-      // re-scanning raw events. zeros/s2 replay arithmetically in DuckDB
-      // from the same md5 spec; est accuracy is an engine-checked
-      // invariant vs the exact window count (deterministic md5 state)
-      import graft.functions.ReplayableHll
-      val e = t(s, dir, "events").withColumn("day", to_date(col("ts")))
-      val daily = ReplayableHll.registers(e, Seq("day"), "user_id", p = 8)
-      val rolled = ReplayableHll.slidingMerge(daily, "day", Nil, window = 3)
-      val est = ReplayableHll.estimate(rolled, Seq("day"), p = 8)
-      // exact trailing-3-day distincts, the q_rolling_distinct shape:
-      // (day, user) reduction, contribution expansion, observed-days semi
-      val du = e.filter(col("user_id").isNotNull)
-        .select(col("day"), col("user_id")).distinct()
-      val days = du.select(col("day")).distinct()
-      val exact = du
-        .select(explode(sequence(col("day"), date_add(col("day"), 2)))
-          .as("day"), col("user_id"))
-        .join(broadcast(days), Seq("day"), "left_semi")
-        .groupBy(col("day"))
-        .agg(countDistinct(col("user_id")).as("n_exact"))
-      exact.join(est, Seq("day"))
-        .select(date_format(col("day"), "yyyy-MM-dd").as("day"),
-          col("n_exact"), col("zeros"),
-          col("s2").cast(StringType).as("s2"),
-          (abs(col("est") - col("n_exact")) <=
-            col("n_exact") * lit(0.25)).as("est_ok"))
-        .orderBy(col("day"))
-    }),
-
-    "q_hll_rolling_grouped" -> ((s, dir) => {
-      // the GROUPED sliding-merge path: per-(day, event_type) registers,
-      // trailing-3-day bucket-wise max within each event_type — "distinct
-      // users per type over the last N days" from sketch state. Target
-      // days are the GLOBALLY observed register days (slidingMerge's
-      // contract), so the exact side replicates that day universe; the
-      // accuracy invariant carries a small-group floor (p=8 linear
-      // counting is exact-ish but tiny per-type groups amplify relative
-      // error)
-      import graft.functions.ReplayableHll
-      val e = t(s, dir, "events").withColumn("day", to_date(col("ts")))
-      val daily = ReplayableHll.registers(
-        e, Seq("day", "event_type"), "user_id", p = 8)
-      val rolled = ReplayableHll.slidingMerge(
-        daily, "day", Seq("event_type"), window = 3)
-      val est = ReplayableHll.estimate(
-        rolled, Seq("day", "event_type"), p = 8)
-      val du = e.filter(col("user_id").isNotNull)
-        .select(col("day"), col("event_type"), col("user_id")).distinct()
-      val days = du.select(col("day")).distinct()
-      val exact = du
-        .select(explode(sequence(col("day"), date_add(col("day"), 2)))
-          .as("day"), col("event_type"), col("user_id"))
-        .join(broadcast(days), Seq("day"), "left_semi")
-        .groupBy(col("day"), col("event_type"))
-        .agg(countDistinct(col("user_id")).as("n_exact"))
-      exact.join(est, Seq("day", "event_type"))
-        .select(date_format(col("day"), "yyyy-MM-dd").as("day"),
-          col("event_type"), col("n_exact"), col("zeros"),
-          col("s2").cast(StringType).as("s2"),
-          (abs(col("est") - col("n_exact")) <=
-            greatest(col("n_exact") * lit(0.25), lit(16.0))).as("est_ok"))
-        .orderBy(col("day"), col("event_type"))
-    }),
-
-    "q_exact_kth" -> ((s, dir) => {
-      // exact order statistics WITHOUT a global sort: iterative histogram
-      // narrowing must return the exact rank-k values DuckDB finds by
-      // sorting. bins=4096 (vs the old 256) keeps driver state trivial
-      // (<=4096 rows/round) while one shared histogram usually lands every
-      // rank's bucket under the direct cutoff — rounds, i.e. scans, are
-      // the gate's whole cost; bins only route, the selected VALUES are
-      // rank-exact either way
-      val li = t(s, dir, "lineitem")
-      val n = li.filter(col("l_extendedprice").isNotNull).count()
-      val ks = Seq(1L, n / 4, n / 2, (3 * n) / 4, n).distinct.filter(_ >= 1)
-      graft.operators.ExactQuantile
-        .kthSmallestMulti(s, li, "l_extendedprice", ks,
-          bins = 4096, directCutoff = 5000L)
-        .orderBy(col("k"))
-    }),
-
-    "q_prefix_sum" -> ((s, dir) =>
-      // distributed global running total (two-level: per-shard window
-      // cumsum + driver-cumulated shard offsets) vs DuckDB's single-node
-      // SUM OVER; numShards=5 ≠ session 32 for boundary independence
-      graft.operators.GlobalIndex.prefixSum(
-          t(s, dir, "documents"), Seq(col("doc_id")), "n_chars",
-          numShards = 5)
-        .select(col("doc_id"),
-          col("running_total").cast(LongType).as("running_total"))
-        .orderBy(col("doc_id"))),
-
-    "q_seq_pack" -> ((s, dir) =>
-      // sequence packing: contiguous fill of 4096-char training packs in
-      // doc_id order — pack boundaries from the exclusive prefix sum,
-      // integer-exact `div`; the LLM pre-tokenization packing step with
-      // one range shuffle and no sequential state
-      graft.operators.GlobalIndex.packSequences(
-          t(s, dir, "documents"), Seq(col("doc_id")), "n_chars",
-          budget = 4096L, numShards = 5)
-        .select(col("doc_id"), col("pack_id"), col("pos_in_pack"))
-        .orderBy(col("doc_id"))),
-
-    "q_group_median" -> ((s, dir) => {
-      // exact per-group p50/p90 via simultaneous histogram narrowing (no
-      // per-group value maps — the OOM-free spelling of exact percentile);
-      // rational ranks replay integer-exact in DuckDB. The small cutoff
-      // forces real narrowing rounds at sf0.01+
-      import graft.operators.ExactQuantile
-      val e = t(s, dir, "events")
-      val med = ExactQuantile.quantilePerGroup(e, Seq("event_type"),
-        "value", 1, 2, bins = 32, directCutoff = 500L)
-        .withColumn("q", lit("p50"))
-      val p90 = ExactQuantile.quantilePerGroup(e, Seq("event_type"),
-        "value", 9, 10, bins = 32, directCutoff = 500L)
-        .withColumn("q", lit("p90"))
-      med.unionByName(p90)
-        .select(col("event_type"), col("q"), col("quantile"))
-        .orderBy(col("event_type"), col("q"))
-    }),
-
-    "q_group_median_wide" -> ((s, dir) => {
-      // WIDE-group exact median: one group per order (147k groups at
-      // sf0.1 — far beyond any driver-state budget) plus one engineered
-      // heavy group (every 97th order collapses to key -1, ~620 rows at
-      // sf0.01) so BOTH routes run: light groups through the distributed
-      // collect_list aggregate with zero driver state, heavy groups
-      // through histogram narrowing with driver state bounded by the
-      // heavy count only
-      import graft.operators.ExactQuantile
-      val li = t(s, dir, "lineitem")
-        .withColumn("gkey",
-          when(col("l_orderkey") % 97 === 0, lit(-1L))
-            .otherwise(col("l_orderkey")))
-      ExactQuantile.quantilePerGroup(li, Seq("gkey"), "l_extendedprice",
-          1, 2, bins = 32, directCutoff = 500L)
-        .orderBy(col("gkey"))
-    }),
-
-    "q_equidepth" -> ((s, dir) =>
-      // equi-depth bucketizer: exact rank-formula cut points (no sort, no
-      // approximation) + when-chain assignment; DuckDB re-derives the same
-      // cuts by row_number and counts distinct cuts below each value
-      graft.operators.ExactQuantile.equiDepthBucketize(
-          s, t(s, dir, "events"), "value", b = 8,
-          bins = 256, directCutoff = 5000L)
-        .select(col("event_id"), col("bin"))
-        .orderBy(col("event_id"))),
-
-    "q_global_index" -> ((s, dir) =>
-      // dense 0..N-1 numbering in a total order with NO unpartitioned
-      // window: range shuffle + per-shard row_number + driver-cumulated
-      // shard offsets; numShards=7 (not the session's 32) proves the
-      // index is boundary-independent
-      graft.operators.GlobalIndex.denseIndex(
-          t(s, dir, "documents"),
-          Seq(col("lang"), col("n_chars").desc, col("doc_id")),
-          numShards = 7)
-        .select(col("doc_id"), col("global_index"))
-        .orderBy(col("doc_id")))
-  )
-
   /** Deterministic messy URL from (source, doc_id) — the Spark twin of
     * [[SyntheticUrlSql]]; both sides must stay bit-identical. */
   private def syntheticUrl: Column = {
@@ -2937,114 +71,55 @@ object ExtraQueries {
       .stripMargin
   }
 
-  private val oracleSqlBase: Map[String, String] = Map(
-    "q_ivm_join" ->
-      """WITH ob AS (SELECT o_orderkey, o_orderpriority FROM orders
-        |  WHERE o_orderkey % 10 < 8),
-        |od AS (SELECT o_orderkey, o_orderpriority FROM orders
-        |  WHERE o_orderkey % 10 >= 8),
-        |lb AS (SELECT l_orderkey, l_linenumber FROM lineitem
-        |  WHERE l_orderkey % 7 < 5),
-        |ld AS (SELECT l_orderkey, l_linenumber FROM lineitem
-        |  WHERE l_orderkey % 7 >= 5)
-        |SELECT o_orderkey, l_linenumber, o_orderpriority FROM (
-        |  SELECT od.o_orderkey, lb.l_linenumber, od.o_orderpriority
-        |    FROM od JOIN lb ON od.o_orderkey = lb.l_orderkey
-        |  UNION ALL
-        |  SELECT ob.o_orderkey, ld.l_linenumber, ob.o_orderpriority
-        |    FROM ob JOIN ld ON ob.o_orderkey = ld.l_orderkey
-        |  UNION ALL
-        |  SELECT od.o_orderkey, ld.l_linenumber, od.o_orderpriority
-        |    FROM od JOIN ld ON od.o_orderkey = ld.l_orderkey)
-        |ORDER BY o_orderkey, l_linenumber""".stripMargin,
+  /** Oracle of q_hll_replay and q_hll_stream_twin: the streaming register
+    * table must satisfy the SAME arithmetic replay as the batch one — one
+    * oracle definition, two execution paths. Arithmetic replay of the md5
+    * HLL spec: bucket = first 2 hex chars (p=8), rho = 4*(leading zero hex
+    * chars of the 16-char tail) + lz(first non-zero char) + 1, capped at
+    * 64; register = max rho. */
+  private val HllRegistersSql: String =
+    """WITH h AS (SELECT event_type, md5(CAST(user_id AS VARCHAR)) AS h
+      |  FROM events WHERE user_id IS NOT NULL),
+      |b AS (SELECT event_type, substr(h,1,2) AS bucket,
+      |    substr(h,3,16) AS w FROM h),
+      |r0 AS (SELECT event_type, bucket,
+      |    LEAST(4*length(regexp_extract(w,'^(0*)',1)) +
+      |      CASE substr(w, length(regexp_extract(w,'^(0*)',1))+1, 1)
+      |        WHEN '1' THEN 3 WHEN '2' THEN 2 WHEN '3' THEN 2
+      |        WHEN '4' THEN 1 WHEN '5' THEN 1 WHEN '6' THEN 1
+      |        WHEN '7' THEN 1 ELSE 0 END + 1, 64) AS rho
+      |  FROM b)
+      |SELECT event_type, bucket, CAST(MAX(rho) AS BIGINT) AS r
+      |FROM r0 GROUP BY 1, 2 ORDER BY event_type, bucket""".stripMargin
 
-    "q_cdc_agg" ->
-      s"""SELECT event_type, count(value) AS n, ${esum("value")} AS total
-         |FROM events
-         |WHERE NOT (event_id % 10 < 8 AND event_id % 7 = 0)
-         |GROUP BY 1 ORDER BY 1""".stripMargin,
+  val gates: Seq[Gate] = Seq(
 
-    "q_ks_drift" ->
-      """WITH u AS (SELECT value AS v,
-        |    CASE WHEN event_type = 'click' THEN 1 ELSE 2 END AS s
-        |  FROM events
-        |  WHERE event_type IN ('click', 'purchase') AND value IS NOT NULL),
-        |n AS (SELECT CAST(sum(CASE WHEN s = 1 THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n1,
-        |  CAST(sum(CASE WHEN s = 2 THEN 1 ELSE 0 END) AS BIGINT) AS n2
-        |  FROM u),
-        |c AS (SELECT v,
-        |    sum(CASE WHEN s = 1 THEN 1 ELSE 0 END) AS c1,
-        |    sum(CASE WHEN s = 2 THEN 1 ELSE 0 END) AS c2
-        |  FROM u GROUP BY v),
-        |m AS (SELECT sum(c1) OVER (ORDER BY v) AS a1,
-        |    sum(c2) OVER (ORDER BY v) AS a2 FROM c),
-        |k AS (SELECT max(abs(a1 * n.n2 - a2 * n.n1)) AS ks_num
-        |  FROM m, n)
-        |SELECT n.n1, n.n2, CAST(k.ks_num AS BIGINT) AS ks_num,
-        |  CAST((k.ks_num * 1000000) // (n.n1 * n.n2) AS BIGINT) AS ks_e6
-        |FROM n, k""".stripMargin,
+    Gate("q_udaf_geomean", (s, dir) => {
+      graft.functions.CustomAggregators.registerBuiltins(s)
+      t(s, dir, "lineitem").createOrReplaceTempView("li_udaf")
+      s.sql("""SELECT l_returnflag,
+               geometric_mean(l_extendedprice) AS geo_price,
+               value_range(l_quantity) AS qty_range
+               FROM li_udaf GROUP BY l_returnflag""")
+        .withColumn("geo_price", Semantics.safeRound(col("geo_price"), 2))
+        .orderBy(col("l_returnflag"))
+    },
+      s"""SELECT l_returnflag,
+         |  ${sround("EXP(AVG(LN(l_extendedprice)))", 2)} AS geo_price,
+         |  MAX(l_quantity) - MIN(l_quantity) AS qty_range
+         |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
 
-    "q_rank_auc" ->
-      """WITH u AS (SELECT value AS v,
-        |    CASE WHEN event_type = 'click' THEN 1 ELSE 2 END AS s
-        |  FROM events
-        |  WHERE event_type IN ('click', 'purchase') AND value IS NOT NULL),
-        |n AS (SELECT CAST(sum(CASE WHEN s = 1 THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n1,
-        |  CAST(sum(CASE WHEN s = 2 THEN 1 ELSE 0 END) AS BIGINT) AS n2
-        |  FROM u),
-        |c AS (SELECT v,
-        |    sum(CASE WHEN s = 1 THEN 1 ELSE 0 END) AS c1,
-        |    sum(CASE WHEN s = 2 THEN 1 ELSE 0 END) AS c2
-        |  FROM u GROUP BY v),
-        |m AS (SELECT c1, c2, sum(c1 + c2) OVER (ORDER BY v) AS a FROM c),
-        |r AS (SELECT sum(c1 * (2 * (a - c1 - c2) + (c1 + c2) + 1))
-        |    AS r1x2 FROM m)
-        |SELECT n.n1, n.n2,
-        |  CAST(r.r1x2 - n.n1 * (n.n1 + 1) AS BIGINT) AS u1_x2,
-        |  CAST(((r.r1x2 - n.n1 * (n.n1 + 1)) * 1000000)
-        |       // (2 * n.n1 * n.n2) AS BIGINT) AS auc_e6
-        |FROM n, r""".stripMargin,
-
-    "q_w1_drift" ->
-      """WITH u AS (SELECT CAST(floor(value * 1000000) AS BIGINT) AS v,
-        |    CASE WHEN event_type = 'click' THEN 1 ELSE 2 END AS s
-        |  FROM events
-        |  WHERE event_type IN ('click', 'purchase') AND value IS NOT NULL),
-        |n AS (SELECT CAST(sum(CASE WHEN s = 1 THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n1,
-        |  CAST(sum(CASE WHEN s = 2 THEN 1 ELSE 0 END) AS BIGINT) AS n2
-        |  FROM u),
-        |c AS (SELECT v,
-        |    sum(CASE WHEN s = 1 THEN 1 ELSE 0 END) AS c1,
-        |    sum(CASE WHEN s = 2 THEN 1 ELSE 0 END) AS c2
-        |  FROM u GROUP BY v),
-        |m AS (SELECT v, sum(c1) OVER (ORDER BY v) AS a1,
-        |    sum(c2) OVER (ORDER BY v) AS a2,
-        |    lead(v) OVER (ORDER BY v) AS nv FROM c),
-        |w AS (SELECT sum(abs(a1 * n.n2 - a2 * n.n1) * (nv - v)) AS num
-        |  FROM m, n WHERE nv IS NOT NULL)
-        |SELECT n.n1, n.n2,
-        |  CAST((w.num * 1000000) // (n.n1 * n.n2 * 1000000) AS BIGINT)
-        |    AS w1_e6
-        |FROM n, w""".stripMargin,
-
-    "q_next_event" ->
-      """WITH p AS (SELECT event_id, user_id,
-        |    string_agg(event_type, '|') OVER (PARTITION BY user_id
-        |      ORDER BY ts, event_id
-        |      ROWS BETWEEN 3 PRECEDING AND 1 PRECEDING) AS context,
-        |    CAST(count(event_type) OVER (PARTITION BY user_id
-        |      ORDER BY ts, event_id
-        |      ROWS BETWEEN 3 PRECEDING AND 1 PRECEDING) AS BIGINT)
-        |      AS context_len,
-        |    event_type AS target
-        |  FROM events)
-        |SELECT event_id, user_id, context, context_len, target FROM p
-        |WHERE context_len > 0 ORDER BY event_id""".stripMargin,
-
-    "q_wma" ->
+    Gate("q_wma", (s, dir) => {
+      val hourly = t(s, dir, "events")
+        .groupBy(col("event_type"), date_trunc("hour", col("ts")).as("bucket"))
+        .agg(count(lit(1)).as("n"))
+      graft.operators.TimeSeries.weightedMovingSum(
+        hourly, "event_type", "bucket", "n", Seq(4L, 2L, 1L))
+        .select(col("event_type"),
+          date_format(col("bucket"), "yyyy-MM-dd HH:mm:ss").as("hour"),
+          col("n"), col("wsum"), col("wmass"))
+        .orderBy(col("event_type"), col("hour"))
+    },
       """WITH h AS (SELECT event_type, date_trunc('hour', ts) AS bucket,
         |    count(*) AS n FROM events GROUP BY 1, 2),
         |l AS (SELECT event_type, bucket, n,
@@ -3055,9 +130,25 @@ object ExtraQueries {
         |  4 * n + 2 * COALESCE(l1, 0) + 1 * COALESCE(l2, 0) AS wsum,
         |  4 + CASE WHEN l1 IS NULL THEN 0 ELSE 2 END
         |    + CASE WHEN l2 IS NULL THEN 0 ELSE 1 END AS wmass
-        |FROM l ORDER BY event_type, hour""".stripMargin,
+        |FROM l ORDER BY event_type, hour""".stripMargin),
 
-    "q_robust_scale" ->
+    Gate("q_robust_scale", (s, dir) => {
+      // heavy-tail-safe normalization: (v − median)/IQR per event type.
+      // The per-group quartile bounds are single-sourced through the aux
+      // (the rfm_bounds treatment): Spark percentile and DuckDB
+      // quantile_cont both interpolate on doubles, and a last-ulp
+      // disagreement in a quartile can flip a rounded r cell at a
+      // safeRound boundary
+      val e = t(s, dir, "events")
+      Aux.write(
+        GroupNormalizer.robustStats(e, "event_type", "value")
+          .select(col("event_type"), col("_rm").as("med"),
+            col("_riqr").as("iqr")),
+        s"/tmp/graft_oracle_aux/${Sql.sfTag(dir)}/rs_bounds")
+      GroupNormalizer.robustScale(e, "event_type", "value")
+        .select(col("event_id"), col("event_type"), col("r"))
+        .orderBy(col("event_id"))
+    },
       s"""WITH st AS (SELECT event_type, med, iqr
          |  FROM read_parquet('/tmp/graft_oracle_aux/{SF}/rs_bounds/*.parquet'))
          |SELECT e.event_id, e.event_type,
@@ -3066,16 +157,67 @@ object ExtraQueries {
          |       ELSE ${Sql.sround("(e.value - st.med) / st.iqr")}
          |  END AS r
          |FROM events e JOIN st USING (event_type)
-         |ORDER BY e.event_id""".stripMargin,
+         |ORDER BY e.event_id""".stripMargin),
 
-    "q_rest_query" ->
+    Gate("q_rest_query", (s, dir) => {
+      // the REST envelope proven by oracle: a live loopback HttpFacade
+      // serves the reference's documented dashboard-query example, the
+      // JSON response parses back into rows, and DuckDB recomputes the
+      // same aggregation — HTTP routing, filter/agg parsing, and JSON
+      // number round-tripping all sit inside the hash
+      import graft.service.{Facade, HttpFacade, MiniJson}
+      val http = new HttpFacade(Facade.Tables(Tables.table(s, dir, _)))
+      val port = http.start()
+      val rows = try {
+        val conn = new java.net.URL(
+          s"http://127.0.0.1:$port/api/analytics/dashboard/query")
+          .openConnection().asInstanceOf[java.net.HttpURLConnection]
+        conn.setRequestMethod("POST")
+        conn.setDoOutput(true)
+        conn.getOutputStream.write(
+          """{"table": "orders",
+             "filters": [
+               {"column": "o_orderstatus", "operator": "in", "value": ["O", "F"]},
+               {"column": "o_orderdate", "operator": "between",
+                "value": ["1995-01-01", "1997-12-31"]}],
+             "aggregation": {
+               "group_by": ["o_orderpriority"],
+               "metrics": [{"column": "o_orderkey", "agg": "count", "alias": "n_orders"}],
+               "limit": 20}}""".getBytes("UTF-8"))
+        require(conn.getResponseCode == 200, s"HTTP ${conn.getResponseCode}")
+        val env = MiniJson.parse(new String(
+          conn.getInputStream.readAllBytes(), "UTF-8"))
+          .asInstanceOf[Map[String, Any]]
+        env("data").asInstanceOf[List[Any]]
+          .map(_.asInstanceOf[Map[String, Any]])
+          .map(m => (m("o_orderpriority").asInstanceOf[String],
+            m("n_orders").asInstanceOf[Long]))
+      } finally http.stop()
+      import s.implicits._
+      rows.toDF("o_orderpriority", "n_orders")
+        .orderBy(col("n_orders").desc, col("o_orderpriority").asc)
+    },
       """SELECT o_orderpriority, COUNT(*) AS n_orders FROM orders
         |WHERE o_orderstatus IN ('O','F')
         |  AND o_orderdate BETWEEN '1995-01-01' AND '1997-12-31'
         |GROUP BY o_orderpriority
-        |ORDER BY n_orders DESC, o_orderpriority ASC LIMIT 20""".stripMargin,
+        |ORDER BY n_orders DESC, o_orderpriority ASC LIMIT 20""".stripMargin),
 
-    "q_medallion_paths" ->
+    Gate("q_medallion_paths", (s, dir) => {
+      // the service's medallion path generator run distributed over part
+      // names (spaces, mixed case) — slugify + the gold/quarantine layout
+      // replayed by the oracle's regex chain
+      import s.implicits._
+      t(s, dir, "part")
+        .select(col("p_partkey"), col("p_name")).as[(Long, String)]
+        .map { case (k, n) =>
+          (k, graft.service.Paths.slugify(n),
+            graft.service.Paths.goldBi("Acme Corp", n),
+            graft.service.Paths.quarantine("Acme Corp", n))
+        }
+        .toDF("p_partkey", "slug", "gold_bi", "quarantine")
+        .orderBy(col("p_partkey"))
+    },
       """WITH sl AS (SELECT p_partkey,
         |    trim(regexp_replace(regexp_replace(regexp_replace(
         |      lower(p_name), '[_ \t\n\r\f]+', '-', 'g'),
@@ -3085,18 +227,2143 @@ object ExtraQueries {
         |  'acme-corp/gold/bi/' || slug || '/' || slug || '.parquet'
         |    AS gold_bi,
         |  'acme-corp/quarantine/' || slug || '_anomalies.csv' AS quarantine
-        |FROM sl ORDER BY p_partkey""".stripMargin,
+        |FROM sl ORDER BY p_partkey""".stripMargin),
 
-    "q_interval_join_twin" ->
+    Gate("q_interval_join_twin", (s, dir) => {
+      // the stream-stream interval join run for real (two file streams,
+      // watermarks both sides, append-mode memory sink) vs a plain SQL
+      // range-join replay: purchases enriched with same-user clicks
+      // within ±10 minutes
+      // both stream inputs staged in ONE job (single events scan, one
+      // staged parquet dir holding both types); each side is a filtered
+      // file stream over the same staged path, so the twin pays one
+      // staging write + one stream start pair instead of two writes.
+      // Session-cached ([[StageOnce]]) and written UNCONSTRAINED — the
+      // file source takes every available file into micro-batch 0, so
+      // the single-data-batch semantics hold at any file count and no
+      // single task ever rewrites the whole slice
+      // user_id%3 sample (same trim as the outer twin): the join
+      // semantics are user-local, so a third of the users proves the
+      // same thing at a third of the join state and output
+      val staged = StageOnce.dir(s, dir, "ij_both") { p =>
+        t(s, dir, "events")
+          .filter(col("event_type").isin("purchase", "click"))
+          .filter(col("user_id") % 3 === 0)
+          .select(col("event_type"), col("event_id"), col("user_id"),
+            col("ts"))
+          .write.mode("overwrite").parquet(p)
+      }
+      val schema = s.read.parquet(staged).schema
+      def side(tpe: String) =
+        s.readStream.schema(schema).parquet(staged)
+          .filter(col("event_type") === tpe)
+          .select(col("event_id"), col("user_id"), col("ts"))
+      val joined = graft.streaming.Streams.intervalJoin(
+        side("purchase"), side("click"),
+        Seq("user_id"), "ts", "ts", watermark = "10 minutes")
+      // 4 state partitions: the twin proves semantics, not throughput —
+      // state-store instances dominate its wall time at gate scale
+      graft.streaming.Streams.withStatePartitions(s, 4) {
+        val q = joined.writeStream
+          .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
+          .format("memory").queryName("ij_twin").start()
+        try q.processAllAvailable() finally q.stop()
+      }
+      s.table("ij_twin")
+        .select(col("event_id").as("purchase_id"),
+          col("event_id_r").as("click_id"))
+        .orderBy(col("purchase_id"), col("click_id"))
+    },
       """SELECT p.event_id AS purchase_id, c.event_id AS click_id
         |FROM events p JOIN events c ON p.user_id = c.user_id
         |WHERE p.event_type = 'purchase' AND c.event_type = 'click'
         |  AND p.user_id % 3 = 0
         |  AND epoch_us(c.ts) >= epoch_us(p.ts) - 600000000
         |  AND epoch_us(c.ts) <= epoch_us(p.ts) + 600000000
-        |ORDER BY purchase_id, click_id""".stripMargin,
+        |ORDER BY purchase_id, click_id""".stripMargin),
 
-    "q_golden_records" ->
+    Gate("q_session_window_twin", (s, dir) => {
+      // Spark's NATIVE session_window aggregation run as a real stream
+      // (merging event-time sessions in the state store) vs the
+      // gaps-and-islands batch replay: a session extends while the next
+      // event lands strictly inside [last, last + gap), closes at ≥ gap
+      // — and only sessions the final watermark has closed are emitted
+      // (append mode), which the oracle replays arithmetically
+      // session-cached stage ([[StageOnce]]), written UNCONSTRAINED: the
+      // file source takes all files into one micro-batch regardless of
+      // count, and the old per-run coalesce(1) rewrite of the FULL events
+      // table was this gate's dominant cost at sf1 (a single serial task)
+      val staged = StageOnce.dir(s, dir, "sw_events") { p =>
+        // rebalanced: the file-stream batch parallelizes BY FILE — a
+        // 3-file stage pins the session_window partial agg to 3 tasks
+        graft.core.Rebalance.computeDense(t(s, dir, "events")
+            .select(col("event_id"), col("user_id"), col("ts")))
+          .write.mode("overwrite").parquet(p)
+      }
+      val schema = s.read.parquet(staged).schema
+      val agg = s.readStream.schema(schema).parquet(staged)
+        .withWatermark("ts", "0 seconds")
+        .groupBy(session_window(col("ts"), "30 minutes").as("w"),
+          col("user_id"))
+        .agg(count(lit(1)).as("n"))
+        .select(col("user_id"),
+          date_format(col("w.start"), "yyyy-MM-dd HH:mm:ss")
+            .as("session_start"), col("n"))
+      graft.streaming.Streams.withStatePartitions(s, 8) {
+        val q = agg.writeStream
+          .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
+          .format("memory").queryName("sw_twin").start()
+        try q.processAllAvailable() finally q.stop()
+      }
+      s.table("sw_twin").orderBy(col("user_id"), col("session_start"))
+    },
+      // gaps-and-islands + the emission cut: sessions whose end (last
+      // event + gap) the final watermark (global max ts) passed
+      """WITH e AS (SELECT user_id, ts FROM events),
+        |wmf AS (SELECT max(ts) AS m FROM e),
+        |s AS (SELECT user_id, ts,
+        |    CASE WHEN LAG(ts) OVER w IS NULL
+        |         OR ts - LAG(ts) OVER w >= INTERVAL 30 MINUTE
+        |      THEN 1 ELSE 0 END AS brk
+        |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts)),
+        |g AS (SELECT user_id, ts,
+        |    SUM(brk) OVER (PARTITION BY user_id ORDER BY ts
+        |      ROWS UNBOUNDED PRECEDING) AS sid
+        |  FROM s),
+        |agg AS (SELECT user_id, sid, min(ts) AS session_start,
+        |    max(ts) AS last_ts, count(*) AS n
+        |  FROM g GROUP BY 1, 2)
+        |SELECT user_id,
+        |  strftime(session_start, '%Y-%m-%d %H:%M:%S') AS session_start,
+        |  CAST(n AS BIGINT) AS n
+        |FROM agg, wmf
+        |WHERE last_ts + INTERVAL 30 MINUTE < wmf.m
+        |ORDER BY user_id, session_start""".stripMargin),
+
+    Gate("q_stream_static_join", (s, dir) => {
+      // stream-static enrichment — the canonical dimension join on a
+      // stream: the static side is broadcast and joined per micro-batch
+      // with NO stream state at all (nothing to watermark, nothing to
+      // evict), which is why it is the 100 TB-safe way to decorate a
+      // firehose with dimension attributes. The oracle runs the plain
+      // batch join
+      import s.implicits._
+      // session-cached stage ([[StageOnce]]), unconstrained write — the
+      // stream-static join is stateless per micro-batch, so file count
+      // (hence batch count) cannot change the Complete-mode result
+      val staged = StageOnce.dir(s, dir, "ss_events") { p =>
+        t(s, dir, "events").select(col("event_id"), col("ts"),
+            col("event_type"), col("value"))
+          .write.mode("overwrite").parquet(p)
+      }
+      val dim = Seq(("click", 1L), ("view", 2L), ("purchase", 5L),
+        ("signup", 10L), ("logout", 0L)).toDF("event_type", "weight")
+      val schema = s.read.parquet(staged).schema
+      val agg = s.readStream.schema(schema).parquet(staged)
+        .join(broadcast(dim), Seq("event_type"))
+        .groupBy(col("event_type"), col("weight"))
+        .agg(count(lit(1)).as("n"))
+      graft.streaming.Streams.withStatePartitions(s, 8) {
+        val q = agg.writeStream
+          .outputMode(org.apache.spark.sql.streaming.OutputMode.Complete())
+          .format("memory").queryName("ss_join").start()
+        try q.processAllAvailable() finally q.stop()
+      }
+      s.table("ss_join")
+        .select(col("event_type"), col("weight"),
+          (col("n") * col("weight")).as("weighted"))
+        .orderBy(col("event_type"))
+    },
+      // the batch twin of the per-micro-batch broadcast join
+      """WITH dim(event_type, weight) AS (VALUES
+        |  ('click', 1), ('view', 2), ('purchase', 5),
+        |  ('signup', 10), ('logout', 0))
+        |SELECT e.event_type, CAST(dim.weight AS BIGINT) AS weight,
+        |  CAST(count(*) * dim.weight AS BIGINT) AS weighted
+        |FROM events e JOIN dim USING (event_type)
+        |GROUP BY e.event_type, dim.weight ORDER BY 1""".stripMargin),
+
+    Gate("q_watermark_late_drop", (s, dir) => {
+      // watermark semantics run FOR REAL across two micro-batches: batch
+      // 1 pushes the watermark to its max event time (0 s delay), batch 2
+      // carries deliberately-late rows (windows already closed — the
+      // engine must DROP them) plus fresh rows that advance the watermark
+      // and finalize more windows. The oracle replays the exact
+      // drop/emit arithmetic: counted = batch 1 plus batch-2 rows whose
+      // window was still open; emitted = windows the final watermark
+      // closed. Hour-aligned window ends vs mid-hour watermarks keep
+      // every comparison boundary-unambiguous
+      val ev = t(s, dir, "events").select(col("event_id"), col("ts"),
+        col("event_type"), col("value"))
+      // b1/b2 payloads are session-cached ([[StageOnce]]); only the
+      // ARRIVAL directory below is per-run choreography (b2 must land
+      // after batch 1's watermark advances) and is rebuilt fresh.
+      // coalesce(1) here bounds FILES, deliberately: copyPart moves THE
+      // single part file per half, so each arrival is exactly one file =
+      // one micro-batch — and the build runs once per session
+      val base = StageOnce.dir(s, dir, "wm_late") { p =>
+        ev.filter(col("event_id") % 17 =!= 0).coalesce(1)
+          .write.mode("overwrite").parquet(s"$p/b1")
+        ev.filter(col("event_id") % 17 === 0).coalesce(1)
+          .write.mode("overwrite").parquet(s"$p/b2")
+      }
+      val conf = s.sessionState.newHadoopConf()
+      val fs = new org.apache.hadoop.fs.Path(base).getFileSystem(conf)
+      fs.delete(new org.apache.hadoop.fs.Path(s"$base/in"), true)
+      fs.mkdirs(new org.apache.hadoop.fs.Path(s"$base/in"))
+      def copyPart(src: String, dstName: String): Unit = {
+        val st = fs.globStatus(
+          new org.apache.hadoop.fs.Path(s"$src/part-*.parquet"))
+        org.apache.hadoop.fs.FileUtil.copy(fs, st.head.getPath, fs,
+          new org.apache.hadoop.fs.Path(s"$base/in/$dstName"), false, conf)
+        ()
+      }
+      copyPart(s"$base/b1", "b1.parquet")
+      val schema = s.read.parquet(s"$base/b1").schema
+      graft.streaming.Streams.withStatePartitions(s, 8) {
+        val q = graft.streaming.Streams.windowedCounts(
+            s.readStream.schema(schema).parquet(s"$base/in"),
+            "1 hour", None, watermark = "0 seconds")
+          .writeStream
+          .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
+          .format("memory").queryName("wm_late").start()
+        try {
+          q.processAllAvailable() // batch 1 → watermark = max ts(b1)
+          copyPart(s"$base/b2", "b2.parquet")
+          q.processAllAvailable() // batch 2 + the no-data finalize batch
+        } finally q.stop()
+      }
+      s.table("wm_late")
+        .select(date_format(col("window_start"), "yyyy-MM-dd HH:mm:ss")
+          .as("window_start"), col("event_type"), col("n"))
+        .orderBy(col("window_start"), col("event_type"))
+    },
+      // drop/emit replay: wm1 = max ts of batch 1; a batch-2 row counts
+      // only if its window end > wm1; a window emits only if its end <
+      // the final watermark (global max ts). Hour-aligned ends vs
+      // mid-hour max timestamps make < vs <= unambiguous
+      """WITH b1 AS (SELECT ts, event_type FROM events
+        |  WHERE event_id % 17 <> 0),
+        |b2 AS (SELECT ts, event_type FROM events WHERE event_id % 17 = 0),
+        |wm1 AS (SELECT max(ts) AS m FROM b1),
+        |wmf AS (SELECT max(ts) AS m FROM events),
+        |counted AS (
+        |  SELECT ts, event_type FROM b1
+        |  UNION ALL
+        |  SELECT b2.ts, b2.event_type FROM b2, wm1
+        |  WHERE date_trunc('hour', b2.ts) + INTERVAL 1 HOUR > wm1.m),
+        |agg AS (SELECT date_trunc('hour', ts) AS ws, event_type,
+        |    count(*) AS n
+        |  FROM counted GROUP BY 1, 2)
+        |SELECT strftime(ws, '%Y-%m-%d %H:%M:%S') AS window_start,
+        |  event_type, CAST(n AS BIGINT) AS n
+        |FROM agg, wmf WHERE ws + INTERVAL 1 HOUR < wmf.m
+        |ORDER BY window_start, event_type""".stripMargin),
+
+    Gate("q_interval_join_outer_twin", (s, dir) => {
+      // stream-stream LEFT OUTER interval join run for real: a purchase
+      // with no same-user click within ±10 min still emits (nulls) — but
+      // only once the watermark PROVES no partner can arrive (wm past the
+      // row's upper bound, i.e. the row's state evicted). The oracle
+      // replays both halves: the inner matches, plus unmatched purchases
+      // whose upper bound the final watermark (min of the two sides'
+      // max-ts, minus the 10-min delay) passed; younger unmatched rows
+      // stay pending at stream end by design and appear on neither side
+      // user_id%3 sample: the join/eviction semantics are user-local, so a
+      // third of the users proves the same thing at a third of the state.
+      // Session-cached ([[StageOnce]]), unconstrained write: every file
+      // lands in micro-batch 0, so the watermark/eviction choreography
+      // (one data batch, then no-data finalize batches) is file-count-proof
+      val staged = StageOnce.dir(s, dir, "ij_outer") { p =>
+        t(s, dir, "events")
+          .filter(col("event_type").isin("purchase", "click"))
+          .filter(col("user_id") % 3 === 0)
+          .select(col("event_type"), col("event_id"), col("user_id"),
+            col("ts"))
+          .write.mode("overwrite").parquet(p)
+      }
+      val schema = s.read.parquet(staged).schema
+      def side(tpe: String) =
+        s.readStream.schema(schema).parquet(staged)
+          .filter(col("event_type") === tpe)
+          .select(col("event_id"), col("user_id"), col("ts"))
+      val joined = graft.streaming.Streams.intervalJoinLeftOuter(
+        side("purchase"), side("click"),
+        Seq("user_id"), "ts", "ts", watermark = "10 minutes")
+      // 4 state partitions, same rationale as the inner twin
+      graft.streaming.Streams.withStatePartitions(s, 4) {
+        val q = joined.writeStream
+          .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
+          .format("memory").queryName("ij_outer").start()
+        try q.processAllAvailable() finally q.stop()
+      }
+      s.table("ij_outer")
+        .select(col("event_id").as("purchase_id"),
+          coalesce(col("event_id_r"), lit(-1L)).as("click_id"))
+        .orderBy(col("purchase_id"), col("click_id"))
+    },
+      // inner matches + watermark-proven unmatched purchases; pending
+      // rows (upper bound not yet passed by the final watermark) on
+      // neither side. Microsecond epochs keep every bound integral
+      """WITH p AS (SELECT event_id, user_id, ts FROM events
+        |  WHERE event_type = 'purchase' AND user_id % 3 = 0),
+        |c AS (SELECT event_id, user_id, ts FROM events
+        |  WHERE event_type = 'click' AND user_id % 3 = 0),
+        |wm AS (SELECT LEAST((SELECT max(epoch_us(ts)) FROM p),
+        |    (SELECT max(epoch_us(ts)) FROM c)) - 600000000 AS w),
+        |m AS (SELECT p.event_id AS purchase_id, c.event_id AS click_id
+        |  FROM p JOIN c ON p.user_id = c.user_id
+        |    AND epoch_us(c.ts) >= epoch_us(p.ts) - 600000000
+        |    AND epoch_us(c.ts) <= epoch_us(p.ts) + 600000000),
+        |unmatched AS (SELECT p.event_id AS purchase_id,
+        |    CAST(-1 AS BIGINT) AS click_id
+        |  FROM p, wm
+        |  WHERE p.event_id NOT IN (SELECT purchase_id FROM m)
+        |    AND epoch_us(p.ts) + 600000000 < wm.w)
+        |SELECT * FROM m
+        |UNION ALL SELECT * FROM unmatched
+        |ORDER BY purchase_id, click_id""".stripMargin),
+
+    Gate("q_collapse_runs", (s, dir) => {
+      // telemetry run-length collapse: drop each event that repeats the
+      // user's immediately-preceding event type — one lag window, keeps
+      // the first of every run
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy(col("user_id"))
+        .orderBy(col("ts").asc, col("event_id").asc)
+      t(s, dir, "events")
+        .withColumn("_prev", lag(col("event_type"), 1).over(w))
+        .filter(col("_prev").isNull || col("_prev") =!= col("event_type"))
+        .select(col("event_id"), col("user_id"), col("event_type"))
+        .orderBy(col("event_id"))
+    },
+      """WITH l AS (SELECT event_id, user_id, event_type,
+        |    LAG(event_type) OVER (PARTITION BY user_id
+        |      ORDER BY ts, event_id) AS prev
+        |  FROM events)
+        |SELECT event_id, user_id, event_type FROM l
+        |WHERE prev IS NULL OR prev <> event_type
+        |ORDER BY event_id""".stripMargin),
+
+    Gate("q_user_overlap", (s, dir) => {
+      // audience-overlap matrix: Jaccard of distinct-user sets between
+      // every event-type pair — one distinct reduction, one self equi-join
+      // on user (no type×type×user blow-up), integer-exact e6 ratio
+      // ut feeds the size table and both self-join sides — cut lineage
+      // once instead of re-scanning events three times
+      val ut = t(s, dir, "events")
+        .select(col("event_type").as("t"), col("user_id").as("u")).distinct()
+        .localCheckpoint()
+      val sizes = ut.groupBy(col("t")).agg(count(lit(1)).as("n"))
+      val pairs = ut.join(ut.select(col("t").as("t2"), col("u")), Seq("u"))
+        .filter(col("t") < col("t2"))
+        .groupBy(col("t"), col("t2")).agg(count(lit(1)).as("n_both"))
+      pairs
+        .join(broadcast(sizes.select(col("t"), col("n").as("_na"))), Seq("t"))
+        .join(broadcast(sizes.select(col("t").as("t2"), col("n").as("_nb"))),
+          Seq("t2"))
+        .select(col("t").as("type_a"), col("t2").as("type_b"),
+          col("_na").as("n_a"), col("_nb").as("n_b"), col("n_both"),
+          expr("CAST((n_both * 1000000) DIV (_na + _nb - n_both) AS BIGINT)")
+            .as("jaccard_e6"))
+        .orderBy(col("type_a"), col("type_b"))
+    },
+      """WITH ut AS (SELECT DISTINCT event_type AS t, user_id AS u
+        |  FROM events),
+        |sz AS (SELECT t, count(*) AS n FROM ut GROUP BY 1),
+        |p AS (SELECT a.t AS type_a, b.t AS type_b, count(*) AS n_both
+        |  FROM ut a JOIN ut b ON a.u = b.u AND a.t < b.t GROUP BY 1, 2)
+        |SELECT type_a, type_b, CAST(sa.n AS BIGINT) AS n_a,
+        |  CAST(sb.n AS BIGINT) AS n_b, CAST(n_both AS BIGINT) AS n_both,
+        |  CAST((n_both * 1000000) // (sa.n + sb.n - n_both) AS BIGINT)
+        |    AS jaccard_e6
+        |FROM p JOIN sz sa ON sa.t = p.type_a JOIN sz sb ON sb.t = p.type_b
+        |ORDER BY type_a, type_b""".stripMargin),
+
+    Gate("q_attribution", (s, dir) => {
+      // last-touch attribution: each purchase credits the user's most
+      // recent earlier non-purchase event within 1 hour (else "none") —
+      // the as-of join running on a behavioral axis; touches pre-dedupe to
+      // one per (user, ts) so the as-of match is deterministic
+      val e = t(s, dir, "events")
+      val purchases = e.filter(col("event_type") === "purchase")
+        .select(col("user_id"), col("ts"))
+      val touches = e.filter(col("event_type") =!= "purchase")
+        .groupBy(col("user_id"), col("ts").as("t_ts"))
+        .agg(max_by(col("event_type"), col("event_id")).as("touch_type"))
+      val joined = AsofJoin.backward(purchases, touches, Seq("user_id"),
+        "ts", "t_ts", strict = true)
+      val attributed = joined.select(
+        when(col("t_ts").isNotNull &&
+            unix_micros(col("ts")) - unix_micros(col("t_ts")) <= 3600000000L,
+          col("touch_type")).otherwise(lit("none")).as("touch_type"))
+        .groupBy(col("touch_type")).agg(count(lit(1)).as("n_purchases"))
+      val total = attributed.agg(sum(col("n_purchases")).as("_t"))
+      attributed.crossJoin(broadcast(total))
+        .select(col("touch_type"), col("n_purchases"),
+          expr("CAST((n_purchases * 1000000) DIV _t AS BIGINT)")
+            .as("share_e6"))
+        .orderBy(col("touch_type"))
+    },
+      """WITH p AS (SELECT user_id, ts FROM events
+        |  WHERE event_type = 'purchase'),
+        |t0 AS (SELECT user_id, ts AS t_ts,
+        |    max_by(event_type, event_id) AS touch_type
+        |  FROM events WHERE event_type <> 'purchase' GROUP BY 1, 2),
+        |a AS (SELECT p.user_id, p.ts,
+        |    (SELECT t.touch_type FROM t0 t WHERE t.user_id = p.user_id
+        |      AND t.t_ts < p.ts ORDER BY t.t_ts DESC LIMIT 1) AS touch_type,
+        |    (SELECT MAX(t.t_ts) FROM t0 t WHERE t.user_id = p.user_id
+        |      AND t.t_ts < p.ts) AS t_ts
+        |  FROM p),
+        |c AS (SELECT COALESCE(CASE WHEN t_ts IS NOT NULL
+        |      AND epoch_us(ts) - epoch_us(t_ts) <= 3600000000
+        |      THEN touch_type END, 'none') AS touch_type,
+        |    CAST(count(*) AS BIGINT) AS n_purchases
+        |  FROM a GROUP BY 1),
+        |tt AS (SELECT SUM(n_purchases) AS t FROM c)
+        |SELECT touch_type, n_purchases,
+        |  CAST((n_purchases * 1000000) // tt.t AS BIGINT) AS share_e6
+        |FROM c CROSS JOIN tt ORDER BY touch_type""".stripMargin),
+
+    Gate("q_interpolate", (s, dir) => {
+      // gap-fill the NULL readings per event type by linear interpolation
+      // over the (ts, event_id)-ordered series; boundary NULLs stay NULL
+      val e = t(s, dir, "events")
+        .select(col("event_id"), col("event_type"), col("ts"), col("value"))
+      graft.operators.TimeSeries.interpolateLinear(
+        e, "event_type", Seq(col("ts").asc, col("event_id").asc), "value")
+        .select(col("event_id"),
+          (col("value").isNotNull).as("was_present"), col("_filled"))
+        .orderBy(col("event_id"))
+    },
+      s"""WITH b AS (SELECT event_id, event_type, value, ROW_NUMBER() OVER (
+         |    PARTITION BY event_type ORDER BY ts, event_id) AS rn
+         |  FROM events),
+         |m AS (SELECT event_id, value, rn,
+         |    MAX(CASE WHEN value IS NOT NULL THEN rn END) OVER (
+         |      PARTITION BY event_type ORDER BY rn
+         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pr,
+         |    last_value(CASE WHEN value IS NOT NULL THEN value END
+         |        IGNORE NULLS) OVER (
+         |      PARTITION BY event_type ORDER BY rn
+         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pv,
+         |    MIN(CASE WHEN value IS NOT NULL THEN rn END) OVER (
+         |      PARTITION BY event_type ORDER BY rn
+         |      ROWS BETWEEN 1 FOLLOWING AND UNBOUNDED FOLLOWING) AS nr,
+         |    first_value(CASE WHEN value IS NOT NULL THEN value END
+         |        IGNORE NULLS) OVER (
+         |      PARTITION BY event_type ORDER BY rn
+         |      ROWS BETWEEN 1 FOLLOWING AND UNBOUNDED FOLLOWING) AS nv
+         |  FROM b)
+         |SELECT event_id, (value IS NOT NULL) AS was_present,
+         |  CASE WHEN value IS NOT NULL THEN value
+         |       WHEN pv IS NOT NULL AND nv IS NOT NULL THEN
+         |    ${Sql.sround("pv + (nv - pv) * CAST(rn - pr AS DOUBLE) / CAST(nr - pr AS DOUBLE)", 6)}
+         |  END AS _filled
+         |FROM m ORDER BY event_id""".stripMargin),
+
+    Gate("q_rolling_median", (s, dir) => {
+      // level-shift-robust smoothing of the hourly count series: exact
+      // median over the trailing 5 buckets, ×2 so the even-count midpoint
+      // stays a BIGINT in both engines
+      val hourly = t(s, dir, "events")
+        .groupBy(col("event_type"), date_trunc("hour", col("ts")).as("bucket"))
+        .agg(count(lit(1)).as("n"))
+      graft.operators.TimeSeries.rollingMedianX2(
+        hourly, "event_type", "bucket", "n", windowRows = 5)
+        .select(col("event_type"),
+          date_format(col("bucket"), "yyyy-MM-dd HH:mm:ss").as("hour"),
+          col("n"), col("med_x2"))
+        .orderBy(col("event_type"), col("hour"))
+    },
+      """WITH h AS (SELECT event_type, date_trunc('hour', ts) AS bucket,
+        |    count(*) AS n FROM events GROUP BY 1, 2)
+        |SELECT event_type, strftime(bucket, '%Y-%m-%d %H:%M:%S') AS hour, n,
+        |  CAST(2 * median(n) OVER (PARTITION BY event_type ORDER BY bucket
+        |    ROWS BETWEEN 4 PRECEDING AND CURRENT ROW) AS BIGINT) AS med_x2
+        |FROM h ORDER BY event_type, hour""".stripMargin),
+
+    Gate("q_session_stats", (s, dir) => {
+      // the sessionizer's summary card: session count, total events, exact
+      // median session size and duration (×2 so interpolated halves stay
+      // BIGINT), longest session — one aggregate over the session_window
+      // groups q_sessions gates row-by-row
+      val sess = t(s, dir, "events")
+        .groupBy(col("user_id"),
+          session_window(col("ts"), "30 minutes").as("sw"))
+        .agg(count(lit(1)).as("_ne"),
+          (unix_micros(col("sw.end")) - unix_micros(col("sw.start")))
+            .as("_dur"))
+      sess.agg(count(lit(1)).as("n_sessions"),
+        sum(col("_ne")).as("n_events"),
+        expr("CAST(percentile(_ne, 0.5) * 2 AS BIGINT)").as("med_events_x2"),
+        expr("CAST(percentile(_dur, 0.5) * 2 AS BIGINT)").as("med_dur_us_x2"),
+        max(col("_ne")).as("max_events"))
+    },
+      s"""WITH o AS (
+         |  SELECT user_id, ts,
+         |    CASE WHEN (epoch_ns(ts) // 1000) - LAG(epoch_ns(ts) // 1000)
+         |         OVER (PARTITION BY user_id ORDER BY ts) < 1800000000
+         |         THEN 0 ELSE 1 END AS new_s
+         |  FROM events),
+         |s AS (SELECT *, SUM(new_s) OVER (PARTITION BY user_id ORDER BY ts
+         |        ROWS UNBOUNDED PRECEDING) AS sid FROM o),
+         |se AS (SELECT COUNT(*) AS ne,
+         |    (epoch_ns(MAX(ts)) // 1000) - (epoch_ns(MIN(ts)) // 1000)
+         |      + 1800000000 AS dur
+         |  FROM s GROUP BY user_id, sid)
+         |SELECT CAST(COUNT(*) AS BIGINT) AS n_sessions,
+         |  CAST(SUM(ne) AS BIGINT) AS n_events,
+         |  CAST(quantile_cont(ne, 0.5) * 2 AS BIGINT) AS med_events_x2,
+         |  CAST(quantile_cont(dur, 0.5) * 2 AS BIGINT) AS med_dur_us_x2,
+         |  CAST(MAX(ne) AS BIGINT) AS max_events
+         |FROM se""".stripMargin),
+
+    Gate("q_rfm", (s, dir) => {
+      // RFM customer segmentation: recency/frequency/monetary quintile
+      // codes. Quintile bounds are computed ONCE and shared with the
+      // oracle via aux — recency and frequency are INTEGER-valued, the
+      // class where independently re-derived interpolated bounds flip
+      // whole equal-value groups (COVERAGE.md float-cell audit)
+      val o = t(s, dir, "orders")
+      val maxd = o.agg(max(col("o_orderdate")).as("_mx"))
+      val per = o.crossJoin(broadcast(maxd))
+        .groupBy(col("o_custkey"))
+        .agg(datediff(to_date(max(col("_mx"))),
+            to_date(max(col("o_orderdate")))).as("recency_days"),
+          count(lit(1)).as("n_orders"),
+          Semantics.exactSum(col("o_totalprice")).as("monetary"))
+        .localCheckpoint() // feeds bounds + binning + output
+      val b = per.select(
+        expr("percentile(recency_days, array(0.2,0.4,0.6,0.8))").as("rb"),
+        expr("percentile(n_orders, array(0.2,0.4,0.6,0.8))").as("fb"),
+        expr("percentile(monetary, array(0.2,0.4,0.6,0.8))").as("mb"))
+        .head()
+      val (rb, fb, mb) =
+        (b.getSeq[Double](0), b.getSeq[Double](1), b.getSeq[Double](2))
+      Aux.write(
+        s.createDataset(
+          rb.map(("r", _)) ++ fb.map(("f", _)) ++ mb.map(("m", _)))(
+          org.apache.spark.sql.Encoders.tuple(
+            org.apache.spark.sql.Encoders.STRING,
+            org.apache.spark.sql.Encoders.scalaDouble))
+          .toDF("kind", "b"),
+        s"/tmp/graft_oracle_aux/${Sql.sfTag(dir)}/rfm_bounds")
+      def seg(c: org.apache.spark.sql.Column, bs: Seq[Double]) =
+        bs.foldLeft(lit(1L)) { (acc, bv) =>
+          acc + when(c > lit(bv), 1L).otherwise(0L) }
+      per.select(col("o_custkey"), col("recency_days"), col("n_orders"),
+        col("monetary"), seg(col("recency_days"), rb).as("r_seg"),
+        seg(col("n_orders"), fb).as("f_seg"),
+        seg(col("monetary"), mb).as("m_seg"))
+        .orderBy(col("o_custkey"))
+    },
+      s"""WITH mx AS (SELECT MAX(o_orderdate) AS mx FROM orders),
+         |per AS (SELECT o_custkey,
+         |    datediff('day', CAST(MAX(o_orderdate) AS DATE),
+         |      CAST(ANY_VALUE(mx.mx) AS DATE)) AS recency_days,
+         |    count(*) AS n_orders,
+         |    ${esum("o_totalprice")} AS monetary
+         |  FROM orders, mx GROUP BY o_custkey),
+         |b AS (SELECT kind, b FROM
+         |  read_parquet('/tmp/graft_oracle_aux/{SF}/rfm_bounds/*.parquet'))
+         |SELECT p.o_custkey, CAST(p.recency_days AS BIGINT) AS recency_days,
+         |  CAST(p.n_orders AS BIGINT) AS n_orders, p.monetary,
+         |  1 + (SELECT COUNT(*) FROM b
+         |    WHERE b.kind = 'r' AND p.recency_days > b.b) AS r_seg,
+         |  1 + (SELECT COUNT(*) FROM b
+         |    WHERE b.kind = 'f' AND p.n_orders > b.b) AS f_seg,
+         |  1 + (SELECT COUNT(*) FROM b
+         |    WHERE b.kind = 'm' AND p.monetary > b.b) AS m_seg
+         |FROM per p ORDER BY o_custkey""".stripMargin),
+
+    Gate("q_rolling_distinct", (s, dir) => {
+      // trailing-7-day distinct users per day: (day, user) reduction first,
+      // then each activity day CONTRIBUTES to the 7 output days it can
+      // serve — explode(sequence(day, day+6)) turns the range predicate
+      // into a pure equi-join/aggregate (one shuffle, no nested-loop
+      // join), restricted to observed days by a broadcast semi-join.
+      // Never a distinct-over-window on raw events; the HLL sketch table
+      // is the approximate variant of this exact shape (SketchSpec)
+      val du = t(s, dir, "events")
+        .select(to_date(col("ts")).as("day"), col("user_id")).distinct()
+        .localCheckpoint()
+      val days = du.select(col("day")).distinct()
+      du.select(explode(sequence(col("day"), date_add(col("day"), 6)))
+          .as("day"), col("user_id"))
+        .join(broadcast(days), Seq("day"), "left_semi")
+        .groupBy(col("day"))
+        .agg(countDistinct(col("user_id")).as("n_users_7d"))
+        .select(date_format(col("day"), "yyyy-MM-dd").as("day"),
+          col("n_users_7d"))
+        .orderBy(col("day"))
+    },
+      """WITH du AS (SELECT DISTINCT date_trunc('day', ts) AS day, user_id
+        |  FROM events),
+        |days AS (SELECT DISTINCT day FROM du)
+        |SELECT strftime(d.day, '%Y-%m-%d') AS day,
+        |  CAST(count(DISTINCT u.user_id) AS BIGINT) AS n_users_7d
+        |FROM days d JOIN du u
+        |  ON u.day <= d.day AND u.day >= d.day - INTERVAL 6 DAY
+        |GROUP BY d.day ORDER BY day""".stripMargin),
+
+    Gate("q_distinct_growth", (s, dir) => {
+      // audience growth curve: per-day event volume, new users (first-seen
+      // that day), and the cumulative distinct-user count — first-seen
+      // reduction + a tiny day×day self-join (bounded by the date span),
+      // never a running COUNT DISTINCT over raw events
+      val e = t(s, dir, "events")
+      val byDay = e.groupBy(to_date(col("ts")).as("day"))
+        .agg(count(lit(1)).as("n_events"))
+      val firstSeen = e.groupBy(col("user_id"))
+        .agg(min(to_date(col("ts"))).as("day"))
+        .groupBy(col("day")).agg(count(lit(1)).as("n_new_users"))
+      // cumulative over the PER-DAY aggregate (bounded by date span, not
+      // corpus size) — a global window here is the allowlisted bounded
+      // shape; the former day×day triangular join was a BNLJ
+      val wCum = org.apache.spark.sql.expressions.Window
+        .orderBy(col("day"))
+        .rowsBetween(org.apache.spark.sql.expressions.Window
+          .unboundedPreceding, org.apache.spark.sql.expressions.Window
+          .currentRow)
+      byDay.join(firstSeen, Seq("day"), "left")
+        .withColumn("n_new_users", coalesce(col("n_new_users"), lit(0L)))
+        .withColumn("cum_users", sum(col("n_new_users")).over(wCum))
+        .select(date_format(col("day"), "yyyy-MM-dd").as("day"),
+          col("n_events"), col("n_new_users"), col("cum_users"))
+        .orderBy(col("day"))
+    },
+      """WITH d AS (SELECT date_trunc('day', ts) AS day, count(*) AS n_events
+        |  FROM events GROUP BY 1),
+        |fs AS (SELECT user_id, MIN(date_trunc('day', ts)) AS day
+        |  FROM events GROUP BY 1),
+        |nu AS (SELECT day, count(*) AS n_new_users FROM fs GROUP BY 1)
+        |SELECT strftime(d.day, '%Y-%m-%d') AS day,
+        |  CAST(d.n_events AS BIGINT) AS n_events,
+        |  CAST(COALESCE(ANY_VALUE(nu.n_new_users), 0) AS BIGINT)
+        |    AS n_new_users,
+        |  CAST(SUM(c.n_new_users) AS BIGINT) AS cum_users
+        |FROM d LEFT JOIN nu USING (day)
+        |JOIN nu c ON c.day <= d.day
+        |GROUP BY d.day, d.n_events ORDER BY day""".stripMargin),
+
+    Gate("q_ewma", (s, dir) => {
+      // exponential smoothing of the hourly count series in pure integer
+      // arithmetic: α=1/2 weights are powers of two, so the smoothed value
+      // ships as a BIGINT (wsum/wmass is the normalized EWMA)
+      val hourly = t(s, dir, "events")
+        .groupBy(col("event_type"), date_trunc("hour", col("ts")).as("bucket"))
+        .agg(count(lit(1)).as("n"))
+      graft.operators.TimeSeries.ewmaDyadic(
+        hourly, "event_type", "bucket", "n", depth = 8)
+        .select(col("event_type"),
+          date_format(col("bucket"), "yyyy-MM-dd HH:mm:ss").as("hour"),
+          col("n"), col("wsum"), col("wmass"))
+        .orderBy(col("event_type"), col("hour"))
+    }, {
+      val lags = (1 until 8).map(j =>
+        s"LAG(n, $j) OVER (PARTITION BY event_type ORDER BY bucket) AS l$j")
+        .mkString(",\n    ")
+      val wsum = "128 * n + " + (1 until 8).map(j =>
+        s"${1L << (7 - j)} * COALESCE(l$j, 0)").mkString(" + ")
+      val wmass = "128 + " + (1 until 8).map(j =>
+        s"CASE WHEN l$j IS NULL THEN 0 ELSE ${1L << (7 - j)} END")
+        .mkString(" + ")
+      s"""WITH h AS (SELECT event_type, date_trunc('hour', ts) AS bucket,
+         |    count(*) AS n FROM events GROUP BY 1, 2),
+         |l AS (SELECT event_type, bucket, n,
+         |    $lags
+         |  FROM h)
+         |SELECT event_type, strftime(bucket, '%Y-%m-%d %H:%M:%S') AS hour,
+         |  n, CAST($wsum AS BIGINT) AS wsum, CAST($wmass AS BIGINT) AS wmass
+         |FROM l ORDER BY event_type, hour""".stripMargin
+    }),
+
+    Gate("q_autocorr", (s, dir) => {
+      // is each event type's hourly volume self-similar hour over hour?
+      // lag-1..3 Pearson autocorrelation with the estimator cleared of
+      // divisions (exact BIGINT sums; the only float op is the final ratio)
+      val hourly = t(s, dir, "events")
+        .groupBy(col("event_type"), date_trunc("hour", col("ts")).as("bucket"))
+        .agg(count(lit(1)).as("n"))
+      graft.operators.TimeSeries.autocorr(
+        hourly, "event_type", "bucket", "n", maxLag = 3)
+    }, {
+      def lagCte(k: Int) =
+        s"""a$k AS (SELECT event_type, CAST($k AS INT) AS lag,
+           |    CAST(SUM(n * nl) AS BIGINT) AS sxy,
+           |    CAST(SUM(n) AS BIGINT) AS sh, CAST(SUM(nl) AS BIGINT) AS st
+           |  FROM (SELECT event_type, n, LAG(n, $k) OVER (
+           |      PARTITION BY event_type ORDER BY bucket) AS nl FROM h)
+           |  WHERE nl IS NOT NULL GROUP BY 1)""".stripMargin
+      s"""WITH h AS (SELECT event_type, date_trunc('hour', ts) AS bucket,
+         |    count(*) AS n FROM events GROUP BY 1, 2),
+         |st AS (SELECT event_type, CAST(COUNT(*) AS BIGINT) AS nn,
+         |    CAST(SUM(n) AS BIGINT) AS s, CAST(SUM(n * n) AS BIGINT) AS sxx
+         |  FROM h GROUP BY 1),
+         |${lagCte(1)}, ${lagCte(2)}, ${lagCte(3)},
+         |u AS (SELECT * FROM a1 UNION ALL SELECT * FROM a2
+         |  UNION ALL SELECT * FROM a3)
+         |SELECT u.event_type, u.lag, st.nn AS n,
+         |  CASE WHEN st.nn * st.nn * st.sxx - st.nn * st.s * st.s = 0
+         |    THEN NULL ELSE
+         |  ${Sql.sround("CAST(st.nn * st.nn * u.sxy - st.nn * st.s * (u.sh + u.st) + (st.nn - u.lag) * st.s * st.s AS DOUBLE) / CAST(st.nn * st.nn * st.sxx - st.nn * st.s * st.s AS DOUBLE)")}
+         |  END AS r
+         |FROM u JOIN st USING (event_type)
+         |ORDER BY u.event_type, u.lag""".stripMargin
+    }),
+
+    Gate("q_seasonal_decompose", (s, dir) =>
+      // additive y = trend + seasonal + residual over each type's hourly
+      // value series, all in exact micro-units (the oracle replays every
+      // floor/mean bit-for-bit)
+      graft.operators.TimeSeries.seasonalDecompose(
+        t(s, dir, "events"), "event_type", "ts", "value", halfWidth = 12)
+        .select(col("event_type"),
+          date_format(col("bucket"), "yyyy-MM-dd HH:mm:ss").as("hour"),
+          col("y_e6"), col("trend_e6"), col("seasonal_e6"), col("resid_e6"))
+        .orderBy(col("event_type"), col("hour")),
+      // bit-exact replay: micro-unit longs, 25-bucket centered MA (full
+      // frames only), per-(type, hour-of-day) mean of detrended values
+      """WITH h AS (SELECT event_type, date_trunc('hour', ts) AS bucket,
+        |    CAST(SUM(CAST(FLOOR(value * 1000000 + 0.5) AS BIGINT))
+        |      AS BIGINT) AS y
+        |  FROM events WHERE value IS NOT NULL GROUP BY 1, 2),
+        |tr AS (SELECT event_type, bucket, y,
+        |    CASE WHEN COUNT(*) OVER w = 25 THEN
+        |      CAST(FLOOR(CAST(SUM(y) OVER w AS DOUBLE) / 25 + 0.5)
+        |        AS BIGINT) END AS trend
+        |  FROM h
+        |  WINDOW w AS (PARTITION BY event_type ORDER BY bucket
+        |    ROWS BETWEEN 12 PRECEDING AND 12 FOLLOWING)),
+        |se AS (SELECT event_type, EXTRACT(hour FROM bucket) AS season,
+        |    CAST(FLOOR(CAST(SUM(y - trend) AS DOUBLE) / COUNT(*) + 0.5)
+        |      AS BIGINT) AS seasonal
+        |  FROM tr WHERE trend IS NOT NULL GROUP BY 1, 2)
+        |SELECT tr.event_type,
+        |  strftime(tr.bucket, '%Y-%m-%d %H:%M:%S') AS hour,
+        |  tr.y AS y_e6, tr.trend AS trend_e6, se.seasonal AS seasonal_e6,
+        |  CASE WHEN tr.trend IS NOT NULL AND se.seasonal IS NOT NULL
+        |    THEN tr.y - tr.trend - se.seasonal END AS resid_e6
+        |FROM tr LEFT JOIN se ON se.event_type = tr.event_type
+        |  AND se.season = EXTRACT(hour FROM tr.bucket)
+        |ORDER BY tr.event_type, hour""".stripMargin),
+
+    Gate("q_changepoint", (s, dir) =>
+      // the single best mean-shift split of each type's hourly series —
+      // exact closed-form scores, float only in the final ratio of exact
+      // operands (argmax replayed independently by the oracle)
+      graft.operators.TimeSeries.changePoint(
+        t(s, dir, "events"), "event_type", "ts", "value")
+        .select(col("event_type"),
+          date_format(col("split_last_left"), "yyyy-MM-dd HH:mm:ss")
+            .as("split_hour"),
+          col("n_left"), col("n_right"),
+          col("mean_left"), col("mean_right"))
+        .orderBy(col("event_type")),
+      // exact milli-unit prefix sums; score (n·S_t − t·S)²/(t(n−t)) in
+      // int128 cast to double only for the final ratio (identical
+      // round-to-nearest in both engines); earliest split wins ties
+      s"""WITH h AS (SELECT event_type, date_trunc('hour', ts) AS bucket,
+         |    CAST(SUM(CAST(FLOOR(value * 1000 + 0.5) AS BIGINT))
+         |      AS BIGINT) AS y
+         |  FROM events WHERE value IS NOT NULL GROUP BY 1, 2),
+         |p AS (SELECT event_type, bucket,
+         |    CAST(SUM(y) OVER (PARTITION BY event_type ORDER BY bucket
+         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+         |      AS BIGINT) AS st,
+         |    ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY bucket)
+         |      AS t
+         |  FROM h),
+         |tot AS (SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,
+         |    CAST(SUM(y) AS BIGINT) AS s FROM h GROUP BY 1),
+         |sc AS (SELECT p.event_type, p.bucket, p.t, tot.n, p.st, tot.s,
+         |    CAST((CAST(tot.n AS HUGEINT) * p.st
+         |          - CAST(p.t AS HUGEINT) * tot.s) *
+         |         (CAST(tot.n AS HUGEINT) * p.st
+         |          - CAST(p.t AS HUGEINT) * tot.s) AS DOUBLE)
+         |      / CAST(p.t * (tot.n - p.t) AS DOUBLE) AS score
+         |  FROM p JOIN tot USING (event_type) WHERE p.t < tot.n),
+         |b AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY event_type
+         |    ORDER BY score DESC, t ASC) AS rk FROM sc)
+         |SELECT event_type,
+         |  strftime(bucket, '%Y-%m-%d %H:%M:%S') AS split_hour,
+         |  t AS n_left, n - t AS n_right,
+         |  ${Sql.sround("CAST(st AS DOUBLE) / t / 1000.0")} AS mean_left,
+         |  ${Sql.sround("CAST(s - st AS DOUBLE) / (n - t) / 1000.0")}
+         |    AS mean_right
+         |FROM b WHERE rk = 1 ORDER BY event_type""".stripMargin),
+
+    Gate("q_quantile_map", (s, dir) =>
+      // cross-source score calibration: every type's value distribution
+      // mapped onto 'click's by pure integer rank arithmetic — no
+      // interpolated percentiles, so the mapping replays exactly
+      graft.operators.GroupNormalizer.quantileMap(
+        t(s, dir, "events"), "event_type", "value", "event_id",
+        refGroup = "click")
+        .orderBy(col("event_id")),
+      // the ⌈k·m_ref/m⌉ integer rank mapping, replayed with DuckDB's
+      // BIGINT // division; tie order (value, event_id) is total.
+      // mref enters as an UNCORRELATED SCALAR SUBQUERY inside the rank
+      // expression so the ref join stays a plain equi-join — spelling it
+      // as CROSS JOIN mr + a computed join key made DuckDB nested-loop
+      // the 1M x 600k join (210 s at sf1; 27x faster this way, same rows)
+      """WITH r AS (SELECT event_id, event_type, value,
+        |    ROW_NUMBER() OVER (PARTITION BY event_type
+        |      ORDER BY value, event_id) AS k,
+        |    COUNT(*) OVER (PARTITION BY event_type) AS m
+        |  FROM events WHERE value IS NOT NULL),
+        |mr AS (SELECT CAST(count(*) AS BIGINT) AS mref FROM r
+        |       WHERE event_type = 'click'),
+        |rx AS (SELECT event_id, event_type, value,
+        |    (k * (SELECT mref FROM mr) + m - 1) // m AS rk FROM r),
+        |ref AS (SELECT k AS rk, value AS rv FROM r
+        |        WHERE event_type = 'click')
+        |SELECT rx.event_id, rx.event_type, rx.value, ref.rv AS mapped
+        |FROM rx JOIN ref USING (rk)
+        |ORDER BY rx.event_id""".stripMargin),
+
+    Gate("q_sketch_intersect", (s, dir) => {
+      // KMV set algebra across two engineered segments (A = click users,
+      // B = doubled view user-ids → Jaccard exactly 1/3 at gate scale):
+      // per-segment bottom-k sketches, pooled estimate, validated against
+      // exact counts — the persisted-sketch path never rescans the data
+      val ev = t(s, dir, "events")
+      val segA = ev.filter(col("event_type") === "click")
+        .select(lit("a").as("seg"), col("user_id").as("member"))
+      val segB = ev.filter(col("event_type") === "view")
+        .select(lit("b").as("seg"), (col("user_id") * 2).as("member"))
+      val sk = graft.functions.Sketches.kmvBottomK(
+        segA.unionByName(segB), "seg", "member", k = 128)
+      val est = graft.functions.Sketches.kmvCompare(
+        sk.filter(col("seg") === "a"), sk.filter(col("seg") === "b"),
+        k = 128)
+      val both = segA.unionByName(segB)
+      val exact = both.groupBy(col("member"))
+        .agg(max(col("seg") === "a").as("_ia"),
+          max(col("seg") === "b").as("_ib"))
+        .agg(sum(when(col("_ia"), 1L).otherwise(0L)).as("n_exact_a"),
+          sum(when(col("_ib"), 1L).otherwise(0L)).as("n_exact_b"),
+          count(lit(1)).as("n_exact_union"),
+          sum(when(col("_ia") && col("_ib"), 1L).otherwise(0L))
+            .as("n_exact_inter"))
+      est.crossJoin(exact).select(
+        col("n_exact_a"), col("n_exact_b"), col("n_exact_union"),
+        col("n_exact_inter"), col("size_a"), col("size_b"),
+        (abs(col("jaccard_e4").cast(DoubleType) / 10000.0 -
+          col("n_exact_inter").cast(DoubleType) / col("n_exact_union"))
+          <= 0.15).as("jaccard_ok"),
+        (abs(col("union_est") - col("n_exact_union"))
+          <= col("n_exact_union") * 0.25).as("union_ok"),
+        (abs(col("inter_est") - col("n_exact_inter"))
+          <= col("n_exact_inter") * 0.4).as("inter_ok"))
+    },
+      // exact set sizes cross-engine + the estimator-accuracy invariants
+      """WITH a AS (SELECT DISTINCT user_id AS member FROM events
+        |           WHERE event_type = 'click'),
+        |b AS (SELECT DISTINCT user_id * 2 AS member FROM events
+        |      WHERE event_type = 'view'),
+        |u AS (SELECT member,
+        |    member IN (SELECT member FROM a) AS ia,
+        |    member IN (SELECT member FROM b) AS ib
+        |  FROM (SELECT member FROM a UNION SELECT member FROM b))
+        |SELECT
+        |  CAST((SELECT count(*) FROM a) AS BIGINT) AS n_exact_a,
+        |  CAST((SELECT count(*) FROM b) AS BIGINT) AS n_exact_b,
+        |  CAST((SELECT count(*) FROM u) AS BIGINT) AS n_exact_union,
+        |  CAST((SELECT count(*) FROM u WHERE ia AND ib) AS BIGINT)
+        |    AS n_exact_inter,
+        |  CAST(LEAST(128, (SELECT count(*) FROM a)) AS BIGINT) AS size_a,
+        |  CAST(LEAST(128, (SELECT count(*) FROM b)) AS BIGINT) AS size_b,
+        |  TRUE AS jaccard_ok, TRUE AS union_ok, TRUE AS inter_ok"""
+        .stripMargin),
+
+    Gate("q_target_encode", (s, dir) =>
+      // leave-one-out target encoding with m=10 smoothing: exact decimal
+      // category sums, one fixed IEEE chain per row — the GBDT-pipeline
+      // categorical encoder, leak-free by construction
+      graft.functions.Featurize.targetEncode(
+        t(s, dir, "events")
+          .select(col("event_id"), col("event_type"), col("value")),
+        "event_type", "value", m = 10)
+        .orderBy(col("event_id")),
+      // same decimal sums, same left-to-right IEEE chain, sround(6)
+      s"""WITH st AS (SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,
+         |    CAST(SUM(CAST(value AS DECIMAL(38,10))) AS DOUBLE) AS s
+         |  FROM events WHERE value IS NOT NULL GROUP BY 1),
+         |g AS (SELECT CAST(COUNT(*) AS BIGINT) AS gn,
+         |    CAST(SUM(CAST(value AS DECIMAL(38,10))) AS DOUBLE) AS gs
+         |  FROM events WHERE value IS NOT NULL)
+         |SELECT e.event_id, e.event_type, e.value,
+         |  CASE WHEN e.value IS NULL THEN NULL ELSE
+         |    ${Sql.sround(
+              "(st.s - e.value + 10.0 * (g.gs / g.gn)) / CAST(st.n - 1 + 10 AS DOUBLE)",
+              6)}
+         |  END AS enc
+         |FROM events e LEFT JOIN st USING (event_type) CROSS JOIN g
+         |ORDER BY e.event_id""".stripMargin),
+
+    Gate("q_time_split", (s, dir) =>
+      // backtest split with a 24 h embargo + the entity-leakage audit
+      // (users on both sides of the cut — what a temporal split does NOT
+      // remove, stated instead of silently passed)
+      graft.operators.TrainingExamples.temporalSplitReport(
+        t(s, dir, "events"), "ts", "user_id",
+        cutTs = "2024-01-25 00:00:00", gapHours = 24),
+      """WITH t AS (SELECT user_id,
+        |    CASE WHEN ts < TIMESTAMP '2024-01-24 00:00:00' THEN 'train'
+        |         WHEN ts < TIMESTAMP '2024-01-25 00:00:00' THEN 'embargo'
+        |         ELSE 'test' END AS split
+        |  FROM events),
+        |u AS (SELECT user_id,
+        |    SUM(CASE WHEN split = 'train' THEN 1 ELSE 0 END) AS tr,
+        |    SUM(CASE WHEN split = 'embargo' THEN 1 ELSE 0 END) AS em,
+        |    SUM(CASE WHEN split = 'test' THEN 1 ELSE 0 END) AS te
+        |  FROM t GROUP BY 1)
+        |SELECT CAST(SUM(tr) AS BIGINT) AS n_train,
+        |  CAST(SUM(em) AS BIGINT) AS n_embargo,
+        |  CAST(SUM(te) AS BIGINT) AS n_test,
+        |  CAST(SUM(CASE WHEN tr > 0 THEN 1 ELSE 0 END) AS BIGINT)
+        |    AS n_train_users,
+        |  CAST(SUM(CASE WHEN te > 0 THEN 1 ELSE 0 END) AS BIGINT)
+        |    AS n_test_users,
+        |  CAST(SUM(CASE WHEN tr > 0 AND te > 0 THEN 1 ELSE 0 END)
+        |    AS BIGINT) AS n_leaky_users
+        |FROM u""".stripMargin),
+
+    Gate("q_ks_by_group", (s, dir) =>
+      // drift dashboard shape: per-segment two-sample KS (first vs second
+      // half of the month) — key-partitioned cumsum, no shard machinery,
+      // pure-integer flag at 0.05
+      graft.operators.Audit.ksByGroup(
+        t(s, dir, "events").withColumn("_late",
+          col("ts") >= lit("2024-01-16 00:00:00").cast(TimestampType)),
+        "event_type", "_late", "value", thresholdE6 = 50000L)
+        .orderBy(col("event_type")),
+      """WITH c AS (SELECT event_type, value AS v,
+        |    SUM(CASE WHEN ts < TIMESTAMP '2024-01-16 00:00:00'
+        |      THEN 1 ELSE 0 END) AS c1,
+        |    SUM(CASE WHEN ts >= TIMESTAMP '2024-01-16 00:00:00'
+        |      THEN 1 ELSE 0 END) AS c2
+        |  FROM events WHERE value IS NOT NULL GROUP BY 1, 2),
+        |cum AS (SELECT event_type, v, c1, c2,
+        |    SUM(c1) OVER (PARTITION BY event_type ORDER BY v) AS a1,
+        |    SUM(c2) OVER (PARTITION BY event_type ORDER BY v) AS a2
+        |  FROM c),
+        |t AS (SELECT event_type, CAST(SUM(c1) AS BIGINT) AS n1,
+        |    CAST(SUM(c2) AS BIGINT) AS n2 FROM c GROUP BY 1),
+        |m AS (SELECT cum.event_type,
+        |    MAX(ABS(CAST(a1 AS HUGEINT) * t.n2
+        |      - CAST(a2 AS HUGEINT) * t.n1)) AS num
+        |  FROM cum JOIN t USING (event_type) GROUP BY 1)
+        |SELECT m.event_type, t.n1, t.n2,
+        |  CAST((num * 1000000) // (CAST(t.n1 AS HUGEINT) * t.n2)
+        |    AS BIGINT) AS ks_e6,
+        |  CAST((num * 1000000) // (CAST(t.n1 AS HUGEINT) * t.n2)
+        |    AS BIGINT) > 50000 AS drifted
+        |FROM m JOIN t USING (event_type)
+        |WHERE t.n1 > 0 AND t.n2 > 0
+        |ORDER BY event_type""".stripMargin),
+
+    Gate("q_event_paths", (s, dir) =>
+      // top 20 three-step event-type paths over per-user ordered streams
+      // — the Sankey/flow report; (ts, event_id) tie-broken ordering,
+      // (count desc, path asc) total order on the cut
+      graft.operators.TrainingExamples.eventPaths(
+        t(s, dir, "events"), "user_id", "ts", "event_id", "event_type",
+        depth = 3, topK = 20),
+      """WITH l AS (SELECT
+        |    LAG(event_type, 2) OVER (PARTITION BY user_id
+        |      ORDER BY ts, event_id) AS a,
+        |    LAG(event_type, 1) OVER (PARTITION BY user_id
+        |      ORDER BY ts, event_id) AS b,
+        |    event_type AS c
+        |  FROM events)
+        |SELECT a || '>' || b || '>' || c AS path,
+        |  CAST(count(*) AS BIGINT) AS n
+        |FROM l WHERE a IS NOT NULL
+        |GROUP BY 1 ORDER BY n DESC, path ASC LIMIT 20""".stripMargin),
+
+    Gate("q_rolling_folds", (s, dir) =>
+      // expanding-window backtest schedule: 4 folds, 48 h step, 48 h
+      // horizon, 24 h embargo — exact per-fold counts from the hourly
+      // aggregate (folds explode the TINY frame, never the corpus)
+      graft.operators.TrainingExamples.rollingOriginFolds(
+        t(s, dir, "events"), "ts", "2024-01-20 00:00:00",
+        stepHours = 48, horizonHours = 48, gapHours = 24, nFolds = 4),
+      """WITH h AS (SELECT date_trunc('hour', ts) AS hb,
+        |    CAST(count(*) AS BIGINT) AS n FROM events GROUP BY 1),
+        |f AS (SELECT unnest(range(0, 4)) AS fold),
+        |x AS (SELECT f.fold, TIMESTAMP '2024-01-20 00:00:00'
+        |        + to_hours(f.fold * 48) AS cut FROM f)
+        |SELECT x.fold, strftime(x.cut, '%Y-%m-%d %H:%M:%S') AS cut,
+        |  CAST(SUM(CASE WHEN h.hb < x.cut - to_hours(24)
+        |    THEN h.n ELSE 0 END) AS BIGINT) AS n_train,
+        |  CAST(SUM(CASE WHEN h.hb >= x.cut
+        |      AND h.hb < x.cut + to_hours(48)
+        |    THEN h.n ELSE 0 END) AS BIGINT) AS n_test
+        |FROM x CROSS JOIN h GROUP BY 1, 2 ORDER BY fold""".stripMargin),
+
+    Gate("q_stl_anomaly", (s, dir) =>
+      // seasonal-adjusted anomaly screen: flags on the DECOMPOSITION
+      // residual, so the daily shape never pages — thresholds and flags
+      // in pure BIGINTs, replayed end-to-end by the oracle
+      graft.operators.TimeSeries.seasonalAnomalies(
+        t(s, dir, "events"), "event_type", "ts", "value",
+        halfWidth = 12, multNum = 3L, multDen = 1L)
+        .select(col("event_type"),
+          date_format(col("bucket"), "yyyy-MM-dd HH:mm:ss").as("hour"),
+          col("resid_e6"), col("mean_abs_resid_e6"), col("is_anomaly"))
+        .orderBy(col("event_type"), col("hour")),
+      // full decomposition replay (as q_seasonal_decompose) + the BIGINT
+      // mean-|residual| threshold and flag
+      """WITH h AS (SELECT event_type, date_trunc('hour', ts) AS bucket,
+        |    CAST(SUM(CAST(FLOOR(value * 1000000 + 0.5) AS BIGINT))
+        |      AS BIGINT) AS y
+        |  FROM events WHERE value IS NOT NULL GROUP BY 1, 2),
+        |tr AS (SELECT event_type, bucket, y,
+        |    CASE WHEN COUNT(*) OVER w = 25 THEN
+        |      CAST(FLOOR(CAST(SUM(y) OVER w AS DOUBLE) / 25 + 0.5)
+        |        AS BIGINT) END AS trend
+        |  FROM h
+        |  WINDOW w AS (PARTITION BY event_type ORDER BY bucket
+        |    ROWS BETWEEN 12 PRECEDING AND 12 FOLLOWING)),
+        |se AS (SELECT event_type, EXTRACT(hour FROM bucket) AS season,
+        |    CAST(FLOOR(CAST(SUM(y - trend) AS DOUBLE) / COUNT(*) + 0.5)
+        |      AS BIGINT) AS seasonal
+        |  FROM tr WHERE trend IS NOT NULL GROUP BY 1, 2),
+        |r AS (SELECT tr.event_type, tr.bucket,
+        |    CASE WHEN tr.trend IS NOT NULL AND se.seasonal IS NOT NULL
+        |      THEN tr.y - tr.trend - se.seasonal END AS resid
+        |  FROM tr LEFT JOIN se ON se.event_type = tr.event_type
+        |    AND se.season = EXTRACT(hour FROM tr.bucket)),
+        |th AS (SELECT event_type,
+        |    CAST(FLOOR(CAST(SUM(ABS(resid)) AS DOUBLE) / COUNT(*) + 0.5)
+        |      AS BIGINT) AS mar
+        |  FROM r WHERE resid IS NOT NULL GROUP BY 1)
+        |SELECT r.event_type,
+        |  strftime(r.bucket, '%Y-%m-%d %H:%M:%S') AS hour,
+        |  r.resid AS resid_e6, th.mar AS mean_abs_resid_e6,
+        |  CASE WHEN r.resid IS NOT NULL THEN ABS(r.resid) * 1 > th.mar * 3
+        |       ELSE FALSE END AS is_anomaly
+        |FROM r JOIN th USING (event_type)
+        |ORDER BY r.event_type, hour""".stripMargin),
+
+    Gate("q_zonemap_quality", (s, dir) => {
+      // layout quality: the SAME rows staged range-clustered vs
+      // hash-scattered; the interval-sweep depth report must show
+      // pruning-friendly ~1 vs pruning-dead ~n_files. Oracle re-reads
+      // the staged files (filename=true) and replays the sweep
+      val ev = t(s, dir, "events").select(col("event_id"), col("value"))
+      val base = s"/tmp/graft_zonemap/${Sql.sfTag(dir)}"
+      ev.repartitionByRange(4, col("value"))
+        .sortWithinPartitions(col("value"))
+        .write.mode("overwrite").parquet(s"$base/clustered")
+      ev.repartition(4, col("event_id"))
+        .write.mode("overwrite").parquet(s"$base/scattered")
+      val rep = (tag: String, p: String) =>
+        graft.io.LayoutStats.zoneMapReport(s, p, "value")
+          .select(lit(tag).as("layout"), col("n_files"), col("max_depth"),
+            col("avg_depth_e4"))
+      rep("clustered", s"$base/clustered")
+        .unionByName(rep("scattered", s"$base/scattered"))
+        .orderBy(col("layout"))
+    }, {
+      def side(tag: String, sub: String) =
+        s"""f_$sub AS (SELECT filename, min(value) AS mn, max(value) AS mx
+           |  FROM read_parquet(
+           |    '/tmp/graft_zonemap/{SF}/$sub/*.parquet', filename=true)
+           |  WHERE value IS NOT NULL GROUP BY 1),
+           |d_$sub AS (SELECT
+           |    (SELECT count(*) FROM f_$sub b WHERE b.mn <= a.mn)
+           |      - (SELECT count(*) FROM f_$sub c WHERE c.mx < a.mn) AS d
+           |  FROM f_$sub a),
+           |r_$sub AS (SELECT '$tag' AS layout,
+           |    CAST(count(*) AS BIGINT) AS n_files,
+           |    CAST(max(d) AS BIGINT) AS max_depth,
+           |    CAST(sum(d) AS BIGINT) * 10000 // CAST(count(*) AS BIGINT)
+           |      AS avg_depth_e4
+           |  FROM d_$sub)""".stripMargin
+      s"""WITH ${side("clustered", "clustered")},
+         |${side("scattered", "scattered")}
+         |SELECT * FROM r_clustered UNION ALL SELECT * FROM r_scattered
+         |ORDER BY layout""".stripMargin
+    }),
+
+    Gate("q_layout_compare", (s, dir) => {
+      // Hilbert vs Z-order vs single-axis sort, MEASURED: the same (x, y)
+      // rows staged under each layout, zone-map interval-sweep depth on
+      // BOTH axes. A single-column sort prunes only its own axis (the
+      // other axis' depth ≈ n_files — pruning-dead); both space-filling
+      // curves bound depth on both axes at once, which is the entire
+      // reason clusterBy2 exists. Oracle re-reads the staged files
+      // (filename=true) and replays the sweep per axis
+      // two independent uniform axes (multiplicative-hash spreads of the
+      // dense id) — the derivation doesn't matter to the oracle, which
+      // replays from the staged bytes; a quarter of the table is plenty
+      // to saturate a 1024² grid under 16 files (the gate's cost is the
+      // staged writes plus one zone sweep per layout/axis). The
+      // single-axis-sort contrast (own axis ~1, other axis pruning-dead)
+      // was measured here through round 7 and is covered by
+      // q_zonemap_quality; the namesake hilbert-vs-zorder compare keeps
+      // 2 writes + 4 sweeps
+      val ev = t(s, dir, "events")
+        .filter(col("event_id") % 4 === 0)
+        .select(col("event_id"),
+          (col("event_id") * 2654435761L % 1024).as("x"),
+          (col("event_id") * 40503L % 1024).as("y"))
+      val base = s"/tmp/graft_layoutcmp/${Sql.sfTag(dir)}"
+      graft.core.Hilbert.clusterBy2(ev, "x", "y", 16, bits = 10)
+        .write.mode("overwrite").parquet(s"$base/hilbert")
+      graft.core.ZOrder.clusterBy2(ev, "x", "y", 16, bits = 10)
+        .write.mode("overwrite").parquet(s"$base/zorder")
+      graft.io.LayoutStats.zoneMapReportMulti(s,
+          Seq("hilbert", "zorder").map(tag => tag -> s"$base/$tag"),
+          Seq("x", "y"))
+        .orderBy(col("layout"), col("axis"))
+    }, {
+      def side(tag: String, axis: String) =
+        s"""f_${tag}_$axis AS (SELECT filename,
+           |    min($axis) AS mn, max($axis) AS mx
+           |  FROM read_parquet(
+           |    '/tmp/graft_layoutcmp/{SF}/$tag/*.parquet', filename=true)
+           |  WHERE $axis IS NOT NULL GROUP BY 1),
+           |d_${tag}_$axis AS (SELECT
+           |    (SELECT count(*) FROM f_${tag}_$axis b WHERE b.mn <= a.mn)
+           |      - (SELECT count(*) FROM f_${tag}_$axis c
+           |         WHERE c.mx < a.mn) AS d
+           |  FROM f_${tag}_$axis a),
+           |r_${tag}_$axis AS (SELECT '$tag' AS layout, '$axis' AS axis,
+           |    CAST(count(*) AS BIGINT) AS n_files,
+           |    CAST(max(d) AS BIGINT) AS max_depth,
+           |    CAST(sum(d) AS BIGINT) * 10000 // CAST(count(*) AS BIGINT)
+           |      AS avg_depth_e4
+           |  FROM d_${tag}_$axis)""".stripMargin
+      val parts = for (t <- Seq("hilbert", "zorder");
+        a <- Seq("x", "y")) yield side(t, a)
+      val sels = for (t <- Seq("hilbert", "zorder");
+        a <- Seq("x", "y")) yield s"SELECT * FROM r_${t}_$a"
+      s"""WITH ${parts.mkString(",\n")}
+         |${sels.mkString(" UNION ALL ")}
+         |ORDER BY layout, axis""".stripMargin
+    }),
+
+    Gate("q_triangles", (s, dir) => {
+      // triangle census of the deterministic citation graph (+1/+2 ring
+      // links guarantee n triangles; the 7d+1 links add irregular degree)
+      val docs = t(s, dir, "documents").select(col("doc_id"))
+      val cnt = docs.agg(count(lit(1)).as("_n"))
+      val link = (a: Long, b: Long) => docs.crossJoin(broadcast(cnt))
+        .select(col("doc_id").as("src"),
+          pmod(col("doc_id") * a + b, col("_n")).as("dst"))
+      graft.operators.PageRank.triangleCount(
+        link(1L, 1L).union(link(1L, 2L)).union(link(7L, 1L)), "src", "dst")
+    },
+      // exact census: value-ordered undirected edges, one join per side
+      """WITH nn AS (SELECT count(*) AS n FROM documents),
+        |raw AS (SELECT doc_id AS src, (doc_id + 1) % nn.n AS dst
+        |          FROM documents, nn
+        |        UNION ALL
+        |        SELECT doc_id, (doc_id + 2) % nn.n FROM documents, nn
+        |        UNION ALL
+        |        SELECT doc_id, (doc_id * 7 + 1) % nn.n FROM documents, nn),
+        |und AS (SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
+        |  FROM raw WHERE src <> dst)
+        |SELECT CAST(COUNT(*) AS BIGINT) AS n_triangles
+        |FROM und x JOIN und y ON y.a = x.b
+        |JOIN und z ON z.a = x.a AND z.b = y.b""".stripMargin),
+
+    Gate("q_dag_levels", (s, dir) => {
+      // topological leveling of a derivation DAG (docs i → 8i, 8i+1, 9i —
+      // strictly increasing, so acyclic, depth ~log₈ n) plus a planted
+      // 3-cycle on synthetic ids n..n+2: levels are Kahn waves (1 + max
+      // over preds), the cycle comes back level = -1 / in_cycle — the
+      // pipeline-scheduler primitive with honest deadlock reporting.
+      // Peel rounds = DAG depth, not vertex count; base 8 keeps the
+      // fixture at ~5 waves (each wave costs one count() action in the
+      // harness — the operator itself is depth-proportional by design)
+      val docs = t(s, dir, "documents").select(col("doc_id"))
+      val cnt = docs.agg(count(lit(1)).as("_n"))
+      val src = docs.filter(col("doc_id") >= 1).crossJoin(broadcast(cnt))
+      def e(mult: Long, add: Long) =
+        src.filter(col("doc_id") * mult + add < col("_n"))
+          .select(col("doc_id").as("src"),
+            (col("doc_id") * mult + add).as("dst"))
+      val cycE = cnt.selectExpr(
+        "stack(3, _n, _n + 1, _n + 1, _n + 2, _n + 2, _n) AS (src, dst)")
+      val verts = docs.select(col("doc_id").as("id"))
+        .unionByName(cnt.selectExpr(
+          "explode(array(_n, _n + 1, _n + 2)) AS id"))
+      graft.operators.Dag.topoLevels(verts, "id",
+          e(8, 0).unionByName(e(8, 1)).unionByName(e(9, 0))
+            .unionByName(cycE), "src", "dst")
+        .orderBy(col("id"))
+    },
+      // longest-path-from-roots replay (UNION dedups (node, depth) pairs,
+      // so path multiplicity never explodes); planted cycle as literals
+      """WITH RECURSIVE nn AS (SELECT count(*) AS n FROM documents),
+        |e AS (SELECT doc_id AS u, doc_id * 8 AS v FROM documents, nn
+        |    WHERE doc_id >= 1 AND doc_id * 8 < nn.n
+        |  UNION ALL
+        |  SELECT doc_id, doc_id * 8 + 1 FROM documents, nn
+        |    WHERE doc_id >= 1 AND doc_id * 8 + 1 < nn.n
+        |  UNION ALL
+        |  SELECT doc_id, doc_id * 9 FROM documents, nn
+        |    WHERE doc_id >= 1 AND doc_id * 9 < nn.n),
+        |roots AS (SELECT doc_id AS id FROM documents
+        |  WHERE doc_id NOT IN (SELECT v FROM e)),
+        |reach(id, d) AS (
+        |  SELECT id, 0 FROM roots
+        |  UNION
+        |  SELECT e.v, reach.d + 1 FROM e JOIN reach ON e.u = reach.id),
+        |lv AS (SELECT id, MAX(d) AS level FROM reach GROUP BY id)
+        |SELECT CAST(id AS BIGINT) AS id, CAST(level AS BIGINT) AS level,
+        |  FALSE AS in_cycle
+        |FROM lv
+        |UNION ALL
+        |SELECT nn.n + x, CAST(-1 AS BIGINT), TRUE
+        |FROM nn, (VALUES (0), (1), (2)) t(x)
+        |ORDER BY id""".stripMargin),
+
+    Gate("q_ref_integrity", (s, dir) =>
+      graft.operators.Audit.refIntegrity(Seq(
+        ("customer.c_nationkey->nation", t(s, dir, "customer"),
+          "c_nationkey", t(s, dir, "nation"), "n_nationkey"),
+        ("lineitem.l_orderkey->orders", t(s, dir, "lineitem"),
+          "l_orderkey", t(s, dir, "orders"), "o_orderkey"),
+        ("orders.o_custkey->customer", t(s, dir, "orders"),
+          "o_custkey", t(s, dir, "customer"), "c_custkey"))),
+      {
+        def rel(tag: String, child: String, fk: String, parent: String,
+            pk: String) =
+          s"""SELECT '$tag' AS relation,
+             |  (SELECT CAST(count(*) AS BIGINT) FROM $child) AS n_child_rows,
+             |  (SELECT CAST(count(DISTINCT $fk) AS BIGINT) FROM $child)
+             |    AS n_distinct_fk,
+             |  (SELECT CAST(count(*) AS BIGINT) FROM $child WHERE $fk IS NULL)
+             |    AS n_null_fk_rows,
+             |  (SELECT CAST(count(*) AS BIGINT) FROM $child
+             |    WHERE $fk IS NOT NULL
+             |      AND $fk NOT IN (SELECT $pk FROM $parent)) AS n_orphan_rows,
+             |  (SELECT CAST(count(DISTINCT $fk) AS BIGINT) FROM $child
+             |    WHERE $fk IS NOT NULL
+             |      AND $fk NOT IN (SELECT $pk FROM $parent)) AS n_orphan_keys
+             |""".stripMargin
+        rel("customer.c_nationkey->nation", "customer", "c_nationkey",
+          "nation", "n_nationkey") + "UNION ALL\n" +
+        rel("lineitem.l_orderkey->orders", "lineitem", "l_orderkey",
+          "orders", "o_orderkey") + "UNION ALL\n" +
+        rel("orders.o_custkey->customer", "orders", "o_custkey",
+          "customer", "c_custkey") + "ORDER BY relation"
+      }),
+
+    Gate("q_assoc_rules", (s, dir) =>
+      graft.operators.MarketBasket.pairRules(
+        t(s, dir, "events"), "user_id", "event_type"),
+      s"""WITH it AS (SELECT DISTINCT user_id AS b, event_type AS i
+         |  FROM events),
+         |ic AS (SELECT i, count(*) AS ci FROM it GROUP BY 1),
+         |nb AS (SELECT count(DISTINCT b) AS nb FROM it),
+         |p AS (SELECT a.i AS ia, c.i AS ib, count(*) AS n_pair
+         |  FROM it a JOIN it c ON a.b = c.b AND a.i < c.i GROUP BY 1, 2)
+         |SELECT p.ia AS item_a, p.ib AS item_b, p.n_pair,
+         |  ${Sql.sround("CAST(n_pair AS DOUBLE) / CAST(nb AS DOUBLE)")}
+         |    AS support,
+         |  ${Sql.sround("CAST(n_pair AS DOUBLE) / CAST(ca.ci AS DOUBLE)")}
+         |    AS confidence,
+         |  ${Sql.sround("CAST(n_pair * nb AS DOUBLE) / CAST(ca.ci * cb.ci AS DOUBLE)")}
+         |    AS lift
+         |FROM p JOIN ic ca ON p.ia = ca.i JOIN ic cb ON p.ib = cb.i
+         |CROSS JOIN nb ORDER BY item_a, item_b""".stripMargin),
+
+    Gate("q_rate_cap", (s, dir) => {
+      // at most 3 events per (user, hour), chosen by identity-hash order —
+      // the deterministic throttle; WindowGroupLimit cuts per key before
+      // any shuffle concentrates a hot user's rows
+      val ev = t(s, dir, "events")
+        .select(col("event_id"), col("user_id"),
+          date_trunc("day", col("ts")).as("bucket"))
+      graft.core.TopK.perKey(ev, Seq("user_id", "bucket"), 3,
+        Seq(conv(substring(md5(concat(lit("rc#"),
+          col("event_id").cast(StringType))), 1, 8), 16, 10)
+          .cast(LongType).asc, col("event_id").asc))
+        .select(col("event_id"), col("rank_in_key"))
+        .orderBy(col("event_id"))
+    },
+      """WITH e AS (SELECT event_id, user_id, date_trunc('day', ts) AS bucket
+        |  FROM events),
+        |r AS (SELECT event_id, ROW_NUMBER() OVER (
+        |    PARTITION BY user_id, bucket
+        |    ORDER BY CAST(('0x' || substr(md5('rc#' ||
+        |      CAST(event_id AS VARCHAR)), 1, 8)) AS BIGINT), event_id) AS rk
+        |  FROM e)
+        |SELECT event_id, rk AS rank_in_key FROM r WHERE rk <= 3
+        |ORDER BY event_id""".stripMargin),
+
+    Gate("q_info_gain", (s, dir) =>
+      graft.operators.Audit.infoGain(
+        t(s, dir, "documents"), "source", "lang"),
+      {
+        def term(p: String, c: String) =
+          s"FLOOR((CAST($p AS DOUBLE) / CAST($c AS DOUBLE) * " +
+            s"ln(CAST($p AS DOUBLE) / CAST($c AS DOUBLE))) * 1e12 + 0.5) / 1e12"
+        s"""WITH n AS (SELECT count(*) AS n FROM documents),
+           |hl AS (SELECT CAST(-SUM(CAST(t AS DECIMAL(38,15))) AS DOUBLE) AS hl
+           |  FROM (SELECT ${term("cl", "n.n")} AS t
+           |    FROM (SELECT lang, count(*) AS cl FROM documents GROUP BY 1),
+           |      n)),
+           |hc AS (SELECT CAST(-SUM(CAST(t AS DECIMAL(38,15))) AS DOUBLE) AS hc
+           |  FROM (SELECT ${term("cfl", "n.n")
+              .replace("ln(CAST(cfl AS DOUBLE) / CAST(n.n AS DOUBLE))",
+                "ln(CAST(cfl AS DOUBLE) / CAST(cf AS DOUBLE))")} AS t
+           |    FROM (SELECT source, lang, count(*) AS cfl
+           |        FROM documents GROUP BY 1, 2) x
+           |      JOIN (SELECT source, count(*) AS cf
+           |        FROM documents GROUP BY 1) y USING (source), n))
+           |SELECT 'source' AS feature, 'lang' AS label,
+           |  ${Sql.sround("hl")} AS h_label, ${Sql.sround("hc")} AS h_cond,
+           |  ${Sql.sround("hl - hc")} AS info_gain
+           |FROM hl CROSS JOIN hc""".stripMargin
+      }),
+
+    Gate("q_fd_violations", (s, dir) =>
+      graft.operators.Audit.fdViolations(
+        t(s, dir, "orders"), Seq("o_custkey"), "o_orderpriority"),
+      """SELECT o_custkey, count(*) AS n_rows,
+        |  count(DISTINCT o_orderpriority) AS n_rhs
+        |FROM orders GROUP BY 1 HAVING count(DISTINCT o_orderpriority) > 1
+        |ORDER BY o_custkey""".stripMargin),
+
+    Gate("q_group_mad", (s, dir) =>
+      graft.operators.Audit.groupMad(
+        t(s, dir, "events"), "event_type", "value"),
+      s"""WITH m AS (SELECT event_type, quantile_cont(value, 0.5) AS med
+         |  FROM events GROUP BY 1),
+         |d AS (SELECT e.event_type, m.med, abs(e.value - m.med) AS dev
+         |  FROM events e JOIN m USING (event_type))
+         |SELECT event_type,
+         |  ${Sql.sround("ANY_VALUE(med)")} AS median,
+         |  ${Sql.sround("quantile_cont(dev, 0.5)")} AS mad
+         |FROM d GROUP BY event_type ORDER BY event_type""".stripMargin),
+
+    Gate("q_sorted_neighborhood", (s, dir) =>
+      graft.operators.FuzzyMatch.sortedNeighborhoodJoin(
+        t(s, dir, "part").select(col("p_partkey"), col("p_name")),
+        "p_partkey", "p_name", window = 3, maxDist = 2)
+        .orderBy(col("id_a"), col("id_b")),
+      """WITH r AS (SELECT p_partkey AS id, p_name AS s,
+        |    substr(p_name, 1, 1) AS blk FROM part),
+        |rk AS (SELECT id, s, blk,
+        |    ROW_NUMBER() OVER (PARTITION BY blk ORDER BY s, id) AS r
+        |  FROM r),
+        |p AS (SELECT a.id AS id_a, b.id AS id_b,
+        |    levenshtein(a.s, b.s) AS dist
+        |  FROM rk a JOIN rk b ON a.blk = b.blk
+        |    AND b.r - a.r BETWEEN 1 AND 3)
+        |SELECT id_a, id_b, dist FROM p WHERE dist <= 2
+        |ORDER BY id_a, id_b""".stripMargin),
+
+    Gate("q_psi_drift", (s, dir) => {
+      val ev = t(s, dir, "events")
+      graft.operators.Audit.psiDrift(
+        ev.filter(col("event_id") % 2 === 0),
+        ev.filter(col("event_id") % 2 === 1), "value", bins = 10)
+    }, {
+      val ps = (1 until 10).map(i => i / 10.0)
+      val bsel = ps.zipWithIndex.map { case (p, i) =>
+        s"quantile_cont(value, $p) AS b$i" }.mkString(", ")
+      def binExpr = "1 " + ps.indices.map(i =>
+        s"+ CASE WHEN value >= b.b$i THEN 1 ELSE 0 END").mkString(" ")
+      val pTerm = "CAST(n_ref + 1 AS DOUBLE) / CAST(tr + 10 AS DOUBLE)"
+      val qTerm = "CAST(n_cur + 1 AS DOUBLE) / CAST(tc + 10 AS DOUBLE)"
+      s"""WITH r AS (SELECT value FROM events
+         |  WHERE event_id % 2 = 0 AND value IS NOT NULL),
+         |c AS (SELECT value FROM events
+         |  WHERE event_id % 2 = 1 AND value IS NOT NULL),
+         |b AS (SELECT $bsel FROM r),
+         |rc AS (SELECT $binExpr AS bin, count(*) AS n_ref
+         |  FROM r, b GROUP BY 1),
+         |cc AS (SELECT $binExpr AS bin, count(*) AS n_cur
+         |  FROM c, b GROUP BY 1),
+         |j AS (SELECT COALESCE(rc.bin, cc.bin) AS bin,
+         |    COALESCE(n_ref, 0) AS n_ref, COALESCE(n_cur, 0) AS n_cur
+         |  FROM rc FULL OUTER JOIN cc ON rc.bin = cc.bin),
+         |t AS (SELECT SUM(n_ref) AS tr, SUM(n_cur) AS tc FROM j)
+         |SELECT bin, n_ref, n_cur,
+         |  ${Sql.sround(s"(($pTerm) - ($qTerm)) * ln(($pTerm) / ($qTerm))")}
+         |    AS psi_term
+         |FROM j CROSS JOIN t ORDER BY bin""".stripMargin
+    }),
+
+    Gate("q_kfold", (s, dir) =>
+      graft.functions.Sampling.kFold(
+        t(s, dir, "documents").select(col("doc_id")), "doc_id", k = 5)
+        .orderBy(col("doc_id")),
+      """SELECT doc_id,
+        |  CAST(('0x' || substr(md5('fold#' || CAST(doc_id AS VARCHAR)), 1, 8))
+        |    AS BIGINT) % 5 AS fold
+        |FROM documents ORDER BY doc_id""".stripMargin),
+
+    Gate("q_benford", (s, dir) =>
+      graft.operators.Audit.benford(t(s, dir, "orders"), "o_totalprice"),
+      {
+        val pexp = "ln(1.0 + 1.0 / CAST(digit AS DOUBLE)) / ln(10.0)"
+        s"""WITH d AS (SELECT substr(CAST(CAST(FLOOR(o_totalprice) AS BIGINT)
+           |      AS VARCHAR), 1, 1) AS digit
+           |  FROM orders WHERE o_totalprice IS NOT NULL AND o_totalprice >= 1),
+           |c AS (SELECT digit, count(*) AS n FROM d GROUP BY 1),
+           |t AS (SELECT SUM(n) AS total FROM c)
+           |SELECT digit, n,
+           |  ${Sql.sround("CAST(n AS DOUBLE) / CAST(total AS DOUBLE)")} AS observed,
+           |  ${Sql.sround(pexp)} AS expected,
+           |  ${Sql.sround(s"POW(CAST(n AS DOUBLE) - ($pexp) * CAST(total AS DOUBLE), 2) / (($pexp) * CAST(total AS DOUBLE))")}
+           |    AS chi2_term
+           |FROM c CROSS JOIN t ORDER BY digit""".stripMargin
+      }),
+
+    Gate("q_chi_square", (s, dir) =>
+      graft.operators.Audit.chiSquareCells(
+        t(s, dir, "documents"), "lang", "source"),
+      {
+        val e = "CAST(ra * cb AS DOUBLE) / CAST(tt AS DOUBLE)"
+        s"""WITH cells AS (SELECT lang, source, count(*) AS n
+           |  FROM documents GROUP BY 1, 2),
+           |r AS (SELECT lang, count(*) AS ra FROM documents GROUP BY 1),
+           |c AS (SELECT source, count(*) AS cb FROM documents GROUP BY 1),
+           |t AS (SELECT count(*) AS tt FROM documents)
+           |SELECT cells.lang, cells.source, cells.n,
+           |  ${Sql.sround(e)} AS expected,
+           |  ${Sql.sround(s"POW(CAST(n AS DOUBLE) - ($e), 2) / ($e)")}
+           |    AS chi2_term
+           |FROM cells JOIN r USING (lang) JOIN c USING (source) CROSS JOIN t
+           |ORDER BY cells.lang, cells.source""".stripMargin
+      }),
+
+    Gate("q_kanon", (s, dir) =>
+      graft.operators.Audit.kAnonymityRisk(
+        t(s, dir, "documents"), Seq("lang", "source"), k = 10L),
+      """SELECT lang, source, count(*) AS n FROM documents
+        |GROUP BY 1, 2 HAVING count(*) < 10
+        |ORDER BY lang, source, n""".stripMargin),
+
+    // bucketed co-located join: both sides land in bucket-sorted parquet
+    // tables keyed on the join column, so the join itself needs NO Exchange
+    // (ScaleSpec asserts the shuffle-free plan) — the layout every
+    // repeatedly-joined 100 TB fact/dim pair should live in. The write IS
+    // the operator, so it stays inside the benched closure deliberately.
+    Gate("q_bucketed_join", (s, dir) => {
+      import graft.io.Sinks
+      val base = "/tmp/graft_bucketed/" + Sql.sfTag(dir)
+      Sinks.bucketedTable(t(s, dir, "orders"), "graft_b_orders",
+        s"$base/orders", Seq("o_custkey"), 8)
+      Sinks.bucketedTable(t(s, dir, "customer"), "graft_b_customer",
+        s"$base/customer", Seq("c_custkey"), 8)
+      s.table("graft_b_orders")
+        .join(s.table("graft_b_customer"),
+          col("o_custkey") === col("c_custkey"))
+        .groupBy(col("c_mktsegment"))
+        .agg(count(lit(1)).as("n_orders"),
+          Semantics.exactSum(col("o_totalprice")).as("total_price"))
+        .orderBy(col("c_mktsegment"))
+    },
+      s"""SELECT c_mktsegment, COUNT(*) AS n_orders,
+         |  ${esum("o_totalprice")} AS total_price
+         |FROM orders JOIN customer ON o_custkey = c_custkey
+         |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin),
+
+    // schema-evolution read: two ingest batches with divergent columns
+    // (the long-lived-corpus reality) union into one frame via footer
+    // merging; columns a batch lacks surface as null without rewriting it
+    Gate("q_schema_merge", (s, dir) => {
+      import graft.io.Sources
+      val docs = t(s, dir, "documents")
+      val base = "/tmp/graft_evolve/" + Sql.sfTag(dir)
+      docs.filter(col("doc_id") < 250).select(col("doc_id"), col("n_chars"))
+        .write.mode("overwrite").parquet(s"$base/b1")
+      docs.filter(col("doc_id") >= 250).select(col("doc_id"), col("lang"))
+        .write.mode("overwrite").parquet(s"$base/b2")
+      Sources.parquetMergeSchema(s, s"$base/b1", s"$base/b2")
+        .orderBy(col("doc_id"))
+    },
+      """SELECT doc_id, n_chars, CAST(NULL AS VARCHAR) AS lang
+        |FROM documents WHERE doc_id < 250
+        |UNION ALL
+        |SELECT doc_id, CAST(NULL AS BIGINT), lang
+        |FROM documents WHERE doc_id >= 250
+        |ORDER BY doc_id""".stripMargin),
+
+    // unpivot/melt: wide metric columns to (id, metric, val) long form —
+    // pure per-row expansion, zero shuffle
+    Gate("q_unpivot", (s, dir) =>
+      t(s, dir, "part")
+        .select(col("p_partkey"), col("p_retailprice"),
+          col("p_size").cast(DoubleType).as("p_size"))
+        .unpivot(Array(col("p_partkey")),
+          Array(col("p_retailprice"), col("p_size")), "metric", "val")
+        .orderBy(col("p_partkey"), col("metric")),
+      """SELECT p_partkey, 'p_retailprice' AS metric, p_retailprice AS val
+        |FROM part
+        |UNION ALL
+        |SELECT p_partkey, 'p_size', CAST(p_size AS DOUBLE) FROM part
+        |ORDER BY p_partkey, metric""".stripMargin),
+
+    // nested-struct flattening: build the deep shape in-plan (the testdata
+    // is flat parquet), flatten it back, and let the oracle check that the
+    // leaf paths surface with the right names, order, and values. The
+    // flatten itself is pure projection — Catalyst collapses struct-build +
+    // field-access so the plan never materializes the struct.
+    Gate("q_nested_flatten", (s, dir) => {
+      val nested = t(s, dir, "orders").select(
+        col("o_orderkey"),
+        struct(
+          col("o_custkey").as("custkey"),
+          struct(col("o_orderstatus").as("status"),
+            col("o_totalprice").as("total")).as("info")).as("cust"),
+        col("o_orderpriority"))
+      graft.functions.Nested.flatten(nested).orderBy(col("o_orderkey"))
+    },
+      """SELECT o_orderkey, o_custkey AS cust_custkey,
+        |  o_orderstatus AS cust_info_status, o_totalprice AS cust_info_total,
+        |  o_orderpriority
+        |FROM orders ORDER BY o_orderkey""".stripMargin),
+
+    // scores are library-specific, but the flagging RULE is not: the oracle
+    // consumes the materialized score column and independently applies the
+    // contamination-percentile cutoff + degenerate guard, so threshold
+    // logic is cross-engine verified (plus SketchSpec-style property tests)
+    Gate("q_iforest", (s, dir) => {
+      // retainScored: aux score dump + flagged output share one scoring
+      // pass via detect's internal cache; Verify's clearCache releases it
+      val flagged = IsolationForest.detect(t(s, dir, "events"),
+        Seq("value"), orderCol = "event_id", contamination = 0.05,
+        numTrees = 50, retainScored = true)
+      Aux.write(
+        flagged.select(col("event_id"), col("_iforest_score").as("score")),
+        s"/tmp/graft_oracle_aux/${Sql.sfTag(dir)}/iforest_scores")
+      flagged.filter(col("_meta_is_anomaly"))
+        .select(col("event_id"), col("value"),
+          floor(col("_iforest_score") * lit(10000.0) + lit(0.5))
+            .cast(LongType).as("score_x10k"))
+        .orderBy(col("event_id"))
+    },
+      // scores are model-specific; the oracle re-applies the flagging rule
+      // (95th-percentile cutoff + degenerate guard) to the materialized
+      // score column and must reproduce the flagged set exactly
+      """WITH s AS (SELECT event_id, score
+        |  FROM read_parquet('/tmp/graft_oracle_aux/{SF}/iforest_scores/*.parquet')),
+        |c AS (SELECT quantile_cont(score, 0.95) AS cut, MIN(score) AS mn,
+        |             MAX(score) AS mx FROM s)
+        |SELECT s.event_id, e.value,
+        |  CAST(FLOOR(s.score * 10000.0 + 0.5) AS BIGINT) AS score_x10k
+        |FROM s JOIN events e ON s.event_id = e.event_id, c
+        |WHERE c.mx > c.mn AND s.score >= c.cut
+        |ORDER BY s.event_id""".stripMargin),
+
+    Gate("q_pivot_builtin", (s, dir) =>
+      t(s, dir, "lineitem").groupBy(col("l_returnflag"))
+        .pivot("l_linestatus", Seq("O", "F"))
+        .agg(Semantics.exactSum(col("l_quantity")))
+        .withColumnRenamed("O", "qty_o").withColumnRenamed("F", "qty_f")
+        .orderBy(col("l_returnflag")),
+      s"""SELECT l_returnflag,
+         |  ${esum("CASE WHEN l_linestatus = 'O' THEN l_quantity END")} AS qty_o,
+         |  ${esum("CASE WHEN l_linestatus = 'F' THEN l_quantity END")} AS qty_f
+         |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
+
+    Gate("q_events_sliding", (s, dir) =>
+      // 2h windows sliding by 1h: every event lands in exactly two windows
+      t(s, dir, "events")
+        .groupBy(window(col("ts"), "2 hours", "1 hour").as("w"), col("event_type"))
+        .agg(count(lit(1)).as("n"), Semantics.exactSum(col("value")).as("total_value"))
+        .select(
+          date_format(col("w.start"), "yyyy-MM-dd HH:mm:ss").as("window_start"),
+          col("event_type"), col("n"), col("total_value"))
+        .orderBy(col("window_start"), col("event_type")),
+      s"""WITH windows AS (
+         |  SELECT date_trunc('hour', ts) AS window_start, event_type, value FROM events
+         |  UNION ALL
+         |  SELECT date_trunc('hour', ts) - INTERVAL '1 hour' AS window_start,
+         |    event_type, value FROM events)
+         |SELECT strftime(window_start, '%Y-%m-%d %H:%M:%S') AS window_start,
+         |  event_type, COUNT(*) AS n, ${esum("value")} AS total_value
+         |FROM windows GROUP BY 1, 2 ORDER BY window_start, event_type""".stripMargin),
+
+    Gate("q_embed_neardup", (s, dir) => {
+      // exact pairwise cosine ≥ 0.35 within a fixed 300-vector slice: the
+      // brute-force oracle twin of the LSH path.
+      //
+      // Physical shape: pair generation is a broadcast nested-loop join on
+      // the ARRAYS (id_a < id_b halves it) — never a join keyed on the
+      // 64-value dimension index, which would funnel the whole product
+      // matrix through 64 shuffle keys. Scoring is ONE codegen'd pass per
+      // pair (`fast_cosine`: dot and both norms in a single loop). The
+      // double-sum error (~1e-14) is orders of magnitude below both the
+      // 1e-4 rounding granularity and the engines' own decimal-quantization
+      // disagreement (~1e-18/element), so the round(4) hash-match with the
+      // DuckDB oracle is preserved — asserted empirically by the gate.
+      import graft.functions.CosineSim
+      CosineSim.register(s)
+      // limit(300) is an identity on the ≤300-row filtered slice but makes
+      // the bound STATICALLY provable (plan-hygiene BNLJ rule)
+      val emb = t(s, dir, "embeddings").filter(col("vec_id") < 300).limit(300)
+      val a = emb.select(col("vec_id").as("id_a"), col("embedding").as("ea"))
+      val b = emb.select(col("vec_id").as("id_b"), col("embedding").as("eb"))
+      a.join(broadcast(b), col("id_a") < col("id_b"))
+        .select(col("id_a"), col("id_b"),
+          round(CosineSim.fast_cosine(col("ea"), col("eb")), 4)
+            .as("similarity"))
+        .filter(col("similarity") >= 0.35)
+        .orderBy(col("id_a"), col("id_b"))
+    },
+      """WITH e AS (SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS v,
+        |                  generate_subscripts(embedding, 1) AS i
+        |           FROM embeddings WHERE vec_id < 300),
+        |norms AS (SELECT vec_id,
+        |    sqrt(CAST(SUM(CAST(v * v AS DECIMAL(38,18))) AS DOUBLE)) AS nrm
+        |  FROM e GROUP BY vec_id),
+        |dots AS (SELECT a.vec_id AS id_a, b.vec_id AS id_b,
+        |    CAST(SUM(CAST(a.v * b.v AS DECIMAL(38,18))) AS DOUBLE) AS dot
+        |  FROM e a JOIN e b USING (i) WHERE a.vec_id < b.vec_id
+        |  GROUP BY a.vec_id, b.vec_id)
+        |SELECT id_a, id_b, ROUND(dot / (na.nrm * nb.nrm), 4) AS similarity
+        |FROM dots
+        |JOIN norms na ON na.vec_id = id_a
+        |JOIN norms nb ON nb.vec_id = id_b
+        |WHERE ROUND(dot / (na.nrm * nb.nrm), 4) >= 0.35
+        |ORDER BY id_a, id_b""".stripMargin),
+
+    Gate("q_embed_semdedup", (s, dir) => {
+      // SemDeDup: connected components over the exact cosine ≥ 0.35 pair
+      // graph (the SAME pair construction q_embed_neardup hash-proves), one
+      // canonical survivor per component. The oracle re-derives the pairs
+      // with its own decimal dot products and closes them with a RECURSIVE
+      // CTE — so pair membership, component labels, and the keep flag are
+      // all independently verified. Scale: pairs come from a broadcast NLJ
+      // on a bounded slice here; at corpus scale the SAME components/keep
+      // code consumes LSH-candidate pairs (annJoin) instead of brute force.
+      import graft.functions.CosineSim
+      CosineSim.register(s)
+      val emb = t(s, dir, "embeddings").filter(col("vec_id") < 300).limit(300)
+      val a = emb.select(col("vec_id").as("id_a"), col("embedding").as("ea"))
+      val b = emb.select(col("vec_id").as("id_b"), col("embedding").as("eb"))
+      val pairs = a.join(broadcast(b), col("id_a") < col("id_b"))
+        .select(col("id_a"), col("id_b"),
+          round(CosineSim.fast_cosine(col("ea"), col("eb")), 4)
+            .as("similarity"))
+        .filter(col("similarity") >= 0.35)
+      graft.operators.Components.keepCanonical(
+        emb.select(col("vec_id")), "vec_id", pairs, "id_a", "id_b")
+        .orderBy(col("vec_id"))
+    },
+      // same pair derivation as q_embed_neardup, then transitive closure via
+      // a recursive CTE: every vertex labeled with the min id it can reach
+      """WITH RECURSIVE
+        |e AS (SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS v,
+        |             generate_subscripts(embedding, 1) AS i
+        |      FROM embeddings WHERE vec_id < 300),
+        |norms AS (SELECT vec_id,
+        |    sqrt(CAST(SUM(CAST(v * v AS DECIMAL(38,18))) AS DOUBLE)) AS nrm
+        |  FROM e GROUP BY vec_id),
+        |dots AS (SELECT a.vec_id AS id_a, b.vec_id AS id_b,
+        |    CAST(SUM(CAST(a.v * b.v AS DECIMAL(38,18))) AS DOUBLE) AS dot
+        |  FROM e a JOIN e b USING (i) WHERE a.vec_id < b.vec_id
+        |  GROUP BY a.vec_id, b.vec_id),
+        |p AS (SELECT id_a, id_b FROM dots
+        |  JOIN norms na ON na.vec_id = id_a
+        |  JOIN norms nb ON nb.vec_id = id_b
+        |  WHERE ROUND(dot / (na.nrm * nb.nrm), 4) >= 0.35),
+        |sym AS (SELECT id_a AS u, id_b AS v FROM p
+        |  UNION ALL SELECT id_b, id_a FROM p),
+        |reach(id, lbl) AS (
+        |  SELECT vec_id, vec_id FROM embeddings WHERE vec_id < 300
+        |  UNION
+        |  SELECT sym.v, reach.lbl FROM sym JOIN reach ON sym.u = reach.id)
+        |SELECT id AS vec_id, MIN(lbl) AS cluster, MIN(lbl) = id AS keep
+        |FROM reach GROUP BY id ORDER BY vec_id""".stripMargin),
+
+    // chart auto-selection is a pure function of column stats, so the
+    // oracle re-derives the SAME selection from its own exact distinct
+    // counts and the reference's thresholds (cat ≤ 50, pie ≤ 10), with a
+    // negative guard proving high-cardinality exclusion — a selection-rule
+    // regression on either side breaks the hash match
+    Gate("q_viz_charts", (s, dir) => {
+      import s.implicits._
+      val profiles = graft.viz.Visualization.analyze(t(s, dir, "events"))
+      val charts = graft.viz.Visualization.selectCharts(profiles)
+      charts.map(c => (c.chartType, c.priority, c.x, c.y.getOrElse(""),
+        c.agg.getOrElse(""))).toDF("chart_type", "priority", "x", "y", "agg")
+        .orderBy(col("priority").desc, col("chart_type"), col("x"), col("y"))
+    },
+      // replicate selectCharts rule-for-rule over events' exact stats:
+      // id-suffixed columns are never chart axes; event_type is the only
+      // ≤50-distinct categorical; value the only aggregatable numeric; ts
+      // the only datetime. Guards keep the oracle honest if data drifts.
+      """WITH st AS (SELECT COUNT(DISTINCT event_type) AS d_et,
+        |                   COUNT(DISTINCT props) AS d_props FROM events)
+        |SELECT * FROM (
+        |  SELECT 'bar' AS chart_type, 9 AS priority, 'event_type' AS x,
+        |         'value' AS y, 'sum' AS agg FROM st WHERE d_et <= 50
+        |  UNION ALL SELECT 'bar', 9, 'props', 'value', 'sum' FROM st
+        |    WHERE d_props <= 50
+        |  UNION ALL SELECT 'line', 8, 'ts', 'value', 'sum' FROM st
+        |  UNION ALL SELECT 'pie', 6, 'event_type', '', 'count' FROM st
+        |    WHERE d_et <= 10
+        |  UNION ALL SELECT 'histogram', 5, 'value', '', '' FROM st
+        |  UNION ALL SELECT 'heatmap', 5, 'event_type', 'props', 'sum' FROM st
+        |    WHERE d_props <= 50
+        |  UNION ALL SELECT 'box', 4, 'event_type', 'value', '' FROM st
+        |    WHERE d_et <= 50)
+        |ORDER BY priority DESC, chart_type, x, y""".stripMargin),
+
+    Gate("q_echarts_config", (s, dir) => {
+      // ECharts config generation gated end-to-end: four chart configs
+      // over the event-type count aggregate, emitted as full JSON strings.
+      // The oracle re-derives the SAME strings from its own aggregation
+      // plus the literal config skeleton — a drift in the aggregate, the
+      // field order, number rendering, or any template constant breaks
+      // the hash
+      import s.implicits._
+      val agg = t(s, dir, "events").groupBy(col("event_type"))
+        .agg(count(lit(1)).as("y")).orderBy(col("event_type")).collect()
+      val rows = agg.toSeq.map(r =>
+        Map[String, Any]("x" -> r.getString(0), "y" -> r.getLong(1)))
+      val title = Some("Events by type")
+      import graft.viz.Echarts
+      Seq(
+        ("area", Echarts.area(rows, "x", "y", title).render),
+        ("bar", Echarts.bar(rows, "x", "y", title).render),
+        ("line", Echarts.line(rows, "x", "y", title).render),
+        ("pie", Echarts.pie(rows, "x", "y", title).render))
+        .toDF("chart_type", "config_json").orderBy(col("chart_type"))
+    },
+      // re-template the four configs from DuckDB's own aggregate: the
+      // literal skeletons below are the contract — if the Scala generator
+      // reorders a field, changes a constant, or renders a number
+      // differently, the strings diverge
+      """WITH a AS (SELECT event_type AS x, CAST(COUNT(*) AS BIGINT) AS y
+        |    FROM events GROUP BY 1),
+        |s AS (SELECT
+        |    string_agg('"' || x || '"', ',' ORDER BY x) AS cats,
+        |    string_agg(CAST(y AS VARCHAR), ',' ORDER BY x) AS vals,
+        |    string_agg('{"name":"' || x || '","value":' ||
+        |      CAST(y AS VARCHAR) || '}', ',' ORDER BY x) AS pies
+        |  FROM a)
+        |SELECT chart_type, config_json FROM (
+        |  SELECT 'area' AS chart_type,
+        |    '{"title":{"text":"Events by type","left":"center"},"tooltip":{"trigger":"axis"},"grid":{"left":"3%","right":"4%","bottom":"3%","top":"15%","containLabel":true},"xAxis":{"type":"category","data":['
+        |    || cats ||
+        |    '],"boundaryGap":false},"yAxis":{"type":"value"},"series":[{"type":"line","data":['
+        |    || vals ||
+        |    '],"smooth":true,"emphasis":{"focus":"series"},"symbol":"circle","symbolSize":6,"areaStyle":{"opacity":0.3}}]}'
+        |    AS config_json FROM s
+        |  UNION ALL SELECT 'bar',
+        |    '{"title":{"text":"Events by type","left":"center"},"tooltip":{"trigger":"axis","axisPointer":{"type":"shadow"}},"grid":{"left":"3%","right":"4%","bottom":"3%","top":"15%","containLabel":true},"xAxis":{"type":"category","data":['
+        |    || cats ||
+        |    ']},"yAxis":{"type":"value","data":null},"series":[{"type":"bar","data":['
+        |    || vals ||
+        |    '],"emphasis":{"focus":"series"},"itemStyle":{"borderRadius":[4,4,0,0]}}],"animationEasing":"elasticOut"}'
+        |    FROM s
+        |  UNION ALL SELECT 'line',
+        |    '{"title":{"text":"Events by type","left":"center"},"tooltip":{"trigger":"axis"},"grid":{"left":"3%","right":"4%","bottom":"3%","top":"15%","containLabel":true},"xAxis":{"type":"category","data":['
+        |    || cats ||
+        |    '],"boundaryGap":false},"yAxis":{"type":"value"},"series":[{"type":"line","data":['
+        |    || vals ||
+        |    '],"smooth":true,"emphasis":{"focus":"series"},"symbol":"circle","symbolSize":6}]}'
+        |    FROM s
+        |  UNION ALL SELECT 'pie',
+        |    '{"title":{"text":"Events by type","left":"center"},"tooltip":{"trigger":"item","formatter":"{b}: {c} ({d}%)"},"legend":{"orient":"horizontal","bottom":"5%"},"series":[{"type":"pie","radius":"70%","center":["50%","45%"],"data":['
+        |    || pies ||
+        |    '],"emphasis":{"itemStyle":{"shadowBlur":10,"shadowOffsetX":0,"shadowColor":"rgba(0, 0, 0, 0.5)"}},"label":{"show":true,"formatter":"{b}: {d}%"},"animationType":"scale","animationEasing":"elasticOut"}]}'
+        |    FROM s)
+        |ORDER BY chart_type""".stripMargin),
+
+    Gate("q_insight_profile", (s, dir) => {
+      // the insight-generation profile prompt, line by line: every cell is
+      // integer-derived (floor-scaled means, exact distincts), so DuckDB
+      // rebuilds the exact text from nation's stats — a formatting or
+      // stats regression on either side breaks the hash
+      import s.implicits._
+      val txt = graft.viz.InsightProfile.profileText(t(s, dir, "nation"))
+      txt.split("\n", -1).toSeq.zipWithIndex
+        .map { case (l, i) => (i.toLong, l) }
+        .toDF("line_no", "line").orderBy(col("line_no"))
+    },
+      // rebuild the profile prompt text from nation's exact stats: the
+      // mean renders from the SAME floor-scaled integer on both sides
+      // ((Σx·10⁴) floor-div n), distincts are exact — no float ever
+      // becomes a string
+      """WITH st AS (SELECT CAST(COUNT(*) AS BIGINT) AS n,
+        |    CAST(MIN(n_nationkey) AS BIGINT) AS k0,
+        |    CAST(MAX(n_nationkey) AS BIGINT) AS k1,
+        |    (CAST(SUM(n_nationkey) AS BIGINT) * 10000) // COUNT(*) AS km,
+        |    CAST(MIN(n_regionkey) AS BIGINT) AS r0,
+        |    CAST(MAX(n_regionkey) AS BIGINT) AS r1,
+        |    (CAST(SUM(n_regionkey) AS BIGINT) * 10000) // COUNT(*) AS rm,
+        |    CAST(COUNT(DISTINCT n_name) AS BIGINT) AS dn
+        |  FROM nation)
+        |SELECT line_no, line FROM (
+        |  SELECT CAST(0 AS BIGINT) AS line_no,
+        |    'Dataset sample: ' || n || ' rows, 3 columns' AS line FROM st
+        |  UNION ALL SELECT 1, '- n_nationkey (int): min=' || k0 ||
+        |    ', max=' || k1 || ', mean=' ||
+        |    (CASE WHEN km < 0 THEN '-' ELSE '' END) || (ABS(km) // 10000)
+        |    || '.' || lpad(CAST(ABS(km) % 10000 AS VARCHAR), 4, '0')
+        |    FROM st
+        |  UNION ALL SELECT 2, '- n_name (string): ' || dn ||
+        |    ' distinct values' FROM st
+        |  UNION ALL SELECT 3, '- n_regionkey (int): min=' || r0 ||
+        |    ', max=' || r1 || ', mean=' ||
+        |    (CASE WHEN rm < 0 THEN '-' ELSE '' END) || (ABS(rm) // 10000)
+        |    || '.' || lpad(CAST(ABS(rm) % 10000 AS VARCHAR), 4, '0')
+        |    FROM st)
+        |ORDER BY line_no""".stripMargin),
+
+    Gate("q_multimodal_features", (s, dir) => {
+      // REAL codec roundtrip gate: the synthetic corpus encodes PPM/BMP/WAV
+      // payloads as an arithmetic function of media_id, extractFeatures
+      // DECODES them, and the oracle recomputes expected container sizes
+      // and leading features (width / duration) from the same arithmetic —
+      // so encoder, decoder, and feature head are all cross-checked. The
+      // stub-path rows (opaque payloads) export only their byte count.
+      val corpus = graft.multimodal.Multimodal.syntheticCorpus(s, 99)
+      graft.multimodal.Multimodal.extractFeatures(corpus).toDF()
+        .select(col("media_id"), col("kind"), col("n_bytes"),
+          coalesce(
+            when(col("media_id") % 4 < 3,
+              floor(element_at(col("feature"), 1).cast(DoubleType) *
+                lit(10000.0) + lit(0.5)).cast(LongType).cast(StringType)),
+            lit("")).as("f0_x10k"))
+        .orderBy(col("media_id"))
+    },
+      // arithmetic ground truth for the synthetic corpus: container sizes
+      // (PPM header 13B + 3wh; BMP 54B + padded rows; WAV 44B + 2·samples)
+      // and leading features (image width·10⁴; WAV duration·10⁴ through the
+      // same float32 widening the Scala side performs)
+      """WITH g AS (SELECT unnest(range(99)) AS i)
+        |SELECT CAST(i AS BIGINT) AS media_id,
+        |  CASE WHEN i % 4 = 2 THEN 'audio'
+        |       WHEN i % 4 = 3 AND i % 8 = 3 THEN 'video'
+        |       ELSE 'image' END AS kind,
+        |  CAST(CASE
+        |    WHEN i % 4 = 0 THEN 13 + 3 * (16 + i % 32) * (12 + i % 24)
+        |    WHEN i % 4 = 1 THEN 54 + (((20 + i % 16) * 3 + 3) // 4) * 4 * (10 + i % 16)
+        |    WHEN i % 4 = 2 THEN 44 + 2 * 800 * (1 + i % 3)
+        |    ELSE 16 + i % 64 END AS BIGINT) AS n_bytes,
+        |  CASE
+        |    WHEN i % 4 = 0 THEN CAST((16 + i % 32) * 10000 AS VARCHAR)
+        |    WHEN i % 4 = 1 THEN CAST((20 + i % 16) * 10000 AS VARCHAR)
+        |    WHEN i % 4 = 2 THEN CAST(CAST(FLOOR(
+        |      CAST(CAST((1 + i % 3) / 10.0 AS REAL) AS DOUBLE) * 10000.0 + 0.5)
+        |      AS BIGINT) AS VARCHAR)
+        |    ELSE '' END AS f0_x10k
+        |FROM g ORDER BY media_id""".stripMargin),
+
+    Gate("q_image_resize", (s, dir) => {
+      // REAL decode→resize→re-encode→decode roundtrip on the gradient PPM
+      // rows: the oracle replays fitWithin + nearest-neighbor source-pixel
+      // selection + the gradient formula arithmetically, so a one-pixel
+      // drift anywhere in the codec or scaler changes pix_sum
+      import s.implicits._
+      val corpus = graft.multimodal.Multimodal.syntheticCorpus(s, 99)
+        .filter(col("media_id") % 4 === 0)
+      val resized = graft.multimodal.Multimodal.resizeImages(corpus, 8, 8)
+      resized.select(col("media_id"), col("width"), col("height"),
+          col("content"))
+        .as[(Long, Int, Int, Array[Byte])]
+        .map { case (id, w, h, bytes) =>
+          val img = graft.multimodal.Codecs.decodePpm(bytes).get
+          (id, img.width, img.height, w, h,
+            img.rgb.foldLeft(0L)((a, b) => a + (b & 0xff)))
+        }
+        .toDF("media_id", "dec_w", "dec_h", "meta_w", "meta_h", "pix_sum")
+        .orderBy(col("media_id"))
+    },
+      // arithmetic replay of fitWithin (identical double ops) + nearest-
+      // neighbor source indexing + the gradient pixel formula
+      """WITH img AS (SELECT i, 16 + i % 32 AS w, 12 + i % 24 AS h
+        |  FROM range(99) g(i) WHERE i % 4 = 0),
+        |fit AS (SELECT i, w, h,
+        |    GREATEST(1, CAST(FLOOR(w * LEAST(1.0, LEAST(8.0 / w, 8.0 / h)))
+        |      AS INT)) AS nw,
+        |    GREATEST(1, CAST(FLOOR(h * LEAST(1.0, LEAST(8.0 / w, 8.0 / h)))
+        |      AS INT)) AS nh
+        |  FROM img),
+        |xs AS (SELECT i, w, h, nw, nh, unnest(range(nw)) AS x FROM fit),
+        |ys AS (SELECT i, w, h, nw, nh, x, unnest(range(nh)) AS y FROM xs),
+        |px AS (SELECT i, nw, nh,
+        |    (LEAST(h - 1, y * h // nh) * w
+        |      + LEAST(w - 1, x * w // nw)) AS p
+        |  FROM ys)
+        |SELECT CAST(i AS BIGINT) AS media_id,
+        |  CAST(ANY_VALUE(nw) AS INT) AS dec_w,
+        |  CAST(ANY_VALUE(nh) AS INT) AS dec_h,
+        |  CAST(ANY_VALUE(nw) AS INT) AS meta_w,
+        |  CAST(ANY_VALUE(nh) AS INT) AS meta_h,
+        |  CAST(SUM((p + i) % 256 + (2 * p + i) % 256 + (3 * p + i) % 256)
+        |    AS BIGINT) AS pix_sum
+        |FROM px GROUP BY i ORDER BY media_id""".stripMargin),
+
+    Gate("q_image_codec_roundtrip", (s, dir) => {
+      // REAL PNG + JPEG codecs (the JDK's ImageIO — no external library):
+      // deterministic gradient pixels → encode → decode, executor-side.
+      // PNG is lossless, so the decoded pixel sum replays ARITHMETICALLY
+      // in the oracle (a one-pixel drift anywhere in encoder or decoder
+      // breaks the hash); JPEG is lossy, so it gates on dims + a mean
+      // absolute channel error bound
+      import s.implicits._
+      // smooth two-axis gradient + flat blue channel: JPEG-friendly (no
+      // mod-256 sawtooth edges) and integer-division replayable
+      val base = (0 until 60).map { i =>
+        val w = 16 + i % 16; val h = 12 + i % 12
+        val rgb = new Array[Byte](w * h * 3)
+        var p = 0
+        while (p < w * h) {
+          val x = p % w; val y = p / w
+          rgb(p * 3) = (x * 255 / (w - 1)).toByte
+          rgb(p * 3 + 1) = (y * 255 / (h - 1)).toByte
+          rgb(p * 3 + 2) = ((i * 4) % 256).toByte
+          p += 1
+        }
+        (i.toLong, w, h, rgb)
+      }
+      base.toDF("media_id", "w", "h", "rgb")
+        .repartition(4)
+        .as[(Long, Int, Int, Array[Byte])]
+        .flatMap { case (id, w, h, rgb) =>
+          val img = graft.multimodal.Codecs.ImagePixels(w, h, rgb)
+          val png = graft.multimodal.Codecs
+            .decodeImage(graft.multimodal.Codecs.encodePng(img)).get
+          val pngOk = png.width == w && png.height == h &&
+            java.util.Arrays.equals(png.rgb, rgb)
+          val pngSum = png.rgb.foldLeft(0L)((a, b) => a + (b & 0xff))
+          val jpg = graft.multimodal.Codecs
+            .decodeImage(graft.multimodal.Codecs.encodeJpeg(img, 0.9f)).get
+          val err = {
+            var sum = 0L; var i2 = 0
+            while (i2 < rgb.length) {
+              sum += math.abs((rgb(i2) & 0xff) - (jpg.rgb(i2) & 0xff))
+              i2 += 1
+            }
+            sum.toDouble / rgb.length
+          }
+          Seq((id, "jpeg", jpg.width, jpg.height, -1L,
+              jpg.width == w && jpg.height == h && err < 6.0),
+            (id, "png", png.width, png.height, pngSum, pngOk))
+        }
+        .toDF("media_id", "container", "dec_w", "dec_h", "pix_sum", "ok")
+        .orderBy(col("media_id"), col("container"))
+    },
+      // PNG pixel sums replayed from the gradient arithmetic; JPEG rows
+      // carry the engine-verified lossy invariants
+      """WITH ids AS (SELECT CAST(i AS BIGINT) AS i FROM range(0, 60) t(i)),
+        |base AS (SELECT i, CAST(16 + i % 16 AS INT) AS w,
+        |    CAST(12 + i % 12 AS INT) AS h FROM ids),
+        |pix AS (SELECT b.i,
+        |    SUM(((p % b.w) * 255 // (b.w - 1)) +
+        |        ((p // b.w) * 255 // (b.h - 1)) +
+        |        ((b.i * 4) % 256)) AS ps
+        |  FROM base b JOIN range(0, 1024) rp(p) ON p < b.w * b.h
+        |  GROUP BY b.i)
+        |SELECT b.i AS media_id, c.container,
+        |  b.w AS dec_w, b.h AS dec_h,
+        |  CASE WHEN c.container = 'png' THEN CAST(pix.ps AS BIGINT)
+        |       ELSE CAST(-1 AS BIGINT) END AS pix_sum,
+        |  TRUE AS ok
+        |FROM base b JOIN pix ON pix.i = b.i
+        |CROSS JOIN (SELECT 'jpeg' AS container UNION ALL SELECT 'png') c
+        |ORDER BY media_id, container""".stripMargin),
+
+    Gate("q_audio_resample", (s, dir) => {
+      // rate normalization (8 kHz sine tones → 16 kHz): exact-rational
+      // linear interpolation in pure integer arithmetic, re-encoded and
+      // RE-DECODED — sample counts and duration replay arithmetically
+      // from the generator; the energy invariant (rms preserved) is
+      // engine-verified. The ASR-pipeline step before feature extraction
+      import s.implicits._
+      val audio = graft.multimodal.Multimodal.syntheticCorpus(s, 99)
+        .filter(col("kind") === "audio")
+      graft.multimodal.Multimodal.resampleAudio(audio, 16000)
+        .select(col("media_id"), col("content"), col("duration_ms"))
+        .as[(Long, Array[Byte], Long)]
+        .map { case (id, bytes, durMeta) =>
+          val info = graft.multimodal.Codecs.decodeWav(bytes).get
+          val samples = graft.multimodal.Codecs.decodeWavSamples(bytes).get
+          // the 8 kHz original, regenerated arithmetically for the rms twin
+          val nIn = 800 * (1 + (id % 3).toInt)
+          val freq = 200.0 + (id % 10) * 50
+          val orig = Array.tabulate(nIn)(t =>
+            (math.sin(2 * math.Pi * freq * t / 8000) * 12000).toShort)
+          def rms(a: Array[Short]): Double =
+            math.sqrt(a.map(x => x.toDouble * x).sum / a.length)
+          (id, nIn.toLong, samples.length.toLong, info.sampleRate,
+            info.durationMs,
+            durMeta == info.durationMs &&
+              math.abs(rms(samples) / rms(orig) - 1.0) < 0.05)
+        }
+        .toDF("media_id", "n_in", "n_out", "rate_out", "duration_ms", "ok")
+        .orderBy(col("media_id"))
+    },
+      // sample-count and duration arithmetic from the generator: audio
+      // rows are media ids ≡ 2 (mod 4); n_in = 800·(1 + id%3),
+      // n_out = 2·(n_in − 1) + 1, duration = n_out·1000 // 16000
+      """WITH a AS (SELECT CAST(i AS BIGINT) AS media_id,
+        |    800 * (1 + CAST(i AS BIGINT) % 3) AS n_in
+        |  FROM range(0, 99) t(i) WHERE i % 4 = 2)
+        |SELECT media_id, n_in,
+        |  (n_in - 1) * 2 + 1 AS n_out,
+        |  CAST(16000 AS INT) AS rate_out,
+        |  ((n_in - 1) * 2 + 1) * 1000 // 16000 AS duration_ms,
+        |  TRUE AS ok
+        |FROM a ORDER BY media_id""".stripMargin),
+
+    Gate("q_binary_ingest", (s, dir) => {
+      // media-lake ingestion: PNG files written to a directory, read back
+      // through the binaryFile source (pathGlobFilter prunes at the
+      // LISTING — a decoy .txt file must never be read), decoded, and
+      // verified against the gradient arithmetic. The on-ramp that turns
+      // a directory of images into the binary-column multimodal model
+      import s.implicits._
+      // fixture dir session-cached ([[StageOnce]]): the PNG lake is a pure
+      // function of nothing but the loop below, so retries/verify passes
+      // reuse the files at an appId-keyed, sweep-covered path
+      val stagePath = StageOnce.dir(s, dir, "png_lake") { p =>
+        val stage = new java.io.File(p)
+        stage.mkdirs()
+        (0 until 20).foreach { i =>
+          val w = 16 + i % 16; val h = 12 + i % 12
+          val rgb = new Array[Byte](w * h * 3)
+          var q = 0
+          while (q < w * h) {
+            val x = q % w; val y = q / w
+            rgb(q * 3) = (x * 255 / (w - 1)).toByte
+            rgb(q * 3 + 1) = (y * 255 / (h - 1)).toByte
+            rgb(q * 3 + 2) = ((i * 4) % 256).toByte
+            q += 1
+          }
+          java.nio.file.Files.write(
+            stage.toPath.resolve(f"img_$i%03d.png"),
+            graft.multimodal.Codecs.encodePng(
+              graft.multimodal.Codecs.ImagePixels(w, h, rgb)))
+        }
+        java.nio.file.Files.write(stage.toPath.resolve("decoy.txt"),
+          "not an image".getBytes("UTF-8"))
+        ()
+      }
+      graft.io.Sources.binaryFiles(s, stagePath,
+          pathGlob = Some("*.png"))
+        .select(element_at(split(col("path"), "/"), -1).as("file"),
+          col("length"), col("content"))
+        .as[(String, Long, Array[Byte])]
+        .map { case (f, len, bytes) =>
+          val img = graft.multimodal.Codecs.decodeImage(bytes).get
+          val i = f.stripPrefix("img_").stripSuffix(".png").toInt
+          val sum = img.rgb.foldLeft(0L)((a, b) => a + (b & 0xff))
+          (f, i.toLong, img.width, img.height, sum,
+            len == bytes.length.toLong)
+        }
+        .toDF("file", "i", "dec_w", "dec_h", "pix_sum", "len_ok")
+        .orderBy(col("file"))
+    },
+      // dims + pixel sums replay from the gradient arithmetic; the decoy
+      // file must be absent (glob pruned at listing)
+      """WITH ids AS (SELECT CAST(i AS BIGINT) AS i FROM range(0, 20) t(i)),
+        |base AS (SELECT i, CAST(16 + i % 16 AS INT) AS w,
+        |    CAST(12 + i % 12 AS INT) AS h FROM ids),
+        |pix AS (SELECT b.i,
+        |    SUM(((p % b.w) * 255 // (b.w - 1)) +
+        |        ((p // b.w) * 255 // (b.h - 1)) +
+        |        ((b.i * 4) % 256)) AS ps
+        |  FROM base b JOIN range(0, 1024) rp(p) ON p < b.w * b.h
+        |  GROUP BY b.i)
+        |SELECT 'img_' || lpad(CAST(b.i AS VARCHAR), 3, '0') || '.png'
+        |    AS file,
+        |  b.i, b.w AS dec_w, b.h AS dec_h,
+        |  CAST(pix.ps AS BIGINT) AS pix_sum, TRUE AS len_ok
+        |FROM base b JOIN pix ON pix.i = b.i
+        |ORDER BY file""".stripMargin),
+
+    Gate("q_frame_sample", (s, dir) =>
+      // metadata-driven frame-sampling plan for video rows: one timestamp
+      // row per everyMs tick across each clip's duration — pure column
+      // ops, the payload bytes are never touched
+      graft.multimodal.Multimodal.frameSamplePlan(
+        graft.multimodal.Multimodal.syntheticCorpus(s, 99), everyMs = 7000L)
+        .select(col("media_id"), col("duration_ms"), col("frame_ts_ms"))
+        .orderBy(col("media_id"), col("frame_ts_ms")),
+      // list range is stop-EXCLUSIVE (+1 makes it match the inclusive
+      // Spark `sequence`)
+      """WITH v AS (SELECT i, 1000 * (1 + i % 30) AS dur
+        |  FROM range(99) g(i) WHERE i % 4 = 3 AND i % 8 = 3)
+        |SELECT CAST(i AS BIGINT) AS media_id,
+        |  CAST(dur AS BIGINT) AS duration_ms,
+        |  CAST(unnest(range(0, dur + 1, 7000)) AS BIGINT) AS frame_ts_ms
+        |FROM v ORDER BY media_id, frame_ts_ms""".stripMargin),
+
+    Gate("q_fuzzy_match", (s, dir) => {
+      // entity resolution: suppliers vs a deterministically typo'd copy
+      // (one char deleted at a key-dependent position). The blocked join
+      // must find EXACTLY the pairs DuckDB's brute-force cross join +
+      // levenshtein finds — including incidental near-collisions between
+      // different suppliers' serial-number names
+      val sup = t(s, dir, "supplier")
+      val a = sup.select(col("s_suppkey").as("id_a"),
+        col("s_name").as("name_a"))
+      val b = sup.select((col("s_suppkey") + 100000L).as("id_b"),
+        concat(expr("substring(s_name, 1, CAST(s_suppkey % 10 + 4 AS INT))"),
+          expr("substring(s_name, CAST(s_suppkey % 10 + 6 AS INT), 1000)"))
+          .as("name_b"))
+      graft.operators.FuzzyMatch.editDistanceJoin(
+        a, b, "id_a", "name_a", "id_b", "name_b", maxDist = 1)
+        .orderBy(col("id_a"), col("id_b"))
+    },
+      // brute-force ground truth: every (supplier, typo'd-copy) pair
+      // within edit distance 1 — the blocked q-gram join must reproduce
+      // this set exactly
+      """WITH a AS (SELECT s_suppkey AS id_a, s_name AS name_a
+        |  FROM supplier),
+        |b AS (SELECT s_suppkey + 100000 AS id_b,
+        |    concat(substr(s_name, 1, CAST(s_suppkey % 10 + 4 AS INT)),
+        |      substr(s_name, CAST(s_suppkey % 10 + 6 AS INT), 1000))
+        |      AS name_b
+        |  FROM supplier)
+        |SELECT id_a, id_b,
+        |  CAST(levenshtein(name_a, name_b) AS INTEGER) AS dist
+        |FROM a, b WHERE levenshtein(name_a, name_b) <= 1
+        |ORDER BY id_a, id_b""".stripMargin),
+
+    Gate("q_golden_records", (s, dir) => {
+      // entity-resolution capstone: blocked fuzzy match → components →
+      // SURVIVORSHIP merge into one golden record per cluster. Names get
+      // an md5-hex suffix so BASE records sit far apart (sequential TPC-H
+      // names chain at distance 1 — everything would merge); each record
+      // gets TWO twins sharing the SAME one-char-deleted name, so the
+      // name vote is 2-to-1 FOR the typo (most-frequent must beat the
+      // original); brand is unanimous; price is all-distinct (tie →
+      // lexicographically smallest). Oracle replays pairs, closure, and
+      // the vote brute-force
+      val b0 = t(s, dir, "part").filter(col("p_partkey") % 20 === 0)
+        .withColumn("nm", concat(col("p_name"), lit(" "),
+          substring(md5(col("p_partkey").cast(StringType)), 1, 8)))
+        .withColumn("off",
+          (length(col("p_name")) + lit(2) + col("p_partkey") % 5)
+            .cast("int"))
+        .withColumn("typo", concat(expr("substring(nm, 1, off - 1)"),
+          expr("substring(nm, off + 1, 1000)")))
+      def rec(idOff: Long, nameCol: org.apache.spark.sql.Column,
+          priceOff: Double) =
+        b0.select((col("p_partkey") + idOff).as("rid"),
+          nameCol.as("name"), col("p_brand").as("brand"),
+          (col("p_retailprice") + priceOff)
+            .cast(org.apache.spark.sql.types.DecimalType(12, 2))
+            .as("price"))
+      val all = rec(0L, col("nm"), 0.0)
+        .unionByName(rec(100000L, col("typo"), 1.0))
+        .unionByName(rec(200000L, col("typo"), 2.0))
+      graft.operators.EntityResolution.goldenRecords(all, "rid", "name",
+          Seq("name", "brand", "price"), maxDist = 1)
+        .orderBy(col("cluster_id"), col("field"))
+    },
       // brute-force pair + closure + vote replay over the same fixture
       """WITH RECURSIVE
         |b0 AS (SELECT p_partkey, p_brand, p_retailprice,
@@ -3149,1230 +2416,73 @@ object ExtraQueries {
         |SELECT t.cluster_id, sz.n_members, t.field,
         |  t.value AS golden_value
         |FROM top t JOIN sz USING (cluster_id) WHERE rk = 1
-        |ORDER BY cluster_id, field""".stripMargin,
+        |ORDER BY cluster_id, field""".stripMargin),
 
-    "q_interval_join_outer_twin" ->
-      // inner matches + watermark-proven unmatched purchases; pending
-      // rows (upper bound not yet passed by the final watermark) on
-      // neither side. Microsecond epochs keep every bound integral
-      """WITH p AS (SELECT event_id, user_id, ts FROM events
-        |  WHERE event_type = 'purchase' AND user_id % 3 = 0),
-        |c AS (SELECT event_id, user_id, ts FROM events
-        |  WHERE event_type = 'click' AND user_id % 3 = 0),
-        |wm AS (SELECT LEAST((SELECT max(epoch_us(ts)) FROM p),
-        |    (SELECT max(epoch_us(ts)) FROM c)) - 600000000 AS w),
-        |m AS (SELECT p.event_id AS purchase_id, c.event_id AS click_id
-        |  FROM p JOIN c ON p.user_id = c.user_id
-        |    AND epoch_us(c.ts) >= epoch_us(p.ts) - 600000000
-        |    AND epoch_us(c.ts) <= epoch_us(p.ts) + 600000000),
-        |unmatched AS (SELECT p.event_id AS purchase_id,
-        |    CAST(-1 AS BIGINT) AS click_id
-        |  FROM p, wm
-        |  WHERE p.event_id NOT IN (SELECT purchase_id FROM m)
-        |    AND epoch_us(p.ts) + 600000000 < wm.w)
-        |SELECT * FROM m
-        |UNION ALL SELECT * FROM unmatched
-        |ORDER BY purchase_id, click_id""".stripMargin,
-
-    "q_collapse_runs" ->
-      """WITH l AS (SELECT event_id, user_id, event_type,
-        |    LAG(event_type) OVER (PARTITION BY user_id
-        |      ORDER BY ts, event_id) AS prev
-        |  FROM events)
-        |SELECT event_id, user_id, event_type FROM l
-        |WHERE prev IS NULL OR prev <> event_type
-        |ORDER BY event_id""".stripMargin,
-
-    "q_user_overlap" ->
-      """WITH ut AS (SELECT DISTINCT event_type AS t, user_id AS u
-        |  FROM events),
-        |sz AS (SELECT t, count(*) AS n FROM ut GROUP BY 1),
-        |p AS (SELECT a.t AS type_a, b.t AS type_b, count(*) AS n_both
-        |  FROM ut a JOIN ut b ON a.u = b.u AND a.t < b.t GROUP BY 1, 2)
-        |SELECT type_a, type_b, CAST(sa.n AS BIGINT) AS n_a,
-        |  CAST(sb.n AS BIGINT) AS n_b, CAST(n_both AS BIGINT) AS n_both,
-        |  CAST((n_both * 1000000) // (sa.n + sb.n - n_both) AS BIGINT)
-        |    AS jaccard_e6
-        |FROM p JOIN sz sa ON sa.t = p.type_a JOIN sz sb ON sb.t = p.type_b
-        |ORDER BY type_a, type_b""".stripMargin,
-
-    "q_attribution" ->
-      """WITH p AS (SELECT user_id, ts FROM events
-        |  WHERE event_type = 'purchase'),
-        |t0 AS (SELECT user_id, ts AS t_ts,
-        |    max_by(event_type, event_id) AS touch_type
-        |  FROM events WHERE event_type <> 'purchase' GROUP BY 1, 2),
-        |a AS (SELECT p.user_id, p.ts,
-        |    (SELECT t.touch_type FROM t0 t WHERE t.user_id = p.user_id
-        |      AND t.t_ts < p.ts ORDER BY t.t_ts DESC LIMIT 1) AS touch_type,
-        |    (SELECT MAX(t.t_ts) FROM t0 t WHERE t.user_id = p.user_id
-        |      AND t.t_ts < p.ts) AS t_ts
-        |  FROM p),
-        |c AS (SELECT COALESCE(CASE WHEN t_ts IS NOT NULL
-        |      AND epoch_us(ts) - epoch_us(t_ts) <= 3600000000
-        |      THEN touch_type END, 'none') AS touch_type,
-        |    CAST(count(*) AS BIGINT) AS n_purchases
-        |  FROM a GROUP BY 1),
-        |tt AS (SELECT SUM(n_purchases) AS t FROM c)
-        |SELECT touch_type, n_purchases,
-        |  CAST((n_purchases * 1000000) // tt.t AS BIGINT) AS share_e6
-        |FROM c CROSS JOIN tt ORDER BY touch_type""".stripMargin,
-
-    "q_interpolate" ->
-      s"""WITH b AS (SELECT event_id, event_type, value, ROW_NUMBER() OVER (
-         |    PARTITION BY event_type ORDER BY ts, event_id) AS rn
-         |  FROM events),
-         |m AS (SELECT event_id, value, rn,
-         |    MAX(CASE WHEN value IS NOT NULL THEN rn END) OVER (
-         |      PARTITION BY event_type ORDER BY rn
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pr,
-         |    last_value(CASE WHEN value IS NOT NULL THEN value END
-         |        IGNORE NULLS) OVER (
-         |      PARTITION BY event_type ORDER BY rn
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pv,
-         |    MIN(CASE WHEN value IS NOT NULL THEN rn END) OVER (
-         |      PARTITION BY event_type ORDER BY rn
-         |      ROWS BETWEEN 1 FOLLOWING AND UNBOUNDED FOLLOWING) AS nr,
-         |    first_value(CASE WHEN value IS NOT NULL THEN value END
-         |        IGNORE NULLS) OVER (
-         |      PARTITION BY event_type ORDER BY rn
-         |      ROWS BETWEEN 1 FOLLOWING AND UNBOUNDED FOLLOWING) AS nv
-         |  FROM b)
-         |SELECT event_id, (value IS NOT NULL) AS was_present,
-         |  CASE WHEN value IS NOT NULL THEN value
-         |       WHEN pv IS NOT NULL AND nv IS NOT NULL THEN
-         |    ${Sql.sround("pv + (nv - pv) * CAST(rn - pr AS DOUBLE) / CAST(nr - pr AS DOUBLE)", 6)}
-         |  END AS _filled
-         |FROM m ORDER BY event_id""".stripMargin,
-
-    "q_rolling_median" ->
-      """WITH h AS (SELECT event_type, date_trunc('hour', ts) AS bucket,
-        |    count(*) AS n FROM events GROUP BY 1, 2)
-        |SELECT event_type, strftime(bucket, '%Y-%m-%d %H:%M:%S') AS hour, n,
-        |  CAST(2 * median(n) OVER (PARTITION BY event_type ORDER BY bucket
-        |    ROWS BETWEEN 4 PRECEDING AND CURRENT ROW) AS BIGINT) AS med_x2
-        |FROM h ORDER BY event_type, hour""".stripMargin,
-
-    "q_session_stats" ->
-      s"""WITH o AS (
-         |  SELECT user_id, ts,
-         |    CASE WHEN (epoch_ns(ts) // 1000) - LAG(epoch_ns(ts) // 1000)
-         |         OVER (PARTITION BY user_id ORDER BY ts) < 1800000000
-         |         THEN 0 ELSE 1 END AS new_s
-         |  FROM events),
-         |s AS (SELECT *, SUM(new_s) OVER (PARTITION BY user_id ORDER BY ts
-         |        ROWS UNBOUNDED PRECEDING) AS sid FROM o),
-         |se AS (SELECT COUNT(*) AS ne,
-         |    (epoch_ns(MAX(ts)) // 1000) - (epoch_ns(MIN(ts)) // 1000)
-         |      + 1800000000 AS dur
-         |  FROM s GROUP BY user_id, sid)
-         |SELECT CAST(COUNT(*) AS BIGINT) AS n_sessions,
-         |  CAST(SUM(ne) AS BIGINT) AS n_events,
-         |  CAST(quantile_cont(ne, 0.5) * 2 AS BIGINT) AS med_events_x2,
-         |  CAST(quantile_cont(dur, 0.5) * 2 AS BIGINT) AS med_dur_us_x2,
-         |  CAST(MAX(ne) AS BIGINT) AS max_events
-         |FROM se""".stripMargin,
-
-    "q_rfm" ->
-      s"""WITH mx AS (SELECT MAX(o_orderdate) AS mx FROM orders),
-         |per AS (SELECT o_custkey,
-         |    datediff('day', CAST(MAX(o_orderdate) AS DATE),
-         |      CAST(ANY_VALUE(mx.mx) AS DATE)) AS recency_days,
-         |    count(*) AS n_orders,
-         |    ${esum("o_totalprice")} AS monetary
-         |  FROM orders, mx GROUP BY o_custkey),
-         |b AS (SELECT kind, b FROM
-         |  read_parquet('/tmp/graft_oracle_aux/{SF}/rfm_bounds/*.parquet'))
-         |SELECT p.o_custkey, CAST(p.recency_days AS BIGINT) AS recency_days,
-         |  CAST(p.n_orders AS BIGINT) AS n_orders, p.monetary,
-         |  1 + (SELECT COUNT(*) FROM b
-         |    WHERE b.kind = 'r' AND p.recency_days > b.b) AS r_seg,
-         |  1 + (SELECT COUNT(*) FROM b
-         |    WHERE b.kind = 'f' AND p.n_orders > b.b) AS f_seg,
-         |  1 + (SELECT COUNT(*) FROM b
-         |    WHERE b.kind = 'm' AND p.monetary > b.b) AS m_seg
-         |FROM per p ORDER BY o_custkey""".stripMargin,
-
-    "q_rolling_distinct" ->
-      """WITH du AS (SELECT DISTINCT date_trunc('day', ts) AS day, user_id
-        |  FROM events),
-        |days AS (SELECT DISTINCT day FROM du)
-        |SELECT strftime(d.day, '%Y-%m-%d') AS day,
-        |  CAST(count(DISTINCT u.user_id) AS BIGINT) AS n_users_7d
-        |FROM days d JOIN du u
-        |  ON u.day <= d.day AND u.day >= d.day - INTERVAL 6 DAY
-        |GROUP BY d.day ORDER BY day""".stripMargin,
-
-    "q_distinct_growth" ->
-      """WITH d AS (SELECT date_trunc('day', ts) AS day, count(*) AS n_events
-        |  FROM events GROUP BY 1),
-        |fs AS (SELECT user_id, MIN(date_trunc('day', ts)) AS day
-        |  FROM events GROUP BY 1),
-        |nu AS (SELECT day, count(*) AS n_new_users FROM fs GROUP BY 1)
-        |SELECT strftime(d.day, '%Y-%m-%d') AS day,
-        |  CAST(d.n_events AS BIGINT) AS n_events,
-        |  CAST(COALESCE(ANY_VALUE(nu.n_new_users), 0) AS BIGINT)
-        |    AS n_new_users,
-        |  CAST(SUM(c.n_new_users) AS BIGINT) AS cum_users
-        |FROM d LEFT JOIN nu USING (day)
-        |JOIN nu c ON c.day <= d.day
-        |GROUP BY d.day, d.n_events ORDER BY day""".stripMargin,
-
-    "q_ewma" -> {
-      val lags = (1 until 8).map(j =>
-        s"LAG(n, $j) OVER (PARTITION BY event_type ORDER BY bucket) AS l$j")
-        .mkString(",\n    ")
-      val wsum = "128 * n + " + (1 until 8).map(j =>
-        s"${1L << (7 - j)} * COALESCE(l$j, 0)").mkString(" + ")
-      val wmass = "128 + " + (1 until 8).map(j =>
-        s"CASE WHEN l$j IS NULL THEN 0 ELSE ${1L << (7 - j)} END")
-        .mkString(" + ")
-      s"""WITH h AS (SELECT event_type, date_trunc('hour', ts) AS bucket,
-         |    count(*) AS n FROM events GROUP BY 1, 2),
-         |l AS (SELECT event_type, bucket, n,
-         |    $lags
-         |  FROM h)
-         |SELECT event_type, strftime(bucket, '%Y-%m-%d %H:%M:%S') AS hour,
-         |  n, CAST($wsum AS BIGINT) AS wsum, CAST($wmass AS BIGINT) AS wmass
-         |FROM l ORDER BY event_type, hour""".stripMargin
+    Gate("q_multimodal_neardup", (s, dir) => {
+      // perceptual-hash image dedup: decode PPM payloads → aHash → blocked
+      // hamming pairs. The twin corpus engineers each base image's ONLY
+      // near-dup to be its perturbed copy (id + 10000), so the exact pair
+      // list is arithmetic the oracle generates without decoding anything —
+      // a codec drift, hash instability, or blocking recall miss all
+      // change the pair set
+      val corpus = graft.multimodal.Multimodal.twinImageCorpus(s, 60)
+      val sigs = graft.multimodal.Multimodal.imageAHash(corpus)
+      SimHash.sigPairs(sigs, "media_id", "ahash", maxDist = 3)
+        .select(col("id_a"), col("id_b"))
+        .orderBy(col("id_a"))
     },
+      // the twin invariant IS the ground truth: every base image pairs
+      // with exactly its id+10000 twin and nothing else
+      """SELECT CAST(i AS BIGINT) AS id_a, CAST(i + 10000 AS BIGINT) AS id_b
+        |FROM range(60) t(i) ORDER BY id_a""".stripMargin),
 
-    "q_autocorr" -> {
-      def lagCte(k: Int) =
-        s"""a$k AS (SELECT event_type, CAST($k AS INT) AS lag,
-           |    CAST(SUM(n * nl) AS BIGINT) AS sxy,
-           |    CAST(SUM(n) AS BIGINT) AS sh, CAST(SUM(nl) AS BIGINT) AS st
-           |  FROM (SELECT event_type, n, LAG(n, $k) OVER (
-           |      PARTITION BY event_type ORDER BY bucket) AS nl FROM h)
-           |  WHERE nl IS NOT NULL GROUP BY 1)""".stripMargin
-      s"""WITH h AS (SELECT event_type, date_trunc('hour', ts) AS bucket,
-         |    count(*) AS n FROM events GROUP BY 1, 2),
-         |st AS (SELECT event_type, CAST(COUNT(*) AS BIGINT) AS nn,
-         |    CAST(SUM(n) AS BIGINT) AS s, CAST(SUM(n * n) AS BIGINT) AS sxx
-         |  FROM h GROUP BY 1),
-         |${lagCte(1)}, ${lagCte(2)}, ${lagCte(3)},
-         |u AS (SELECT * FROM a1 UNION ALL SELECT * FROM a2
-         |  UNION ALL SELECT * FROM a3)
-         |SELECT u.event_type, u.lag, st.nn AS n,
-         |  CASE WHEN st.nn * st.nn * st.sxx - st.nn * st.s * st.s = 0
-         |    THEN NULL ELSE
-         |  ${Sql.sround("CAST(st.nn * st.nn * u.sxy - st.nn * st.s * (u.sh + u.st) + (st.nn - u.lag) * st.s * st.s AS DOUBLE) / CAST(st.nn * st.nn * st.sxx - st.nn * st.s * st.s AS DOUBLE)")}
-         |  END AS r
-         |FROM u JOIN st USING (event_type)
-         |ORDER BY u.event_type, u.lag""".stripMargin
+    Gate("q_multimodal_audio_neardup", (s, dir) => {
+      // audio twin of q_multimodal_neardup: decode WAV → energy-profile
+      // fingerprint → blocked hamming pairs; the engineered pair list is
+      // the oracle's arithmetic ground truth
+      val corpus = graft.multimodal.Multimodal.twinAudioCorpus(s, 40)
+      val sigs = graft.multimodal.Multimodal.audioFingerprints(corpus)
+      SimHash.sigPairs(sigs, "media_id", "afp", maxDist = 3)
+        .select(col("id_a"), col("id_b"))
+        .orderBy(col("id_a"))
     },
-
-    "q_seasonal_decompose" ->
-      // bit-exact replay: micro-unit longs, 25-bucket centered MA (full
-      // frames only), per-(type, hour-of-day) mean of detrended values
-      """WITH h AS (SELECT event_type, date_trunc('hour', ts) AS bucket,
-        |    CAST(SUM(CAST(FLOOR(value * 1000000 + 0.5) AS BIGINT))
-        |      AS BIGINT) AS y
-        |  FROM events WHERE value IS NOT NULL GROUP BY 1, 2),
-        |tr AS (SELECT event_type, bucket, y,
-        |    CASE WHEN COUNT(*) OVER w = 25 THEN
-        |      CAST(FLOOR(CAST(SUM(y) OVER w AS DOUBLE) / 25 + 0.5)
-        |        AS BIGINT) END AS trend
-        |  FROM h
-        |  WINDOW w AS (PARTITION BY event_type ORDER BY bucket
-        |    ROWS BETWEEN 12 PRECEDING AND 12 FOLLOWING)),
-        |se AS (SELECT event_type, EXTRACT(hour FROM bucket) AS season,
-        |    CAST(FLOOR(CAST(SUM(y - trend) AS DOUBLE) / COUNT(*) + 0.5)
-        |      AS BIGINT) AS seasonal
-        |  FROM tr WHERE trend IS NOT NULL GROUP BY 1, 2)
-        |SELECT tr.event_type,
-        |  strftime(tr.bucket, '%Y-%m-%d %H:%M:%S') AS hour,
-        |  tr.y AS y_e6, tr.trend AS trend_e6, se.seasonal AS seasonal_e6,
-        |  CASE WHEN tr.trend IS NOT NULL AND se.seasonal IS NOT NULL
-        |    THEN tr.y - tr.trend - se.seasonal END AS resid_e6
-        |FROM tr LEFT JOIN se ON se.event_type = tr.event_type
-        |  AND se.season = EXTRACT(hour FROM tr.bucket)
-        |ORDER BY tr.event_type, hour""".stripMargin,
-
-    "q_changepoint" ->
-      // exact milli-unit prefix sums; score (n·S_t − t·S)²/(t(n−t)) in
-      // int128 cast to double only for the final ratio (identical
-      // round-to-nearest in both engines); earliest split wins ties
-      s"""WITH h AS (SELECT event_type, date_trunc('hour', ts) AS bucket,
-         |    CAST(SUM(CAST(FLOOR(value * 1000 + 0.5) AS BIGINT))
-         |      AS BIGINT) AS y
-         |  FROM events WHERE value IS NOT NULL GROUP BY 1, 2),
-         |p AS (SELECT event_type, bucket,
-         |    CAST(SUM(y) OVER (PARTITION BY event_type ORDER BY bucket
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-         |      AS BIGINT) AS st,
-         |    ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY bucket)
-         |      AS t
-         |  FROM h),
-         |tot AS (SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,
-         |    CAST(SUM(y) AS BIGINT) AS s FROM h GROUP BY 1),
-         |sc AS (SELECT p.event_type, p.bucket, p.t, tot.n, p.st, tot.s,
-         |    CAST((CAST(tot.n AS HUGEINT) * p.st
-         |          - CAST(p.t AS HUGEINT) * tot.s) *
-         |         (CAST(tot.n AS HUGEINT) * p.st
-         |          - CAST(p.t AS HUGEINT) * tot.s) AS DOUBLE)
-         |      / CAST(p.t * (tot.n - p.t) AS DOUBLE) AS score
-         |  FROM p JOIN tot USING (event_type) WHERE p.t < tot.n),
-         |b AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY event_type
-         |    ORDER BY score DESC, t ASC) AS rk FROM sc)
-         |SELECT event_type,
-         |  strftime(bucket, '%Y-%m-%d %H:%M:%S') AS split_hour,
-         |  t AS n_left, n - t AS n_right,
-         |  ${Sql.sround("CAST(st AS DOUBLE) / t / 1000.0")} AS mean_left,
-         |  ${Sql.sround("CAST(s - st AS DOUBLE) / (n - t) / 1000.0")}
-         |    AS mean_right
-         |FROM b WHERE rk = 1 ORDER BY event_type""".stripMargin,
-
-    "q_quantile_map" ->
-      // the ⌈k·m_ref/m⌉ integer rank mapping, replayed with DuckDB's
-      // BIGINT // division; tie order (value, event_id) is total.
-      // mref enters as an UNCORRELATED SCALAR SUBQUERY inside the rank
-      // expression so the ref join stays a plain equi-join — spelling it
-      // as CROSS JOIN mr + a computed join key made DuckDB nested-loop
-      // the 1M x 600k join (210 s at sf1; 27x faster this way, same rows)
-      """WITH r AS (SELECT event_id, event_type, value,
-        |    ROW_NUMBER() OVER (PARTITION BY event_type
-        |      ORDER BY value, event_id) AS k,
-        |    COUNT(*) OVER (PARTITION BY event_type) AS m
-        |  FROM events WHERE value IS NOT NULL),
-        |mr AS (SELECT CAST(count(*) AS BIGINT) AS mref FROM r
-        |       WHERE event_type = 'click'),
-        |rx AS (SELECT event_id, event_type, value,
-        |    (k * (SELECT mref FROM mr) + m - 1) // m AS rk FROM r),
-        |ref AS (SELECT k AS rk, value AS rv FROM r
-        |        WHERE event_type = 'click')
-        |SELECT rx.event_id, rx.event_type, rx.value, ref.rv AS mapped
-        |FROM rx JOIN ref USING (rk)
-        |ORDER BY rx.event_id""".stripMargin,
-
-    "q_sketch_intersect" ->
-      // exact set sizes cross-engine + the estimator-accuracy invariants
-      """WITH a AS (SELECT DISTINCT user_id AS member FROM events
-        |           WHERE event_type = 'click'),
-        |b AS (SELECT DISTINCT user_id * 2 AS member FROM events
-        |      WHERE event_type = 'view'),
-        |u AS (SELECT member,
-        |    member IN (SELECT member FROM a) AS ia,
-        |    member IN (SELECT member FROM b) AS ib
-        |  FROM (SELECT member FROM a UNION SELECT member FROM b))
-        |SELECT
-        |  CAST((SELECT count(*) FROM a) AS BIGINT) AS n_exact_a,
-        |  CAST((SELECT count(*) FROM b) AS BIGINT) AS n_exact_b,
-        |  CAST((SELECT count(*) FROM u) AS BIGINT) AS n_exact_union,
-        |  CAST((SELECT count(*) FROM u WHERE ia AND ib) AS BIGINT)
-        |    AS n_exact_inter,
-        |  CAST(LEAST(128, (SELECT count(*) FROM a)) AS BIGINT) AS size_a,
-        |  CAST(LEAST(128, (SELECT count(*) FROM b)) AS BIGINT) AS size_b,
-        |  TRUE AS jaccard_ok, TRUE AS union_ok, TRUE AS inter_ok"""
-        .stripMargin,
-
-    "q_target_encode" ->
-      // same decimal sums, same left-to-right IEEE chain, sround(6)
-      s"""WITH st AS (SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,
-         |    CAST(SUM(CAST(value AS DECIMAL(38,10))) AS DOUBLE) AS s
-         |  FROM events WHERE value IS NOT NULL GROUP BY 1),
-         |g AS (SELECT CAST(COUNT(*) AS BIGINT) AS gn,
-         |    CAST(SUM(CAST(value AS DECIMAL(38,10))) AS DOUBLE) AS gs
-         |  FROM events WHERE value IS NOT NULL)
-         |SELECT e.event_id, e.event_type, e.value,
-         |  CASE WHEN e.value IS NULL THEN NULL ELSE
-         |    ${Sql.sround(
-              "(st.s - e.value + 10.0 * (g.gs / g.gn)) / CAST(st.n - 1 + 10 AS DOUBLE)",
-              6)}
-         |  END AS enc
-         |FROM events e LEFT JOIN st USING (event_type) CROSS JOIN g
-         |ORDER BY e.event_id""".stripMargin,
-
-    "q_time_split" ->
-      """WITH t AS (SELECT user_id,
-        |    CASE WHEN ts < TIMESTAMP '2024-01-24 00:00:00' THEN 'train'
-        |         WHEN ts < TIMESTAMP '2024-01-25 00:00:00' THEN 'embargo'
-        |         ELSE 'test' END AS split
-        |  FROM events),
-        |u AS (SELECT user_id,
-        |    SUM(CASE WHEN split = 'train' THEN 1 ELSE 0 END) AS tr,
-        |    SUM(CASE WHEN split = 'embargo' THEN 1 ELSE 0 END) AS em,
-        |    SUM(CASE WHEN split = 'test' THEN 1 ELSE 0 END) AS te
-        |  FROM t GROUP BY 1)
-        |SELECT CAST(SUM(tr) AS BIGINT) AS n_train,
-        |  CAST(SUM(em) AS BIGINT) AS n_embargo,
-        |  CAST(SUM(te) AS BIGINT) AS n_test,
-        |  CAST(SUM(CASE WHEN tr > 0 THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_train_users,
-        |  CAST(SUM(CASE WHEN te > 0 THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_test_users,
-        |  CAST(SUM(CASE WHEN tr > 0 AND te > 0 THEN 1 ELSE 0 END)
-        |    AS BIGINT) AS n_leaky_users
-        |FROM u""".stripMargin,
-
-    "q_ks_by_group" ->
-      """WITH c AS (SELECT event_type, value AS v,
-        |    SUM(CASE WHEN ts < TIMESTAMP '2024-01-16 00:00:00'
-        |      THEN 1 ELSE 0 END) AS c1,
-        |    SUM(CASE WHEN ts >= TIMESTAMP '2024-01-16 00:00:00'
-        |      THEN 1 ELSE 0 END) AS c2
-        |  FROM events WHERE value IS NOT NULL GROUP BY 1, 2),
-        |cum AS (SELECT event_type, v, c1, c2,
-        |    SUM(c1) OVER (PARTITION BY event_type ORDER BY v) AS a1,
-        |    SUM(c2) OVER (PARTITION BY event_type ORDER BY v) AS a2
-        |  FROM c),
-        |t AS (SELECT event_type, CAST(SUM(c1) AS BIGINT) AS n1,
-        |    CAST(SUM(c2) AS BIGINT) AS n2 FROM c GROUP BY 1),
-        |m AS (SELECT cum.event_type,
-        |    MAX(ABS(CAST(a1 AS HUGEINT) * t.n2
-        |      - CAST(a2 AS HUGEINT) * t.n1)) AS num
-        |  FROM cum JOIN t USING (event_type) GROUP BY 1)
-        |SELECT m.event_type, t.n1, t.n2,
-        |  CAST((num * 1000000) // (CAST(t.n1 AS HUGEINT) * t.n2)
-        |    AS BIGINT) AS ks_e6,
-        |  CAST((num * 1000000) // (CAST(t.n1 AS HUGEINT) * t.n2)
-        |    AS BIGINT) > 50000 AS drifted
-        |FROM m JOIN t USING (event_type)
-        |WHERE t.n1 > 0 AND t.n2 > 0
-        |ORDER BY event_type""".stripMargin,
-
-    "q_event_paths" ->
-      """WITH l AS (SELECT
-        |    LAG(event_type, 2) OVER (PARTITION BY user_id
-        |      ORDER BY ts, event_id) AS a,
-        |    LAG(event_type, 1) OVER (PARTITION BY user_id
-        |      ORDER BY ts, event_id) AS b,
-        |    event_type AS c
-        |  FROM events)
-        |SELECT a || '>' || b || '>' || c AS path,
-        |  CAST(count(*) AS BIGINT) AS n
-        |FROM l WHERE a IS NOT NULL
-        |GROUP BY 1 ORDER BY n DESC, path ASC LIMIT 20""".stripMargin,
-
-    "q_rolling_folds" ->
-      """WITH h AS (SELECT date_trunc('hour', ts) AS hb,
-        |    CAST(count(*) AS BIGINT) AS n FROM events GROUP BY 1),
-        |f AS (SELECT unnest(range(0, 4)) AS fold),
-        |x AS (SELECT f.fold, TIMESTAMP '2024-01-20 00:00:00'
-        |        + to_hours(f.fold * 48) AS cut FROM f)
-        |SELECT x.fold, strftime(x.cut, '%Y-%m-%d %H:%M:%S') AS cut,
-        |  CAST(SUM(CASE WHEN h.hb < x.cut - to_hours(24)
-        |    THEN h.n ELSE 0 END) AS BIGINT) AS n_train,
-        |  CAST(SUM(CASE WHEN h.hb >= x.cut
-        |      AND h.hb < x.cut + to_hours(48)
-        |    THEN h.n ELSE 0 END) AS BIGINT) AS n_test
-        |FROM x CROSS JOIN h GROUP BY 1, 2 ORDER BY fold""".stripMargin,
-
-    "q_stl_anomaly" ->
-      // full decomposition replay (as q_seasonal_decompose) + the BIGINT
-      // mean-|residual| threshold and flag
-      """WITH h AS (SELECT event_type, date_trunc('hour', ts) AS bucket,
-        |    CAST(SUM(CAST(FLOOR(value * 1000000 + 0.5) AS BIGINT))
-        |      AS BIGINT) AS y
-        |  FROM events WHERE value IS NOT NULL GROUP BY 1, 2),
-        |tr AS (SELECT event_type, bucket, y,
-        |    CASE WHEN COUNT(*) OVER w = 25 THEN
-        |      CAST(FLOOR(CAST(SUM(y) OVER w AS DOUBLE) / 25 + 0.5)
-        |        AS BIGINT) END AS trend
-        |  FROM h
-        |  WINDOW w AS (PARTITION BY event_type ORDER BY bucket
-        |    ROWS BETWEEN 12 PRECEDING AND 12 FOLLOWING)),
-        |se AS (SELECT event_type, EXTRACT(hour FROM bucket) AS season,
-        |    CAST(FLOOR(CAST(SUM(y - trend) AS DOUBLE) / COUNT(*) + 0.5)
-        |      AS BIGINT) AS seasonal
-        |  FROM tr WHERE trend IS NOT NULL GROUP BY 1, 2),
-        |r AS (SELECT tr.event_type, tr.bucket,
-        |    CASE WHEN tr.trend IS NOT NULL AND se.seasonal IS NOT NULL
-        |      THEN tr.y - tr.trend - se.seasonal END AS resid
-        |  FROM tr LEFT JOIN se ON se.event_type = tr.event_type
-        |    AND se.season = EXTRACT(hour FROM tr.bucket)),
-        |th AS (SELECT event_type,
-        |    CAST(FLOOR(CAST(SUM(ABS(resid)) AS DOUBLE) / COUNT(*) + 0.5)
-        |      AS BIGINT) AS mar
-        |  FROM r WHERE resid IS NOT NULL GROUP BY 1)
-        |SELECT r.event_type,
-        |  strftime(r.bucket, '%Y-%m-%d %H:%M:%S') AS hour,
-        |  r.resid AS resid_e6, th.mar AS mean_abs_resid_e6,
-        |  CASE WHEN r.resid IS NOT NULL THEN ABS(r.resid) * 1 > th.mar * 3
-        |       ELSE FALSE END AS is_anomaly
-        |FROM r JOIN th USING (event_type)
-        |ORDER BY r.event_type, hour""".stripMargin,
-
-    "q_zonemap_quality" -> {
-      def side(tag: String, sub: String) =
-        s"""f_$sub AS (SELECT filename, min(value) AS mn, max(value) AS mx
-           |  FROM read_parquet(
-           |    '/tmp/graft_zonemap/{SF}/$sub/*.parquet', filename=true)
-           |  WHERE value IS NOT NULL GROUP BY 1),
-           |d_$sub AS (SELECT
-           |    (SELECT count(*) FROM f_$sub b WHERE b.mn <= a.mn)
-           |      - (SELECT count(*) FROM f_$sub c WHERE c.mx < a.mn) AS d
-           |  FROM f_$sub a),
-           |r_$sub AS (SELECT '$tag' AS layout,
-           |    CAST(count(*) AS BIGINT) AS n_files,
-           |    CAST(max(d) AS BIGINT) AS max_depth,
-           |    CAST(sum(d) AS BIGINT) * 10000 // CAST(count(*) AS BIGINT)
-           |      AS avg_depth_e4
-           |  FROM d_$sub)""".stripMargin
-      s"""WITH ${side("clustered", "clustered")},
-         |${side("scattered", "scattered")}
-         |SELECT * FROM r_clustered UNION ALL SELECT * FROM r_scattered
-         |ORDER BY layout""".stripMargin
-    },
-
-    "q_binary_ingest" ->
-      // dims + pixel sums replay from the gradient arithmetic; the decoy
-      // file must be absent (glob pruned at listing)
-      """WITH ids AS (SELECT CAST(i AS BIGINT) AS i FROM range(0, 20) t(i)),
-        |base AS (SELECT i, CAST(16 + i % 16 AS INT) AS w,
-        |    CAST(12 + i % 12 AS INT) AS h FROM ids),
-        |pix AS (SELECT b.i,
-        |    SUM(((p % b.w) * 255 // (b.w - 1)) +
-        |        ((p // b.w) * 255 // (b.h - 1)) +
-        |        ((b.i * 4) % 256)) AS ps
-        |  FROM base b JOIN range(0, 1024) rp(p) ON p < b.w * b.h
-        |  GROUP BY b.i)
-        |SELECT 'img_' || lpad(CAST(b.i AS VARCHAR), 3, '0') || '.png'
-        |    AS file,
-        |  b.i, b.w AS dec_w, b.h AS dec_h,
-        |  CAST(pix.ps AS BIGINT) AS pix_sum, TRUE AS len_ok
-        |FROM base b JOIN pix ON pix.i = b.i
-        |ORDER BY file""".stripMargin,
-
-    "q_audio_resample" ->
-      // sample-count and duration arithmetic from the generator: audio
-      // rows are media ids ≡ 2 (mod 4); n_in = 800·(1 + id%3),
-      // n_out = 2·(n_in − 1) + 1, duration = n_out·1000 // 16000
-      """WITH a AS (SELECT CAST(i AS BIGINT) AS media_id,
-        |    800 * (1 + CAST(i AS BIGINT) % 3) AS n_in
-        |  FROM range(0, 99) t(i) WHERE i % 4 = 2)
-        |SELECT media_id, n_in,
-        |  (n_in - 1) * 2 + 1 AS n_out,
-        |  CAST(16000 AS INT) AS rate_out,
-        |  ((n_in - 1) * 2 + 1) * 1000 // 16000 AS duration_ms,
-        |  TRUE AS ok
-        |FROM a ORDER BY media_id""".stripMargin,
-
-    "q_layout_compare" -> {
-      def side(tag: String, axis: String) =
-        s"""f_${tag}_$axis AS (SELECT filename,
-           |    min($axis) AS mn, max($axis) AS mx
-           |  FROM read_parquet(
-           |    '/tmp/graft_layoutcmp/{SF}/$tag/*.parquet', filename=true)
-           |  WHERE $axis IS NOT NULL GROUP BY 1),
-           |d_${tag}_$axis AS (SELECT
-           |    (SELECT count(*) FROM f_${tag}_$axis b WHERE b.mn <= a.mn)
-           |      - (SELECT count(*) FROM f_${tag}_$axis c
-           |         WHERE c.mx < a.mn) AS d
-           |  FROM f_${tag}_$axis a),
-           |r_${tag}_$axis AS (SELECT '$tag' AS layout, '$axis' AS axis,
-           |    CAST(count(*) AS BIGINT) AS n_files,
-           |    CAST(max(d) AS BIGINT) AS max_depth,
-           |    CAST(sum(d) AS BIGINT) * 10000 // CAST(count(*) AS BIGINT)
-           |      AS avg_depth_e4
-           |  FROM d_${tag}_$axis)""".stripMargin
-      val parts = for (t <- Seq("hilbert", "zorder");
-        a <- Seq("x", "y")) yield side(t, a)
-      val sels = for (t <- Seq("hilbert", "zorder");
-        a <- Seq("x", "y")) yield s"SELECT * FROM r_${t}_$a"
-      s"""WITH ${parts.mkString(",\n")}
-         |${sels.mkString(" UNION ALL ")}
-         |ORDER BY layout, axis""".stripMargin
-    },
-
-    "q_triangles" ->
-      // exact census: value-ordered undirected edges, one join per side
-      """WITH nn AS (SELECT count(*) AS n FROM documents),
-        |raw AS (SELECT doc_id AS src, (doc_id + 1) % nn.n AS dst
-        |          FROM documents, nn
-        |        UNION ALL
-        |        SELECT doc_id, (doc_id + 2) % nn.n FROM documents, nn
-        |        UNION ALL
-        |        SELECT doc_id, (doc_id * 7 + 1) % nn.n FROM documents, nn),
-        |und AS (SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-        |  FROM raw WHERE src <> dst)
-        |SELECT CAST(COUNT(*) AS BIGINT) AS n_triangles
-        |FROM und x JOIN und y ON y.a = x.b
-        |JOIN und z ON z.a = x.a AND z.b = y.b""".stripMargin,
-
-    "q_dag_levels" ->
-      // longest-path-from-roots replay (UNION dedups (node, depth) pairs,
-      // so path multiplicity never explodes); planted cycle as literals
-      """WITH RECURSIVE nn AS (SELECT count(*) AS n FROM documents),
-        |e AS (SELECT doc_id AS u, doc_id * 8 AS v FROM documents, nn
-        |    WHERE doc_id >= 1 AND doc_id * 8 < nn.n
-        |  UNION ALL
-        |  SELECT doc_id, doc_id * 8 + 1 FROM documents, nn
-        |    WHERE doc_id >= 1 AND doc_id * 8 + 1 < nn.n
-        |  UNION ALL
-        |  SELECT doc_id, doc_id * 9 FROM documents, nn
-        |    WHERE doc_id >= 1 AND doc_id * 9 < nn.n),
-        |roots AS (SELECT doc_id AS id FROM documents
-        |  WHERE doc_id NOT IN (SELECT v FROM e)),
-        |reach(id, d) AS (
-        |  SELECT id, 0 FROM roots
-        |  UNION
-        |  SELECT e.v, reach.d + 1 FROM e JOIN reach ON e.u = reach.id),
-        |lv AS (SELECT id, MAX(d) AS level FROM reach GROUP BY id)
-        |SELECT CAST(id AS BIGINT) AS id, CAST(level AS BIGINT) AS level,
-        |  FALSE AS in_cycle
-        |FROM lv
-        |UNION ALL
-        |SELECT nn.n + x, CAST(-1 AS BIGINT), TRUE
-        |FROM nn, (VALUES (0), (1), (2)) t(x)
-        |ORDER BY id""".stripMargin,
-
-    "q_ref_integrity" -> {
-      def rel(tag: String, child: String, fk: String, parent: String,
-          pk: String) =
-        s"""SELECT '$tag' AS relation,
-           |  (SELECT CAST(count(*) AS BIGINT) FROM $child) AS n_child_rows,
-           |  (SELECT CAST(count(DISTINCT $fk) AS BIGINT) FROM $child)
-           |    AS n_distinct_fk,
-           |  (SELECT CAST(count(*) AS BIGINT) FROM $child WHERE $fk IS NULL)
-           |    AS n_null_fk_rows,
-           |  (SELECT CAST(count(*) AS BIGINT) FROM $child
-           |    WHERE $fk IS NOT NULL
-           |      AND $fk NOT IN (SELECT $pk FROM $parent)) AS n_orphan_rows,
-           |  (SELECT CAST(count(DISTINCT $fk) AS BIGINT) FROM $child
-           |    WHERE $fk IS NOT NULL
-           |      AND $fk NOT IN (SELECT $pk FROM $parent)) AS n_orphan_keys
-           |""".stripMargin
-      rel("customer.c_nationkey->nation", "customer", "c_nationkey",
-        "nation", "n_nationkey") + "UNION ALL\n" +
-      rel("lineitem.l_orderkey->orders", "lineitem", "l_orderkey",
-        "orders", "o_orderkey") + "UNION ALL\n" +
-      rel("orders.o_custkey->customer", "orders", "o_custkey",
-        "customer", "c_custkey") + "ORDER BY relation"
-    },
-
-    "q_assoc_rules" ->
-      s"""WITH it AS (SELECT DISTINCT user_id AS b, event_type AS i
-         |  FROM events),
-         |ic AS (SELECT i, count(*) AS ci FROM it GROUP BY 1),
-         |nb AS (SELECT count(DISTINCT b) AS nb FROM it),
-         |p AS (SELECT a.i AS ia, c.i AS ib, count(*) AS n_pair
-         |  FROM it a JOIN it c ON a.b = c.b AND a.i < c.i GROUP BY 1, 2)
-         |SELECT p.ia AS item_a, p.ib AS item_b, p.n_pair,
-         |  ${Sql.sround("CAST(n_pair AS DOUBLE) / CAST(nb AS DOUBLE)")}
-         |    AS support,
-         |  ${Sql.sround("CAST(n_pair AS DOUBLE) / CAST(ca.ci AS DOUBLE)")}
-         |    AS confidence,
-         |  ${Sql.sround("CAST(n_pair * nb AS DOUBLE) / CAST(ca.ci * cb.ci AS DOUBLE)")}
-         |    AS lift
-         |FROM p JOIN ic ca ON p.ia = ca.i JOIN ic cb ON p.ib = cb.i
-         |CROSS JOIN nb ORDER BY item_a, item_b""".stripMargin,
-
-    "q_rate_cap" ->
-      """WITH e AS (SELECT event_id, user_id, date_trunc('day', ts) AS bucket
-        |  FROM events),
-        |r AS (SELECT event_id, ROW_NUMBER() OVER (
-        |    PARTITION BY user_id, bucket
-        |    ORDER BY CAST(('0x' || substr(md5('rc#' ||
-        |      CAST(event_id AS VARCHAR)), 1, 8)) AS BIGINT), event_id) AS rk
-        |  FROM e)
-        |SELECT event_id, rk AS rank_in_key FROM r WHERE rk <= 3
-        |ORDER BY event_id""".stripMargin,
-
-    "q_info_gain" -> {
-      def term(p: String, c: String) =
-        s"FLOOR((CAST($p AS DOUBLE) / CAST($c AS DOUBLE) * " +
-          s"ln(CAST($p AS DOUBLE) / CAST($c AS DOUBLE))) * 1e12 + 0.5) / 1e12"
-      s"""WITH n AS (SELECT count(*) AS n FROM documents),
-         |hl AS (SELECT CAST(-SUM(CAST(t AS DECIMAL(38,15))) AS DOUBLE) AS hl
-         |  FROM (SELECT ${term("cl", "n.n")} AS t
-         |    FROM (SELECT lang, count(*) AS cl FROM documents GROUP BY 1),
-         |      n)),
-         |hc AS (SELECT CAST(-SUM(CAST(t AS DECIMAL(38,15))) AS DOUBLE) AS hc
-         |  FROM (SELECT ${term("cfl", "n.n")
-            .replace("ln(CAST(cfl AS DOUBLE) / CAST(n.n AS DOUBLE))",
-              "ln(CAST(cfl AS DOUBLE) / CAST(cf AS DOUBLE))")} AS t
-         |    FROM (SELECT source, lang, count(*) AS cfl
-         |        FROM documents GROUP BY 1, 2) x
-         |      JOIN (SELECT source, count(*) AS cf
-         |        FROM documents GROUP BY 1) y USING (source), n))
-         |SELECT 'source' AS feature, 'lang' AS label,
-         |  ${Sql.sround("hl")} AS h_label, ${Sql.sround("hc")} AS h_cond,
-         |  ${Sql.sround("hl - hc")} AS info_gain
-         |FROM hl CROSS JOIN hc""".stripMargin
-    },
-
-    "q_fd_violations" ->
-      """SELECT o_custkey, count(*) AS n_rows,
-        |  count(DISTINCT o_orderpriority) AS n_rhs
-        |FROM orders GROUP BY 1 HAVING count(DISTINCT o_orderpriority) > 1
-        |ORDER BY o_custkey""".stripMargin,
-
-    "q_group_mad" ->
-      s"""WITH m AS (SELECT event_type, quantile_cont(value, 0.5) AS med
-         |  FROM events GROUP BY 1),
-         |d AS (SELECT e.event_type, m.med, abs(e.value - m.med) AS dev
-         |  FROM events e JOIN m USING (event_type))
-         |SELECT event_type,
-         |  ${Sql.sround("ANY_VALUE(med)")} AS median,
-         |  ${Sql.sround("quantile_cont(dev, 0.5)")} AS mad
-         |FROM d GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    "q_sorted_neighborhood" ->
-      """WITH r AS (SELECT p_partkey AS id, p_name AS s,
-        |    substr(p_name, 1, 1) AS blk FROM part),
-        |rk AS (SELECT id, s, blk,
-        |    ROW_NUMBER() OVER (PARTITION BY blk ORDER BY s, id) AS r
-        |  FROM r),
-        |p AS (SELECT a.id AS id_a, b.id AS id_b,
-        |    levenshtein(a.s, b.s) AS dist
-        |  FROM rk a JOIN rk b ON a.blk = b.blk
-        |    AND b.r - a.r BETWEEN 1 AND 3)
-        |SELECT id_a, id_b, dist FROM p WHERE dist <= 2
-        |ORDER BY id_a, id_b""".stripMargin,
-
-    "q_psi_drift" -> {
-      val ps = (1 until 10).map(i => i / 10.0)
-      val bsel = ps.zipWithIndex.map { case (p, i) =>
-        s"quantile_cont(value, $p) AS b$i" }.mkString(", ")
-      def binExpr = "1 " + ps.indices.map(i =>
-        s"+ CASE WHEN value >= b.b$i THEN 1 ELSE 0 END").mkString(" ")
-      val pTerm = "CAST(n_ref + 1 AS DOUBLE) / CAST(tr + 10 AS DOUBLE)"
-      val qTerm = "CAST(n_cur + 1 AS DOUBLE) / CAST(tc + 10 AS DOUBLE)"
-      s"""WITH r AS (SELECT value FROM events
-         |  WHERE event_id % 2 = 0 AND value IS NOT NULL),
-         |c AS (SELECT value FROM events
-         |  WHERE event_id % 2 = 1 AND value IS NOT NULL),
-         |b AS (SELECT $bsel FROM r),
-         |rc AS (SELECT $binExpr AS bin, count(*) AS n_ref
-         |  FROM r, b GROUP BY 1),
-         |cc AS (SELECT $binExpr AS bin, count(*) AS n_cur
-         |  FROM c, b GROUP BY 1),
-         |j AS (SELECT COALESCE(rc.bin, cc.bin) AS bin,
-         |    COALESCE(n_ref, 0) AS n_ref, COALESCE(n_cur, 0) AS n_cur
-         |  FROM rc FULL OUTER JOIN cc ON rc.bin = cc.bin),
-         |t AS (SELECT SUM(n_ref) AS tr, SUM(n_cur) AS tc FROM j)
-         |SELECT bin, n_ref, n_cur,
-         |  ${Sql.sround(s"(($pTerm) - ($qTerm)) * ln(($pTerm) / ($qTerm))")}
-         |    AS psi_term
-         |FROM j CROSS JOIN t ORDER BY bin""".stripMargin
-    },
-
-    "q_kfold" ->
-      """SELECT doc_id,
-        |  CAST(('0x' || substr(md5('fold#' || CAST(doc_id AS VARCHAR)), 1, 8))
-        |    AS BIGINT) % 5 AS fold
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "q_benford" -> {
-      val pexp = "ln(1.0 + 1.0 / CAST(digit AS DOUBLE)) / ln(10.0)"
-      s"""WITH d AS (SELECT substr(CAST(CAST(FLOOR(o_totalprice) AS BIGINT)
-         |      AS VARCHAR), 1, 1) AS digit
-         |  FROM orders WHERE o_totalprice IS NOT NULL AND o_totalprice >= 1),
-         |c AS (SELECT digit, count(*) AS n FROM d GROUP BY 1),
-         |t AS (SELECT SUM(n) AS total FROM c)
-         |SELECT digit, n,
-         |  ${Sql.sround("CAST(n AS DOUBLE) / CAST(total AS DOUBLE)")} AS observed,
-         |  ${Sql.sround(pexp)} AS expected,
-         |  ${Sql.sround(s"POW(CAST(n AS DOUBLE) - ($pexp) * CAST(total AS DOUBLE), 2) / (($pexp) * CAST(total AS DOUBLE))")}
-         |    AS chi2_term
-         |FROM c CROSS JOIN t ORDER BY digit""".stripMargin
-    },
-
-    "q_chi_square" -> {
-      val e = "CAST(ra * cb AS DOUBLE) / CAST(tt AS DOUBLE)"
-      s"""WITH cells AS (SELECT lang, source, count(*) AS n
-         |  FROM documents GROUP BY 1, 2),
-         |r AS (SELECT lang, count(*) AS ra FROM documents GROUP BY 1),
-         |c AS (SELECT source, count(*) AS cb FROM documents GROUP BY 1),
-         |t AS (SELECT count(*) AS tt FROM documents)
-         |SELECT cells.lang, cells.source, cells.n,
-         |  ${Sql.sround(e)} AS expected,
-         |  ${Sql.sround(s"POW(CAST(n AS DOUBLE) - ($e), 2) / ($e)")}
-         |    AS chi2_term
-         |FROM cells JOIN r USING (lang) JOIN c USING (source) CROSS JOIN t
-         |ORDER BY cells.lang, cells.source""".stripMargin
-    },
-
-    "q_kanon" ->
-      """SELECT lang, source, count(*) AS n FROM documents
-        |GROUP BY 1, 2 HAVING count(*) < 10
-        |ORDER BY lang, source, n""".stripMargin,
-
-    "q_bucketed_join" ->
-      s"""SELECT c_mktsegment, COUNT(*) AS n_orders,
-         |  ${esum("o_totalprice")} AS total_price
-         |FROM orders JOIN customer ON o_custkey = c_custkey
-         |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin,
-
-    "q_schema_merge" ->
-      """SELECT doc_id, n_chars, CAST(NULL AS VARCHAR) AS lang
-        |FROM documents WHERE doc_id < 250
-        |UNION ALL
-        |SELECT doc_id, CAST(NULL AS BIGINT), lang
-        |FROM documents WHERE doc_id >= 250
-        |ORDER BY doc_id""".stripMargin,
-
-    "q_unpivot" ->
-      """SELECT p_partkey, 'p_retailprice' AS metric, p_retailprice AS val
-        |FROM part
-        |UNION ALL
-        |SELECT p_partkey, 'p_size', CAST(p_size AS DOUBLE) FROM part
-        |ORDER BY p_partkey, metric""".stripMargin,
-
-    "q_nested_flatten" ->
-      """SELECT o_orderkey, o_custkey AS cust_custkey,
-        |  o_orderstatus AS cust_info_status, o_totalprice AS cust_info_total,
-        |  o_orderpriority
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
-
-    "q_winsorize" ->
-      """WITH b AS (SELECT quantile_cont(value, 0.05) AS lo,
-        |    quantile_cont(value, 0.95) AS hi FROM events)
-        |SELECT event_id,
-        |  CASE WHEN value IS NULL THEN NULL
-        |       ELSE CAST(FLOOR(LEAST(GREATEST(value, lo), hi) * 10000 + 0.5)
-        |                 AS BIGINT) END AS value_x10k
-        |FROM events, b ORDER BY event_id""".stripMargin,
-
-    "q_string_agg" ->
-      """SELECT lang,
-        |  string_agg(DISTINCT source, ',' ORDER BY source) AS sources,
-        |  COUNT(DISTINCT source) AS n_sources
-        |FROM documents GROUP BY lang ORDER BY lang""".stripMargin,
-
-    "q_setops" ->
-      """SELECT doc_id FROM documents WHERE doc_id < 250
-        |INTERSECT
-        |SELECT doc_id FROM documents WHERE n_chars >= 200
-        |EXCEPT
-        |SELECT doc_id FROM documents WHERE doc_id % 10 = 0
-        |ORDER BY doc_id""".stripMargin,
-
-    "q_rollup" ->
-      s"""SELECT COALESCE(l_returnflag, 'ALL') AS flag,
-         |  COALESCE(l_linestatus, 'ALL') AS status,
-         |  COUNT(*) AS n, ${Sql.esum("l_quantity")} AS qty
-         |FROM lineitem
-         |GROUP BY ROLLUP (l_returnflag, l_linestatus)
-         |ORDER BY flag, status""".stripMargin,
-
-    "q_rate_spike" ->
-      """WITH b AS (SELECT event_type, date_trunc('hour', ts) AS bucket,
-        |    CAST(COUNT(*) AS BIGINT) AS n
-        |  FROM events GROUP BY 1, 2),
-        |st AS (SELECT event_type, CAST(COUNT(*) AS BIGINT) AS c,
-        |    CAST(SUM(n) AS BIGINT) AS s, CAST(SUM(n * n) AS BIGINT) AS q
-        |  FROM b GROUP BY event_type)
-        |SELECT b.event_type,
-        |  strftime(b.bucket, '%Y-%m-%d %H:%M:%S') AS hour, b.n
-        |FROM b JOIN st USING (event_type)
-        |WHERE (b.n * st.c - st.s) * (b.n * st.c - st.s)
-        |  > 4 * (st.q * st.c - st.s * st.s)
-        |ORDER BY b.event_type, hour""".stripMargin,
-
-    "q_sketch_bloom" ->
-      // the exact half of the sketch contract: member count and the
-      // no-false-negative guarantee; the FPR bound holds by sizing
-      """SELECT CAST(SUM(CASE WHEN o_orderpriority = '1-URGENT'
-        |    THEN 1 ELSE 0 END) AS BIGINT) AS n_members,
-        |  TRUE AS no_false_negatives,
-        |  TRUE AS fpr_under_5pct
-        |FROM orders""".stripMargin,
-
-    "q_corr_matrix" -> {
-      // identical moment formula: decimal-exact sums, double assembly
-      def ds(e: String) = s"CAST(SUM(CAST($e AS DECIMAL(38,10))) AS DOUBLE)"
-      def corr(a: String, b: String) = Sql.sround(
-        s"""(n * ${"p_" + a + "_" + b} - s_$a * s_$b) /
-           | (sqrt(n * q_$a - s_$a * s_$a) * sqrt(n * q_$b - s_$b * s_$b))"""
-          .stripMargin.replace("\n", ""))
-      val cols = Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax")
-      val sums = cols.map(c => s"${ds(c)} AS s_$c") ++
-        cols.map(c => s"${ds(s"$c * $c")} AS q_$c") ++
-        (for { i <- cols.indices; j <- cols.indices if i < j }
-          yield s"${ds(s"${cols(i)} * ${cols(j)}")} AS p_${cols(i)}_${cols(j)}")
-      val pairsSql = (for { i <- cols.indices; j <- cols.indices if i < j }
-        yield s"SELECT '${cols(i)}' AS col_a, '${cols(j)}' AS col_b, " +
-          s"${corr(cols(i), cols(j))} AS corr FROM m")
-        .mkString("", " UNION ALL ", "")
-      s"""WITH m AS (SELECT ${sums.mkString(", ")},
-         |    CAST(COUNT(*) AS DOUBLE) AS n
-         |  FROM lineitem
-         |  WHERE l_quantity IS NOT NULL AND l_extendedprice IS NOT NULL
-         |    AND l_discount IS NOT NULL AND l_tax IS NOT NULL)
-         |$pairsSql ORDER BY col_a, col_b""".stripMargin
-    },
-
-    "q_scd2" ->
-      """SELECT user_id, event_id,
-        |  strftime(ts, '%Y-%m-%d %H:%M:%S') AS valid_from,
-        |  COALESCE(strftime(LEAD(ts) OVER w, '%Y-%m-%d %H:%M:%S'), '')
-        |    AS valid_to,
-        |  LEAD(ts) OVER w IS NULL AS is_current
-        |FROM events
-        |WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-        |ORDER BY user_id, event_id""".stripMargin,
-
-    "q_scd2_snapshot" ->
-      """WITH h AS (SELECT user_id, event_id, value, ts AS valid_from,
-        |    LEAD(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-        |      AS valid_to
-        |  FROM events)
-        |SELECT user_id, event_id,
-        |  CAST(FLOOR(value * 10000 + 0.5) AS BIGINT) AS value_x10k
-        |FROM h
-        |WHERE valid_from <= TIMESTAMP '2024-01-15 00:00:00'
-        |  AND (valid_to IS NULL OR valid_to > TIMESTAMP '2024-01-15 00:00:00')
-        |ORDER BY user_id""".stripMargin,
-
-    "q_expectations" -> {
-      def rule(name: String, pred: String) =
-        s"""SELECT '$name' AS rule,
-           |  CAST(SUM(CASE WHEN $pred THEN 1 ELSE 0 END) AS BIGINT)
-           |    AS n_pass,
-           |  CAST(SUM(CASE WHEN $pred THEN 0 ELSE 1 END) AS BIGINT)
-           |    AS n_fail,
-           |  ${Sql.sround(
-          s"CAST(SUM(CASE WHEN $pred THEN 1 ELSE 0 END) AS DOUBLE) / COUNT(*)")}
-           |    AS pass_rate
-           |FROM lineitem""".stripMargin
-      Seq(
-        rule("discount_in_range", "l_discount BETWEEN 0 AND 0.1"),
-        rule("flag_valid", "l_returnflag IN ('A', 'N', 'R')"),
-        rule("price_positive", "l_extendedprice > 0"),
-        rule("qty_in_range", "l_quantity BETWEEN 1 AND 50"),
-        rule("tax_nonneg", "COALESCE(l_tax >= 0, FALSE)"))
-        .mkString("", "\nUNION ALL\n", "\nORDER BY rule")
-    },
-
-    "q_hilbert" ->
-      // the rotate-and-accumulate walk, one recursion level per bit
-      // plane: d += s²·((3rx) xor ry), then the quadrant rotation
-      """WITH RECURSIVE pts AS (
-        |  SELECT event_id, CAST(user_id % 1024 AS BIGINT) AS x,
-        |         CAST(event_id % 1024 AS BIGINT) AS y
-        |  FROM events),
-        |h AS (
-        |  SELECT event_id, x, y, CAST(0 AS BIGINT) AS d,
-        |         CAST(512 AS BIGINT) AS s
-        |  FROM pts
-        |  UNION ALL
-        |  SELECT event_id,
-        |    CASE WHEN (y & s) > 0 THEN x
-        |         WHEN (x & s) > 0 THEN 1023 - y ELSE y END,
-        |    CASE WHEN (y & s) > 0 THEN y
-        |         WHEN (x & s) > 0 THEN 1023 - x ELSE x END,
-        |    d + s * s * xor(CASE WHEN (x & s) > 0 THEN 3 ELSE 0 END,
-        |                    CASE WHEN (y & s) > 0 THEN 1 ELSE 0 END),
-        |    s // 2
-        |  FROM h WHERE s > 0)
-        |SELECT event_id, d AS hval FROM h WHERE s = 0
-        |ORDER BY event_id""".stripMargin,
-
-    "q_zorder" ->
-      // bit-interleave replay: disjoint bit positions make sum == OR
-      """SELECT event_id,
-        |  CAST(list_sum(list_transform(range(11), b ->
-        |    ((((user_id % 2048) >> b) & 1) << (2 * b)) +
-        |    ((((event_id % 2048) >> b) & 1) << (2 * b + 1))))
-        |  AS BIGINT) AS zval
-        |FROM events ORDER BY event_id""".stripMargin,
-
-    "q_zorder3" ->
-      """SELECT event_id,
-        |  CAST(list_sum(list_transform(range(10), b ->
-        |    ((((user_id % 1024) >> b) & 1) << (3 * b)) +
-        |    ((((event_id % 1024) >> b) & 1) << (3 * b + 1)) +
-        |    (((((EXTRACT(hour FROM ts)) % 1024) >> b) & 1) << (3 * b + 2))))
-        |  AS BIGINT) AS zval
-        |FROM events ORDER BY event_id""".stripMargin,
-
-    "q_incr_agg" ->
-      s"""SELECT event_type, COUNT(value) AS n,
-         |  ${Sql.esum("value")} AS total
-         |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    "q_grouping_sets" ->
-      s"""SELECT COALESCE(l_returnflag, 'ALL') AS flag,
-         |  COALESCE(l_linestatus, 'ALL') AS status,
-         |  COUNT(*) AS n, ${Sql.esum("l_quantity")} AS qty
-         |FROM lineitem
-         |GROUP BY GROUPING SETS ((l_returnflag, l_linestatus),
-         |  (l_returnflag), ())
-         |ORDER BY flag, status""".stripMargin,
-
-    "q_salted_agg" ->
-      s"""SELECT l_returnflag, COUNT(*) AS n, ${Sql.esum("l_quantity")} AS qty
-         |FROM lineitem GROUP BY l_returnflag
-         |ORDER BY l_returnflag""".stripMargin,
-
-    "q_cube" ->
-      s"""SELECT COALESCE(l_returnflag, 'ALL') AS flag,
-         |  COALESCE(l_linestatus, 'ALL') AS status,
-         |  COUNT(*) AS n, ${Sql.esum("l_quantity")} AS qty
-         |FROM lineitem
-         |GROUP BY CUBE (l_returnflag, l_linestatus)
-         |ORDER BY flag, status""".stripMargin,
-
-    "q_window_ntile" ->
-      """SELECT event_id, event_type,
-        |  CAST(ntile(4) OVER w AS INTEGER) AS quartile,
-        |  CAST(FLOOR(percent_rank() OVER w * 10000 + 0.5) AS BIGINT)
-        |    AS pctrank_x10k,
-        |  CAST(FLOOR(cume_dist() OVER w * 10000 + 0.5) AS BIGINT)
-        |    AS cumedist_x10k
-        |FROM events WHERE value IS NOT NULL
-        |WINDOW w AS (PARTITION BY event_type ORDER BY value, event_id)
-        |ORDER BY event_id""".stripMargin,
-
-    "q_join_full" ->
-      """WITH cust AS (SELECT c_custkey,
-        |    CAST(FLOOR(c_acctbal * 100 + 0.5) AS BIGINT) AS acctbal_x100
-        |  FROM customer WHERE c_custkey % 3 = 0),
-        |ords AS (SELECT o_custkey, COUNT(*) AS n_orders
-        |  FROM orders WHERE o_custkey % 3 <> 1 GROUP BY o_custkey)
-        |SELECT COALESCE(c.c_custkey, o.o_custkey) AS custkey,
-        |  c.acctbal_x100,
-        |  CAST(COALESCE(o.n_orders, 0) AS BIGINT) AS n_orders
-        |FROM cust c FULL OUTER JOIN ords o ON c.c_custkey = o.o_custkey
-        |ORDER BY custkey""".stripMargin,
-
-    "q_events_gapfill" ->
-      """WITH b AS (SELECT date_trunc('hour', MIN(ts)) AS h0,
-        |    date_trunc('hour', MAX(ts)) AS h1 FROM events),
-        |grid AS (SELECT t.event_type, g.h
-        |  FROM (SELECT DISTINCT event_type FROM events) t,
-        |    b, LATERAL (SELECT unnest(generate_series(b.h0, b.h1,
-        |      INTERVAL 1 HOUR)) AS h) g),
-        |hourly AS (SELECT event_type, date_trunc('hour', ts) AS h,
-        |    COUNT(*) AS n FROM events GROUP BY 1, 2)
-        |SELECT grid.event_type,
-        |  strftime(grid.h, '%Y-%m-%d %H:%M:%S') AS hour,
-        |  CAST(COALESCE(hourly.n, 0) AS BIGINT) AS n
-        |FROM grid LEFT JOIN hourly
-        |  ON grid.event_type = hourly.event_type AND grid.h = hourly.h
-        |ORDER BY grid.event_type, hour""".stripMargin,
-
-    // max_by(id, struct(value, id)) ≡ the rk=1 row under
-    // (value DESC, id DESC) — spelled as a window because DuckDB 1.0's
-    // arg_max rejects a composite ordering argument
-    "q_argmax" ->
-      """WITH r AS (SELECT event_type, event_id, value,
-        |    ROW_NUMBER() OVER (PARTITION BY event_type
-        |      ORDER BY value DESC, event_id DESC) AS rk
-        |  FROM events WHERE value IS NOT NULL)
-        |SELECT event_type, event_id AS top_event_id,
-        |  CAST(FLOOR(value * 10000 + 0.5) AS BIGINT) AS max_value_x10k
-        |FROM r WHERE rk = 1 ORDER BY event_type""".stripMargin,
-
-    "q_histogram2d" ->
-      """SELECT CAST(FLOOR(value / 10.0) AS BIGINT) AS value_bin,
-        |  CAST(EXTRACT(hour FROM ts) AS BIGINT) AS hour_bin,
-        |  COUNT(*) AS n
-        |FROM events WHERE value IS NOT NULL
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    "q_rare_labels" ->
-      """WITH k AS (SELECT event_type FROM events
-        |  GROUP BY event_type HAVING COUNT(*) >= 2000)
-        |SELECT CASE WHEN event_type IN (SELECT event_type FROM k)
-        |         THEN event_type ELSE 'OTHER' END AS label,
-        |  COUNT(*) AS n
-        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q_cohort_retention" ->
-      """WITH e AS (SELECT user_id, CAST(ts AS DATE) AS d FROM events),
-        |c AS (SELECT user_id, MIN(d) AS c0 FROM e GROUP BY user_id)
-        |SELECT
-        |  CAST(FLOOR(date_diff('day', DATE '2024-01-01', c0) / 7.0) AS BIGINT)
-        |    AS cohort_week,
-        |  CAST(FLOOR(date_diff('day', c0, d) / 7.0) AS BIGINT) AS week_offset,
-        |  COUNT(DISTINCT e.user_id) AS n_users
-        |FROM e JOIN c USING (user_id)
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    "q_funnel" ->
-      """WITH u AS (SELECT user_id,
-        |    MIN(CASE WHEN event_type = 'signup'
-        |        THEN epoch_ns(ts) // 1000 END) AS s0,
-        |    MIN(CASE WHEN event_type = 'purchase'
-        |        THEN epoch_ns(ts) // 1000 END) AS p0
-        |  FROM events GROUP BY user_id)
-        |SELECT COUNT(*) AS n_users, COUNT(s0) AS n_signed,
-        |  CAST(COALESCE(SUM(CASE WHEN p0 > s0 THEN 1 ELSE 0 END), 0)
-        |    AS BIGINT) AS n_converted,
-        |  CAST(FLOOR(COALESCE(SUM(CASE WHEN p0 > s0 THEN 1 ELSE 0 END), 0)
-        |    * 10000.0 / COUNT(s0) + 0.5) AS BIGINT) AS conv_rate_x10k
-        |FROM u""".stripMargin,
-
-    "q_group_percentiles" ->
-      """SELECT event_type,
-        |  CAST(FLOOR(quantile_cont(value, 0.25) * 10000 + 0.5) AS BIGINT)
-        |    AS p25_x10k,
-        |  CAST(FLOOR(quantile_cont(value, 0.5) * 10000 + 0.5) AS BIGINT)
-        |    AS p50_x10k,
-        |  CAST(FLOOR(quantile_cont(value, 0.95) * 10000 + 0.5) AS BIGINT)
-        |    AS p95_x10k,
-        |  COUNT(value) AS n
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    // the write side is the operator under test; the oracle checks the
-    // roundtripped aggregate against the source table directly
-    "q_partitioned_write" ->
-      """SELECT source, COUNT(*) AS n_docs,
-        |  CAST(SUM(n_chars) AS BIGINT) AS n_chars
-        |FROM documents GROUP BY source ORDER BY source""".stripMargin,
-
-    "q_quantile_bin" ->
-      """WITH b AS (SELECT quantile_cont(value, 0.25) AS b1,
-        |    quantile_cont(value, 0.5) AS b2,
-        |    quantile_cont(value, 0.75) AS b3 FROM events)
-        |SELECT event_id,
-        |  CASE WHEN value IS NULL THEN NULL
-        |       ELSE CAST(1 + (CASE WHEN value >= b1 THEN 1 ELSE 0 END)
-        |                    + (CASE WHEN value >= b2 THEN 1 ELSE 0 END)
-        |                    + (CASE WHEN value >= b3 THEN 1 ELSE 0 END)
-        |              AS BIGINT) END AS bin
-        |FROM events, b ORDER BY event_id""".stripMargin,
-
-    "q_impute_group" ->
-      """WITH d AS (SELECT event_id, event_type,
-        |    CASE WHEN event_id % 11 = 0 THEN NULL ELSE value END AS value
-        |  FROM events),
-        |m AS (SELECT event_type,
-        |    FLOOR((CAST(SUM(CAST(value AS DECIMAL(38,10))) AS DOUBLE)
-        |           / COUNT(value)) * 1e6 + 0.5) / 1e6 AS mv
-        |  FROM d GROUP BY event_type)
-        |SELECT event_id, event_type,
-        |  CAST(FLOOR(COALESCE(d.value, m.mv) * 10000 + 0.5) AS BIGINT)
-        |    AS value_x10k
-        |FROM d JOIN m USING (event_type) ORDER BY event_id""".stripMargin,
-
-    "q_url_normalize" ->
-      s"""WITH urls AS (SELECT doc_id, $SyntheticUrlSql AS url FROM documents),
-         |$DomainSql,
-         |p AS (SELECT doc_id, url, host, domain,
-         |    regexp_replace(url, '#.*', '') AS u FROM dom),
-         |parts AS (SELECT *,
-         |  lower(regexp_extract(u, '^([A-Za-z][A-Za-z0-9+.-]*)://.*', 1)) AS scheme,
-         |  regexp_replace(lower(regexp_extract(u,
-         |    '^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]*).*', 1)), '^[^@]*@', '') AS auth0,
-         |  regexp_extract(u, '^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]*(.*)', 1) AS rest
-         |  FROM p),
-         |np AS (SELECT *,
-         |  CASE WHEN scheme = 'http' THEN regexp_replace(auth0, ':80$$', '')
-         |       WHEN scheme = 'https' THEN regexp_replace(auth0, ':443$$', '')
-         |       ELSE auth0 END AS auth,
-         |  regexp_extract(rest, '^([^?]*)', 1) AS path0,
-         |  regexp_extract(rest, '\\?(.*)', 1) AS query0 FROM parts),
-         |nq AS (SELECT *,
-         |  CASE WHEN length(regexp_replace(path0, '/+$$', '')) = 0 THEN '/'
-         |       ELSE regexp_replace(path0, '/+$$', '') END AS path,
-         |  regexp_replace(regexp_replace(query0,
-         |    '(?:^|&)(?:utm_[^=&]*|fbclid|gclid|ref)=[^&]*', '', 'g'),
-         |    '^&+', '') AS query FROM np)
-         |SELECT doc_id,
-         |  CASE WHEN scheme = '' THEN url
-         |       ELSE scheme || '://' || auth || path ||
-         |            (CASE WHEN query = '' THEN '' ELSE '?' || query END) END
-         |    AS url_norm,
-         |  host, domain
-         |FROM nq ORDER BY doc_id""".stripMargin,
-
-    "q_domain_cap" ->
-      s"""WITH urls AS (SELECT doc_id, $SyntheticUrlSql AS url FROM documents),
-         |$DomainSql,
-         |r AS (SELECT doc_id, domain,
-         |    ROW_NUMBER() OVER (PARTITION BY domain
-         |      ORDER BY md5('dc#' || CAST(doc_id AS VARCHAR)), doc_id)
-         |      AS domain_rank
-         |  FROM dom)
-         |SELECT doc_id, domain, CAST(domain_rank AS BIGINT) AS domain_rank
-         |FROM r WHERE domain_rank <= 3 ORDER BY doc_id""".stripMargin,
-
-    "q_domain_stats" -> {
-      val tok = Sql.tokenCountSql("text")
-      s"""WITH urls AS (SELECT doc_id, text, $SyntheticUrlSql AS url
-         |    FROM documents),
-         |$DomainSql,
-         |tok AS (SELECT domain, $tok AS n_tok FROM dom),
-         |g AS (SELECT domain, COUNT(*) AS n_docs,
-         |    CAST(SUM(n_tok) AS BIGINT) AS n_tokens FROM tok GROUP BY domain),
-         |t AS (SELECT CAST(SUM(n_tokens) AS BIGINT) AS tot FROM g)
-         |SELECT domain, n_docs, n_tokens,
-         |  CAST(FLOOR(n_tokens * 10000.0 / tot + 0.5) AS BIGINT)
-         |    AS token_share_x10k
-         |FROM g, t ORDER BY n_docs DESC, domain""".stripMargin},
-
-    "q_udaf_geomean" ->
-      s"""SELECT l_returnflag,
-         |  ${sround("EXP(AVG(LN(l_extendedprice)))", 2)} AS geo_price,
-         |  MAX(l_quantity) - MIN(l_quantity) AS qty_range
-         |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-
-    "q_pivot_builtin" ->
-      s"""SELECT l_returnflag,
-         |  ${esum("CASE WHEN l_linestatus = 'O' THEN l_quantity END")} AS qty_o,
-         |  ${esum("CASE WHEN l_linestatus = 'F' THEN l_quantity END")} AS qty_f
-         |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-
-    "q_events_sliding" ->
-      s"""WITH windows AS (
-         |  SELECT date_trunc('hour', ts) AS window_start, event_type, value FROM events
-         |  UNION ALL
-         |  SELECT date_trunc('hour', ts) - INTERVAL '1 hour' AS window_start,
-         |    event_type, value FROM events)
-         |SELECT strftime(window_start, '%Y-%m-%d %H:%M:%S') AS window_start,
-         |  event_type, COUNT(*) AS n, ${esum("value")} AS total_value
-         |FROM windows GROUP BY 1, 2 ORDER BY window_start, event_type""".stripMargin,
-
-    "q_embed_neardup" ->
-      """WITH e AS (SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS v,
-        |                  generate_subscripts(embedding, 1) AS i
-        |           FROM embeddings WHERE vec_id < 300),
-        |norms AS (SELECT vec_id,
-        |    sqrt(CAST(SUM(CAST(v * v AS DECIMAL(38,18))) AS DOUBLE)) AS nrm
-        |  FROM e GROUP BY vec_id),
-        |dots AS (SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-        |    CAST(SUM(CAST(a.v * b.v AS DECIMAL(38,18))) AS DOUBLE) AS dot
-        |  FROM e a JOIN e b USING (i) WHERE a.vec_id < b.vec_id
-        |  GROUP BY a.vec_id, b.vec_id)
-        |SELECT id_a, id_b, ROUND(dot / (na.nrm * nb.nrm), 4) AS similarity
-        |FROM dots
-        |JOIN norms na ON na.vec_id = id_a
-        |JOIN norms nb ON nb.vec_id = id_b
-        |WHERE ROUND(dot / (na.nrm * nb.nrm), 4) >= 0.35
-        |ORDER BY id_a, id_b""".stripMargin,
-
-    "q_embed_semdedup" ->
-      // same pair derivation as q_embed_neardup, then transitive closure via
-      // a recursive CTE: every vertex labeled with the min id it can reach
-      """WITH RECURSIVE
-        |e AS (SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS v,
-        |             generate_subscripts(embedding, 1) AS i
-        |      FROM embeddings WHERE vec_id < 300),
-        |norms AS (SELECT vec_id,
-        |    sqrt(CAST(SUM(CAST(v * v AS DECIMAL(38,18))) AS DOUBLE)) AS nrm
-        |  FROM e GROUP BY vec_id),
-        |dots AS (SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-        |    CAST(SUM(CAST(a.v * b.v AS DECIMAL(38,18))) AS DOUBLE) AS dot
-        |  FROM e a JOIN e b USING (i) WHERE a.vec_id < b.vec_id
-        |  GROUP BY a.vec_id, b.vec_id),
-        |p AS (SELECT id_a, id_b FROM dots
-        |  JOIN norms na ON na.vec_id = id_a
-        |  JOIN norms nb ON nb.vec_id = id_b
-        |  WHERE ROUND(dot / (na.nrm * nb.nrm), 4) >= 0.35),
-        |sym AS (SELECT id_a AS u, id_b AS v FROM p
-        |  UNION ALL SELECT id_b, id_a FROM p),
-        |reach(id, lbl) AS (
-        |  SELECT vec_id, vec_id FROM embeddings WHERE vec_id < 300
-        |  UNION
-        |  SELECT sym.v, reach.lbl FROM sym JOIN reach ON sym.u = reach.id)
-        |SELECT id AS vec_id, MIN(lbl) AS cluster, MIN(lbl) = id AS keep
-        |FROM reach GROUP BY id ORDER BY vec_id""".stripMargin,
-
-    "q_metadata_columns" ->
+      """SELECT CAST(i AS BIGINT) AS id_a, CAST(i + 10000 AS BIGINT) AS id_b
+        |FROM range(40) t(i) ORDER BY id_a""".stripMargin),
+
+    Gate("q_metadata_columns", (s, dir) =>
+      // MetadataToColumns guarantees the _meta_* column set exists
+      MetadataToColumns()(t(s, dir, "region"))
+        .select(col("r_regionkey"), col("r_name"),
+          col("_meta_is_anomaly"), col("_meta_quality_score"))
+        .orderBy(col("r_regionkey")),
       """SELECT r_regionkey, r_name, FALSE AS _meta_is_anomaly,
         |  CAST(NULL AS DOUBLE) AS _meta_quality_score
-        |FROM region ORDER BY r_regionkey""".stripMargin,
+        |FROM region ORDER BY r_regionkey""".stripMargin),
 
-    "q_remove_fields" ->
+    Gate("q_remove_fields", (s, dir) => {
+      // remove_fields relational semantics: all-missing columns are dropped
+      val df = t(s, dir, "supplier")
+        .withColumn("dead_col", lit(null).cast(StringType))
+        .withColumn("live_col",
+          when(col("s_suppkey") % 2 === 0, col("s_name")))
+      NullRemover("remove_fields")(df).orderBy(col("s_suppkey"))
+    },
       """SELECT s_suppkey, s_name, s_nationkey, s_acctbal,
         |  CASE WHEN s_suppkey % 2 = 0 THEN s_name END AS live_col
-        |FROM supplier ORDER BY s_suppkey""".stripMargin,
+        |FROM supplier ORDER BY s_suppkey""".stripMargin),
 
-    "q_quality_filter" -> {
+    Gate("q_quality_filter", (s, dir) => {
+      // filterLow=true drops rows under min_score (quality_scorer.py:148-155)
+      val df = t(s, dir, "customer").select(
+        col("c_custkey").as("customer_id"),
+        when(col("c_custkey") % 3 === 0, lit("not-an-email"))
+          .otherwise(concat(col("c_name"), lit("@x.co"))).as("email"),
+        col("c_acctbal").as("amount"))
+      QualityScorer(fields = Seq("customer_id", "email", "amount"),
+        minScore = 0.95, filterLow = true)(df)
+        .select(col("customer_id"), col("_meta_quality_score").as("quality_score"))
+        .orderBy(col("customer_id"))
+    }, {
       val email = "CASE WHEN c_custkey % 3 = 0 THEN 'not-an-email' ELSE c_name || '@x.co' END"
       // completeness=1; validity: email rule only; consistency: id + amount>0
       s"""WITH d AS (SELECT c_custkey AS customer_id, $email AS email,
@@ -4387,9 +2497,17 @@ object ExtraQueries {
          |  FROM d)
          |SELECT customer_id, quality_score FROM m
          |WHERE quality_score >= 0.95 ORDER BY customer_id""".stripMargin
-    },
+    }),
 
-    "q_anomaly_split_clean" ->
+    Gate("q_anomaly_split_clean", (s, dir) => {
+      // splitter routing: quarantine side filtered out, clean side flows on
+      val flagged = AnomalyDetector.zscore(t(s, dir, "events"), Seq("value"), 2.0)
+      val (clean, _) = AnomalySplitter.split(flagged)
+      clean.groupBy(col("event_type"))
+        .agg(count(lit(1)).as("n_clean"),
+          Semantics.exactSum(col("value")).as("clean_value"))
+        .orderBy(col("event_type"))
+    },
       s"""WITH s AS (SELECT
          |    CAST(SUM(CAST(value AS DECIMAL(38,10))) AS DOUBLE) / COUNT(value) AS mu,
          |    SQRT(CAST(SUM(CAST(value * value AS DECIMAL(38,10))) AS DOUBLE) / COUNT(value)
@@ -4400,17 +2518,40 @@ object ExtraQueries {
          |FROM events, s
          |WHERE NOT (s.n >= 3 AND s.sigma > 0 AND value IS NOT NULL
          |           AND ABS(value - s.mu) / s.sigma > 2.0)
-         |GROUP BY event_type ORDER BY event_type""".stripMargin,
+         |GROUP BY event_type ORDER BY event_type""".stripMargin),
 
-    "q_drilldown_total" ->
+    Gate("q_drilldown_total", (s, dir) =>
+      // the drill-down endpoint's companion total COUNT(*) (duckdb_service.py:436-505)
+      t(s, dir, "customer")
+        .filter(graft.query.Filter.compile(Seq(
+          graft.query.Filter.Eq("c_mktsegment", "BUILDING"),
+          graft.query.Filter.Gt("c_acctbal", 0.0))))
+        .agg(count(lit(1)).as("total_count")),
       """SELECT COUNT(*) AS total_count FROM customer
-        |WHERE c_mktsegment = 'BUILDING' AND c_acctbal > 0.0""".stripMargin,
+        |WHERE c_mktsegment = 'BUILDING' AND c_acctbal > 0.0""".stripMargin),
 
-    "q_scatter_sample" ->
+    Gate("q_scatter_sample", (s, dir) =>
+      // deterministic "sample" cap for scatter charts: ordered head, not
+      // random (visualization_generator.py:436 uses df.sample; a seeded
+      // random sample is not reproducible cross-engine, so the engine uses
+      // an ordered limit — documented deviation)
+      t(s, dir, "orders")
+        .select(col("o_orderkey"), col("o_totalprice"))
+        .orderBy(col("o_orderkey")).limit(1000),
       """SELECT o_orderkey, o_totalprice FROM orders
-        |ORDER BY o_orderkey LIMIT 1000""".stripMargin,
+        |ORDER BY o_orderkey LIMIT 1000""".stripMargin),
 
-    "q_sessions" ->
+    Gate("q_sessions", (s, dir) =>
+      // batch twin of the streaming sessionizer: Spark-native session_window
+      // gap sessions (30 min), oracle = lag/cumsum construction on µs epochs
+      t(s, dir, "events")
+        .groupBy(col("user_id"), session_window(col("ts"), "30 minutes").as("sw"))
+        .agg(count(lit(1)).as("n_events"),
+          Semantics.exactSum(col("value")).as("total_value"))
+        .select(col("user_id"),
+          date_format(col("sw.start"), "yyyy-MM-dd HH:mm:ss").as("session_start"),
+          col("n_events"), col("total_value"))
+        .orderBy(col("user_id"), col("session_start")),
       s"""WITH o AS (
          |  SELECT user_id, ts, value,
          |    CASE WHEN (epoch_ns(ts) // 1000) - LAG(epoch_ns(ts) // 1000)
@@ -4422,9 +2563,28 @@ object ExtraQueries {
          |SELECT user_id, strftime(MIN(ts), '%Y-%m-%d %H:%M:%S') AS session_start,
          |  COUNT(*) AS n_events, ${esum("value")} AS total_value
          |FROM s GROUP BY user_id, sid
-         |ORDER BY user_id, session_start""".stripMargin,
+         |ORDER BY user_id, session_start""".stripMargin),
 
-    "q_dwell_times" -> {
+    // composition: session windows become BASKETS and the co-occurrence
+    // rules run per session, not per user — "what happens together in one
+    // sitting" (the user-level twin is q_assoc_rules)
+    // inter-event dwell times, log2-bucketed by an INTEGER comparison
+    // chain (floating log2 flips at exact powers of two across engines)
+    Gate("q_dwell_times", (s, dir) => {
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy(col("user_id")).orderBy(col("ts").asc, col("event_id"))
+      val gaps = t(s, dir, "events")
+        .withColumn("_gap",
+          unix_timestamp(col("ts")) - lag(unix_timestamp(col("ts")), 1)
+            .over(w))
+        .filter(col("_gap").isNotNull && col("_gap") >= 0)
+      val bucket = (0 until 24).map(k =>
+        when(col("_gap") >= math.pow(2, k).toLong, 1L).otherwise(0L))
+        .reduce(_ + _)
+      gaps.select(bucket.as("log2_bucket"))
+        .groupBy(col("log2_bucket")).agg(count(lit(1)).as("n"))
+        .orderBy(col("log2_bucket"))
+    }, {
       val bucket = (0 until 24).map(k =>
         s"CASE WHEN gap >= ${math.pow(2, k).toLong} THEN 1 ELSE 0 END")
         .mkString(" + ")
@@ -4436,16 +2596,43 @@ object ExtraQueries {
          |SELECT ($bucket) AS log2_bucket, count(*) AS n
          |FROM g WHERE gap IS NOT NULL AND gap >= 0
          |GROUP BY 1 ORDER BY log2_bucket""".stripMargin
-    },
+    }),
 
-    "q_percent_rank" ->
+    Gate("q_percent_rank", (s, dir) => {
+      // per-group percent rank of each value — score normalization that
+      // survives any distribution; one partitioned window
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy(col("event_type"))
+        .orderBy(col("value").asc, col("event_id").asc)
+      t(s, dir, "events").filter(col("value").isNotNull)
+        .select(col("event_id"), col("event_type"),
+          Semantics.safeRound(percent_rank().over(w), 6).as("pr"))
+        .orderBy(col("event_id"))
+    },
       s"""SELECT event_id, event_type,
          |  ${Sql.sround("PERCENT_RANK() OVER (PARTITION BY event_type ORDER BY value ASC, event_id ASC)", 6)}
          |    AS pr
          |FROM events WHERE value IS NOT NULL
-         |ORDER BY event_id""".stripMargin,
+         |ORDER BY event_id""".stripMargin),
 
-    "q_session_baskets" ->
+    Gate("q_session_baskets", (s, dir) => {
+      // sessionize per USER ONLY (an extra grouping key would split the
+      // gap-merge); the per-session item set stays WHOLE — session_window
+      // + collect_set already produce exactly the one-row-per-basket set
+      // form pairRulesFromSets consumes, so the old explode → distinct →
+      // re-collect_set round trip (two full shuffles of the exploded
+      // incidence) is gone and the persisted frame is one row per session.
+      // Persisted: three consumers (item counts, basket total, pairs) over
+      // a session_window aggregate — without the persist each consumer
+      // re-runs the sessionization.
+      val inc = graft.core.Rebalance.computeDense(t(s, dir, "events"))
+        .groupBy(col("user_id"),
+          session_window(col("ts"), "30 minutes").as("sw"))
+        .agg(collect_set(col("event_type")).as("_items"))
+        .select(col("_items"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      graft.operators.MarketBasket.pairRulesFromSets(inc, "_items")
+    },
       s"""WITH o AS (
          |  SELECT user_id, ts, event_type,
          |    CASE WHEN (epoch_ns(ts) // 1000) - LAG(epoch_ns(ts) // 1000)
@@ -4468,9 +2655,22 @@ object ExtraQueries {
          |  ${Sql.sround("CAST(n_pair * nb AS DOUBLE) / CAST(ca.ci * cb.ci AS DOUBLE)")}
          |    AS lift
          |FROM p JOIN ic ca ON p.ia = ca.i JOIN ic cb ON p.ib = cb.i
-         |CROSS JOIN nb ORDER BY item_a, item_b""".stripMargin,
+         |CROSS JOIN nb ORDER BY item_a, item_b""".stripMargin),
 
-    "q_share_parent" ->
+    Gate("q_share_parent", (s, dir) => {
+      // percent-of-parent in a two-level hierarchy: cell counts + a tiny
+      // parent aggregate joined back (never a corpus window)
+      val cell = t(s, dir, "lineitem")
+        .groupBy(col("l_returnflag"), col("l_linestatus"))
+        .agg(count(lit(1)).as("n"))
+      val parent = cell.groupBy(col("l_returnflag"))
+        .agg(sum(col("n")).as("_pn"))
+      cell.join(broadcast(parent), Seq("l_returnflag"))
+        .select(col("l_returnflag"), col("l_linestatus"), col("n"),
+          Semantics.safeRound(col("n").cast(DoubleType) /
+            col("_pn").cast(DoubleType), 6).as("share_of_flag"))
+        .orderBy(col("l_returnflag"), col("l_linestatus"))
+    },
       s"""WITH cell AS (SELECT l_returnflag, l_linestatus, count(*) AS n
          |  FROM lineitem GROUP BY 1, 2),
          |pt AS (SELECT l_returnflag, SUM(n) AS pn FROM cell GROUP BY 1)
@@ -4478,9 +2678,28 @@ object ExtraQueries {
          |  ${Sql.sround("CAST(cell.n AS DOUBLE) / CAST(pt.pn AS DOUBLE)", 6)}
          |    AS share_of_flag
          |FROM cell JOIN pt USING (l_returnflag)
-         |ORDER BY cell.l_returnflag, cell.l_linestatus""".stripMargin,
+         |ORDER BY cell.l_returnflag, cell.l_linestatus""".stripMargin),
 
-    "q_asof_nearest" ->
+    Gate("q_asof_nearest", (s, dir) => {
+      // whichever neighboring order-day aggregate is CLOSER in time —
+      // strictly excluding the row's own day so the choice is non-trivial
+      val orders = t(s, dir, "orders")
+      val daily = orders
+        .groupBy(col("o_custkey"), col("o_orderdate").as("near_date"))
+        .agg(count(lit(1)).as("near_n"))
+      AsofJoin.nearest(
+        left = orders.select(col("o_orderkey"), col("o_custkey"),
+          col("o_orderdate")),
+        right = daily, keys = Seq("o_custkey"),
+        leftTs = "o_orderdate", rightTs = "near_date", strict = true)
+        .select(col("o_orderkey"),
+          date_format(col("o_orderdate"), "yyyy-MM-dd HH:mm:ss")
+            .as("order_date"),
+          date_format(col("near_date"), "yyyy-MM-dd HH:mm:ss")
+            .as("near_date"),
+          col("near_n"), col("asof_dir"))
+        .orderBy(col("o_orderkey"))
+    },
       """WITH daily AS (
         |  SELECT o_custkey, o_orderdate AS nd, COUNT(*) AS nn
         |  FROM orders GROUP BY 1, 2),
@@ -4509,9 +2728,27 @@ object ExtraQueries {
         |  CASE WHEN asof_dir = 'b' THEN b_n
         |    WHEN asof_dir = 'f' THEN f_n END AS near_n,
         |  asof_dir
-        |FROM j ORDER BY o_orderkey""".stripMargin,
+        |FROM j ORDER BY o_orderkey""".stripMargin),
 
-    "q_asof_join" ->
+    Gate("q_asof_join", (s, dir) => {
+      // as-of join: every order gets its customer's most recent STRICTLY
+      // earlier order-day aggregate (union + keyed window — one shuffle,
+      // no range cross product; see operators/AsofJoin)
+      val orders = t(s, dir, "orders")
+      val daily = orders
+        .groupBy(col("o_custkey"), col("o_orderdate").as("prev_date"))
+        .agg(Semantics.exactSum(col("o_totalprice")).as("prev_total"),
+          count(lit(1)).as("prev_n"))
+      AsofJoin.backward(
+        left = orders.select(col("o_orderkey"), col("o_custkey"), col("o_orderdate")),
+        right = daily, keys = Seq("o_custkey"),
+        leftTs = "o_orderdate", rightTs = "prev_date", strict = true)
+        .select(col("o_orderkey"), col("o_custkey"),
+          date_format(col("o_orderdate"), "yyyy-MM-dd HH:mm:ss").as("order_date"),
+          date_format(col("prev_date"), "yyyy-MM-dd HH:mm:ss").as("prev_date"),
+          col("prev_total"), col("prev_n"))
+        .orderBy(col("o_orderkey"))
+    },
       s"""WITH daily AS (
          |  SELECT o_custkey, o_orderdate AS prev_date,
          |    ${esum("o_totalprice")} AS prev_total, COUNT(*) AS prev_n
@@ -4522,9 +2759,32 @@ object ExtraQueries {
          |  d.prev_total, d.prev_n
          |FROM orders l ASOF LEFT JOIN daily d
          |  ON l.o_custkey = d.o_custkey AND l.o_orderdate > d.prev_date
-         |ORDER BY l.o_orderkey""".stripMargin,
+         |ORDER BY l.o_orderkey""".stripMargin),
 
-    "q_asof_tolerance" ->
+    Gate("q_asof_tolerance", (s, dir) => {
+      // tolerance-bounded as-of (pandas merge_asof(tolerance)): the most
+      // recent strictly-earlier order-day aggregate, but only if it is at
+      // most 7 days stale — older matches null out. Same single-window
+      // plan as q_asof_join plus one codegen'd staleness comparison
+      val orders = t(s, dir, "orders")
+      val daily = orders
+        .groupBy(col("o_custkey"), col("o_orderdate").as("prev_date"))
+        .agg(Semantics.exactSum(col("o_totalprice")).as("prev_total"),
+          count(lit(1)).as("prev_n"))
+      AsofJoin.backwardWithin(
+        left = orders.select(col("o_orderkey"), col("o_custkey"),
+          col("o_orderdate")),
+        right = daily, keys = Seq("o_custkey"),
+        leftTs = "o_orderdate", rightTs = "prev_date",
+        tolerance = "7 days", strict = true)
+        .select(col("o_orderkey"), col("o_custkey"),
+          date_format(col("o_orderdate"), "yyyy-MM-dd HH:mm:ss")
+            .as("order_date"),
+          date_format(col("prev_date"), "yyyy-MM-dd HH:mm:ss")
+            .as("prev_date"),
+          col("prev_total"), col("prev_n"))
+        .orderBy(col("o_orderkey"))
+    },
       // ASOF join + the same staleness null-out
       s"""WITH daily AS (
          |  SELECT o_custkey, o_orderdate AS prev_date,
@@ -4541,68 +2801,131 @@ object ExtraQueries {
          |    THEN d.prev_n END AS prev_n
          |FROM orders l ASOF LEFT JOIN daily d
          |  ON l.o_custkey = d.o_custkey AND l.o_orderdate > d.prev_date
-         |ORDER BY l.o_orderkey""".stripMargin,
+         |ORDER BY l.o_orderkey""".stripMargin),
 
-    "q_sample_det" ->
+    Gate("q_sample_det", (s, dir) =>
+      // hash-threshold sample: identical row set in any engine/partitioning
+      graft.functions.Sampling.deterministicSample(
+        t(s, dir, "orders"), "o_orderkey", 0.1)
+        .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
+        .orderBy(col("o_orderkey")),
       """SELECT o_orderkey, o_custkey, o_totalprice FROM orders
         |WHERE CAST(('0x' || substr(md5(CAST(o_orderkey AS VARCHAR)), 1, 8))
         |        AS BIGINT) % 10000 < 1000
-        |ORDER BY o_orderkey""".stripMargin,
+        |ORDER BY o_orderkey""".stripMargin),
 
-    "q_mix_corpus" -> {
-      val tok = Sql.tokenCountSql("text")
-      val target = """CASE WHEN source = 'src1' THEN 600.0
-        | WHEN source = 'src2' THEN 1e9 ELSE 300.0 END"""
-        .stripMargin.replace("\n", "")
-      s"""WITH tok AS (SELECT doc_id, source, $tok AS n_tokens FROM documents),
-         |frac AS (SELECT source,
-         |    LEAST(1.0, ($target) / CAST(SUM(n_tokens) AS DOUBLE)) AS f
-         |  FROM tok GROUP BY source)
-         |SELECT t.source, COUNT(*) AS n_docs,
-         |  CAST(SUM(t.n_tokens) AS BIGINT) AS kept_tokens
-         |FROM tok t JOIN frac USING (source)
-         |WHERE CAST(('0x' || substr(md5(CAST(t.doc_id AS VARCHAR)), 1, 8))
-         |        AS BIGINT) % 10000 < CAST(FLOOR(f * 10000) AS BIGINT)
-         |GROUP BY t.source ORDER BY t.source""".stripMargin
-    },
-
-    "q_shuffle_det" ->
-      """SELECT doc_id FROM documents
-        |ORDER BY md5('7#' || CAST(doc_id AS VARCHAR)), doc_id
-        |LIMIT 100""".stripMargin,
-
-    "q_mix_temperature" -> {
-      val tok = Sql.tokenCountSql("text")
-      s"""WITH tok AS (SELECT doc_id, source, $tok AS n_tokens FROM documents),
-         |av AS (SELECT source, CAST(SUM(n_tokens) AS DOUBLE) AS avail
-         |  FROM tok GROUP BY source),
-         |wt AS (SELECT source, avail, POWER(avail, 0.5) AS w FROM av),
-         |fr AS (SELECT source,
-         |    LEAST(1.0, 12000.0 * w / (SELECT SUM(w) FROM wt) / avail) AS f
-         |  FROM wt)
-         |SELECT t.source, COUNT(*) AS n_docs,
-         |  CAST(SUM(t.n_tokens) AS BIGINT) AS kept_tokens
-         |FROM tok t JOIN fr USING (source)
-         |WHERE CAST(('0x' || substr(md5(CAST(t.doc_id AS VARCHAR)), 1, 8))
-         |        AS BIGINT) % 10000 < CAST(FLOOR(f * 10000) AS BIGINT)
-         |GROUP BY t.source ORDER BY t.source""".stripMargin
-    },
-
-    "q_train_test" ->
+    Gate("q_train_test", (s, dir) =>
+      // split hygiene: disjoint+exhaustive labels; gate checks per-split
+      // counts and sums, proving the assignment is engine-independent
+      graft.functions.Sampling.trainTestSplit(
+        t(s, dir, "documents"), "doc_id", testFraction = 0.2)
+        .groupBy(col("split"))
+        .agg(count(lit(1)).as("n"),
+          Semantics.exactSum(col("n_chars")).as("total_chars"))
+        .orderBy(col("split")),
       s"""SELECT CASE WHEN CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))
          |        AS BIGINT) % 10000 < 2000 THEN 'test' ELSE 'train' END AS split,
          |  COUNT(*) AS n, ${esum("n_chars")} AS total_chars
-         |FROM documents GROUP BY 1 ORDER BY split""".stripMargin,
+         |FROM documents GROUP BY 1 ORDER BY split""".stripMargin),
 
-    "q_sample_stratified" ->
+    Gate("q_sample_stratified", (s, dir) =>
+      // per-language fractions over documents: rare strata kept whole
+      graft.functions.Sampling.stratifiedSample(
+        t(s, dir, "documents"), "doc_id", "lang",
+        fractions = Map("en" -> 0.25, "de" -> 1.0), default = 0.5)
+        .groupBy(col("lang"))
+        .agg(count(lit(1)).as("n"))
+        .orderBy(col("lang")),
       """SELECT lang, COUNT(*) AS n FROM documents
         |WHERE CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))
         |        AS BIGINT) % 10000
         |  < CASE WHEN lang = 'de' THEN 10000 WHEN lang = 'en' THEN 2500
         |         ELSE 5000 END
-        |GROUP BY lang ORDER BY lang""".stripMargin,
+        |GROUP BY lang ORDER BY lang""".stripMargin),
 
-    "q_asof_forward" ->
+    Gate("q_mix_corpus", (s, dir) =>
+      // token-budget data mix: src1 capped hard, src2 kept whole (budget
+      // exceeds supply), everything else at the default cap; gate checks
+      // the per-source kept-doc counts and token totals
+      graft.functions.Sampling.mixCorpus(
+        t(s, dir, "documents"), "doc_id", "text", "source",
+        targetTokens = Map("src1" -> 600.0, "src2" -> 1e9),
+        defaultTarget = 300.0)
+        .groupBy(col("source"))
+        .agg(count(lit(1)).as("n_docs"),
+          sum(col("n_tokens")).as("kept_tokens"))
+        .orderBy(col("source")),
+      {
+        val tok = Sql.tokenCountSql("text")
+        val target = """CASE WHEN source = 'src1' THEN 600.0
+          | WHEN source = 'src2' THEN 1e9 ELSE 300.0 END"""
+          .stripMargin.replace("\n", "")
+        s"""WITH tok AS (SELECT doc_id, source, $tok AS n_tokens FROM documents),
+           |frac AS (SELECT source,
+           |    LEAST(1.0, ($target) / CAST(SUM(n_tokens) AS DOUBLE)) AS f
+           |  FROM tok GROUP BY source)
+           |SELECT t.source, COUNT(*) AS n_docs,
+           |  CAST(SUM(t.n_tokens) AS BIGINT) AS kept_tokens
+           |FROM tok t JOIN frac USING (source)
+           |WHERE CAST(('0x' || substr(md5(CAST(t.doc_id AS VARCHAR)), 1, 8))
+           |        AS BIGINT) % 10000 < CAST(FLOOR(f * 10000) AS BIGINT)
+           |GROUP BY t.source ORDER BY t.source""".stripMargin
+      }),
+
+    Gate("q_shuffle_det", (s, dir) =>
+      // deterministic training-order shuffle: the driver's hash compare is
+      // row-order-sensitive, so the first 100 rows of the shuffled order
+      // hash-encode the exact global ordering (md5 key is engine-portable)
+      graft.functions.Sampling.deterministicShuffle(
+        t(s, dir, "documents").select(col("doc_id")), "doc_id", seed = 7L)
+        .limit(100),
+      """SELECT doc_id FROM documents
+        |ORDER BY md5('7#' || CAST(doc_id AS VARCHAR)), doc_id
+        |LIMIT 100""".stripMargin),
+
+    Gate("q_mix_temperature", (s, dir) =>
+      // temperature-weighted data mix (alpha=0.5 flattens toward uniform);
+      // gate checks per-source kept counts + token totals — the weight
+      // arithmetic and the hash membership both replayed by the oracle
+      graft.functions.Sampling.mixCorpusTemperature(
+        t(s, dir, "documents"), "doc_id", "text", "source",
+        alpha = 0.5, totalBudget = 12000.0)
+        .groupBy(col("source"))
+        .agg(count(lit(1)).as("n_docs"),
+          sum(col("n_tokens")).as("kept_tokens"))
+        .orderBy(col("source")),
+      {
+        val tok = Sql.tokenCountSql("text")
+        s"""WITH tok AS (SELECT doc_id, source, $tok AS n_tokens FROM documents),
+           |av AS (SELECT source, CAST(SUM(n_tokens) AS DOUBLE) AS avail
+           |  FROM tok GROUP BY source),
+           |wt AS (SELECT source, avail, POWER(avail, 0.5) AS w FROM av),
+           |fr AS (SELECT source,
+           |    LEAST(1.0, 12000.0 * w / (SELECT SUM(w) FROM wt) / avail) AS f
+           |  FROM wt)
+           |SELECT t.source, COUNT(*) AS n_docs,
+           |  CAST(SUM(t.n_tokens) AS BIGINT) AS kept_tokens
+           |FROM tok t JOIN fr USING (source)
+           |WHERE CAST(('0x' || substr(md5(CAST(t.doc_id AS VARCHAR)), 1, 8))
+           |        AS BIGINT) % 10000 < CAST(FLOOR(f * 10000) AS BIGINT)
+           |GROUP BY t.source ORDER BY t.source""".stripMargin
+      }),
+
+    Gate("q_asof_forward", (s, dir) => {
+      // forward variant: each order's NEXT strictly-later order-day count
+      val orders = t(s, dir, "orders")
+      val daily = orders
+        .groupBy(col("o_custkey"), col("o_orderdate").as("next_date"))
+        .agg(count(lit(1)).as("next_n"))
+      AsofJoin.forward(
+        left = orders.select(col("o_orderkey"), col("o_custkey"), col("o_orderdate")),
+        right = daily, keys = Seq("o_custkey"),
+        leftTs = "o_orderdate", rightTs = "next_date", strict = true)
+        .select(col("o_orderkey"),
+          date_format(col("next_date"), "yyyy-MM-dd").as("next_date"),
+          col("next_n"))
+        .orderBy(col("o_orderkey"))
+    },
       """WITH daily AS (
         |  SELECT o_custkey, o_orderdate AS next_date, COUNT(*) AS next_n
         |  FROM orders GROUP BY 1, 2)
@@ -4610,9 +2933,30 @@ object ExtraQueries {
         |  strftime(d.next_date, '%Y-%m-%d') AS next_date, d.next_n
         |FROM orders l ASOF LEFT JOIN daily d
         |  ON l.o_custkey = d.o_custkey AND l.o_orderdate < d.next_date
-        |ORDER BY l.o_orderkey""".stripMargin,
+        |ORDER BY l.o_orderkey""".stripMargin),
 
-    "q_profile_table" -> {
+    Gate("q_profile_table", (s, dir) => {
+      // the full §1.3 query-time profile: dtype, nulls, distincts, typed
+      // min/max, role suggestion, high-card flag, categorical value list.
+      // Gate representation: floats → FLOOR-scaled integer strings and
+      // nullables → '' so the cross-engine compare has no float- or
+      // NULL-canonicalization surface (the API keeps real doubles).
+      def x10ks(c: Column): Column =
+        coalesce(floor(c * lit(10000.0) + lit(0.5)).cast(LongType)
+          .cast(StringType), lit(""))
+      graft.query.QueryService.profileTable(t(s, dir, "events"),
+        Seq("event_id", "event_type", "value", "ts", "props"))
+        .select(col("column_name"), col("dtype"), col("total_count"),
+          col("null_count"), col("n_distinct"), col("high_cardinality"),
+          col("suggested_role"),
+          x10ks(col("min_value")).as("min_x10k"),
+          x10ks(col("max_value")).as("max_x10k"),
+          x10ks(col("mean_value")).as("mean_x10k"),
+          coalesce(col("min_text"), lit("")).as("min_text"),
+          coalesce(col("max_text"), lit("")).as("max_text"),
+          coalesce(col("sample_values"), lit("")).as("sample_values"))
+        .orderBy(col("column_name"))
+    }, {
       // one SELECT per profiled column, mirroring QueryService.profileTable
       // rule-for-rule (dtype names, missing = null-or-empty-string for text,
       // id/metric/datetime/dimension role order, ≤20-value categorical list)
@@ -4664,305 +3008,80 @@ object ExtraQueries {
         prof("ts", "timestamp", "ts", idLike = false),
         prof("props", "string", "str", idLike = false))
         .mkString("", "\nUNION ALL\n", "\nORDER BY column_name")
+    }),
+
+    // sketch estimates are engine-specific, so the gate checks the
+    // oracle-verifiable INVARIANT instead: exact distincts (cross-engine)
+    // plus "estimate within 5% of exact" — the oracle expects TRUE, so an
+    // accuracy regression in the sketch pipeline breaks the hash match
+    // (merge algebra still covered by SketchSpec)
+    Gate("q_sketch_distinct", (s, dir) => {
+      val events = t(s, dir, "events")
+      val daily = graft.functions.Sketches.distinctSketches(
+        events.withColumn("day", to_date(col("ts"))),
+        Seq("event_type", "day"), "user_id")
+      val est = graft.functions.Sketches.mergeDistinct(daily, Seq("event_type"))
+        .withColumn("distinct_est", col("distinct_est").cast(LongType))
+      val exact = events.groupBy(col("event_type"))
+        .agg(countDistinct(col("user_id")).as("n_exact"))
+      est.join(exact, Seq("event_type"))
+        .select(col("event_type"), col("n_exact"),
+          (abs(col("distinct_est") - col("n_exact")).cast(DoubleType) <=
+            col("n_exact").cast(DoubleType) * 0.05).as("within_5pct"))
+        .orderBy(col("event_type"))
     },
+      // exact distincts cross-engine + the 5%-accuracy invariant
+      """SELECT event_type, CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_exact,
+        |  TRUE AS within_5pct
+        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin),
 
-    "q_range_join" ->
-      """WITH weeks AS (
-        |  SELECT DISTINCT date_trunc('week', o_orderdate) AS w_start FROM orders)
-        |SELECT o.o_orderkey, strftime(w.w_start, '%Y-%m-%d') AS week_start
-        |FROM orders o JOIN weeks w
-        |  ON o.o_orderdate >= w.w_start
-        | AND o.o_orderdate < w.w_start + INTERVAL 3 DAY
-        |ORDER BY o.o_orderkey""".stripMargin,
-
-    "q_store_roundtrip" ->
-      "SELECT * FROM nation ORDER BY n_nationkey",
-
-    "q_multi_sink" ->
-      "SELECT * FROM customer ORDER BY c_custkey",
-
-    "q_pipeline_resume" ->
-      """SELECT o_orderkey, o_totalprice,
-        |  strftime(o_orderdate, '%Y-%m-%d') AS order_date,
-        |  CAST(EXTRACT(year FROM o_orderdate) AS INTEGER) AS order_year
-        |FROM orders WHERE o_totalprice > 150000.0
-        |ORDER BY o_orderkey""".stripMargin,
-
-    "q_pipeline_stats" ->
-      """SELECT 'records_loaded' AS metric, CAST(COUNT(*) AS BIGINT) AS n_rows
-        |  FROM orders
-        |  WHERE o_totalprice > 100000.0 AND o_orderpriority = '1-URGENT'
-        |UNION ALL
-        |SELECT 'stage_high_value', CAST(COUNT(*) AS BIGINT)
-        |  FROM orders WHERE o_totalprice > 100000.0
-        |UNION ALL
-        |SELECT 'stage_urgent', CAST(COUNT(*) AS BIGINT)
-        |  FROM orders
-        |  WHERE o_totalprice > 100000.0 AND o_orderpriority = '1-URGENT'
-        |ORDER BY metric""".stripMargin,
-
-    "q_config_pipeline" ->
-      """SELECT o_orderstatus, COUNT(*) AS n_orders,
-        |  MIN(o_totalprice) AS min_price, MAX(o_totalprice) AS max_price
-        |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
-
-    "q_incremental_scan" ->
-      "SELECT * FROM customer ORDER BY c_custkey",
-
-    "q_json_auto" ->
-      """SELECT n_nationkey, n_name, n_regionkey, 'array' AS src
-        |FROM nation
-        |UNION ALL
-        |SELECT n_nationkey, n_name, n_regionkey, 'lines' AS src
-        |FROM nation
-        |ORDER BY src, n_nationkey""".stripMargin,
-
-    "q_autotune" ->
-      """WITH r AS (
-        |  SELECT batch_size, CAST(records AS DOUBLE) / seconds AS tput
-        |  FROM read_parquet('/tmp/graft_oracle_aux/{SF}/autotune_runs/*.parquet')),
-        |rk AS (
-        |  SELECT batch_size, tput,
-        |    ROW_NUMBER() OVER (ORDER BY tput DESC) AS rn
-        |  FROM r)
-        |SELECT
-        |  (SELECT batch_size FROM rk WHERE rn = 1) AS batch_size,
-        |  CAST(FLOOR(((LEAST(1.0, 1.0/10.0) + 1.0/(1.0+0.0)
-        |      + LEAST(1.0, ((SELECT tput FROM rk WHERE rn = 1)
-        |                    - (SELECT tput FROM rk WHERE rn = 2)) * 10))
-        |    / 3.0) * 1000000 + 0.5) AS BIGINT) AS confidence_x1e6,
-        |  CAST(FLOOR((((SELECT tput FROM rk WHERE rn = 1)
-        |               - (SELECT AVG(tput) FROM r))
-        |    / (SELECT AVG(tput) FROM r) * 100) * 100 + 0.5) AS BIGINT)
-        |    AS improvement_x100""".stripMargin,
-
-    "q_jdbc_roundtrip" ->
-      "SELECT * FROM region ORDER BY r_regionkey",
-
-    "q_iforest" ->
-      // scores are model-specific; the oracle re-applies the flagging rule
-      // (95th-percentile cutoff + degenerate guard) to the materialized
-      // score column and must reproduce the flagged set exactly
-      """WITH s AS (SELECT event_id, score
-        |  FROM read_parquet('/tmp/graft_oracle_aux/{SF}/iforest_scores/*.parquet')),
-        |c AS (SELECT quantile_cont(score, 0.95) AS cut, MIN(score) AS mn,
-        |             MAX(score) AS mx FROM s)
-        |SELECT s.event_id, e.value,
-        |  CAST(FLOOR(s.score * 10000.0 + 0.5) AS BIGINT) AS score_x10k
-        |FROM s JOIN events e ON s.event_id = e.event_id, c
-        |WHERE c.mx > c.mn AND s.score >= c.cut
-        |ORDER BY s.event_id""".stripMargin,
-
-    "q_viz_charts" ->
-      // replicate selectCharts rule-for-rule over events' exact stats:
-      // id-suffixed columns are never chart axes; event_type is the only
-      // ≤50-distinct categorical; value the only aggregatable numeric; ts
-      // the only datetime. Guards keep the oracle honest if data drifts.
-      """WITH st AS (SELECT COUNT(DISTINCT event_type) AS d_et,
-        |                   COUNT(DISTINCT props) AS d_props FROM events)
-        |SELECT * FROM (
-        |  SELECT 'bar' AS chart_type, 9 AS priority, 'event_type' AS x,
-        |         'value' AS y, 'sum' AS agg FROM st WHERE d_et <= 50
-        |  UNION ALL SELECT 'bar', 9, 'props', 'value', 'sum' FROM st
-        |    WHERE d_props <= 50
-        |  UNION ALL SELECT 'line', 8, 'ts', 'value', 'sum' FROM st
-        |  UNION ALL SELECT 'pie', 6, 'event_type', '', 'count' FROM st
-        |    WHERE d_et <= 10
-        |  UNION ALL SELECT 'histogram', 5, 'value', '', '' FROM st
-        |  UNION ALL SELECT 'heatmap', 5, 'event_type', 'props', 'sum' FROM st
-        |    WHERE d_props <= 50
-        |  UNION ALL SELECT 'box', 4, 'event_type', 'value', '' FROM st
-        |    WHERE d_et <= 50)
-        |ORDER BY priority DESC, chart_type, x, y""".stripMargin,
-
-    "q_echarts_config" ->
-      // re-template the four configs from DuckDB's own aggregate: the
-      // literal skeletons below are the contract — if the Scala generator
-      // reorders a field, changes a constant, or renders a number
-      // differently, the strings diverge
-      """WITH a AS (SELECT event_type AS x, CAST(COUNT(*) AS BIGINT) AS y
-        |    FROM events GROUP BY 1),
-        |s AS (SELECT
-        |    string_agg('"' || x || '"', ',' ORDER BY x) AS cats,
-        |    string_agg(CAST(y AS VARCHAR), ',' ORDER BY x) AS vals,
-        |    string_agg('{"name":"' || x || '","value":' ||
-        |      CAST(y AS VARCHAR) || '}', ',' ORDER BY x) AS pies
-        |  FROM a)
-        |SELECT chart_type, config_json FROM (
-        |  SELECT 'area' AS chart_type,
-        |    '{"title":{"text":"Events by type","left":"center"},"tooltip":{"trigger":"axis"},"grid":{"left":"3%","right":"4%","bottom":"3%","top":"15%","containLabel":true},"xAxis":{"type":"category","data":['
-        |    || cats ||
-        |    '],"boundaryGap":false},"yAxis":{"type":"value"},"series":[{"type":"line","data":['
-        |    || vals ||
-        |    '],"smooth":true,"emphasis":{"focus":"series"},"symbol":"circle","symbolSize":6,"areaStyle":{"opacity":0.3}}]}'
-        |    AS config_json FROM s
-        |  UNION ALL SELECT 'bar',
-        |    '{"title":{"text":"Events by type","left":"center"},"tooltip":{"trigger":"axis","axisPointer":{"type":"shadow"}},"grid":{"left":"3%","right":"4%","bottom":"3%","top":"15%","containLabel":true},"xAxis":{"type":"category","data":['
-        |    || cats ||
-        |    ']},"yAxis":{"type":"value","data":null},"series":[{"type":"bar","data":['
-        |    || vals ||
-        |    '],"emphasis":{"focus":"series"},"itemStyle":{"borderRadius":[4,4,0,0]}}],"animationEasing":"elasticOut"}'
-        |    FROM s
-        |  UNION ALL SELECT 'line',
-        |    '{"title":{"text":"Events by type","left":"center"},"tooltip":{"trigger":"axis"},"grid":{"left":"3%","right":"4%","bottom":"3%","top":"15%","containLabel":true},"xAxis":{"type":"category","data":['
-        |    || cats ||
-        |    '],"boundaryGap":false},"yAxis":{"type":"value"},"series":[{"type":"line","data":['
-        |    || vals ||
-        |    '],"smooth":true,"emphasis":{"focus":"series"},"symbol":"circle","symbolSize":6}]}'
-        |    FROM s
-        |  UNION ALL SELECT 'pie',
-        |    '{"title":{"text":"Events by type","left":"center"},"tooltip":{"trigger":"item","formatter":"{b}: {c} ({d}%)"},"legend":{"orient":"horizontal","bottom":"5%"},"series":[{"type":"pie","radius":"70%","center":["50%","45%"],"data":['
-        |    || pies ||
-        |    '],"emphasis":{"itemStyle":{"shadowBlur":10,"shadowOffsetX":0,"shadowColor":"rgba(0, 0, 0, 0.5)"}},"label":{"show":true,"formatter":"{b}: {d}%"},"animationType":"scale","animationEasing":"elasticOut"}]}'
-        |    FROM s)
-        |ORDER BY chart_type""".stripMargin,
-
-    "q_insight_profile" ->
-      // rebuild the profile prompt text from nation's exact stats: the
-      // mean renders from the SAME floor-scaled integer on both sides
-      // ((Σx·10⁴) floor-div n), distincts are exact — no float ever
-      // becomes a string
-      """WITH st AS (SELECT CAST(COUNT(*) AS BIGINT) AS n,
-        |    CAST(MIN(n_nationkey) AS BIGINT) AS k0,
-        |    CAST(MAX(n_nationkey) AS BIGINT) AS k1,
-        |    (CAST(SUM(n_nationkey) AS BIGINT) * 10000) // COUNT(*) AS km,
-        |    CAST(MIN(n_regionkey) AS BIGINT) AS r0,
-        |    CAST(MAX(n_regionkey) AS BIGINT) AS r1,
-        |    (CAST(SUM(n_regionkey) AS BIGINT) * 10000) // COUNT(*) AS rm,
-        |    CAST(COUNT(DISTINCT n_name) AS BIGINT) AS dn
-        |  FROM nation)
-        |SELECT line_no, line FROM (
-        |  SELECT CAST(0 AS BIGINT) AS line_no,
-        |    'Dataset sample: ' || n || ' rows, 3 columns' AS line FROM st
-        |  UNION ALL SELECT 1, '- n_nationkey (int): min=' || k0 ||
-        |    ', max=' || k1 || ', mean=' ||
-        |    (CASE WHEN km < 0 THEN '-' ELSE '' END) || (ABS(km) // 10000)
-        |    || '.' || lpad(CAST(ABS(km) % 10000 AS VARCHAR), 4, '0')
-        |    FROM st
-        |  UNION ALL SELECT 2, '- n_name (string): ' || dn ||
-        |    ' distinct values' FROM st
-        |  UNION ALL SELECT 3, '- n_regionkey (int): min=' || r0 ||
-        |    ', max=' || r1 || ', mean=' ||
-        |    (CASE WHEN rm < 0 THEN '-' ELSE '' END) || (ABS(rm) // 10000)
-        |    || '.' || lpad(CAST(ABS(rm) % 10000 AS VARCHAR), 4, '0')
-        |    FROM st)
-        |ORDER BY line_no""".stripMargin,
-
-    "q_fuzzy_match" ->
-      // brute-force ground truth: every (supplier, typo'd-copy) pair
-      // within edit distance 1 — the blocked q-gram join must reproduce
-      // this set exactly
-      """WITH a AS (SELECT s_suppkey AS id_a, s_name AS name_a
-        |  FROM supplier),
-        |b AS (SELECT s_suppkey + 100000 AS id_b,
-        |    concat(substr(s_name, 1, CAST(s_suppkey % 10 + 4 AS INT)),
-        |      substr(s_name, CAST(s_suppkey % 10 + 6 AS INT), 1000))
-        |      AS name_b
-        |  FROM supplier)
-        |SELECT id_a, id_b,
-        |  CAST(levenshtein(name_a, name_b) AS INTEGER) AS dist
-        |FROM a, b WHERE levenshtein(name_a, name_b) <= 1
-        |ORDER BY id_a, id_b""".stripMargin,
-
-    "q_image_codec_roundtrip" ->
-      // PNG pixel sums replayed from the gradient arithmetic; JPEG rows
-      // carry the engine-verified lossy invariants
-      """WITH ids AS (SELECT CAST(i AS BIGINT) AS i FROM range(0, 60) t(i)),
-        |base AS (SELECT i, CAST(16 + i % 16 AS INT) AS w,
-        |    CAST(12 + i % 12 AS INT) AS h FROM ids),
-        |pix AS (SELECT b.i,
-        |    SUM(((p % b.w) * 255 // (b.w - 1)) +
-        |        ((p // b.w) * 255 // (b.h - 1)) +
-        |        ((b.i * 4) % 256)) AS ps
-        |  FROM base b JOIN range(0, 1024) rp(p) ON p < b.w * b.h
-        |  GROUP BY b.i)
-        |SELECT b.i AS media_id, c.container,
-        |  b.w AS dec_w, b.h AS dec_h,
-        |  CASE WHEN c.container = 'png' THEN CAST(pix.ps AS BIGINT)
-        |       ELSE CAST(-1 AS BIGINT) END AS pix_sum,
-        |  TRUE AS ok
-        |FROM base b JOIN pix ON pix.i = b.i
-        |CROSS JOIN (SELECT 'jpeg' AS container UNION ALL SELECT 'png') c
-        |ORDER BY media_id, container""".stripMargin,
-
-    "q_image_resize" ->
-      // arithmetic replay of fitWithin (identical double ops) + nearest-
-      // neighbor source indexing + the gradient pixel formula
-      """WITH img AS (SELECT i, 16 + i % 32 AS w, 12 + i % 24 AS h
-        |  FROM range(99) g(i) WHERE i % 4 = 0),
-        |fit AS (SELECT i, w, h,
-        |    GREATEST(1, CAST(FLOOR(w * LEAST(1.0, LEAST(8.0 / w, 8.0 / h)))
-        |      AS INT)) AS nw,
-        |    GREATEST(1, CAST(FLOOR(h * LEAST(1.0, LEAST(8.0 / w, 8.0 / h)))
-        |      AS INT)) AS nh
-        |  FROM img),
-        |xs AS (SELECT i, w, h, nw, nh, unnest(range(nw)) AS x FROM fit),
-        |ys AS (SELECT i, w, h, nw, nh, x, unnest(range(nh)) AS y FROM xs),
-        |px AS (SELECT i, nw, nh,
-        |    (LEAST(h - 1, y * h // nh) * w
-        |      + LEAST(w - 1, x * w // nw)) AS p
-        |  FROM ys)
-        |SELECT CAST(i AS BIGINT) AS media_id,
-        |  CAST(ANY_VALUE(nw) AS INT) AS dec_w,
-        |  CAST(ANY_VALUE(nh) AS INT) AS dec_h,
-        |  CAST(ANY_VALUE(nw) AS INT) AS meta_w,
-        |  CAST(ANY_VALUE(nh) AS INT) AS meta_h,
-        |  CAST(SUM((p + i) % 256 + (2 * p + i) % 256 + (3 * p + i) % 256)
-        |    AS BIGINT) AS pix_sum
-        |FROM px GROUP BY i ORDER BY media_id""".stripMargin,
-
-    "q_frame_sample" ->
-      // list range is stop-EXCLUSIVE (+1 makes it match the inclusive
-      // Spark `sequence`)
-      """WITH v AS (SELECT i, 1000 * (1 + i % 30) AS dur
-        |  FROM range(99) g(i) WHERE i % 4 = 3 AND i % 8 = 3)
-        |SELECT CAST(i AS BIGINT) AS media_id,
-        |  CAST(dur AS BIGINT) AS duration_ms,
-        |  CAST(unnest(range(0, dur + 1, 7000)) AS BIGINT) AS frame_ts_ms
-        |FROM v ORDER BY media_id, frame_ts_ms""".stripMargin,
-
-    "q_multimodal_neardup" ->
-      // the twin invariant IS the ground truth: every base image pairs
-      // with exactly its id+10000 twin and nothing else
-      """SELECT CAST(i AS BIGINT) AS id_a, CAST(i + 10000 AS BIGINT) AS id_b
-        |FROM range(60) t(i) ORDER BY id_a""".stripMargin,
-
-    "q_multimodal_audio_neardup" ->
-      """SELECT CAST(i AS BIGINT) AS id_a, CAST(i + 10000 AS BIGINT) AS id_b
-        |FROM range(40) t(i) ORDER BY id_a""".stripMargin,
-
-    "q_multimodal_features" ->
-      // arithmetic ground truth for the synthetic corpus: container sizes
-      // (PPM header 13B + 3wh; BMP 54B + padded rows; WAV 44B + 2·samples)
-      // and leading features (image width·10⁴; WAV duration·10⁴ through the
-      // same float32 widening the Scala side performs)
-      """WITH g AS (SELECT unnest(range(99)) AS i)
-        |SELECT CAST(i AS BIGINT) AS media_id,
-        |  CASE WHEN i % 4 = 2 THEN 'audio'
-        |       WHEN i % 4 = 3 AND i % 8 = 3 THEN 'video'
-        |       ELSE 'image' END AS kind,
-        |  CAST(CASE
-        |    WHEN i % 4 = 0 THEN 13 + 3 * (16 + i % 32) * (12 + i % 24)
-        |    WHEN i % 4 = 1 THEN 54 + (((20 + i % 16) * 3 + 3) // 4) * 4 * (10 + i % 16)
-        |    WHEN i % 4 = 2 THEN 44 + 2 * 800 * (1 + i % 3)
-        |    ELSE 16 + i % 64 END AS BIGINT) AS n_bytes,
-        |  CASE
-        |    WHEN i % 4 = 0 THEN CAST((16 + i % 32) * 10000 AS VARCHAR)
-        |    WHEN i % 4 = 1 THEN CAST((20 + i % 16) * 10000 AS VARCHAR)
-        |    WHEN i % 4 = 2 THEN CAST(CAST(FLOOR(
-        |      CAST(CAST((1 + i % 3) / 10.0 AS REAL) AS DOUBLE) * 10000.0 + 0.5)
-        |      AS BIGINT) AS VARCHAR)
-        |    ELSE '' END AS f0_x10k
-        |FROM g ORDER BY media_id""".stripMargin,
-
-    "q_sketch_quantiles" ->
+    // quantile sketches: same invariant shape as q_sketch_distinct — the
+    // exact quantile is cross-engine (quantile_cont parity proven by
+    // q_anomaly_iqr) and the one-pass mergeable digest must land within
+    // tolerance of it
+    Gate("q_sketch_quantiles", (s, dir) => {
+      val events = t(s, dir, "events")
+      val approxQ = events.groupBy(col("event_type"))
+        .agg(graft.functions.Sketches
+          .approxQuantiles(col("value"), Seq(0.5)).as("qs"))
+        .select(col("event_type"), element_at(col("qs"), 1).as("m_approx"))
+      val exactQ = events.groupBy(col("event_type"))
+        .agg(expr("percentile(value, 0.5)").as("m_exact"))
+      approxQ.join(exactQ, Seq("event_type"))
+        .select(col("event_type"),
+          floor(col("m_exact") * lit(10000.0) + lit(0.5))
+            .cast(LongType).as("median_x10k"),
+          (abs(col("m_approx") - col("m_exact")) <=
+            greatest(abs(col("m_exact")) * 0.05, lit(1.0))).as("within_tol"))
+        .orderBy(col("event_type"))
+    },
       """SELECT event_type,
         |  CAST(FLOOR(quantile_cont(value, 0.5) * 10000.0 + 0.5) AS BIGINT)
         |    AS median_x10k,
         |  TRUE AS within_tol
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
+        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin),
 
-    "q_embed_kmeans" ->
+    Gate("q_embed_kmeans", (s, dir) => {
+      // k-means clustering surface (the IVF trainer as a first-class op):
+      // driver fit on a bounded sample, assignment is a partition-local
+      // argmin projection. The gate materializes vectors+assignments and
+      // the centroids; the oracle recomputes every vector's distance to
+      // EVERY centroid and checks the assigned one is the argmin (1e-9
+      // slack only for float-sum association).
+      import graft.functions.Similarity
+      val emb = t(s, dir, "embeddings")
+      val idx = Similarity.ivfIndex(emb, "embedding", "vec_id", nLists = 8)
+      val assigned = idx.assigned
+        .select(col("vec_id"), col("_list").as("cluster"), col("embedding"))
+      val aux = s"/tmp/graft_oracle_aux/${Sql.sfTag(dir)}"
+      Aux.write(assigned, s"$aux/kmeans_assign")
+      import s.implicits._
+      Aux.write(idx.centroids.toSeq.toDF("cluster", "centroid"),
+        s"$aux/kmeans_centroids")
+      assigned.select(col("vec_id"), col("cluster"),
+          lit(true).as("argmin_ok"))
+        .orderBy(col("vec_id"))
+    },
       // re-derive every (vector, centroid) distance and verify the engine's
       // assignment is the argmin; assignments echo from the shared aux
       """WITH a AS (SELECT vec_id, cluster, embedding
@@ -4980,9 +3099,43 @@ object ExtraQueries {
         |    MIN(dist) AS d_min
         |  FROM d GROUP BY 1, 2)
         |SELECT vec_id, cluster, d_own <= d_min + 1e-9 AS argmin_ok
-        |FROM m ORDER BY vec_id""".stripMargin,
+        |FROM m ORDER BY vec_id""".stripMargin),
 
-    "q_sketch_heavyhitters" ->
+    Gate("q_sketch_heavyhitters", (s, dir) => {
+      // mergeable heavy-hitter counting: per-DAY count-min sketches of user
+      // activity, rolled up per event_type by sketch UNION (no rescan), then
+      // probed at the exact top-3 users. The CMS guarantee is one-sided —
+      // estimate ∈ [exact, exact + eps·N] — so the oracle-checkable
+      // invariants are no_underestimate, the eps·N cap, and totalCount
+      // equality; exact counts and the top-3 cut are cross-engine.
+      import org.apache.spark.sql.expressions.Window
+      import graft.functions.Sketches
+      val events = t(s, dir, "events")
+      val daily = events
+        .groupBy(to_date(col("ts")).as("d"), col("event_type"))
+        .agg(Sketches.cmsAgg(col("user_id")).as("sk"))
+      val merged = daily.groupBy(col("event_type"))
+        .agg(Sketches.cmsUnion(col("sk")).as("sk"))
+      val cnt = events.groupBy(col("event_type"), col("user_id"))
+        .agg(count(lit(1)).as("exact_cnt"))
+      val w = Window.partitionBy(col("event_type"))
+        .orderBy(col("exact_cnt").desc, col("user_id"))
+      val top = cnt.withColumn("_rk", row_number().over(w))
+        .where(col("_rk") <= 3).drop("_rk")
+      val n = events.groupBy(col("event_type"))
+        .agg(count(lit(1)).as("_n_events"))
+      val est = Sketches.cmsEstimate(col("sk"), col("user_id"))
+      top.join(broadcast(merged), "event_type")
+        .join(broadcast(n), "event_type")
+        .select(col("event_type"), col("user_id"), col("exact_cnt"),
+          (est >= col("exact_cnt")).as("no_underestimate"),
+          (est <= col("exact_cnt") +
+            ceil(lit(0.005) * col("_n_events")).cast(LongType))
+            .as("within_eps_n"),
+          (Sketches.cmsTotal(col("sk")) === col("_n_events"))
+            .as("total_matches"))
+        .orderBy(col("event_type"), col("user_id"))
+    },
       // exact per-user counts + deterministic top-3 cut cross-engine; the
       // sketch bounds are expected-TRUE invariants
       """WITH c AS (SELECT event_type, user_id,
@@ -4995,15 +3148,320 @@ object ExtraQueries {
         |SELECT event_type, user_id, exact_cnt,
         |  TRUE AS no_underestimate, TRUE AS within_eps_n,
         |  TRUE AS total_matches
-        |FROM r WHERE rk <= 3 ORDER BY event_type, user_id""".stripMargin,
+        |FROM r WHERE rk <= 3 ORDER BY event_type, user_id""".stripMargin),
 
-    "q_sketch_distinct" ->
-      // exact distincts cross-engine + the 5%-accuracy invariant
-      """SELECT event_type, CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_exact,
-        |  TRUE AS within_5pct
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
+    Gate("q_range_join", (s, dir) => {
+      // binned range join: orders falling in the first 3 days of any week —
+      // equi-join on day bins + residual predicate, never a nested loop
+      // (see operators/RangeJoin)
+      // o_orderdate is TIMESTAMP_NTZ; session tz is UTC so the cast is exact
+      val orders = t(s, dir, "orders")
+        .select(col("o_orderkey"), col("o_orderdate"))
+        .withColumn("p_us", unix_micros(col("o_orderdate").cast("timestamp")))
+      val weeks = orders
+        .select(date_trunc("week", col("o_orderdate")).as("w_start")).distinct()
+        .withColumn("s_us", unix_micros(col("w_start").cast("timestamp")))
+        .withColumn("e_us",
+          unix_micros((col("w_start") + expr("INTERVAL 3 DAYS")).cast("timestamp")))
+      RangeJoin.binned(points = orders, ranges = weeks,
+        pointCol = "p_us", startCol = "s_us", endCol = "e_us",
+        binWidth = 86400000000L) // 1-day bins in µs
+        .select(col("o_orderkey"),
+          date_format(col("w_start"), "yyyy-MM-dd").as("week_start"))
+        .orderBy(col("o_orderkey"))
+    },
+      """WITH weeks AS (
+        |  SELECT DISTINCT date_trunc('week', o_orderdate) AS w_start FROM orders)
+        |SELECT o.o_orderkey, strftime(w.w_start, '%Y-%m-%d') AS week_start
+        |FROM orders o JOIN weeks w
+        |  ON o.o_orderdate >= w.w_start
+        | AND o.o_orderdate < w.w_start + INTERVAL 3 DAY
+        |ORDER BY o.o_orderkey""".stripMargin),
 
-    "q_query_metrics" ->
+    Gate("q_store_roundtrip", (s, dir) => {
+      // keyed intermediate storage (§2.2/file_storage.py): save with meta
+      // sidecar, load back — the loaded frame must hash-match the source
+      val store = new graft.io.IntermediateStore(s, "/tmp/graft_store_rt")
+      store.save("verify_nation", t(s, dir, "nation"), stage = "verify")
+      val (back, meta) = store.load("verify_nation")
+      require(meta.exists(_.rows == back.count()), "meta sidecar row count")
+      back.orderBy(col("n_nationkey"))
+    },
+      "SELECT * FROM nation ORDER BY n_nationkey"),
+
+    Gate("q_jdbc_roundtrip", (s, dir) => {
+      // exercises the §2.1/§2.2 JDBC source+sink (postgres_source.py /
+      // sqlite_loader.py) against the embedded file-backed Derby that ships
+      // with Spark — no sqlite-jdbc jar exists offline in this environment,
+      // and the adapters are engine-agnostic (url + dialect)
+      System.setProperty("derby.system.home", "/tmp/graft_derby")
+      new java.io.File("/tmp/graft_derby").mkdirs()
+      // jdbc:graftderby: = shutdown-on-close Derby shim (see
+      // [[graft.io.DerbySingleJvmDriver]]): releases the embedded engine's
+      // single-JVM db lock between Spark's driver-side (DDL/schema) and
+      // executor-side (rows) phases, so this gate also passes on a
+      // multi-process master. numPartitions=1 keeps row batches from two
+      // executors off the lock concurrently — a 5-row dimension roundtrip.
+      graft.io.DerbySingleJvmDriver.ensureDialect
+      val url = "jdbc:graftderby:/tmp/graft_derby/regiondb;create=true"
+      val jopts = Map(
+        "driver" -> "graft.io.DerbySingleJvmDriver",
+        "numPartitions" -> "1")
+      val region = t(s, dir, "region")
+      graft.io.Sinks.jdbc(region, url, "region_rt", mode = "overwrite",
+        options = jopts)
+      graft.io.Sources.jdbc(s, url, "region_rt", options = jopts)
+        .select(region.columns.map(col): _*)
+        .orderBy(col("r_regionkey"))
+    },
+      "SELECT * FROM region ORDER BY r_regionkey"),
+
+    Gate("q_multi_sink", (s, dir) => {
+      // §2.2 multi-destination load (pipeline_service multi-sink): ONE
+      // cached pass fans out to CSV + JSONL + parquet; every readback must
+      // agree with every other before the gate returns
+      val base = s"/tmp/graft_multisink/${Sql.sfTag(dir)}"
+      val cust = t(s, dir, "customer")
+      val result = graft.pipeline.Pipeline
+        .extract(sp => t(sp, dir, "customer"))
+        .load(df => graft.io.Sinks.csv(df, s"$base/csv"))
+        .load(df => graft.io.Sinks.jsonl(df, s"$base/jsonl"))
+        .load(df => graft.io.Sinks.parquet(df, s"$base/parquet"))
+        .run(s)
+      require(result.rowsLoaded == cust.count(), "multi-sink rowsLoaded")
+      val pq = s.read.parquet(s"$base/parquet")
+      val csvBack = graft.io.Sources.csv(s, s"$base/csv",
+        schema = Some(cust.schema))
+      val jlBack = graft.io.Sources.jsonl(s, s"$base/jsonl",
+        schema = Some(cust.schema))
+      require(csvBack.exceptAll(pq).isEmpty && pq.exceptAll(csvBack).isEmpty,
+        "csv sink drifted from parquet sink")
+      require(jlBack.exceptAll(pq).isEmpty && pq.exceptAll(jlBack).isEmpty,
+        "jsonl sink drifted from parquet sink")
+      pq.select(cust.columns.map(col): _*).orderBy(col("c_custkey"))
+    },
+      "SELECT * FROM customer ORDER BY c_custkey"),
+
+    Gate("q_pipeline_resume", (s, dir) => {
+      // §2.12 checkpointed pipeline + staged resume (pipeline.py's
+      // .pipeline_cache): the checkpointed run materializes each stage
+      // boundary; resumeFrom(1) restarts from the stage-0 parquet and must
+      // reproduce the full run exactly
+      val ck = s"/tmp/graft_ckpt/${Sql.sfTag(dir)}"
+      val stage0 = new TransformStage {
+        def name = "filter_high_value"
+        def apply(df: DataFrame): DataFrame =
+          df.filter(col("o_totalprice") > 150000.0)
+      }
+      val stage1 = new TransformStage {
+        def name = "derive_year"
+        def apply(df: DataFrame): DataFrame = df.select(
+          col("o_orderkey"), col("o_totalprice"),
+          date_format(col("o_orderdate"), "yyyy-MM-dd").as("order_date"),
+          year(col("o_orderdate")).as("order_year"))
+      }
+      val pipe = graft.pipeline.Pipeline
+        .extract(sp => t(sp, dir, "orders"))
+        .transform(stage0).transform(stage1)
+        .checkpointed(ck)
+      val full = pipe.run(s)
+      require(full.stageRowCounts.nonEmpty, "observe() stage counts present")
+      val resumed = pipe.resumeFrom(s, ck, fromStage = 1)
+      require(resumed.rowsLoaded == full.rowsLoaded,
+        s"resume row count ${resumed.rowsLoaded} != full ${full.rowsLoaded}")
+      resumed.df.orderBy(col("o_orderkey"))
+    },
+      """SELECT o_orderkey, o_totalprice,
+        |  strftime(o_orderdate, '%Y-%m-%d') AS order_date,
+        |  CAST(EXTRACT(year FROM o_orderdate) AS INTEGER) AS order_year
+        |FROM orders WHERE o_totalprice > 150000.0
+        |ORDER BY o_orderkey""".stripMargin),
+
+    Gate("q_pipeline_stats", (s, dir) => {
+      // §2.10 TransformStage observe() stats, ORACLE-gated: the lazy fused
+      // pipeline's per-stage observe() row counts and the loaded total are
+      // plain filter cardinalities DuckDB re-derives — proving the metrics
+      // ride the real data flow (a pushdown THROUGH CollectMetrics or a
+      // double-count would break the hash)
+      import s.implicits._
+      val highValue = new graft.operators.TransformStage {
+        def name = "high_value"
+        def apply(df: DataFrame): DataFrame =
+          df.filter(col("o_totalprice") > 100000.0)
+      }
+      val urgent = new graft.operators.TransformStage {
+        def name = "urgent"
+        def apply(df: DataFrame): DataFrame =
+          df.filter(col("o_orderpriority") === "1-URGENT")
+      }
+      val r = graft.pipeline.Pipeline
+        .extract(sp => t(sp, dir, "orders"))
+        .transform(highValue).transform(urgent)
+        .run(s)
+      (r.stageRowCounts.toSeq.map { case (k, v) => (s"stage_$k", v) } :+
+        (("records_loaded", r.rowsLoaded)))
+        .toDF("metric", "n_rows").orderBy(col("metric"))
+    },
+      """SELECT 'records_loaded' AS metric, CAST(COUNT(*) AS BIGINT) AS n_rows
+        |  FROM orders
+        |  WHERE o_totalprice > 100000.0 AND o_orderpriority = '1-URGENT'
+        |UNION ALL
+        |SELECT 'stage_high_value', CAST(COUNT(*) AS BIGINT)
+        |  FROM orders WHERE o_totalprice > 100000.0
+        |UNION ALL
+        |SELECT 'stage_urgent', CAST(COUNT(*) AS BIGINT)
+        |  FROM orders
+        |  WHERE o_totalprice > 100000.0 AND o_orderpriority = '1-URGENT'
+        |ORDER BY metric""".stripMargin),
+
+    Gate("q_config_pipeline", (s, dir) => {
+      // §2.12 config-driven pipeline (api/models.py:28-119 →
+      // pipeline_service.py:552-667): typed config → parquet source +
+      // aggregator stage + CSV destination, run through the factory
+      import graft.service.Config._
+      val cfg = PipelineConfig(
+        source = ParquetSource(s"$dir/orders.parquet"),
+        transformers = Seq(AggregatorConf(
+          groupBy = Seq("o_orderstatus"),
+          specs = Seq(
+            ("n_orders", "o_orderkey", "count"),
+            ("min_price", "o_totalprice", "min"),
+            ("max_price", "o_totalprice", "max")))),
+        destinations = Seq(
+          CsvDest(s"/tmp/graft_cfgpipe/${Sql.sfTag(dir)}/agg_csv")))
+      val res = graft.service.Config.build(cfg).run(s)
+      require(res.stats("success") == true, "config pipeline stats")
+      require(res.rowsLoaded > 0, "config pipeline loaded rows")
+      res.df.orderBy(col("o_orderstatus"))
+    },
+      """SELECT o_orderstatus, COUNT(*) AS n_orders,
+        |  MIN(o_totalprice) AS min_price, MAX(o_totalprice) AS max_price
+        |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin),
+
+    Gate("q_incremental_scan", (s, dir) => {
+      // §2.1 incremental-state API (adapters/base.py:66-91): the first scan
+      // sees batch 1; after batch 2 arrives the second scan must return
+      // ONLY the new file; the union reconstructs the whole table
+      val root = new java.io.File(s"/tmp/graft_incr/${Sql.sfTag(dir)}")
+      def rmrf(f: java.io.File): Unit = {
+        if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rmrf))
+        f.delete(); ()
+      }
+      rmrf(root)
+      val scanDir = new java.io.File(root, "in"); scanDir.mkdirs()
+      val cust = t(s, dir, "customer")
+      def drop(batch: DataFrame, name: String): Unit = {
+        val stage = new java.io.File(root, s"stage_$name")
+        batch.coalesce(1).write.mode("overwrite").parquet(stage.getPath)
+        val part = stage.listFiles()
+          .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
+          .getOrElse(sys.error(s"no part file in $stage"))
+        java.nio.file.Files.move(part.toPath,
+          new java.io.File(scanDir, s"$name.parquet").toPath)
+        ()
+      }
+      val even = cust.filter(col("c_custkey") % 2 === 0)
+      val odd = cust.filter(col("c_custkey") % 2 === 1)
+      drop(even, "batch1")
+      val (df1, st1) = graft.io.IncrementalState.scanNew(
+        s, scanDir.getPath, "parquet", graft.io.IncrementalState.empty)
+      drop(odd, "batch2")
+      val (df2, _) = graft.io.IncrementalState.scanNew(
+        s, scanDir.getPath, "parquet", st1)
+      require(df2.count() == odd.count(),
+        "second scan must return only the newly-arrived batch")
+      df1.unionByName(df2)
+        .select(cust.columns.map(col): _*).orderBy(col("c_custkey"))
+    },
+      "SELECT * FROM customer ORDER BY c_custkey"),
+
+    Gate("q_json_auto", (s, dir) => {
+      // §2.1 JSON format auto-detect (json_source.py:83-106): the same rows
+      // written as a single `[...]` array file and as JSONL must both route
+      // through jsonAuto's first-byte sniff to the right reader
+      val base = s"/tmp/graft_jsonauto/${Sql.sfTag(dir)}"
+      val nat = t(s, dir, "nation")
+      graft.io.Sinks.jsonArray(nat, s"$base/nation_array.json")
+      graft.io.Sinks.jsonl(nat, s"$base/nation_lines")
+      def cast(df: DataFrame): DataFrame =
+        nat.schema.fields.foldLeft(df) { (d, f) =>
+          d.withColumn(f.name, col(f.name).cast(f.dataType))
+        }.select(nat.columns.map(col): _*)
+      val arr = cast(graft.io.Sources.jsonAuto(s, s"$base/nation_array.json"))
+        .withColumn("src", lit("array"))
+      val lines = cast(graft.io.Sources.jsonAuto(s, s"$base/nation_lines"))
+        .withColumn("src", lit("lines"))
+      arr.unionByName(lines).orderBy(col("src"), col("n_nationkey"))
+    },
+      """SELECT n_nationkey, n_name, n_regionkey, 'array' AS src
+        |FROM nation
+        |UNION ALL
+        |SELECT n_nationkey, n_name, n_regionkey, 'lines' AS src
+        |FROM nation
+        |ORDER BY src, n_nationkey""".stripMargin),
+
+    Gate("q_autotune", (s, dir) => {
+      // §2.11 AutoTuner (auto_tuner.py:115-343): one synthetic run per
+      // batch size, all numbers derived from orders; the tuner consumes the
+      // EXACT values in the aux parquet, so DuckDB re-running the
+      // argmax + confidence + improvement formulas sees bit-identical input
+      import s.implicits._
+      val runs = t(s, dir, "orders")
+        .groupBy((substring(col("o_orderpriority"), 1, 1).cast(IntegerType)
+          * 100).as("batch_size"))
+        .agg(count(lit(1)).as("records"),
+          (graft.functions.Dec128.sumExact(col("o_totalprice"))
+            .cast(DoubleType) / 1000000.0).as("seconds"))
+      // the decimal-accumulated aggregation is deterministic and parquet
+      // preserves IEEE bits, so collecting the frame directly feeds the
+      // tuner the same values the oracle reads back from the aux dump
+      Aux.write(runs, s"/tmp/graft_oracle_aux/${Sql.sfTag(dir)}/autotune_runs")
+      val tuner = new graft.service.AutoTuner()
+      runs.collect().foreach { r =>
+          tuner.recordPerformance(tuner.Metrics("p",
+            r.getAs[Int]("batch_size"), r.getAs[Long]("records"),
+            r.getAs[Double]("seconds"), memoryMb = 64.0))
+        }
+      val rec = tuner.getRecommendations("p")
+      require(rec.hasRecommendations, "tuner must recommend")
+      Seq((rec.batchSize.get,
+        math.floor(rec.confidence * 1e6 + 0.5).toLong,
+        math.floor(rec.expectedImprovementPct * 100 + 0.5).toLong))
+        .toDF("batch_size", "confidence_x1e6", "improvement_x100")
+    },
+      """WITH r AS (
+        |  SELECT batch_size, CAST(records AS DOUBLE) / seconds AS tput
+        |  FROM read_parquet('/tmp/graft_oracle_aux/{SF}/autotune_runs/*.parquet')),
+        |rk AS (
+        |  SELECT batch_size, tput,
+        |    ROW_NUMBER() OVER (ORDER BY tput DESC) AS rn
+        |  FROM r)
+        |SELECT
+        |  (SELECT batch_size FROM rk WHERE rn = 1) AS batch_size,
+        |  CAST(FLOOR(((LEAST(1.0, 1.0/10.0) + 1.0/(1.0+0.0)
+        |      + LEAST(1.0, ((SELECT tput FROM rk WHERE rn = 1)
+        |                    - (SELECT tput FROM rk WHERE rn = 2)) * 10))
+        |    / 3.0) * 1000000 + 0.5) AS BIGINT) AS confidence_x1e6,
+        |  CAST(FLOOR((((SELECT tput FROM rk WHERE rn = 1)
+        |               - (SELECT AVG(tput) FROM r))
+        |    / (SELECT AVG(tput) FROM r) * 100) * 100 + 0.5) AS BIGINT)
+        |    AS improvement_x100""".stripMargin),
+
+    Gate("q_query_metrics", (s, dir) =>
+      // the full §2.6 endpoint shape through QueryService: filters + all
+      // metric fns + default first-metric-desc ordering + limit
+      graft.query.QueryService.query(t(s, dir, "lineitem"),
+        Seq(graft.query.Filter.Between("l_quantity", 5.0, 45.0)),
+        graft.query.AggregationSpec(
+          groupBy = Seq("l_linestatus"),
+          metrics = Seq(
+            graft.query.Metric("sum", "l_extendedprice", "total_price"),
+            graft.query.Metric("avg", "l_extendedprice", "avg_price"),
+            graft.query.Metric("min", "l_quantity", "min_qty"),
+            graft.query.Metric("max", "l_quantity", "max_qty"),
+            graft.query.Metric("count", "l_orderkey", "n_rows"),
+            graft.query.Metric("count_distinct", "l_suppkey", "n_supp")),
+          limit = Some(10))),
       s"""SELECT l_linestatus,
          |  ${esum("l_extendedprice")} AS total_price,
          |  ${eavg("l_extendedprice")} AS avg_price,
@@ -5011,9 +3469,997 @@ object ExtraQueries {
          |  COUNT(*) AS n_rows, COUNT(DISTINCT l_suppkey) AS n_supp
          |FROM lineitem WHERE l_quantity BETWEEN 5.0 AND 45.0
          |GROUP BY l_linestatus
-         |ORDER BY total_price DESC, l_linestatus ASC LIMIT 10""".stripMargin,
+         |ORDER BY total_price DESC, l_linestatus ASC LIMIT 10""".stripMargin),
 
-    "q_rolling_distinct_sketch" ->
+    // web-curation family: a deterministic messy URL derived from
+    // (source, doc_id) — mixed case, default/explicit ports, tracking
+    // params, fragments, trailing slashes — exercises every normalization
+    // rule, and the oracle replays derivation + normalization end-to-end
+    Gate("q_url_normalize", (s, dir) => {
+      import graft.functions.UrlFunctions
+      t(s, dir, "documents")
+        .withColumn("url", syntheticUrl)
+        .select(col("doc_id"),
+          UrlFunctions.normalizeUrl(col("url")).as("url_norm"),
+          UrlFunctions.urlHost(col("url")).as("host"),
+          UrlFunctions.registeredDomain(
+            UrlFunctions.urlHost(col("url"))).as("domain"))
+        .orderBy(col("doc_id"))
+    },
+      s"""WITH urls AS (SELECT doc_id, $SyntheticUrlSql AS url FROM documents),
+         |$DomainSql,
+         |p AS (SELECT doc_id, url, host, domain,
+         |    regexp_replace(url, '#.*', '') AS u FROM dom),
+         |parts AS (SELECT *,
+         |  lower(regexp_extract(u, '^([A-Za-z][A-Za-z0-9+.-]*)://.*', 1)) AS scheme,
+         |  regexp_replace(lower(regexp_extract(u,
+         |    '^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]*).*', 1)), '^[^@]*@', '') AS auth0,
+         |  regexp_extract(u, '^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]*(.*)', 1) AS rest
+         |  FROM p),
+         |np AS (SELECT *,
+         |  CASE WHEN scheme = 'http' THEN regexp_replace(auth0, ':80$$', '')
+         |       WHEN scheme = 'https' THEN regexp_replace(auth0, ':443$$', '')
+         |       ELSE auth0 END AS auth,
+         |  regexp_extract(rest, '^([^?]*)', 1) AS path0,
+         |  regexp_extract(rest, '\\?(.*)', 1) AS query0 FROM parts),
+         |nq AS (SELECT *,
+         |  CASE WHEN length(regexp_replace(path0, '/+$$', '')) = 0 THEN '/'
+         |       ELSE regexp_replace(path0, '/+$$', '') END AS path,
+         |  regexp_replace(regexp_replace(query0,
+         |    '(?:^|&)(?:utm_[^=&]*|fbclid|gclid|ref)=[^&]*', '', 'g'),
+         |    '^&+', '') AS query FROM np)
+         |SELECT doc_id,
+         |  CASE WHEN scheme = '' THEN url
+         |       ELSE scheme || '://' || auth || path ||
+         |            (CASE WHEN query = '' THEN '' ELSE '?' || query END) END
+         |    AS url_norm,
+         |  host, domain
+         |FROM nq ORDER BY doc_id""".stripMargin),
+
+    Gate("q_domain_cap", (s, dir) => {
+      import graft.functions.UrlFunctions
+      UrlFunctions.domainCapSample(
+        t(s, dir, "documents").withColumn("url", syntheticUrl),
+        "doc_id", "url", cap = 3)
+        .select(col("doc_id"), col("domain"),
+          col("domain_rank").cast(LongType).as("domain_rank"))
+        .orderBy(col("doc_id"))
+    },
+      s"""WITH urls AS (SELECT doc_id, $SyntheticUrlSql AS url FROM documents),
+         |$DomainSql,
+         |r AS (SELECT doc_id, domain,
+         |    ROW_NUMBER() OVER (PARTITION BY domain
+         |      ORDER BY md5('dc#' || CAST(doc_id AS VARCHAR)), doc_id)
+         |      AS domain_rank
+         |  FROM dom)
+         |SELECT doc_id, domain, CAST(domain_rank AS BIGINT) AS domain_rank
+         |FROM r WHERE domain_rank <= 3 ORDER BY doc_id""".stripMargin),
+
+    // outlier capping: clamp value to its exact [p05, p95] percentiles —
+    // one stats job inlined as literals, one clamping scan; the oracle
+    // recomputes both bounds with quantile_cont and replays the clamp
+    Gate("q_winsorize", (s, dir) =>
+      Winsorizer(Seq("value"), 0.05, 0.95)(t(s, dir, "events"))
+        .select(col("event_id"),
+          when(col("value").isNull, lit(null).cast(LongType))
+            .otherwise(floor(col("value") * lit(10000.0) + lit(0.5))
+              .cast(LongType)).as("value_x10k"))
+        .orderBy(col("event_id")),
+      """WITH b AS (SELECT quantile_cont(value, 0.05) AS lo,
+        |    quantile_cont(value, 0.95) AS hi FROM events)
+        |SELECT event_id,
+        |  CASE WHEN value IS NULL THEN NULL
+        |       ELSE CAST(FLOOR(LEAST(GREATEST(value, lo), hi) * 10000 + 0.5)
+        |                 AS BIGINT) END AS value_x10k
+        |FROM events, b ORDER BY event_id""".stripMargin),
+
+    // sorted distinct string aggregation per group (the report-cell
+    // "list the members" shape; sorted so both engines emit one canonical
+    // string)
+    Gate("q_string_agg", (s, dir) =>
+      t(s, dir, "documents")
+        .groupBy(col("lang"))
+        .agg(
+          array_join(array_sort(collect_set(col("source"))), ",")
+            .as("sources"),
+          countDistinct(col("source")).as("n_sources"))
+        .orderBy(col("lang")),
+      """SELECT lang,
+        |  string_agg(DISTINCT source, ',' ORDER BY source) AS sources,
+        |  COUNT(DISTINCT source) AS n_sources
+        |FROM documents GROUP BY lang ORDER BY lang""".stripMargin),
+
+    // set algebra over query results: doc ids in the first half INTERSECT
+    // quality docs, then EXCEPT the flagged set — exercises
+    // intersect/except distinct semantics end-to-end
+    Gate("q_setops", (s, dir) => {
+      val docs = t(s, dir, "documents")
+      val firstHalf = docs.filter(col("doc_id") < 250).select(col("doc_id"))
+      val longDocs = docs.filter(col("n_chars") >= 200).select(col("doc_id"))
+      val flagged = docs.filter(col("doc_id") % 10 === 0).select(col("doc_id"))
+      firstHalf.intersect(longDocs).except(flagged)
+        .orderBy(col("doc_id"))
+    },
+      """SELECT doc_id FROM documents WHERE doc_id < 250
+        |INTERSECT
+        |SELECT doc_id FROM documents WHERE n_chars >= 200
+        |EXCEPT
+        |SELECT doc_id FROM documents WHERE doc_id % 10 = 0
+        |ORDER BY doc_id""".stripMargin),
+
+    // hierarchical totals in ONE pass: rollup produces (flag,status),
+    // (flag), and grand-total rows — partial-agg friendly, no re-scan per
+    // level (the reference's dashboard would run three queries for this)
+    Gate("q_rollup", (s, dir) =>
+      t(s, dir, "lineitem")
+        .rollup(col("l_returnflag"), col("l_linestatus"))
+        .agg(count(lit(1)).as("n"),
+          Semantics.exactSum(col("l_quantity")).as("qty"))
+        .select(
+          coalesce(col("l_returnflag"), lit("ALL")).as("flag"),
+          coalesce(col("l_linestatus"), lit("ALL")).as("status"),
+          col("n"), col("qty"))
+        .orderBy(col("flag"), col("status")),
+      s"""SELECT COALESCE(l_returnflag, 'ALL') AS flag,
+         |  COALESCE(l_linestatus, 'ALL') AS status,
+         |  COUNT(*) AS n, ${Sql.esum("l_quantity")} AS qty
+         |FROM lineitem
+         |GROUP BY ROLLUP (l_returnflag, l_linestatus)
+         |ORDER BY flag, status""".stripMargin),
+
+    Gate("q_rate_spike", (s, dir) =>
+      // hourly event-rate spikes per type: the z-test compares two exact
+      // integer products (no float mean/stddev anywhere), so the flagged
+      // set replays bit-for-bit
+      graft.operators.AnomalyDetector.rateSpikes(
+        t(s, dir, "events"), "event_type",
+        date_trunc("hour", col("ts")), zNum = 2L, zDen = 1L)
+        .select(col("event_type"),
+          date_format(col("bucket"), "yyyy-MM-dd HH:mm:ss").as("hour"),
+          col("n"))
+        .orderBy(col("event_type"), col("hour")),
+      """WITH b AS (SELECT event_type, date_trunc('hour', ts) AS bucket,
+        |    CAST(COUNT(*) AS BIGINT) AS n
+        |  FROM events GROUP BY 1, 2),
+        |st AS (SELECT event_type, CAST(COUNT(*) AS BIGINT) AS c,
+        |    CAST(SUM(n) AS BIGINT) AS s, CAST(SUM(n * n) AS BIGINT) AS q
+        |  FROM b GROUP BY event_type)
+        |SELECT b.event_type,
+        |  strftime(b.bucket, '%Y-%m-%d %H:%M:%S') AS hour, b.n
+        |FROM b JOIN st USING (event_type)
+        |WHERE (b.n * st.c - st.s) * (b.n * st.c - st.s)
+        |  > 4 * (st.q * st.c - st.s * st.s)
+        |ORDER BY b.event_type, hour""".stripMargin),
+
+    Gate("q_sketch_bloom", (s, dir) => {
+      // mergeable Bloom membership screen: per-priority shard sketches
+      // union into one filter (no rescan), probed by every order. The
+      // oracle checks the EXACT guarantee — zero false negatives on the
+      // 1-URGENT member set — plus the measured FPR staying under 5x the
+      // configured 1%
+      import graft.functions.Sketches
+      val orders = t(s, dir, "orders")
+      val members = orders.filter(col("o_orderpriority") === "1-URGENT")
+      // size the screen FROM THE DATA: the former fixed 100k capacity
+      // saturated at sf1 (~300k members) and the FPR bound silently died —
+      // "sized honestly" means one cheap count before building, exactly
+      // what a production load does
+      val cap = math.max(members.count(), 1L)
+      val shards = members
+        .groupBy(col("o_orderstatus"))
+        .agg(Sketches.bloomAgg(col("o_orderkey"), cap).as("sk"))
+      // the merged screen is ONE bounded row (a fitted model, like the
+      // iForest trees) — collect it and ship the bytes in the probe
+      // closure, deserialized once per executor rather than per row
+      val screen = shards.agg(Sketches.bloomUnion(col("sk"), cap).as("sk"))
+        .head().getAs[Array[Byte]]("sk")
+      val probed = orders
+        .select(col("o_orderkey"),
+          (col("o_orderpriority") === "1-URGENT").as("is_member"),
+          Sketches.bloomMightContain(screen, col("o_orderkey"))
+            .as("flagged"))
+      probed.agg(
+        sum(when(col("is_member"), 1L).otherwise(0L)).as("n_members"),
+        (sum(when(col("is_member") && !col("flagged"), 1L).otherwise(0L))
+          === 0L).as("no_false_negatives"),
+        (sum(when(!col("is_member") && col("flagged"), 1L).otherwise(0L))
+          .cast(DoubleType) <=
+          sum(when(!col("is_member"), 1L).otherwise(0L)).cast(DoubleType)
+            * 0.05).as("fpr_under_5pct"))
+    },
+      // the exact half of the sketch contract: member count and the
+      // no-false-negative guarantee; the FPR bound holds by sizing
+      """SELECT CAST(SUM(CASE WHEN o_orderpriority = '1-URGENT'
+        |    THEN 1 ELSE 0 END) AS BIGINT) AS n_members,
+        |  TRUE AS no_false_negatives,
+        |  TRUE AS fpr_under_5pct
+        |FROM orders""".stripMargin),
+
+    Gate("q_corr_matrix", (s, dir) =>
+      // pairwise Pearson over the lineitem numerics: all moments in ONE
+      // decimal-exact aggregate pass, matrix assembled from the stats row
+      graft.operators.Correlation.matrix(t(s, dir, "lineitem"),
+        Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax"))
+        .orderBy(col("col_a"), col("col_b")),
+      {
+        // identical moment formula: decimal-exact sums, double assembly
+        def ds(e: String) = s"CAST(SUM(CAST($e AS DECIMAL(38,10))) AS DOUBLE)"
+        def corr(a: String, b: String) = Sql.sround(
+          s"""(n * ${"p_" + a + "_" + b} - s_$a * s_$b) /
+             | (sqrt(n * q_$a - s_$a * s_$a) * sqrt(n * q_$b - s_$b * s_$b))"""
+            .stripMargin.replace("\n", ""))
+        val cols = Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax")
+        val sums = cols.map(c => s"${ds(c)} AS s_$c") ++
+          cols.map(c => s"${ds(s"$c * $c")} AS q_$c") ++
+          (for { i <- cols.indices; j <- cols.indices if i < j }
+            yield s"${ds(s"${cols(i)} * ${cols(j)}")} AS p_${cols(i)}_${cols(j)}")
+        val pairsSql = (for { i <- cols.indices; j <- cols.indices if i < j }
+          yield s"SELECT '${cols(i)}' AS col_a, '${cols(j)}' AS col_b, " +
+            s"${corr(cols(i), cols(j))} AS corr FROM m")
+          .mkString("", " UNION ALL ", "")
+        s"""WITH m AS (SELECT ${sums.mkString(", ")},
+           |    CAST(COUNT(*) AS DOUBLE) AS n
+           |  FROM lineitem
+           |  WHERE l_quantity IS NOT NULL AND l_extendedprice IS NOT NULL
+           |    AND l_discount IS NOT NULL AND l_tax IS NOT NULL)
+           |$pairsSql ORDER BY col_a, col_b""".stripMargin
+      }),
+
+    Gate("q_scd2", (s, dir) =>
+      // type-2 history from the event change log: one lead() window keyed
+      // on the entity; validity bounds out as formatted strings (null
+      // upper bound → ''), timestamps never cross an engine boundary raw
+      graft.operators.Scd2.fromChangeLog(
+        t(s, dir, "events")
+          .select(col("user_id"), col("event_id"), col("ts"), col("value")),
+        "user_id", "ts", tiebreak = Seq("event_id"))
+        .select(col("user_id"), col("event_id"),
+          date_format(col("valid_from"), "yyyy-MM-dd HH:mm:ss")
+            .as("valid_from"),
+          coalesce(date_format(col("valid_to"), "yyyy-MM-dd HH:mm:ss"),
+            lit("")).as("valid_to"),
+          col("is_current"))
+        .orderBy(col("user_id"), col("event_id")),
+      """SELECT user_id, event_id,
+        |  strftime(ts, '%Y-%m-%d %H:%M:%S') AS valid_from,
+        |  COALESCE(strftime(LEAD(ts) OVER w, '%Y-%m-%d %H:%M:%S'), '')
+        |    AS valid_to,
+        |  LEAD(ts) OVER w IS NULL AS is_current
+        |FROM events
+        |WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
+        |ORDER BY user_id, event_id""".stripMargin),
+
+    Gate("q_scd2_snapshot", (s, dir) => {
+      // point-in-time reproduction: the dimension as a pipeline running at
+      // 2024-01-15 would have read it — exactly one version per key seen
+      // before the cut, none after
+      val hist = graft.operators.Scd2.fromChangeLog(
+        t(s, dir, "events")
+          .select(col("user_id"), col("event_id"), col("ts"), col("value")),
+        "user_id", "ts", tiebreak = Seq("event_id"))
+      graft.operators.Scd2.snapshotAt(hist,
+          lit("2024-01-15 00:00:00").cast(TimestampType))
+        .select(col("user_id"), col("event_id"),
+          floor(col("value") * lit(10000.0) + lit(0.5)).cast(LongType)
+            .as("value_x10k"))
+        .orderBy(col("user_id"))
+    },
+      """WITH h AS (SELECT user_id, event_id, value, ts AS valid_from,
+        |    LEAD(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)
+        |      AS valid_to
+        |  FROM events)
+        |SELECT user_id, event_id,
+        |  CAST(FLOOR(value * 10000 + 0.5) AS BIGINT) AS value_x10k
+        |FROM h
+        |WHERE valid_from <= TIMESTAMP '2024-01-15 00:00:00'
+        |  AND (valid_to IS NULL OR valid_to > TIMESTAMP '2024-01-15 00:00:00')
+        |ORDER BY user_id""".stripMargin),
+
+    Gate("q_expectations", (s, dir) => {
+      // table-level contract check: 5 rules, ONE aggregate pass; counts
+      // are exact integers the oracle re-derives rule by rule
+      import graft.operators.Expectations.{Rule, check}
+      check(t(s, dir, "lineitem"), Seq(
+        Rule("qty_in_range", col("l_quantity").between(1, 50)),
+        Rule("discount_in_range", col("l_discount").between(0, 0.1)),
+        Rule("flag_valid", col("l_returnflag").isin("A", "N", "R")),
+        Rule("price_positive", col("l_extendedprice") > 0),
+        Rule("tax_nonneg", col("l_tax") >= 0)))
+        .orderBy(col("rule"))
+    }, {
+      def rule(name: String, pred: String) =
+        s"""SELECT '$name' AS rule,
+           |  CAST(SUM(CASE WHEN $pred THEN 1 ELSE 0 END) AS BIGINT)
+           |    AS n_pass,
+           |  CAST(SUM(CASE WHEN $pred THEN 0 ELSE 1 END) AS BIGINT)
+           |    AS n_fail,
+           |  ${Sql.sround(
+          s"CAST(SUM(CASE WHEN $pred THEN 1 ELSE 0 END) AS DOUBLE) / COUNT(*)")}
+           |    AS pass_rate
+           |FROM lineitem""".stripMargin
+      Seq(
+        rule("discount_in_range", "l_discount BETWEEN 0 AND 0.1"),
+        rule("flag_valid", "l_returnflag IN ('A', 'N', 'R')"),
+        rule("price_positive", "l_extendedprice > 0"),
+        rule("qty_in_range", "l_quantity BETWEEN 1 AND 50"),
+        rule("tax_nonneg", "COALESCE(l_tax >= 0, FALSE)"))
+        .mkString("", "\nUNION ALL\n", "\nORDER BY rule")
+    }),
+
+    Gate("q_zorder", (s, dir) =>
+      // Morton curve value for 2-D data skipping: pure bit arithmetic,
+      // replayed bit-for-bit by the oracle (11 bits per dim here since the
+      // quantized keys are < 2048)
+      t(s, dir, "events").select(col("event_id"),
+        graft.core.ZOrder.zValue2(
+          col("user_id") % 2048, col("event_id") % 2048, bits = 11)
+          .as("zval"))
+        .orderBy(col("event_id")),
+      // bit-interleave replay: disjoint bit positions make sum == OR
+      """SELECT event_id,
+        |  CAST(list_sum(list_transform(range(11), b ->
+        |    ((((user_id % 2048) >> b) & 1) << (2 * b)) +
+        |    ((((event_id % 2048) >> b) & 1) << (2 * b + 1))))
+        |  AS BIGINT) AS zval
+        |FROM events ORDER BY event_id""".stripMargin),
+
+    Gate("q_zorder3", (s, dir) =>
+      // 3-D curve: bit i of column j lands at i*3+j
+      t(s, dir, "events").select(col("event_id"),
+        graft.core.ZOrder.zValueN(Seq(
+          col("user_id") % 1024, col("event_id") % 1024,
+          hour(col("ts")).cast(LongType) % 1024), bits = 10)
+          .as("zval"))
+        .orderBy(col("event_id")),
+      """SELECT event_id,
+        |  CAST(list_sum(list_transform(range(10), b ->
+        |    ((((user_id % 1024) >> b) & 1) << (3 * b)) +
+        |    ((((event_id % 1024) >> b) & 1) << (3 * b + 1)) +
+        |    (((((EXTRACT(hour FROM ts)) % 1024) >> b) & 1) << (3 * b + 2))))
+        |  AS BIGINT) AS zval
+        |FROM events ORDER BY event_id""".stripMargin),
+
+    Gate("q_hilbert", (s, dir) =>
+      // Hilbert curve position (the continuous space-filling curve —
+      // consecutive positions are grid-adjacent, unlike Morton's
+      // power-of-two teleports): the quadrant-rotation state machine as
+      // a codegen'd expression, replayed bit-for-bit by the oracle's
+      // recursive-CTE walk over the same 10-bit grid
+      t(s, dir, "events").select(col("event_id"),
+        graft.core.Hilbert.hValue2(
+          col("user_id") % 1024, col("event_id") % 1024, bits = 10)
+          .as("hval"))
+        .orderBy(col("event_id")),
+      // the rotate-and-accumulate walk, one recursion level per bit
+      // plane: d += s²·((3rx) xor ry), then the quadrant rotation
+      """WITH RECURSIVE pts AS (
+        |  SELECT event_id, CAST(user_id % 1024 AS BIGINT) AS x,
+        |         CAST(event_id % 1024 AS BIGINT) AS y
+        |  FROM events),
+        |h AS (
+        |  SELECT event_id, x, y, CAST(0 AS BIGINT) AS d,
+        |         CAST(512 AS BIGINT) AS s
+        |  FROM pts
+        |  UNION ALL
+        |  SELECT event_id,
+        |    CASE WHEN (y & s) > 0 THEN x
+        |         WHEN (x & s) > 0 THEN 1023 - y ELSE y END,
+        |    CASE WHEN (y & s) > 0 THEN y
+        |         WHEN (x & s) > 0 THEN 1023 - x ELSE x END,
+        |    d + s * s * xor(CASE WHEN (x & s) > 0 THEN 3 ELSE 0 END,
+        |                    CASE WHEN (y & s) > 0 THEN 1 ELSE 0 END),
+        |    s // 2
+        |  FROM h WHERE s > 0)
+        |SELECT event_id, d AS hval FROM h WHERE s = 0
+        |ORDER BY event_id""".stripMargin),
+
+    Gate("q_incr_agg", (s, dir) => {
+      // three-batch incremental fold with a parquet state roundtrip; the
+      // oracle is the ONE-SHOT global aggregate — proving the monoid law
+      // the nightly rollup depends on
+      val ev = t(s, dir, "events")
+      val base = "/tmp/graft_incragg/" + Sql.sfTag(dir)
+      graft.operators.IncrementalAgg.update(None,
+        ev.filter(col("event_id") % 3 === 0), Seq("event_type"), "value")
+        .write.mode("overwrite").parquet(base)
+      val s2 = graft.operators.IncrementalAgg.update(
+        Some(s.read.parquet(base)),
+        ev.filter(col("event_id") % 3 === 1), Seq("event_type"), "value")
+      graft.operators.IncrementalAgg.update(Some(s2),
+        ev.filter(col("event_id") % 3 === 2), Seq("event_type"), "value")
+        .select(col("event_type"), col("n"),
+          round(col("total").cast(DoubleType), 4).as("total"))
+        .orderBy(col("event_type"))
+    },
+      s"""SELECT event_type, COUNT(value) AS n,
+         |  ${Sql.esum("value")} AS total
+         |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin),
+
+    Gate("q_grouping_sets", (s, dir) => {
+      // explicit GROUPING SETS surface (the asymmetric slices cube can't
+      // express alone): per-(flag,status), per-flag, and grand total only
+      t(s, dir, "lineitem").createOrReplaceTempView("_gs_lineitem")
+      s.sql(
+        """SELECT COALESCE(l_returnflag, 'ALL') AS flag,
+          |  COALESCE(l_linestatus, 'ALL') AS status,
+          |  COUNT(*) AS n,
+          |  CAST(SUM(CAST(l_quantity AS DECIMAL(38,10))) AS DOUBLE) AS qty
+          |FROM _gs_lineitem
+          |GROUP BY GROUPING SETS ((l_returnflag, l_linestatus),
+          |  (l_returnflag), ())
+          |ORDER BY flag, status""".stripMargin)
+    },
+      s"""SELECT COALESCE(l_returnflag, 'ALL') AS flag,
+         |  COALESCE(l_linestatus, 'ALL') AS status,
+         |  COUNT(*) AS n, ${Sql.esum("l_quantity")} AS qty
+         |FROM lineitem
+         |GROUP BY GROUPING SETS ((l_returnflag, l_linestatus),
+         |  (l_returnflag), ())
+         |ORDER BY flag, status""".stripMargin),
+
+    Gate("q_salted_agg", (s, dir) => {
+      // skew tooling under oracle: the two-phase salted aggregation must
+      // equal the plain GROUP BY exactly — decimal partial sums make the
+      // re-aggregation associativity-proof
+      graft.core.Skew.saltedAggregate(t(s, dir, "lineitem"),
+        col("l_returnflag"), saltBuckets = 8,
+        sums = Seq("qty" -> col("l_quantity").cast(DecimalType(38, 10))))
+        .select(col("_key").as("l_returnflag"), col("n"),
+          col("qty").cast(DoubleType).as("qty"))
+        .orderBy(col("l_returnflag"))
+    },
+      s"""SELECT l_returnflag, COUNT(*) AS n, ${Sql.esum("l_quantity")} AS qty
+         |FROM lineitem GROUP BY l_returnflag
+         |ORDER BY l_returnflag""".stripMargin),
+
+    Gate("q_cube", (s, dir) =>
+      // cube = rollup + the per-status slices and the transposed margins;
+      // same null→'ALL' labeling as q_rollup
+      t(s, dir, "lineitem")
+        .cube(col("l_returnflag"), col("l_linestatus"))
+        .agg(count(lit(1)).as("n"),
+          Semantics.exactSum(col("l_quantity")).as("qty"))
+        .select(
+          coalesce(col("l_returnflag"), lit("ALL")).as("flag"),
+          coalesce(col("l_linestatus"), lit("ALL")).as("status"),
+          col("n"), col("qty"))
+        .orderBy(col("flag"), col("status")),
+      s"""SELECT COALESCE(l_returnflag, 'ALL') AS flag,
+         |  COALESCE(l_linestatus, 'ALL') AS status,
+         |  COUNT(*) AS n, ${Sql.esum("l_quantity")} AS qty
+         |FROM lineitem
+         |GROUP BY CUBE (l_returnflag, l_linestatus)
+         |ORDER BY flag, status""".stripMargin),
+
+    Gate("q_window_ntile", (s, dir) => {
+      // distribution windows: ntile/percent_rank/cume_dist under a total
+      // (value, event_id) order per type; rank ratios are exact rationals
+      // so the x10k floor is engine-portable
+      import org.apache.spark.sql.expressions.Window
+      val w = Window.partitionBy(col("event_type"))
+        .orderBy(col("value"), col("event_id"))
+      t(s, dir, "events").filter(col("value").isNotNull)
+        .select(col("event_id"), col("event_type"),
+          ntile(4).over(w).as("quartile"),
+          floor(percent_rank().over(w) * lit(10000.0) + lit(0.5))
+            .cast(LongType).as("pctrank_x10k"),
+          floor(cume_dist().over(w) * lit(10000.0) + lit(0.5))
+            .cast(LongType).as("cumedist_x10k"))
+        .orderBy(col("event_id"))
+    },
+      """SELECT event_id, event_type,
+        |  CAST(ntile(4) OVER w AS INTEGER) AS quartile,
+        |  CAST(FLOOR(percent_rank() OVER w * 10000 + 0.5) AS BIGINT)
+        |    AS pctrank_x10k,
+        |  CAST(FLOOR(cume_dist() OVER w * 10000 + 0.5) AS BIGINT)
+        |    AS cumedist_x10k
+        |FROM events WHERE value IS NOT NULL
+        |WINDOW w AS (PARTITION BY event_type ORDER BY value, event_id)
+        |ORDER BY event_id""".stripMargin),
+
+    Gate("q_join_full", (s, dir) => {
+      // full-outer completeness: disjoint filters leave unmatched rows on
+      // BOTH sides; keys are unique per side so the output is deterministic
+      val cust = t(s, dir, "customer")
+        .filter(col("c_custkey") % 3 === 0)
+        .select(col("c_custkey"),
+          floor(col("c_acctbal") * lit(100.0) + lit(0.5)).cast(LongType)
+            .as("acctbal_x100"))
+      val ords = t(s, dir, "orders")
+        .filter(col("o_custkey") % 3 =!= 1)
+        .groupBy(col("o_custkey"))
+        .agg(count(lit(1)).as("n_orders"))
+      cust.join(ords, cust("c_custkey") === ords("o_custkey"), "full")
+        .select(
+          coalesce(col("c_custkey"), col("o_custkey")).as("custkey"),
+          col("acctbal_x100"),
+          coalesce(col("n_orders"), lit(0L)).as("n_orders"))
+        .orderBy(col("custkey"))
+    },
+      """WITH cust AS (SELECT c_custkey,
+        |    CAST(FLOOR(c_acctbal * 100 + 0.5) AS BIGINT) AS acctbal_x100
+        |  FROM customer WHERE c_custkey % 3 = 0),
+        |ords AS (SELECT o_custkey, COUNT(*) AS n_orders
+        |  FROM orders WHERE o_custkey % 3 <> 1 GROUP BY o_custkey)
+        |SELECT COALESCE(c.c_custkey, o.o_custkey) AS custkey,
+        |  c.acctbal_x100,
+        |  CAST(COALESCE(o.n_orders, 0) AS BIGINT) AS n_orders
+        |FROM cust c FULL OUTER JOIN ords o ON c.c_custkey = o.o_custkey
+        |ORDER BY custkey""".stripMargin),
+
+    Gate("q_events_gapfill", (s, dir) => {
+      // time-series resample with zero-fill: the dense per-type hourly
+      // grid dashboards need — a tiny (type × hour-span) generated frame
+      // left-joined to the real hourly aggregate; no window, no corpus
+      // self-join, grid size is span-bounded not corpus-bounded
+      val ev = t(s, dir, "events")
+      val hourly = ev.groupBy(col("event_type"),
+          date_trunc("hour", col("ts")).as("h"))
+        .agg(count(lit(1)).as("n"))
+      val bounds = ev.agg(
+        date_trunc("hour", min(col("ts"))).as("h0"),
+        date_trunc("hour", max(col("ts"))).as("h1"))
+      val grid = ev.select(col("event_type")).distinct()
+        .crossJoin(broadcast(bounds))
+        .select(col("event_type"),
+          explode(sequence(col("h0"), col("h1"),
+            expr("interval 1 hour"))).as("h"))
+      grid.join(hourly, Seq("event_type", "h"), "left")
+        .select(col("event_type"),
+          date_format(col("h"), "yyyy-MM-dd HH:mm:ss").as("hour"),
+          coalesce(col("n"), lit(0L)).as("n"))
+        .orderBy(col("event_type"), col("hour"))
+    },
+      """WITH b AS (SELECT date_trunc('hour', MIN(ts)) AS h0,
+        |    date_trunc('hour', MAX(ts)) AS h1 FROM events),
+        |grid AS (SELECT t.event_type, g.h
+        |  FROM (SELECT DISTINCT event_type FROM events) t,
+        |    b, LATERAL (SELECT unnest(generate_series(b.h0, b.h1,
+        |      INTERVAL 1 HOUR)) AS h) g),
+        |hourly AS (SELECT event_type, date_trunc('hour', ts) AS h,
+        |    COUNT(*) AS n FROM events GROUP BY 1, 2)
+        |SELECT grid.event_type,
+        |  strftime(grid.h, '%Y-%m-%d %H:%M:%S') AS hour,
+        |  CAST(COALESCE(hourly.n, 0) AS BIGINT) AS n
+        |FROM grid LEFT JOIN hourly
+        |  ON grid.event_type = hourly.event_type AND grid.h = hourly.h
+        |ORDER BY grid.event_type, hour""".stripMargin),
+
+    // argmax: the row identity attaining each group's max — max_by keyed
+    // by (value, event_id) so ties break deterministically cross-engine
+    Gate("q_argmax", (s, dir) =>
+      t(s, dir, "events").filter(col("value").isNotNull)
+        .groupBy(col("event_type"))
+        .agg(
+          max_by(col("event_id"), struct(col("value"), col("event_id")))
+            .as("top_event_id"),
+          floor(max(col("value")) * lit(10000.0) + lit(0.5))
+            .cast(LongType).as("max_value_x10k"))
+        .orderBy(col("event_type")),
+      // max_by(id, struct(value, id)) ≡ the rk=1 row under
+      // (value DESC, id DESC) — spelled as a window because DuckDB 1.0's
+      // arg_max rejects a composite ordering argument
+      """WITH r AS (SELECT event_type, event_id, value,
+        |    ROW_NUMBER() OVER (PARTITION BY event_type
+        |      ORDER BY value DESC, event_id DESC) AS rk
+        |  FROM events WHERE value IS NOT NULL)
+        |SELECT event_type, event_id AS top_event_id,
+        |  CAST(FLOOR(value * 10000 + 0.5) AS BIGINT) AS max_value_x10k
+        |FROM r WHERE rk = 1 ORDER BY event_type""".stripMargin),
+
+    // heatmap backing: 2-D histogram (value decile-width bins × hour of
+    // day) in ONE groupBy — the density-plot aggregate at any scale
+    Gate("q_histogram2d", (s, dir) =>
+      t(s, dir, "events")
+        .filter(col("value").isNotNull)
+        .groupBy(
+          floor(col("value") / lit(10.0)).cast(LongType).as("value_bin"),
+          hour(col("ts")).cast(LongType).as("hour_bin"))
+        .agg(count(lit(1)).as("n"))
+        .orderBy(col("value_bin"), col("hour_bin")),
+      """SELECT CAST(FLOOR(value / 10.0) AS BIGINT) AS value_bin,
+        |  CAST(EXTRACT(hour FROM ts) AS BIGINT) AS hour_bin,
+        |  COUNT(*) AS n
+        |FROM events WHERE value IS NOT NULL
+        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+
+    // rare-label collapsing: categories below a count threshold become
+    // 'OTHER' (ML-prep cardinality control) — tiny per-category aggregate
+    // broadcast back, one relabel scan, no window
+    Gate("q_rare_labels", (s, dir) => {
+      val ev = t(s, dir, "events")
+      val keep = ev.groupBy(col("event_type"))
+        .agg(count(lit(1)).as("_n")).filter(col("_n") >= 2000)
+        .select(col("event_type"))
+      ev.join(broadcast(keep.withColumn("_keep", lit(true))),
+          Seq("event_type"), "left")
+        .withColumn("label",
+          when(col("_keep").isNotNull, col("event_type"))
+            .otherwise(lit("OTHER")))
+        .groupBy(col("label")).agg(count(lit(1)).as("n"))
+        .orderBy(col("label"))
+    },
+      """WITH k AS (SELECT event_type FROM events
+        |  GROUP BY event_type HAVING COUNT(*) >= 2000)
+        |SELECT CASE WHEN event_type IN (SELECT event_type FROM k)
+        |         THEN event_type ELSE 'OTHER' END AS label,
+        |  COUNT(*) AS n
+        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin),
+
+    // weekly cohort retention: first-seen week per user × activity-week
+    // offset → distinct actives. Two aggregates + one user-keyed join —
+    // the standard retention-triangle shape, no window over the corpus
+    Gate("q_cohort_retention", (s, dir) => {
+      val ev = t(s, dir, "events")
+        .select(col("user_id"), to_date(col("ts")).as("d"))
+      val cohort = ev.groupBy(col("user_id")).agg(min(col("d")).as("c0"))
+      ev.join(cohort, Seq("user_id"))
+        .withColumn("cohort_week",
+          floor(datediff(col("c0"), lit("2024-01-01").cast(DateType))
+            / lit(7.0)).cast(LongType))
+        .withColumn("week_offset",
+          floor(datediff(col("d"), col("c0")) / lit(7.0)).cast(LongType))
+        .groupBy(col("cohort_week"), col("week_offset"))
+        .agg(countDistinct(col("user_id")).as("n_users"))
+        .orderBy(col("cohort_week"), col("week_offset"))
+    },
+      """WITH e AS (SELECT user_id, CAST(ts AS DATE) AS d FROM events),
+        |c AS (SELECT user_id, MIN(d) AS c0 FROM e GROUP BY user_id)
+        |SELECT
+        |  CAST(FLOOR(date_diff('day', DATE '2024-01-01', c0) / 7.0) AS BIGINT)
+        |    AS cohort_week,
+        |  CAST(FLOOR(date_diff('day', c0, d) / 7.0) AS BIGINT) AS week_offset,
+        |  COUNT(DISTINCT e.user_id) AS n_users
+        |FROM e JOIN c USING (user_id)
+        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+
+    // signup→purchase funnel: per-user first event times from ONE
+    // conditional aggregate, conversion = first purchase strictly after
+    // first signup (microsecond precision on both engines)
+    Gate("q_funnel", (s, dir) =>
+      t(s, dir, "events")
+        .groupBy(col("user_id"))
+        .agg(
+          min(when(col("event_type") === "signup", col("ts"))).as("s0"),
+          min(when(col("event_type") === "purchase", col("ts"))).as("p0"))
+        .agg(
+          count(lit(1)).as("n_users"),
+          count(col("s0")).as("n_signed"),
+          sum(when(col("p0") > col("s0"), 1L).otherwise(0L))
+            .as("n_converted"))
+        .select(col("n_users"), col("n_signed"), col("n_converted"),
+          floor(col("n_converted") * lit(10000.0) / col("n_signed")
+            + lit(0.5)).cast(LongType).as("conv_rate_x10k")),
+      """WITH u AS (SELECT user_id,
+        |    MIN(CASE WHEN event_type = 'signup'
+        |        THEN epoch_ns(ts) // 1000 END) AS s0,
+        |    MIN(CASE WHEN event_type = 'purchase'
+        |        THEN epoch_ns(ts) // 1000 END) AS p0
+        |  FROM events GROUP BY user_id)
+        |SELECT COUNT(*) AS n_users, COUNT(s0) AS n_signed,
+        |  CAST(COALESCE(SUM(CASE WHEN p0 > s0 THEN 1 ELSE 0 END), 0)
+        |    AS BIGINT) AS n_converted,
+        |  CAST(FLOOR(COALESCE(SUM(CASE WHEN p0 > s0 THEN 1 ELSE 0 END), 0)
+        |    * 10000.0 / COUNT(s0) + 0.5) AS BIGINT) AS conv_rate_x10k
+        |FROM u""".stripMargin),
+
+    // per-group distribution report: exact p25/p50/p95 of value per event
+    // type — ONE groupBy aggregate (partial-agg friendly), the shape a
+    // per-slice latency/quality dashboard runs at any scale
+    Gate("q_group_percentiles", (s, dir) =>
+      t(s, dir, "events").groupBy(col("event_type"))
+        .agg(
+          floor(percentile(col("value"), lit(0.25)) * lit(10000.0) + lit(0.5))
+            .cast(LongType).as("p25_x10k"),
+          floor(percentile(col("value"), lit(0.5)) * lit(10000.0) + lit(0.5))
+            .cast(LongType).as("p50_x10k"),
+          floor(percentile(col("value"), lit(0.95)) * lit(10000.0) + lit(0.5))
+            .cast(LongType).as("p95_x10k"),
+          count(col("value")).as("n"))
+        .orderBy(col("event_type")),
+      """SELECT event_type,
+        |  CAST(FLOOR(quantile_cont(value, 0.25) * 10000 + 0.5) AS BIGINT)
+        |    AS p25_x10k,
+        |  CAST(FLOOR(quantile_cont(value, 0.5) * 10000 + 0.5) AS BIGINT)
+        |    AS p50_x10k,
+        |  CAST(FLOOR(quantile_cont(value, 0.95) * 10000 + 0.5) AS BIGINT)
+        |    AS p95_x10k,
+        |  COUNT(value) AS n
+        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin),
+
+    // partitioned-layout roundtrip: write parquet partitionBy(source),
+    // read the directory back, aggregate — exercises the partition-pruned
+    // layout every 100 TB corpus actually lives in (partition column is
+    // reconstructed from directory keys on read)
+    Gate("q_partitioned_write", (s, dir) => {
+      // not an oracle aux — the partitioned write IS the benched operator
+      val out = s"/tmp/graft_roundtrip/${Sql.sfTag(dir)}/part_docs"
+      t(s, dir, "documents")
+        .write.mode("overwrite").partitionBy("source").parquet(out)
+      s.read.parquet(out)
+        .groupBy(col("source"))
+        .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("n_chars"))
+        .orderBy(col("source"))
+    },
+      // the write side is the operator under test; the oracle checks the
+      // roundtripped aggregate against the source table directly
+      """SELECT source, COUNT(*) AS n_docs,
+        |  CAST(SUM(n_chars) AS BIGINT) AS n_chars
+        |FROM documents GROUP BY source ORDER BY source""".stripMargin),
+
+    // equal-frequency discretization: quartile bucket per event — one
+    // bounds job, one comparison-sum projection; oracle recomputes the
+    // three quantile bounds and replays the bucket assignment
+    Gate("q_quantile_bin", (s, dir) =>
+      QuantileBinner("value", 4)(t(s, dir, "events"))
+        .select(col("event_id"), col("bin"))
+        .orderBy(col("event_id")),
+      """WITH b AS (SELECT quantile_cont(value, 0.25) AS b1,
+        |    quantile_cont(value, 0.5) AS b2,
+        |    quantile_cont(value, 0.75) AS b3 FROM events)
+        |SELECT event_id,
+        |  CASE WHEN value IS NULL THEN NULL
+        |       ELSE CAST(1 + (CASE WHEN value >= b1 THEN 1 ELSE 0 END)
+        |                    + (CASE WHEN value >= b2 THEN 1 ELSE 0 END)
+        |                    + (CASE WHEN value >= b3 THEN 1 ELSE 0 END)
+        |              AS BIGINT) END AS bin
+        |FROM events, b ORDER BY event_id""".stripMargin),
+
+    // group-mean imputation: nulls derived deterministically (event_id %
+    // 11), filled with the per-type exact decimal mean; oracle replays
+    // derivation, mean arithmetic, and the fill
+    Gate("q_impute_group", (s, dir) => {
+      val d = t(s, dir, "events").withColumn("value",
+        when(col("event_id") % 11 === 0, lit(null).cast(DoubleType))
+          .otherwise(col("value")))
+      GroupMeanImputer(Seq("value"), Seq("event_type"))(d)
+        .select(col("event_id"), col("event_type"),
+          floor(col("value") * lit(10000.0) + lit(0.5))
+            .cast(LongType).as("value_x10k"))
+        .orderBy(col("event_id"))
+    },
+      """WITH d AS (SELECT event_id, event_type,
+        |    CASE WHEN event_id % 11 = 0 THEN NULL ELSE value END AS value
+        |  FROM events),
+        |m AS (SELECT event_type,
+        |    FLOOR((CAST(SUM(CAST(value AS DECIMAL(38,10))) AS DOUBLE)
+        |           / COUNT(value)) * 1e6 + 0.5) / 1e6 AS mv
+        |  FROM d GROUP BY event_type)
+        |SELECT event_id, event_type,
+        |  CAST(FLOOR(COALESCE(d.value, m.mv) * 10000 + 0.5) AS BIGINT)
+        |    AS value_x10k
+        |FROM d JOIN m USING (event_type) ORDER BY event_id""".stripMargin),
+
+    Gate("q_domain_stats", (s, dir) => {
+      import graft.functions.UrlFunctions
+      UrlFunctions.domainStats(
+        t(s, dir, "documents").withColumn("url", syntheticUrl),
+        "url", "text")
+        .orderBy(col("n_docs").desc, col("domain"))
+    }, {
+      val tok = Sql.tokenCountSql("text")
+      s"""WITH urls AS (SELECT doc_id, text, $SyntheticUrlSql AS url
+         |    FROM documents),
+         |$DomainSql,
+         |tok AS (SELECT domain, $tok AS n_tok FROM dom),
+         |g AS (SELECT domain, COUNT(*) AS n_docs,
+         |    CAST(SUM(n_tok) AS BIGINT) AS n_tokens FROM tok GROUP BY domain),
+         |t AS (SELECT CAST(SUM(n_tokens) AS BIGINT) AS tot FROM g)
+         |SELECT domain, n_docs, n_tokens,
+         |  CAST(FLOOR(n_tokens * 10000.0 / tot + 0.5) AS BIGINT)
+         |    AS token_share_x10k
+         |FROM g, t ORDER BY n_docs DESC, domain""".stripMargin}),
+
+    Gate("q_ivm_join", (s, dir) => {
+      // incremental view maintenance of the orders⋈lineitem join: the
+      // base tables split from the fixture by independent deterministic
+      // key predicates, the view delta computed by the three-term delta
+      // rule (ΔA⋈B ∪ A⋈ΔB ∪ ΔA⋈Δ B) with broadcast deltas — never
+      // recomputing base⋈base
+      val o = t(s, dir, "orders")
+        .select(col("o_orderkey"), col("o_orderpriority"))
+      val l = t(s, dir, "lineitem")
+        .select(col("l_orderkey").as("o_orderkey"), col("l_linenumber"))
+      val delta = graft.operators.IncrementalJoin.appendDelta(
+        o.filter(col("o_orderkey") % 10 < 8),
+        o.filter(col("o_orderkey") % 10 >= 8),
+        l.filter(col("o_orderkey") % 7 < 5),
+        l.filter(col("o_orderkey") % 7 >= 5),
+        Seq("o_orderkey"))
+      delta.select(col("o_orderkey"), col("l_linenumber"),
+          col("o_orderpriority"))
+        .orderBy(col("o_orderkey"), col("l_linenumber"))
+    },
+      """WITH ob AS (SELECT o_orderkey, o_orderpriority FROM orders
+        |  WHERE o_orderkey % 10 < 8),
+        |od AS (SELECT o_orderkey, o_orderpriority FROM orders
+        |  WHERE o_orderkey % 10 >= 8),
+        |lb AS (SELECT l_orderkey, l_linenumber FROM lineitem
+        |  WHERE l_orderkey % 7 < 5),
+        |ld AS (SELECT l_orderkey, l_linenumber FROM lineitem
+        |  WHERE l_orderkey % 7 >= 5)
+        |SELECT o_orderkey, l_linenumber, o_orderpriority FROM (
+        |  SELECT od.o_orderkey, lb.l_linenumber, od.o_orderpriority
+        |    FROM od JOIN lb ON od.o_orderkey = lb.l_orderkey
+        |  UNION ALL
+        |  SELECT ob.o_orderkey, ld.l_linenumber, ob.o_orderpriority
+        |    FROM ob JOIN ld ON ob.o_orderkey = ld.l_orderkey
+        |  UNION ALL
+        |  SELECT od.o_orderkey, ld.l_linenumber, od.o_orderpriority
+        |    FROM od JOIN ld ON od.o_orderkey = ld.l_orderkey)
+        |ORDER BY o_orderkey, l_linenumber""".stripMargin),
+
+    Gate("q_cdc_agg", (s, dir) => {
+      // retractable aggregate maintenance: q_incr_agg proves the
+      // append-only fold; this proves the DELETE path — a CDC batch of
+      // inserts and retractions folded into the (key, n, total) state as
+      // one union + re-aggregate, never rescanning history. The oracle is
+      // the direct aggregate over the post-CDC multiset (base ∪ inserts
+      // ∖ deletes), proving count/sum really form a group under exact
+      // decimal arithmetic
+      val e = t(s, dir, "events")
+      val base = e.filter(col("event_id") % 10 < 8)
+      val ins = e.filter(col("event_id") % 10 >= 8)
+      val del = e.filter(col("event_id") % 10 < 8 &&
+        col("event_id") % 7 === 0)
+      val st = IncrementalAgg.update(None, base, Seq("event_type"), "value")
+      IncrementalAgg.updateCdc(st, ins, del, Seq("event_type"), "value")
+        .select(col("event_type"), col("n"),
+          round(col("total").cast(DoubleType), 4).as("total"))
+        .orderBy(col("event_type"))
+    },
+      s"""SELECT event_type, count(value) AS n, ${esum("value")} AS total
+         |FROM events
+         |WHERE NOT (event_id % 10 < 8 AND event_id % 7 = 0)
+         |GROUP BY 1 ORDER BY 1""".stripMargin),
+
+    Gate("q_ks_drift", (s, dir) => {
+      // binning-free distribution drift: two-sample KS between click and
+      // purchase value distributions, integer-exact (BIGINT cumulative
+      // cross-products, e6 integral ratio). The engine's cumsum is
+      // shard-partitioned (approx-quantile bounds place shards; exactness
+      // never depends on them) — the oracle replays with one global
+      // window, which at its scale is fine
+      val e = t(s, dir, "events")
+      Audit.ksStatistic(
+        e.filter(col("event_type") === "click"),
+        e.filter(col("event_type") === "purchase"), "value")
+    },
+      """WITH u AS (SELECT value AS v,
+        |    CASE WHEN event_type = 'click' THEN 1 ELSE 2 END AS s
+        |  FROM events
+        |  WHERE event_type IN ('click', 'purchase') AND value IS NOT NULL),
+        |n AS (SELECT CAST(sum(CASE WHEN s = 1 THEN 1 ELSE 0 END) AS BIGINT)
+        |    AS n1,
+        |  CAST(sum(CASE WHEN s = 2 THEN 1 ELSE 0 END) AS BIGINT) AS n2
+        |  FROM u),
+        |c AS (SELECT v,
+        |    sum(CASE WHEN s = 1 THEN 1 ELSE 0 END) AS c1,
+        |    sum(CASE WHEN s = 2 THEN 1 ELSE 0 END) AS c2
+        |  FROM u GROUP BY v),
+        |m AS (SELECT sum(c1) OVER (ORDER BY v) AS a1,
+        |    sum(c2) OVER (ORDER BY v) AS a2 FROM c),
+        |k AS (SELECT max(abs(a1 * n.n2 - a2 * n.n1)) AS ks_num
+        |  FROM m, n)
+        |SELECT n.n1, n.n2, CAST(k.ks_num AS BIGINT) AS ks_num,
+        |  CAST((k.ks_num * 1000000) // (n.n1 * n.n2) AS BIGINT) AS ks_e6
+        |FROM n, k""".stripMargin),
+
+    Gate("q_rank_auc", (s, dir) => {
+      // Mann–Whitney U with midrank ties, normalized to the AUC effect
+      // size: "how separable are click and purchase values" as one
+      // integer-exact number (doubled-U and e6 AUC — no float crosses
+      // engines). Shares the sharded-cumsum machinery with q_ks_drift
+      val e = t(s, dir, "events")
+      Audit.rankSumU(
+        e.filter(col("event_type") === "click"),
+        e.filter(col("event_type") === "purchase"), "value")
+    },
+      """WITH u AS (SELECT value AS v,
+        |    CASE WHEN event_type = 'click' THEN 1 ELSE 2 END AS s
+        |  FROM events
+        |  WHERE event_type IN ('click', 'purchase') AND value IS NOT NULL),
+        |n AS (SELECT CAST(sum(CASE WHEN s = 1 THEN 1 ELSE 0 END) AS BIGINT)
+        |    AS n1,
+        |  CAST(sum(CASE WHEN s = 2 THEN 1 ELSE 0 END) AS BIGINT) AS n2
+        |  FROM u),
+        |c AS (SELECT v,
+        |    sum(CASE WHEN s = 1 THEN 1 ELSE 0 END) AS c1,
+        |    sum(CASE WHEN s = 2 THEN 1 ELSE 0 END) AS c2
+        |  FROM u GROUP BY v),
+        |m AS (SELECT c1, c2, sum(c1 + c2) OVER (ORDER BY v) AS a FROM c),
+        |r AS (SELECT sum(c1 * (2 * (a - c1 - c2) + (c1 + c2) + 1))
+        |    AS r1x2 FROM m)
+        |SELECT n.n1, n.n2,
+        |  CAST(r.r1x2 - n.n1 * (n.n1 + 1) AS BIGINT) AS u1_x2,
+        |  CAST(((r.r1x2 - n.n1 * (n.n1 + 1)) * 1000000)
+        |       // (2 * n.n1 * n.n2) AS BIGINT) AS auc_e6
+        |FROM n, r""".stripMargin),
+
+    Gate("q_w1_drift", (s, dir) => {
+      // earth-mover drift: W1 integrates the CDF gap the KS gate only
+      // sups — "how much mass moves how far" between click and purchase
+      // values, over the e6-quantized grid, all integer arithmetic
+      val e = t(s, dir, "events")
+      Audit.wasserstein1(
+        e.filter(col("event_type") === "click"),
+        e.filter(col("event_type") === "purchase"), "value")
+    },
+      """WITH u AS (SELECT CAST(floor(value * 1000000) AS BIGINT) AS v,
+        |    CASE WHEN event_type = 'click' THEN 1 ELSE 2 END AS s
+        |  FROM events
+        |  WHERE event_type IN ('click', 'purchase') AND value IS NOT NULL),
+        |n AS (SELECT CAST(sum(CASE WHEN s = 1 THEN 1 ELSE 0 END) AS BIGINT)
+        |    AS n1,
+        |  CAST(sum(CASE WHEN s = 2 THEN 1 ELSE 0 END) AS BIGINT) AS n2
+        |  FROM u),
+        |c AS (SELECT v,
+        |    sum(CASE WHEN s = 1 THEN 1 ELSE 0 END) AS c1,
+        |    sum(CASE WHEN s = 2 THEN 1 ELSE 0 END) AS c2
+        |  FROM u GROUP BY v),
+        |m AS (SELECT v, sum(c1) OVER (ORDER BY v) AS a1,
+        |    sum(c2) OVER (ORDER BY v) AS a2,
+        |    lead(v) OVER (ORDER BY v) AS nv FROM c),
+        |w AS (SELECT sum(abs(a1 * n.n2 - a2 * n.n1) * (nv - v)) AS num
+        |  FROM m, n WHERE nv IS NOT NULL)
+        |SELECT n.n1, n.n2,
+        |  CAST((w.num * 1000000) // (n.n1 * n.n2 * 1000000) AS BIGINT)
+        |    AS w1_e6
+        |FROM n, w""".stripMargin),
+
+    Gate("q_next_event", (s, dir) => {
+      // next-event-prediction training pairs: per user, the 3 preceding
+      // event types as a joined context string and the current type as
+      // target — one key-partitioned window with a bounded trailing
+      // frame, single shuffle, O(k) state per row
+      TrainingExamples.nextEventPairs(t(s, dir, "events"),
+        "user_id", "ts", "event_id", "event_type", contextLen = 3)
+        .orderBy(col("event_id"))
+    },
+      """WITH p AS (SELECT event_id, user_id,
+        |    string_agg(event_type, '|') OVER (PARTITION BY user_id
+        |      ORDER BY ts, event_id
+        |      ROWS BETWEEN 3 PRECEDING AND 1 PRECEDING) AS context,
+        |    CAST(count(event_type) OVER (PARTITION BY user_id
+        |      ORDER BY ts, event_id
+        |      ROWS BETWEEN 3 PRECEDING AND 1 PRECEDING) AS BIGINT)
+        |      AS context_len,
+        |    event_type AS target
+        |  FROM events)
+        |SELECT event_id, user_id, context, context_len, target FROM p
+        |WHERE context_len > 0 ORDER BY event_id""".stripMargin),
+
+    Gate("q_rolling_distinct_sketch", (s, dir) => {
+      // rolling distinct from PERSISTED daily HLL sketches — the
+      // approximate maintenance path next to exact q_rolling_distinct:
+      // daily sketches are built once (KB per day), then each trailing-
+      // 7-day window is a sketch UNION, never a rescan of events. At
+      // 100 TB that's the whole point: the daily sketch table is the
+      // only thing the rolling report ever reads. Gate emits the exact
+      // counts (cross-engine) plus a 10% accuracy invariant on the
+      // estimate (lgK 12 ≈ 1.6% rsd)
+      val du = t(s, dir, "events")
+        .select(to_date(col("ts")).as("day"), col("user_id")).distinct()
+        .localCheckpoint()
+      val daily = graft.functions.Sketches.distinctSketches(
+        du, Seq("day"), "user_id")
+      val est = graft.functions.Sketches.rollingDistinctEstimate(
+        daily, "day", n = 7)
+      val days = du.select(col("day")).distinct()
+      val exact = du
+        .select(explode(sequence(col("day"), date_add(col("day"), 6)))
+          .as("day"), col("user_id"))
+        .join(broadcast(days), Seq("day"), "left_semi")
+        .groupBy(col("day"))
+        .agg(countDistinct(col("user_id")).as("n_users_7d"))
+      exact.join(est, Seq("day"))
+        .select(date_format(col("day"), "yyyy-MM-dd").as("day"),
+          col("n_users_7d"),
+          (abs(col("distinct_est") -
+            col("n_users_7d").cast(DoubleType)) <=
+            col("n_users_7d").cast(DoubleType) * 0.1).as("est_ok"))
+        .orderBy(col("day"))
+    },
       // exact trailing-7-day distincts cross-engine + the estimator
       // accuracy invariant
       """WITH du AS (SELECT DISTINCT date_trunc('day', ts) AS day, user_id
@@ -5024,116 +4470,171 @@ object ExtraQueries {
         |  TRUE AS est_ok
         |FROM days d JOIN du u
         |  ON u.day <= d.day AND u.day >= d.day - INTERVAL 6 DAY
-        |GROUP BY d.day ORDER BY day""".stripMargin,
+        |GROUP BY d.day ORDER BY day""".stripMargin),
 
-    "q_cdc_agg_stream" ->
+    Gate("q_cdc_agg_stream", (s, dir) => {
+      // the streaming CDC fold run for real — batch twin of q_cdc_agg:
+      // the same insert/retraction multiset staged once, consumed as a
+      // file stream whose foreachBatch folds each micro-batch into the
+      // ping-pong parquet state (group-cardinality-sized I/O per batch;
+      // the corpus is never rescanned), then the gate reads the
+      // committed state. Oracle aggregates the post-CDC multiset
+      val e = t(s, dir, "events")
+      val changes = e.filter(col("event_id") % 10 >= 8)
+        .select(lit("insert").as("op"), col("event_type"), col("value"))
+        .unionByName(e.filter(col("event_id") % 10 < 8)
+          .select(lit("insert").as("op"), col("event_type"), col("value")))
+        .unionByName(e.filter(col("event_id") % 10 < 8 &&
+            col("event_id") % 7 === 0)
+          .select(lit("delete").as("op"), col("event_type"), col("value")))
+      // change stream session-cached ([[StageOnce]], its own name — the
+      // cdc_twin gate stages a DIFFERENT change set); the fold is
+      // insert/delete-commutative so batch count can't move the state.
+      // The ping-pong STATE is per-run mutable — appId-scoped scratch
+      // (sweep-covered, concurrent-run-safe), deleted fresh each run
+      val staged = StageOnce.dir(s, dir, "cdc_agg_changes") { p =>
+        changes.write.mode("overwrite").parquet(p)
+      }
+      val statePath = StageOnce.scratch(s, dir, "cdc_agg_state")
+      val hp = new org.apache.hadoop.fs.Path(statePath)
+      val fs = hp.getFileSystem(s.sessionState.newHadoopConf())
+      if (fs.exists(hp)) fs.delete(hp, true) // fresh fold per run
+      val schema = s.read.parquet(staged).schema
+      val stream = s.readStream.schema(schema).parquet(staged)
+      val q = graft.streaming.Streams.cdcAggregateStream(stream, "op",
+        Seq("event_type"), "value", statePath, statePartitions = 8)
+      try q.processAllAvailable() finally q.stop()
+      graft.streaming.Streams.readAggState(s, statePath)
+        .select(col("event_type"), col("n"),
+          round(col("total").cast(DoubleType), 4).as("total"))
+        .orderBy(col("event_type"))
+    },
       // same post-CDC multiset as q_cdc_agg, maintained by the stream
       s"""SELECT event_type, count(value) AS n, ${esum("value")} AS total
          |FROM events
          |WHERE NOT (event_id % 10 < 8 AND event_id % 7 = 0)
-         |GROUP BY 1 ORDER BY 1""".stripMargin,
+         |GROUP BY 1 ORDER BY 1""".stripMargin),
 
-    "q_session_window_twin" ->
-      // gaps-and-islands + the emission cut: sessions whose end (last
-      // event + gap) the final watermark (global max ts) passed
-      """WITH e AS (SELECT user_id, ts FROM events),
-        |wmf AS (SELECT max(ts) AS m FROM e),
-        |s AS (SELECT user_id, ts,
-        |    CASE WHEN LAG(ts) OVER w IS NULL
-        |         OR ts - LAG(ts) OVER w >= INTERVAL 30 MINUTE
-        |      THEN 1 ELSE 0 END AS brk
-        |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts)),
-        |g AS (SELECT user_id, ts,
-        |    SUM(brk) OVER (PARTITION BY user_id ORDER BY ts
-        |      ROWS UNBOUNDED PRECEDING) AS sid
-        |  FROM s),
-        |agg AS (SELECT user_id, sid, min(ts) AS session_start,
-        |    max(ts) AS last_ts, count(*) AS n
-        |  FROM g GROUP BY 1, 2)
-        |SELECT user_id,
-        |  strftime(session_start, '%Y-%m-%d %H:%M:%S') AS session_start,
-        |  CAST(n AS BIGINT) AS n
-        |FROM agg, wmf
-        |WHERE last_ts + INTERVAL 30 MINUTE < wmf.m
-        |ORDER BY user_id, session_start""".stripMargin,
-
-    "q_stream_static_join" ->
-      // the batch twin of the per-micro-batch broadcast join
-      """WITH dim(event_type, weight) AS (VALUES
-        |  ('click', 1), ('view', 2), ('purchase', 5),
-        |  ('signup', 10), ('logout', 0))
-        |SELECT e.event_type, CAST(dim.weight AS BIGINT) AS weight,
-        |  CAST(count(*) * dim.weight AS BIGINT) AS weighted
-        |FROM events e JOIN dim USING (event_type)
-        |GROUP BY e.event_type, dim.weight ORDER BY 1""".stripMargin,
-
-    "q_watermark_late_drop" ->
-      // drop/emit replay: wm1 = max ts of batch 1; a batch-2 row counts
-      // only if its window end > wm1; a window emits only if its end <
-      // the final watermark (global max ts). Hour-aligned ends vs
-      // mid-hour max timestamps make < vs <= unambiguous
-      """WITH b1 AS (SELECT ts, event_type FROM events
-        |  WHERE event_id % 17 <> 0),
-        |b2 AS (SELECT ts, event_type FROM events WHERE event_id % 17 = 0),
-        |wm1 AS (SELECT max(ts) AS m FROM b1),
-        |wmf AS (SELECT max(ts) AS m FROM events),
-        |counted AS (
-        |  SELECT ts, event_type FROM b1
-        |  UNION ALL
-        |  SELECT b2.ts, b2.event_type FROM b2, wm1
-        |  WHERE date_trunc('hour', b2.ts) + INTERVAL 1 HOUR > wm1.m),
-        |agg AS (SELECT date_trunc('hour', ts) AS ws, event_type,
-        |    count(*) AS n
-        |  FROM counted GROUP BY 1, 2)
-        |SELECT strftime(ws, '%Y-%m-%d %H:%M:%S') AS window_start,
-        |  event_type, CAST(n AS BIGINT) AS n
-        |FROM agg, wmf WHERE ws + INTERVAL 1 HOUR < wmf.m
-        |ORDER BY window_start, event_type""".stripMargin,
-
-    "q_bloom_join" ->
+    Gate("q_bloom_join", (s, dir) => {
+      // semi-join reduction: the lineitem probe side is pre-filtered by
+      // a Bloom filter built over urgent orders' keys (one aggregate;
+      // only filter bits reach the driver) BEFORE the shuffle join —
+      // at 100 TB that's the shuffle-bytes win. False positives are
+      // discarded by the join itself, so the result is EXACTLY the
+      // plain join, which is what the oracle runs
+      val big = t(s, dir, "lineitem")
+        .select(col("l_orderkey").as("okey"), col("l_returnflag"))
+      val small = t(s, dir, "orders")
+        .filter(col("o_orderpriority") === "1-URGENT")
+        .select(col("o_orderkey").as("okey"))
+      graft.core.SafeJoin.bloomFilteredJoin(big, small, "okey",
+          expectedKeys = 200000L, fpp = 0.01)
+        .groupBy(col("l_returnflag"))
+        .agg(count(lit(1)).as("n_rows"),
+          countDistinct(col("okey")).as("n_orders"))
+        .orderBy(col("l_returnflag"))
+    },
       // the plain join — bloom pre-filtering must not change one row
       """SELECT l_returnflag, CAST(count(*) AS BIGINT) AS n_rows,
         |  CAST(count(DISTINCT l_orderkey) AS BIGINT) AS n_orders
         |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
         |WHERE o_orderpriority = '1-URGENT'
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
 
-    "q_join_size_est" ->
+    Gate("q_join_size_est", (s, dir) => {
+      // pre-flight join cardinality: how many rows will the self-join of
+      // events on user_id produce? The exact answer costs the join's own
+      // key shuffle; the count-sketch inner product (CM'05) prices it
+      // from per-side key-count aggregates — and the sketches persist,
+      // so every candidate join between sketched tables is priced
+      // without touching data. Collisions only ADD mass: the estimate
+      // provably never underestimates; width controls closeness. Gate
+      // emits the exact count (cross-engine) + both estimator invariants
+      val e = t(s, dir, "events")
+      val est = graft.functions.Sketches.joinSizeEstimate(
+        graft.functions.Sketches.keyFreqSketch(e, "user_id"),
+        graft.functions.Sketches.keyFreqSketch(e, "user_id"))
+      val exact = e.filter(col("user_id").isNotNull)
+        .groupBy(col("user_id")).agg(count(lit(1)).as("_c"))
+        .agg(sum(col("_c") * col("_c")).cast(LongType).as("exact_pairs"))
+      est.crossJoin(exact).select(
+        col("exact_pairs"),
+        (col("est_pairs") >= col("exact_pairs")).as("est_ge_exact"),
+        (col("est_pairs") <= col("exact_pairs") +
+          col("exact_pairs") / 2).as("est_close"))
+    },
       // the exact join size cross-engine + the estimator invariants
       """WITH c AS (SELECT user_id, count(*) AS c FROM events
         |  WHERE user_id IS NOT NULL GROUP BY 1)
         |SELECT CAST(sum(c * c) AS BIGINT) AS exact_pairs,
         |  TRUE AS est_ge_exact, TRUE AS est_close
-        |FROM c""".stripMargin,
+        |FROM c""".stripMargin),
 
-    "q_schema_drift" ->
+    Gate("q_schema_drift", (s, dir) => {
+      // ingest-batch schema drift: which columns appeared, vanished, or
+      // changed type between two batches — pure metadata comparison
+      // (schemas are bounded, no data scan); the oracle pins the report
+      // literally. Drift engineered: l_returnflag dropped, l_tax added,
+      // l_quantity double → string
+      val li = t(s, dir, "lineitem")
+      val oldBatch = li.select(col("l_orderkey"), col("l_quantity"),
+        col("l_returnflag"))
+      val newBatch = li.select(col("l_orderkey"),
+        col("l_quantity").cast(StringType).as("l_quantity"), col("l_tax"))
+      graft.operators.SchemaDrift.diff(oldBatch, newBatch)
+        .orderBy(col("column"))
+    },
       // the drift is engineered, so the report is a literal
       """SELECT * FROM (VALUES
         |  ('l_quantity', 'type_changed', 'double', 'string'),
         |  ('l_returnflag', 'removed', 'string', NULL),
         |  ('l_tax', 'added', NULL, 'double'))
         |  AS t("column", status, old_type, new_type)
-        |ORDER BY "column"""".stripMargin,
+        |ORDER BY "column"""".stripMargin),
 
-    "q_hll_replay" ->
-      // arithmetic replay of the md5 HLL spec: bucket = first 2 hex chars
-      // (p=8), rho = 4*(leading zero hex chars of the 16-char tail)
-      // + lz(first non-zero char) + 1, capped at 64; register = max rho
-      """WITH h AS (SELECT event_type, md5(CAST(user_id AS VARCHAR)) AS h
-        |  FROM events WHERE user_id IS NOT NULL),
-        |b AS (SELECT event_type, substr(h,1,2) AS bucket,
-        |    substr(h,3,16) AS w FROM h),
-        |r0 AS (SELECT event_type, bucket,
-        |    LEAST(4*length(regexp_extract(w,'^(0*)',1)) +
-        |      CASE substr(w, length(regexp_extract(w,'^(0*)',1))+1, 1)
-        |        WHEN '1' THEN 3 WHEN '2' THEN 2 WHEN '3' THEN 2
-        |        WHEN '4' THEN 1 WHEN '5' THEN 1 WHEN '6' THEN 1
-        |        WHEN '7' THEN 1 ELSE 0 END + 1, 64) AS rho
-        |  FROM b)
-        |SELECT event_type, bucket, CAST(MAX(rho) AS BIGINT) AS r
-        |FROM r0 GROUP BY 1, 2 ORDER BY event_type, bucket""".stripMargin,
+    Gate("q_hll_replay", (s, dir) => {
+      // cross-engine-replayable HLL: the full register table (the sketch
+      // STATE, not just its estimate) hash-matches DuckDB's arithmetic
+      // replay of the md5 bucket/rho spec — cardinality sketching with an
+      // auditable, engine-portable artifact
+      graft.functions.ReplayableHll.registers(
+          t(s, dir, "events"), Seq("event_type"), "user_id", p = 8)
+        .orderBy(col("event_type"), col("bucket"))
+    }, HllRegistersSql),
 
-    "q_hll_merge" ->
+    Gate("q_hll_merge", (s, dir) => {
+      // sketch algebra under oracle: registers(A ∪ B) must equal
+      // merge(registers(A), registers(B)) bucket-for-bucket (engine-checked
+      // flag), and the integer-exact harmonic accumulator s2 + empty-bucket
+      // count replay arithmetically in DuckDB; est accuracy is the
+      // engine-checked invariant (deterministic: same md5 state each run)
+      import graft.functions.ReplayableHll
+      val e = t(s, dir, "events")
+      val full = ReplayableHll.registers(e, Seq("event_type"), "user_id", 8)
+      val h1 = ReplayableHll.registers(
+        e.filter(col("event_id") % 2 === 0), Seq("event_type"), "user_id", 8)
+      val h2 = ReplayableHll.registers(
+        e.filter(col("event_id") % 2 =!= 0), Seq("event_type"), "user_id", 8)
+      val merged = ReplayableHll.merge(h1.unionByName(h2), Seq("event_type"))
+      val bad = full.select(col("event_type"), col("bucket"),
+          col("r").as("_rf"))
+        .join(merged.select(col("event_type"), col("bucket"),
+          col("r").as("_rm")), Seq("event_type", "bucket"), "full_outer")
+        .groupBy(col("event_type"))
+        .agg(sum(when(col("_rf") <=> col("_rm"), 0L).otherwise(1L))
+          .as("_bad"))
+      val est = ReplayableHll.estimate(full, Seq("event_type"), 8)
+      val exact = e.filter(col("user_id").isNotNull)
+        .groupBy(col("event_type"))
+        .agg(countDistinct(col("user_id")).as("n_exact"))
+      exact.join(est, Seq("event_type")).join(bad, Seq("event_type"))
+        .select(col("event_type"), col("n_exact"), col("zeros"),
+          col("s2").cast(StringType).as("s2"),
+          (abs(col("est") - col("n_exact")) <=
+            col("n_exact") * lit(0.25)).as("est_ok"),
+          (col("_bad") === 0L).as("merge_ok"))
+        .orderBy(col("event_type"))
+    },
       // n_exact / zeros / s2 replayed from scratch (2^(64-r) is an
       // integer <= 2^63: exactly representable as a double, HUGEINT cast
       // lossless); est_ok / merge_ok are engine-checked invariants
@@ -5164,9 +4665,82 @@ object ExtraQueries {
         |    * CAST(power(2.0, 64) AS HUGEINT) AS VARCHAR) AS s2,
         |  TRUE AS est_ok, TRUE AS merge_ok
         |FROM agg a JOIN ex ON a.event_type = ex.event_type
-        |ORDER BY a.event_type""".stripMargin,
+        |ORDER BY a.event_type""".stripMargin),
 
-    "q_hll_rolling" ->
+    Gate("q_hll_stream_twin", (s, dir) => {
+      // the replayable-HLL register table maintained as STREAMING state:
+      // events staged as two files, consumed one file per micro-batch
+      // (maxFilesPerTrigger=1 forces a real cross-batch max-merge), the
+      // groupBy(bucket).max(rho) aggregate carried in the state store —
+      // and the final registers must STILL hash-match DuckDB's arithmetic
+      // replay. Bounded state by construction: <= 2^p rows per group.
+      // Staging path and sink name carry the session's applicationId so
+      // two concurrent runs at the same scale factor can't race on the
+      // stage directory (deleted at query start) or the memory sink
+      val e = t(s, dir, "events")
+        .select(col("event_id"), col("event_type"), col("user_id"))
+      val runTag = s.sparkContext.applicationId
+      val sink = s"hll_stream_twin_$runTag".replace('-', '_')
+      // staged at most ONCE per session ([[StageOnce]] — which also owns
+      // the appId path keying and the stale-sibling sweep this gate
+      // pioneered): bench retries and repeated verify passes in the same
+      // JVM reuse the files instead of re-running two write jobs
+      // the coalesce(1) per half bounds FILES, deliberately: with
+      // maxFilesPerTrigger=1 below, exactly-one-file-per-half is the
+      // designed two-micro-batch choreography (one cross-batch max-merge,
+      // not 2N of them); the halves are small and the write runs once per
+      // session, so the single task is not in the measured per-run path
+      val staged = StageOnce.dir(s, dir, "hll_events") { p =>
+        e.filter(col("event_id") % 2 === 0)
+          .coalesce(1).write.mode("append").parquet(p)
+        e.filter(col("event_id") % 2 =!= 0)
+          .coalesce(1).write.mode("append").parquet(p)
+      }
+      val schema = s.read.parquet(staged).schema
+      val stream = s.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1").parquet(staged)
+      val regs = graft.functions.ReplayableHll.registers(
+        stream, Seq("event_type"), "user_id", p = 8)
+      graft.streaming.Streams.withStatePartitions(s, 8) {
+        val q = regs.writeStream
+          .outputMode(org.apache.spark.sql.streaming.OutputMode.Complete())
+          .format("memory").queryName(sink).start()
+        try q.processAllAvailable() finally q.stop()
+      }
+      s.table(sink).orderBy(col("event_type"), col("bucket"))
+    }, HllRegistersSql),
+
+    Gate("q_hll_rolling", (s, dir) => {
+      // sliding-window distinct monitoring from per-day sketch STATE:
+      // registers built once per day, then bucket-wise max-merged over a
+      // trailing 3-day window — "distincts over the last N days" without
+      // re-scanning raw events. zeros/s2 replay arithmetically in DuckDB
+      // from the same md5 spec; est accuracy is an engine-checked
+      // invariant vs the exact window count (deterministic md5 state)
+      import graft.functions.ReplayableHll
+      val e = t(s, dir, "events").withColumn("day", to_date(col("ts")))
+      val daily = ReplayableHll.registers(e, Seq("day"), "user_id", p = 8)
+      val rolled = ReplayableHll.slidingMerge(daily, "day", Nil, window = 3)
+      val est = ReplayableHll.estimate(rolled, Seq("day"), p = 8)
+      // exact trailing-3-day distincts, the q_rolling_distinct shape:
+      // (day, user) reduction, contribution expansion, observed-days semi
+      val du = e.filter(col("user_id").isNotNull)
+        .select(col("day"), col("user_id")).distinct()
+      val days = du.select(col("day")).distinct()
+      val exact = du
+        .select(explode(sequence(col("day"), date_add(col("day"), 2)))
+          .as("day"), col("user_id"))
+        .join(broadcast(days), Seq("day"), "left_semi")
+        .groupBy(col("day"))
+        .agg(countDistinct(col("user_id")).as("n_exact"))
+      exact.join(est, Seq("day"))
+        .select(date_format(col("day"), "yyyy-MM-dd").as("day"),
+          col("n_exact"), col("zeros"),
+          col("s2").cast(StringType).as("s2"),
+          (abs(col("est") - col("n_exact")) <=
+            col("n_exact") * lit(0.25)).as("est_ok"))
+        .orderBy(col("day"))
+    },
       // per-day register replay (same md5 spec as q_hll_replay), expanded
       // to the 3 target days each activity day serves, bucket-wise max,
       // then the integer-exact zeros/s2 accumulators; n_exact is the
@@ -5207,9 +4781,42 @@ object ExtraQueries {
         |    * CAST(power(2.0, 64) AS HUGEINT) AS VARCHAR) AS s2,
         |  TRUE AS est_ok
         |FROM agg a JOIN ex ON a.day = ex.day
-        |ORDER BY day""".stripMargin,
+        |ORDER BY day""".stripMargin),
 
-    "q_hll_rolling_grouped" ->
+    Gate("q_hll_rolling_grouped", (s, dir) => {
+      // the GROUPED sliding-merge path: per-(day, event_type) registers,
+      // trailing-3-day bucket-wise max within each event_type — "distinct
+      // users per type over the last N days" from sketch state. Target
+      // days are the GLOBALLY observed register days (slidingMerge's
+      // contract), so the exact side replicates that day universe; the
+      // accuracy invariant carries a small-group floor (p=8 linear
+      // counting is exact-ish but tiny per-type groups amplify relative
+      // error)
+      import graft.functions.ReplayableHll
+      val e = t(s, dir, "events").withColumn("day", to_date(col("ts")))
+      val daily = ReplayableHll.registers(
+        e, Seq("day", "event_type"), "user_id", p = 8)
+      val rolled = ReplayableHll.slidingMerge(
+        daily, "day", Seq("event_type"), window = 3)
+      val est = ReplayableHll.estimate(
+        rolled, Seq("day", "event_type"), p = 8)
+      val du = e.filter(col("user_id").isNotNull)
+        .select(col("day"), col("event_type"), col("user_id")).distinct()
+      val days = du.select(col("day")).distinct()
+      val exact = du
+        .select(explode(sequence(col("day"), date_add(col("day"), 2)))
+          .as("day"), col("event_type"), col("user_id"))
+        .join(broadcast(days), Seq("day"), "left_semi")
+        .groupBy(col("day"), col("event_type"))
+        .agg(countDistinct(col("user_id")).as("n_exact"))
+      exact.join(est, Seq("day", "event_type"))
+        .select(date_format(col("day"), "yyyy-MM-dd").as("day"),
+          col("event_type"), col("n_exact"), col("zeros"),
+          col("s2").cast(StringType).as("s2"),
+          (abs(col("est") - col("n_exact")) <=
+            greatest(col("n_exact") * lit(0.25), lit(16.0))).as("est_ok"))
+        .orderBy(col("day"), col("event_type"))
+    },
       // the grouped twin of q_hll_rolling: per-(day, event_type) register
       // replay, trailing-3-day bucket-wise max WITHIN each event_type
       // against the globally-observed day universe, then the integer-exact
@@ -5254,33 +4861,82 @@ object ExtraQueries {
         |  TRUE AS est_ok
         |FROM agg a JOIN ex
         |  ON a.day = ex.day AND a.event_type = ex.event_type
-        |ORDER BY day, event_type""".stripMargin,
+        |ORDER BY day, event_type""".stripMargin),
 
-    "q_exact_kth" ->
+    Gate("q_exact_kth", (s, dir) => {
+      // exact order statistics WITHOUT a global sort: iterative histogram
+      // narrowing must return the exact rank-k values DuckDB finds by
+      // sorting. bins=4096 (vs the old 256) keeps driver state trivial
+      // (<=4096 rows/round) while one shared histogram usually lands every
+      // rank's bucket under the direct cutoff — rounds, i.e. scans, are
+      // the gate's whole cost; bins only route, the selected VALUES are
+      // rank-exact either way
+      val li = t(s, dir, "lineitem")
+      val n = li.filter(col("l_extendedprice").isNotNull).count()
+      val ks = Seq(1L, n / 4, n / 2, (3 * n) / 4, n).distinct.filter(_ >= 1)
+      graft.operators.ExactQuantile
+        .kthSmallestMulti(s, li, "l_extendedprice", ks,
+          bins = 4096, directCutoff = 5000L)
+        .orderBy(col("k"))
+    },
       """WITH v AS (SELECT l_extendedprice AS val FROM lineitem
         |  WHERE l_extendedprice IS NOT NULL),
         |n AS (SELECT COUNT(*) AS n FROM v),
         |o AS (SELECT val, row_number() OVER (ORDER BY val) AS rn FROM v)
         |SELECT CAST(rn AS BIGINT) AS k, val AS value FROM o, n
         |WHERE rn IN (1, n // 4, n // 2, (3 * n) // 4, n)
-        |ORDER BY k""".stripMargin,
+        |ORDER BY k""".stripMargin),
 
-    "q_prefix_sum" ->
+    Gate("q_prefix_sum", (s, dir) =>
+      // distributed global running total (two-level: per-shard window
+      // cumsum + driver-cumulated shard offsets) vs DuckDB's single-node
+      // SUM OVER; numShards=5 ≠ session 32 for boundary independence
+      graft.operators.GlobalIndex.prefixSum(
+          t(s, dir, "documents"), Seq(col("doc_id")), "n_chars",
+          numShards = 5)
+        .select(col("doc_id"),
+          col("running_total").cast(LongType).as("running_total"))
+        .orderBy(col("doc_id")),
       """SELECT doc_id,
         |  CAST(SUM(n_chars) OVER (ORDER BY doc_id
         |    ROWS UNBOUNDED PRECEDING) AS BIGINT) AS running_total
-        |FROM documents ORDER BY doc_id""".stripMargin,
+        |FROM documents ORDER BY doc_id""".stripMargin),
 
-    "q_seq_pack" ->
+    Gate("q_seq_pack", (s, dir) =>
+      // sequence packing: contiguous fill of 4096-char training packs in
+      // doc_id order — pack boundaries from the exclusive prefix sum,
+      // integer-exact `div`; the LLM pre-tokenization packing step with
+      // one range shuffle and no sequential state
+      graft.operators.GlobalIndex.packSequences(
+          t(s, dir, "documents"), Seq(col("doc_id")), "n_chars",
+          budget = 4096L, numShards = 5)
+        .select(col("doc_id"), col("pack_id"), col("pos_in_pack"))
+        .orderBy(col("doc_id")),
       """WITH c AS (SELECT doc_id,
         |    SUM(n_chars) OVER (ORDER BY doc_id ROWS UNBOUNDED PRECEDING)
         |      - n_chars AS excl
         |  FROM documents)
         |SELECT doc_id, CAST(excl // 4096 AS BIGINT) AS pack_id,
         |  CAST(excl - (excl // 4096) * 4096 AS BIGINT) AS pos_in_pack
-        |FROM c ORDER BY doc_id""".stripMargin,
+        |FROM c ORDER BY doc_id""".stripMargin),
 
-    "q_group_median" ->
+    Gate("q_group_median", (s, dir) => {
+      // exact per-group p50/p90 via simultaneous histogram narrowing (no
+      // per-group value maps — the OOM-free spelling of exact percentile);
+      // rational ranks replay integer-exact in DuckDB. The small cutoff
+      // forces real narrowing rounds at sf0.01+
+      import graft.operators.ExactQuantile
+      val e = t(s, dir, "events")
+      val med = ExactQuantile.quantilePerGroup(e, Seq("event_type"),
+        "value", 1, 2, bins = 32, directCutoff = 500L)
+        .withColumn("q", lit("p50"))
+      val p90 = ExactQuantile.quantilePerGroup(e, Seq("event_type"),
+        "value", 9, 10, bins = 32, directCutoff = 500L)
+        .withColumn("q", lit("p90"))
+      med.unionByName(p90)
+        .select(col("event_type"), col("q"), col("quantile"))
+        .orderBy(col("event_type"), col("q"))
+    },
       """WITH v AS (SELECT event_type, value FROM events
         |  WHERE value IS NOT NULL),
         |n AS (SELECT event_type, COUNT(*) AS n FROM v GROUP BY 1),
@@ -5294,9 +4950,25 @@ object ExtraQueries {
         |  SELECT o.event_type, 'p90', o.value
         |  FROM o JOIN n USING (event_type)
         |  WHERE o.rn = (n.n * 9 + 9) // 10)
-        |ORDER BY event_type, q""".stripMargin,
+        |ORDER BY event_type, q""".stripMargin),
 
-    "q_group_median_wide" ->
+    Gate("q_group_median_wide", (s, dir) => {
+      // WIDE-group exact median: one group per order (147k groups at
+      // sf0.1 — far beyond any driver-state budget) plus one engineered
+      // heavy group (every 97th order collapses to key -1, ~620 rows at
+      // sf0.01) so BOTH routes run: light groups through the distributed
+      // collect_list aggregate with zero driver state, heavy groups
+      // through histogram narrowing with driver state bounded by the
+      // heavy count only
+      import graft.operators.ExactQuantile
+      val li = t(s, dir, "lineitem")
+        .withColumn("gkey",
+          when(col("l_orderkey") % 97 === 0, lit(-1L))
+            .otherwise(col("l_orderkey")))
+      ExactQuantile.quantilePerGroup(li, Seq("gkey"), "l_extendedprice",
+          1, 2, bins = 32, directCutoff = 500L)
+        .orderBy(col("gkey"))
+    },
       """WITH v AS (SELECT CASE WHEN l_orderkey % 97 = 0 THEN -1
         |    ELSE l_orderkey END AS gkey, l_extendedprice AS val
         |  FROM lineitem WHERE l_extendedprice IS NOT NULL),
@@ -5306,9 +4978,17 @@ object ExtraQueries {
         |  FROM v)
         |SELECT o.gkey, o.val AS quantile
         |FROM o JOIN n USING (gkey) WHERE o.rn = (n.n + 1) // 2
-        |ORDER BY o.gkey""".stripMargin,
+        |ORDER BY o.gkey""".stripMargin),
 
-    "q_equidepth" ->
+    Gate("q_equidepth", (s, dir) =>
+      // equi-depth bucketizer: exact rank-formula cut points (no sort, no
+      // approximation) + when-chain assignment; DuckDB re-derives the same
+      // cuts by row_number and counts distinct cuts below each value
+      graft.operators.ExactQuantile.equiDepthBucketize(
+          s, t(s, dir, "events"), "value", b = 8,
+          bins = 256, directCutoff = 5000L)
+        .select(col("event_id"), col("bin"))
+        .orderBy(col("event_id")),
       """WITH v AS (SELECT event_id, value FROM events
         |  WHERE value IS NOT NULL),
         |n AS (SELECT COUNT(*) AS n FROM v),
@@ -5321,17 +5001,22 @@ object ExtraQueries {
         |  CAST(SUM(CASE WHEN v.value > c.c THEN 1 ELSE 0 END) AS BIGINT)
         |    AS bin
         |FROM v CROSS JOIN cuts c
-        |GROUP BY v.event_id ORDER BY v.event_id""".stripMargin,
+        |GROUP BY v.event_id ORDER BY v.event_id""".stripMargin),
 
-    "q_global_index" ->
+    Gate("q_global_index", (s, dir) =>
+      // dense 0..N-1 numbering in a total order with NO unpartitioned
+      // window: range shuffle + per-shard row_number + driver-cumulated
+      // shard offsets; numShards=7 (not the session's 32) proves the
+      // index is boundary-independent
+      graft.operators.GlobalIndex.denseIndex(
+          t(s, dir, "documents"),
+          Seq(col("lang"), col("n_chars").desc, col("doc_id")),
+          numShards = 7)
+        .select(col("doc_id"), col("global_index"))
+        .orderBy(col("doc_id")),
       """SELECT doc_id,
         |  CAST(row_number() OVER (ORDER BY lang, n_chars DESC, doc_id) - 1
         |    AS BIGINT) AS global_index
-        |FROM documents ORDER BY doc_id""".stripMargin
+        |FROM documents ORDER BY doc_id""".stripMargin)
   )
-
-  /** The streaming register table must satisfy the SAME arithmetic replay
-    * as the batch one — one oracle definition, two execution paths. */
-  val oracleSql: Map[String, String] =
-    oracleSqlBase + ("q_hll_stream_twin" -> oracleSqlBase("q_hll_replay"))
 }

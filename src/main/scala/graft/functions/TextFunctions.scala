@@ -687,9 +687,11 @@ object TextFunctions {
     * re-scanning. Counts are exact integers, PMI's log ratio is a product
     * of longs on each side of one double division. Top `topK` pairs by
     * (count desc, wa, wb) — a total order, so the cut is deterministic.
-    * Returns a lazy frame over internally persisted intermediates (same
-    * contract as the dedup family's materialized forms: release with
-    * `spark.catalog.clearCache()` when done). */
+    * Eager: the call runs the Spark jobs itself, collects the at most
+    * `topK` result rows to the driver and unpersists its three internal
+    * persists before it returns. The result is a local frame over those
+    * rows, in (count desc, wa, wb) order; it holds no cache, so the
+    * caller has nothing to release. */
   def cooccurrencePmi(df: org.apache.spark.sql.DataFrame, idCol: String,
       textCol: String, window: Int = 2,
       topK: Int = 100): org.apache.spark.sql.DataFrame = {

@@ -144,7 +144,7 @@ class R6OperatorSpec extends SparkSuite {
       "single-axis sort is pruning-dead off-axis") {
     // The gate (trimmed to its namesake 2-layout compare in r8) proves
     // both space-filling curves bound depth on BOTH axes at once.
-    val rows = graft.entry.ExtraQueries.queries("q_layout_compare")(
+    val rows = SparkEntry.queries("q_layout_compare")(
       spark, sfDir).collect()
       .map(r => (r.getString(0), r.getString(1)) ->
         (r.getLong(2), r.getLong(3))).toMap

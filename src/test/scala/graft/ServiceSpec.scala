@@ -350,7 +350,7 @@ class ServiceSpec extends SparkSuite {
         .map(_.asInstanceOf[Map[String, Any]])
         .map(m => (m("o_orderpriority"), m("n_orders"))).toSet
       // must equal the engine-side q_agg_dashboard result
-      val want = graft.entry.CoreQueries.queries("q_agg_dashboard")(spark, sfDir)
+      val want = SparkEntry.queries("q_agg_dashboard")(spark, sfDir)
         .collect().map(r => (r.getAs[Any]("o_orderpriority"),
           r.getAs[Long]("n_orders"))).toSet
       assert(env("row_count") == want.size.toLong)
