@@ -19,7 +19,9 @@ are both correct with no failed operation enter the figures. A metric passes
 the gain rule when the change won at least nine tenths of all pairs run, the
 medians differ by more than the base's interquartile range, and the change
 had no more incorrect or missing runs, and no more failed operations, than
-the base. Every run's JSON line is appended to .bench_build/ab/runs.jsonl.
+the base. Each metric also gets a no-regression verdict against its
+BENCHMARK.json bound (see `verdict`), the rule a change that claims no gain
+is judged by. Every run's JSON line is appended to .bench_build/ab/runs.jsonl.
 Nothing under perfbench/ is changed.
 """
 import argparse
@@ -79,6 +81,23 @@ def summary(values):
     return q1, med, q3
 
 
+def verdict(base, change, bound, better):
+    """No-regression verdict of one metric over clean pairs.
+
+    `within bound`: the change's median is worse than the base's by no more
+    than `bound` (a fraction of the base median); `over bound`: worse by
+    more. `unresolved`: the base's IQR/median exceeds `bound`, so the base
+    alone spreads wider than the bound, unless every change run beats every
+    base run."""
+    sign = 1 if better == "lower" else -1
+    bq1, bm, bq3 = summary(base)
+    _, cm, _ = summary(change)
+    every_run_wins = all(sign * (c - b) < 0 for c in change for b in base)
+    if (bq3 - bq1) / abs(bm) > bound and not every_run_wins:
+        return "unresolved"
+    return "within bound" if sign * (cm - bm) / abs(bm) <= bound else "over bound"
+
+
 def main():
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("--base", required=True, help="base commit, e.g. HEAD~1")
@@ -86,7 +105,9 @@ def main():
     ap.add_argument("--pairs", type=int, default=10)
     a = ap.parse_args()
     with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
-        better = {m["name"]: m["better"] for m in json.load(f)["end_to_end"]}
+        end_to_end = json.load(f)["end_to_end"]
+    better = {m["name"]: m["better"] for m in end_to_end}
+    bounds = {m["name"]: m["bound"] for m in end_to_end}
     sha, base_tree = export(a.base)
     trees = {"base": base_tree, "change": ROOT}
     for side, tree in trees.items():
@@ -137,6 +158,16 @@ def main():
         print(f"{name:<14} {f'{bm:.3f} [{bq1:.3f}, {bq3:.3f}]':<28} "
               f"{f'{cm:.3f} [{cq1:.3f}, {cq3:.3f}]':<28} {cm / bm:>6.3f} {wins:>3}/{a.pairs:<2}  "
               f"{'met' if rule else 'not met'}")
+    print("no-regression rule (worse by at most the bound; unresolved when the base "
+          "IQR/median exceeds it):")
+    for name, direction in better.items():
+        b = [r[name] for r in results["base"]]
+        c = [r[name] for r in results["change"]]
+        _, bm, _ = summary(b)
+        _, cm, _ = summary(c)
+        worse = (cm - bm) / bm if direction == "lower" else (bm - cm) / bm
+        print(f"{name:<14} worse by {worse:+.3f}, bound {bounds[name]:.3f}: "
+              f"{verdict(b, c, bounds[name], direction)}")
 
 
 if __name__ == "__main__":

@@ -4,18 +4,19 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-import graft.functions.{CosineSim, DecimalDot, TokenCount, WindowHashes}
+import graft.functions.{AccentFold, CosineQ8, CosineSim, DecimalDot, TokenCount, WindowHashes}
 
-/** Spark-native installation point for graft's codegen kernels: with
+/** The only way to graft's codegen kernels by SQL name: with
   * `spark.sql.extensions=graft.GraftExtensions` (cluster conf — static, so
   * it must be set before the SparkContext exists) or
   * `SparkSession.builder.withExtensions(new GraftExtensions()(_))`
-  * (library route, works on a live context), `fast_token_count`,
-  * `fast_cosine` and `decimal_dot` resolve in SQL and `call_function`
-  * with no per-session `register` calls. The idiomatic way a library
-  * ships Catalyst extensions (the same hook used for custom
-  * rules/strategies, which graft does not need — built-in operators cover
-  * parity; SURVEY §4.2).
+  * (library route), `fast_token_count`, `fast_cosine`, `decimal_dot`,
+  * `cosine_q8`, `window_hashes` and `accent_fold` resolve by name in SQL
+  * and `expr`. Scala code needs none of this: each kernel object
+  * builds its Column directly (`TokenCount.token_count`, ...). The
+  * idiomatic way a library ships Catalyst extensions (the same hook used
+  * for custom rules/strategies, which graft does not need — built-in
+  * operators cover parity; SURVEY §4.2).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -32,6 +33,12 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectFunction((FunctionIdentifier("decimal_dot"),
       info("decimal_dot", "_FUNC_(a, b) - decimal-exact dot product of two array<float>"),
       (exprs: Seq[Expression]) => DecimalDot(exprs.head, exprs(1))))
+    ext.injectFunction((FunctionIdentifier("cosine_q8"),
+      info("cosine_q8", "_FUNC_(a, b) - cosine of two int8-quantized vector structs"),
+      (exprs: Seq[Expression]) => CosineQ8(exprs.head, exprs(1))))
+    ext.injectFunction((FunctionIdentifier("accent_fold"),
+      info("accent_fold", "_FUNC_(text) - NFD-decompose and drop combining marks"),
+      (exprs: Seq[Expression]) => AccentFold(exprs.head)))
     ext.injectFunction((FunctionIdentifier("window_hashes"),
       info("window_hashes", "_FUNC_(words, k) - Buzhash of every k-word window, one O(n) pass"),
       (exprs: Seq[Expression]) => {

@@ -1525,17 +1525,20 @@ object DocQueries {
          |ORDER BY c_custkey, kind, n""".stripMargin
     }),
 
-    Gate("q_doc_fingerprint", (s, dir) =>
+    Gate("q_doc_fingerprint", (s, dir) => {
       // fingerprint values are xxhash64-based (engine-specific), so the
       // oracle-checkable invariant is per-row agreement between the codegen
       // kernel and the independent Column-HOF spelling of the same rolling
       // chain — a kernel regression flips a cell to false and breaks the
       // hash match (values themselves covered by FastExprAndIvfSpec)
+      val norm = regexp_replace(trim(lower(col("text"))), "\\s+", " ")
+      val fold = aggregate(split(norm, " "), lit(0L),
+        (acc, w) => xxhash64(acc, w))
       t(s, dir, "documents").select(
         col("doc_id"),
-        (TF.fingerprint(col("text")) <=> TF.fingerprintTreeForm(col("text")))
-          .as("kernel_eq_spec"))
-        .orderBy(col("doc_id")),
+        (TF.fingerprint(col("text")) <=> fold).as("kernel_eq_spec"))
+        .orderBy(col("doc_id"))
+    },
       """SELECT doc_id, TRUE AS kernel_eq_spec
         |FROM documents ORDER BY doc_id""".stripMargin),
 
@@ -1863,7 +1866,7 @@ object DocQueries {
         (col("doc_id") + 100000L).as("doc_id"),
         expr("substring(text, instr(text, ' ') + 1)").as("text")))
       val sets = graft.core.Rebalance.computeDense(d0).select(col("doc_id"),
-        graft.functions.TextFunctions.shingles(col("text"), 3).as("sh"))
+        MinHashDedup.shingles(col("text"), 3).as("sh"))
       graft.operators.SetSimJoin.jaccardSelfJoin(sets, "doc_id", "sh", 0.8)
         .orderBy(col("id_a"), col("id_b"))
     },
@@ -1921,7 +1924,7 @@ object DocQueries {
       // a collision THROWS (no row at all), it can never emit false
       import s.implicits._
       val sets = t(s, dir, "documents")
-        .select(TF.shingles(col("text"), 3).as("sh"))
+        .select(MinHashDedup.shingles(col("text"), 3).as("sh"))
       val vocab = graft.operators.SetSimJoin.assertInjective(sets, "sh")
       Seq((vocab, true)).toDF("vocab", "injective")
     },
@@ -1961,11 +1964,11 @@ object DocQueries {
       // realized vocabulary
       val osh = graft.core.Rebalance.computeDense(docs)
         .select(col("doc_id").as("_oid"),
-        array_sort(transform(TF.shingles(col("text"), 3),
+        array_sort(transform(MinHashDedup.shingles(col("text"), 3),
           t => xxhash64(t))).as("_osh"))
       val nsh = graft.core.Rebalance.computeDense(batch)
         .select(col("doc_id").as("_nid"),
-        array_sort(transform(TF.shingles(col("text"), 3),
+        array_sort(transform(MinHashDedup.shingles(col("text"), 3),
           t => xxhash64(t))).as("_nsh"))
       val inter = graft.functions.SortedIntersectCount
         .sorted_intersect_count(col("_nsh"), col("_osh"))
@@ -2268,10 +2271,23 @@ object DocQueries {
     Gate("q_doc_simhash", (s, dir) => {
       // same invariant shape as q_doc_fingerprint: the projection kernel
       // must agree row-for-row with the explode + 64-vote aggregate form
+      // (a shingle-less doc's one NULL row votes the bits of the seed, 42)
       val docs = t(s, dir, "documents")
       val kernel = SimHash.simhashTable(docs, "doc_id", "text", k = 3)
-      val agg = SimHash.simhashTableAggForm(docs, "doc_id", "text", k = 3)
-        .withColumnRenamed("simhash", "simhash_agg")
+      val votes = (0 until 64).map { b =>
+        sum(when(col("_h").isNull, -1L)
+          .when(shiftright(col("_h"), b).bitwiseAND(lit(1L)) === 1L, 1L)
+          .otherwise(-1L)).as(s"_v$b")
+      }
+      val sig = (0 until 64)
+        .map(b => when(col(s"_v$b") > 0, shiftleft(lit(1L), b)).otherwise(lit(0L)))
+        .reduce((a, c) => a.bitwiseOR(c))
+      val agg = graft.core.Rebalance.computeDense(docs)
+        .select(col("doc_id"),
+          explode_outer(MinHashDedup.shingles(col("text"), 3)).as("_sh"))
+        .withColumn("_h", xxhash64(col("_sh")))
+        .groupBy(col("doc_id")).agg(votes.head, votes.tail: _*)
+        .select(col("doc_id"), sig.as("simhash_agg"))
       kernel.join(agg, Seq("doc_id"))
         .select(col("doc_id"),
           (col("simhash") <=> col("simhash_agg")).as("kernel_eq_spec"))
@@ -2355,7 +2371,6 @@ object DocQueries {
       val emb = t(s, dir, "embeddings")
       val qvec = emb.filter(col("vec_id") === 1)
         .select(col("embedding")).head().getSeq[Float](0)
-      graft.functions.CosineSim.register(s)
       val q = array(qvec.map(v => lit(v)): _*)
         .cast(ArrayType(FloatType))
       emb.select(col("vec_id"),
@@ -2388,7 +2403,6 @@ object DocQueries {
         .topKQuantized(emb, "embedding", "vec_id", qvec, k = 20)
         .select(col("vec_id")).persist() // aux + recall join
       Aux.write(res, s"/tmp/graft_oracle_aux/${Sql.sfTag(dir)}/q8_results")
-      graft.functions.CosineSim.register(s)
       val q = array(qvec.map(v => lit(v)): _*).cast(ArrayType(FloatType))
       val exact = emb.select(col("vec_id"),
           Semantics.safeRound(
@@ -2432,7 +2446,6 @@ object DocQueries {
         .ivfSearch(index, "embedding", "vec_id", qvec, k = 15, nProbe = 4)
         .select(col("vec_id")).persist() // aux + recall join share the probe
       Aux.write(res, s"/tmp/graft_oracle_aux/${Sql.sfTag(dir)}/ivf_results")
-      graft.functions.CosineSim.register(s)
       val q = array(qvec.map(v => lit(v)): _*).cast(ArrayType(FloatType))
       val exact = emb.select(col("vec_id"),
           Semantics.safeRound(
@@ -2483,7 +2496,6 @@ object DocQueries {
         .persist()
       Aux.write(approx,
         s"/tmp/graft_oracle_aux/${Sql.sfTag(dir)}/rank_eval_approx")
-      graft.functions.CosineSim.register(s)
       val q = array(qvec.map(v => lit(v)): _*).cast(ArrayType(FloatType))
       val simW = org.apache.spark.sql.expressions.Window
         .orderBy(col("sim").desc, col("vec_id").asc)
@@ -2548,7 +2560,6 @@ object DocQueries {
         vecCol = "embedding", idCol = "vec_id", dim = 64, nPlanes = 6, k = 10)
         .select(col("query_id"), col("vec_id")).persist() // aux + recall join
       Aux.write(ann, s"/tmp/graft_oracle_aux/${Sql.sfTag(dir)}/ann_pairs")
-      graft.functions.CosineSim.register(s)
       // limit(5) = identity on the ≤5-row filter, but makes the broadcast
       // side's bound statically provable (plan-hygiene BNLJ rule)
       val queries = emb.filter(col("vec_id") < 5).limit(5)
@@ -3153,7 +3164,6 @@ object DocQueries {
       // (a→ä, e→é), fold it back with the codegen'd NFD+strip kernel; the
       // oracle folds the same derivation with utf8proc strip_accents, so a
       // hash match proves the two unicode implementations agree
-      graft.functions.AccentFold.register(s)
       val accented = regexp_replace(
         regexp_replace(col("text"), "a", "ä"), "e", "é")
       t(s, dir, "documents").select(col("doc_id"),

@@ -1803,7 +1803,6 @@ object ExtraQueries {
       // disagreement (~1e-18/element), so the round(4) hash-match with the
       // DuckDB oracle is preserved — asserted empirically by the gate.
       import graft.functions.CosineSim
-      CosineSim.register(s)
       // limit(300) is an identity on the ≤300-row filtered slice but makes
       // the bound STATICALLY provable (plan-hygiene BNLJ rule)
       val emb = t(s, dir, "embeddings").filter(col("vec_id") < 300).limit(300)
@@ -1843,7 +1842,6 @@ object ExtraQueries {
       // on a bounded slice here; at corpus scale the SAME components/keep
       // code consumes LSH-candidate pairs (annJoin) instead of brute force.
       import graft.functions.CosineSim
-      CosineSim.register(s)
       val emb = t(s, dir, "embeddings").filter(col("vec_id") < 300).limit(300)
       val a = emb.select(col("vec_id").as("id_a"), col("embedding").as("ea"))
       val b = emb.select(col("vec_id").as("id_b"), col("embedding").as("eb"))

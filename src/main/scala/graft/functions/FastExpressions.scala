@@ -1,24 +1,72 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import scala.collection.mutable.ArrayBuffer
+
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftColumnBridge.{column, expression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, DoubleType, FloatType, IntegerType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
+
+/** The whitespace class and word tokenizer the text kernels share, so
+  * MinHash, SimHash, shingles and fingerprints split a document into the
+  * same words. Only kernel Scala bodies call these; generated Java calls
+  * each kernel's own static entry. */
+private[functions] object Words {
+  private val Space = UTF8String.fromString(" ")
+
+  /** Java regex `\s`: space, tab, newline, CR, form feed, vertical tab.
+    * Byte tests are exact on UTF-8: every byte of a multi-byte codepoint
+    * is >= 0x80. */
+  def isSpace(b: Byte): Boolean =
+    b == ' ' || b == '\t' || b == '\n' || b == '\r' || b == '\f' || b == 0x0b
+
+  /** The maximal non-`isSpace` byte runs of the lowercased text — exactly
+    * a `\s+` split of the trimmed text, never an empty token. Tokens are
+    * slices of one lowercased buffer, not copies. */
+  def lowerWords(text: UTF8String): ArrayBuffer[UTF8String] = {
+    val bytes = text.toLowerCase.getBytes
+    val n = bytes.length
+    val words = new ArrayBuffer[UTF8String]()
+    var i = 0
+    var start = -1
+    while (i <= n) {
+      val ws = i == n || isSpace(bytes(i))
+      if (!ws && start < 0) start = i
+      else if (ws && start >= 0) {
+        words += UTF8String.fromBytes(bytes, start, i - start)
+        start = -1
+      }
+      i += 1
+    }
+    words
+  }
+
+  /** The `parts.length` words from `s` on, joined by single spaces: one
+    * shingle. `parts` is caller-owned scratch space. */
+  def shingle(words: ArrayBuffer[UTF8String], s: Int,
+      parts: Array[UTF8String]): UTF8String = {
+    var j = 0
+    while (j < parts.length) { parts(j) = words(s + j); j += 1 }
+    UTF8String.concatWs(Space, parts: _*)
+  }
+}
 
 /** The one place the engine drops below `functions._`: a custom Catalyst
   * `Expression` with real codegen. SURVEY §7.3 concluded built-ins cover
   * parity, so this exists for the hot path where expression plumbing is
   * measurably the cost: token counting over 100 TB of documents. The
-  * built-in form (`TextFunctions.tokenCount`) walks the string three times
-  * through two regex engines; this is a single UTF-8 byte scan, fully
-  * inside whole-stage codegen, no allocation.
+  * regex spelling it replaced (`FunctionTwins.tokenCountRegex`) walks the
+  * string three times through two regex engines; this is a single UTF-8
+  * byte scan, fully inside whole-stage codegen, no allocation.
   *
-  * Semantics match `tokenCount` for `\s`-separated text: count of maximal
-  * non-whitespace runs (ASCII whitespace classes, like the regex).
+  * Semantics match the regex spelling: count of maximal non-whitespace
+  * runs (ASCII `\s` class, [[Words.isSpace]]). Every kernel below builds
+  * its Column directly through `GraftColumnBridge`; SQL names come only
+  * from [[graft.GraftExtensions]].
   */
 case class TokenCount(child: Expression) extends UnaryExpression {
   override def dataType: DataType = IntegerType
@@ -52,8 +100,7 @@ object TokenCount {
     var i = 0
     while (i < n) {
       val b = org.apache.spark.unsafe.Platform.getByte(base, offset + i)
-      val ws = b == ' ' || b == '\t' || b == '\n' || b == '\r' ||
-        b == '\f' || b == 0x0b
+      val ws = Words.isSpace(b)
       if (!ws && !inToken) { count += 1; inToken = true }
       else if (ws) inToken = false
       i += 1
@@ -61,18 +108,7 @@ object TokenCount {
     count
   }
 
-  /** SQL + Column access: register once per session, then
-    * `fast_token_count(col)` / `SELECT fast_token_count(text)`. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "fast_token_count", exprs => TokenCount(exprs.head), "built-in")
-
-  def fast_token_count(c: Column): Column = call_function("fast_token_count", c)
-
-  /** Column form without a per-session registry round-trip (library path). */
-  def token_count(c: Column): Column =
-    org.apache.spark.sql.GraftColumnBridge.column(TokenCount(
-      org.apache.spark.sql.GraftColumnBridge.expression(c)))
+  def token_count(c: Column): Column = column(TokenCount(expression(c)))
 }
 
 /** Count of MAXIMAL RUNS of characters from an ASCII class — the codegen
@@ -150,10 +186,8 @@ object CharClassRuns {
     count
   }
 
-  /** Column form without a per-session registry round-trip (library path). */
   def char_class_runs(c: Column, members: String): Column =
-    org.apache.spark.sql.GraftColumnBridge.column(CharClassRuns(
-      org.apache.spark.sql.GraftColumnBridge.expression(c), members))
+    column(CharClassRuns(expression(c), members))
 }
 
 /** Cosine similarity between two float-array columns as one codegen'd
@@ -162,8 +196,8 @@ object CharClassRuns {
   * walks both inputs three times (dot, ‖a‖, ‖b‖) through interpreted lambda
   * dispatch; this reads each element once, accumulates dot and both norms
   * together, and inlines into whole-stage codegen. Accumulation order and
-  * arithmetic (left-to-right doubles) match [[Similarity.cosine]], so the
-  * two forms agree bit-for-bit. */
+  * arithmetic (left-to-right doubles) match the HOF spelling
+  * (`FunctionTwins.cosine`), so the two forms agree bit-for-bit. */
 case class CosineSim(left: Expression, right: Expression)
     extends BinaryExpression {
   override def dataType: DataType = DoubleType
@@ -211,12 +245,8 @@ object CosineSim {
     if (d == 0.0) 0.0 else dot / d
   }
 
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "fast_cosine", exprs => CosineSim(exprs.head, exprs(1)), "built-in")
-
   def fast_cosine(a: Column, b: Column): Column =
-    call_function("fast_cosine", a, b)
+    column(CosineSim(expression(a), expression(b)))
 }
 
 /** Decimal-exact dot product of two float arrays, as one codegen'd loop.
@@ -323,11 +353,8 @@ object SortedIntersectCount {
     c
   }
 
-  /** Column form without a per-session registry round-trip (library path). */
   def sorted_intersect_count(a: Column, b: Column): Column =
-    org.apache.spark.sql.GraftColumnBridge.column(SortedIntersectCount(
-      org.apache.spark.sql.GraftColumnBridge.expression(a),
-      org.apache.spark.sql.GraftColumnBridge.expression(b)))
+    column(SortedIntersectCount(expression(a), expression(b)))
 }
 
 /** Distinct word k-gram shingles as one codegen'd pass — the shared front
@@ -359,38 +386,15 @@ case class WordShingles(child: Expression, k: Int) extends UnaryExpression {
 }
 
 object WordShingles {
-  private val Space = UTF8String.fromString(" ")
-
   /** Called from generated code — must stay a static-forwardable method. */
   def shingles(text: UTF8String,
       k: Int): org.apache.spark.sql.catalyst.util.GenericArrayData = {
-    val bytes = text.toLowerCase.getBytes
-    val n = bytes.length
-    // tokenize: maximal runs of non-(ASCII \s) bytes, exactly `\s+` split
-    // on trimmed text (no empty tokens); byte offsets are safe — multi-byte
-    // UTF-8 units never collide with ASCII whitespace
-    val tokens = new scala.collection.mutable.ArrayBuffer[UTF8String]()
-    var i = 0
-    var start = -1
-    while (i <= n) {
-      val ws = i == n || {
-        val b = bytes(i)
-        b == ' ' || b == '\t' || b == '\n' || b == '\r' || b == '\f' || b == 0x0b
-      }
-      if (!ws && start < 0) start = i
-      else if (ws && start >= 0) {
-        tokens += UTF8String.fromBytes(bytes, start, i - start)
-        start = -1
-      }
-      i += 1
-    }
+    val words = Words.lowerWords(text)
     val out = new java.util.LinkedHashSet[UTF8String]()
+    val parts = new Array[UTF8String](k)
     var s = 0
-    while (s + k <= tokens.length) {
-      val parts = new Array[UTF8String](k)
-      var j = 0
-      while (j < k) { parts(j) = tokens(s + j); j += 1 }
-      out.add(UTF8String.concatWs(Space, parts: _*))
+    while (s + k <= words.length) {
+      out.add(Words.shingle(words, s, parts))
       s += 1
     }
     val arr = new Array[Any](out.size)
@@ -401,8 +405,7 @@ object WordShingles {
   }
 
   def word_shingles(text: Column, k: Int): Column =
-    org.apache.spark.sql.GraftColumnBridge.column(WordShingles(
-      org.apache.spark.sql.GraftColumnBridge.expression(text), k))
+    column(WordShingles(expression(text), k))
 }
 
 /** Full MinHash signature in one codegen'd pass — replaces the
@@ -442,31 +445,12 @@ case class MinHashSig(child: Expression, k: Int, numHashes: Int)
 
 object MinHashSig {
   import org.apache.spark.sql.catalyst.expressions.XXH64
-  private val Space = UTF8String.fromString(" ")
-  private val ByteArrayOffset =
-    org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET
 
   /** Called from generated code — must stay a static-forwardable method. */
   def sig(text: UTF8String, k: Int,
       numHashes: Int): org.apache.spark.sql.catalyst.util.GenericArrayData = {
-    val bytes = text.toLowerCase.getBytes
-    val n = bytes.length
-    val tokens = new scala.collection.mutable.ArrayBuffer[UTF8String]()
-    var i = 0
-    var start = -1
-    while (i <= n) {
-      val ws = i == n || {
-        val b = bytes(i)
-        b == ' ' || b == '\t' || b == '\n' || b == '\r' || b == '\f' || b == 0x0b
-      }
-      if (!ws && start < 0) start = i
-      else if (ws && start >= 0) {
-        tokens += UTF8String.fromBytes(bytes, start, i - start)
-        start = -1
-      }
-      i += 1
-    }
-    if (tokens.length < k) {
+    val words = Words.lowerWords(text)
+    if (words.length < k) {
       val empty = new Array[Any](numHashes)
       var e = 0
       while (e < numHashes) { empty(e) = XXH64.hashInt(e, 42L); e += 1 }
@@ -475,11 +459,10 @@ object MinHashSig {
     val mins = Array.fill(numHashes)(Long.MaxValue)
     val parts = new Array[UTF8String](k)
     var s = 0
-    while (s + k <= tokens.length) {
-      var j = 0
-      while (j < k) { parts(j) = tokens(s + j); j += 1 }
-      val sh = UTF8String.concatWs(Space, parts: _*).getBytes
-      val base = XXH64.hashUnsafeBytes(sh, ByteArrayOffset, sh.length, 42L)
+    while (s + k <= words.length) {
+      val sh = Words.shingle(words, s, parts)
+      val base = XXH64.hashUnsafeBytes(sh.getBaseObject, sh.getBaseOffset,
+        sh.numBytes, 42L)
       var seed = 0
       while (seed < numHashes) {
         val h = XXH64.hashInt(seed, base)
@@ -495,8 +478,7 @@ object MinHashSig {
   }
 
   def minhash_sig(text: Column, k: Int, numHashes: Int): Column =
-    org.apache.spark.sql.GraftColumnBridge.column(MinHashSig(
-      org.apache.spark.sql.GraftColumnBridge.expression(text), k, numHashes))
+    column(MinHashSig(expression(text), k, numHashes))
 }
 
 /** SimHash signature in one codegen'd pass — replaces simhashTable's
@@ -532,42 +514,21 @@ case class SimHashSig(child: Expression, k: Int, bits: Int)
 
 object SimHashSig {
   import org.apache.spark.sql.catalyst.expressions.XXH64
-  private val Space = UTF8String.fromString(" ")
-  private val ByteArrayOffset =
-    org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET
 
   /** Called from generated code — must stay a static-forwardable method. */
   def sig(text: UTF8String, k: Int, bits: Int): Long = {
-    val bytes = text.toLowerCase.getBytes
-    val n = bytes.length
-    val tokens = new scala.collection.mutable.ArrayBuffer[UTF8String]()
-    var i = 0
-    var start = -1
-    while (i <= n) {
-      val ws = i == n || {
-        val b = bytes(i)
-        b == ' ' || b == '\t' || b == '\n' || b == '\r' || b == '\f' || b == 0x0b
-      }
-      if (!ws && start < 0) start = i
-      else if (ws && start >= 0) {
-        tokens += UTF8String.fromBytes(bytes, start, i - start)
-        start = -1
-      }
-      i += 1
-    }
-    if (tokens.length < k) // the single NULL row's hash is the seed itself
+    val words = Words.lowerWords(text)
+    if (words.length < k) // the single NULL row's hash is the seed itself
       return 42L & (if (bits >= 64) -1L else (1L << bits) - 1)
     val votes = new Array[Long](bits)
     val seen = new java.util.HashSet[UTF8String]()
     val parts = new Array[UTF8String](k)
     var s = 0
-    while (s + k <= tokens.length) {
-      var j = 0
-      while (j < k) { parts(j) = tokens(s + j); j += 1 }
-      val sh = UTF8String.concatWs(Space, parts: _*)
+    while (s + k <= words.length) {
+      val sh = Words.shingle(words, s, parts)
       if (seen.add(sh)) {
-        val shb = sh.getBytes
-        val h = XXH64.hashUnsafeBytes(shb, ByteArrayOffset, shb.length, 42L)
+        val h = XXH64.hashUnsafeBytes(sh.getBaseObject, sh.getBaseOffset,
+          sh.numBytes, 42L)
         var b = 0
         while (b < bits) {
           votes(b) += (if (((h >> b) & 1L) == 1L) 1L else -1L)
@@ -586,8 +547,7 @@ object SimHashSig {
   }
 
   def simhash_sig(text: Column, k: Int, bits: Int): Column =
-    org.apache.spark.sql.GraftColumnBridge.column(SimHashSig(
-      org.apache.spark.sql.GraftColumnBridge.expression(text), k, bits))
+    column(SimHashSig(expression(text), k, bits))
 }
 
 /** Order-sensitive rolling document fingerprint as one codegen'd scan —
@@ -619,43 +579,22 @@ case class RollingFingerprint(child: Expression) extends UnaryExpression {
 
 object RollingFingerprint {
   import org.apache.spark.sql.catalyst.expressions.XXH64
-  private val ByteArrayOffset =
-    org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET
 
   /** One xxhash64(acc, word) step, exactly XxHash64's child fold. */
-  private def step(acc: Long, bytes: Array[Byte], start: Int, len: Int): Long = {
-    val h = XXH64.hashLong(acc, 42L)
-    XXH64.hashUnsafeBytes(bytes, ByteArrayOffset + start, len, h)
-  }
+  private def step(acc: Long, w: UTF8String): Long =
+    XXH64.hashUnsafeBytes(w.getBaseObject, w.getBaseOffset, w.numBytes,
+      XXH64.hashLong(acc, 42L))
 
   /** Called from generated code — must stay a static-forwardable method. */
   def fingerprint(text: UTF8String): Long = {
-    val bytes = text.toLowerCase.getBytes
-    val n = bytes.length
-    var acc = 0L
-    var any = false
-    var i = 0
-    var start = -1
-    while (i <= n) {
-      val ws = i == n || {
-        val b = bytes(i)
-        b == ' ' || b == '\t' || b == '\n' || b == '\r' || b == '\f' || b == 0x0b
-      }
-      if (!ws && start < 0) start = i
-      else if (ws && start >= 0) {
-        acc = step(acc, bytes, start, i - start)
-        any = true
-        start = -1
-      }
-      i += 1
-    }
-    if (!any) acc = step(acc, bytes, 0, 0) // split("") → one empty token
-    acc
+    val words = Words.lowerWords(text)
+    // split("") → one empty token
+    if (words.isEmpty) step(0L, UTF8String.EMPTY_UTF8)
+    else words.foldLeft(0L)(step)
   }
 
   def rolling_fingerprint(text: Column): Column =
-    org.apache.spark.sql.GraftColumnBridge.column(RollingFingerprint(
-      org.apache.spark.sql.GraftColumnBridge.expression(text)))
+    column(RollingFingerprint(expression(text)))
 }
 
 /** Random-hyperplane LSH bucket id as one codegen'd loop. The Column
@@ -720,8 +659,7 @@ object LshBucket {
   }
 
   def lsh_bucket(vec: Column, nPlanes: Int, dim: Int): Column =
-    org.apache.spark.sql.GraftColumnBridge.column(LshBucket(
-      org.apache.spark.sql.GraftColumnBridge.expression(vec), nPlanes, dim))
+    column(LshBucket(expression(vec), nPlanes, dim))
 }
 
 object DecimalDot {
@@ -741,15 +679,8 @@ object DecimalDot {
     sum.doubleValue()
   }
 
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "decimal_dot", exprs => DecimalDot(exprs.head, exprs(1)), "built-in")
-
-  /** Column form — built directly from the expression, no registry needed. */
   def decimal_dot(a: Column, b: Column): Column =
-    org.apache.spark.sql.GraftColumnBridge.column(DecimalDot(
-      org.apache.spark.sql.GraftColumnBridge.expression(a),
-      org.apache.spark.sql.GraftColumnBridge.expression(b)))
+    column(DecimalDot(expression(a), expression(b)))
 }
 
 /** Quantized cosine over two int8-quantized vectors, each packed as
@@ -810,14 +741,8 @@ object CosineQ8 {
     else dot * a.getFloat(1).toDouble * b.getFloat(1).toDouble / d
   }
 
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_q8", exprs => CosineQ8(exprs.head, exprs(1)), "built-in")
-
   def cosine_q8(a: Column, b: Column): Column =
-    org.apache.spark.sql.GraftColumnBridge.column(CosineQ8(
-      org.apache.spark.sql.GraftColumnBridge.expression(a),
-      org.apache.spark.sql.GraftColumnBridge.expression(b)))
+    column(CosineQ8(expression(a), expression(b)))
 }
 
 /** All k-word-window Buzhash values of a word array in ONE O(n) pass —
@@ -889,14 +814,8 @@ object WindowHashes {
     new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
   }
 
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "window_hashes", exprs => WindowHashes(exprs.head,
-        exprs(1).eval().asInstanceOf[Int]), "built-in")
-
   def window_hashes(words: Column, k: Int): Column =
-    org.apache.spark.sql.GraftColumnBridge.column(WindowHashes(
-      org.apache.spark.sql.GraftColumnBridge.expression(words), k))
+    column(WindowHashes(expression(words), k))
 }
 
 /** Fused `split(text, "") → bpe merge passes → token array` in ONE kernel —
@@ -1014,8 +933,7 @@ object BpeSegments {
   }
 
   def bpe_segments(text: Column, merges: Seq[(String, String)]): Column =
-    org.apache.spark.sql.GraftColumnBridge.column(BpeSegments(
-      org.apache.spark.sql.GraftColumnBridge.expression(text),
+    column(BpeSegments(expression(text),
       merges.map(p => Array(p._1, p._2)).toArray))
 }
 
@@ -1072,11 +990,7 @@ object AccentFold {
     }
   }
 
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "accent_fold", exprs => AccentFold(exprs.head), "built-in")
-
-  def accent_fold(c: Column): Column = call_function("accent_fold", c)
+  def accent_fold(c: Column): Column = column(AccentFold(expression(c)))
 }
 
 /** Kept-lines filter as ONE codegen kernel — the replacement for the
@@ -1159,8 +1073,7 @@ object KeptLines {
         var i = 0
         while (i < nb) {
           val b = org.apache.spark.unsafe.Platform.getByte(base, off + i)
-          val ws = b == ' ' || b == '\t' || b == '\n' || b == '\r' ||
-            b == '\f' || b == 0x0b
+          val ws = Words.isSpace(b)
           if (!ws && !inTok) { words += 1; inTok = true }
           else if (ws) inTok = false
           if (b >= 'A' && b <= 'Z') { up += 1; alpha += 1 }
@@ -1179,10 +1092,7 @@ object KeptLines {
     new org.apache.spark.sql.catalyst.util.GenericArrayData(trimmed)
   }
 
-  /** Column form without a per-session registry round-trip (library path). */
   def kept_lines(c: Column, minWords: Int, upperScaledE4: Int,
       boilerplate: Seq[String]): Column =
-    org.apache.spark.sql.GraftColumnBridge.column(KeptLines(
-      org.apache.spark.sql.GraftColumnBridge.expression(c), minWords,
-      upperScaledE4, boilerplate))
+    column(KeptLines(expression(c), minWords, upperScaledE4, boilerplate))
 }

@@ -12,37 +12,18 @@ import org.apache.spark.sql.types._
   * shape). Scale path: LSH bucketing via random hyperplane signs so
   * candidate generation touches only matching buckets.
   *
-  * Dot products via `zip_with` + `aggregate` (codegen'd higher-order
-  * functions), computed in double.
+  * Every scan scores with the codegen'd [[CosineSim]] kernel: one pass in
+  * double, no intermediate array.
   */
 object Similarity {
-
-  def dot(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x.cast(DoubleType) * y.cast(DoubleType)),
-      lit(0.0), (acc, v) => acc + v)
-
-  def norm(a: Column): Column = sqrt(dot(a, a))
-
-  def cosine(a: Column, b: Column): Column = {
-    val d = norm(a) * norm(b)
-    when(d === 0, 0.0).otherwise(dot(a, b) / d)
-  }
-
-  /** The scan kernel for the search paths below: the codegen'd
-    * [[CosineSim]] expression (one pass, no intermediate array), registered
-    * idempotently on the frame's session. Bit-identical to [[cosine]] for
-    * equal-length float arrays (same left-to-right double accumulation). */
-  private def fastCosine(df: DataFrame, a: Column, b: Column): Column = {
-    CosineSim.register(df.sparkSession)
-    CosineSim.fast_cosine(a, b)
-  }
 
   /** Brute-force top-k against one query vector: score projection + orderBy
     * + limit = TakeOrderedAndProject (per-partition heap, driver merge). */
   def topK(df: DataFrame, vecCol: String, idCol: String,
       query: Seq[Float], k: Int): DataFrame = {
     val q = array(query.map(v => lit(v)): _*).cast(ArrayType(FloatType))
-    df.select(col(idCol), fastCosine(df, col(vecCol), q).as("similarity"))
+    df.select(col(idCol),
+        CosineSim.fast_cosine(col(vecCol), q).as("similarity"))
       .orderBy(col("similarity").desc, col(idCol).asc)
       .limit(k)
   }
@@ -67,7 +48,7 @@ object Similarity {
       .filter(col("_clbl") =!= col("_albl"))
       .select(col("anchor_id"), col("cand_id"),
         graft.core.Semantics.safeRound(
-          fastCosine(corpus, col("_cvec"), col("_avec")), scale)
+          CosineSim.fast_cosine(col("_cvec"), col("_avec")), scale)
           .as("similarity"))
     graft.core.TopK.perKey(scored, Seq("anchor_id"), k,
       Seq(col("similarity").desc, col("cand_id").asc))
@@ -310,7 +291,7 @@ object Similarity {
     index.assigned
       .filter(col("_list").isin(probeLists.toIndexedSeq: _*))
       .select(col(idCol),
-        fastCosine(index.assigned, col(vecCol), q).as("similarity"))
+        CosineSim.fast_cosine(col(vecCol), q).as("similarity"))
       .orderBy(col("similarity").desc, col(idCol).asc)
       .limit(k)
   }
@@ -325,7 +306,8 @@ object Similarity {
     val qb = queries.withColumn("_bucket", lshBucket(col(vecCol), dim, nPlanes))
       .select(col(idCol).as("query_id"), col(vecCol).as("_qvec"), col("_bucket"))
     val scored = qb.join(cb, Seq("_bucket"))
-      .withColumn("similarity", fastCosine(corpus, col("_qvec"), col(vecCol)))
+      .withColumn("similarity",
+        CosineSim.fast_cosine(col("_qvec"), col(vecCol)))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("similarity").desc, col(idCol).asc)
     scored.withColumn("_rn", row_number().over(w)).filter(col("_rn") <= k)

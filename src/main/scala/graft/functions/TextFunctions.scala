@@ -11,13 +11,9 @@ import org.apache.spark.sql.types._
   */
 object TextFunctions {
 
-  /** Whitespace token count. Deliberately simple arithmetic (no regex-split
-    * array materialization): count of separator runs + 1 on trimmed text. */
-  def tokenCount(text: Column): Column = {
-    val t = trim(regexp_replace(text, "\\s+", " "))
-    when(length(t) === 0, 0)
-      .otherwise(length(t) - length(replace(t, lit(" "), lit(""))) + 1)
-  }
+  /** Whitespace token count: the number of maximal runs of non-`\s`
+    * characters, as one codegen'd byte scan ([[TokenCount]]). */
+  def tokenCount(text: Column): Column = TokenCount.token_count(text)
 
   /** Quality-scoring signals (length / punctuation / stopword ratios) and a
     * composite score ∈ [0,1]. Thresholds follow common public pipeline
@@ -127,17 +123,13 @@ object TextFunctions {
   def qualitySignalsTable(df: org.apache.spark.sql.DataFrame,
       textCol: String): org.apache.spark.sql.DataFrame = {
     val text = col(textCol)
-    // three regex normalizations + a stopword filter per document --
+    // two regex normalizations + a stopword filter per document --
     // compute-dense scan (Rebalance doc); streaming inputs pass through
     val staged = graft.core.Rebalance.computeDense(df)
       .withColumn("_qs_t", trim(text))
-      .withColumn("_qs_norm", trim(regexp_replace(text, "\\s+", " ")))
       .withColumn("_qs_norml", trim(regexp_replace(lower(text), "\\s+", " ")))
     val derived = staged
-      // token count over the non-lowered normalized text (= tokenCount)
-      .withColumn("_qs_ntok", when(length(col("_qs_norm")) === 0, 0)
-        .otherwise(length(col("_qs_norm"))
-          - length(replace(col("_qs_norm"), lit(" "), lit(""))) + 1))
+      .withColumn("_qs_ntok", tokenCount(text))
       .withColumn("_qs_words", split(col("_qs_norml"), " "))
       .withColumn("_qs_chars_ns",
         length(replace(col("_qs_norml"), lit(" "), lit(""))))
@@ -161,7 +153,7 @@ object TextFunctions {
       when(col("stopword_ratio") >= 0.05, 1.0).otherwise(0.5))
     signals
       .withColumn("quality", round(rules.reduce(_ + _) / lit(4.0), 4))
-      .drop("_qs_t", "_qs_norm", "_qs_norml", "_qs_ntok", "_qs_words",
+      .drop("_qs_t", "_qs_norml", "_qs_ntok", "_qs_words",
         "_qs_chars_ns")
   }
 
@@ -243,21 +235,10 @@ object TextFunctions {
     * the normalized word stream (order-sensitive, unlike a bag-of-words
     * hash). Chaining through the hash avoids ANSI-mode overflow that a raw
     * polynomial accumulator would hit. Computed by the codegen'd
-    * [[RollingFingerprint]] kernel — bit-identical to the HOF fold kept
-    * below (asserted in FastExprAndIvfSpec). */
+    * [[RollingFingerprint]] kernel — bit-identical to the HOF fold
+    * (`FunctionTwins.fingerprintTreeForm`, asserted in FastExprAndIvfSpec). */
   def fingerprint(text: Column): Column =
     RollingFingerprint.rolling_fingerprint(text)
-
-  /** The interpreted-HOF spelling fingerprint() replaced (kept for the
-    * regression test). */
-  private[graft] def fingerprintTreeForm(text: Column): Column = {
-    val norm = regexp_replace(trim(lower(text)), "\\s+", " ")
-    aggregate(split(norm, " "), lit(0L), (acc, w) => xxhash64(acc, w))
-  }
-
-  /** Word n-gram shingles (shared with dedup operators). */
-  def shingles(text: Column, k: Int = 3): Column =
-    graft.operators.MinHashDedup.shingles(text, k)
 
   /** PII redaction: mask email / SSN / credit-card / US-phone occurrences
     * inside free text (the in-text variants of SchemaInferrer's whole-field
@@ -408,7 +389,8 @@ object TextFunctions {
   def topNgrams(df: org.apache.spark.sql.DataFrame, textCol: String,
       k: Int = 3, topN: Int = 20): org.apache.spark.sql.DataFrame = {
     require(topN > 0, s"topN must be positive: $topN")
-    df.select(explode(shingles(col(textCol), k)).as("shingle"))
+    df.select(explode(graft.operators.MinHashDedup.shingles(col(textCol), k))
+        .as("shingle"))
       .groupBy(col("shingle"))
       .agg(count(lit(1)).as("doc_freq"))
       .orderBy(col("doc_freq").desc, col("shingle"))

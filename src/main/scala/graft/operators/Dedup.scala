@@ -138,13 +138,6 @@ object MinHashDedup {
   def candidateProbability(j: Double, bands: Int, rowsPerBand: Int): Double =
     1.0 - math.pow(1.0 - math.pow(j, rowsPerBand), bands)
 
-  /** MinHash signature: for each of `numHashes` seeded hash functions, the
-    * min over shingle hashes. Pure expressions → codegen, no shuffle. */
-  def signature(sh: Column, numHashes: Int = 64): Column =
-    array((0 until numHashes).map { seed =>
-      array_min(transform(sh, s => xxhash64(s, lit(seed))))
-    }: _*)
-
   /** (id, band, bucket) rows from the codegen'd signature kernel — shared by
     * [[clusters]] and the connected-components property tests. */
   private[graft] def bucketTable(df: DataFrame, idCol: String, textCol: String,
@@ -397,47 +390,15 @@ object MinHashDedup {
   * of per-feature hash-bit contributions. Near-duplicates differ in few bits
   * → group by signature (exact) or by rotated prefixes (hamming ≤ d). */
 object SimHash {
-  /** Per-row expression form — fine for short shingle arrays / tests. For
-    * tables, prefer [[simhashTable]]: this form nests the shingle pipeline
-    * under every bit and codegen cannot CSE it. */
-  def simhash(sh: Column, bits: Int = 64): Column = {
-    val hashes = transform(sh, s => xxhash64(s))
-    (0 until bits).map { b =>
-      val vote = aggregate(hashes, lit(0L),
-        (acc, h) => acc + when(shiftright(h, b).bitwiseAND(lit(1L)) === 1L, 1L)
-          .otherwise(-1L))
-      when(vote > 0, shiftleft(lit(1L), b)).otherwise(lit(0L))
-    }.reduce((a, b) => a.bitwiseOR(b))
-  }
-
-  /** Scale form: the codegen'd [[SimHashSig]] kernel — whole signature as a
-    * pure projection, no shuffle at all (values bit-identical to the
-    * explode + 64-vote aggregate spelling kept below; FastExprAndIvfSpec).
-    * Returns (idCol, simhash). */
+  /** The codegen'd [[SimHashSig]] kernel — whole signature as a pure
+    * projection, no shuffle at all (values bit-identical to the explode +
+    * 64-vote aggregate spelling `OperatorTwins.simhashTableAggForm`;
+    * FastExprAndIvfSpec). Returns (idCol, simhash). */
   def simhashTable(df: DataFrame, idCol: String, textCol: String,
       k: Int = 3, bits: Int = 64): DataFrame =
     graft.core.Rebalance.computeDense(df).select(col(idCol),
       graft.functions.SimHashSig.simhash_sig(col(textCol), k, bits)
         .as("simhash"))
-
-  /** The explode + vote-aggregate spelling simhashTable() replaced (kept
-    * for the regression test). */
-  private[graft] def simhashTableAggForm(df: DataFrame, idCol: String,
-      textCol: String, k: Int = 3, bits: Int = 64): DataFrame = {
-    val ex = graft.core.Rebalance.computeDense(df)
-      .select(col(idCol), explode_outer(MinHashDedup.shingles(col(textCol), k)).as("_sh"))
-      .withColumn("_h", xxhash64(col("_sh"))) // hashed once, reused by all bits
-    val votes = (0 until bits).map { b =>
-      sum(when(col("_h").isNull, -1L)
-        .when(shiftright(col("_h"), b).bitwiseAND(lit(1L)) === 1L, 1L)
-        .otherwise(-1L)).as(s"_v$b")
-    }
-    val agged = ex.groupBy(col(idCol)).agg(votes.head, votes.tail: _*)
-    val sig = (0 until bits)
-      .map(b => when(col(s"_v$b") > 0, shiftleft(lit(1L), b)).otherwise(lit(0L)))
-      .reduce((a, c) => a.bitwiseOR(c))
-    agged.select(col(idCol), sig.as("simhash"))
-  }
 
   /** Hamming distance between two 64-bit signatures. */
   def hamming(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))

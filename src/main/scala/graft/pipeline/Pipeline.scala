@@ -84,15 +84,7 @@ final class Pipeline private (
         }
     }
     val tTransform = System.currentTimeMillis() - t0 - tExtract
-    val rows =
-      if (sinks.isEmpty) transformed.count()
-      else {
-        // cache once, then N write actions + the row count — without it even
-        // a single sink computes the plan twice (pipeline_core.py:82-134)
-        val cached = transformed.cache()
-        try { sinks.foreach(_(cached)); cached.count() }
-        finally { cached.unpersist(); () }
-      }
+    val rows = loadAndCount(transformed)
     val stageCounts = observations.map { case (name, obs) =>
       name -> obs.getAsJava.getOrDefault("rows", -1L).asInstanceOf[Long]
     }.toMap
@@ -120,10 +112,21 @@ final class Pipeline private (
     val start = spark.read.parquet(
       if (fromStage == 0) s"$dir/extracted" else s"$dir/stage_${fromStage - 1}")
     val transformed = stages.drop(fromStage).foldLeft(start)((df, s) => s(df))
-    sinks.foreach(_(transformed))
-    Result(transformed, transformed.count(), stages.map(_.name),
+    val rows = loadAndCount(transformed)
+    Result(transformed, rows, stages.map(_.name),
       System.currentTimeMillis() - t0)
   }
+
+  /** Every sink, then the row count, over ONE evaluation of the plan:
+    * cache once, then N write actions + the count — without it even a
+    * single sink computes the plan twice (pipeline_core.py:82-134). */
+  private def loadAndCount(df: DataFrame): Long =
+    if (sinks.isEmpty) df.count()
+    else {
+      val cached = df.cache()
+      try { sinks.foreach(_(cached)); cached.count() }
+      finally { cached.unpersist(); () }
+    }
 }
 
 object Pipeline {

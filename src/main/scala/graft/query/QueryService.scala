@@ -1,6 +1,6 @@
 package graft.query
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -13,17 +13,6 @@ import org.apache.spark.sql.types._
   * an executor-side plan until the caller materializes.
   */
 object QueryService {
-
-  /** Result envelope with `query_time_ms`, mirroring the reference's
-    * per-query timing (`duckdb_service.py:417-431`). Wall clock around the
-    * materializing action — the number a dashboard actually experiences. */
-  final case class TimedResult(rows: Seq[Row], queryTimeMs: Long)
-
-  def timed(df: DataFrame): TimedResult = {
-    val t0 = System.nanoTime()
-    val rows = df.collect().toSeq
-    TimedResult(rows, (System.nanoTime() - t0) / 1000000L)
-  }
 
   /** Filtered aggregation (`duckdb_service.py:327-434`).
     * No-agg fallback = `SELECT * ... LIMIT 1000` like the reference. */

@@ -74,9 +74,4 @@ object Facade {
         case other => throw new IllegalArgumentException(s"unknown method $other")
       }
   }
-
-  /** The per-query latency envelope the reference returns with every
-    * dashboard response (`duckdb_service.py:417-431`). */
-  def handleTimed(req: Request)(implicit tables: Tables): QueryService.TimedResult =
-    QueryService.timed(handle(req))
 }

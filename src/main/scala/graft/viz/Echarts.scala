@@ -35,19 +35,10 @@ object Echarts {
   }
 
   object Json {
-    def escape(s: String): String = s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
+    import graft.service.MiniJson.escape
     def render(j: J): String = j match {
       case JStr(s) => "\"" + escape(s) + "\""
-      case JNum(d) =>
-        if (d.isWhole && math.abs(d) < 1e15) d.toLong.toString else d.toString
+      case JNum(d) => graft.service.MiniJson.render(d) // NaN, ±Inf → null
       case JInt(l) => l.toString
       case JBool(b) => b.toString
       case JNull => "null"

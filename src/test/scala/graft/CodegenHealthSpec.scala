@@ -65,14 +65,12 @@ class CodegenHealthSpec extends SparkSuite {
     (Seq(1.0f, 0.0f, 0.0f, 0.0f), Seq(0.0f, 1.0f, 0.0f, 0.0f))).toDF("a", "b")
 
   test("fast_token_count compiles") {
-    TokenCount.register(spark)
     assertCompiles("fast_token_count") {
-      text.select(TokenCount.fast_token_count(col("t")))
+      text.select(TokenCount.token_count(col("t")))
     }
   }
 
   test("fast_cosine compiles") {
-    CosineSim.register(spark)
     assertCompiles("fast_cosine") {
       vecs.select(CosineSim.fast_cosine(col("a"), col("b")))
     }
@@ -136,7 +134,6 @@ class CodegenHealthSpec extends SparkSuite {
   }
 
   test("accent_fold compiles") {
-    AccentFold.register(spark)
     assertCompiles("accent_fold") {
       text.select(AccentFold.accent_fold(
         regexp_replace(col("t"), "o", "ö")))
@@ -144,12 +141,36 @@ class CodegenHealthSpec extends SparkSuite {
   }
 
   test("accent_fold folds decomposables, short-circuits ASCII, keeps CJK") {
-    AccentFold.register(spark)
     val rows = Seq("café über år", "plain ascii", "中文")
       .toDF("t").select(AccentFold.accent_fold(col("t"))).collect()
     assert(rows(0).getString(0) == "cafe uber ar")
     assert(rows(1).getString(0) == "plain ascii")
     assert(rows(2).getString(0) == "中文")
+  }
+
+  test("char_class_runs compiles") {
+    assertCompiles("char_class_runs") {
+      text.select(CharClassRuns.char_class_runs(col("t"), "aeiou"))
+    }
+  }
+
+  test("sorted_intersect_count compiles") {
+    assertCompiles("sorted_intersect_count") {
+      Seq((Seq(1L, 3L, 5L), Seq(3L, 4L, 5L))).toDF("a", "b")
+        .select(SortedIntersectCount.sorted_intersect_count(col("a"), col("b")))
+    }
+  }
+
+  test("bpe_segments compiles") {
+    assertCompiles("bpe_segments") {
+      text.select(BpeSegments.bpe_segments(col("t"), Seq(("h", "e"))))
+    }
+  }
+
+  test("kept_lines compiles") {
+    assertCompiles("kept_lines") {
+      text.select(KeptLines.kept_lines(split(col("t"), " "), 1, 6000, Nil))
+    }
   }
 
   test("bpe_apply compiles (regression: static forwarder suppressed by TreeNode.apply)") {

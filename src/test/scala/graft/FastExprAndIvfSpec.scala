@@ -8,18 +8,21 @@ class FastExprAndIvfSpec extends SparkSuite {
   import spark.implicits._
 
   test("fast_token_count matches the regex-based tokenCount on documents") {
-    TokenCount.register(spark)
     val docs = graft.core.Tables.table(spark, sfDir, "documents")
     val mismatches = docs.select(
-      TF.tokenCount(col("text")).as("slow"),
-      TokenCount.fast_token_count(col("text")).as("fast"))
-      .filter(col("slow") =!= col("fast")).count()
+      FunctionTwins.tokenCountRegex(col("text")).as("slow"),
+      TF.tokenCount(col("text")).as("fast"))
+      .filter(!(col("slow") <=> col("fast"))).count()
     assert(mismatches == 0)
-    // SQL path + edge cases
-    Seq("", "  ", "one", " a  b\tc\nd ").toDF("t").createOrReplaceTempView("ftc")
-    val got = spark.sql("SELECT fast_token_count(t) FROM ftc")
-      .as[Int].collect().toSeq
-    assert(got == Seq(0, 0, 1, 4))
+    // edge cases: every ASCII \s class, leading/trailing runs, non-ASCII
+    // (U+00A0 is not \s), null in → null out
+    val edge = Seq("", "  ", "one", " a  b\tc\nd ", "x\u000By\fz\r",
+      "a\u00a0b 中文", null).toDF("t")
+      .select(FunctionTwins.tokenCountRegex(col("t")).as("slow"),
+        TF.tokenCount(col("t")).as("fast")).collect()
+    edge.foreach(r => assert(r.get(0) == r.get(1), s"edge: $r"))
+    assert(edge.map(_.get(1)).toSeq ==
+      Seq(0, 0, 1, 4, 3, 2, null))
   }
 
   test("char_class_runs matches size(regexp_extract_all) on documents") {
@@ -67,17 +70,17 @@ class FastExprAndIvfSpec extends SparkSuite {
     assert(plan.collect {
       case w: org.apache.spark.sql.execution.WholeStageCodegenExec => w
     }.nonEmpty)
-    // the bridge Column form (no registry) agrees with the regex tokenCount
-    val tokMismatch = docs.select(TF.tokenCount(col("text")).as("slow"),
+    // the kernel agrees with the regex spelling it replaced
+    val tokMismatch = docs.select(
+      FunctionTwins.tokenCountRegex(col("text")).as("slow"),
       TokenCount.token_count(col("text")).as("fast"))
       .filter(col("slow") =!= col("fast")).count()
     assert(tokMismatch == 0)
   }
 
   test("fast_token_count participates in whole-stage codegen") {
-    TokenCount.register(spark)
     val docs = graft.core.Tables.table(spark, sfDir, "documents")
-    val plan = docs.select(TokenCount.fast_token_count(col("text")))
+    val plan = docs.select(TF.tokenCount(col("text")))
       .queryExecution.executedPlan
     // the '*(n)' prefix in toString marks WholeStageCodegen spans
     assert(plan.toString.contains("*(1) Project [fast_token_count"))
@@ -87,7 +90,6 @@ class FastExprAndIvfSpec extends SparkSuite {
   }
 
   test("fast_cosine is bit-identical to the HOF cosine and codegen'd") {
-    graft.functions.CosineSim.register(spark)
     val emb = graft.core.Tables.table(spark, sfDir, "embeddings")
     val q = emb.filter(col("vec_id") === 7).select("embedding")
       .head().getSeq[Float](0)
@@ -95,7 +97,7 @@ class FastExprAndIvfSpec extends SparkSuite {
       .cast(org.apache.spark.sql.types.ArrayType(
         org.apache.spark.sql.types.FloatType))
     val mismatches = emb.select(
-      Similarity.cosine(col("embedding"), qArr).as("hof"),
+      FunctionTwins.cosine(col("embedding"), qArr).as("hof"),
       graft.functions.CosineSim.fast_cosine(col("embedding"), qArr).as("fast"))
       .filter(col("hof") =!= col("fast")).count()
     assert(mismatches == 0)
@@ -177,7 +179,7 @@ class FastExprAndIvfSpec extends SparkSuite {
     val docs = graft.core.Tables.table(spark, sfDir, "documents")
     val mismatches = docs.select(
       TF.fingerprint(col("text")).as("fast"),
-      TF.fingerprintTreeForm(col("text")).as("tree"))
+      FunctionTwins.fingerprintTreeForm(col("text")).as("tree"))
       .filter(col("fast") =!= col("tree")).count()
     assert(mismatches == 0)
     // edge cases incl. the empty-token artifact of split("") and case folding
@@ -185,7 +187,7 @@ class FastExprAndIvfSpec extends SparkSuite {
       .toDF("text")
     val pairs = edge.select(
       TF.fingerprint(col("text")).as("fast"),
-      TF.fingerprintTreeForm(col("text")).as("tree")).collect()
+      FunctionTwins.fingerprintTreeForm(col("text")).as("tree")).collect()
     pairs.foreach(r => assert(r.getLong(0) == r.getLong(1)))
     // order sensitivity survives the kernel swap
     val ab = edge.sparkSession.range(1).select(
@@ -225,7 +227,7 @@ class FastExprAndIvfSpec extends SparkSuite {
       .unionByName(Seq((100000L, "two words"), (100001L, ""),
         (100002L, "p q p q p q")) // duplicate shingles must not double-vote
         .toDF("doc_id", "text"))
-    val viaAgg = SimHash.simhashTableAggForm(docs, "doc_id", "text")
+    val viaAgg = OperatorTwins.simhashTableAggForm(docs, "doc_id", "text")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val viaKernel = SimHash.simhashTable(docs, "doc_id", "text")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -247,15 +249,43 @@ class FastExprAndIvfSpec extends SparkSuite {
       .withExtensions(new graft.GraftExtensions()(_))
       .getOrCreate()
     try {
+      import fresh.implicits._
       val got = fresh.sql(
         """SELECT fast_token_count(' a b  c ') AS n,
           |  fast_cosine(array(cast(1.0 as float), cast(0.0 as float)),
           |              array(cast(1.0 as float), cast(0.0 as float))) AS cos,
-          |  decimal_dot(array(cast(2.0 as float)), array(cast(3.0 as float))) AS d
+          |  decimal_dot(array(cast(2.0 as float)), array(cast(3.0 as float))) AS d,
+          |  cosine_q8(named_struct('q8', array(cast(3 as tinyint)),
+          |      'scale', cast(1.0 as float), 'norm', cast(3.0 as float)),
+          |    named_struct('q8', array(cast(3 as tinyint)),
+          |      'scale', cast(1.0 as float), 'norm', cast(3.0 as float))) AS q8,
+          |  accent_fold('café') AS folded
           |""".stripMargin).head()
       assert(got.getInt(0) == 3)
       assert(math.abs(got.getDouble(1) - 1.0) < 1e-12)
       assert(math.abs(got.getDouble(2) - 6.0) < 1e-12)
+      assert(math.abs(got.getDouble(3) - 1.0) < 1e-12)
+      assert(got.getString(4) == "cafe")
+      // SQL edge cases of fast_token_count
+      Seq("", "  ", "one", " a  b\tc\nd ").toDF("t")
+        .createOrReplaceTempView("ftc")
+      assert(fresh.sql("SELECT fast_token_count(t) FROM ftc")
+        .as[Int].collect().toSeq == Seq(0, 0, 1, 4))
+      // window_hashes: k must be a literal in [2, 512]; a valid k equals
+      // the Column form
+      Seq(Seq("a", "b", "c", "d", "e")).toDF("w")
+        .createOrReplaceTempView("wh")
+      Seq("size(w)", "1", "513").foreach { k =>
+        intercept[IllegalArgumentException] {
+          fresh.sql(s"SELECT window_hashes(w, $k) FROM wh").collect()
+        }
+      }
+      val viaSql = fresh.sql("SELECT window_hashes(w, 3) FROM wh")
+        .head().getSeq[Long](0)
+      val viaColumn = fresh.table("wh")
+        .select(graft.functions.WindowHashes.window_hashes(col("w"), 3))
+        .head().getSeq[Long](0)
+      assert(viaSql.size == 3 && viaSql == viaColumn)
     } finally {
       SparkSession.setActiveSession(spark)
       SparkSession.setDefaultSession(spark)
@@ -362,7 +392,6 @@ class FastExprAndIvfSpec extends SparkSuite {
         .cast(org.apache.spark.sql.types.ArrayType(
           org.apache.spark.sql.types.ByteType)).as("q8"),
       lit(s).as("scale"), lit(n).as("norm"))
-    graft.functions.CosineSim.register(spark)
     val errs = Similarity.quantizeFrame(emb, "embedding", "_qv")
       .select(abs(graft.functions.CosineQ8.cosine_q8(col("_qv"), qStruct) -
         graft.functions.CosineSim.fast_cosine(col("embedding"),

@@ -47,6 +47,27 @@ class PipelineAndStreamingSpec extends SparkSuite {
     assert(r1.rowsLoaded == r2.rowsLoaded)
   }
 
+  test("resumeFrom evaluates the resumed plan once for all sinks and the count") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_resume").toString
+    val evals = spark.sparkContext.longAccumulator("resume_evals")
+    val bump = udf { (k: Long) => evals.add(1); k }
+    val counted = new TransformStage {
+      val name = "counted"
+      def apply(df: org.apache.spark.sql.DataFrame) =
+        df.withColumn("_k", bump(col("n_nationkey")))
+    }
+    val p = Pipeline.fromParquet(s"$sfDir/nation.parquet")
+      .transform(counted)
+      .load(_.write.mode("overwrite").parquet(s"$dir/out_a"))
+      .load(_.write.mode("overwrite").parquet(s"$dir/out_b"))
+      .checkpointed(dir)
+    p.run(spark)
+    evals.reset()
+    val r = p.resumeFrom(spark, dir, fromStage = 0)
+    assert(r.rowsLoaded == 25L)
+    assert(evals.value == 25L) // each row once, not once per sink + count
+  }
+
   test("streaming windowed counts over events match batch aggregation") {
     // file stream source wants a directory — stage the single parquet file
     val stageDir = java.nio.file.Files.createTempDirectory("graft_stream")

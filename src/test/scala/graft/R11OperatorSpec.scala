@@ -158,7 +158,7 @@ class R11OperatorSpec extends SparkSuite {
     assert(out(1L) == (1L, true) && out(2L) == (1L, false) &&
       out(3L) == (1L, false) && out(4L) == (4L, true))
     val sets = docs.select(col("id"),
-      graft.functions.TextFunctions.shingles(col("t"), 3).as("sh"))
+      graft.operators.MinHashDedup.shingles(col("t"), 3).as("sh"))
     val pairs = SetSimJoin.jaccardSelfJoin(sets, "id", "sh", 0.4)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     // 1-2 identical (J=1 via the intra path); 1-3/2-3 share 5 of 6

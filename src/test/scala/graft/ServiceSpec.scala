@@ -39,8 +39,7 @@ class ServiceSpec extends SparkSuite {
       Seq("value"), threshold = 2.0))
     assert(anom.columns.contains("_meta_is_anomaly"))
 
-    val timed = Facade.handleTimed(Facade.FilterValues("region", "r_name"))
-    assert(timed.rows.size == 5 && timed.queryTimeMs >= 0)
+    assert(Facade.handle(Facade.FilterValues("region", "r_name")).count() == 5)
   }
   import spark.implicits._
 
@@ -310,6 +309,22 @@ class ServiceSpec extends SparkSuite {
     assert(Echarts.suggestChartType(nation, "missing", "n_regionkey") == "bar")
     val orders = graft.core.Tables.table(spark, sfDir, "orders")
     assert(Echarts.suggestChartType(orders, "o_orderdate", "o_totalprice") == "line")
+  }
+
+  test("echarts: NaN and infinite values render as JSON null") {
+    import graft.service.MiniJson
+    import graft.viz.Echarts
+    val data = Seq(
+      Map[String, Any]("k" -> "a", "v" -> Double.NaN),
+      Map[String, Any]("k" -> "b", "v" -> Double.NegativeInfinity),
+      Map[String, Any]("k" -> "c\"\u0001", "v" -> 2.5))
+    // bare NaN/Infinity would not parse
+    val parsed = MiniJson.parse(Echarts.bar(data, "k", "v").render)
+      .asInstanceOf[Map[String, Any]]
+    def field(m: Any, k: String) = m.asInstanceOf[Map[String, Any]](k)
+    assert(field(parsed("xAxis"), "data") == List("a", "b", "c\"\u0001"))
+    val series = parsed("series").asInstanceOf[List[Any]].head
+    assert(field(series, "data") == List(null, null, 2.5))
   }
 
   test("HTTP facade serves the reference's documented dashboard query E2E") {

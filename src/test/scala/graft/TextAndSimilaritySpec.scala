@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.functions.{Similarity, TextFunctions => TF}
+import graft.functions.{CosineSim, Similarity, TextFunctions => TF}
 import graft.operators.{MinHashDedup, NgramJaccard, SimHash}
 
 class TextAndSimilaritySpec extends SparkSuite {
@@ -167,8 +167,8 @@ class TextAndSimilaritySpec extends SparkSuite {
       (1L, "the quick brown fox jumps over the lazy dog again"),
       (2L, "the quick brown fox jumps over the lazy dog again")
     ).toDF("id", "text")
-    val hs = df.select(SimHash.simhash(MinHashDedup.shingles(col("text"), 3)).as("h"))
-      .as[Long].collect()
+    val hs = SimHash.simhashTable(df, "id", "text").orderBy("id")
+      .select("simhash").as[Long].collect()
     assert(hs(0) == hs(1))
     val d = Seq((hs(0), hs(1))).toDF("a", "b")
       .select(SimHash.hamming(col("a"), col("b"))).as[Int].head()
@@ -180,7 +180,7 @@ class TextAndSimilaritySpec extends SparkSuite {
       (Seq(1.0f, 0.0f), Seq(1.0f, 0.0f)),
       (Seq(1.0f, 0.0f), Seq(0.0f, 1.0f))
     ).toDF("a", "b")
-    val got = df.select(round(Similarity.cosine(col("a"), col("b")), 6))
+    val got = df.select(round(CosineSim.fast_cosine(col("a"), col("b")), 6))
       .as[Double].collect().toSeq
     assert(got == Seq(1.0, 0.0))
   }

@@ -95,6 +95,33 @@ object FunctionTwins {
           (acc, x) => rotl1(acc).bitwiseXOR(x))))
       .otherwise(array().cast(ArrayType(LongType)))
   }
+
+  /** The regex spelling `TextFunctions.tokenCount` replaced with the
+    * [[TokenCount]] kernel: count of separator runs + 1 on trimmed text. */
+  private[graft] def tokenCountRegex(text: Column): Column = {
+    val t = trim(regexp_replace(text, "\\s+", " "))
+    when(length(t) === 0, 0)
+      .otherwise(length(t) - length(replace(t, lit(" "), lit(""))) + 1)
+  }
+
+  /** The interpreted-HOF spelling `TextFunctions.fingerprint` replaced. */
+  private[graft] def fingerprintTreeForm(text: Column): Column = {
+    val norm = regexp_replace(trim(lower(text)), "\\s+", " ")
+    aggregate(split(norm, " "), lit(0L), (acc, w) => xxhash64(acc, w))
+  }
+
+  /** The `zip_with` + `aggregate` cosine the [[CosineSim]] kernel replaced
+    * (same left-to-right double accumulation). */
+  private[graft] def dot(a: Column, b: Column): Column =
+    aggregate(zip_with(a, b, (x, y) => x.cast(DoubleType) * y.cast(DoubleType)),
+      lit(0.0), (acc, v) => acc + v)
+
+  private[graft] def norm(a: Column): Column = sqrt(dot(a, a))
+
+  private[graft] def cosine(a: Column, b: Column): Column = {
+    val d = norm(a) * norm(b)
+    when(d === 0, 0.0).otherwise(dot(a, b) / d)
+  }
 }
 
 /** All BPE merge passes over a symbol array in one call — the kernel the

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Reference spellings of operator hot paths: the forms each fast path
@@ -17,6 +17,25 @@ object OperatorTwins {
         when(a.isNotNull && b.isNotNull, concat(a, lit(" "), b)))
     }
     array_distinct(filter(joined, _.isNotNull))
+  }
+
+  /** The explode + vote-aggregate spelling `SimHash.simhashTable`
+    * replaced. */
+  private[graft] def simhashTableAggForm(df: DataFrame, idCol: String,
+      textCol: String, k: Int = 3, bits: Int = 64): DataFrame = {
+    val ex = graft.core.Rebalance.computeDense(df)
+      .select(col(idCol), explode_outer(MinHashDedup.shingles(col(textCol), k)).as("_sh"))
+      .withColumn("_h", xxhash64(col("_sh"))) // hashed once, reused by all bits
+    val votes = (0 until bits).map { b =>
+      sum(when(col("_h").isNull, -1L)
+        .when(shiftright(col("_h"), b).bitwiseAND(lit(1L)) === 1L, 1L)
+        .otherwise(-1L)).as(s"_v$b")
+    }
+    val agged = ex.groupBy(col(idCol)).agg(votes.head, votes.tail: _*)
+    val sig = (0 until bits)
+      .map(b => when(col(s"_v$b") > 0, shiftleft(lit(1L), b)).otherwise(lit(0L)))
+      .reduce((a, c) => a.bitwiseOR(c))
+    agged.select(col(idCol), sig.as("simhash"))
   }
 
   /** The boxed-tree spelling `IsolationForest.score` replaced. */
