@@ -21,8 +21,11 @@ medians differ by more than the base's interquartile range, and the change
 had no more incorrect or missing runs, and no more failed operations, than
 the base. Each metric also gets a no-regression verdict against its
 BENCHMARK.json bound (see `verdict`), the rule a change that claims no gain
-is judged by. Every run's JSON line is appended to .bench_build/ab/runs.jsonl.
-Nothing under perfbench/ is changed.
+is judged by. Under the table it prints each side's median hypervisor steal
+share, read from each run's stamp line, since steal moves wall-clock and CPU
+figures. Every run's JSON line, with its steal share and start load average,
+is appended to .bench_build/ab/runs.jsonl. Nothing under perfbench/ is
+changed.
 """
 import argparse
 import json
@@ -64,16 +67,31 @@ def build(tree):
                    cwd=tree, check=True)
 
 
+def contention(stdout):
+    """The box's contention during a run: `steal_share` and `loadavg_start`
+    from the `run: {...}` stamp line perfbench prints; None where absent."""
+    for line in stdout.splitlines():
+        if line.startswith("run: "):
+            try:
+                stamp = json.loads(line[len("run: "):])
+            except json.JSONDecodeError:
+                break
+            return {k: stamp.get(k) for k in ("steal_share", "loadavg_start")}
+    return {"steal_share": None, "loadavg_start": None}
+
+
 def run_once(tree, workload, seed):
-    """The run's JSON line, or None when the run did not produce one."""
+    """The run's JSON line, or None when the run did not produce one, and
+    the run's contention."""
     p = subprocess.run([sys.executable, "perfbench/run.py", "--workload", workload,
                         "--seed", str(seed), "--seconds", "30", "--trace", "0"],
                        cwd=tree, capture_output=True, text=True)
     last = p.stdout.strip().splitlines()[-1:] if p.stdout.strip() else []
     try:
-        return json.loads(last[0]) if p.returncode == 0 and last else None
+        out = json.loads(last[0]) if p.returncode == 0 and last else None
     except json.JSONDecodeError:
-        return None
+        out = None
+    return out, contention(p.stdout)
 
 
 def summary(values):
@@ -117,15 +135,18 @@ def main():
     results = {"base": [], "change": []}
     failures = {"base": 0, "change": 0}  # runs without a result, or incorrect
     failed_ops = {"base": 0, "change": 0}
+    steal = {"base": [], "change": []}
     for i in range(a.pairs):
         seed = SEEDS[i % len(SEEDS)]
         order = ["base", "change"] if i % 2 == 0 else ["change", "base"]
         pair = {}
         for side in order:
-            out = run_once(trees[side], a.workload, seed)
+            out, box = run_once(trees[side], a.workload, seed)
             with open(os.path.join(AB, "runs.jsonl"), "a") as f:
                 f.write(json.dumps({"workload": a.workload, "side": side, "base": sha,
-                                    "pair": i, "seed": seed, "result": out}) + "\n")
+                                    "pair": i, "seed": seed, "result": out, **box}) + "\n")
+            if box["steal_share"] is not None:
+                steal[side].append(box["steal_share"])
             failures[side] += out is None or not out["correct"]
             failed_ops[side] += out["failed"] if out else 0
             pair[side] = out
@@ -158,6 +179,9 @@ def main():
         print(f"{name:<14} {f'{bm:.3f} [{bq1:.3f}, {bq3:.3f}]':<28} "
               f"{f'{cm:.3f} [{cq1:.3f}, {cq3:.3f}]':<28} {cm / bm:>6.3f} {wins:>3}/{a.pairs:<2}  "
               f"{'met' if rule else 'not met'}")
+    print("hypervisor steal share, median over runs: " + ", ".join(
+        f"{side} {statistics.median(v):.4f}" if v else f"{side} n/a"
+        for side, v in steal.items()))
     print("no-regression rule (worse by at most the bound; unresolved when the base "
           "IQR/median exceeds it):")
     for name, direction in better.items():

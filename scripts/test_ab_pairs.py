@@ -1,10 +1,10 @@
-"""Unit tests of ab_pairs' no-regression verdict.
+"""Unit tests of ab_pairs' no-regression verdict and stamp parser.
 
   python3 -m unittest discover -s scripts
 """
 import unittest
 
-from ab_pairs import verdict
+from ab_pairs import contention, verdict
 
 
 class VerdictTest(unittest.TestCase):
@@ -45,6 +45,22 @@ class VerdictTest(unittest.TestCase):
     def test_a_single_pair(self):
         self.assertEqual(verdict([10.0], [11.0], 0.2, "lower"), "within bound")
         self.assertEqual(verdict([10.0], [13.0], 0.2, "lower"), "over bound")
+
+
+class ContentionTest(unittest.TestCase):
+    def test_reads_the_stamp_line(self):
+        out = ("== graft perfbench: dashboard, seed 7, 30 s\n"
+               'run: {"git_sha": "abc", "loadavg_start": 1.25, "nproc": 4, '
+               '"steal_share": 0.0123}\n'
+               "output check: PASS (0 of 160 operations failed)\n"
+               '{"correct": true, "metrics": {}}\n')
+        self.assertEqual(contention(out), {"steal_share": 0.0123, "loadavg_start": 1.25})
+
+    def test_missing_or_broken_stamp_reads_none(self):
+        none = {"steal_share": None, "loadavg_start": None}
+        self.assertEqual(contention(""), none)
+        self.assertEqual(contention("run: {not json\n"), none)
+        self.assertEqual(contention('run: {"nproc": 4}\n'), none)
 
 
 if __name__ == "__main__":

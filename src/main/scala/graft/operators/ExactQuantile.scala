@@ -107,9 +107,8 @@ object ExactQuantile {
     // exchange here is paid per round — re-scanning an under-split small
     // file beats re-shuffling it every round (measured at sf1 min-of-2:
     // q_exact_kth 5.6 → 11.3 s, q_equidepth 7.1 → 13.9 s WITH the
-    // rebalance; reverted). Rebalance pays only where the frame is
-    // persisted once and reused (profileTable) or feeds a compute-dense
-    // kernel under ONE action.
+    // rebalance; reverted). Rebalance pays only where the frame feeds a
+    // compute-dense kernel under ONE action.
     finiteVals(df, v).select(v.as("_v"))
   }
 

@@ -1,6 +1,6 @@
 package graft.query
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -172,12 +172,18 @@ object QueryService {
     * re-scans), plus ONE narrow two-phase pass for the exact distinct
     * counts ([[distinctCounts]] — kept out of the stats aggregate because
     * N countDistincts there ride Catalyst's Expand, an N×-row shuffle).
-    * The tiny stats row comes back to the driver and is inlined as
-    * literals. Value lists for small-categorical columns (n_distinct
-    * already proven ≤ cap) come from ONE more aggregate holding a
-    * collect_set per qualifying column — each buffer bounded by the proven
-    * cardinality, never an unbounded high-card collect. Profiling a
-    * 50-column table costs exactly 3 scans total, not 2 jobs per column. */
+    * Value lists for small-categorical columns (n_distinct already proven
+    * ≤ cap) come from ONE more aggregate holding a collect_set per
+    * qualifying column — each buffer bounded by the proven cardinality,
+    * never an unbounded high-card collect. Each pass reads only the
+    * profiled columns from the source and nothing is persisted: at scale a
+    * cached copy of those columns is the memory risk, the three pruned
+    * scans are not. Profiling a 50-column table costs exactly 3 scans
+    * total, not 2 jobs per column.
+    *
+    * The result is a local relation of the collected values, so rendering
+    * it (the envelope's `to_json`) folds on the driver: no job, no
+    * generated class. */
   def profileTable(df: DataFrame, columns: Seq[String], sampleCap: Int = 20,
       highCardThreshold: Long = 100): DataFrame = {
     import graft.core.Semantics
@@ -189,19 +195,7 @@ object QueryService {
       Info(c, dt, dt.isInstanceOf[NumericType],
         dt == TimestampType || dt == TimestampNTZType || dt == DateType)
     }
-    // ONE projected, rebalanced, persisted frame serves all three passes
-    // (stats aggregate, distinct counts, categorical samples): the three
-    // passes are separate ACTIONS, so without this the table is decoded
-    // from parquet three times — and on an under-split scan (single-file /
-    // single-row-group input) each pass's map side runs on ONE task. The
-    // projection prunes unprofiled columns before the rebalance exchange
-    // (guide §2.3: project before the exchange); the cache is released
-    // before returning (the result frame is built purely from collected
-    // literals, so it never references `base`).
-    val shared = graft.core.Rebalance
-      .computeDense(df.select(columns.map(col): _*))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    val base = df.select(columns.map(col): _*)
     val aggs = count(lit(1)).as("__total") +: infos.flatMap { i =>
       val cc = col(i.c)
       val missing = Semantics.isMissing(cc)
@@ -220,7 +214,7 @@ object QueryService {
          else if (!i.isNum) max(cc).cast(StringType)
          else lit(null).cast(StringType)).as(s"${i.c}__maxt"))
     }
-    val row = shared.agg(aggs.head, aggs.tail: _*).head() // the one stats job
+    val row = base.agg(aggs.head, aggs.tail: _*).head() // the one stats job
     val total = row.getAs[Long]("__total")
     // exact distinct counts come from their own narrow two-phase pass
     // ([[distinctCounts]]): keeping N countDistincts inside the stats
@@ -228,7 +222,7 @@ object QueryService {
     // an N×-wide shuffle, the worst super-linear growth in the suite
     // null n_distinct = uncountable (MapType): absent from the map, so the
     // sample/role guards below can never treat it as proven-small
-    val ndByCol: Map[String, Long] = distinctCounts(shared, columns).collect()
+    val ndByCol: Map[String, Long] = distinctCounts(base, columns).collect()
       .flatMap(r => if (r.isNullAt(1)) None
         else Some(r.getString(0) -> r.getLong(1))).toMap
     // Value lists for ALL small-categorical columns come from ONE second
@@ -252,16 +246,14 @@ object QueryService {
             when(!Semantics.isMissing(cc), cc.cast(StringType)))), "|")
             .as(s"${i.c}__samples")
         }
-        val r = shared.agg(sa.head, sa.tail: _*).head()
+        val r = base.agg(sa.head, sa.tail: _*).head()
         sampled.map(i => i.c -> r.getAs[String](s"${i.c}__samples")).toMap
       }
     val rows = infos.map { i =>
       val nulls = row.getAs[Long](s"${i.c}__nulls")
       val nd = ndByCol.getOrElse(i.c, 0L)
-      def dLit(s: String): Column = Option(row.getAs[Any](s"${i.c}__$s"))
-        .fold(lit(null).cast(DoubleType))(v => lit(v.toString.toDouble))
-      def sLit(s: String): Column = Option(row.getAs[String](s"${i.c}__$s"))
-        .fold(lit(null).cast(StringType))(lit(_))
+      def dbl(s: String): java.lang.Double = Option(row.getAs[Any](s"${i.c}__$s"))
+        .map(v => java.lang.Double.valueOf(v.toString)).orNull
       val idLike = i.c.toLowerCase.endsWith("_id") ||
         i.c.toLowerCase.endsWith("key")
       val role =
@@ -270,21 +262,24 @@ object QueryService {
         else if (i.isTs) "datetime"
         else if (nd <= highCardThreshold) "dimension"
         else "text"
-      val base = spark.range(1).select(
-        lit(i.c).as("column_name"),
-        lit(graft.core.Types.fromSpark(i.dt).name).as("dtype"),
-        lit(total).as("total_count"), lit(nulls).as("null_count"),
-        lit(nd).as("n_distinct"),
-        lit(nd > highCardThreshold).as("high_cardinality"),
-        lit(role).as("suggested_role"),
-        dLit("min").as("min_value"), dLit("max").as("max_value"),
-        dLit("mean").as("mean_value"),
-        sLit("mint").as("min_text"), sLit("maxt").as("max_text"))
-      base.withColumn("sample_values",
-        sampleValues.get(i.c)
-          .fold(lit(null).cast(StringType))(lit(_)))
+      Row(i.c, graft.core.Types.fromSpark(i.dt).name, total, nulls, nd,
+        nd > highCardThreshold, role, dbl("min"), dbl("max"), dbl("mean"),
+        row.getAs[String](s"${i.c}__mint"), row.getAs[String](s"${i.c}__maxt"),
+        sampleValues.get(i.c).orNull)
     }
-    rows.reduce(_ unionByName _)
-    } finally { shared.unpersist(); () }
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), ProfileSchema)
   }
+
+  private val ProfileSchema = StructType(
+    Seq("column_name" -> StringType, "dtype" -> StringType,
+      "total_count" -> LongType, "null_count" -> LongType,
+      "n_distinct" -> LongType, "high_cardinality" -> BooleanType,
+      "suggested_role" -> StringType).map { case (n, t) =>
+      StructField(n, t, nullable = false)
+    } ++
+    Seq("min_value" -> DoubleType, "max_value" -> DoubleType,
+      "mean_value" -> DoubleType, "min_text" -> StringType,
+      "max_text" -> StringType, "sample_values" -> StringType).map {
+      case (n, t) => StructField(n, t)
+    })
 }

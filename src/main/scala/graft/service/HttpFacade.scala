@@ -3,8 +3,8 @@ package graft.service
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets.UTF_8
-import org.apache.spark.sql.DataFrame
-import graft.query.{AggregationSpec, Filter, Metric}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.query.{AggregationSpec, BoundLiterals, Filter, Metric}
 
 /** Loopback JSON-over-HTTP server for the analytics facade — the consumption
   * mode the reference ships as FastAPI routes (`/root/reference/src/api/
@@ -31,13 +31,22 @@ import graft.query.{AggregationSpec, Filter, Metric}
   * Each response carries `X-Graft-Cache: hit|miss`; a hit's body equals the
   * miss's except for `query_time_ms`, which is the hit's own serve time.
   * Every other route runs each time.
+  *
+  * While a server runs, the session it serves plans file scans through
+  * [[BoundLiterals]]: a numeric comparison operand in a scan's filter or
+  * projection is read by reference, so a miss that only changes such a
+  * value reuses the compiled classes of the first request of its shape.
   */
 final class HttpFacade(tables: Facade.Tables, maxRows: Int = 100000) {
   private var server: HttpServer = _
   private var pool: java.util.concurrent.ExecutorService = _
   private val cache = new ResponseCache(Runtime.getRuntime.maxMemory / 32)
+  /** The session this server put [[BoundLiterals]] on, to take it off again. */
+  private var boundOn: Option[SparkSession] = None
 
   def start(port: Int = 0): Int = {
+    val spark = SparkSession.active
+    if (BoundLiterals.install(spark)) boundOn = Some(spark)
     server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
     server.createContext("/api/analytics/dashboard/query", postCtx(handleQuery))
     server.createContext("/api/analytics/dashboard/drill-down", postCtx(handleDrillDown))
@@ -65,6 +74,8 @@ final class HttpFacade(tables: Facade.Tables, maxRows: Int = 100000) {
   def stop(): Unit = {
     if (server != null) server.stop(0)
     if (pool != null) { pool.shutdown(); () }
+    boundOn.foreach(BoundLiterals.uninstall)
+    boundOn = None
   }
 
   // ---- request parsing (reference body shapes) ----------------------------
@@ -460,10 +471,11 @@ final class HttpFacade(tables: Facade.Tables, maxRows: Int = 100000) {
       request: Map[String, _])(df: => DataFrame): Unit = {
     val t0 = System.nanoTime()
     var queryMs = 0L
+    // timed from before the frame is built: a route's eager jobs (the
+    // schema route's profile passes, the anomalies route's stats) run there
     def run(): Array[Byte] = {
-      val d = df
       val t = System.nanoTime()
-      val head = envelopeHead(d)
+      val head = envelopeHead(df)
       queryMs = (System.nanoTime() - t) / 1000000L
       head
     }

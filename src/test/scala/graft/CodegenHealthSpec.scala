@@ -192,4 +192,13 @@ class CodegenHealthSpec extends SparkSuite {
     }
     assert(interpreted == compiled)
   }
+
+  test("a bound comparison literal compiles") {
+    val lineitem = graft.core.Tables.table(spark, sfDir, "lineitem")
+    val added = graft.query.BoundLiterals.install(spark)
+    try assertCompiles("bound(") {
+      lineitem.filter(col("l_quantity") > 10.0 && col("l_linenumber") >= 2)
+        .select(col("l_orderkey"))
+    } finally if (added) graft.query.BoundLiterals.uninstall(spark)
+  }
 }

@@ -146,6 +146,40 @@ class PipelineAndStreamingSpec extends SparkSuite {
     assert(scans == 0, s"expected a scan-free report plan, got $scans\n$planWide")
   }
 
+  test("profileTable persists nothing and renders without a job") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerBlockUpdated, SparkListenerJobStart}
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val rddBlocks = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+      override def onBlockUpdated(b: SparkListenerBlockUpdated): Unit =
+        if (b.blockUpdatedInfo.blockId.isRDD) { rddBlocks.incrementAndGet(); () }
+    }
+    val sc = spark.sparkContext
+    val cache = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    val cacheWasEmpty = cache.isEmpty
+    org.apache.spark.GraftTestListenerBus.waitUntilEmpty(sc)
+    sc.addSparkListener(listener)
+    try {
+      val prof = graft.query.QueryService.profileTable(
+        graft.core.Tables.table(spark, sfDir, "events"),
+        Seq("event_id", "event_type", "value", "ts"))
+      org.apache.spark.GraftTestListenerBus.waitUntilEmpty(sc)
+      assert(rddBlocks.get == 0, "the profile cached a block")
+      assert(!cacheWasEmpty || cache.isEmpty, "the profile left a cache entry")
+      jobs.set(0)
+      // the dashboard envelope's rendering of the report
+      val rendered = prof.select(to_json(struct(prof.columns.map(col): _*)))
+        .limit(100001).collect()
+      org.apache.spark.GraftTestListenerBus.waitUntilEmpty(sc)
+      assert(rendered.length == 4)
+      assert(jobs.get == 0, s"rendering the profile ran ${jobs.get} jobs")
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("intermediate store: keyed save/load with meta sidecar, list, cleanup") {
     import graft.io.IntermediateStore
     val base = java.nio.file.Files.createTempDirectory("graft_store").toString

@@ -511,6 +511,27 @@ class ServiceSpec extends SparkSuite {
     } finally http.stop()
   }
 
+  test("query_time_ms counts the jobs that build a route's frame") {
+    import graft.service.{Facade, HttpFacade, MiniJson}
+    // one row in one partition: every pass over the frame sleeps 300 ms
+    val slow = udf { (x: Long) => Thread.sleep(300); x }
+    val frame = spark.range(0, 1, 1, 1).select(slow(col("id")).as("v"))
+    val http = new HttpFacade(Facade.Tables(_ => frame))
+    val port = http.start()
+    try {
+      val conn = new java.net.URL(
+        s"http://127.0.0.1:$port/api/analytics/dashboard/schema?table=t")
+        .openConnection().asInstanceOf[java.net.HttpURLConnection]
+      assert(conn.getResponseCode == 200)
+      val env = MiniJson.parse(new String(
+        conn.getInputStream.readAllBytes(), "UTF-8"))
+        .asInstanceOf[Map[String, Any]]
+      assert(env("row_count") == 1L)
+      // the profile's passes run while the frame is built, before rendering
+      assert(env("query_time_ms").asInstanceOf[Long] >= 300L, env)
+    } finally http.stop()
+  }
+
   test("concurrent clients: 12 parallel mixed requests return correct, " +
       "client-specific results (no cross-request bleed)") {
     import graft.service.{Facade, HttpFacade, MiniJson}
