@@ -1,7 +1,8 @@
 package graft.io
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
 import graft.service.MiniJson
 
 /** Keyed intermediate storage (`/root/reference/src/storage/
@@ -14,8 +15,9 @@ import graft.service.MiniJson
   * the same FS client. (Presigned URLs are an S3-console concern the
   * library does not reproduce; SURVEY §2.12.)
   *
-  * Row counts come from the parquet footers after the write (metadata-only,
-  * no second scan). */
+  * The sidecar's row count comes from the write itself: an `observe()`
+  * count rides the write job, so a save launches the jobs of a plain
+  * parquet write and no read-back. */
 final class IntermediateStore(spark: SparkSession, basePath: String) {
 
   final case class Meta(rows: Long, stage: String, transformers: Seq[String],
@@ -30,9 +32,10 @@ final class IntermediateStore(spark: SparkSession, basePath: String) {
     * returns the row count recorded in the sidecar. */
   def save(key: String, df: DataFrame, stage: String = "",
       transformers: Seq[String] = Nil): Long = {
-    df.write.mode("overwrite").parquet(dataPath(key).toString)
-    // footer-count: parquet row groups carry exact counts — no data scan
-    val rows = spark.read.parquet(dataPath(key).toString).count()
+    val written = Observation()
+    df.observe(written, count(lit(1)).as("rows"))
+      .write.mode("overwrite").parquet(dataPath(key).toString)
+    val rows = written.get("rows").asInstanceOf[Long]
     val meta = MiniJson.render(Map(
       "rows" -> rows, "stage" -> stage,
       "transformers" -> transformers, "columns" -> df.columns.toSeq))

@@ -260,12 +260,4 @@ object Sinks {
       bucketCols: Seq[String], numBuckets: Int): Unit =
     graft.core.Bucketing.writeBucketed(df, table, bucketCols, numBuckets,
       Some(path))
-
-  /** Multi-destination load (`pipeline_core.py:82-134`): same frame to N
-    * sinks; cache once so the upstream computes once, then N write actions. */
-  def multi(df: DataFrame, writes: Seq[DataFrame => Unit]): Unit = {
-    val cached = df.cache()
-    try writes.foreach(w => w(cached))
-    finally cached.unpersist()
-  }
 }

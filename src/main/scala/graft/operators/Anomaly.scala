@@ -113,6 +113,18 @@ object AnomalyDetector {
       .drop("_z", "_i", "_votes")
   }
 
+  /** The reference's three named methods behind one switch — the anomalies
+    * route and the `anomaly_detector` pipeline stage both dispatch here.
+    * `threshold` is the z-score threshold (`statistical`), the IQR factor
+    * (`iqr`), or both (`combined`). */
+  def byMethod(df: DataFrame, method: String, fields: Seq[String],
+      threshold: Double): DataFrame = method match {
+    case "statistical" => zscore(df, fields, threshold)
+    case "iqr"         => iqr(df, fields, threshold)
+    case "combined"    => combined(df, fields, threshold, threshold)
+    case other => throw new IllegalArgumentException(s"unknown method $other")
+  }
+
   private def flagAny(df: DataFrame, fields: Seq[String], param: Double,
       method: String): DataFrame = {
     val stats = collectStats(df, fields) // one stats job for flag + reasons

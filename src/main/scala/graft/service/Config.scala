@@ -98,15 +98,8 @@ object Config {
     }
     case AnomalyDetectorConf(m, f, th) => new TransformStage {
       def name = s"anomaly_detector($m)"
-      def apply(df: DataFrame): DataFrame = {
-        val fields = if (f.nonEmpty) f else AnomalyDetector.numericFields(df)
-        m match {
-          case "statistical" => AnomalyDetector.zscore(df, fields, th)
-          case "iqr"         => AnomalyDetector.iqr(df, fields, th)
-          case "combined"    => AnomalyDetector.combined(df, fields)
-          case other => throw new IllegalArgumentException(s"unknown method $other")
-        }
-      }
+      def apply(df: DataFrame): DataFrame = AnomalyDetector.byMethod(df, m,
+        if (f.nonEmpty) f else AnomalyDetector.numericFields(df), th)
     }
     case MetadataToColumnsConf() => MetadataToColumns()
     case SchemaInferrerConf(_) => new TransformStage {

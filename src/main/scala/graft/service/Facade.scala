@@ -65,13 +65,6 @@ object Facade {
         case other => throw new IllegalArgumentException(s"unknown dashboard $other")
       }
     case Anomalies(t, method, fields, thr) =>
-      import graft.operators.AnomalyDetector
-      val df = tables.resolve(t)
-      method match {
-        case "statistical" => AnomalyDetector.zscore(df, fields, thr)
-        case "iqr"         => AnomalyDetector.iqr(df, fields, thr)
-        case "combined"    => AnomalyDetector.combined(df, fields, thr, thr)
-        case other => throw new IllegalArgumentException(s"unknown method $other")
-      }
+      graft.operators.AnomalyDetector.byMethod(tables.resolve(t), method, fields, thr)
   }
 }

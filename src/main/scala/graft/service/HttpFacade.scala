@@ -172,9 +172,7 @@ final class HttpFacade(tables: Facade.Tables, maxRows: Int = 100000) {
       table = asStr(body("table")),
       method = asStr(body.getOrElse("method", "statistical")),
       fields = asList(body.getOrElse("fields", Nil)).map(asStr),
-      threshold = body.get("threshold").map {
-        case d: Double => d; case l: Long => l.toDouble; case _ => 3.0
-      }.getOrElse(3.0)))(tables)
+      threshold = asDouble(body.getOrElse("threshold", 3.0), 3.0)))(tables)
 
   private def handleFilterValues(q: Map[String, String]): DataFrame =
     Facade.handle(Facade.FilterValues(
@@ -308,11 +306,12 @@ final class HttpFacade(tables: Facade.Tables, maxRows: Int = 100000) {
 
   // ---- staged mode (main.py:183-330) --------------------------------------
 
-  /** One staged pipeline's lifecycle; stage outputs checkpoint through
-    * [[graft.io.IntermediateStore]] so each HTTP call is independent (the
-    * reference's staged mode persists between calls the same way). */
+  /** One staged pipeline's lifecycle: its [[graft.pipeline.Pipeline]], built
+    * at init, runs one `step` per HTTP call off the boundaries it keeps
+    * under `storeDir`, so each call is independent (the reference's staged
+    * mode persists between calls the same way). */
   private final class StagedState(val name: String,
-      val cfg: Config.PipelineConfig, val storeDir: String) {
+      val pipeline: graft.pipeline.Pipeline, val storeDir: String) {
     val createdAt: Long = System.currentTimeMillis()
     @volatile var updatedAt: Long = createdAt
     @volatile var extractStatus = "pending"
@@ -325,6 +324,17 @@ final class HttpFacade(tables: Facade.Tables, maxRows: Int = 100000) {
       else if (loadStatus == "completed") "completed"
       else if (extractStatus == "pending") "initialized"
       else "in_progress"
+    /** Sets `stage`'s status and, for extract and transform, its records. */
+    def mark(stage: String, status: String, records: Option[Long] = None): Unit = {
+      stage match {
+        case "extract" =>
+          extractStatus = status; extractRecords = records.orElse(extractRecords)
+        case "transform" =>
+          transformStatus = status; transformRecords = records.orElse(transformRecords)
+        case _ => loadStatus = status
+      }
+      updatedAt = System.currentTimeMillis()
+    }
   }
 
   private val stagedPipelines =
@@ -338,7 +348,7 @@ final class HttpFacade(tables: Facade.Tables, maxRows: Int = 100000) {
       val parsed = asMap(MiniJson.parse(body))
       val id = java.util.UUID.randomUUID().toString
       val st = new StagedState(asStr(parsed.getOrElse("name", "pipeline")),
-        parsePipelineConfig(parsed), s"/tmp/graft_staged/$id")
+        Config.build(parsePipelineConfig(parsed)), s"/tmp/graft_staged/$id")
       stagedPipelines.put(id, st)
       send(ex, 200, s"""{"pipeline_id":"$id","mode":"staged",""" +
         s""""status":"initialized","message":"staged pipeline created"}""")
@@ -351,51 +361,23 @@ final class HttpFacade(tables: Facade.Tables, maxRows: Int = 100000) {
 
   private def runStage(id: String, st: StagedState, stage: String): String = {
     val spark = org.apache.spark.sql.SparkSession.active
-    val store = new graft.io.IntermediateStore(spark, st.storeDir)
     val t0 = System.nanoTime()
-    def done(records: Option[Long]): String = {
-      st.updatedAt = System.currentTimeMillis()
-      val secs = (System.nanoTime() - t0) / 1e9
-      s"""{"pipeline_id":"$id","stage":"$stage","status":"completed"""" +
-        records.fold("")(n => s""","records":$n""") +
-        f""","duration_seconds":$secs%.3f,"message":"$stage completed"}"""
-    }
-    try stage match {
-      case "extract" =>
-        val df = Config.sourceFn(st.cfg.source)(spark)
-        val n = store.save("extracted", df, "extract")
-        st.extractStatus = "completed"; st.extractRecords = Some(n)
-        done(Some(n))
-      case "transform" =>
+    try {
+      if (stage == "transform")
         require(st.extractStatus == "completed", "extract has not run")
-        val (df, _) = store.load("extracted")
-        val stages = st.cfg.transformers.map(Config.stageFor)
-        val out = stages.foldLeft(df)((d, s) => s(d))
-        val n = store.save("transformed", out, "transform",
-          stages.map(_.name))
-        st.transformStatus = "completed"; st.transformRecords = Some(n)
-        done(Some(n))
-      case "load" =>
+      if (stage == "load")
         require(st.transformStatus == "completed" ||
-          (st.cfg.transformers.isEmpty && st.extractStatus == "completed"),
+          (st.pipeline.stageNames.isEmpty && st.extractStatus == "completed"),
           "transform has not run")
-        val key = if (st.cfg.transformers.isEmpty) "extracted" else "transformed"
-        val (df, _) = store.load(key)
-        val cached = df.cache()
-        try st.cfg.destinations.map(Config.sinkFn).foreach(_(cached))
-        finally { cached.unpersist(); () }
-        st.loadStatus = "completed"
-        done(st.transformRecords.orElse(st.extractRecords))
-      case other =>
-        throw new IllegalArgumentException(s"unknown stage $other")
+      val n = st.pipeline.step(spark,
+        new graft.io.IntermediateStore(spark, st.storeDir), stage)
+      st.mark(stage, "completed", Some(n))
+      val secs = (System.nanoTime() - t0) / 1e9
+      s"""{"pipeline_id":"$id","stage":"$stage","status":"completed",""" +
+        f""""records":$n,"duration_seconds":$secs%.3f,"message":"$stage completed"}"""
     } catch {
       case e: Throwable =>
-        stage match {
-          case "extract" => st.extractStatus = "failed"
-          case "transform" => st.transformStatus = "failed"
-          case _ => st.loadStatus = "failed"
-        }
-        st.updatedAt = System.currentTimeMillis()
+        st.mark(stage, "failed")
         throw e
     }
   }

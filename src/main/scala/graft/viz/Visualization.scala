@@ -110,23 +110,6 @@ object Visualization {
         min(col(cfg.y.get)).as("min"), max(col(cfg.y.get)).as("max"))
     case other => throw new IllegalArgumentException(s"unknown chart $other")
   }
-
-  /** ECharts-style config templating (echarts_generator.py — pure config
-    * assembly over pre-aggregated rows, no computation). */
-  def echartsConfig(cfg: ChartConfig, rows: Seq[(String, Double)]): String = {
-    val cats = rows.map(_._1).map(s => "\"" + s.replace("\"", "\\\"") + "\"")
-      .mkString("[", ",", "]")
-    val vals = rows.map(_._2).mkString("[", ",", "]")
-    cfg.chartType match {
-      case "pie" =>
-        val data = rows.map { case (k, v) =>
-          s"""{"name":"${k.replace("\"", "\\\"")}","value":$v}"""
-        }.mkString("[", ",", "]")
-        s"""{"series":[{"type":"pie","data":$data}]}"""
-      case t =>
-        s"""{"xAxis":{"type":"category","data":$cats},"yAxis":{"type":"value"},"series":[{"type":"$t","data":$vals}]}"""
-    }
-  }
 }
 
 /** Insight-generation profile text (SURVEY §2.11; `insight_generator.py:

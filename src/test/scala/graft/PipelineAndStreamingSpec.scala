@@ -204,6 +204,42 @@ class PipelineAndStreamingSpec extends SparkSuite {
     assert(store.listKeys().isEmpty)
   }
 
+  test("intermediate store: a save counts its rows inside the write job") {
+    import graft.io.IntermediateStore
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val base = java.nio.file.Files.createTempDirectory("graft_store_jobs").toString
+    val store = new IntermediateStore(spark, base)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    val sc = spark.sparkContext
+    def shuffled = graft.core.Tables.table(spark, sfDir, "lineitem")
+      .dropDuplicates("l_orderkey")
+    val want = shuffled.count()
+    def jobsOf[T](f: => T): (Int, T) = {
+      org.apache.spark.GraftTestListenerBus.waitUntilEmpty(sc)
+      jobs.set(0)
+      val out = f
+      org.apache.spark.GraftTestListenerBus.waitUntilEmpty(sc)
+      (jobs.get, out)
+    }
+    sc.addSparkListener(listener)
+    try {
+      val (plain, _) = jobsOf(shuffled.write.mode("overwrite").parquet(s"$base/plain"))
+      val (saved, rows) = jobsOf(store.save("deduped", shuffled))
+      assert(saved == plain, s"save ran $saved jobs, a plain write $plain")
+      assert(rows == want && store.load("deduped")._2.get.rows == want)
+    } finally sc.removeSparkListener(listener)
+    for ((key, empty) <- Seq("filtered" -> shuffled.filter(lit(false)),
+        "limited" -> shuffled.limit(0))) {
+      assert(store.save(key, empty) == 0L)
+      assert(store.load(key)._2.get.rows == 0L)
+    }
+  }
+
   test("incremental state: second scan with same files yields no new rows") {
     import graft.io.IncrementalState
     val (df1, st1) = IncrementalState.scanNew(spark, s"$sfDir/region.parquet",
