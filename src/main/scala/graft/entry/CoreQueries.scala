@@ -22,16 +22,21 @@ object CoreQueries {
 
   val gates: Seq[Gate] = Seq(
     Gate("q_filter_eq", (s, dir) =>
-      QueryService.drillDown(t(s, dir, "lineitem"),
+      // (l_orderkey, l_linenumber) is not unique in lineitem, and the
+      // oracle's ORDER BY leaves those ties in file order. drillDown breaks
+      // sort-key ties by the projected columns in their order, so the row's
+      // index in the file goes before l_quantity, and is dropped after.
+      QueryService.drillDown(
+        t(s, dir, "lineitem").withColumn("_row", col("_metadata.row_index")),
         Seq(Filter.Eq("l_returnflag", "R")),
-        Seq("l_orderkey", "l_linenumber", "l_quantity"),
+        Seq("l_orderkey", "l_linenumber", "_row", "l_quantity"),
         // page size must exceed the match count at EVERY verified scale
         // (sf1 holds ~2M 'R' rows): a binding cap would truncate against
         // the uncapped oracle, and a LIMIT-ed oracle isn't deterministic
         // because the sort key ties at the cut. Pagination-with-binding-cap
         // semantics are gated separately by q_drilldown_page.
         sortKey = "l_orderkey", limit = 100000000)
-        .orderBy(col("l_orderkey"), col("l_linenumber")),
+        .drop("_row"),
       """SELECT l_orderkey, l_linenumber, l_quantity FROM lineitem
         |WHERE l_returnflag = 'R' ORDER BY l_orderkey, l_linenumber""".stripMargin),
 

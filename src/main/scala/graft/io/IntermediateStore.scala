@@ -86,7 +86,12 @@ final class IntermediateStore(spark: SparkSession, basePath: String) {
       .sorted
   }
 
-  /** `cleanup` (file_storage.py:194-211): drop everything for a pipeline. */
-  def cleanup(pipelineId: String): Unit =
+  /** `cleanup` (file_storage.py:194-211): drop every key that starts with
+    * `pipelineId` (all of them by default), then the base directory if
+    * nothing is left in it. A base path that is already gone is a no-op. */
+  def cleanup(pipelineId: String = ""): Unit = {
     listKeys(Some(pipelineId)).foreach(delete)
+    val base = new Path(basePath)
+    if (fs.exists(base) && fs.listStatus(base).isEmpty) { fs.delete(base, false); () }
+  }
 }

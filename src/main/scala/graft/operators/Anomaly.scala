@@ -22,10 +22,10 @@ object AnomalyDetector {
     * field has |v−μ|/σ > threshold. Returns df + `_meta_is_anomaly` +
     * method/reason columns, matching metadata_to_columns materialization. */
   def zscore(df: DataFrame, fields: Seq[String], threshold: Double = 3.0): DataFrame =
-    flagAny(df, fields, threshold, "zscore")
+    byMethod(df, "statistical", fields, threshold)
 
   def iqr(df: DataFrame, fields: Seq[String], factor: Double = 1.5): DataFrame =
-    flagAny(df, fields, factor, "iqr")
+    byMethod(df, "iqr", fields, factor)
 
   /** Robust z-score (median/MAD): anomaly if ANY field has
     * |v − median| / (MAD · 1.4826) > threshold — the heavy-tail-safe
@@ -85,7 +85,17 @@ object AnomalyDetector {
       retainScored: Boolean = false): DataFrame = {
     val balanced = graft.core.Rebalance.computeDense(df)
     val src = if (retainScored) balanced.persist() else balanced
-    val stats = collectStats(src, fields) // ONE stats job serves both methods
+    // ONE stats job serves both methods
+    vote(src, fields, collectStats(src, fields, Both), zThreshold, iqrFactor,
+      iforestOrderCol, contamination, numTrees, retainScored)
+  }
+
+  /** `combined`'s vote over `src` with its stats already computed. */
+  private def vote(src: DataFrame, fields: Seq[String], stats: Stats,
+      zThreshold: Double, iqrFactor: Double,
+      iforestOrderCol: Option[String] = None,
+      contamination: Double = 0.1, numTrees: Int = 100,
+      retainScored: Boolean = false): DataFrame = {
     val z = anyFieldFlag(fields, stats, zThreshold, "zscore")
     val i = anyFieldFlag(fields, stats, iqrFactor, "iqr")
     val (base, ifVote) = iforestOrderCol match {
@@ -116,18 +126,37 @@ object AnomalyDetector {
   /** The reference's three named methods behind one switch — the anomalies
     * route and the `anomaly_detector` pipeline stage both dispatch here.
     * `threshold` is the z-score threshold (`statistical`), the IQR factor
-    * (`iqr`), or both (`combined`). */
+    * (`iqr`), or both (`combined`). One stats job ([[statsFor]]), then the
+    * flags ([[flagWith]]). */
   def byMethod(df: DataFrame, method: String, fields: Seq[String],
-      threshold: Double): DataFrame = method match {
-    case "statistical" => zscore(df, fields, threshold)
-    case "iqr"         => iqr(df, fields, threshold)
-    case "combined"    => combined(df, fields, threshold, threshold)
+      threshold: Double): DataFrame =
+    flagWith(df, method, fields, statsFor(df, method, fields), threshold)
+
+  /** The per-field stats `method` flags with, in one aggregate job. They do
+    * not depend on the threshold, so a caller that keeps them flags at
+    * any threshold with [[flagWith]] alone. */
+  def statsFor(df: DataFrame, method: String, fields: Seq[String]): Stats =
+    method match {
+      case "statistical" => collectStats(df, fields, Seq("zscore"))
+      case "iqr"         => collectStats(df, fields, Seq("iqr"))
+      case "combined"    =>
+        collectStats(graft.core.Rebalance.computeDense(df), fields, Both)
+      case other => throw new IllegalArgumentException(s"unknown method $other")
+    }
+
+  /** `byMethod`'s flags over stats from [[statsFor]] with the same `df`,
+    * `method` and `fields`. */
+  def flagWith(df: DataFrame, method: String, fields: Seq[String],
+      stats: Stats, threshold: Double): DataFrame = method match {
+    case "statistical" => flagAny(df, fields, stats, threshold, "zscore")
+    case "iqr"         => flagAny(df, fields, stats, threshold, "iqr")
+    case "combined"    => vote(graft.core.Rebalance.computeDense(df), fields,
+      stats, threshold, threshold)
     case other => throw new IllegalArgumentException(s"unknown method $other")
   }
 
-  private def flagAny(df: DataFrame, fields: Seq[String], param: Double,
-      method: String): DataFrame = {
-    val stats = collectStats(df, fields) // one stats job for flag + reasons
+  private def flagAny(df: DataFrame, fields: Seq[String], stats: Stats,
+      param: Double, method: String): DataFrame = {
     val flag = anyFieldFlag(fields, stats, param, method)
     val parts = fields.map { f =>
       when(fieldFlag(f, stats(f), param, method),
@@ -141,7 +170,7 @@ object AnomalyDetector {
 
   /** The boolean any-field flag as an expression tree over inlined stats
     * literals (constant-folded into the scan-side filter). */
-  private def anyFieldFlag(fields: Seq[String], stats: Map[String, FieldStats],
+  private def anyFieldFlag(fields: Seq[String], stats: Stats,
       param: Double, method: String): Column =
     fields.map(f => fieldFlag(f, stats(f), param, method)).reduce(_ || _)
 
@@ -158,27 +187,40 @@ object AnomalyDetector {
         (col(f) < lit(st.q1 - param * iqrV) || col(f) > lit(st.q3 + param * iqrV))
   }
 
-  private case class FieldStats(mu: Double, sigma: Double, q1: Double,
+  /** One field's stats; a stat its method does not read is NaN. */
+  final case class FieldStats(mu: Double, sigma: Double, q1: Double,
       q3: Double, n: Long)
 
-  /** One aggregate job computes every field's stats (mean, σ, quartiles,
-    * count — enough for every method); the tiny result comes back to the
-    * driver and is inlined as literals (constant-folded into the scan-side
-    * filter — fully pushdown/codegen friendly). */
-  private def collectStats(df: DataFrame,
-      fields: Seq[String]): Map[String, FieldStats] = {
+  /** Per-field stats, by field name. */
+  type Stats = Map[String, FieldStats]
+
+  private val Both = Seq("zscore", "iqr")
+
+  /** One aggregate job computes every field's count and what `methods`
+    * read: mean and σ for `zscore`, the quartiles for `iqr` (two exact
+    * `percentile`s, which only a non-codegen ObjectHashAggregate runs, so
+    * `zscore` alone never pays for them). The tiny result comes back to
+    * the driver and is inlined as literals (constant-folded into the
+    * scan-side filter — fully pushdown/codegen friendly). */
+  private def collectStats(df: DataFrame, fields: Seq[String],
+      methods: Seq[String]): Stats = {
     val aggs = fields.flatMap { f =>
       val d = col(f).cast(DoubleType)
-      Seq(avg(d).as(s"${f}__mu"),
-          coalesce(stddev_pop(d), lit(0.0)).as(s"${f}__sigma"),
-          expr(s"percentile(`$f`, 0.25)").as(s"${f}__q1"),
-          expr(s"percentile(`$f`, 0.75)").as(s"${f}__q3"),
-          count(d).as(s"${f}__n"))
+      (if (methods.contains("zscore"))
+        Seq(avg(d).as(s"${f}__mu"),
+            coalesce(stddev_pop(d), lit(0.0)).as(s"${f}__sigma"))
+      else Nil) ++
+      (if (methods.contains("iqr"))
+        Seq(expr(s"percentile(`$f`, 0.25)").as(s"${f}__q1"),
+            expr(s"percentile(`$f`, 0.75)").as(s"${f}__q3"))
+      else Nil) :+
+      count(d).as(s"${f}__n")
     }
     val row = df.agg(aggs.head, aggs.tail: _*).head()
     fields.map { f =>
       def g(s: String): Double =
-        Option(row.getAs[Any](s"${f}__$s")).fold(0.0)(_.toString.toDouble)
+        if (!row.schema.fieldNames.contains(s"${f}__$s")) Double.NaN
+        else Option(row.getAs[Any](s"${f}__$s")).fold(0.0)(_.toString.toDouble)
       f -> FieldStats(g("mu"), g("sigma"), g("q1"), g("q3"),
         row.getAs[Long](s"${f}__n"))
     }.toMap

@@ -1,6 +1,7 @@
 package graft.query
 
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.RowOrdering
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -35,13 +36,27 @@ object QueryService {
   }
 
   /** Drill-down: raw records for dimension=value + filters, projection,
-    * LIMIT/OFFSET pagination (`duckdb_service.py:436-505`). Requires a sort
-    * key for deterministic pages — Spark has native offset (3.4+). */
+    * LIMIT/OFFSET pagination (`duckdb_service.py:436-505`) over
+    * [[drillDownOrdered]]'s order. Spark has native offset (3.4+). */
   def drillDown(df: DataFrame, filters: Seq[Filter], columns: Seq[String],
-      sortKey: String, limit: Int = 100, offset: Int = 0): DataFrame = {
+      sortKey: String, limit: Int = 100, offset: Int = 0): DataFrame =
+    drillDownOrdered(df, filters, columns, sortKey).offset(offset).limit(limit)
+
+  /** Drill-down rows in page order: by the sort key, then by every other
+    * projected column as a tie-break, so the pages are deterministic even
+    * when the key is not unique, and a page sliced from a longer ordered
+    * prefix equals the page computed alone. Rows still tied are equal in
+    * every orderable column; a column of a type with no order (a map) can
+    * break no tie. */
+  def drillDownOrdered(df: DataFrame, filters: Seq[Filter], columns: Seq[String],
+      sortKey: String): DataFrame = {
     val base = df.filter(Filter.compile(filters))
     val projected = if (columns.isEmpty) base else base.select(columns.map(col): _*)
-    projected.orderBy(col(sortKey)).offset(offset).limit(limit)
+    val ties = projected.schema.fields.toSeq.collect {
+      case f if f.name != sortKey && RowOrdering.isOrderable(f.dataType) =>
+        col("`" + f.name.replace("`", "``") + "`")
+    }
+    projected.orderBy(col(sortKey) +: ties: _*)
   }
 
   /** Distinct filter-values with optional ILIKE search

@@ -1,167 +1,61 @@
 package graft.service
 
-import java.nio.ByteBuffer
 import java.nio.charset.StandardCharsets.UTF_8
-import java.security.MessageDigest
-import java.util.concurrent.{CompletableFuture, ConcurrentHashMap, ExecutionException}
-import java.util.concurrent.atomic.AtomicLong
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 
-/** Rendered responses of the dashboard routes, kept so a repeated request is
-  * answered without planning, codegen or a Spark job.
+/** The dashboard routes' reuse, over one [[KeyedStore]]: rendered
+  * responses, kept so a repeated request is answered without planning,
+  * codegen or a Spark job, and the partial results a route keeps so a
+  * request it has not seen is answered from what an earlier one computed.
   *
-  * A request is keyed by its route, its canonical JSON and the frame its
-  * table resolved to. An entry is served only while that frame reads the
-  * same files with the same length and modification time, so a hit never
-  * returns an answer a fresh computation would not. Frames that read
-  * anything other than files or local rows (JDBC, RDDs, streams) have no
-  * such check and are never kept.
-  *
-  * Identical concurrent misses are single-flight: the first computes, the
-  * rest wait for its bytes, or for its failure, which is then dropped —
-  * failures are never kept. The entries are LRU-bounded by their weight:
-  * the rendered bytes plus the key's characters and a fixed per-entry
-  * overhead; the file stamp is kept as a fixed-size digest, so the weight
-  * does not depend on how many files a table has. A response over 1/16 of
-  * the budget is served but not kept. */
-private[service] final class ResponseCache(budgetBytes: Long) {
-  import ResponseCache._
+  * A response is keyed by its route, its canonical JSON and the frame its
+  * table resolved to; a partial result by its kind, the part of the
+  * request it depends on and the frame. Both are served only while the
+  * frame's files are unchanged, share single flight, and share the one
+  * LRU budget (see [[KeyedStore]]). */
+private[service] final class ResponseCache(entries: KeyedStore, frames: KeyedStore.Frames) {
 
-  private val maxEntryBytes = budgetBytes / 16
-  // access order: iteration starts at the least recently used entry
-  private val entries = new java.util.LinkedHashMap[Key, Entry](16, 0.75f, true)
-  private var usedBytes = 0L // guarded by `entries`
-  private val inFlight = new ConcurrentHashMap[Key, CompletableFuture[Array[Byte]]]()
-  // Keys name a frame by number, so an entry holds no frame (whose file
-  // index lists every file). One frame per distinct table read stays here;
-  // a caching resolver such as `graft.core.Tables.table` holds it anyway.
-  private val frames = new ConcurrentHashMap[Frame, java.lang.Long]()
-  private val frameIds = new AtomicLong()
+  def this(budgetBytes: Long) = this(new KeyedStore(budgetBytes), new KeyedStore.Frames)
 
   /** The bytes for `request` on `route` over `frame`, and whether they were
     * served without running `compute` in this call (a kept entry, or a
     * concurrent identical request's result). */
   def getOrCompute(route: String, request: Any, frame: DataFrame)(
-      compute: => Array[Byte]): (Array[Byte], Boolean) = {
-    val key = Key(route, canonical(request),
-      frames.computeIfAbsent(new Frame(frame), _ => frameIds.incrementAndGet()))
-    lookup(key, frame) match {
-      case Some(bytes) => (bytes, true)
-      case None =>
-        val mine = new CompletableFuture[Array[Byte]]()
-        inFlight.putIfAbsent(key, mine) match {
-          case null =>
-            try {
-              // a flight that ended between the lookup and putIfAbsent has
-              // already kept its entry (keep runs before its removal)
-              val served = lookup(key, frame).map(_ -> true).getOrElse {
-                val st = stamp(frame) // before computing: a file changed
-                val bytes = compute   // mid-run leaves a stale stamp
-                st.foreach(keep(key, bytes, _))
-                bytes -> false
-              }
-              mine.complete(served._1)
-              served
-            } catch {
-              case e: Throwable => mine.completeExceptionally(e); throw e
-            } finally { inFlight.remove(key, mine); () }
-          case leader =>
-            try leader.get() -> true
-            catch { case e: ExecutionException => throw e.getCause }
-        }
-    }
-  }
+      compute: => Array[Byte]): (Array[Byte], Boolean) =
+    reuse[Array[Byte]](route, request, frame, _.length.toLong)(compute)
 
-  /** The summed weight of the kept entries. */
-  private[service] def weight: Long = entries.synchronized(usedBytes)
+  /** A partial result of `kind` for `request` over `frame`; one kept that
+    * `covers` rejects is computed again and replaced. */
+  def reuse[V <: AnyRef](kind: String, request: Any, frame: DataFrame,
+      weigh: V => Long, covers: V => Boolean = (_: V) => true)(
+      compute: => V): (V, Boolean) =
+    entries.getOrCompute(
+      KeyedStore.Key(kind, KeyedStore.canonical(request), frames.id(frame)),
+      frame, weigh, covers)(compute)
 
-  private def lookup(key: Key, frame: DataFrame): Option[Array[Byte]] = {
-    val e = entries.synchronized(entries.get(key))
-    if (e == null) None
-    else if (stamp(frame).exists(java.util.Arrays.equals(_, e.stamp))) Some(e.bytes)
-    else {
-      entries.synchronized {
-        if (entries.remove(key, e)) usedBytes -= e.weight
-      }
-      None
-    }
-  }
-
-  private def keep(key: Key, bytes: Array[Byte], stamp: Array[Byte]): Unit =
-    if (bytes.length <= maxEntryBytes) entries.synchronized {
-      val e = Entry(bytes, stamp,
-        bytes.length + 2L * (key.route.length + key.request.length) + EntryOverhead)
-      val old = entries.put(key, e)
-      if (old != null) usedBytes -= old.weight
-      usedBytes += e.weight
-      val it = entries.values.iterator
-      while (usedBytes > budgetBytes && it.hasNext) {
-        usedBytes -= it.next().weight
-        it.remove()
-      }
-    }
+  /** The summed weight of the kept responses and partial results. */
+  private[service] def weight: Long = entries.weight
 }
 
 private[service] object ResponseCache {
 
-  /** Bytes an entry holds besides its body and key characters: the map
-    * node, the key, the entry, three array and string headers and the
-    * 32-byte stamp digest (about 230 with compressed pointers). */
-  private val EntryOverhead = 256L
-
-  private final case class Key(route: String, request: String, frame: Long)
-
-  private final case class Entry(bytes: Array[Byte], stamp: Array[Byte], weight: Long)
-
-  /** A frame compared by plan semantics, so two reads of the same table
-    * match; their files are compared by the stamp. */
-  private final class Frame(val df: DataFrame) {
-    override val hashCode: Int = df.semanticHash()
-    override def equals(o: Any): Boolean = o match {
-      case f: Frame => (df eq f.df) || df.sameSemantics(f.df)
-      case _ => false
-    }
+  /** The first rows of an ordered result rendered `to_json`, `fetched` of
+    * them asked for: fewer came back only when the result has no more. */
+  final case class Prefix(rows: Array[String], fetched: Int) {
+    /** Whether the first `n` rows of the result are all here. */
+    def covers(n: Int): Boolean = n <= fetched || rows.length < fetched
+    /** A string's header and length field, and two bytes per character. */
+    def weight: Long = rows.foldLeft(0L)(_ + 40L + 2L * _.length)
   }
 
-  /** SHA-256 of (path, length, modification time) of every file `frame`
-    * reads, in path order; None when the frame reads other sources or a
-    * file is gone. */
-  private def stamp(frame: DataFrame): Option[Array[Byte]] = {
-    val leavesOk = frame.queryExecution.analyzed.collectLeaves().forall {
-      case r: LogicalRelation => r.relation.isInstanceOf[HadoopFsRelation]
-      case _: LocalRelation => true
-      case _ => false
-    }
-    if (!leavesOk) None
-    else {
-      val conf = frame.sparkSession.sparkContext.hadoopConfiguration
-      val md = MessageDigest.getInstance("SHA-256")
-      try {
-        frame.inputFiles.sorted.foreach { f =>
-          val p = new Path(new java.net.URI(f))
-          val st = p.getFileSystem(conf).getFileStatus(p)
-          md.update(f.getBytes(UTF_8))
-          md.update(ByteBuffer.allocate(17).put(0: Byte)
-            .putLong(st.getLen).putLong(st.getModificationTime).array)
-        }
-        Some(md.digest())
-      } catch { case _: java.io.FileNotFoundException => None }
-    }
-  }
-
-  /** Canonical JSON: object keys sorted, no whitespace, and number types
-    * kept — the Long 3 renders `3`, the Double 3.0 renders `3.0`, because
-    * they plan differently against a string column. */
-  private def canonical(v: Any): String = v match {
-    case m: scala.collection.Map[_, _] =>
-      m.toSeq.map { case (k, x) => String.valueOf(k) -> x }.sortBy(_._1)
-        .map { case (k, x) => "\"" + MiniJson.escape(k) + "\":" + canonical(x) }
-        .mkString("{", ",", "}")
-    case l: Iterable[_] => l.map(canonical).mkString("[", ",", "]")
-    case s: String => "\"" + MiniJson.escape(s) + "\""
-    case other => String.valueOf(other) // Long, Double, Boolean, null
+  /** The reference's response envelope up to its last field,
+    * `query_time_ms`, over rows already rendered `to_json`: at most
+    * `maxRows` of them, with `"truncated": true` when there were more. */
+  def envelopeHead(rows: Array[String], maxRows: Int): Array[Byte] = {
+    val truncated = rows.length > maxRows
+    val out = if (truncated) rows.take(maxRows) else rows
+    ("{\"data\":" + out.mkString("[", ",", "]") +
+      ",\"row_count\":" + out.length +
+      (if (truncated) ",\"truncated\":true" else "")).getBytes(UTF_8)
   }
 }

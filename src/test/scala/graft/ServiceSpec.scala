@@ -210,6 +210,40 @@ class ServiceSpec extends SparkSuite {
     } finally http.stop()
   }
 
+  test("stop drops every staged pipeline and deletes the directories it created") {
+    import graft.service.{Facade, HttpFacade, MiniJson}
+    val dir = java.nio.file.Files.createTempDirectory("graft_stop")
+    java.nio.file.Files.write(dir.resolve("in.csv"), "k,v\n1,a\n2,b\n".getBytes("UTF-8"))
+    val http = new HttpFacade(Facade.Tables(t => sys.error(s"no table $t")))
+    def call(port: Int, method: String, path: String, b: String = ""): String = {
+      val conn = new java.net.URL(s"http://127.0.0.1:$port$path")
+        .openConnection().asInstanceOf[java.net.HttpURLConnection]
+      conn.setRequestMethod(method)
+      if (b.nonEmpty) { conn.setDoOutput(true); conn.getOutputStream.write(b.getBytes("UTF-8")) }
+      assert(conn.getResponseCode == 200, path)
+      new String(conn.getInputStream.readAllBytes(), "UTF-8")
+    }
+    def staged(id: String) = new java.io.File(s"/tmp/graft_staged/$id")
+    val port = http.start()
+    val ids = try {
+      val ids = (1 to 3).map { _ =>
+        MiniJson.parse(call(port, "POST", "/api/pipeline/staged/init",
+          s"""{"source": {"type": "csv", "path": "${dir.resolve("in.csv")}"}}"""))
+          .asInstanceOf[Map[String, Any]]("pipeline_id").toString
+      }
+      // two extract, the third never runs; the second's directory is
+      // already gone when the server stops
+      ids.take(2).foreach(id => call(port, "POST", s"/api/pipeline/staged/$id/extract"))
+      assert(ids.take(2).forall(staged(_).isDirectory))
+      org.apache.commons.io.FileUtils.deleteDirectory(staged(ids(1)))
+      ids
+    } finally http.stop()
+    assert(ids.forall(!staged(_).exists))
+    val again = http.start()
+    try assert(call(again, "GET", "/api/pipelines") == "[]")
+    finally http.stop()
+  }
+
   test("slugify + medallion paths match reference semantics") {
     assert(Paths.slugify("My Data_Set 2024!") == "my-data-set-2024")
     assert(Paths.goldBi("Acme Corp", "Q1 Sales") == "acme-corp/gold/bi/q1-sales/q1-sales.parquet")
