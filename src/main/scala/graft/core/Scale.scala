@@ -124,19 +124,6 @@ object Skew {
           sum(col(s"_s$i")).as(name) }: _*)
   }
 
-  /** Salted broadcast-side replication for joining a skewed fact against a
-    * small dim whose key is hot: replicate the dim `saltBuckets`× and join
-    * on (key, salt) so the hot key's rows spread across tasks. */
-  def saltedJoin(fact: DataFrame, dim: DataFrame, key: String,
-      saltBuckets: Int): DataFrame = {
-    require(saltBuckets >= 1, s"saltBuckets must be >= 1, got $saltBuckets")
-    val saltedFact = fact.withColumn("_salt",
-      pmod(spark_partition_id() + monotonically_increasing_id(), lit(saltBuckets)))
-    val replicatedDim = dim.withColumn("_salt",
-      explode(sequence(lit(0), lit(saltBuckets - 1))))
-    saltedFact.join(broadcast(replicatedDim), Seq(key, "_salt")).drop("_salt")
-  }
-
   /** Key-skew diagnostic: the top-`topK` keys by row count with their share
     * of the table — the report that tells you BEFORE a 100 TB run whether a
     * groupBy/join key needs salting (one hot key owning 30% of the rows
@@ -286,9 +273,6 @@ object Bucketing {
       .sortBy(bucketCols.head, bucketCols.tail: _*)
     path.fold(w)(p => w.option("path", p)).saveAsTable(table)
   }
-
-  def readTable(spark: SparkSession, table: String): DataFrame =
-    spark.table(table)
 }
 
 /** Grouped top-k without a group-by-collect or a global sort: one

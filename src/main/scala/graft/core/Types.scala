@@ -3,8 +3,8 @@ package graft.core
 import org.apache.spark.sql.types._
 
 /** Type system parity (SURVEY §1.2/§1.3): the reference's `FieldType` enum
-  * (`src/common/models.py:10-21`), its per-sink type mappings, and the
-  * `Schema`/`Field` model carried as `StructType` metadata.
+  * (`src/common/models.py:10-21`) and the Spark → FieldType mapping the
+  * profile route reports as each column's `dtype`.
   */
 object Types {
   sealed abstract class FieldType(val name: String)
@@ -13,32 +13,9 @@ object Types {
   case object FFloat     extends FieldType("float")
   case object FBoolean   extends FieldType("boolean")
   case object FDate      extends FieldType("date")
-  case object FDateTime  extends FieldType("datetime")
   case object FTimestamp extends FieldType("timestamp")
   case object FJson      extends FieldType("json")
   case object FArray     extends FieldType("array")
-
-  val all: Seq[FieldType] = Seq(FString, FInteger, FFloat, FBoolean, FDate,
-    FDateTime, FTimestamp, FJson, FArray)
-
-  def fromName(n: String): FieldType =
-    all.find(_.name == n.toLowerCase)
-      .getOrElse(throw new IllegalArgumentException(s"unknown field type $n"))
-
-  /** FieldType → Spark (SURVEY §1.2 mapping). JSON stays a string column
-    * (use `from_json`/`get_json_object` on demand); ARRAY defaults to
-    * array<string> when the element type is unknown. */
-  def toSpark(t: FieldType): DataType = t match {
-    case FString    => StringType
-    case FInteger   => LongType
-    case FFloat     => DoubleType
-    case FBoolean   => BooleanType
-    case FDate      => DateType
-    case FDateTime  => TimestampType
-    case FTimestamp => TimestampType
-    case FJson      => StringType
-    case FArray     => ArrayType(StringType)
-  }
 
   def fromSpark(dt: DataType): FieldType = dt match {
     case BooleanType                       => FBoolean
@@ -49,89 +26,5 @@ object Types {
     case _: ArrayType                      => FArray
     case _: MapType | _: StructType        => FJson
     case _                                 => FString
-  }
-
-  /** → SQLite DDL types (`sqlite_loader.py:114-127`): BOOLEAN→INTEGER,
-    * all temporal→TEXT, JSON/ARRAY serialized to TEXT. */
-  def toSqlite(t: FieldType): String = t match {
-    case FInteger => "INTEGER"
-    case FFloat   => "REAL"
-    case FBoolean => "INTEGER"
-    case _        => "TEXT"
-  }
-
-  /** → Postgres DDL types (`postgres_loader.py:182-194`). */
-  def toPostgres(t: FieldType): String = t match {
-    case FString    => "TEXT"
-    case FInteger   => "BIGINT"
-    case FFloat     => "DOUBLE PRECISION"
-    case FBoolean   => "BOOLEAN"
-    case FDate      => "DATE"
-    case FDateTime  => "TIMESTAMP"
-    case FTimestamp => "TIMESTAMP"
-    case FJson      => "JSONB"
-    case FArray     => "TEXT[]"
-  }
-
-  /** The reference's `Field` constraints (`models.py:23-39`) carried as
-    * StructField metadata — survives parquet round-trips. */
-  final case class FieldSpec(
-      name: String, fieldType: FieldType, nullable: Boolean = true,
-      minValue: Option[Double] = None, maxValue: Option[Double] = None,
-      pattern: Option[String] = None, enumValues: Seq[String] = Nil,
-      inferred: Boolean = false, confidence: Double = 1.0)
-
-  final case class SchemaSpec(fields: Seq[FieldSpec],
-      primaryKey: Option[String] = None, inferred: Boolean = false)
-
-  def toStructType(s: SchemaSpec): StructType =
-    StructType(s.fields.map { f =>
-      val mb = new MetadataBuilder()
-        .putString("field_type", f.fieldType.name)
-        .putBoolean("inferred", f.inferred)
-        .putDouble("confidence", f.confidence)
-      f.minValue.foreach(mb.putDouble("min_value", _))
-      f.maxValue.foreach(mb.putDouble("max_value", _))
-      f.pattern.foreach(mb.putString("pattern", _))
-      if (f.enumValues.nonEmpty)
-        mb.putStringArray("enum_values", f.enumValues.toArray)
-      s.primaryKey.filter(_ == f.name)
-        .foreach(_ => mb.putBoolean("primary_key", true))
-      StructField(f.name, toSpark(f.fieldType), f.nullable, mb.build())
-    })
-
-  def fromStructType(st: StructType): SchemaSpec = {
-    val fields = st.fields.map { sf =>
-      val m = sf.metadata
-      def has(k: String) = m.contains(k)
-      FieldSpec(
-        name = sf.name,
-        fieldType = if (has("field_type")) fromName(m.getString("field_type"))
-                    else fromSpark(sf.dataType),
-        nullable = sf.nullable,
-        minValue = if (has("min_value")) Some(m.getDouble("min_value")) else None,
-        maxValue = if (has("max_value")) Some(m.getDouble("max_value")) else None,
-        pattern = if (has("pattern")) Some(m.getString("pattern")) else None,
-        enumValues = if (has("enum_values")) m.getStringArray("enum_values").toSeq else Nil,
-        inferred = has("inferred") && m.getBoolean("inferred"),
-        confidence = if (has("confidence")) m.getDouble("confidence") else 1.0)
-    }
-    val pk = st.fields.find(f =>
-      f.metadata.contains("primary_key") && f.metadata.getBoolean("primary_key"))
-      .map(_.name)
-    SchemaSpec(fields.toIndexedSeq, pk)
-  }
-
-  /** DDL statement builder for the JDBC sinks (create_schema parity,
-    * `sqlite_loader.py:64-127` / `postgres_loader.py:106-194`). */
-  def createTableDdl(table: String, s: SchemaSpec, dialect: String): String = {
-    val typeOf: FieldType => String =
-      if (dialect == "sqlite") toSqlite else toPostgres
-    val cols = s.fields.map { f =>
-      val nn = if (f.nullable) "" else " NOT NULL"
-      val pk = if (s.primaryKey.contains(f.name)) " PRIMARY KEY" else ""
-      s"${f.name} ${typeOf(f.fieldType)}$nn$pk"
-    }
-    s"CREATE TABLE IF NOT EXISTS $table (${cols.mkString(", ")})"
   }
 }

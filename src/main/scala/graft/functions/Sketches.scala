@@ -31,11 +31,6 @@ object Sketches {
       .agg(hll_sketch_estimate(hll_union_agg(col(sketchCol), lit(false)))
         .as("distinct_est"))
 
-  /** One-shot approximate distinct (HLL++): same scan cost as count, no
-    * distinct shuffle. */
-  def approxDistinct(c: Column, rsd: Double = 0.05): Column =
-    approx_count_distinct(c, rsd)
-
   /** Trailing-`n`-day distinct estimate per day from DAILY sketches: each
     * daily sketch fans out to the ≤n windows it contributes to (explode
     * over a bounded date sequence — the same equi-join shape as the exact

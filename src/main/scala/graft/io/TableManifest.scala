@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
   * part file, its row count and id-column summary (sum/min/max). This is
   * the partial-write / bitrot / lost-file detector for 100 TB table dirs:
   * persist the manifest next to the data at write time, re-derive it at
-  * read time, and diff — a truncated file shows as a row-count drop, a
+  * read time, and compare — a truncated file shows as a row-count drop, a
   * missing file as an absent manifest row, and the check costs one pruned
   * scan of the id column, not a byte-level re-read.
   *
@@ -36,20 +36,4 @@ object TableManifest {
         sum(col(idCol)).as("sum_id"),
         min(col(idCol)).as("min_id"),
         max(col(idCol)).as("max_id"))
-
-  /** Diff two manifests of the SAME logical table (e.g. written vs
-    * re-read, or yesterday vs today): any row here is a file-level
-    * integrity violation. Compares every manifest statistic — count, sum,
-    * min, max — so a compensating corruption that preserves count+sum but
-    * shifts the id set still trips on the range columns. */
-  def manifestDiff(expected: DataFrame, actual: DataFrame): DataFrame = {
-    val stats = Seq("n_rows", "sum_id", "min_id", "max_id")
-    val a = stats.foldLeft(actual)((d, c) =>
-      d.withColumnRenamed(c, s"${c}_actual"))
-      .select("file_part", stats.map(_ + "_actual"): _*)
-    expected.select("file_part", stats: _*)
-      .join(a, Seq("file_part"), "full_outer")
-      .filter(col("n_rows").isNull || col("n_rows_actual").isNull ||
-        stats.map(c => !(col(c) <=> col(s"${c}_actual"))).reduce(_ || _))
-  }
 }

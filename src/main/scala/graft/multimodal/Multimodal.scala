@@ -83,30 +83,6 @@ object Multimodal {
       })
   }
 
-  /** Content-derived metadata: sniff the container by magic bytes and fill
-    * mime / width / height / duration_ms from the DECODED payload — the
-    * trust-the-bytes replacement for caller-supplied metadata columns.
-    * ONE partition-local pass (no join — payload bytes never shuffle); rows
-    * whose container can't be decoded keep their existing metadata. */
-  def decodeMetadata(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select(col("media_id"), col("kind"), col("content"), col("mime"),
-        col("width"), col("height"), col("duration_ms"))
-      .as[(Long, String, Array[Byte], Option[String], Option[Int],
-        Option[Int], Option[Long])]
-      .mapPartitions(_.map { case (id, kind, content, mime0, w0, h0, d0) =>
-        val bytes = Option(content).getOrElse(Array.emptyByteArray)
-        val img = Codecs.decodeImage(bytes)
-        val wav = if (img.isEmpty) Codecs.decodeWav(bytes) else None
-        (id, kind, content, Codecs.sniff(bytes).orElse(mime0),
-          img.map(_.width).orElse(w0), img.map(_.height).orElse(h0),
-          wav.map(_.durationMs).orElse(d0))
-      })
-      .toDF("media_id", "kind", "content", "mime", "width", "height",
-        "duration_ms")
-  }
-
   /** Resize: decodable payloads (PPM/BMP/PNG/JPEG/GIF) are REALLY decoded,
     * scaled with nearest-neighbor, and re-encoded container-preserving
     * (aspect-preserving fit into maxW×maxH, never upscaling). Containers

@@ -117,27 +117,6 @@ object MinHashDedup {
     // kernel never produces empty tokens.
     graft.functions.WordShingles.word_shingles(text, k)
 
-  /** Pick LSH banding parameters for a target Jaccard threshold: among all
-    * (bands, rowsPerBand) factorizations of `numHashes`, the one whose
-    * s-curve inflection `(1/b)^(1/r)` lands closest to `threshold`.
-    * Returns (bands, rowsPerBand). Candidate probability at similarity j
-    * is `1 − (1 − j^r)^b` — [[candidateProbability]] exposes it so callers
-    * can audit the recall/precision trade before a corpus-sized run. */
-  def chooseBanding(numHashes: Int, threshold: Double): (Int, Int) = {
-    require(numHashes > 0 && threshold > 0 && threshold < 1,
-      s"need numHashes>0, threshold in (0,1): $numHashes, $threshold")
-    val options = (1 to numHashes)
-      .filter(numHashes % _ == 0)
-      .map(b => (b, numHashes / b))
-    options.minBy { case (b, r) =>
-      math.abs(math.pow(1.0 / b, 1.0 / r) - threshold)
-    }
-  }
-
-  /** P(pair becomes an LSH candidate | true Jaccard = j) for a banding. */
-  def candidateProbability(j: Double, bands: Int, rowsPerBand: Int): Double =
-    1.0 - math.pow(1.0 - math.pow(j, rowsPerBand), bands)
-
   /** (id, band, bucket) rows from the codegen'd signature kernel — shared by
     * [[clusters]] and the connected-components property tests. */
   private[graft] def bucketTable(df: DataFrame, idCol: String, textCol: String,

@@ -25,22 +25,6 @@ object SnapshotDiff {
       contentCol: String): DataFrame =
     diffBy(oldDf, newDf, idCol, md5(col(contentCol).cast(StringType)))
 
-  /** Multi-column variant: content identity spans several columns (text
-    * AND the metadata a curation decision reads — lang, source, license).
-    * Columns are null-sentineled and length-prefixed before hashing so
-    * ("ab","c") can never collide with ("a","bc") and null is distinct
-    * from empty; a metadata-only change classifies as `changed` even when
-    * the body is untouched. */
-  def diffColumns(oldDf: DataFrame, newDf: DataFrame, idCol: String,
-      contentCols: Seq[String]): DataFrame = {
-    require(contentCols.nonEmpty, "need at least one content column")
-    def h = md5(concat(contentCols.flatMap { c =>
-      val s = coalesce(col(c).cast(StringType), lit("\u0000"))
-      Seq(length(s).cast(StringType), lit(":"), s)
-    }: _*))
-    diffBy(oldDf, newDf, idCol, h)
-  }
-
   private def diffBy(oldDf: DataFrame, newDf: DataFrame, idCol: String,
       hash: Column): DataFrame = {
     val o = oldDf.select(col(idCol).as(idCol), hash.as("_old_hash"),

@@ -48,21 +48,20 @@ final class Pipeline private (
   final case class Result(df: DataFrame, rowsLoaded: Long,
       stageNames: Seq[String], durationMs: Long,
       stageRowCounts: Map[String, Long] = Map.empty,
-      extractMs: Long = 0, transformMs: Long = 0, loadMs: Long = 0,
-      success: Boolean = true, error: Option[String] = None) {
+      extractMs: Long = 0, transformMs: Long = 0, loadMs: Long = 0) {
     /** The reference's `get_stats` view (pipeline.py:266-293). In the lazy
       * (uncheckpointed) path stages fuse into one plan, so extract/transform
       * phases are plan-building time and the work lands in the load phase —
-      * checkpointed runs report real per-phase wall time. */
+      * checkpointed runs report real per-phase wall time. `run` throws on a
+      * failure, so a Result is always a success. */
     def stats: Map[String, Any] = Map(
-      "success" -> success,
+      "success" -> true,
       "records_loaded" -> rowsLoaded,
       "duration_ms" -> durationMs,
       "extract_ms" -> extractMs,
       "transform_ms" -> transformMs,
       "load_ms" -> loadMs) ++
-      stageRowCounts.map { case (k, v) => s"transformer_$k" -> v } ++
-      error.map("error" -> _)
+      stageRowCounts.map { case (k, v) => s"transformer_$k" -> v }
   }
 
   def run(spark: SparkSession): Result = {
@@ -96,18 +95,6 @@ final class Pipeline private (
       extractMs = tExtract, transformMs = tTransform,
       loadMs = total - tExtract - tTransform)
   }
-
-  /** `run` with the reference's catch-into-result behavior
-    * (pipeline.py:244-264): failures come back as `success = false` +
-    * `error` instead of a throw. */
-  def runSafe(spark: SparkSession): Result =
-    try run(spark)
-    catch {
-      case e: Throwable =>
-        Result(spark.emptyDataFrame, 0L, stageNames, 0L,
-          success = false,
-          error = Some(Option(e.getMessage).getOrElse(e.getClass.getName)))
-    }
 
   /** Resume from a previous checkpointed run's store, skipping completed
     * stages. */
@@ -158,7 +145,4 @@ final class Pipeline private (
 object Pipeline {
   def extract(source: SparkSession => DataFrame): Pipeline =
     new Pipeline(source, Vector.empty, Vector.empty, None)
-
-  def fromParquet(path: String): Pipeline =
-    extract(spark => spark.read.parquet(path))
 }

@@ -4,12 +4,11 @@ package graft.service
   * per-pipeline performance history (bounded, persisted as JSON), argmax
   * batch-size recommendation from a fixed candidate space, confidence =
   * mean(sample share, consistency, margin), three optimization targets
-  * (throughput / memory / cost), an exploration strategy for the next batch
-  * size to try, and a history analysis summary.
+  * (throughput / memory / cost), and a history analysis summary.
   *
-  * In the Spark engine most of what this tuned is superseded by AQE, so the
-  * advisor targets the knobs AQE does NOT set: JDBC fetch/batch sizes and
-  * arrow `maxRecordsPerBatch`. Pure driver-side Scala, no Spark dependency.
+  * In the Spark engine most of what this tuned is superseded by AQE; the
+  * recommendation is advice about the caller's own batch size. Pure
+  * driver-side Scala, no Spark dependency.
   */
 final class AutoTuner(
     statePath: Option[String] = None,
@@ -28,9 +27,6 @@ final class AutoTuner(
   final case class Recommendation(hasRecommendations: Boolean,
       batchSize: Option[Int], confidence: Double, reason: String,
       expectedImprovementPct: Double, stats: Map[String, Any])
-
-  /** Batch size candidates (auto_tuner.py:90). */
-  val candidates: Seq[Int] = Seq(100, 250, 500, 1000, 2500, 5000, 10000)
 
   // immutable snapshot behind a volatile ref: concurrent readers (a
   // multi-user service polling recommendations) always see a consistent
@@ -124,17 +120,6 @@ final class AutoTuner(
     }
   }
 
-  /** `suggest_next_batch_size` (auto_tuner.py:168-206): middle of the
-    * untried range, else the best performer. */
-  def suggestNextBatchSize(pipelineId: String, currentBatchSize: Int): Int = {
-    val h = history(pipelineId)
-    val tried = h.map(_.batchSize).toSet
-    val untried = candidates.filterNot(tried)
-    if (untried.nonEmpty) untried(untried.size / 2)
-    else if (h.nonEmpty) h.maxBy(score).batchSize
-    else currentBatchSize
-  }
-
   // ---- persistence (auto_tuner.py:345-401), MiniJson state file ----------
 
   private def stateFile = statePath.map(p => java.nio.file.Paths.get(p, "history.json"))
@@ -197,10 +182,4 @@ final class AutoTuner(
 
   def recommend(): Option[Rec] = findOptimal(history("default"))
     .map { case (b, c, i) => Rec(b, c, i / 100.0) }
-
-  /** Spark-world knob mapping for a recommendation. */
-  def sparkOptions(rec: Rec): Map[String, String] = Map(
-    "spark.sql.execution.arrow.maxRecordsPerBatch" -> rec.batchSize.toString,
-    "jdbc.fetchsize" -> rec.batchSize.toString,
-    "jdbc.batchsize" -> rec.batchSize.toString)
 }

@@ -9,8 +9,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * over the `events` schema).
   *
   * Design for scale: watermarked windowed aggregation keeps state bounded;
-  * `mapGroupsWithState` sessionization holds one small state object per key
-  * (RocksDB-backed state store on a real cluster).
+  * stateful operators keep one small state object per key on whatever
+  * state store the session is configured with.
   */
 object Streams {
 
@@ -50,71 +50,6 @@ object Streams {
       }
   }
 
-  final case class OpenSession(start: Long, last: Long, nEvents: Long, total: Double)
-  final case class SessionWindowOut(user_id: Long, session_start: java.sql.Timestamp,
-      session_end: java.sql.Timestamp, n_events: Long, total: Double)
-
-  /** Event-time gap sessionization via flatMapGroupsWithState: sessions close
-    * when `gapMs` passes with no event (in event time). Closed-by-gap sessions
-    * are emitted as soon as the closing event arrives; the trailing open
-    * session per key is held in state and flushed by the event-time timeout
-    * once the watermark passes `last + gap` — the state held per key is one
-    * small tuple regardless of stream length, the canonical bounded-state
-    * shape (RocksDB state store on a real cluster).
-    *
-    * Batch twin: `session_window(ts, gap)` — q_sessions gates those semantics
-    * against the DuckDB lag/cumsum construction; StreamingSessionSpec asserts
-    * this operator agrees with the batch twin on the closed sessions. */
-  def sessionizeEventTime(events: Dataset[Event], gapMs: Long = 30 * 60 * 1000,
-      watermark: String = "2 hours")(
-      implicit spark: SparkSession): Dataset[SessionWindowOut] = {
-    import spark.implicits._
-    def out(userId: Long, s: OpenSession) = SessionWindowOut(userId,
-      new java.sql.Timestamp(s.start), new java.sql.Timestamp(s.last + gapMs),
-      s.nEvents, s.total)
-    events
-      .withWatermark("ts", watermark)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[OpenSession, SessionWindowOut](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (userId: Long, evts: Iterator[Event], state: GroupState[OpenSession]) =>
-          if (evts.isEmpty && state.hasTimedOut) {
-            // watermark passed last+gap: the open session is final
-            val s = state.get
-            state.remove()
-            Iterator.single(out(userId, s))
-          } else {
-            // micro-batches are unordered within the batch: sort, then fold
-            val sorted = evts.toArray.sortBy(e => (e.ts.getTime, e.event_id))
-            val closed = Vector.newBuilder[SessionWindowOut]
-            var open = state.getOption
-            sorted.foreach { e =>
-              val t = e.ts.getTime
-              open = open match {
-                case Some(s) if t - s.last < gapMs =>
-                  Some(OpenSession(s.start, math.max(s.last, t),
-                    s.nEvents + 1, s.total + e.value))
-                case Some(s) =>
-                  closed += out(userId, s)
-                  Some(OpenSession(t, t, 1L, e.value))
-                case None => Some(OpenSession(t, t, 1L, e.value))
-              }
-            }
-            open.foreach { s =>
-              state.update(s)
-              state.setTimeoutTimestamp(s.last + gapMs)
-            }
-            closed.result().iterator
-          }
-      }
-  }
-
-  /** Streaming exact dedup — the streaming face of the engine's flagship
-    * operator (operators/Dedup.ExactDedup is the batch face). State is
-    * BOUNDED: `dropDuplicatesWithinWatermark` evicts seen-keys once the
-    * watermark passes them, so 100 TB/day of events needs state for one
-    * watermark window, not for history. Dedup key defaults to the same
-    * md5-of-sorted-fields content hash the batch operator uses. */
   final case class Change(id: Long, ts: java.sql.Timestamp, op: String,
       value: Double)
   final case class LatestState(tsMs: Long, op: String, value: Double)
@@ -149,39 +84,6 @@ object Streams {
           state.update(winner)
           CurrentRow(id, winner.value, winner.op != "delete", winner.tsMs)
       }
-  }
-
-  def dedupStream(events: DataFrame, eventTimeCol: String, watermark: String,
-      matchFields: Seq[String] = Nil): DataFrame = {
-    val keyed = events.withColumn("_dedup_key",
-      graft.operators.ExactDedup.matchKey(events,
-        if (matchFields.nonEmpty) matchFields
-        else events.columns.toSeq.filterNot(_ == eventTimeCol)))
-    keyed.withWatermark(eventTimeCol, watermark)
-      .dropDuplicatesWithinWatermark("_dedup_key")
-      .drop("_dedup_key")
-  }
-
-  /** Streaming NEAR-duplicate dedup: the MinHash signature kernel is a pure
-    * projection, so it runs unchanged on a stream; near-identical texts
-    * (shingle jaccard ≈ 1) collide on the signature and
-    * `dropDuplicatesWithinWatermark` keeps one per signature within the
-    * watermark horizon — bounded state, the streaming face of
-    * `MinHashDedup`. Looser matching = dedup on a signature PREFIX: pass
-    * `keyHashes` < `numHashes` (fewer hashes agreeing ⇒ lower jaccard
-    * needed to collide). */
-  def nearDupStream(docs: DataFrame, eventTimeCol: String, watermark: String,
-      textCol: String, k: Int = 3, numHashes: Int = 64,
-      keyHashes: Int = 64): DataFrame = {
-    require(keyHashes >= 1 && keyHashes <= numHashes,
-      s"keyHashes must be in [1, numHashes]: $keyHashes / $numHashes")
-    val sig = graft.functions.MinHashSig.minhash_sig(col(textCol), k, numHashes)
-    val key = (if (keyHashes == numHashes) sig else slice(sig, 1, keyHashes))
-      .cast(org.apache.spark.sql.types.StringType)
-    docs.withColumn("_neardup_sig", key)
-      .withWatermark(eventTimeCol, watermark)
-      .dropDuplicatesWithinWatermark("_neardup_sig")
-      .drop("_neardup_sig")
   }
 
   /** Stream-stream interval join: each left event matched to right events
@@ -268,35 +170,6 @@ object Streams {
     val prev = spark.conf.getOption(key)
     spark.conf.set(key, n.toString)
     try body finally prev.foreach(spark.conf.set(key, _))
-  }
-
-  /** Run `body` (stream starts inside it) with the RocksDB state store
-    * provider. The default HDFS-backed provider keeps every key's state
-    * ON-HEAP per executor — at 100-TB key cardinalities (billions of
-    * dedup keys, session windows, join rows inside the watermark) that is
-    * an OOM, not a tuning problem. RocksDB spills state to local SSD with
-    * an off-heap block cache, bounding executor heap by the write buffer,
-    * not the key count; changelog checkpointing keeps commits incremental.
-    * The provider is fixed at query START (it lives in the checkpoint), so
-    * this wraps query construction, not the session. */
-  def withRocksDbStateStore[T](spark: SparkSession)(body: => T): T = {
-    val keys = Seq(
-      "spark.sql.streaming.stateStore.providerClass" ->
-        ("org.apache.spark.sql.execution.streaming.state." +
-          "RocksDBStateStoreProvider"),
-      // changelog checkpointing: commit uploads only the delta since the
-      // last snapshot instead of full SST sets — the production setting
-      // for high-cardinality state at short trigger intervals
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" ->
-        "true")
-    val prevs = keys.map { case (k, _) => k -> spark.conf.getOption(k) }
-    keys.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body finally {
-      prevs.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None)    => spark.conf.unset(k)
-      }
-    }
   }
 
   /** Batch-driven smoke runner: stream a parquet directory through a

@@ -1,11 +1,9 @@
 package graft.viz
 
 /** Full ECharts config generation (SURVEY §2.11; `/root/reference/src/api/
-  * echarts_generator.py:14-616`): the reference's nine chart types — bar,
+  * echarts_generator.py:14-443`): the reference's nine chart types — bar,
   * line, pie, scatter, area, treemap, sunburst (falls back to bar like the
-  * reference's `generators.get(..., _generate_bar_config)`), heatmap, gauge
-  * — plus multi-series line/bar, data-driven chart-type suggestion, and the
-  * zoom/brush/toolbox interactive-feature decorator.
+  * reference's `generators.get(..., _generate_bar_config)`), heatmap, gauge.
   *
   * Pure config assembly over pre-aggregated rows: no Spark jobs here; the
   * data comes from the §2.9 aggregation shapes (`Visualization.dataFor`).
@@ -26,13 +24,7 @@ object Echarts {
   final case class JBool(b: Boolean) extends J
   case object JNull extends J
   final case class JArr(items: Seq[J]) extends J
-  final case class JObj(fields: Seq[(String, J)]) extends J {
-    def +(kv: (String, J)): JObj = JObj(fields :+ kv)
-    def get(k: String): Option[J] = fields.find(_._1 == k).map(_._2)
-    def updated(k: String, v: J): JObj =
-      if (fields.exists(_._1 == k)) JObj(fields.map(f => if (f._1 == k) k -> v else f))
-      else this + (k -> v)
-  }
+  final case class JObj(fields: Seq[(String, J)]) extends J
 
   object Json {
     import graft.service.MiniJson.escape
@@ -287,81 +279,6 @@ object Echarts {
         "max" -> of(maxValue)))))))
   }
 
-  /** Multi-series line/bar (`echarts_generator.py:488-553`). */
-  def multiSeries(data: Seq[Row], xField: String, yFields: Seq[String],
-      chartType: String = "line", title: Option[String] = None): JObj = {
-    require(chartType == "line" || chartType == "bar",
-      s"multi-series supports line|bar, got $chartType")
-    val series = yFields.map { y =>
-      JObj(Seq(
-        "name" -> JStr(y), "type" -> JStr(chartType),
-        "data" -> JArr(data.map(d => of(num(d, y)))),
-        "emphasis" -> JObj(Seq("focus" -> JStr("series")))) ++
-        (if (chartType == "line")
-          Seq("smooth" -> JBool(true), "symbol" -> JStr("circle"),
-            "symbolSize" -> JInt(6))
-         else Seq("itemStyle" -> JObj(Seq("borderRadius" -> JArr(
-           Seq(4, 4, 0, 0).map(i => JInt(i.toLong))))))))
-    }
-    JObj(titleObj(title) ++ Seq(
-      "tooltip" -> JObj(Seq(
-        "trigger" -> JStr("axis"),
-        "axisPointer" -> JObj(Seq("type" ->
-          JStr(if (chartType == "bar") "shadow" else "line"))))),
-      "legend" -> JObj(Seq(
-        "data" -> JArr(yFields.map(JStr(_))), "bottom" -> JStr("0%"))),
-      "grid" -> JObj(Seq(
-        "left" -> JStr("3%"), "right" -> JStr("4%"),
-        "bottom" -> JStr("12%"), "top" -> JStr("15%"),
-        "containLabel" -> JBool(true))),
-      "xAxis" -> JObj(Seq(
-        "type" -> JStr("category"),
-        "data" -> JArr(data.map(d => JStr(str(d, xField)))),
-        "boundaryGap" -> JBool(chartType == "bar"))),
-      "yAxis" -> JObj(Seq("type" -> JStr("value"))),
-      "series" -> JArr(series)))
-  }
-
-  /** Zoom / brush / toolbox decorator (`echarts_generator.py:558-616`). */
-  def addInteractiveFeatures(config: JObj, enableZoom: Boolean = false,
-      enableBrush: Boolean = false, enableToolbox: Boolean = true): JObj = {
-    var out = config
-    if (enableToolbox)
-      out = out.updated("toolbox", JObj(Seq("feature" -> JObj(Seq(
-        "saveAsImage" -> JObj(Seq("title" -> JStr("Save"))),
-        "dataView" -> JObj(Seq(
-          "title" -> JStr("Data"), "readOnly" -> JBool(true))),
-        "restore" -> JObj(Seq("title" -> JStr("Reset"))))))))
-    if (enableZoom) {
-      out = out.updated("dataZoom", JArr(Seq(
-        JObj(Seq("type" -> JStr("inside"), "start" -> JInt(0),
-          "end" -> JInt(100))),
-        JObj(Seq("type" -> JStr("slider"), "start" -> JInt(0),
-          "end" -> JInt(100), "bottom" -> JStr("0%"))))))
-      out.get("grid").foreach { case g: JObj =>
-        out = out.updated("grid", g.updated("bottom", JStr("15%")))
-      case _ => ()
-      }
-    }
-    if (enableBrush) {
-      out = out.updated("brush", JObj(Seq(
-        "toolbox" -> JArr(Seq("rect", "polygon", "keep", "clear").map(JStr(_))),
-        "brushLink" -> JStr("all"),
-        "throttleType" -> JStr("debounce"),
-        "throttleDelay" -> JInt(300))))
-      out.get("toolbox").foreach { case t: JObj =>
-        t.get("feature").foreach { case f: JObj =>
-          out = out.updated("toolbox", t.updated("feature",
-            f + ("brush" -> JObj(Seq("type" -> JArr(
-              Seq("rect", "polygon", "clear").map(JStr(_))))))))
-        case _ => ()
-        }
-      case _ => ()
-      }
-    }
-    out
-  }
-
   /** Dispatch like `generate_echarts_config` (py:27-62): unknown types —
     * including sunburst, which has no generator in the reference either —
     * fall back to bar. */
@@ -376,25 +293,6 @@ object Echarts {
     case "heatmap" => heatmap(data, xField, yField, title = title)
     case "gauge" => gauge(data, yField, title = title)
     case _ => bar(data, xField, yField, title) // sunburst & unknown
-  }
-
-  /** Chart-type suggestion (`echarts_generator.py:446-485`), driven by one
-    * tiny aggregate (dtype from schema, cardinality via countDistinct). */
-  def suggestChartType(df: org.apache.spark.sql.DataFrame,
-      xCol: String, yCol: String): String = {
-    import org.apache.spark.sql.functions.countDistinct
-    import org.apache.spark.sql.types._
-    if (!df.columns.contains(xCol) || !df.columns.contains(yCol)) return "bar"
-    val xDt = df.schema(xCol).dataType
-    val yDt = df.schema(yCol).dataType
-    if (xDt == DateType || xDt == TimestampType || xDt == TimestampNTZType)
-      return "line"
-    val xCard = df.agg(countDistinct(df(xCol))).head().getLong(0)
-    if (xCard >= 2 && xCard <= 6) "pie"
-    else if (xCard <= 20) "bar"
-    else if (xDt.isInstanceOf[NumericType] && yDt.isInstanceOf[NumericType])
-      "scatter"
-    else "bar"
   }
 
   /** DataFrame rows → the generator's row shape (bounded by `limit`). */

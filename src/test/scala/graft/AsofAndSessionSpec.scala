@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.operators.AsofJoin
 
-/** As-of join semantics + streaming/batch sessionization parity. */
+/** As-of join semantics + streaming/batch parity. */
 class AsofAndSessionSpec extends SparkSuite {
   import spark.implicits._
 
@@ -63,76 +63,6 @@ class AsofAndSessionSpec extends SparkSuite {
     assert(joined.select("o_orderkey").distinct().count() == orders.count())
   }
 
-  test("streaming sessionizer agrees with batch session_window on closed sessions") {
-    import graft.streaming.Streams._
-    implicit val s = spark
-
-    val events = graft.core.Tables.table(spark, sfDir, "events")
-    // batch twin: all sessions via session_window
-    val batch = events
-      .groupBy(col("user_id"), session_window(col("ts"), "30 minutes").as("sw"))
-      .agg(count(lit(1)).as("n_events"), sum(col("value")).as("total"))
-      .select(col("user_id"), col("sw.start").as("session_start"),
-        col("n_events"), col("total"))
-    // drop each user's LAST session — in a single micro-batch the trailing
-    // session stays open in state (only an event-time timeout flushes it)
-    val lastPerUser = batch.groupBy("user_id")
-      .agg(max("session_start").as("session_start"))
-    val expectClosed = batch.join(lastPerUser,
-      Seq("user_id", "session_start"), "left_anti")
-
-    val typed = events
-      .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
-        col("value")).as[Event]
-    // huge watermark delay → event-time timeouts can never fire during the
-    // test, so the emitted set is EXACTLY the gap-closed sessions (no race
-    // with the post-batch no-data micro-batch that handles timeouts)
-    val got = sessionizeEventTime(typed, watermark = "3650 days")
-      .select(col("user_id"), col("session_start"), col("n_events"),
-        col("total"))
-
-    val gotRows = got.collect().map(r => (r.getLong(0),
-      r.getTimestamp(1).getTime, r.getLong(2),
-      math.round(r.getDouble(3) * 1e6))).toSet
-    val expRows = expectClosed.collect().map(r => (r.getLong(0),
-      r.getTimestamp(1).getTime, r.getLong(2),
-      math.round(r.getDouble(3) * 1e6))).toSet
-    assert(gotRows == expRows)
-    assert(gotRows.nonEmpty)
-  }
-
-  test("event-time timeout flushes the trailing open session") {
-    import graft.streaming.Streams._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val s = spark
-    implicit val sqlCtx = spark.sqlContext
-    def ev(id: Long, tMin: Long, user: Long) =
-      Event(id, new java.sql.Timestamp(tMin * 60000L), user, "t", 1.0)
-
-    val src = MemoryStream[Event]
-    val sessions = sessionizeEventTime(src.toDS(), watermark = "0 seconds")
-    val q = sessions.writeStream.outputMode("append")
-      .format("memory").queryName("sess_timeout_test").start()
-    try {
-      // batch 1: user 1's session ends at t=5; user 9's lone event at t=600
-      // pushes the watermark far past 5 + 30min gap. (Events start at t=1:
-      // the initial watermark is 0 and the late-row filter drops ts <= wm.)
-      src.addData(ev(1, 1, 1), ev(2, 5, 1), ev(3, 600, 9))
-      q.processAllAvailable()
-      // batch 2: unrelated user keeps the query moving; user 1's open session
-      // times out against the batch-1 watermark (600 min) and is emitted
-      src.addData(ev(4, 601, 8))
-      q.processAllAvailable()
-      val flushed = spark.table("sess_timeout_test")
-        .filter(col("user_id") === 1L).collect()
-      assert(flushed.length == 1)
-      assert(flushed.head.getAs[Long]("n_events") == 2L)
-      assert(flushed.head.getAs[java.sql.Timestamp]("session_start").getTime == 60000L)
-      assert(flushed.head.getAs[java.sql.Timestamp]("session_end").getTime
-        == 5 * 60000L + 30 * 60000L)
-    } finally q.stop()
-  }
-
   test("streaming CDC latest-state converges to the batch applyChanges result") {
     import graft.streaming.Streams._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -181,51 +111,6 @@ class AsofAndSessionSpec extends SparkSuite {
         .select("pid", "rid").collect().map(_.toSeq).toSet
       assert(got == naive(inc), s"inc=$inc width=$width")
     }
-  }
-
-  test("streaming near-dup dedup: identical signatures collapse on the stream") {
-    import graft.streaming.Streams
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = spark.sqlContext
-    val src = MemoryStream[(java.sql.Timestamp, Long, String)]
-    val docs = src.toDS().toDF("ts", "doc_id", "text")
-    val deduped = Streams.nearDupStream(docs, "ts", "1 hour", "text")
-    val q = deduped.writeStream.outputMode("append")
-      .format("memory").queryName("neardup_test").start()
-    def t(min: Long) = new java.sql.Timestamp(min * 60000L)
-    try {
-      val base = "the quick brown fox jumps over the lazy dog again and again"
-      // doc 2 is byte-identical to doc 1 → same signature → dropped;
-      // doc 3 is a different text → survives
-      src.addData((t(10), 1L, base), (t(11), 2L, base),
-        (t(12), 3L, "completely different words in this other document here"))
-      q.processAllAvailable()
-      val ids = spark.table("neardup_test").collect()
-        .map(_.getLong(1)).sorted.toSeq
-      assert(ids == Seq(1L, 3L))
-    } finally q.stop()
-  }
-
-  test("streaming dedup drops in-watermark duplicates, keeps distinct rows") {
-    import graft.streaming.Streams
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = spark.sqlContext
-    val src = MemoryStream[(java.sql.Timestamp, Long, String)]
-    val events = src.toDS().toDF("ts", "uid", "kind")
-    val deduped = Streams.dedupStream(events, "ts", "1 hour")
-    val q = deduped.writeStream.outputMode("append")
-      .format("memory").queryName("dedup_test").start()
-    def t(min: Long) = new java.sql.Timestamp(min * 60000L)
-    try {
-      // same (uid, kind) twice at different ts within the watermark → one
-      // survivor; distinct kinds both survive
-      src.addData((t(10), 1L, "a"), (t(11), 1L, "a"), (t(12), 1L, "b"),
-        (t(13), 2L, "a"))
-      q.processAllAvailable()
-      val got = spark.table("dedup_test").collect()
-        .map(r => (r.getLong(1), r.getString(2))).sorted.toSeq
-      assert(got == Seq((1L, "a"), (1L, "b"), (2L, "a")))
-    } finally q.stop()
   }
 
   test("streaming quality monitor aggregates per window x source, matches batch kernels") {

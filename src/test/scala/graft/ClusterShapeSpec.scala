@@ -165,40 +165,6 @@ class ClusterShapeSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
-  test("RocksDB state store engages inside executor processes") {
-    // the JNI library + provider classloading must work in the forked
-    // executor JVMs, not just the driver's
-    import scala.jdk.CollectionConverters._
-    import org.apache.spark.sql.streaming.OutputMode
-    val stageDir = java.nio.file.Files.createTempDirectory("graft_crocks")
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get("/root/testdata/sf0.001/events.parquet"),
-      stageDir.resolve("events.parquet"))
-    val schema = cluster.read.parquet(stageDir.toString).schema
-    val q = graft.streaming.Streams.withStatePartitions(cluster, 4) {
-      graft.streaming.Streams.withRocksDbStateStore(cluster) {
-        val stream = cluster.readStream.schema(schema)
-          .parquet(stageDir.toString)
-        val out = graft.streaming.Streams.dedupStream(
-          graft.core.Tables.withEventTime(stream)
-            .select(col("event_id"), col("ts"), col("user_id"),
-              col("event_type")),
-          "ts", "10 minutes", Seq("user_id", "event_type"))
-        val qq = out.writeStream.outputMode(OutputMode.Append())
-          .format("memory").queryName("cluster_rocks").start()
-        try qq.processAllAvailable() finally qq.stop()
-        qq
-      }
-    }
-    val metricKeys = q.recentProgress.toSeq
-      .flatMap(p => Option(p.stateOperators).toSeq.flatMap(_.toSeq))
-      .flatMap(_.customMetrics.keySet.asScala)
-    assert(metricKeys.exists(_.toLowerCase.contains("rocksdb")))
-    val batch = cluster.read.parquet(stageDir.toString)
-      .select(col("user_id"), col("event_type")).distinct().count()
-    assert(cluster.table("cluster_rocks").count() == batch)
-  }
-
   test("Reliable checkpoint survives an executor kill mid-iteration") {
     // the reason Reliable exists: blocks of a localCheckpoint die with
     // their executor and ABORT the job; file-backed checkpoints recompute.

@@ -105,33 +105,6 @@ class R5bOperatorSpec extends SparkSuite {
       Audit.wasserstein1(x, y, "value", shards = 32).collect().head.toSeq)
   }
 
-  test("SnapshotDiff.diffColumns: metadata-only changes classify as " +
-      "changed; boundary shifts and null-vs-empty never collide") {
-    import spark.implicits._
-    import graft.operators.SnapshotDiff
-    val old_ = Seq(
-      (1L, Some("a"), "en"),  // unchanged
-      (2L, Some("b"), "en"),  // metadata-only change (lang flips)
-      (3L, Some(""), "en"),   // null-vs-empty must differ
-      (4L, Some("ab"), "c")   // boundary: ("ab","c") vs ("a","bc")
-    ).toDF("id", "t", "l")
-    val new_ = Seq(
-      (1L, Some("a"), "en"),
-      (2L, Some("b"), "de"),
-      (3L, Option.empty[String], "en"),
-      (4L, Some("a"), "bc")
-    ).toDF("id", "t", "l")
-    val got = rowsOf(SnapshotDiff.diffColumns(old_, new_, "id",
-      Seq("t", "l")).orderBy("id"))
-    assert(got == Seq(Seq(1L, "unchanged"), Seq(2L, "changed"),
-      Seq(3L, "changed"), Seq(4L, "changed")))
-    // single-column diffBy sees doc 2 as unchanged — the multi-column
-    // variant exists precisely for that blind spot
-    val single = rowsOf(SnapshotDiff.diff(old_, new_, "id", "t")
-      .orderBy("id"))
-    assert(single(1) == Seq(2L, "unchanged"))
-  }
-
   test("TableManifest: re-derived manifest matches the written one; a " +
       "truncated file and a lost file both surface in the diff") {
     import graft.io.TableManifest
@@ -141,14 +114,14 @@ class R5bOperatorSpec extends SparkSuite {
       .write.mode("overwrite").parquet(base)
     val m1 = TableManifest.parquetManifest(spark, base, "doc_id")
     val m2 = TableManifest.parquetManifest(spark, base, "doc_id")
-    assert(TableManifest.manifestDiff(m1, m2).count() == 0L)
+    assert(m1.exceptAll(m2).isEmpty && m2.exceptAll(m1).isEmpty)
     assert(m1.count() == 3L)
     // simulate one lost part file and one truncated one
     val broken = m2.filter(col("file_part") =!= "00002")
       .withColumn("n_rows", when(col("file_part") === "00001",
         col("n_rows") - 1).otherwise(col("n_rows")))
-    val diff = TableManifest.manifestDiff(m1, broken)
-      .select("file_part").collect().map(_.getString(0)).sorted
+    val diff = m1.exceptAll(broken).select("file_part")
+      .collect().map(_.getString(0)).sorted
     assert(diff.toSeq == Seq("00001", "00002"))
   }
 

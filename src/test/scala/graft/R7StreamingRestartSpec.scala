@@ -6,9 +6,10 @@ import org.apache.spark.sql.streaming.OutputMode
 /** Streaming stop/restart-from-checkpoint recovery — the gap the
   * executor-KILL test (batch Reliable checkpoints) does not cover: a
   * streaming query killed between micro-batches must resume from its
-  * checkpoint (RocksDB provider + changelog commits) with state intact
-  * and source offsets exactly-once. Protocol: stage input files in two
-  * phases, stop the query after phase 1, restart the SAME query
+  * checkpoint (on the session's default state store, the one the
+  * streaming gates run on) with state intact and source offsets
+  * exactly-once. Protocol: stage input files in two phases, stop the
+  * query after phase 1, restart the SAME query
   * definition from the SAME checkpoint dir, and prove the final result
   * equals a one-shot replay of all the data.
   */
@@ -21,7 +22,7 @@ class R7StreamingRestartSpec extends SparkSuite {
     d
   }
 
-  test("windowedCounts survives stop/restart from RocksDB checkpoint " +
+  test("windowedCounts survives stop/restart from its checkpoint " +
     "(complete mode, no double-count, phase-1 windows retained)") {
     val base = freshDir()
     val inDir = s"$base/in"; val ckpt = s"$base/ckpt"
@@ -32,7 +33,7 @@ class R7StreamingRestartSpec extends SparkSuite {
     events.filter(col("event_id") % 2 === 0)
       .coalesce(1).write.parquet(s"$inDir/p1")
     val schema = spark.read.parquet(s"$inDir/p1").schema
-    def runOnce(): Unit = Streams.withRocksDbStateStore(spark) {
+    def runOnce(): Unit = {
       val q = Streams.windowedCounts(
         spark.readStream.schema(schema)
           .option("pathGlobFilter", "*.parquet").parquet(s"$inDir/*"),
@@ -85,7 +86,7 @@ class R7StreamingRestartSpec extends SparkSuite {
         Streams.Change(id, ts(5000), "upsert", -1.0))
     p1.toDF().coalesce(1).write.parquet(s"$inDir/p1")
     val schema = spark.read.parquet(s"$inDir/p1").schema
-    def runOnce(): Unit = Streams.withRocksDbStateStore(spark) {
+    def runOnce(): Unit = {
       val q = Streams.cdcLatestState(
         spark.readStream.schema(schema).parquet(s"$inDir/*").as[Streams.Change])
         .writeStream.outputMode(OutputMode.Update())

@@ -38,17 +38,6 @@ class ScaleSpec extends SparkSuite {
     assert(math.abs(s.getAs[Double]("total") - p.getAs[Double]("total")) < 1e-6)
   }
 
-  test("salted join equals plain join and spreads the hot key") {
-    val fact = (1 to 1000).map(i => (if (i % 5 == 0) i % 7 else 3, i))
-      .toDF("dim_id", "x")
-    val dim = (0 to 6).map(i => (i, s"name_$i")).toDF("dim_id", "name")
-    val saltedOut = Skew.saltedJoin(fact, dim, "dim_id", saltBuckets = 4)
-    val plainOut = fact.join(dim, "dim_id")
-    assert(saltedOut.count() == plainOut.count())
-    assert(saltedOut.agg(sum("x")).head().getLong(0) ==
-      plainOut.agg(sum("x")).head().getLong(0))
-  }
-
   test("asof join plans one keyed exchange and never a nested loop") {
     val orders = graft.core.Tables.table(spark, sfDir, "orders")
       .select(col("o_orderkey"), col("o_custkey"), col("o_orderdate"))
@@ -297,8 +286,8 @@ class ScaleSpec extends SparkSuite {
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10MB")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      val joined = Bucketing.readTable(spark, "lineitem_b")
-        .join(Bucketing.readTable(spark, "orders_b"), "key")
+      val joined = spark.table("lineitem_b")
+        .join(spark.table("orders_b"), "key")
       val plan = joined.queryExecution.executedPlan.toString
       // co-located bucketed join: SortMergeJoin with NO ShuffleExchange
       assert(plan.contains("SortMergeJoin"))

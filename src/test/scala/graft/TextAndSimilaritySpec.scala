@@ -415,31 +415,8 @@ class TextAndSimilaritySpec extends SparkSuite {
     val evil = Codecs.encodeWavPcm16(Array.fill[Short](100)(5), 8000)
     evil(16) = -1; evil(17) = -1; evil(18) = -1; evil(19) = -1 // fmt size -1
     assert(Codecs.decodeWav(evil).isEmpty)
-    // decodeMetadata: wipe the metadata columns — real dims/durations come
-    // back from the BYTES for decodable rows; opaque rows stay null
     val corpus = Multimodal.syntheticCorpus(spark, 16)
-    val wiped = corpus
-      .withColumn("mime", lit(null).cast("string"))
-      .withColumn("width", lit(null).cast("int"))
-      .withColumn("height", lit(null).cast("int"))
-      .withColumn("duration_ms", lit(null).cast("long"))
-    val restored = Multimodal.decodeMetadata(wiped)
-      .select("media_id", "mime", "width", "height", "duration_ms")
-      .collect().map(r => r.getLong(0) -> r).toMap
     val original = corpus.collect().map(r => r.getLong(0) -> r).toMap
-    (0L until 16L).foreach { id =>
-      val o = original(id); val g = restored(id)
-      (id % 4) match {
-        case 0 | 1 => // real image containers: dims recovered from bytes
-          assert(g.getAs[Int]("width") == o.getAs[Int]("width"))
-          assert(g.getAs[Int]("height") == o.getAs[Int]("height"))
-        case 2 => // WAV: duration recovered from bytes
-          assert(g.getAs[Long]("duration_ms") == o.getAs[Long]("duration_ms"))
-          assert(g.getAs[String]("mime") == "audio/wav")
-        case _ => // opaque: nothing recoverable
-          assert(g.isNullAt(g.fieldIndex("mime")))
-      }
-    }
     // real features: image rows lead with [width, height, ...]
     val feats = Multimodal.extractFeatures(corpus).collect()
       .map(f => f.media_id -> f.feature).toMap
@@ -556,24 +533,6 @@ class TextAndSimilaritySpec extends SparkSuite {
     val path = java.nio.file.Files.createTempDirectory("bpe").toString + "/m.json"
     Bpe.save(merges, spark, path)
     assert(Bpe.load(spark, path) == merges)
-  }
-
-  test("chooseBanding lands the s-curve inflection near the threshold") {
-    // classic 64-hash cases: high thresholds want few bands of many rows
-    val (bHi, rHi) = MinHashDedup.chooseBanding(64, 0.9)
-    val (bLo, rLo) = MinHashDedup.chooseBanding(64, 0.3)
-    assert(bHi * rHi == 64 && bLo * rLo == 64)
-    assert(bHi < bLo) // lower threshold → more bands (more permissive)
-    // the chosen banding is actually the best factorization on offer
-    for ((b, r) <- Seq((bHi, rHi))) {
-      val err = math.abs(math.pow(1.0 / b, 1.0 / r) - 0.9)
-      val all = (1 to 64).filter(64 % _ == 0).map(x => (x, 64 / x))
-      assert(all.forall { case (b2, r2) =>
-        math.abs(math.pow(1.0 / b2, 1.0 / r2) - 0.9) >= err - 1e-12 })
-    }
-    // probability curve: steep around the inflection, monotone
-    val p = MinHashDedup.candidateProbability(_: Double, 16, 4)
-    assert(p(0.95) > 0.99 && p(0.1) < 0.01 && p(0.5) > p(0.2))
   }
 
   test("rarityScoreTable: common words score high, OOV toggles with vocabK") {

@@ -52,6 +52,7 @@ class ResponseCacheSpec extends SparkSuite {
   private def task[T](f: => T): Callable[T] = () => f
 
   private def withServer[T](http: HttpFacade)(f: Int => T): T = {
+    org.apache.spark.sql.SparkSession.setActiveSession(spark) // the one it serves
     val port = http.start()
     try f(port) finally http.stop()
   }
