@@ -4873,7 +4873,7 @@ object ExtraQueries {
       val n = li.filter(col("l_extendedprice").isNotNull).count()
       val ks = Seq(1L, n / 4, n / 2, (3 * n) / 4, n).distinct.filter(_ >= 1)
       graft.operators.ExactQuantile
-        .kthSmallestMulti(s, li, "l_extendedprice", ks,
+        .kthSmallestMulti(li, "l_extendedprice", ks,
           bins = 4096, directCutoff = 5000L)
         .orderBy(col("k"))
     },
@@ -4983,7 +4983,7 @@ object ExtraQueries {
       // approximation) + when-chain assignment; DuckDB re-derives the same
       // cuts by row_number and counts distinct cuts below each value
       graft.operators.ExactQuantile.equiDepthBucketize(
-          s, t(s, dir, "events"), "value", b = 8,
+          t(s, dir, "events"), "value", b = 8,
           bins = 256, directCutoff = 5000L)
         .select(col("event_id"), col("bin"))
         .orderBy(col("event_id")),

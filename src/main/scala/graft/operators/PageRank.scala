@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType}
 import graft.core.Checkpoints
@@ -33,10 +33,49 @@ object PageRank {
       dampNum: Long = 85L, dampDen: Long = 100L,
       redistributeDangling: Boolean = false,
       mode: Checkpoints.Mode = Checkpoints.Local,
-      driverCutoff: Long = 2000000L): DataFrame = {
+      driverCutoff: Long = 2000000L): DataFrame =
+    engine(edges, srcCol, dstCol, None, redistributeDangling, iterations,
+      unit, dampNum, dampDen, mode, driverCutoff)
+
+  /** TrustRank — personalized PageRank with teleportation RESTRICTED to a
+    * trusted seed set (Gyöngyi et al., "Combating Web Spam with
+    * TrustRank", VLDB 2004): rank flows outward from curated seeds, so a
+    * spam farm can't bootstrap authority among itself the way it can
+    * under uniform teleport. The corpus-curation use: score = proximity
+    * to trusted sources, the weighted complement of [[Bfs]] hop distance.
+    *
+    * The same engine as [[run]] with the seeds as the teleport set.
+    * Dangling mass is redistributed to the SEEDS (the TrustRank
+    * convention — lost mass returns to the teleport distribution). Seed
+    * ids that touch no edge are not nodes and carry no rank. */
+  def trustRank(edges: DataFrame, srcCol: String, dstCol: String,
+      seeds: DataFrame, seedCol: String,
+      iterations: Int = 3, unit: Long = 1000000L,
+      dampNum: Long = 85L, dampDen: Long = 100L,
+      mode: Checkpoints.Mode = Checkpoints.Local,
+      driverCutoff: Long = 2000000L): DataFrame =
+    engine(edges, srcCol, dstCol,
+      Some(seeds.select(col(seedCol).as("id")).distinct()),
+      redistributeDangling = true, iterations, unit, dampNum, dampDen, mode,
+      driverCutoff)
+
+  /** The one fixed-point iteration. `seedIds` is the teleport set (an
+    * `id` column): None teleports to every node, the plain PageRank case,
+    * with no seed table and no seed count. With sN teleport nodes in the
+    * graph, each round gives every teleport node floor((1-d)/sN) plus its
+    * damped incoming sum, and with `redistributeDangling` also
+    * floor(sink mass / sN) before damping; every other node gets its
+    * damped incoming sum only. With every node a seed, sN = N and this is
+    * PageRank bit for bit. */
+  private def engine(edges: DataFrame, srcCol: String, dstCol: String,
+      seedIds: Option[DataFrame], redistributeDangling: Boolean,
+      iterations: Int, unit: Long, dampNum: Long, dampDen: Long,
+      mode: Checkpoints.Mode, driverCutoff: Long): DataFrame = {
     require(iterations >= 1 && unit > 0 && dampNum > 0 && dampDen > dampNum,
       s"bad PageRank params: iterations=$iterations unit=$unit " +
         s"damping=$dampNum/$dampDen")
+    val noTeleport = "no teleport node in the graph: PageRank needs an " +
+      "edge, TrustRank at least one seed present in the graph"
     val src = col(srcCol).as("id")
     val dst = col(dstCol).as("id")
     // SMALL-GRAPH FAST PATH (bounded-collect contract of [[SmallGraph]]):
@@ -48,129 +87,15 @@ object PageRank {
     // DOUBLE division, which agrees with long division only while
     // rank·deg < 2^53 (misrounding needs error ≥ distance-to-integer,
     // i.e. a·2⁻⁵³ ≥ 1/b) — the guard keeps both paths inside that range,
-    // and oversized units take the distributed loop unchanged.
+    // and oversized units take the distributed loop unchanged. Seeds ride
+    // the collect as extras; ids outside the graph (extras that touch no
+    // edge) are excluded from the node set exactly like the distributed
+    // node table, which is built from edge endpoints only.
     if (unit <= 1000000000L && dampDen <= 1000000L &&
-        edges.count() <= driverCutoff) {
-      SmallGraph.collect(edges.select(col(srcCol), col(dstCol)), None)
+        edges.count() <= driverCutoff &&
+        seedIds.forall(_.count() <= driverCutoff)) {
+      SmallGraph.collect(edges.select(col(srcCol), col(dstCol)), seedIds)
         match {
-        case Some(m) =>
-          val n = m.n // distinct endpoints == the distributed node count
-          val r0 = unit / n
-          val base = (unit * (dampDen - dampNum)) / (dampDen * n)
-          val deg = new Array[Long](n)
-          var i = 0
-          while (i < m.us.length) { deg(m.us(i)) += 1; i += 1 }
-          var rank = Array.fill(n)(r0)
-          var it = 0
-          while (it < iterations) {
-            var sink = 0L
-            if (redistributeDangling) {
-              i = 0
-              while (i < n) { if (deg(i) == 0) sink += rank(i); i += 1 }
-            }
-            val share = if (redistributeDangling) sink / n else 0L
-            val sums = new Array[Long](n)
-            i = 0
-            while (i < m.us.length) {
-              sums(m.vs(i)) += rank(m.us(i)) / deg(m.us(i)); i += 1
-            }
-            val nextR = new Array[Long](n)
-            i = 0
-            while (i < n) {
-              nextR(i) = base + dampNum * (sums(i) + share) / dampDen
-              i += 1
-            }
-            rank = nextR
-            it += 1
-          }
-          val out = scala.collection.mutable.ArrayBuffer
-            .empty[org.apache.spark.sql.Row]
-          i = 0
-          while (i < n) {
-            out += org.apache.spark.sql.Row(m.idValue(i), rank(i)); i += 1
-          }
-          val schema = org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("id",
-              edges.select(col(srcCol)).schema.head.dataType),
-            org.apache.spark.sql.types.StructField("rank",
-              org.apache.spark.sql.types.LongType)))
-          return SmallGraph.rideBack(edges.sparkSession, out.toSeq, schema)
-        case None => () // unsafe id types: distributed loop below
-      }
-    }
-    val nodes = edges.select(src).union(edges.select(dst)).distinct()
-    val deg = edges.groupBy(col(srcCol).as("id"))
-      .agg(count(lit(1)).as("_deg"))
-    // the only driver-side values: two bounded scalars
-    val n = nodes.count()
-    val r0 = unit / n                                  // floor init mass
-    val base = (unit * (dampDen - dampNum)) / (dampDen * n) // floor (1-d)/N
-
-    var ranks = nodes.select(col("id"), lit(r0).as("rank"))
-    for (_ <- 1 to iterations) {
-      // per-node share of sink mass this round (a 1-row broadcast frame)
-      val share =
-        if (redistributeDangling)
-          ranks.join(deg, Seq("id"), "left_anti")
-            .agg(expr(s"CAST(COALESCE(SUM(rank), 0) DIV $n AS BIGINT)")
-              .as("_share"))
-        else ranks.sparkSession.sql("SELECT CAST(0 AS BIGINT) AS _share")
-      val contrib = edges
-        .select(col(srcCol).as("id"), col(dstCol).as("_dst"))
-        .join(ranks, Seq("id"))
-        .join(deg, Seq("id"))
-        .select(col("_dst").as("id"),
-          floor(col("rank").cast(DoubleType) / col("_deg").cast(DoubleType))
-            .cast(LongType).as("_c"))
-        .groupBy(col("id")).agg(sum(col("_c")).as("_s"))
-      val next = nodes.join(contrib, Seq("id"), "left")
-        .crossJoin(broadcast(share))
-        .select(col("id"),
-          (lit(base) +
-            floor((lit(dampNum) *
-              (coalesce(col("_s"), lit(0L)) + col("_share")))
-              .cast(DoubleType) / lit(dampDen).cast(DoubleType))
-              .cast(LongType)).as("rank"))
-      ranks = Checkpoints.cut(next, mode)
-    }
-    ranks
-  }
-
-  /** TrustRank — personalized PageRank with teleportation RESTRICTED to a
-    * trusted seed set (Gyöngyi et al., "Combating Web Spam with
-    * TrustRank", VLDB 2004): rank flows outward from curated seeds, so a
-    * spam farm can't bootstrap authority among itself the way it can
-    * under uniform teleport. The corpus-curation use: score = proximity
-    * to trusted sources, the weighted complement of [[Bfs]] hop distance.
-    *
-    * Same fixed-point integer arithmetic and per-round physical shape as
-    * [[run]] (one src join + one dst aggregate + one left join back, all
-    * hash-partitioned, lineage-cut), plus the seed flag carried on the
-    * node table. Dangling mass is redistributed to the SEEDS (the
-    * TrustRank convention — lost mass returns to the teleport
-    * distribution), one bounded aggregate + 1-row broadcast per round. */
-  def trustRank(edges: DataFrame, srcCol: String, dstCol: String,
-      seeds: DataFrame, seedCol: String,
-      iterations: Int = 3, unit: Long = 1000000L,
-      dampNum: Long = 85L, dampDen: Long = 100L,
-      mode: Checkpoints.Mode = Checkpoints.Local,
-      driverCutoff: Long = 2000000L): DataFrame = {
-    require(iterations >= 1 && unit > 0 && dampNum > 0 && dampDen > dampNum,
-      s"bad TrustRank params: iterations=$iterations unit=$unit " +
-        s"damping=$dampNum/$dampDen")
-    val src = col(srcCol).as("id")
-    val dst = col(dstCol).as("id")
-    val graphNodes = edges.select(src).union(edges.select(dst)).distinct()
-    val seedIds = seeds.select(col(seedCol).as("id")).distinct()
-    // SMALL-GRAPH FAST PATH — same integer-exact replay argument and
-    // magnitude guard as [[run]]; seeds ride the collect as extras and
-    // ids outside the graph (extras that touch no edge) are excluded
-    // from the node set exactly like the distributed node table, which
-    // is built from edge endpoints only.
-    if (unit <= 1000000000L && dampDen <= 1000000L &&
-        edges.count() <= driverCutoff && seedIds.count() <= driverCutoff) {
-      SmallGraph.collect(edges.select(col(srcCol), col(dstCol)),
-          Some(seedIds)) match {
         case Some(m) =>
           val n = m.n
           val inGraph = new Array[Boolean](n)
@@ -178,32 +103,26 @@ object PageRank {
           while (i < m.us.length) {
             inGraph(m.us(i)) = true; inGraph(m.vs(i)) = true; i += 1
           }
-          val isSeed = new Array[Boolean](n)
-          i = 0
-          while (i < m.extraIdx.length) {
-            isSeed(m.extraIdx(i)) = true; i += 1
+          val tele = if (seedIds.isEmpty) inGraph else {
+            val t = new Array[Boolean](n)
+            m.extraIdx.foreach(x => t(x) = inGraph(x))
+            t
           }
-          var sN = 0L
-          i = 0
-          while (i < n) { if (inGraph(i) && isSeed(i)) sN += 1; i += 1 }
-          require(sN > 0,
-            "TrustRank needs at least one seed present in the graph")
+          val sN = tele.count(identity).toLong
+          require(sN > 0, noTeleport)
           val r0 = unit / sN
-          val baseSeed = (unit * (dampDen - dampNum)) / (dampDen * sN)
+          val base = (unit * (dampDen - dampNum)) / (dampDen * sN)
           val deg = new Array[Long](n)
           i = 0
           while (i < m.us.length) { deg(m.us(i)) += 1; i += 1 }
-          var rank = new Array[Long](n)
-          i = 0
-          while (i < n) {
-            if (inGraph(i) && isSeed(i)) rank(i) = r0; i += 1
-          }
+          var rank = Array.tabulate(n)(x => if (tele(x)) r0 else 0L)
           var it = 0
           while (it < iterations) {
+            // ids outside the graph hold rank 0, so they add nothing here
             var sink = 0L
-            i = 0
-            while (i < n) {
-              if (inGraph(i) && deg(i) == 0) sink += rank(i); i += 1
+            if (redistributeDangling) {
+              i = 0
+              while (i < n) { if (deg(i) == 0) sink += rank(i); i += 1 }
             }
             val share = sink / sN
             val sums = new Array[Long](n)
@@ -214,11 +133,9 @@ object PageRank {
             val nextR = new Array[Long](n)
             i = 0
             while (i < n) {
-              if (inGraph(i)) {
-                val tele = if (isSeed(i)) baseSeed else 0L
-                val sh = if (isSeed(i)) share else 0L
-                nextR(i) = tele + dampNum * (sums(i) + sh) / dampDen
-              }
+              nextR(i) =
+                if (tele(i)) base + dampNum * (sums(i) + share) / dampDen
+                else dampNum * sums(i) / dampDen
               i += 1
             }
             rank = nextR
@@ -242,29 +159,40 @@ object PageRank {
         case None => () // unsafe id types: distributed loop below
       }
     }
-    val nodes = Checkpoints.cut(
-      graphNodes.join(seedIds.select(col("id"), lit(true).as("_seed")),
-          Seq("id"), "left")
-        .select(col("id"), coalesce(col("_seed"), lit(false)).as("_seed")),
-      mode)
+    val graphNodes = edges.select(src).union(edges.select(dst)).distinct()
+    // the node table and the only driver-side value, the teleport count
+    val (nodes, sN) = seedIds match {
+      case None => (graphNodes, graphNodes.count())
+      case Some(s) =>
+        val flagged = Checkpoints.cut(
+          graphNodes.join(s.select(col("id"), lit(true).as("_seed")),
+              Seq("id"), "left")
+            .select(col("id"),
+              coalesce(col("_seed"), lit(false)).as("_seed")),
+          mode)
+        (flagged, flagged.where(col("_seed")).count())
+    }
+    require(sN > 0, noTeleport)
+    def onTeleport(c: Column): Column =
+      if (seedIds.isEmpty) c else when(col("_seed"), c).otherwise(lit(0L))
     val deg = edges.groupBy(col(srcCol).as("id"))
       .agg(count(lit(1)).as("_deg"))
-    // the only driver-side value: the in-graph seed count
-    val sN = nodes.where(col("_seed")).count()
-    require(sN > 0, "TrustRank needs at least one seed present in the graph")
-    val r0 = unit / sN
-    val baseSeed = (unit * (dampDen - dampNum)) / (dampDen * sN)
+    val r0 = unit / sN                                  // floor init mass
+    val base = (unit * (dampDen - dampNum)) / (dampDen * sN) // floor (1-d)/sN
 
-    var ranks = nodes.select(col("id"), col("_seed"),
-      when(col("_seed"), lit(r0)).otherwise(lit(0L)).as("rank"))
+    var ranks = nodes.select(col("id"), onTeleport(lit(r0)).as("rank"))
     for (_ <- 1 to iterations) {
-      // dangling mass returns to the teleport (= seed) distribution
-      val share = ranks.join(deg, Seq("id"), "left_anti")
-        .agg(expr(s"CAST(COALESCE(SUM(rank), 0) DIV $sN AS BIGINT)")
-          .as("_share"))
+      // per-teleport-node share of sink mass this round (a 1-row
+      // broadcast frame)
+      val share =
+        if (redistributeDangling)
+          ranks.join(deg, Seq("id"), "left_anti")
+            .agg(expr(s"CAST(COALESCE(SUM(rank), 0) DIV $sN AS BIGINT)")
+              .as("_share"))
+        else ranks.sparkSession.sql("SELECT CAST(0 AS BIGINT) AS _share")
       val contrib = edges
         .select(col(srcCol).as("id"), col(dstCol).as("_dst"))
-        .join(ranks.select(col("id"), col("rank")), Seq("id"))
+        .join(ranks, Seq("id"))
         .join(deg, Seq("id"))
         .select(col("_dst").as("id"),
           floor(col("rank").cast(DoubleType) / col("_deg").cast(DoubleType))
@@ -272,16 +200,15 @@ object PageRank {
         .groupBy(col("id")).agg(sum(col("_c")).as("_s"))
       val next = nodes.join(contrib, Seq("id"), "left")
         .crossJoin(broadcast(share))
-        .select(col("id"), col("_seed"),
-          (when(col("_seed"), lit(baseSeed)).otherwise(lit(0L)) +
+        .select(col("id"),
+          (onTeleport(lit(base)) +
             floor((lit(dampNum) *
-              (coalesce(col("_s"), lit(0L)) +
-                when(col("_seed"), col("_share")).otherwise(lit(0L))))
+              (coalesce(col("_s"), lit(0L)) + onTeleport(col("_share"))))
               .cast(DoubleType) / lit(dampDen).cast(DoubleType))
               .cast(LongType)).as("rank"))
       ranks = Checkpoints.cut(next, mode)
     }
-    ranks.select(col("id"), col("rank"))
+    ranks
   }
 
   /** Per-node degree report: out- and in-degree from two key aggregates

@@ -27,29 +27,6 @@ object Streams {
         col("event_type"), col("n"), col("total_value"))
   }
 
-  final case class Event(event_id: Long, ts: java.sql.Timestamp, user_id: Long,
-      event_type: String, value: Double)
-  final case class SessionState(nEvents: Long, total: Double, lastTs: Long)
-  final case class SessionOut(user_id: Long, nEvents: Long, total: Double)
-
-  /** Per-user session aggregation via mapGroupsWithState with processing-time
-    * timeout — the reference has no stateful operator at all; this is the
-    * canonical Spark shape for one. */
-  def sessionize(events: Dataset[Event], gapMs: Long = 30 * 60 * 1000)(
-      implicit spark: SparkSession): Dataset[SessionOut] = {
-    import spark.implicits._
-    events.groupByKey(_.user_id)
-      .mapGroupsWithState[SessionState, SessionOut](GroupStateTimeout.NoTimeout) {
-        (userId: Long, evts: Iterator[Event], state: GroupState[SessionState]) =>
-          val prev = state.getOption.getOrElse(SessionState(0L, 0.0, 0L))
-          val next = evts.foldLeft(prev) { (s, e) =>
-            SessionState(s.nEvents + 1, s.total + e.value, math.max(s.lastTs, e.ts.getTime))
-          }
-          state.update(next)
-          SessionOut(userId, next.nEvents, next.total)
-      }
-  }
-
   final case class Change(id: Long, ts: java.sql.Timestamp, op: String,
       value: Double)
   final case class LatestState(tsMs: Long, op: String, value: Double)
@@ -86,15 +63,6 @@ object Streams {
       }
   }
 
-  /** Stream-stream interval join: each left event matched to right events
-    * with the same keys whose event time falls within
-    * `[leftTs - before, leftTs + after]` — the canonical streaming
-    * enrichment (impressions ⋈ clicks within N minutes), and the streaming
-    * twin of `operators/RangeJoin`. BOTH sides carry watermarks and the
-    * condition bounds the time range in BOTH directions — exactly what
-    * Structured Streaming requires to evict buffered rows, so per-key state
-    * stays one watermark window deep regardless of stream length. Right
-    * columns are suffixed `_r` so self-joins on one schema stay referable. */
   /** Streaming corpus-quality monitor — the streaming face of
     * `CorpusStats.corpusCard`: per (window × source) document counts, token
     * totals, and mean quality score over an incoming document stream. All
@@ -118,6 +86,15 @@ object Streams {
         col("n_docs"), col("n_tokens"), col("mean_quality"))
   }
 
+  /** Stream-stream interval join: each left event matched to right events
+    * with the same keys whose event time falls within
+    * `[leftTs - before, leftTs + after]` — the canonical streaming
+    * enrichment (impressions ⋈ clicks within N minutes), and the streaming
+    * twin of `operators/RangeJoin`. BOTH sides carry watermarks and the
+    * condition bounds the time range in BOTH directions — exactly what
+    * Structured Streaming requires to evict buffered rows, so per-key state
+    * stays one watermark window deep regardless of stream length. Right
+    * columns are suffixed `_r` so self-joins on one schema stay referable. */
   def intervalJoin(left: DataFrame, right: DataFrame, keys: Seq[String],
       leftTs: String, rightTs: String, watermark: String,
       before: String = "10 minutes",

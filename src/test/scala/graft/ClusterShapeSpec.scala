@@ -173,7 +173,6 @@ class ClusterShapeSpec extends AnyFunSuite with BeforeAndAfterAll {
     // if the job finishes first the test still proves correctness (the
     // assertion never depends on timing).
     val sp = cluster
-    import sp.implicits._
     // 40k vertices in 1000 chains of 40 — enough rounds × work for the
     // kill to usually land inside the iteration
     val n = 40000L

@@ -12,8 +12,6 @@ import graft.pipeline.Pipeline
   * deterministic key predicates, negative amounts, duplicated rows).
   */
 class GoldenE2ESpec extends SparkSuite {
-  import spark.implicits._
-
   /** Deterministic faulty retail-ish frame derived from the customer table:
     * 150 rows → +15 exact duplicates; phone nulled ~1/7, email emptied ~1/5,
     * amount negated ~1/11. */

@@ -1,8 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
-import graft.core.Semantics
 import graft.operators._
 
 /** Table-driven tests of the reference's documented micro-semantics
@@ -512,7 +510,6 @@ class OperatorSpec extends SparkSuite {
   }
 
   test("seasonalSpikes: seasonal surge is quiet, off-season surge fires") {
-    import java.sql.Timestamp
     // every day at 03:00 has 10 events (seasonal norm); day 5 at 12:00 has
     // 10 too, but 12:00's seasonal mean is 1 -> only 12:00 flags
     val rows = (for {

@@ -5,8 +5,6 @@ import graft.operators._
 import graft.pipeline.Pipeline
 
 class PipelineAndStreamingSpec extends SparkSuite {
-  import spark.implicits._
-
   test("pipeline chains stages lazily and loads to parquet sink") {
     val out = java.nio.file.Files.createTempDirectory("graft_pipe").toString
     val result = Pipeline.extract(_.read.parquet(s"$sfDir/customer.parquet"))
@@ -75,16 +73,6 @@ class PipelineAndStreamingSpec extends SparkSuite {
       .agg(count(lit(1)).as("n"))
     assert(got.agg(sum("n")).head().getLong(0) == 1000L)
     assert(got.count() == batch.count())
-  }
-
-  test("stateful sessionize counts per-user events") {
-    import graft.streaming.Streams._
-    implicit val s = spark
-    val events = graft.core.Tables.table(spark, sfDir, "events")
-      .select(col("event_id"), col("ts").cast("timestamp").as("ts"),
-        col("user_id"), col("event_type"), col("value")).as[Event]
-    val sessions = sessionize(events).collect()
-    assert(sessions.map(_.nEvents).sum == 1000L)
   }
 
   test("profileTable suggests roles and lists small categorical values") {

@@ -51,12 +51,12 @@ class R10OperatorSpec extends SparkSuite {
   test("trustrank driver fast path equals the distributed loop, " +
       "including an out-of-graph seed and seed-only dangling return") {
     val n = 60L
-    val edges = (0L until n).flatMap { i =>
+    val edges = ((0L until n).flatMap { i =>
       Seq(2 * i + 1, 3 * i + 2).filter(_ < n).map(d => (i, d))
-    }.toDF("src", "dst")
+    } ++ Seq((0L, 1L))).toDF("src", "dst") // (0,1) now appears twice
     // seed 9999 is not a graph node: it must not enter the node set or
-    // the seed count on either path
-    val seeds = Seq(0L, 1L, 2L, 3L, 4L, 9999L).toDF("sid")
+    // the seed count on either path; seed 45 is a sink
+    val seeds = Seq(0L, 1L, 2L, 3L, 4L, 45L, 9999L).toDF("sid")
     val fast = PageRank.trustRank(edges, "src", "dst", seeds, "sid",
         iterations = 3, driverCutoff = 2000000L)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -64,9 +64,30 @@ class R10OperatorSpec extends SparkSuite {
         iterations = 3, driverCutoff = 0L)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(fast == dist)
+    // the node set is the edge endpoints on both paths
+    assert(fast.keySet == edges.collect()
+      .flatMap(r => Seq(r.getLong(0), r.getLong(1))).toSet)
     assert(!fast.contains(9999L))
     // non-seed, non-reached nodes exist and carry 0 teleport mass only
     assert(fast.values.forall(_ >= 0L))
+  }
+
+  test("trustrank with every node a seed is pagerank with dangling " +
+      "redistribution, on both paths") {
+    val n = 60L
+    val edges = ((0L until n).flatMap { i =>
+      Seq(2 * i + 1, 3 * i + 2).filter(_ < n).map(d => (i, d))
+    } ++ Seq((0L, 1L))).toDF("src", "dst")
+    val all = edges.select($"src".as("id")).union(edges.select($"dst".as("id")))
+    def ranks(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    for (cutoff <- Seq(2000000L, 0L)) {
+      val tr = ranks(PageRank.trustRank(edges, "src", "dst", all, "id",
+        iterations = 4, driverCutoff = cutoff))
+      val pr = ranks(PageRank.run(edges, "src", "dst", iterations = 4,
+        redistributeDangling = true, driverCutoff = cutoff))
+      assert(tr == pr, s"driverCutoff=$cutoff")
+    }
   }
 
   test("string ids ride the kcore/bfs/dag fast paths and equal the " +

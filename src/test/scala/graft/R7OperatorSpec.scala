@@ -7,6 +7,12 @@ import graft.operators.{ExactQuantile, GlobalIndex}
 class R7OperatorSpec extends SparkSuite {
   import spark.implicits._
 
+  /** The exact k-th smallest through the multi-rank entry point. */
+  private def kth(df: org.apache.spark.sql.DataFrame, c: String, k: Long,
+      bins: Int = 256, directCutoff: Long = 20000L): Double =
+    ExactQuantile.kthSmallestMulti(df, c, Seq(k), bins, directCutoff)
+      .head().getDouble(1)
+
   // ---- ReplayableHll ----
 
   test("replayable hll: registers match a scala reference implementation") {
@@ -65,7 +71,7 @@ class R7OperatorSpec extends SparkSuite {
     val df = data.toDF("x")
     val sorted = data.sorted
     for (k <- Seq(1, 500, 2750, 5499, data.length)) {
-      val got = ExactQuantile.kthSmallest(df, "x", k.toLong,
+      val got = kth(df, "x", k.toLong,
         bins = 16, directCutoff = 100L) // force several narrowing rounds
       assert(got == sorted(k - 1), s"k=$k got=$got want=${sorted(k - 1)}")
     }
@@ -73,11 +79,11 @@ class R7OperatorSpec extends SparkSuite {
 
   test("exact kth: all-equal column and tiny survivor sets") {
     val df = Seq.fill(100)(3.14).toDF("x")
-    assert(ExactQuantile.kthSmallest(df, "x", 57L) == 3.14)
+    assert(kth(df, "x", 57L) == 3.14)
     val two = Seq(1.0, 2.0).toDF("x")
-    assert(ExactQuantile.kthSmallest(two, "x", 1L, bins = 2,
+    assert(kth(two, "x", 1L, bins = 2,
       directCutoff = 1L) == 1.0)
-    assert(ExactQuantile.kthSmallest(two, "x", 2L, bins = 2,
+    assert(kth(two, "x", 2L, bins = 2,
       directCutoff = 1L) == 2.0)
   }
 
@@ -87,7 +93,7 @@ class R7OperatorSpec extends SparkSuite {
       .unionByName(Seq(Option.empty[Double]).toDF("x"))
     val sorted = data.sorted
     val ks = Seq(1L, 750L, 1500L, 2250L, 3000L)
-    val got = ExactQuantile.kthSmallestMulti(spark, df, "x", ks,
+    val got = ExactQuantile.kthSmallestMulti(df, "x", ks,
       bins = 8, directCutoff = 200L)
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     ks.foreach(k => assert(got(k) == sorted(k.toInt - 1), s"k=$k"))
@@ -101,12 +107,12 @@ class R7OperatorSpec extends SparkSuite {
     val cuts = ranks.map(r => sorted(r.toInt - 1)).distinct.sorted
     val expected = data.map { case (id, v) =>
       id -> cuts.count(v > _).toLong }.toMap
-    val got = ExactQuantile.equiDepthBucketize(spark, df, "x", b = 4,
+    val got = ExactQuantile.equiDepthBucketize(df, "x", b = 4,
         bins = 8, directCutoff = 100L)
       .select(col("id"), col("bin"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     data.foreach { case (id, _) => assert(got(id) == expected(id), s"id=$id") }
-    val flat = ExactQuantile.equiDepthBucketize(spark,
+    val flat = ExactQuantile.equiDepthBucketize(
       Seq.fill(50)(7.0).zipWithIndex.map(_.swap).toDF("id", "x"), "x", b = 8)
     assert(flat.select(col("bin")).distinct().head().getLong(0) == 0L)
   }
@@ -134,7 +140,7 @@ class R7OperatorSpec extends SparkSuite {
 
   test("exact kth: rank beyond count fails loudly") {
     intercept[IllegalArgumentException] {
-      ExactQuantile.kthSmallest(Seq(1.0, 2.0).toDF("x"), "x", 3L)
+      kth(Seq(1.0, 2.0).toDF("x"), "x", 3L)
     }
   }
 

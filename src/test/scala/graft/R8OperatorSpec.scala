@@ -8,18 +8,24 @@ import graft.operators.ExactQuantile
 class R8OperatorSpec extends SparkSuite {
   import spark.implicits._
 
+  /** The exact k-th smallest through the multi-rank entry point. */
+  private def kth(df: org.apache.spark.sql.DataFrame, c: String, k: Long,
+      bins: Int = 256, directCutoff: Long = 20000L): Double =
+    ExactQuantile.kthSmallestMulti(df, c, Seq(k), bins, directCutoff)
+      .head().getDouble(1)
+
   // ---- ExactQuantile: non-finite values ----
 
   test("kthSmallest excludes null, NaN and +-Inf (documented semantics)") {
     val df = Seq[java.lang.Double](5.0, Double.PositiveInfinity, 1.0,
       Double.NaN, Double.NegativeInfinity, 3.0, null).toDF("v")
     // finite survivors sorted: 1.0, 3.0, 5.0
-    assert(ExactQuantile.kthSmallest(df, "v", 1) == 1.0)
-    assert(ExactQuantile.kthSmallest(df, "v", 2) == 3.0)
-    assert(ExactQuantile.kthSmallest(df, "v", 3) == 5.0)
+    assert(kth(df, "v", 1) == 1.0)
+    assert(kth(df, "v", 2) == 3.0)
+    assert(kth(df, "v", 3) == 5.0)
     // and the rank space is exactly the finite count
     intercept[IllegalArgumentException] {
-      ExactQuantile.kthSmallest(df, "v", 4)
+      kth(df, "v", 4)
     }
   }
 
@@ -30,7 +36,7 @@ class R8OperatorSpec extends SparkSuite {
     val df = (1 to 5000).map(_.toDouble).toDF("v")
       .unionAll(Seq(Double.PositiveInfinity, Double.NegativeInfinity)
         .toDF("v"))
-    assert(ExactQuantile.kthSmallest(df, "v", 2500, bins = 16,
+    assert(kth(df, "v", 2500, bins = 16,
       directCutoff = 100L) == 2500.0)
   }
 
@@ -47,7 +53,7 @@ class R8OperatorSpec extends SparkSuite {
   test("equiDepthBucketize ignores non-finite values") {
     val df = ((1 to 100).map(_.toDouble) :+ Double.PositiveInfinity)
       .toDF("v")
-    val got = ExactQuantile.equiDepthBucketize(spark, df, "v", b = 4,
+    val got = ExactQuantile.equiDepthBucketize(df, "v", b = 4,
       directCutoff = 10L)
     assert(got.count() == 100L)
     assert(got.agg(countDistinct(col("bin"))).head().getLong(0) == 4L)
@@ -89,6 +95,35 @@ class R8OperatorSpec extends SparkSuite {
         bins = 8, directCutoff = cutoff)
         .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(run(4096L) == run(10L))
+  }
+
+  test("rank selection: light and heavy routes agree on one group at " +
+      "several ranks (ties, rank 1, rank n, non-finite values excluded)") {
+    val finite = (1 to 3000).map(i => ((i * 48271L) % 611).toDouble) ++
+      Seq.fill(400)(42.0) // tie block spanning many ranks
+    val df = (finite.map(java.lang.Double.valueOf) ++ Seq[java.lang.Double](
+      Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity, null))
+      .toDF("v")
+    val sorted = finite.sorted
+    val n = sorted.length.toLong
+    val tieRanks = sorted.zipWithIndex.collect {
+      case (v, i) if v == 42.0 => i + 1L }
+    val ks = Seq(1L, tieRanks.head, tieRanks(200), tieRanks.last, n / 2,
+      n - 1, n)
+    def run(cutoff: Long): Map[Long, Double] =
+      ExactQuantile.kthSmallestMulti(df, "v", ks, bins = 4,
+          directCutoff = cutoff)
+        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    val light = run(n + 1) // the whole column in one collect_list
+    val heavy = run(50L)   // several narrowing rounds, then a final pass
+    assert(light == heavy)
+    ks.foreach(k => assert(light(k) == sorted(k.toInt - 1), s"k=$k"))
+    // the rank space is the finite count on both routes
+    for (cutoff <- Seq(n + 1, 50L))
+      intercept[IllegalArgumentException] {
+        ExactQuantile.kthSmallestMulti(df, "v", Seq(n + 1),
+          directCutoff = cutoff)
+      }
   }
 
   test("quantilePerGroup wide: driver state bounded by HEAVY groups only") {
@@ -152,7 +187,7 @@ class R8OperatorSpec extends SparkSuite {
   test("directCutoff beyond Int.MaxValue is rejected loudly") {
     val df = Seq(1.0, 2.0).toDF("v")
     intercept[IllegalArgumentException] {
-      ExactQuantile.kthSmallest(df, "v", 1,
+      kth(df, "v", 1,
         directCutoff = Int.MaxValue.toLong + 1)
     }
     intercept[IllegalArgumentException] {

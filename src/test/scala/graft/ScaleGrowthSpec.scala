@@ -77,8 +77,8 @@ class ScaleGrowthSpec extends SparkSuite {
     ("exact_kth", d => {
       val keyed = d.withColumn("len", length(col("text")).cast("double"))
       val n = keyed.count()
-      graft.operators.ExactQuantile.kthSmallest(keyed, "len", math.max(1L, n / 2),
-        bins = 64, directCutoff = 2000L); () }),
+      graft.operators.ExactQuantile.kthSmallestMulti(keyed, "len",
+        Seq(math.max(1L, n / 2)), bins = 64, directCutoff = 2000L); () }),
     ("global_index", d => {
       graft.operators.GlobalIndex.denseIndex(d,
         Seq(length(col("text")).desc, col("doc_id")),

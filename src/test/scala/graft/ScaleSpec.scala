@@ -87,7 +87,6 @@ class ScaleSpec extends SparkSuite {
   }
 
   test("kernel signature stages plan without a shuffle") {
-    import org.apache.spark.sql.functions._
     val docs = graft.core.Tables.table(spark, sfDir, "documents")
     // simhashTable is a per-row kernel behind ONE compute-dense
     // round-robin rebalance (r12) — never a hash shuffle

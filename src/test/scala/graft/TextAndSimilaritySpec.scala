@@ -284,7 +284,6 @@ class TextAndSimilaritySpec extends SparkSuite {
   }
 
   test("repetition signals: hand-computed fractions on a tiny corpus") {
-    import org.apache.spark.sql.functions._
     import graft.functions.{TextFunctions => TF}
     val df = Seq(
       (1L, "a a a b"),          // dup_word 2/4; bigrams [a a, a a, a b] dup 1/3; top 3/4
@@ -301,7 +300,6 @@ class TextAndSimilaritySpec extends SparkSuite {
   }
 
   test("chunking: windows cover every word, overlap stitches, short docs = 1 chunk") {
-    import org.apache.spark.sql.functions._
     import graft.functions.{TextFunctions => TF}
     val words = (1 to 25).map(i => s"w$i")
     val df = Seq((1L, words.mkString(" ")), (2L, "tiny doc")).toDF("doc_id", "text")

@@ -6,8 +6,6 @@ import graft.functions.{Unigram, UnigramApply}
 /** Unigram-LM tokenizer: known-answer EM/Viterbi behavior, losslessness,
   * and determinism. */
 class UnigramSpec extends SparkSuite {
-  import spark.implicits._
-
   test("Viterbi picks the higher-probability segmentation and prefers " +
       "longer pieces on ties") {
     val vocab = UnigramApply.buildVocab(
